@@ -1150,7 +1150,7 @@ object CoreQueries {
     // plan-literal might_contain probe, so non-matching fact rows never
     // enter the join shuffle. Results identical to the plain join (the
     // oracle IS the plain join); SkewJoinSpec pins the equivalence and
-    // the pruning, tools.BloomJoinProbe measures the shuffle savings.
+    // the pruning.
     "q52_bloom_join" -> { (s, dir) =>
       val small = t(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT" &&

@@ -1,12 +1,13 @@
 package graft.streaming
 
-/** What one epoch-roll `foldBatch` did — returned (never logged) so
-  * maintenance tooling, probes, and specs assert the path taken without
-  * re-listing commit markers. ONE ADT for every roll (flat and tiered,
-  * all four index families): the variants union the family-specific
-  * outcomes, and a fold that can never produce a variant simply never
-  * returns it (the graph tiers never Bootstrap, the flat rolls never
-  * commit a Minor, only the IVF roll Retrains). */
+/** What one epoch-roll fold did, so maintenance tooling, probes, and specs
+  * assert the path taken without re-listing commit markers. ONE ADT for
+  * every roll, flat and tiered, across the index families: the variants
+  * union the family-specific outcomes, and a fold that can never produce a
+  * variant simply never returns it (the graph, media and signature tiers
+  * never Bootstrap, the flat rolls never commit a Minor, only the IVF roll
+  * Retrains). The tiered rolls' stream wrapper ([[TieredRoll.start]]) also
+  * logs each batch's outcome at INFO; the flat rolls only return it. */
 sealed trait BatchOutcome
 
 object BatchOutcome {

@@ -1,98 +1,99 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.io.JobLabels.labeled
 import graft.operators.{Adjacency, Checkpoints, IndexStore}
 
-/** TIERED (L0/L1) epoch commits for the graph family — the LSM answer to
-  * the one scale cost [[GraphEpochStream]] documents honestly: there,
-  * EVERY batch pays an O(|V|) full-index parquet rewrite for durability,
-  * so at 100 TB the recurring rewrite, not the fold, dominates. Here a
-  * batch commits only its DELTA:
+/** TIERED (L0/L1) epoch commits for the GRAPH family on the shared
+  * [[TieredRoll]] — the LSM answer to the O(|V|) full-index rewrite per
+  * batch that [[GraphEpochStream]] pays for durability.
   *
-  *  - **L0 (minor)**: the batch's normalized edges land as their own
-  *    committed epoch under `root/l0/epoch=<batchId>` — an O(|Δ|) write.
-  *  - **L1 (major)**: every `majorEvery`-th commit folds the standing L1
-  *    plus all live L0 deltas into a full [[Adjacency.Hybrid]] index under
-  *    `root/l1/epoch=<batchId>` ([[IndexStore.saveGraphIndex]]), then
-  *    prunes the L0s it absorbed. Amortized per-batch rewrite cost drops
-  *    from O(|V|) to O(|V| / majorEvery + |Δ|).
+  *  - **No bootstrap**: minors need no model, so the roll serves from L0
+  *    deltas alone until the first major.
+  *  - **L0 (minor)**: the batch's normalized, within-batch-distinct
+  *    `(src, dst)` edges.
+  *  - **L1 (major)**: the standing L1's edges, the live deltas and the batch
+  *    built into a full [[Adjacency.Hybrid]] ([[IndexStore.saveGraphIndex]]).
   *
-  * Readers merge ≤ 2 tiers ([[loadCurrent]] → [[Tiered]]): the newest
-  * committed L1 plus the live L0 deltas above it. Point reads
+  * Readers merge ≤ 2 tiers ([[loadCurrent]] → [[Tiered]]). Point reads
   * ([[Tiered.neighbors]]) stay query-proportional — probe the L1 hybrid
   * AND the (small) delta union, dedup per query; full-graph consumers
   * (PageRank and friends) call [[Tiered.mergedHybrid]], which pays the
-  * one build a major compaction would.
+  * one build a major would.
   *
   * Degree-exactness: a ranking that reads [[Adjacency.Hybrid.outDegrees]]
   * off the L1 tier alone is stale by at most `majorEvery − 1` deltas
   * (standard LSM trade); [[Tiered.mergedOutDegrees]] restores exactness
-  * mid-window at |Δ|-proportional cost (the serving path uses it), and
-  * [[Tiered.mergedHybrid]] remains the full-build escape hatch for
-  * whole-graph consumers.
+  * mid-window at |Δ|-proportional cost (the serving path uses it).
   *
-  * RETRACTION (round 16 — the last family asymmetry): edges can be
-  * REMOVED without a full rebuild, the same two-stage story as the
-  * vector/PQ/IVFADC/media/signature tiers. Query-time: the `…Excluding`
-  * reads on [[Tiered]] anti-join a caller-held tombstone edge set — a
-  * GDPR-style "drop this user's co-purchase edges" is served immediately,
-  * at dead-set-proportional extra cost per read. Maintenance-window:
-  * [[compactMajor]] physically rebuilds the index over the survivor
-  * edges into a NEW L1 generation, after which plain reads are clean and
-  * the tombstone set can be retired. Tombstones are EDGE-level (src, dst)
-  * pairs — the retraction primitive; node-level retraction derives its
-  * edge set from a neighbors read first. Because compaction is an
-  * out-of-band writer, graph data epochs moved to the strided id scheme
-  * ([[TierIds.dataEpoch]]) like the other maintenance families, and every
-  * fold stamps/requires the stride layout marker (legacy raw-id roots
-  * refuse loudly instead of silently double-applying replays).
-  *
-  * CRASH MATRIX (the [[GraphEpochStream]] guarantees, preserved per tier —
-  * each epoch's IndexStore meta is its commit marker):
-  *  - crash mid-L0-write → no marker → replay rewrites the torn dir with
-  *    identical content;
-  *  - crash mid-L1-compaction → no marker → the standing L1 and EVERY L0
-  *    it was folding are still live (pruning runs only after commit) →
-  *    replay recompacts and overwrites;
-  *  - crash after either commit, before the stream checkpoint → the
-  *    replayed batch finds its epoch committed in one of the tiers and
-  *    SKIPS — the delta is never applied twice;
-  *  - retention: L1 keeps 2 generations; a major prunes only L0s ≤ the
-  *    PREVIOUS L1's id, so a reader pinned to generation N−1 (its L1 +
-  *    its L0s) survives one subsequent major — the keepEpochs=2 grace
-  *    window, tier-shaped.
+  * RETRACTION: query-time, the `…Excluding` reads on [[Tiered]] anti-join
+  * a caller-held tombstone EDGE set — a GDPR-style "drop this user's
+  * co-purchase edges" is served immediately, at dead-set-proportional
+  * extra cost per read; maintenance-window, [[compactMajor]] physically
+  * rebuilds over the survivor edges into a NEW L1 generation, after which
+  * plain reads are clean and the tombstone set can be retired. Tombstones
+  * are EDGE-level (src, dst) pairs; node-level retraction derives its edge
+  * set from a neighbors read first.
   *
   * Prototype scope: unweighted edges (the [[GraphEpochStream]] (src, dst)
-  * contract); `dedup` must be true — cross-tier duplicate collapse is what
-  * the per-query dedup and the major fold implement, a multiplicity-
-  * preserving tiering needs per-edge counts in L0 and is out of scope. */
+  * contract); cross-tier duplicates collapse at read and at the major's
+  * dedup=true build — a multiplicity-preserving tiering needs per-edge
+  * counts in L0 and is out of scope. */
 object GraphTieredStream {
 
-  private def l0Root(root: String) = s"$root/l0"
-  private def l1Root(root: String) = s"$root/l1"
+  private[streaming] final class Roll(spark: SparkSession, root: String,
+                                      hubLimit: Long)
+      extends TieredRoll[Adjacency.Hybrid, Tiered](spark, root, "graph") {
+    private val pm = Map("dedup" -> "true", "hub_limit" -> hubLimit.toString)
+    protected val bootstraps = false
+    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_edges")
+    protected def l1Committed(dir: String): Boolean =
+      IndexStore.graphIndexMeta(spark, dir, pm).isDefined
+    protected def loadL1(dir: String): Option[Adjacency.Hybrid] =
+      IndexStore.loadGraphIndex(spark, dir, expectedParams = pm)
+    protected def saveL1(l1: Adjacency.Hybrid, dir: String, note: String): Unit =
+      IndexStore.saveGraphIndex(spark, l1, dir, note, pm)
+    protected def releaseL1(l1: Adjacency.Hybrid): Unit = l1.release()
 
-  private def params(hubLimit: Long): Map[String, String] =
-    Map("dedup" -> "true", "hub_limit" -> hubLimit.toString)
+    protected def view(t: TieredRoll.Tiers[Adjacency.Hybrid]): Tiered = {
+      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField("src", LongType), StructField("dst", LongType))))
+      Tiered(t.epochId, t.l1, t.l0Frames.foldLeft(empty)(_ unionByName _),
+        () => t.l1.foreach(_.release()))
+    }
 
-  private def l0Params(hubLimit: Long): Map[String, String] =
-    params(hubLimit) + ("tier" -> "l0_edges")
+    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
+                        standing: Option[Long])(save: DataFrame => Unit): Unit =
+      labeled(spark.sparkContext, s"graph-tier e$epochId: minor-save")(save(delta))
+
+    // the merged union feeds the build RAW (no pre-distinct): with
+    // dedup=true the build's own collect_set / flat-distinct collapses
+    // cross-tier duplicates, so a distinct here would be a full extra
+    // shuffle of the merged corpus (hub routing is by raw multiplicity by
+    // contract — conservative, result-identical)
+    protected def major(t: TieredRoll.Tiers[Adjacency.Hybrid], delta: DataFrame,
+                        n: => Long, epochId: Long, dir: String,
+                        note: String): Unit = {
+      val sc = spark.sparkContext
+      val built = labeled(sc, s"graph-tier e$epochId: major-build")(
+        Checkpoints.sweepingOnFailure(sc)(Adjacency.build(
+          view(t).rawEdges.unionByName(delta), dedup = true,
+          hubLimit = hubLimit)))
+      labeled(sc, s"graph-tier e$epochId: major-save")(commit(built, dir, note))
+    }
+  }
 
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs(spark: SparkSession, root: String, hubLimit: Long): Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root(root))
-      .filter(id => IndexStore.graphIndexMeta(spark,
-        EpochDirs.dir(l1Root(root), id), params(hubLimit)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, hubLimit).l1Epochs
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs(spark: SparkSession, root: String, hubLimit: Long): Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l0Root(root), id), l0Params(hubLimit)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, hubLimit).l0Epochs
 
   /** The ≤-2-tier reader view: newest committed L1 (possibly absent —
     * pre-first-major streams serve from deltas alone) plus the live L0
@@ -245,232 +246,73 @@ object GraphTieredStream {
           hubLimit = hubLimit))
   }
 
-  /** The id [[loadCurrent]] would return — the serving pin's zero-job
-    * staleness check (listing + marker peeks only). `None` before any
-    * commit (either tier counts — the graph tier serves from deltas
-    * alone pre-first-major). */
+  /** The id [[loadCurrent]] would return (listing + marker peeks only).
+    * `None` before any commit (either tier counts). */
   def currentEpochId(spark: SparkSession, root: String,
-                     hubLimit: Long = Adjacency.DefaultHubLimit): Option[Long] = {
-    val l1Id = l1Epochs(spark, root, hubLimit).headOption
-    val ids = l1Id.toSeq ++
-      l0Epochs(spark, root, hubLimit).filter(id => l1Id.forall(id > _))
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+                     hubLimit: Long = Adjacency.DefaultHubLimit): Option[Long] =
+    new Roll(spark, root, hubLimit).currentEpochId
 
   /** Load the newest committed tiered view; `None` before any commit.
     * Zero Spark jobs until a frame is consumed. */
   def loadCurrent(spark: SparkSession, root: String,
-                  hubLimit: Long = Adjacency.DefaultHubLimit): Option[Tiered] = {
-    val l1Id = l1Epochs(spark, root, hubLimit).headOption
-    val liveL0 = l0Epochs(spark, root, hubLimit)
-      .filter(id => l1Id.forall(id > _)).sorted
-    loadView(spark, root, hubLimit, l1Id, liveL0)
-  }
+                  hubLimit: Long = Adjacency.DefaultHubLimit): Option[Tiered] =
+    new Roll(spark, root, hubLimit).loadCurrent
 
-  /** The view over an ALREADY-LISTED (l1Id, liveL0) pair — shared by
-    * [[loadCurrent]] and the major path of [[foldBatch]] so a major never
-    * re-lists the tiers it just enumerated (per-epoch meta reads double
-    * on an object store otherwise). */
-  private def loadView(spark: SparkSession, root: String, hubLimit: Long,
-                       l1Id: Option[Long], liveL0: Seq[Long],
-                       strict: Boolean = false): Option[Tiered] = {
-    if (l1Id.isEmpty && liveL0.isEmpty) return None
-    val l1 = l1Id.flatMap(id => IndexStore.loadGraphIndex(spark,
-      EpochDirs.dir(l1Root(root), id), expectedParams = params(hubLimit)))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("src",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("dst",
-          org.apache.spark.sql.types.LongType))))
-    // strict = fold/major path: a listed committed L0 that fails to load
-    // would be silently absent from the new L1 (durable data loss) —
-    // fail loudly there; readers tolerate the race.
-    val delta = liveL0.sorted
-      .flatMap { id =>
-        val st = IndexStore.loadStage(spark,
-          EpochDirs.dir(l0Root(root), id), None, l0Params(hubLimit))
-        if (strict && st.isEmpty)
-          sys.error(s"committed L0 epoch=$id vanished mid-major")
-        st
-      }
-      .foldLeft(empty)(_ unionByName _)
-    Some(Tiered((l1Id.toSeq ++ liveL0).max, l1, delta,
-      () => l1.foreach(_.release())))
-  }
-
-  /** Fold ONE batch of `(src, dst)` edges: an O(|Δ|) L0 commit, except
-    * every `majorEvery`-th live delta triggers the L1 major compaction.
-    * Idempotent under replay (either tier's committed marker skips).
-    * Pure batch logic — unit-testable without a stream. */
+  /** Fold ONE batch of `(src, dst)` edges through [[TieredRoll.fold]]. */
   def foldBatch(edges: DataFrame, root: String, batchId: Long,
                 majorEvery: Int = 8,
-                hubLimit: Long = Adjacency.DefaultHubLimit): BatchOutcome = {
-    require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    val spark = edges.sparkSession
-    // data epochs live at batchId × MaintenanceSlots so an out-of-band
-    // compaction (standing-epoch + 1) can never take the NEXT batch's id
-    // and turn its replay check into silent data loss
-    TierIds.ensureStrideLayout(spark, root) // refuse pre-stride legacy roots
-    val epochId = TierIds.dataEpoch(batchId)
-    val l0Dir = EpochDirs.dir(l0Root(root), epochId)
-    val l1Dir = EpochDirs.dir(l1Root(root), epochId)
-    if (IndexStore.stageMeta(spark, l0Dir, l0Params(hubLimit)).isDefined ||
-        IndexStore.graphIndexMeta(spark, l1Dir, params(hubLimit)).isDefined)
-      return BatchOutcome.Skipped // replayed after a committed save
-    val norm = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .distinct() // within-batch dedup; cross-tier dedup is the read/major's
-    Deltas.withMaterialized(norm) { delta =>
-      if (delta.isEmpty) BatchOutcome.EmptyBatch // no content-free epochs
-      else foldNonEmpty(spark, delta, root, epochId, majorEvery, hubLimit,
-        l0Dir, l1Dir)
-    }
-  }
+                hubLimit: Long = Adjacency.DefaultHubLimit): BatchOutcome =
+    new Roll(edges.sparkSession, root, hubLimit).fold(
+      edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .distinct(), // within-batch dedup; cross-tier dedup is the read/major's
+      batchId, majorEvery)
 
-  private def foldNonEmpty(spark: SparkSession, norm: DataFrame,
-                           root: String, epochId: Long, majorEvery: Int,
-                           hubLimit: Long, l0Dir: String, l1Dir: String)
-      : BatchOutcome = {
-    val prevL1 = l1Epochs(spark, root, hubLimit).headOption
-    val liveL0 = l0Epochs(spark, root, hubLimit)
-      .filter(id => prevL1.forall(id > _))
-    import graft.io.JobLabels.labeled
-    if (liveL0.size + 1 < majorEvery) {
-      // MINOR: delta-sized durable commit (the whole point of the tier)
-      labeled(spark.sparkContext, s"graph-tier e$epochId: minor-save")(
-        IndexStore.saveStage(spark, norm, l0Dir, s"epoch:$epochId",
-          l0Params(hubLimit)))
-      BatchOutcome.Minor
-    } else {
-      // MAJOR: fold standing L1 + live deltas + this batch into a full
-      // index; prune absorbed L0s (grace: only those ≤ the PREVIOUS L1)
-      // and old L1 generations after the commit. The merged union feeds
-      // the build RAW (no pre-distinct): with dedup=true the build's own
-      // collect_set / flat-distinct collapses cross-tier duplicates, so a
-      // distinct here was a full extra shuffle of the merged corpus per
-      // major for nothing (hub routing is by raw multiplicity by
-      // contract — conservative, result-identical).
-      val view = loadView(spark, root, hubLimit, prevL1, liveL0,
-        strict = true)
-      val allEdges = view.map(v => v.rawEdges.unionByName(norm))
-        .getOrElse(norm)
-      val built =
-        try labeled(spark.sparkContext, s"graph-tier e$epochId: major-build")(
-          Checkpoints.sweepingOnFailure(spark.sparkContext)(
-            Adjacency.build(allEdges, dedup = true, hubLimit = hubLimit)))
-        finally view.foreach(_.release())
-      try labeled(spark.sparkContext, s"graph-tier e$epochId: major-save")(
-        IndexStore.saveGraphIndex(spark, built, l1Dir,
-          s"epoch:$epochId", params(hubLimit)))
-      finally built.release()
-      EpochDirs.prune(spark, l1Root(root),
-        l1Epochs(spark, root, hubLimit).take(2).toSet)
-      prevL1.foreach { prev =>
-        // L0s ≤ the previous L1 are two generations old — no grace left
-        val keep = l0Epochs(spark, root, hubLimit).filter(_ > prev).toSet
-        EpochDirs.prune(spark, l0Root(root), keep + epochId)
-      }
-      BatchOutcome.Major(liveL0.size)
-    }
-  }
-
-  /** Maintenance-window PHYSICAL edge retraction through the major path —
-    * the media/signature [[MediaTieredStream.compactMajor]] shape at the
-    * graph layer: one scan decides (total + dead edges counted together
-    * against the broadcast tombstone pair set over the merged ≤2-tier
-    * view), and at dead share ≥ `threshold` the survivor edges are
-    * anti-joined out ONCE, rebuilt into a full [[Adjacency.Hybrid]]
-    * (exactly the build a data major pays — compaction is a major, not a
-    * new cost class), and committed as a NEW L1 generation at
-    * `epochId + 1` (a maintenance slot — can never collide with the next
-    * streaming batch's strided id). Live L0s are absorbed: after the
-    * commit the new L1 sits above every data epoch, so plain reads are
-    * clean of the dead edges with no tombstone anti-join, and the
-    * previous generation's L0s keep the data major's one-generation
-    * reader grace. `None` below threshold, when no tombstoned edge is
-    * actually stored, AND on a minors-only root (no standing L1
-    * generation yet — compaction is an L1 rewrite; before the first data
-    * major there is nothing to rewrite, and a caller needing dead edges
-    * gone that early reads through [[Tiered.mergedEdgesExcluding]]).
-    * Single writer, idempotent under re-run (a second call with the same
-    * tombstones finds no stored dead edge and returns None). */
+  /** Maintenance-window PHYSICAL edge retraction ([[TieredRoll.compact]]):
+    * one scan decides (total + dead edges counted together against the
+    * broadcast tombstone pair set over the merged view), and at dead share
+    * ≥ `threshold` the survivor edges are anti-joined out ONCE and rebuilt
+    * into a full [[Adjacency.Hybrid]] — exactly the build a data major
+    * pays. `None` below threshold, when no tombstoned edge is stored, AND
+    * on a minors-only root (no L1 generation to rewrite yet; read through
+    * [[Tiered.mergedEdgesExcluding]] until the first major). Idempotent
+    * under re-run: a second call with the same tombstones finds no stored
+    * dead edge. */
   def compactMajor(spark: SparkSession, root: String, tombstones: DataFrame,
                    threshold: Double = 0.0,
-                   hubLimit: Long = Adjacency.DefaultHubLimit): Option[Long] =
-    l1Epochs(spark, root, hubLimit).headOption.flatMap { prevL1 =>
-      val liveL0 = l0Epochs(spark, root, hubLimit).filter(_ > prevL1)
-      val view = loadView(spark, root, hubLimit, Some(prevL1), liveL0,
-        strict = true)
-        .getOrElse(sys.error(s"standing L1 epoch=$prevL1 vanished mid-compact"))
-      try {
-        val dead = broadcast(tombstones
-          .select(col("src").cast("long").as("src"),
-            col("dst").cast("long").as("dst")).distinct())
-        val counts = graft.io.JobLabels.labeled(spark.sparkContext,
-          "graph-tier compact: dead-share") {
-          view.mergedEdges
-            .join(dead.withColumn("__dead", lit(1)), Seq("src", "dst"), "left")
-            .agg(count(lit(1)).as("total"), sum("__dead").as("dead"))
-            .collect()(0)
-        }
-        val total = counts.getLong(0)
-        val deadN = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-        if (deadN == 0 || total == 0 || deadN.toDouble / total < threshold)
-          None
-        else {
-          // survivors feed the build RAW (rawEdges, not mergedEdges): the
-          // anti-join drops every copy of a dead pair and the dedup=true
-          // build collapses the rest — the pre-distinct was an extra
-          // corpus-wide shuffle (same argument as the data major)
-          val built = graft.io.JobLabels.labeled(spark.sparkContext,
-            "graph-tier compact: rebuild")(
-            Checkpoints.sweepingOnFailure(spark.sparkContext)(
-              Adjacency.build(
-                view.rawEdges.join(dead, Seq("src", "dst"), "left_anti"),
-                dedup = true, hubLimit = hubLimit)))
-          val newId = view.epochId + 1
-          try IndexStore.saveGraphIndex(spark, built,
-            EpochDirs.dir(l1Root(root), newId), s"compact after=$prevL1",
-            params(hubLimit))
-          finally built.release()
-          EpochDirs.prune(spark, l1Root(root),
-            l1Epochs(spark, root, hubLimit).take(2).toSet)
-          EpochDirs.prune(spark, l0Root(root),
-            l0Epochs(spark, root, hubLimit).filter(_ > prevL1).toSet)
-          Some(newId)
-        }
-      } finally view.release()
+                   hubLimit: Long = Adjacency.DefaultHubLimit): Option[Long] = {
+    val sc = spark.sparkContext
+    new Roll(spark, root, hubLimit).compact { view =>
+      val dead = broadcast(tombstones
+        .select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst")).distinct())
+      val keys = Seq("src", "dst")
+      if (!labeled(sc, "graph-tier compact: dead-share")(
+          TieredRoll.deadShareReached(view.mergedEdges, dead, keys, threshold)))
+        None
+      else
+        // survivors feed the build RAW: the anti-join drops every copy of
+        // a dead pair and the dedup=true build collapses the rest
+        Some(labeled(sc, "graph-tier compact: rebuild")(
+          Checkpoints.sweepingOnFailure(sc)(Adjacency.build(
+            view.rawEdges.join(dead, keys, "left_anti"), dedup = true,
+            hubLimit = hubLimit))))
     }
+  }
 
   /** Start the tiered roll: `edges` (a streaming `(src, dst)` frame) →
-    * per-batch [[foldBatch]] → committed L0/L1 epochs under `root`.
-    * `maintenance` opts into scheduled in-stream compaction after data
-    * majors — the graph policy's tombstone supplier yields (src, dst)
-    * EDGE pairs and `tombId` is ignored ([[MaintenancePolicy]]). */
+    * per-batch [[foldBatch]]. `maintenance` opts into scheduled in-stream
+    * compaction after data majors — the graph policy's tombstone supplier
+    * yields (src, dst) EDGE pairs and `tombId` is ignored
+    * ([[MaintenancePolicy]]). */
   def start(edges: DataFrame, root: String, checkpointDir: String,
             majorEvery: Int = 8,
             hubLimit: Long = Adjacency.DefaultHubLimit,
             maintenance: Option[MaintenancePolicy] = None,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    var majorsSeen = 0L // instance cadence only; safety is the ops' own
-    edges.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, root, batchId, majorEvery, hubLimit) match {
-          case BatchOutcome.Major(_) =>
-            majorsSeen += 1
-            maintenance.filter(_.due(majorsSeen)).foreach { p =>
-              p.tombstones.foreach(ts => compactMajor(batch.sparkSession,
-                root, ts(), p.threshold, hubLimit))
-            }
-          case _ => ()
-        }
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    new Roll(edges.sparkSession, root, hubLimit).start(edges, checkpointDir,
+      trigger, maintenance)(foldBatch(_, root, _, majorEvery, hubLimit)) {
+      (p, batch) => p.tombstones.foreach(ts => compactMajor(batch.sparkSession,
+        root, ts(), p.threshold, hubLimit))
+    }
 }

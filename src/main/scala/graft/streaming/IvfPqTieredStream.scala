@@ -1,97 +1,108 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{IndexStore, Similarity}
+import graft.operators.{Checkpoints, IndexStore, Similarity}
 
-/** TIERED (L0/L1) epoch commits for the IVFADC family — the FIFTH
-  * instance of the [[GraphTieredStream]] design, closing the one index
-  * family that had build-only durability (r13 verdict: IVF and PQ each
-  * had append + drift + epochs + tiers; the production two-stage index
-  * had `ivfPqBuild` + a durable store and nothing else). A batch commits
-  * only its DELTA codes:
+/** TIERED (L0/L1) epoch commits for the IVFADC family on the shared
+  * [[TieredRoll]] — the production two-stage index, which otherwise has
+  * only `ivfPqBuild` + a durable store. A batch commits only its DELTA
+  * codes:
   *
   *  - **Bootstrap**: the first non-empty batch trains BOTH models
   *    ([[Similarity.ivfPqBuild]] — coarse centroids, then residual
-  *    codebooks) and commits as the first L1; minors need both standing
+  *    codebooks) and commits the first L1; minors need both standing
   *    models to encode against.
-  *  - **L0 (minor)**: the batch is routed + residual-encoded under the
+  *  - **L0 (minor)**: the batch routed + residual-encoded under the
   *    STANDING models ([[Similarity.ivfPqEncodeWith]] — assignCells +
-  *    float residuals + the shared PQ encode kernel, all map-only, no
-  *    training) and the `(nid, code_0..m-1, cell)` delta lands under
-  *    `root/l0/epoch=<batchId>` — an O(|Δ|) write. Only the two tiny
-  *    models are loaded ([[IndexStore.loadIvfPqModels]]); no persistent
-  *    handles.
-  *  - **L1 (major)**: every `majorEvery`-th commit unions the standing
-  *    L1 codes with all live L0 deltas (SAME models — both encode stages
-  *    commute with union under a fixed quantizer, zero re-encode) and
-  *    commits the merged index under `root/l1/epoch=<batchId>`, then
-  *    prunes the L0s it absorbed.
+  *    float residuals + the shared PQ encode kernel, all map-only); only
+  *    the two tiny models are loaded ([[IndexStore.loadIvfPqModels]]).
+  *  - **L1 (major)**: the standing codes unioned with the live deltas and
+  *    the batch — SAME models, both encode stages commute with union under
+  *    a fixed quantizer, zero re-encode.
   *
-  * Readers ([[loadCurrent]] → [[Tiered]]) merge ≤ 2 tiers into an
-  * ordinary [[Similarity.IvfPqIndex]] — [[Similarity.ivfPqProbe]] and
-  * both drift audits work on the tiered view unchanged, and codes are
-  * bit-identical to the flat `ivfPqBuild` + [[Similarity.ivfPqAppend]]
-  * chain (v31's oracle certifies encode-under-standing; the spec asserts
-  * the tiered chain against it).
-  *
-  * Like the PQ tier, this never retrains in-stream: epochs store the
-  * routed CODES only — retraining both models is the maintenance
-  * window's [[retrainMajor]] (`ivfPqBuild` over the retained corpus,
-  * committed as a NEW L1 generation; [[retrainMajorIfDrifted]] gates it
-  * on [[Similarity.driftAudit]]'s verdict). Physical tombstone
-  * compaction is the sibling maintenance major ([[compactMajor]]).
-  *
-  * CRASH MATRIX (the sibling tiers', verbatim — each epoch's IndexStore
-  * meta is its commit marker): torn L0 → invisible → replay re-encodes
-  * deterministically and overwrites; torn L1 major → standing L1 + every
-  * L0 still live → replay recompacts; commit in either tier → replay
-  * SKIPS; L1 keeps 2 generations and a major prunes only L0s ≤ the
-  * PREVIOUS L1 (one-major reader grace). Single writer. */
+  * Readers ([[loadCurrent]] → [[Tiered]]) get an ordinary
+  * [[Similarity.IvfPqIndex]] — [[Similarity.ivfPqProbe]] and both drift
+  * audits work on the tiered view unchanged, codes bit-identical to the
+  * flat `ivfPqBuild` + [[Similarity.ivfPqAppend]] chain. Epochs store the
+  * routed CODES only, so retraining both models is the maintenance
+  * window's [[retrainMajor]] over the retained corpus, gated by
+  * [[retrainMajorIfDrifted]]; [[compactMajor]] is the physical tombstone
+  * drop. */
 object IvfPqTieredStream {
 
-  import BatchOutcome._
-
-  private def l0Root(root: String) = s"$root/l0"
-  private def l1Root(root: String) = s"$root/l1"
-
-  private def params(dim: Int, nCells: Int, m: Int, k: Int,
-                     coarseIters: Int, pqIters: Int,
-                     trainSample: Int): Map[String, String] =
-    Map("roll_dim" -> dim.toString, "roll_n_cells" -> nCells.toString,
+  private[streaming] final class Roll(spark: SparkSession, root: String,
+      dim: Int, nCells: Int, m: Int, k: Int, coarseIters: Int, pqIters: Int,
+      trainSample: Int, idCol: String = "", vecCol: String = "")
+      extends TieredRoll[Similarity.IvfPqIndex, Tiered](spark, root, "ivfpq") {
+    private val pm = Map("roll_dim" -> dim.toString,
+      "roll_n_cells" -> nCells.toString,
       "roll_m" -> m.toString, "roll_k" -> k.toString,
       "roll_coarse_iters" -> coarseIters.toString,
       "roll_pq_iters" -> pqIters.toString,
       "roll_train_sample" -> trainSample.toString)
+    protected val bootstraps = true
+    protected val l0Params: Map[String, String] =
+      pm + ("tier" -> "l0_ivfpq_codes")
+    protected def l1Committed(dir: String): Boolean =
+      IndexStore.ivfPqIndexMeta(spark, dir, pm).isDefined
+    protected def loadL1(dir: String): Option[Similarity.IvfPqIndex] =
+      IndexStore.loadIvfPqIndex(spark, dir, expectedParams = pm)
+    protected def saveL1(l1: Similarity.IvfPqIndex, dir: String,
+                         note: String): Unit =
+      IndexStore.saveIvfPqIndex(spark, l1, dir, note, pm)
+    protected def releaseL1(l1: Similarity.IvfPqIndex): Unit = l1.release()
 
-  private def l0Params(dim: Int, nCells: Int, m: Int, k: Int,
-                       coarseIters: Int, pqIters: Int,
-                       trainSample: Int): Map[String, String] =
-    params(dim, nCells, m, k, coarseIters, pqIters, trainSample) +
-      ("tier" -> "l0_ivfpq_codes")
+    protected def view(t: TieredRoll.Tiers[Similarity.IvfPqIndex]): Tiered = {
+      val l1 = t.l1.get
+      Tiered(t.epochId,
+        l1.copy(coded = t.l0Frames.foldLeft(l1.coded)(_ unionByName _)),
+        t.liveL0, l1.release)
+    }
+
+    // coarse + residual k-means aggregates are sample-sized: the build
+    // runs under the measured width (minors/majors encode map-side)
+    override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
+                                     note: String): Unit =
+      Checkpoints.withDeltaWindow(spark, n)(commit(Similarity.ivfPqBuild(
+        delta, idCol, vecCol, dim, nCells, m, k, coarseIters, pqIters,
+        trainSample), dir, note))
+
+    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
+                        standing: Option[Long])(save: DataFrame => Unit): Unit = {
+      val (cents, books, subDim) =
+        standingModel(standing)(IndexStore.loadIvfPqModels(spark, _, pm))
+      save(Similarity.ivfPqEncodeWith(cents, books, subDim, delta, idCol,
+        vecCol))
+    }
+
+    protected def major(t: TieredRoll.Tiers[Similarity.IvfPqIndex],
+                        delta: DataFrame, n: => Long, epochId: Long,
+                        dir: String, note: String): Unit = {
+      val idx = view(t).index
+      commit(idx.copy(coded = idx.coded.unionByName(Similarity.ivfPqEncodeWith(
+        idx.centroids, idx.codebooks, idx.subDim, delta, idCol, vecCol)),
+        release = () => ()), dir, note)
+    }
+  }
 
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs(spark: SparkSession, root: String, dim: Int,
                nCells: Int = 8, m: Int = 4, k: Int = 8,
                coarseIters: Int = 4, pqIters: Int = 4,
                trainSample: Int = 10000): Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root(root))
-      .filter(id => IndexStore.ivfPqIndexMeta(spark,
-        EpochDirs.dir(l1Root(root), id),
-        params(dim, nCells, m, k, coarseIters, pqIters, trainSample)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
+      trainSample).l1Epochs
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs(spark: SparkSession, root: String, dim: Int,
                nCells: Int = 8, m: Int = 4, k: Int = 8,
                coarseIters: Int = 4, pqIters: Int = 4,
                trainSample: Int = 10000): Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l0Root(root), id),
-        l0Params(dim, nCells, m, k, coarseIters, pqIters, trainSample)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
+      trainSample).l0Epochs
 
   /** The ≤-2-tier reader view: `index` is an ordinary
     * [[Similarity.IvfPqIndex]] whose coded frame is the newest committed
@@ -103,18 +114,13 @@ object IvfPqTieredStream {
       liveL0s: Seq[Long],
       release: () => Unit)
 
-  /** The id [[loadCurrent]] would return — the serving pin's zero-job
-    * staleness check (listing + marker peeks only): a minor OR a major
-    * commit bumps it, so a pinned server swaps on either. */
+  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
   def currentEpochId(spark: SparkSession, root: String, dim: Int,
                      nCells: Int = 8, m: Int = 4, k: Int = 8,
                      coarseIters: Int = 4, pqIters: Int = 4,
                      trainSample: Int = 10000): Option[Long] =
-    l1Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).headOption.map { l1 =>
-      (l1 +: l0Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-        trainSample).filter(_ > l1)).max
-    }
+    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
+      trainSample).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the codes are probed. */
@@ -122,285 +128,90 @@ object IvfPqTieredStream {
                   nCells: Int = 8, m: Int = 4, k: Int = 8,
                   coarseIters: Int = 4, pqIters: Int = 4,
                   trainSample: Int = 10000): Option[Tiered] =
-    l1Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).headOption.flatMap { l1Id =>
-      loadView(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-        trainSample, l1Id,
-        l0Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-          trainSample).filter(_ > l1Id))
-    }
-
-  /** The view over an ALREADY-LISTED (l1Id, liveL0) pair — shared by
-    * [[loadCurrent]] and the major path of [[foldBatch]] so a major never
-    * re-lists the tiers it just enumerated. */
-  private def loadView(spark: SparkSession, root: String, dim: Int,
-                       nCells: Int, m: Int, k: Int,
-                       coarseIters: Int, pqIters: Int, trainSample: Int,
-                       l1Id: Long, liveL0: Seq[Long],
-                       strict: Boolean = false): Option[Tiered] = {
-    val l0pm = l0Params(dim, nCells, m, k, coarseIters, pqIters, trainSample)
-    IndexStore.loadIvfPqIndex(spark, EpochDirs.dir(l1Root(root), l1Id),
-      expectedParams =
-        params(dim, nCells, m, k, coarseIters, pqIters, trainSample)).map { l1 =>
-      val live = liveL0.sorted
-      // strict = fold/major path: a listed committed L0 that fails to
-      // load would be silently absent from the new L1 (durable data
-      // loss) — fail loudly there; readers tolerate the race.
-      val merged = live
-        .flatMap { id =>
-          val st = IndexStore.loadStage(spark,
-            EpochDirs.dir(l0Root(root), id), None, l0pm)
-          if (strict && st.isEmpty)
-            sys.error(s"committed L0 epoch=$id vanished mid-major")
-          st
-        }
-        .foldLeft(l1.coded)(_ unionByName _)
-      Tiered((l1Id +: live).max, l1.copy(coded = merged), live, l1.release)
-    }
-  }
+    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
+      trainSample).loadCurrent
 
   /** Fold ONE batch of embeddings (`idCol` numeric, `vecCol`
-    * array&lt;float&gt; — the [[Similarity.ivfPqBuild]] contract): an
-    * O(|Δ|) L0 commit, except the bootstrap batch (trains both models,
-    * commits L1) and every `majorEvery`-th live delta (triggers the L1
-    * major). Idempotent under replay. Pure batch logic. */
+    * array&lt;float&gt; — the [[Similarity.ivfPqBuild]] contract) through
+    * [[TieredRoll.fold]]. */
   def foldBatch(batch: DataFrame, idCol: String, vecCol: String,
                 root: String, batchId: Long, dim: Int,
                 nCells: Int = 8, m: Int = 4, k: Int = 8,
                 coarseIters: Int = 4, pqIters: Int = 4,
                 trainSample: Int = 10000,
-                majorEvery: Int = 8): BatchOutcome = {
-    require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    val spark = batch.sparkSession
-    val pm = params(dim, nCells, m, k, coarseIters, pqIters, trainSample)
-    val l0pm = l0Params(dim, nCells, m, k, coarseIters, pqIters, trainSample)
-    // data epochs live at batchId × MaintenanceSlots so an out-of-band
-    // compaction/retrain (standing-epoch + 1) can never take the NEXT
-    // batch's id and turn its replay check into silent data loss
-    TierIds.ensureStrideLayout(spark, root) // refuse pre-stride legacy roots
-    val epochId = TierIds.dataEpoch(batchId)
-    val l0Dir = EpochDirs.dir(l0Root(root), epochId)
-    val l1Dir = EpochDirs.dir(l1Root(root), epochId)
-    if (IndexStore.stageMeta(spark, l0Dir, l0pm).isDefined ||
-        IndexStore.ivfPqIndexMeta(spark, l1Dir, pm).isDefined)
-      return Skipped // replayed after a committed save — already applied
-    Deltas.withMaterialized(batch) { delta =>
-      // the count doubles as the emptiness probe and the bootstrap's
-      // shuffle-width measurement (fills the pin — no extra pass)
-      val nVecs = delta.count()
-      if (nVecs == 0L) EmptyBatch // no content-free epochs
-      else {
-        def commitL1(idx: Similarity.IvfPqIndex, note: String): Unit =
-          try IndexStore.saveIvfPqIndex(spark, idx, l1Dir,
-            s"batch:$batchId $note", pm)
-          finally idx.release()
+                majorEvery: Int = 8): BatchOutcome =
+    new Roll(batch.sparkSession, root, dim, nCells, m, k, coarseIters,
+      pqIters, trainSample, idCol, vecCol).fold(batch, batchId, majorEvery)
 
-        l1Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-          trainSample).headOption match {
-          case None =>
-            // bootstrap trains coarse centroids + residual codebooks —
-            // sample-sized k-means aggregates, so the build runs under
-            // the measured width (minors/majors encode map-side)
-            graft.operators.Checkpoints.withDeltaWindow(spark, nVecs)(
-              commitL1(Similarity.ivfPqBuild(delta, idCol, vecCol, dim,
-                nCells, m, k, coarseIters, pqIters, trainSample),
-                "bootstrap"))
-            Bootstrapped
-          case Some(prevL1) =>
-            val liveL0 = l0Epochs(spark, root, dim, nCells, m, k,
-              coarseIters, pqIters, trainSample).filter(_ > prevL1)
-            if (liveL0.size + 1 < majorEvery) {
-              // MINOR: route + residual-encode under the standing models
-              // (model-only load) and commit the O(|Δ|) code delta
-              val (cents, books, subDim) = IndexStore.loadIvfPqModels(spark,
-                EpochDirs.dir(l1Root(root), prevL1), pm)
-                .getOrElse(sys.error(
-                  s"standing L1 epoch=$prevL1 vanished mid-fold"))
-              IndexStore.saveStage(spark,
-                Similarity.ivfPqEncodeWith(cents, books, subDim, delta,
-                  idCol, vecCol),
-                l0Dir, s"batch:$batchId", l0pm)
-              Minor
-            } else {
-              // MAJOR: union standing codes, live deltas, and this batch
-              // (same models — no re-encode) into a full index; prune
-              // absorbed L0s (grace) and old L1 generations after commit
-              val view = loadView(spark, root, dim, nCells, m, k,
-                coarseIters, pqIters, trainSample, prevL1, liveL0,
-                strict = true)
-                .getOrElse(sys.error(
-                  s"standing L1 epoch=$prevL1 vanished mid-fold"))
-              val idx = view.index
-              val merged = idx.coded.unionByName(
-                Similarity.ivfPqEncodeWith(idx.centroids, idx.codebooks,
-                  idx.subDim, delta, idCol, vecCol))
-              try commitL1(idx.copy(coded = merged, release = () => ()),
-                s"major absorbed=${liveL0.size}")
-              finally view.release()
-              EpochDirs.prune(spark, l1Root(root),
-                l1Epochs(spark, root, dim, nCells, m, k, coarseIters,
-                  pqIters, trainSample).take(2).toSet)
-              val keep = l0Epochs(spark, root, dim, nCells, m, k,
-                coarseIters, pqIters, trainSample).filter(_ > prevL1).toSet
-              EpochDirs.prune(spark, l0Root(root), keep + epochId)
-              Major(liveL0.size)
-            }
-        }
-      }
-    }
-  }
-
-  /** Maintenance-window PHYSICAL tombstone compaction, committed through
-    * the major path (r14 verdict #3 — until now the deletion story was
-    * query-time exclusion only, and a long-lived index paid the broadcast
-    * anti-join on every query forever): load the current ≤-2-tier view,
-    * drop the tombstoned ids from the merged codes
-    * ([[Similarity.ivfPqCompact]] — models untouched, no re-encode), and
-    * commit the survivor index as a NEW L1 generation at `epochId + 1`
-    * (maintenance epochs take the next id, so pinned servers see a
-    * normal epoch bump and swap atomically). Prunes exactly like a data
-    * major: 2 L1 generations kept, absorbed L0s kept only while the
-    * previous generation needs them (one-major reader grace). The new
-    * generation carries ZERO tombstone debt — the caller resets its
+  /** Maintenance-window PHYSICAL tombstone compaction ([[TieredRoll.compact]]):
+    * the tombstoned ids dropped from the merged codes
+    * ([[Similarity.ivfPqCompact]] — models untouched, no re-encode). The
+    * new generation carries ZERO tombstone debt — the caller resets its
     * tombstone set on `Some`. `None` when the dead share of the stored
-    * codes is below `threshold` (or no dead id is stored): nothing
-    * committed, keep excluding at query time. Single writer, same as
-    * [[foldBatch]]. */
+    * codes is below `threshold` (or no dead id is stored): keep excluding
+    * at query time. */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
                    threshold: Double = 0.0, dim: Int = 64,
                    nCells: Int = 8, m: Int = 4, k: Int = 8,
                    coarseIters: Int = 4, pqIters: Int = 4,
-                   trainSample: Int = 10000): Option[Long] = {
-    val pm = params(dim, nCells, m, k, coarseIters, pqIters, trainSample)
-    l1Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).headOption.flatMap { prevL1 =>
-      val liveL0 = l0Epochs(spark, root, dim, nCells, m, k, coarseIters,
-        pqIters, trainSample).filter(_ > prevL1)
-      val view = loadView(spark, root, dim, nCells, m, k, coarseIters,
-        pqIters, trainSample, prevL1, liveL0, strict = true)
-        .getOrElse(sys.error(s"standing L1 epoch=$prevL1 vanished mid-compact"))
-      // the compacted index must not own (and re-release) the L1 handle —
-      // the view releases it below, once, after the commit
-      Similarity.ivfPqCompact(view.index.copy(release = () => ()),
-        tombstones, tombId, threshold) match {
-        case None => view.release(); None
-        case Some(compacted) =>
-          val newId = view.epochId + 1
-          try IndexStore.saveIvfPqIndex(spark, compacted,
-            EpochDirs.dir(l1Root(root), newId), s"compact after=$prevL1", pm)
-          finally { compacted.release(); view.release() }
-          EpochDirs.prune(spark, l1Root(root),
-            l1Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-              trainSample).take(2).toSet)
-          EpochDirs.prune(spark, l0Root(root),
-            l0Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-              trainSample).filter(_ > prevL1).toSet)
-          Some(newId)
-      }
-    }
-  }
+                   trainSample: Int = 10000): Option[Long] =
+    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
+      trainSample).compact(v =>
+      // the compacted index must not own (and re-release) the L1 handle
+      Similarity.ivfPqCompact(v.index.copy(release = () => ()), tombstones,
+        tombId, threshold))
 
-  /** Maintenance-window MODEL RETRAIN, committed through the major path
-    * (r14 verdict #4 — [[Similarity.driftAudit]]/[[Similarity.pqDriftAudit]]
-    * existed as audits; nothing acted on them at the tiered layer): train
-    * BOTH models fresh over the caller-supplied RETAINED corpus (epochs
-    * store codes only, so raw vectors must come from the corpus of
-    * record — at 100 TB that is the same table the minors ingest from)
-    * and commit the fully re-encoded index as a NEW L1 generation at
-    * `epochId + 1`. Pinned readers ([[graft.streaming.EpochPin]]) grace
-    * through the swap exactly as for a data major: the previous
-    * generation and its L0s survive one more major, loadCurrent flips to
-    * the retrained generation the moment its meta commits — the swap is
-    * atomic at the marker write. `None` when no generation is standing
-    * (nothing to retrain — bootstrap via [[foldBatch]]). */
+  /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrain]]): BOTH
+    * models trained fresh over the caller-supplied RETAINED corpus (epochs
+    * store codes only, so raw vectors come from the corpus of record) and
+    * the re-encoded index committed as a new L1 generation. `None` when
+    * no generation is standing (bootstrap via [[foldBatch]]). */
   def retrainMajor(corpus: DataFrame, idCol: String, vecCol: String,
                    root: String, dim: Int, nCells: Int = 8, m: Int = 4,
                    k: Int = 8, coarseIters: Int = 4, pqIters: Int = 4,
-                   trainSample: Int = 10000): Option[Long] = {
-    val spark = corpus.sparkSession
-    val pm = params(dim, nCells, m, k, coarseIters, pqIters, trainSample)
-    currentEpochId(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).map { cur =>
-      val prevL1 = l1Epochs(spark, root, dim, nCells, m, k, coarseIters,
-        pqIters, trainSample).head
-      val newId = cur + 1
-      val idx = Similarity.ivfPqBuild(corpus, idCol, vecCol, dim, nCells,
-        m, k, coarseIters, pqIters, trainSample)
-      try IndexStore.saveIvfPqIndex(spark, idx,
-        EpochDirs.dir(l1Root(root), newId), s"retrain after=$cur", pm)
-      finally idx.release()
-      EpochDirs.prune(spark, l1Root(root),
-        l1Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-          trainSample).take(2).toSet)
-      EpochDirs.prune(spark, l0Root(root),
-        l0Epochs(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-          trainSample).filter(_ > prevL1).toSet)
-      newId
-    }
-  }
+                   trainSample: Int = 10000): Option[Long] =
+    new Roll(corpus.sparkSession, root, dim, nCells, m, k, coarseIters,
+      pqIters, trainSample).retrain(Similarity.ivfPqBuild(corpus, idCol,
+      vecCol, dim, nCells, m, k, coarseIters, pqIters, trainSample))
 
-  /** The DRIFT-GATED wrapper a maintenance job actually runs: audit a
-    * recent arrival batch's coarse-cell routing against the standing
-    * tiered view ([[Similarity.driftAudit]] — the coded frame carries the
-    * cell column, so the audit reads codes only, no raw vectors) and fire
-    * [[retrainMajor]] only when more than `maxDriftedCells` cells drift.
-    * Returns the new generation's epoch id when the retrain fired. */
+  /** [[retrainMajor]] gated on [[Similarity.driftAudit]] of a recent
+    * arrival batch's coarse-cell routing against the tiered view (the
+    * coded frame carries the cell column — codes only, no raw vectors):
+    * fires when more than `maxDriftedCells` cells drift. */
   def retrainMajorIfDrifted(corpus: DataFrame, recent: DataFrame,
                             idCol: String, vecCol: String, root: String,
                             maxDriftedCells: Int, dim: Int,
                             nCells: Int = 8, m: Int = 4, k: Int = 8,
                             coarseIters: Int = 4, pqIters: Int = 4,
-                            trainSample: Int = 10000): Option[Long] = {
-    val spark = corpus.sparkSession
-    loadCurrent(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).flatMap { view =>
-      val drifted =
-        try Similarity.driftAudit(
-          Similarity.IvfIndex(view.index.centroids, view.index.nCells,
-            view.index.coded, () => ()),
-          recent, idCol, vecCol)
-          .filter(org.apache.spark.sql.functions.col("drifted")).count()
-        finally view.release()
-      if (drifted > maxDriftedCells)
-        retrainMajor(corpus, idCol, vecCol, root, dim, nCells, m, k,
-          coarseIters, pqIters, trainSample)
-      else None
-    }
-  }
+                            trainSample: Int = 10000): Option[Long] =
+    new Roll(corpus.sparkSession, root, dim, nCells, m, k, coarseIters,
+      pqIters, trainSample).retrainIfDrifted(maxDriftedCells)(v =>
+      Similarity.driftAudit(Similarity.IvfIndex(v.index.centroids,
+        v.index.nCells, v.index.coded, () => ()), recent, idCol, vecCol)
+        .filter(col("drifted")).count())(
+      Similarity.ivfPqBuild(corpus, idCol, vecCol, dim, nCells, m, k,
+        coarseIters, pqIters, trainSample))
 
   /** Start the tiered roll: `vectors` (a streaming frame with
-    * `idCol`/`vecCol`) → per-batch [[foldBatch]] → committed L0/L1
-    * epochs under `root`. */
+    * `idCol`/`vecCol`) → per-batch [[foldBatch]], with optional scheduled
+    * maintenance ([[MaintenancePolicy]]). */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             root: String, checkpointDir: String, dim: Int,
             nCells: Int = 8, m: Int = 4, k: Int = 8,
             coarseIters: Int = 4, pqIters: Int = 4,
             trainSample: Int = 10000, majorEvery: Int = 8,
             maintenance: Option[MaintenancePolicy] = None,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    var majorsSeen = 0L // instance cadence only; safety is the ops' own
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, idCol, vecCol, root, batchId, dim, nCells, m, k,
-          coarseIters, pqIters, trainSample, majorEvery) match {
-          case BatchOutcome.Major(_) =>
-            majorsSeen += 1
-            maintenance.filter(_.due(majorsSeen)).foreach { p =>
-              val spark = batch.sparkSession
-              p.tombstones.foreach(ts => compactMajor(spark, root, ts(),
-                p.tombId, p.threshold, dim, nCells, m, k, coarseIters,
-                pqIters, trainSample))
-              p.retrainCorpus.foreach(c => retrainMajorIfDrifted(c(), batch,
-                idCol, vecCol, root, p.maxDrifted, dim, nCells, m, k,
-                coarseIters, pqIters, trainSample))
-            }
-          case _ => ()
-        }
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    new Roll(vectors.sparkSession, root, dim, nCells, m, k, coarseIters,
+      pqIters, trainSample).start(vectors, checkpointDir, trigger,
+      maintenance)(foldBatch(_, idCol, vecCol, root, _, dim, nCells, m, k,
+      coarseIters, pqIters, trainSample, majorEvery)) { (p, batch) =>
+      p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root, ts(),
+        p.tombId, p.threshold, dim, nCells, m, k, coarseIters, pqIters,
+        trainSample))
+      p.retrainCorpus.foreach(c => retrainMajorIfDrifted(c(), batch, idCol,
+        vecCol, root, p.maxDrifted, dim, nCells, m, k, coarseIters, pqIters,
+        trainSample))
+    }
 }

@@ -5,67 +5,98 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Checkpoints, IndexStore, Postings}
 
-/** TIERED (L0/L1) epoch commits for the LEXICAL family — the
-  * [[GraphTieredStream]]/[[VectorTieredStream]] design applied to the
-  * BM25 postings roll, the third (and semantically hardest) instance:
-  * [[LexEpochStream]] pays an O(|corpus postings|) rewrite per batch for
-  * durability, and unlike the other families a lex batch can EDIT or
-  * DELETE standing documents, so tiers must shadow, not just append.
+/** TIERED (L0/L1) epoch commits for the LEXICAL (BM25 postings) family on
+  * the shared [[TieredRoll]]. [[LexEpochStream]] pays an O(|corpus
+  * postings|) rewrite per batch, and unlike the other families a lex batch
+  * can EDIT or DELETE standing documents, so tiers must shadow, not just
+  * append.
   *
   *  - **Bootstrap**: the first non-empty batch builds and commits the
-  *    first L1 ([[Postings.build]] → [[IndexStore.savePostingsIndex]]).
-  *  - **L0 (minor)**: the batch lands as a self-contained
-  *    [[Postings.tierFrame]] — per-doc postings with token-free docs as
-  *    explicit NULL tombstone rows — under `root/l0/epoch=<batchId>`, an
-  *    O(|Δ|) tokenize + write. No standing state is read at all.
-  *  - **L1 (major)**: every `majorEvery`-th commit merges the standing
-  *    L1 with all live L0 tiers ([[Postings.mergeTiers]] — sequential
-  *    foldDocs semantics: tier docs shadow standing, newest tier wins)
-  *    and commits the merged index under `root/l1/epoch=<batchId>`, then
-  *    prunes the L0s it absorbed. Amortized per-batch rewrite cost drops
-  *    from O(|postings|) to O(|postings| / majorEvery + |Δ|).
+  *    first L1 ([[Postings.build]]).
+  *  - **L0 (minor)**: the batch as a self-contained [[Postings.tierFrame]]
+  *    — per-doc postings with token-free docs as explicit NULL tombstone
+  *    rows — an O(|Δ|) tokenize + write that reads no standing state.
+  *  - **L1 (major)**: the standing L1 merged with the live tiers and the
+  *    batch by [[Postings.mergeTiers]] (sequential foldDocs semantics:
+  *    tier docs shadow standing, newest tier wins).
+  *  - **Ids**: raw batch ids — deletes ride tombstone rows inside data
+  *    epochs, so this tier has no maintenance writer and no stride.
   *
-  * Readers ([[loadCurrent]] → [[Tiered]]) merge ≤ 2 tiers into an
-  * ordinary [[Postings.Index]] — BM25 probes (`bm25ScoresOverIndex`) and
-  * the serving stream work on the tiered view unchanged, and because
-  * [[Postings.mergeTiers]] replays the foldDocs chain exactly, ranked
-  * answers are identical to the flat roll's (t40's oracle certifies the
-  * lifecycle, replacements and deletes included, against a from-scratch
-  * SQL rebuild of the effective corpus). Unlike the graph/vector tiered
-  * reads, a lex load pays THREE doc-grain jobs (the closed-form stats —
-  * nDocs/sumDl must be exact Longs for the idf/length-norm contract);
-  * probes after the load are plan-only.
-  *
-  * CRASH MATRIX (the sibling tiers', verbatim — each epoch's IndexStore
-  * meta is its commit marker): torn L0 → invisible → replay re-tokenizes
-  * deterministically and overwrites; torn L1 major → standing L1 + every
-  * L0 still live (pruning only after commit) → replay recompacts; commit
-  * in either tier → replay SKIPS; L1 keeps 2 generations and a major
-  * prunes only L0s ≤ the PREVIOUS L1, so a reader pinned to generation
-  * N−1 survives one subsequent major. Single writer. */
+  * Readers ([[loadCurrent]] → [[Tiered]]) get an ordinary
+  * [[Postings.Index]]; because [[Postings.mergeTiers]] replays the foldDocs
+  * chain exactly, ranked answers equal the flat roll's (t40's oracle
+  * certifies the lifecycle, edits and deletes included). Unlike the other
+  * tiered reads, a lex load pays THREE doc-grain jobs (the closed-form
+  * nDocs/sumDl stats must be exact Longs); probes after the load are
+  * plan-only. */
 object LexTieredStream {
 
-  import BatchOutcome._
-
-  private def l0Root(root: String) = s"$root/l0"
-  private def l1Root(root: String) = s"$root/l1"
+  /** Window sizing for doc-count-based widths: tokenization amplifies a
+    * doc row ~100× (whitespace tokens), so ~5k docs/partition keeps the
+    * post-tokenize shuffles near the default 500k-rows/partition target
+    * of [[Checkpoints.partitionsForRows]]. */
+  private val DocsPerPartition = 5000L
 
   private val Params: Map[String, String] = Map("tokenizer" -> "ws")
-  private val L0Params: Map[String, String] = Params + ("tier" -> "l0_postings")
+
+  // every fold shuffle is |Δ|-sized by design (minors never read standing
+  // state; the major's standing side moves through broadcast anti-joins or
+  // lazy unions), so each write runs under a measured-width window — the
+  // major sized by standing+delta docs, so a grown corpus self-widens (and
+  // re-enables AQE) instead of inheriting a delta-sized width
+  private[streaming] final class Roll(spark: SparkSession, root: String)
+      extends TieredRoll[Postings.Index, Tiered](spark, root, "lex") {
+    protected val bootstraps = true
+    override protected val strided = false
+    protected val l0Params: Map[String, String] = Params + ("tier" -> "l0_postings")
+    protected def l1Committed(dir: String): Boolean =
+      IndexStore.postingsIndexMeta(spark, dir, Params).isDefined
+    protected def loadL1(dir: String): Option[Postings.Index] =
+      IndexStore.loadPostingsIndex(spark, dir, expectedParams = Params)
+    protected def saveL1(l1: Postings.Index, dir: String, note: String): Unit =
+      IndexStore.savePostingsIndex(spark, l1, dir, note, Params)
+    protected def releaseL1(l1: Postings.Index): Unit = l1.release()
+
+    protected def view(t: TieredRoll.Tiers[Postings.Index]): Tiered = {
+      val l1 = t.l1.get
+      val merged = Checkpoints.sweepingOnFailure(spark.sparkContext)(
+        Postings.mergeTiers(l1, t.l0))
+      Tiered(t.epochId, merged, t.liveL0,
+        () => { merged.release(); l1.release() })
+    }
+
+    override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
+                                     note: String): Unit =
+      commit(Checkpoints.withDeltaWindow(spark, n, DocsPerPartition)(
+        Checkpoints.sweepingOnFailure(spark.sparkContext)(
+          Postings.build(delta))), dir, note)
+
+    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
+                        standing: Option[Long])(save: DataFrame => Unit): Unit =
+      Checkpoints.withDeltaWindow(spark, n, DocsPerPartition)(
+        save(Postings.tierFrame(delta)))
+
+    // major width: standing docs (free off the loaded L1's meta stats) +
+    // this delta — the committed tf/dl rewrite reads the corpus, so the
+    // window stops lowering anything once the index outgrows a few floors
+    protected def major(t: TieredRoll.Tiers[Postings.Index], delta: DataFrame,
+                        n: => Long, epochId: Long, dir: String,
+                        note: String): Unit = {
+      val l1 = t.l1.get
+      Checkpoints.withDeltaWindow(spark, l1.nDocs + n, DocsPerPartition)(
+        commit(Checkpoints.sweepingOnFailure(spark.sparkContext)(
+          Postings.mergeTiers(l1, t.l0 :+ (epochId -> Postings.tierFrame(delta)))),
+          dir, note))
+    }
+  }
 
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs(spark: SparkSession, root: String): Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root(root))
-      .filter(id => IndexStore.postingsIndexMeta(spark,
-        EpochDirs.dir(l1Root(root), id), Params).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root).l1Epochs
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs(spark: SparkSession, root: String): Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l0Root(root), id), L0Params).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root).l0Epochs
 
   /** The ≤-2-tier reader view: `index` is an ordinary [[Postings.Index]]
     * (the newest committed L1 merged with the live L0 tiers above it,
@@ -77,146 +108,27 @@ object LexTieredStream {
       liveL0s: Seq[Long],
       release: () => Unit)
 
-  /** The id [[loadCurrent]] would return — the serving pin's zero-job
-    * staleness check (listing + marker peeks only). */
+  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
   def currentEpochId(spark: SparkSession, root: String): Option[Long] =
-    l1Epochs(spark, root).headOption.map { l1 =>
-      (l1 +: l0Epochs(spark, root).filter(_ > l1)).max
-    }
+    new Roll(spark, root).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Pays the mergeTiers stats jobs when live L0s exist
     * (zero jobs otherwise). */
   def loadCurrent(spark: SparkSession, root: String): Option[Tiered] =
-    l1Epochs(spark, root).headOption.flatMap { l1Id =>
-      IndexStore.loadPostingsIndex(spark, EpochDirs.dir(l1Root(root), l1Id),
-        expectedParams = Params).map { l1 =>
-        // a merge failure (executor loss, a concurrent writer pruning a
-        // listed L0 mid-read) must not strand the L1's persisted frames —
-        // the foldBatch major guards its merge the same way
-        try {
-          val liveL0 = l0Epochs(spark, root).filter(_ > l1Id).sorted
-          val tiers = liveL0.flatMap(id =>
-            IndexStore.loadStage(spark, EpochDirs.dir(l0Root(root), id),
-              None, L0Params).map(id -> _))
-          val merged = Checkpoints.sweepingOnFailure(spark.sparkContext)(
-            Postings.mergeTiers(l1, tiers))
-          Tiered((l1Id +: liveL0).max, merged, liveL0,
-            () => { merged.release(); l1.release() })
-        } catch { case t: Throwable => l1.release(); throw t }
-      }
-    }
+    new Roll(spark, root).loadCurrent
 
-  /** Fold ONE batch of documents (`doc_id`, `text` columns): an O(|Δ|)
-    * L0 commit, except the bootstrap batch (builds, commits L1) and
-    * every `majorEvery`-th live delta (triggers the L1 major).
-    * Idempotent under replay (either tier's committed marker skips).
-    * Pure batch logic — unit-testable without a stream. */
+  /** Fold ONE batch of documents (`doc_id`, `text` columns) through
+    * [[TieredRoll.fold]]. */
   def foldBatch(docsBatch: DataFrame, root: String, batchId: Long,
-                majorEvery: Int = 8): BatchOutcome = {
-    require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    val spark = docsBatch.sparkSession
-    val l0Dir = EpochDirs.dir(l0Root(root), batchId)
-    val l1Dir = EpochDirs.dir(l1Root(root), batchId)
-    if (IndexStore.stageMeta(spark, l0Dir, L0Params).isDefined ||
-        IndexStore.postingsIndexMeta(spark, l1Dir, Params).isDefined)
-      return Skipped // replayed after a committed save — already applied
-    Deltas.withMaterialized(docsBatch) { delta =>
-      // the count doubles as the emptiness probe AND the fold's shuffle
-      // width measurement (it fills the pin — no extra pass)
-      val nDocs = delta.count()
-      if (nDocs == 0L) EmptyBatch // no content-free epochs
-      else foldNonEmpty(spark, delta, nDocs, root, batchId, majorEvery,
-        l0Dir, l1Dir)
-    }
-  }
-
-  /** Window sizing for doc-count-based widths: tokenization amplifies a
-    * doc row ~100× (whitespace tokens), so ~5k docs/partition keeps the
-    * post-tokenize shuffles near the default 500k-rows/partition target
-    * of [[Checkpoints.partitionsForRows]]. */
-  private val DocsPerPartition = 5000L
-
-  private def foldNonEmpty(spark: SparkSession, docsBatch: DataFrame,
-                           nDocs: Long, root: String, batchId: Long,
-                           majorEvery: Int, l0Dir: String, l1Dir: String)
-      : BatchOutcome = {
-    // every fold shuffle is |Δ|-sized by design (minors never read
-    // standing state; the major's standing side moves through broadcast
-    // anti-joins or lazy unions, not shuffles), so each branch runs
-    // under a measured-width window — the q82/CopurchaseStream
-    // discipline, with the major sized by standing+delta doc counts so a
-    // grown corpus self-widens (and re-enables AQE) instead of
-    // inheriting a delta-sized width
-    l1Epochs(spark, root).headOption match {
-      case None =>
-        val idx = Checkpoints.withDeltaWindow(spark, nDocs, DocsPerPartition)(
-          Checkpoints.sweepingOnFailure(spark.sparkContext)(
-            Postings.build(docsBatch)))
-        try IndexStore.savePostingsIndex(spark, idx, l1Dir,
-          s"batch:$batchId bootstrap", Params)
-        finally idx.release()
-        Bootstrapped
-      case Some(prevL1) =>
-        val liveL0 = l0Epochs(spark, root).filter(_ > prevL1)
-        if (liveL0.size + 1 < majorEvery) {
-          // MINOR: the O(|Δ|) self-contained tier commit — no standing
-          // state read, no handles held
-          Checkpoints.withDeltaWindow(spark, nDocs, DocsPerPartition)(
-            IndexStore.saveStage(spark, Postings.tierFrame(docsBatch),
-              l0Dir, s"batch:$batchId", L0Params))
-          Minor
-        } else {
-          // MAJOR: merge standing L1 + live tiers + this batch (foldDocs
-          // semantics via mergeTiers) into a full committed index; prune
-          // absorbed L0s (grace: only those ≤ the PREVIOUS L1) and old
-          // L1 generations after the commit
-          val l1 = IndexStore.loadPostingsIndex(spark,
-            EpochDirs.dir(l1Root(root), prevL1), expectedParams = Params)
-            .getOrElse(sys.error(s"standing L1 epoch=$prevL1 vanished mid-fold"))
-          // Strict per-L0 load: a listed committed delta that fails to
-          // load mid-major would be silently ABSENT from the new L1
-          // (durable data loss) if we tolerated it — fail loudly, like
-          // the standing-L1 vanish above. Readers stay tolerant.
-          val tiers = liveL0.sorted.map(id =>
-            id -> IndexStore.loadStage(spark, EpochDirs.dir(l0Root(root), id),
-              None, L0Params).getOrElse(
-              sys.error(s"committed L0 epoch=$id vanished mid-major"))) :+
-            (batchId -> Postings.tierFrame(docsBatch))
-          // major width: standing docs (free off the loaded L1's meta
-          // stats) + this delta — the merge's shuffles are tier-union-
-          // sized, but the committed tf/dl rewrite reads the corpus, so
-          // the window tracks the corpus and stops lowering anything
-          // once the standing index outgrows a few window floors
-          Checkpoints.withDeltaWindow(spark, l1.nDocs + nDocs,
-            DocsPerPartition) {
-            val merged = try Checkpoints.sweepingOnFailure(spark.sparkContext)(
-              Postings.mergeTiers(l1, tiers))
-            catch { case t: Throwable => l1.release(); throw t }
-            try IndexStore.savePostingsIndex(spark, merged, l1Dir,
-              s"batch:$batchId major absorbed=${liveL0.size}", Params)
-            finally { merged.release(); l1.release() }
-          }
-          EpochDirs.prune(spark, l1Root(root),
-            l1Epochs(spark, root).take(2).toSet)
-          val keep = l0Epochs(spark, root).filter(_ > prevL1).toSet
-          EpochDirs.prune(spark, l0Root(root), keep + batchId)
-          Major(liveL0.size)
-        }
-    }
-  }
+                majorEvery: Int = 8): BatchOutcome =
+    new Roll(docsBatch.sparkSession, root).fold(docsBatch, batchId, majorEvery)
 
   /** Start the tiered roll: `docs` (a streaming `(doc_id, text)` frame) →
     * per-batch [[foldBatch]] → committed L0/L1 epochs under `root`. */
   def start(docs: DataFrame, root: String, checkpointDir: String,
             majorEvery: Int = 8,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, root, batchId, majorEvery)
-        ()
-      }
-      .start()
+    new Roll(docs.sparkSession, root).start(docs, checkpointDir, trigger,
+      None)(foldBatch(_, root, _, majorEvery))((_, _) => ())
 }

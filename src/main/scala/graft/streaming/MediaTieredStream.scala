@@ -6,67 +6,67 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{IndexStore, Multimodal}
 
-/** TIERED (L0/L1) epoch commits for the MEDIA family — the last index
-  * family without an LSM path (text, vector, PQ, IVFADC, graph, lexical
-  * all have one): a continuously-ingesting image corpus folds each
+/** TIERED (L0/L1) epoch commits for the MEDIA family on the shared
+  * [[TieredRoll]]: a continuously-ingesting image corpus folds each
   * micro-batch's perceptual hashes into a durable aHash index without
-  * ever re-decoding standing blobs or rewriting the standing index per
-  * batch.
+  * re-decoding standing blobs or rewriting the standing index per batch.
   *
+  *  - **No bootstrap**: there is no model; the roll serves from L0s alone
+  *    until the first major.
   *  - **L0 (minor)**: the batch's `(media_id, phash)` rows — |Δ| decode +
-  *    aHash via [[Multimodal.imageHashes]], an O(|Δ|) parquet write under
-  *    `root/l0/epoch=<batchId>` (IndexStore stage semantics: commit
-  *    marker, params echo, zero-job lazy load).
-  *  - **L1 (major)**: every `majorEvery`-th live delta folds the standing
-  *    L1 plus all live L0s into one merged hash frame under
-  *    `root/l1/epoch=<batchId>` — a UNION of 16-byte rows, zero blob
-  *    re-decode (the hash column is the index; there is no model to
-  *    retrain, which is why this family's major is the cheapest of the
-  *    seven).
+  *    aHash via [[Multimodal.imageHashes]].
+  *  - **L1 (major)**: a UNION of the standing and delta hash frames —
+  *    16-byte rows, zero blob re-decode (the hash column is the index),
+  *    which makes this family's major the cheapest of the seven.
   *
   * Readers merge ≤ 2 tiers ([[loadCurrent]] → [[Tiered]]); near-dup
   * queries run [[Multimodal.imageNearDupPairsFromHashes]] over the merged
   * view (banding admits no false negatives within the Hamming budget, so
   * tiered ≡ flat ≡ rebuild — certified hash-exact by m07), and per-batch
   * NEW pairs come from [[Multimodal.incrementalNearDupPairsFromHashes]]
-  * probed batch-side against the pre-fold view (the m06 fold identity,
-  * now over tiers).
+  * probed batch-side against the pre-fold view (the m06 fold identity).
   *
   * Id contract (the d06/m06 one): media_ids are assigned by ONE authority
   * and never repeat across batches — cross-tier merge is a disjoint
   * union, no dedup shuffle. Replays can't violate it (committed markers
-  * skip), and [[foldHashes]] dedups within its own batch only.
-  *
-  * CRASH MATRIX — verbatim [[GraphTieredStream]]'s (each epoch's stage
-  * meta is its commit marker): torn L0/L1 replays overwrite in place;
-  * committed epochs replay as listing-only no-ops; a major prunes only
-  * L0s ≤ the PREVIOUS L1 and keeps 2 L1 generations, so a reader pinned
-  * to generation N−1 survives one subsequent major. */
+  * skip), and [[foldHashes]] dedups within its own batch only. */
 object MediaTieredStream {
-
-  private def l0Root(root: String) = s"$root/l0"
-  private def l1Root(root: String) = s"$root/l1"
 
   /** Storage params: the tier layout only — the Hamming budget is a QUERY
     * parameter (banding happens at read), so one committed index serves
     * every budget ≤ 15, unlike the model-carrying families. */
   private val baseParams = Map("index_kind" -> "ahash_tiered")
-  private val l0Params = baseParams + ("tier" -> "l0_hashes")
   private val l1Params = baseParams + ("tier" -> "l1_hashes")
+
+  private[streaming] final class Roll(spark: SparkSession, root: String)
+      extends TieredRoll[DataFrame, Tiered](spark, root, "media") {
+    protected val bootstraps = false
+    protected val l0Params: Map[String, String] = baseParams + ("tier" -> "l0_hashes")
+    protected def l1Committed(dir: String): Boolean =
+      IndexStore.stageMeta(spark, dir, l1Params).isDefined
+    protected def loadL1(dir: String): Option[DataFrame] =
+      IndexStore.loadStage(spark, dir, None, l1Params)
+    protected def saveL1(l1: DataFrame, dir: String, note: String): Unit =
+      IndexStore.saveStage(spark, l1, dir, note, l1Params)
+    protected def releaseL1(l1: DataFrame): Unit = ()
+    protected def view(t: TieredRoll.Tiers[DataFrame]): Tiered =
+      Tiered(t.epochId, (t.l1.toSeq ++ t.l0Frames).reduce(_ unionByName _))
+    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
+                        standing: Option[Long])(save: DataFrame => Unit): Unit =
+      save(delta)
+    protected def major(t: TieredRoll.Tiers[DataFrame], delta: DataFrame,
+                        n: => Long, epochId: Long, dir: String,
+                        note: String): Unit =
+      commit(view(t).hashes.unionByName(delta), dir, note)
+  }
 
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs(spark: SparkSession, root: String): Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l1Root(root), id), l1Params).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root).l1Epochs
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs(spark: SparkSession, root: String): Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l0Root(root), id), l0Params).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root).l0Epochs
 
   /** The ≤-2-tier reader view: newest committed L1 (absent pre-first-
     * major) unioned with the live L0 deltas above it. Pure lazy parquet —
@@ -87,46 +87,15 @@ object MediaTieredStream {
         maxHamming)
   }
 
-  /** The id [[loadCurrent]] would return — the serving pin's zero-job
-    * staleness check. `None` before any commit (either tier counts — the
-    * media tier serves from deltas alone pre-first-major). */
-  def currentEpochId(spark: SparkSession, root: String): Option[Long] = {
-    val l1Id = l1Epochs(spark, root).headOption
-    val ids = l1Id.toSeq ++ l0Epochs(spark, root).filter(id => l1Id.forall(id > _))
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+  /** The id [[loadCurrent]] would return (listing + marker peeks only).
+    * `None` before any commit (either tier counts). */
+  def currentEpochId(spark: SparkSession, root: String): Option[Long] =
+    new Roll(spark, root).currentEpochId
 
   /** Load the newest committed tiered view; `None` before any commit.
     * Zero Spark jobs until the frame is consumed. */
-  def loadCurrent(spark: SparkSession, root: String): Option[Tiered] = {
-    val l1Id = l1Epochs(spark, root).headOption
-    val liveL0 = l0Epochs(spark, root).filter(id => l1Id.forall(id > _)).sorted
-    loadView(spark, root, l1Id, liveL0)
-  }
-
-  /** View over an ALREADY-LISTED (l1Id, liveL0) pair — shared by
-    * [[loadCurrent]] and the fold's major path so a major never re-lists
-    * what it just enumerated. strict = fold/major path: a listed
-    * committed epoch that fails to load would be silently absent from the
-    * new L1 (durable data loss) — fail loudly there; readers tolerate the
-    * listing race. */
-  private def loadView(spark: SparkSession, root: String,
-                       l1Id: Option[Long], liveL0: Seq[Long],
-                       strict: Boolean = false): Option[Tiered] = {
-    if (l1Id.isEmpty && liveL0.isEmpty) return None
-    def loadOr(dir: String, params: Map[String, String], what: String)
-        : Option[DataFrame] = {
-      val st = IndexStore.loadStage(spark, dir, None, params)
-      if (strict && st.isEmpty) sys.error(s"committed $what vanished mid-major")
-      st
-    }
-    val l1 = l1Id.flatMap(id =>
-      loadOr(EpochDirs.dir(l1Root(root), id), l1Params, s"L1 epoch=$id"))
-    val frames = l1.toSeq ++ liveL0.sorted.flatMap(id =>
-      loadOr(EpochDirs.dir(l0Root(root), id), l0Params, s"L0 epoch=$id"))
-    if (frames.isEmpty) None
-    else Some(Tiered((l1Id.toSeq ++ liveL0).max, frames.reduce(_ unionByName _)))
-  }
+  def loadCurrent(spark: SparkSession, root: String): Option[Tiered] =
+    new Roll(spark, root).loadCurrent
 
   /** Fold ONE batch of `(media_id, media)` blobs: |Δ| decode + aHash,
     * then [[foldHashes]]. Undecodable blobs are skipped (the
@@ -136,119 +105,42 @@ object MediaTieredStream {
     foldHashes(Multimodal.imageHashes(batch), root, batchId, majorEvery)
 
   /** Fold an already-hashed `(media_id, phash)` batch — the stored-hash-
-    * column ingest path: an O(|Δ|) L0 commit, except every
-    * `majorEvery`-th live delta triggers the L1 merge. Idempotent under
-    * replay (either tier's committed marker skips). Pure batch logic —
-    * unit-testable without a stream. */
+    * column ingest path — through [[TieredRoll.fold]]. */
   def foldHashes(batchHashes: DataFrame, root: String, batchId: Long,
-                 majorEvery: Int = 8): BatchOutcome = {
-    require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    val spark = batchHashes.sparkSession
-    // data epochs live at batchId × MaintenanceSlots so an out-of-band
-    // compaction (standing-epoch + 1) can never take the NEXT batch's id
-    // and turn its replay check into silent data loss
-    TierIds.ensureStrideLayout(spark, root) // refuse pre-stride legacy roots
-    val epochId = TierIds.dataEpoch(batchId)
-    val l0Dir = EpochDirs.dir(l0Root(root), epochId)
-    val l1Dir = EpochDirs.dir(l1Root(root), epochId)
-    if (IndexStore.stageMeta(spark, l0Dir, l0Params).isDefined ||
-        IndexStore.stageMeta(spark, l1Dir, l1Params).isDefined)
-      return BatchOutcome.Skipped // replayed after a committed save
-    val norm = batchHashes
-      .select(col("media_id").cast("long").as("media_id"),
-        col("phash").cast("long").as("phash"))
-      .dropDuplicates("media_id") // within-batch; cross-batch ids disjoint
-    Deltas.withMaterialized(norm) { delta =>
-      if (delta.isEmpty) BatchOutcome.EmptyBatch // no content-free epochs
-      else {
-        val prevL1 = l1Epochs(spark, root).headOption
-        val liveL0 = l0Epochs(spark, root).filter(id => prevL1.forall(id > _))
-        if (liveL0.size + 1 < majorEvery) {
-          IndexStore.saveStage(spark, delta, l0Dir, s"batch:$batchId",
-            l0Params)
-          BatchOutcome.Minor
-        } else {
-          val merged = loadView(spark, root, prevL1, liveL0, strict = true)
-            .map(_.hashes.unionByName(delta)).getOrElse(delta)
-          IndexStore.saveStage(spark, merged, l1Dir, s"batch:$batchId",
-            l1Params)
-          EpochDirs.prune(spark, l1Root(root),
-            l1Epochs(spark, root).take(2).toSet)
-          prevL1.foreach { prev =>
-            // L0s ≤ the previous L1 are two generations old — no grace
-            val keep = l0Epochs(spark, root).filter(_ > prev).toSet
-            EpochDirs.prune(spark, l0Root(root), keep + epochId)
-          }
-          BatchOutcome.Major(liveL0.size)
-        }
-      }
-    }
-  }
+                 majorEvery: Int = 8): BatchOutcome =
+    new Roll(batchHashes.sparkSession, root).fold(
+      batchHashes.select(col("media_id").cast("long").as("media_id"),
+          col("phash").cast("long").as("phash"))
+        .dropDuplicates("media_id"), // within-batch; cross-batch ids disjoint
+      batchId, majorEvery)
 
-  /** Maintenance-window PHYSICAL tombstone compaction through the major
-    * path — the quantized families' [[VectorTieredStream.compactMajor]]
-    * shape on a model-free hash frame: one scan decides (total + dead
-    * counted together against the broadcast tombstone set), at the dead
-    * share `threshold` the survivors are anti-joined out ONCE and
-    * committed as a NEW L1 generation at `epochId + 1` with the data
-    * major's reader grace. `None` below threshold, when no dead id is
-    * stored, AND on a minors-only root (no standing L1 generation yet —
-    * compaction is an L1 rewrite; before the first data major there is
-    * nothing to rewrite, and the dead ids fall out at that major's merge
-    * instead). Single writer. */
+  /** Maintenance-window PHYSICAL tombstone compaction ([[TieredRoll.compact]])
+    * on a model-free hash frame: one scan decides (total + dead counted
+    * together against the broadcast tombstone set), and at the dead share
+    * `threshold` the survivors are anti-joined out ONCE. `None` below
+    * threshold, when no dead id is stored, AND on a minors-only root (the
+    * dead ids fall out at the first major's merge instead). */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
                    threshold: Double = 0.0): Option[Long] =
-    l1Epochs(spark, root).headOption.flatMap { prevL1 =>
-      val liveL0 = l0Epochs(spark, root).filter(_ > prevL1)
-      val view = loadView(spark, root, Some(prevL1), liveL0, strict = true)
-        .getOrElse(sys.error(s"standing L1 epoch=$prevL1 vanished mid-compact"))
+    new Roll(spark, root).compact { view =>
       val dead = broadcast(tombstones.select(
         col(tombId).cast("long").as("media_id")).distinct())
-      val counts = view.hashes
-        .join(dead.withColumn("__dead", lit(1)), Seq("media_id"), "left")
-        .agg(count(lit(1)).as("total"), sum("__dead").as("dead"))
-        .collect()(0)
-      val total = counts.getLong(0)
-      val deadN = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-      if (deadN == 0 || total == 0 || deadN.toDouble / total < threshold) None
-      else {
-        val survivors = view.hashes.join(dead, Seq("media_id"), "left_anti")
-        val newId = view.epochId + 1
-        IndexStore.saveStage(spark, survivors,
-          EpochDirs.dir(l1Root(root), newId), s"compact after=$prevL1",
-          l1Params)
-        EpochDirs.prune(spark, l1Root(root),
-          l1Epochs(spark, root).take(2).toSet)
-        EpochDirs.prune(spark, l0Root(root),
-          l0Epochs(spark, root).filter(_ > prevL1).toSet)
-        Some(newId)
-      }
+      if (!TieredRoll.deadShareReached(view.hashes, dead, Seq("media_id"),
+          threshold)) None
+      else Some(view.hashes.join(dead, Seq("media_id"), "left_anti"))
     }
 
   /** Start the tiered roll: `media` (a streaming `(media_id, media)`
-    * frame) → per-batch [[foldBatch]] → committed L0/L1 epochs under
-    * `root`. */
+    * frame) → per-batch [[foldBatch]], with optional scheduled compaction
+    * ([[MaintenancePolicy]]). */
   def start(media: DataFrame, root: String, checkpointDir: String,
             majorEvery: Int = 8,
             maintenance: Option[MaintenancePolicy] = None,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    var majorsSeen = 0L // instance cadence only; safety is the ops' own
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, root, batchId, majorEvery) match {
-          case BatchOutcome.Major(_) =>
-            majorsSeen += 1
-            maintenance.filter(_.due(majorsSeen)).foreach { p =>
-              p.tombstones.foreach(ts => compactMajor(batch.sparkSession,
-                root, ts(), p.tombId, p.threshold))
-            }
-          case _ => ()
-        }
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    new Roll(media.sparkSession, root).start(media, checkpointDir, trigger,
+      maintenance)(foldBatch(_, root, _, majorEvery)) { (p, batch) =>
+      p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root, ts(),
+        p.tombId, p.threshold))
+    }
 }

@@ -1,86 +1,94 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{IndexStore, Similarity}
+import graft.operators.{Checkpoints, IndexStore, Similarity}
 
-/** TIERED (L0/L1) epoch commits for the PQ family — the fourth and last
-  * instance of the [[GraphTieredStream]] design, so every durable index
-  * family (graph, vector, lexical, PQ) now has the LSM option over its
-  * flat roll. [[PqEpochStream]] pays an O(|corpus codes|) rewrite per
-  * batch; here a batch commits only its DELTA codes:
+/** TIERED (L0/L1) epoch commits for the PQ family on the shared
+  * [[TieredRoll]]: [[PqEpochStream]] pays an O(|corpus codes|) rewrite per
+  * batch; here a batch commits only its DELTA codes.
   *
   *  - **Bootstrap**: the first non-empty batch trains the per-subspace
-  *    codebooks ([[Similarity.pqBuild]]) and commits as the first L1 —
+  *    codebooks ([[Similarity.pqBuild]]) and commits the first L1 —
   *    minors need standing codebooks to encode against.
-  *  - **L0 (minor)**: the batch is encoded under the STANDING L1
-  *    codebooks ([[Similarity.pqEncodeWith]] — the one shared encode
-  *    kernel, map-only, no training) and the `(nid, code_0..code_{m-1})`
-  *    delta lands under `root/l0/epoch=<batchId>` — an O(|Δ|) write.
-  *    Only the tiny m·k codebook model is loaded
-  *    ([[IndexStore.loadPqCodebooks]]); no persistent handles.
-  *  - **L1 (major)**: every `majorEvery`-th commit unions the standing
-  *    L1 codes with all live L0 deltas (SAME codebooks — encoding under
-  *    a fixed quantizer commutes, zero re-encode work) and commits the
-  *    merged index under `root/l1/epoch=<batchId>`, then prunes the L0s
-  *    it absorbed.
+  *  - **L0 (minor)**: the batch encoded under the STANDING codebooks
+  *    ([[Similarity.pqEncodeWith]] — the one shared encode kernel,
+  *    map-only); only the m·k codebook model is loaded
+  *    ([[IndexStore.loadPqCodebooks]]), no persistent handles.
+  *  - **L1 (major)**: the standing codes unioned with the live deltas and
+  *    the batch — SAME codebooks, encoding under a fixed quantizer
+  *    commutes, zero re-encode work.
   *
-  * Readers ([[loadCurrent]] → [[Tiered]]) merge ≤ 2 tiers into an
-  * ordinary [[Similarity.PqIndex]] — ADC probes and drift audits work on
-  * the tiered view unchanged, and codes are bit-identical to the flat
-  * [[PqEpochStream]] append chain (v28's oracle certifies the lifecycle
-  * against a from-scratch SQL replay).
-  *
-  * Like the flat PQ roll (and unlike the IVF roll), this tier never
-  * retrains in-stream: epochs store int8 CODES ONLY, so the standing
-  * state cannot re-derive training vectors — retraining is the
-  * maintenance window's [[Similarity.pqBuild]] over the retained source
-  * corpus, committed as a fresh bootstrap.
-  *
-  * CRASH MATRIX (the sibling tiers', verbatim — each epoch's IndexStore
-  * meta is its commit marker): torn L0 → invisible → replay re-encodes
-  * deterministically and overwrites; torn L1 major → standing L1 + every
-  * L0 still live → replay recompacts; commit in either tier → replay
-  * SKIPS; L1 keeps 2 generations and a major prunes only L0s ≤ the
-  * PREVIOUS L1 (one-major reader grace). Parameter-keyed epochs
-  * (`roll_dim/m/k/iters/train_sample`). Single writer. */
+  * Readers ([[loadCurrent]] → [[Tiered]]) get an ordinary
+  * [[Similarity.PqIndex]] — ADC probes and drift audits work on the
+  * tiered view unchanged, codes bit-identical to the flat
+  * [[PqEpochStream]] append chain (v28's oracle certifies the lifecycle).
+  * Epochs store int8 CODES ONLY, so the standing state cannot re-derive
+  * training vectors: retraining is [[retrainMajor]] over the retained
+  * source corpus. Parameter-keyed epochs (`roll_dim/m/k/iters/train_sample`). */
 object PqTieredStream {
 
-  import BatchOutcome._
-
-  private def l0Root(root: String) = s"$root/l0"
-  private def l1Root(root: String) = s"$root/l1"
-
-  private def params(dim: Int, m: Int, k: Int, iters: Int,
-                     trainSample: Int): Map[String, String] =
-    Map("roll_dim" -> dim.toString, "roll_m" -> m.toString,
+  private[streaming] final class Roll(spark: SparkSession, root: String,
+      dim: Int, m: Int, k: Int, iters: Int, trainSample: Int,
+      idCol: String = "", vecCol: String = "")
+      extends TieredRoll[Similarity.PqIndex, Tiered](spark, root, "pq") {
+    private val pm = Map("roll_dim" -> dim.toString, "roll_m" -> m.toString,
       "roll_k" -> k.toString, "roll_iters" -> iters.toString,
       "roll_train_sample" -> trainSample.toString)
+    protected val bootstraps = true
+    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_codes")
+    protected def l1Committed(dir: String): Boolean =
+      IndexStore.pqIndexMeta(spark, dir, pm).isDefined
+    protected def loadL1(dir: String): Option[Similarity.PqIndex] =
+      IndexStore.loadPqIndex(spark, dir, expectedParams = pm)
+    protected def saveL1(l1: Similarity.PqIndex, dir: String, note: String): Unit =
+      IndexStore.savePqIndex(spark, l1, dir, note, pm)
+    protected def releaseL1(l1: Similarity.PqIndex): Unit = l1.release()
 
-  private def l0Params(dim: Int, m: Int, k: Int, iters: Int,
-                       trainSample: Int): Map[String, String] =
-    params(dim, m, k, iters, trainSample) + ("tier" -> "l0_codes")
+    protected def view(t: TieredRoll.Tiers[Similarity.PqIndex]): Tiered = {
+      val l1 = t.l1.get
+      Tiered(t.epochId,
+        l1.copy(encoded = t.l0Frames.foldLeft(l1.encoded)(_ unionByName _)),
+        t.liveL0, l1.release)
+    }
+
+    // per-subspace k-means aggregates are sample-sized: the build runs
+    // under the measured width (minors/majors encode map-side)
+    override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
+                                     note: String): Unit =
+      Checkpoints.withDeltaWindow(spark, n)(commit(Similarity.pqBuild(delta,
+        idCol, vecCol, dim, m, k, iters, trainSample), dir, note))
+
+    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
+                        standing: Option[Long])(save: DataFrame => Unit): Unit = {
+      val (codebooks, _, _, subDim) =
+        standingModel(standing)(IndexStore.loadPqCodebooks(spark, _, pm))
+      save(Similarity.pqEncodeWith(codebooks, subDim, delta, idCol, vecCol))
+    }
+
+    protected def major(t: TieredRoll.Tiers[Similarity.PqIndex],
+                        delta: DataFrame, n: => Long, epochId: Long,
+                        dir: String, note: String): Unit = {
+      val idx = view(t).index
+      commit(idx.copy(encoded = idx.encoded.unionByName(Similarity.pqEncodeWith(
+        idx.codebooks, idx.subDim, delta, idCol, vecCol)), release = () => ()),
+        dir, note)
+    }
+  }
 
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs(spark: SparkSession, root: String, dim: Int,
                m: Int = 4, k: Int = 8, iters: Int = 4,
                trainSample: Int = 10000): Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root(root))
-      .filter(id => IndexStore.pqIndexMeta(spark,
-        EpochDirs.dir(l1Root(root), id),
-        params(dim, m, k, iters, trainSample)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, dim, m, k, iters, trainSample).l1Epochs
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs(spark: SparkSession, root: String, dim: Int,
                m: Int = 4, k: Int = 8, iters: Int = 4,
                trainSample: Int = 10000): Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l0Root(root), id),
-        l0Params(dim, m, k, iters, trainSample)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, dim, m, k, iters, trainSample).l0Epochs
 
   /** The ≤-2-tier reader view: `index` is an ordinary
     * [[Similarity.PqIndex]] whose encoded frame is the newest committed
@@ -92,264 +100,87 @@ object PqTieredStream {
       liveL0s: Seq[Long],
       release: () => Unit)
 
-  /** The id [[loadCurrent]] would return — the serving pin's zero-job
-    * staleness check (listing + marker peeks only): a minor OR a major
-    * commit bumps it, so a pinned server swaps on either. */
+  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
   def currentEpochId(spark: SparkSession, root: String, dim: Int,
                      m: Int = 4, k: Int = 8, iters: Int = 4,
                      trainSample: Int = 10000): Option[Long] =
-    l1Epochs(spark, root, dim, m, k, iters, trainSample).headOption.map { l1 =>
-      (l1 +: l0Epochs(spark, root, dim, m, k, iters, trainSample)
-        .filter(_ > l1)).max
-    }
+    new Roll(spark, root, dim, m, k, iters, trainSample).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the codes are probed. */
   def loadCurrent(spark: SparkSession, root: String, dim: Int,
                   m: Int = 4, k: Int = 8, iters: Int = 4,
                   trainSample: Int = 10000): Option[Tiered] =
-    l1Epochs(spark, root, dim, m, k, iters, trainSample).headOption.flatMap { l1Id =>
-      loadView(spark, root, dim, m, k, iters, trainSample, l1Id,
-        l0Epochs(spark, root, dim, m, k, iters, trainSample).filter(_ > l1Id))
-    }
-
-  /** The view over an ALREADY-LISTED (l1Id, liveL0) pair — shared by
-    * [[loadCurrent]] and the major path of [[foldBatch]] so a major never
-    * re-lists the tiers it just enumerated. */
-  private def loadView(spark: SparkSession, root: String, dim: Int,
-                       m: Int, k: Int, iters: Int, trainSample: Int,
-                       l1Id: Long, liveL0: Seq[Long],
-                       strict: Boolean = false): Option[Tiered] = {
-    val l0pm = l0Params(dim, m, k, iters, trainSample)
-    IndexStore.loadPqIndex(spark, EpochDirs.dir(l1Root(root), l1Id),
-      expectedParams = params(dim, m, k, iters, trainSample)).map { l1 =>
-      val live = liveL0.sorted
-      // strict = fold/major path: a listed committed L0 that fails to
-      // load would be silently absent from the new L1 (durable data
-      // loss) — fail loudly there; readers tolerate the race.
-      val merged = live
-        .flatMap { id =>
-          val st = IndexStore.loadStage(spark,
-            EpochDirs.dir(l0Root(root), id), None, l0pm)
-          if (strict && st.isEmpty)
-            sys.error(s"committed L0 epoch=$id vanished mid-major")
-          st
-        }
-        .foldLeft(l1.encoded)(_ unionByName _)
-      Tiered((l1Id +: live).max,
-        Similarity.PqIndex(l1.codebooks, l1.m, l1.k, l1.subDim, merged,
-          l1.release),
-        live, l1.release)
-    }
-  }
+    new Roll(spark, root, dim, m, k, iters, trainSample).loadCurrent
 
   /** Fold ONE batch of embeddings (`idCol` numeric, `vecCol`
-    * array&lt;float&gt; — the [[Similarity.pqBuild]] contract): an
-    * O(|Δ|) L0 commit, except the bootstrap batch (trains, commits L1)
-    * and every `majorEvery`-th live delta (triggers the L1 major).
-    * Idempotent under replay. Pure batch logic. */
+    * array&lt;float&gt; — the [[Similarity.pqBuild]] contract) through
+    * [[TieredRoll.fold]]. */
   def foldBatch(batch: DataFrame, idCol: String, vecCol: String,
                 root: String, batchId: Long, dim: Int,
                 m: Int = 4, k: Int = 8, iters: Int = 4,
                 trainSample: Int = 10000,
-                majorEvery: Int = 8): BatchOutcome = {
-    require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    val spark = batch.sparkSession
-    val pm = params(dim, m, k, iters, trainSample)
-    val l0pm = l0Params(dim, m, k, iters, trainSample)
-    // data epochs live at batchId × MaintenanceSlots so an out-of-band
-    // compaction/retrain (standing-epoch + 1) can never take the NEXT
-    // batch's id and turn its replay check into silent data loss
-    TierIds.ensureStrideLayout(spark, root) // refuse pre-stride legacy roots
-    val epochId = TierIds.dataEpoch(batchId)
-    val l0Dir = EpochDirs.dir(l0Root(root), epochId)
-    val l1Dir = EpochDirs.dir(l1Root(root), epochId)
-    if (IndexStore.stageMeta(spark, l0Dir, l0pm).isDefined ||
-        IndexStore.pqIndexMeta(spark, l1Dir, pm).isDefined)
-      return Skipped // replayed after a committed save — already applied
-    Deltas.withMaterialized(batch) { delta =>
-      // the count doubles as the emptiness probe and the bootstrap's
-      // shuffle-width measurement (fills the pin — no extra pass)
-      val nVecs = delta.count()
-      if (nVecs == 0L) EmptyBatch // no content-free epochs
-      else {
-        def commitL1(idx: Similarity.PqIndex, note: String): Unit =
-          try IndexStore.savePqIndex(spark, idx, l1Dir,
-            s"batch:$batchId $note", pm)
-          finally idx.release()
+                majorEvery: Int = 8): BatchOutcome =
+    new Roll(batch.sparkSession, root, dim, m, k, iters, trainSample, idCol,
+      vecCol).fold(batch, batchId, majorEvery)
 
-        l1Epochs(spark, root, dim, m, k, iters, trainSample).headOption match {
-          case None =>
-            // bootstrap trains per-subspace codebooks — sample-sized
-            // k-means aggregates, so the build runs under the measured
-            // width (minors/majors encode map-side: nothing to size)
-            graft.operators.Checkpoints.withDeltaWindow(spark, nVecs)(
-              commitL1(Similarity.pqBuild(delta, idCol, vecCol, dim, m, k,
-                iters, trainSample), "bootstrap"))
-            Bootstrapped
-          case Some(prevL1) =>
-            val liveL0 = l0Epochs(spark, root, dim, m, k, iters, trainSample)
-              .filter(_ > prevL1)
-            if (liveL0.size + 1 < majorEvery) {
-              // MINOR: encode under the standing codebooks (model-only
-              // load) and commit the O(|Δ|) code delta
-              val (codebooks, _, _, subDim) = IndexStore.loadPqCodebooks(spark,
-                EpochDirs.dir(l1Root(root), prevL1), pm)
-                .getOrElse(sys.error(
-                  s"standing L1 epoch=$prevL1 vanished mid-fold"))
-              IndexStore.saveStage(spark,
-                Similarity.pqEncodeWith(codebooks, subDim, delta, idCol, vecCol),
-                l0Dir, s"batch:$batchId", l0pm)
-              Minor
-            } else {
-              // MAJOR: union standing codes, live deltas, and this batch
-              // (same codebooks — no re-encode) into a full index; prune
-              // absorbed L0s (grace) and old L1 generations after the commit
-              val view = loadView(spark, root, dim, m, k, iters, trainSample,
-                prevL1, liveL0, strict = true)
-                .getOrElse(sys.error(
-                  s"standing L1 epoch=$prevL1 vanished mid-fold"))
-              val merged = view.index.encoded.unionByName(
-                Similarity.pqEncodeWith(view.index.codebooks, view.index.subDim,
-                  delta, idCol, vecCol))
-              try commitL1(Similarity.PqIndex(view.index.codebooks,
-                view.index.m, view.index.k, view.index.subDim, merged,
-                () => ()),
-                s"major absorbed=${liveL0.size}")
-              finally view.release()
-              EpochDirs.prune(spark, l1Root(root),
-                l1Epochs(spark, root, dim, m, k, iters, trainSample)
-                  .take(2).toSet)
-              val keep = l0Epochs(spark, root, dim, m, k, iters, trainSample)
-                .filter(_ > prevL1).toSet
-              EpochDirs.prune(spark, l0Root(root), keep + epochId)
-              Major(liveL0.size)
-            }
-        }
-      }
-    }
-  }
-
-  /** Maintenance-window PHYSICAL tombstone compaction through the major
-    * path — [[IvfPqTieredStream.compactMajor]]'s PQ twin: drop the
-    * tombstoned ids from the merged codes ([[Similarity.pqCompact]] —
-    * codebooks untouched), commit the survivor index as a NEW L1
-    * generation at `epochId + 1`, prune with the data major's reader
-    * grace. `None` below `threshold` (dead share of stored codes) or
-    * when no dead id is stored. Single writer. */
+  /** Maintenance-window PHYSICAL tombstone compaction ([[TieredRoll.compact]]):
+    * the tombstoned ids dropped from the merged codes
+    * ([[Similarity.pqCompact]] — codebooks untouched). `None` below
+    * `threshold` (dead share of stored codes) or when no dead id is
+    * stored. */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
                    threshold: Double = 0.0, dim: Int = 64,
                    m: Int = 4, k: Int = 8, iters: Int = 4,
-                   trainSample: Int = 10000): Option[Long] = {
-    val pm = params(dim, m, k, iters, trainSample)
-    l1Epochs(spark, root, dim, m, k, iters, trainSample).headOption
-      .flatMap { prevL1 =>
-        val liveL0 = l0Epochs(spark, root, dim, m, k, iters, trainSample)
-          .filter(_ > prevL1)
-        val view = loadView(spark, root, dim, m, k, iters, trainSample,
-          prevL1, liveL0, strict = true)
-          .getOrElse(sys.error(s"standing L1 epoch=$prevL1 vanished mid-compact"))
-        Similarity.pqCompact(view.index.copy(release = () => ()),
-          tombstones, tombId, threshold) match {
-          case None => view.release(); None
-          case Some(compacted) =>
-            val newId = view.epochId + 1
-            try IndexStore.savePqIndex(spark, compacted,
-              EpochDirs.dir(l1Root(root), newId), s"compact after=$prevL1", pm)
-            finally { compacted.release(); view.release() }
-            EpochDirs.prune(spark, l1Root(root),
-              l1Epochs(spark, root, dim, m, k, iters, trainSample)
-                .take(2).toSet)
-            EpochDirs.prune(spark, l0Root(root),
-              l0Epochs(spark, root, dim, m, k, iters, trainSample)
-                .filter(_ > prevL1).toSet)
-            Some(newId)
-        }
-      }
-  }
+                   trainSample: Int = 10000): Option[Long] =
+    new Roll(spark, root, dim, m, k, iters, trainSample).compact(v =>
+      Similarity.pqCompact(v.index.copy(release = () => ()), tombstones,
+        tombId, threshold))
 
-  /** Maintenance-window MODEL RETRAIN through the major path —
-    * [[IvfPqTieredStream.retrainMajor]]'s PQ twin: train fresh codebooks
-    * over the caller-supplied retained corpus ([[Similarity.pqBuild]] —
-    * epochs store codes only, raw vectors come from the corpus of
-    * record) and commit the re-encoded index as a NEW L1 generation at
-    * `epochId + 1` (atomic marker-write swap; pinned readers grace one
-    * major). `None` when no generation is standing. */
+  /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrain]]): fresh
+    * codebooks over the caller-supplied retained corpus
+    * ([[Similarity.pqBuild]] — raw vectors come from the corpus of record)
+    * and the re-encoded index committed as a new L1 generation. `None`
+    * when no generation is standing. */
   def retrainMajor(corpus: DataFrame, idCol: String, vecCol: String,
                    root: String, dim: Int, m: Int = 4, k: Int = 8,
-                   iters: Int = 4, trainSample: Int = 10000): Option[Long] = {
-    val spark = corpus.sparkSession
-    val pm = params(dim, m, k, iters, trainSample)
-    currentEpochId(spark, root, dim, m, k, iters, trainSample).map { cur =>
-      val prevL1 = l1Epochs(spark, root, dim, m, k, iters, trainSample).head
-      val newId = cur + 1
-      val idx = Similarity.pqBuild(corpus, idCol, vecCol, dim, m, k,
-        iters, trainSample)
-      try IndexStore.savePqIndex(spark, idx,
-        EpochDirs.dir(l1Root(root), newId), s"retrain after=$cur", pm)
-      finally idx.release()
-      EpochDirs.prune(spark, l1Root(root),
-        l1Epochs(spark, root, dim, m, k, iters, trainSample).take(2).toSet)
-      EpochDirs.prune(spark, l0Root(root),
-        l0Epochs(spark, root, dim, m, k, iters, trainSample)
-          .filter(_ > prevL1).toSet)
-      newId
-    }
-  }
+                   iters: Int = 4, trainSample: Int = 10000): Option[Long] =
+    new Roll(corpus.sparkSession, root, dim, m, k, iters, trainSample)
+      .retrain(Similarity.pqBuild(corpus, idCol, vecCol, dim, m, k, iters,
+        trainSample))
 
-  /** The DRIFT-GATED wrapper — [[Similarity.pqDriftAudit]] encodes the
-    * recent batch under the standing codebooks and compares per-subspace
-    * code shares; [[retrainMajor]] fires when more than `maxDriftedCodes`
-    * (subspace, code) cells drift. */
+  /** [[retrainMajor]] gated on [[Similarity.pqDriftAudit]] (the recent
+    * batch encoded under the standing codebooks, per-subspace code shares
+    * compared): fires when more than `maxDriftedCodes` (subspace, code)
+    * cells drift. */
   def retrainMajorIfDrifted(corpus: DataFrame, recent: DataFrame,
                             idCol: String, vecCol: String, root: String,
                             maxDriftedCodes: Int, dim: Int,
                             m: Int = 4, k: Int = 8, iters: Int = 4,
-                            trainSample: Int = 10000): Option[Long] = {
-    val spark = corpus.sparkSession
-    loadCurrent(spark, root, dim, m, k, iters, trainSample).flatMap { view =>
-      val drifted =
-        try Similarity.pqDriftAudit(view.index, recent, idCol, vecCol)
-          .filter(org.apache.spark.sql.functions.col("drifted")).count()
-        finally view.release()
-      if (drifted > maxDriftedCodes)
-        retrainMajor(corpus, idCol, vecCol, root, dim, m, k, iters,
-          trainSample)
-      else None
-    }
-  }
+                            trainSample: Int = 10000): Option[Long] =
+    new Roll(corpus.sparkSession, root, dim, m, k, iters, trainSample)
+      .retrainIfDrifted(maxDriftedCodes)(v => Similarity.pqDriftAudit(v.index,
+        recent, idCol, vecCol).filter(col("drifted")).count())(
+        Similarity.pqBuild(corpus, idCol, vecCol, dim, m, k, iters,
+          trainSample))
 
   /** Start the tiered roll: `vectors` (a streaming frame with
-    * `idCol`/`vecCol`) → per-batch [[foldBatch]] → committed L0/L1
-    * epochs under `root`. */
+    * `idCol`/`vecCol`) → per-batch [[foldBatch]], with optional scheduled
+    * maintenance ([[MaintenancePolicy]]). */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             root: String, checkpointDir: String, dim: Int,
             m: Int = 4, k: Int = 8, iters: Int = 4,
             trainSample: Int = 10000, majorEvery: Int = 8,
             maintenance: Option[MaintenancePolicy] = None,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    var majorsSeen = 0L // instance cadence only; safety is the ops' own
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, idCol, vecCol, root, batchId, dim, m, k, iters,
-          trainSample, majorEvery) match {
-          case BatchOutcome.Major(_) =>
-            majorsSeen += 1
-            maintenance.filter(_.due(majorsSeen)).foreach { p =>
-              val spark = batch.sparkSession
-              p.tombstones.foreach(ts => compactMajor(spark, root, ts(),
-                p.tombId, p.threshold, dim, m, k, iters, trainSample))
-              p.retrainCorpus.foreach(c => retrainMajorIfDrifted(c(), batch,
-                idCol, vecCol, root, p.maxDrifted, dim, m, k, iters,
-                trainSample))
-            }
-          case _ => ()
-        }
-        ()
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    new Roll(vectors.sparkSession, root, dim, m, k, iters, trainSample)
+      .start(vectors, checkpointDir, trigger, maintenance)(
+        foldBatch(_, idCol, vecCol, root, _, dim, m, k, iters, trainSample,
+          majorEvery)) { (p, batch) =>
+        p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root,
+          ts(), p.tombId, p.threshold, dim, m, k, iters, trainSample))
+        p.retrainCorpus.foreach(c => retrainMajorIfDrifted(c(), batch, idCol,
+          vecCol, root, p.maxDrifted, dim, m, k, iters, trainSample))
       }
-      .start()
-  }
 }

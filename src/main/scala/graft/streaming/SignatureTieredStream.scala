@@ -7,21 +7,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{Checkpoints, Dedup, IndexStore}
 
 /** TIERED (L0/L1) epoch commits for the DEDUP family's MinHash
-  * [[Dedup.SignatureIndex]] — the missing LSM path between the flat
-  * per-epoch rebuild ([[NearDupAdmission]]'s documented index roll) and
-  * the durable store ([[IndexStore.saveSignatureIndex]]): a continuously-
-  * ingesting corpus folds each micro-batch's signatures without
-  * re-tokenizing standing documents or rewriting the standing index per
-  * batch.
+  * [[Dedup.SignatureIndex]] on the shared [[TieredRoll]] — the LSM path
+  * between the flat per-epoch rebuild ([[NearDupAdmission]]'s index roll)
+  * and the durable store ([[IndexStore.saveSignatureIndex]]): a
+  * continuously-ingesting corpus folds each micro-batch's signatures
+  * without re-tokenizing standing documents.
   *
+  *  - **No bootstrap**: the MinHash family is fixed by (k, shingle width),
+  *    so minors need no standing state.
   *  - **L0 (minor)**: the batch's `(id, sig, ss)` rows
-  *    ([[Dedup.signatureFrame]] — ONE tokenize pass over |Δ|), an O(|Δ|)
-  *    stage write under `root/l0/epoch=<batchId>`.
-  *  - **L1 (major)**: every `majorEvery`-th live delta folds the standing
-  *    L1 sigs plus all live L0 sigs into a full [[Dedup.SignatureIndex]]
-  *    (one [[Dedup.bucketsFromSigs]] re-aggregation — signatures are NOT
-  *    recomputed; the tokenize work is paid exactly once per document,
-  *    at its L0 commit) under `root/l1/epoch=<batchId>`.
+  *    ([[Dedup.signatureFrame]] — ONE tokenize pass over |Δ|).
+  *  - **L1 (major)**: the standing and delta sigs re-aggregated into a
+  *    full index (one [[Dedup.bucketsFromSigs]] pass — signatures are NOT
+  *    recomputed; the tokenize work is paid once per document, at its L0
+  *    commit).
   *
   * Readers merge ≤ 2 tiers ([[loadCurrent]] → [[Tiered]]). The serving
   * trick that keeps probes O(|batch| + touched buckets) WITHOUT a
@@ -36,45 +35,63 @@ import graft.operators.{Checkpoints, Dedup, IndexStore}
   * dropping than the flat index, and a no-op below the cap.)
   *
   * Id contract (d06's): ids are assigned by one authority and never
-  * repeat across batches — cross-tier merge is a disjoint union.
-  *
-  * CRASH MATRIX — verbatim [[GraphTieredStream]]'s (each epoch's
-  * IndexStore meta is its commit marker): torn L0/L1 replays overwrite in
-  * place; committed epochs replay as listing-only no-ops; a major prunes
-  * only L0s ≤ the PREVIOUS L1 and keeps 2 L1 generations (one-major
-  * pinned-reader grace). */
+  * repeat across batches — cross-tier merge is a disjoint union. */
 object SignatureTieredStream {
 
-  private def l0Root(root: String) = s"$root/l0"
-  private def l1Root(root: String) = s"$root/l1"
-
-  private def params(k: Int, bands: Int, shingleWidth: Int): Map[String, String] =
-    Map("k" -> k.toString, "bands" -> bands.toString,
+  private[streaming] final class Roll(spark: SparkSession, root: String,
+                                      k: Int, bands: Int, shingleWidth: Int)
+      extends TieredRoll[Dedup.SignatureIndex, Tiered](spark, root, "signature") {
+    private val pm = Map("k" -> k.toString, "bands" -> bands.toString,
       "shingle_width" -> shingleWidth.toString)
+    protected val bootstraps = false
+    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_sigs")
+    protected def l1Committed(dir: String): Boolean =
+      IndexStore.loadSignatureIndexMeta(spark, dir, pm).isDefined
+    protected def loadL1(dir: String): Option[Dedup.SignatureIndex] =
+      IndexStore.loadSignatureIndex(spark, dir, expectedParams = pm)
+    protected def saveL1(l1: Dedup.SignatureIndex, dir: String,
+                         note: String): Unit =
+      IndexStore.saveSignatureIndex(spark, l1, dir, note)
+    protected def releaseL1(l1: Dedup.SignatureIndex): Unit = l1.release()
 
-  private def l0Params(k: Int, bands: Int, shingleWidth: Int): Map[String, String] =
-    params(k, bands, shingleWidth) + ("tier" -> "l0_sigs")
+    protected def view(t: TieredRoll.Tiers[Dedup.SignatureIndex]): Tiered =
+      Tiered(t.epochId, k, bands, shingleWidth, t.l1,
+        t.l0Frames.reduceOption(_ unionByName _),
+        () => t.l1.foreach(_.release()))
+
+    // mapPartitions sig frame + parquet write — no shuffle, so no width
+    // window to open (the probe and the major carry the windows)
+    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
+                        standing: Option[Long])(save: DataFrame => Unit): Unit =
+      save(delta)
+
+    // major width: the bucket re-aggregation shuffles the MERGED sig
+    // corpus, so the window is sized standing+delta — standing row counts
+    // come free off the committed tiers' parquet footers (zero jobs), and
+    // a grown corpus self-widens back to the session conf (and keeps AQE)
+    protected def major(t: TieredRoll.Tiers[Dedup.SignatureIndex],
+                        delta: DataFrame, n: => Long, epochId: Long, dir: String,
+                        note: String): Unit = {
+      val standingRows =
+        t.l1Id.map(id => IndexStore.parquetRowCount(spark, s"${l1Dir(id)}/sigs"))
+          .getOrElse(0L) +
+        t.liveL0.map(id => IndexStore.parquetRowCount(spark, s"${l0Dir(id)}/data")).sum
+      val sigs = view(t).sigs.unionByName(delta)
+      Checkpoints.withDeltaWindow(spark, standingRows + n)(commit(
+        Dedup.SignatureIndex(k, bands, shingleWidth, sigs,
+          Dedup.bucketsFromSigs(sigs, k, bands), () => ()), dir, note))
+    }
+  }
 
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs(spark: SparkSession, root: String, k: Int, bands: Int,
                shingleWidth: Int): Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root(root))
-      .filter { id =>
-        // signature-index meta peek: kind + params, no frame load
-        IndexStore.loadSignatureIndexMeta(spark,
-          EpochDirs.dir(l1Root(root), id),
-          params(k, bands, shingleWidth)).isDefined
-      }
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, k, bands, shingleWidth).l1Epochs
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs(spark: SparkSession, root: String, k: Int, bands: Int,
                shingleWidth: Int): Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l0Root(root), id),
-        l0Params(k, bands, shingleWidth)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, k, bands, shingleWidth).l0Epochs
 
   /** The ≤-2-tier reader view: newest committed L1 (absent pre-first-
     * major) plus the live L0 sig deltas above it. `release()` frees the
@@ -137,52 +154,16 @@ object SignatureTieredStream {
     }
   }
 
-  /** The id [[loadCurrent]] would return — the serving pin's zero-job
-    * staleness check. `None` before any commit. */
+  /** The id [[loadCurrent]] would return (listing + marker peeks only).
+    * `None` before any commit. */
   def currentEpochId(spark: SparkSession, root: String, k: Int = 128,
-                     bands: Int = 32, shingleWidth: Int = 3): Option[Long] = {
-    val l1Id = l1Epochs(spark, root, k, bands, shingleWidth).headOption
-    val ids = l1Id.toSeq ++
-      l0Epochs(spark, root, k, bands, shingleWidth).filter(id => l1Id.forall(id > _))
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+                     bands: Int = 32, shingleWidth: Int = 3): Option[Long] =
+    new Roll(spark, root, k, bands, shingleWidth).currentEpochId
 
   /** Load the newest committed tiered view; `None` before any commit. */
   def loadCurrent(spark: SparkSession, root: String, k: Int = 128,
-                  bands: Int = 32, shingleWidth: Int = 3): Option[Tiered] = {
-    val l1Id = l1Epochs(spark, root, k, bands, shingleWidth).headOption
-    val liveL0 = l0Epochs(spark, root, k, bands, shingleWidth)
-      .filter(id => l1Id.forall(id > _)).sorted
-    loadView(spark, root, k, bands, shingleWidth, l1Id, liveL0)
-  }
-
-  private def loadView(spark: SparkSession, root: String, k: Int,
-                       bands: Int, shingleWidth: Int, l1Id: Option[Long],
-                       liveL0: Seq[Long], strict: Boolean = false)
-      : Option[Tiered] = {
-    if (l1Id.isEmpty && liveL0.isEmpty) return None
-    val l1 = l1Id.flatMap { id =>
-      val idx = IndexStore.loadSignatureIndex(spark,
-        EpochDirs.dir(l1Root(root), id),
-        expectedParams = params(k, bands, shingleWidth))
-      if (strict && idx.isEmpty) sys.error(s"committed L1 epoch=$id vanished mid-major")
-      idx
-    }
-    val deltas = liveL0.sorted.flatMap { id =>
-      val st = IndexStore.loadStage(spark, EpochDirs.dir(l0Root(root), id),
-        None, l0Params(k, bands, shingleWidth))
-      if (strict && st.isEmpty) sys.error(s"committed L0 epoch=$id vanished mid-major")
-      st
-    }
-    val delta = if (deltas.isEmpty) None else Some(deltas.reduce(_ unionByName _))
-    // every LISTED epoch failed to load (pruned/torn between the listing
-    // and the read — the race readers tolerate): no view, not a Tiered
-    // whose sigs/probeIndex would reduce over zero frames (review catch;
-    // the media twin has the same guard)
-    if (l1.isEmpty && delta.isEmpty) None
-    else Some(Tiered((l1Id.toSeq ++ liveL0).max, k, bands, shingleWidth, l1,
-      delta, () => l1.foreach(_.release())))
-  }
+                  bands: Int = 32, shingleWidth: Int = 3): Option[Tiered] =
+    new Roll(spark, root, k, bands, shingleWidth).loadCurrent
 
   /** Fold ONE batch of `(id, text)` documents: an O(|Δ|) tokenize +
     * signature L0 commit, except every `majorEvery`-th live delta
@@ -203,137 +184,46 @@ object SignatureTieredStream {
     * same commits, same idempotency as [[foldBatch]]. */
   def foldSigs(sigs: DataFrame, root: String, batchId: Long,
                majorEvery: Int = 8, k: Int = 128, bands: Int = 32,
-               shingleWidth: Int = 3): BatchOutcome = {
-    require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    val spark = sigs.sparkSession
-    // data epochs live at batchId × MaintenanceSlots so an out-of-band
-    // compaction (standing-epoch + 1) can never take the NEXT batch's id
-    // and turn its replay check into silent data loss
-    TierIds.ensureStrideLayout(spark, root) // refuse pre-stride legacy roots
-    val epochId = TierIds.dataEpoch(batchId)
-    val l0Dir = EpochDirs.dir(l0Root(root), epochId)
-    val l1Dir = EpochDirs.dir(l1Root(root), epochId)
-    if (IndexStore.stageMeta(spark, l0Dir, l0Params(k, bands, shingleWidth)).isDefined ||
-        IndexStore.loadSignatureIndexMeta(spark, l1Dir,
-          params(k, bands, shingleWidth)).isDefined)
-      return BatchOutcome.Skipped
-    Deltas.withMaterialized(sigs) { delta =>
-      if (delta.isEmpty) BatchOutcome.EmptyBatch
-      else {
-        val prevL1 = l1Epochs(spark, root, k, bands, shingleWidth).headOption
-        val liveL0 = l0Epochs(spark, root, k, bands, shingleWidth)
-          .filter(id => prevL1.forall(id > _))
-        if (liveL0.size + 1 < majorEvery) {
-          // MINOR: mapPartitions sig frame + parquet write — no shuffle,
-          // so no width window to open (deliberate; the probe and major
-          // carry the windows)
-          IndexStore.saveStage(spark, delta, l0Dir, s"batch:$batchId",
-            l0Params(k, bands, shingleWidth))
-          BatchOutcome.Minor
-        } else {
-          val view = loadView(spark, root, k, bands, shingleWidth, prevL1,
-            liveL0, strict = true)
-          // MAJOR width: the bucket re-aggregation shuffles the MERGED
-          // sig corpus, so the window is sized standing+delta — standing
-          // row counts come free off the committed tiers' parquet
-          // footers (zero jobs), and a grown corpus self-widens back to
-          // the session conf (and keeps AQE) instead of inheriting a
-          // delta-sized width
-          val standingRows =
-            prevL1.map(id => IndexStore.parquetRowCount(spark,
-              s"${EpochDirs.dir(l1Root(root), id)}/sigs")).getOrElse(0L) +
-            liveL0.map(id => IndexStore.parquetRowCount(spark,
-              s"${EpochDirs.dir(l0Root(root), id)}/data")).sum
-          val mergedSigs = view.map(_.sigs.unionByName(delta)).getOrElse(delta)
-          val idx = Dedup.SignatureIndex(k, bands, shingleWidth, mergedSigs,
-            Dedup.bucketsFromSigs(mergedSigs, k, bands), () => ())
-          try Checkpoints.withDeltaWindow(spark, standingRows + delta.count())(
-            IndexStore.saveSignatureIndex(spark, idx, l1Dir, s"batch:$batchId"))
-          finally view.foreach(_.release())
-          EpochDirs.prune(spark, l1Root(root),
-            l1Epochs(spark, root, k, bands, shingleWidth).take(2).toSet)
-          prevL1.foreach { prev =>
-            val keep = l0Epochs(spark, root, k, bands, shingleWidth)
-              .filter(_ > prev).toSet
-            EpochDirs.prune(spark, l0Root(root), keep + epochId)
-          }
-          BatchOutcome.Major(liveL0.size)
-        }
-      }
-    }
-  }
+               shingleWidth: Int = 3): BatchOutcome =
+    new Roll(sigs.sparkSession, root, k, bands, shingleWidth)
+      .fold(sigs, batchId, majorEvery)
 
-  /** Maintenance-window PHYSICAL tombstone compaction through the major
-    * path: survivors anti-joined out of the merged sigs ONCE, buckets
+  /** Maintenance-window PHYSICAL tombstone compaction ([[TieredRoll.compact]]):
+    * survivors anti-joined out of the merged sigs ONCE, buckets
     * re-aggregated over survivors only (a dead id inside a committed
     * bucket's member array cannot be dropped in place — the bucket frame
-    * is rebuilt, same cost class as a data major), committed as a NEW L1
-    * generation at `epochId + 1`. `None` below `threshold` (dead share of
-    * stored docs), when no dead id is stored, AND on a minors-only root
-    * (no standing L1 generation yet — compaction is an L1 rewrite; before
-    * the first data major there is nothing to rewrite, and the dead ids
-    * fall out at that major's re-aggregation instead). Single writer. */
+    * is rebuilt, same cost class as a data major). `None` below
+    * `threshold` (dead share of stored docs), when no dead id is stored,
+    * AND on a minors-only root (the dead ids fall out at the first major's
+    * re-aggregation instead). */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
                    threshold: Double = 0.0, k: Int = 128, bands: Int = 32,
                    shingleWidth: Int = 3): Option[Long] =
-    l1Epochs(spark, root, k, bands, shingleWidth).headOption.flatMap { prevL1 =>
-      val liveL0 = l0Epochs(spark, root, k, bands, shingleWidth)
-        .filter(_ > prevL1)
-      val view = loadView(spark, root, k, bands, shingleWidth, Some(prevL1),
-        liveL0, strict = true)
-        .getOrElse(sys.error(s"standing L1 epoch=$prevL1 vanished mid-compact"))
-      try {
-        val dead = broadcast(tombstones.select(
-          col(tombId).cast("long").as("id")).distinct())
-        val counts = view.sigs
-          .join(dead.withColumn("__dead", lit(1)), Seq("id"), "left")
-          .agg(count(lit(1)).as("total"), sum("__dead").as("dead"))
-          .collect()(0)
-        val total = counts.getLong(0)
-        val deadN = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-        if (deadN == 0 || total == 0 || deadN.toDouble / total < threshold) None
-        else {
-          val survivors = view.sigs.join(dead, Seq("id"), "left_anti")
-          val idx = Dedup.SignatureIndex(k, bands, shingleWidth, survivors,
-            Dedup.bucketsFromSigs(survivors, k, bands), () => ())
-          val newId = view.epochId + 1
-          IndexStore.saveSignatureIndex(spark, idx,
-            EpochDirs.dir(l1Root(root), newId), s"compact after=$prevL1")
-          EpochDirs.prune(spark, l1Root(root),
-            l1Epochs(spark, root, k, bands, shingleWidth).take(2).toSet)
-          EpochDirs.prune(spark, l0Root(root),
-            l0Epochs(spark, root, k, bands, shingleWidth)
-              .filter(_ > prevL1).toSet)
-          Some(newId)
-        }
-      } finally view.release()
+    new Roll(spark, root, k, bands, shingleWidth).compact { view =>
+      val dead = broadcast(tombstones.select(
+        col(tombId).cast("long").as("id")).distinct())
+      if (!TieredRoll.deadShareReached(view.sigs, dead, Seq("id"), threshold))
+        None
+      else {
+        val survivors = view.sigs.join(dead, Seq("id"), "left_anti")
+        Some(Dedup.SignatureIndex(k, bands, shingleWidth, survivors,
+          Dedup.bucketsFromSigs(survivors, k, bands), () => ()))
+      }
     }
 
   /** Start the tiered roll: `docs` (a streaming `(id, text)` frame) →
-    * per-batch [[foldBatch]] → committed L0/L1 epochs under `root`. */
+    * per-batch [[foldBatch]], with optional scheduled compaction
+    * ([[MaintenancePolicy]]). */
   def start(docs: DataFrame, idCol: String, textCol: String, root: String,
             checkpointDir: String, majorEvery: Int = 8, k: Int = 128,
             bands: Int = 32, shingleWidth: Int = 3,
             maintenance: Option[MaintenancePolicy] = None,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    var majorsSeen = 0L // instance cadence only; safety is the ops' own
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, idCol, textCol, root, batchId, majorEvery, k,
-          bands, shingleWidth) match {
-          case BatchOutcome.Major(_) =>
-            majorsSeen += 1
-            maintenance.filter(_.due(majorsSeen)).foreach { p =>
-              p.tombstones.foreach(ts => compactMajor(batch.sparkSession,
-                root, ts(), p.tombId, p.threshold, k, bands, shingleWidth))
-            }
-          case _ => ()
-        }
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    new Roll(docs.sparkSession, root, k, bands, shingleWidth).start(docs,
+      checkpointDir, trigger, maintenance)(foldBatch(_, idCol, textCol, root,
+      _, majorEvery, k, bands, shingleWidth)) { (p, batch) =>
+      p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root, ts(),
+        p.tombId, p.threshold, k, bands, shingleWidth))
+    }
 }

@@ -1,100 +1,93 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{IndexStore, Similarity}
+import graft.operators.{Checkpoints, IndexStore, Similarity}
 
-/** TIERED (L0/L1) epoch commits for the VECTOR family — the
-  * [[GraphTieredStream]] design applied to the IVF roll, closing the one
-  * scale cost [[VectorEpochStream]] documents honestly: there, EVERY
-  * batch pays an O(|corpus|) full-assignment parquet rewrite for
-  * durability, so at 100 TB the recurring rewrite, not the assignment
-  * pass, dominates. Here a batch commits only its DELTA:
+/** TIERED (L0/L1) epoch commits for the VECTOR (IVF) family on the shared
+  * [[TieredRoll]] — its crash matrix, retention and epoch-id contract —
+  * closing the O(|corpus|) full-assignment rewrite per batch that
+  * [[VectorEpochStream]] pays for durability.
   *
-  *  - **Bootstrap**: the first non-empty batch trains the coarse
-  *    quantizer ([[Similarity.ivfBuild]]) and commits as the first L1 —
-  *    L0 deltas need standing centroids to assign against, so unlike the
-  *    graph tier the chain always starts with an L1.
-  *  - **L0 (minor)**: the batch is assigned under the STANDING L1
-  *    centroids ([[Similarity.assignCells]] — one broadcast-map pass, no
-  *    training, no shuffle) and the `(nid, nv, cell, nn)` delta lands as
-  *    its own committed epoch under `root/l0/epoch=<batchId>` — an
-  *    O(|Δ|) write. Only the tiny centroid model is loaded
-  *    ([[IndexStore.loadIvfCentroids]]); no persistent handles.
-  *  - **L1 (major)**: every `majorEvery`-th commit unions the standing
-  *    L1 assignment with all live L0 deltas (SAME centroids — assignment
-  *    under a fixed quantizer commutes, so the union IS the full
-  *    assignment; zero re-assignment work) and commits the merged index
-  *    under `root/l1/epoch=<batchId>` ([[IndexStore.saveIvfIndex]]),
-  *    then prunes the L0s it absorbed. Amortized per-batch rewrite cost
-  *    drops from O(|corpus|) to O(|corpus| / majorEvery + |Δ|).
+  *  - **Bootstrap**: the first non-empty batch trains the coarse quantizer
+  *    ([[Similarity.ivfBuild]]) and commits the first L1 — minors need
+  *    standing centroids to assign against.
+  *  - **L0 (minor)**: the batch assigned under the STANDING centroids
+  *    ([[Similarity.assignCells]] — one broadcast-map pass, no training,
+  *    no shuffle); only the tiny centroid model is loaded
+  *    ([[IndexStore.loadIvfCentroids]]), no persistent handles.
+  *  - **L1 (major)**: the standing assignment unioned with the live deltas
+  *    and the batch — SAME centroids, and assignment under a fixed
+  *    quantizer commutes, so the union IS the full assignment with zero
+  *    re-assignment work.
   *
-  * Readers ([[loadCurrent]] → [[Tiered]]) merge ≤ 2 tiers: the newest
-  * committed L1's assignment plus the live L0 deltas above it, exposed
-  * as an ordinary [[Similarity.IvfIndex]] — every probe in the family
-  * ([[Similarity.ivfProbe]], `ivfProbeExcluding`, `ivfProbeFiltered`,
-  * `driftAudit`) works on the tiered view unchanged, and because all
-  * tiers were assigned under the SAME centroids, probe results are
-  * bit-identical to the flat [[Similarity.ivfAppend]] chain (v27's
-  * oracle certifies the whole lifecycle against a from-scratch replay).
-  *
-  * Recall drift trade (documented, standard IVF practice): centroids are
-  * the bootstrap batch's k-means optimum, not the grown corpus's — the
-  * same contract as [[Similarity.ivfAppend]]. A deployment retrains at a
-  * drift threshold via [[VectorEpochStream]]'s audit-armed roll; this
-  * tier optimizes the between-retrains regime where appends dominate.
-  *
-  * CRASH MATRIX ([[GraphEpochStream]]'s guarantees, preserved per tier —
-  * each epoch's IndexStore meta is its commit marker):
-  *  - crash mid-L0-write → no marker → replay re-assigns under the same
-  *    standing centroids (deterministic) and rewrites the torn dir with
-  *    identical content;
-  *  - crash mid-L1-major → no marker → the standing L1 and EVERY L0 it
-  *    was folding are still live (pruning runs only after commit) →
-  *    replay recompacts and overwrites;
-  *  - crash after either commit, before the stream checkpoint → the
-  *    replayed batch finds its epoch committed in one of the tiers and
-  *    SKIPS — the delta is never applied twice;
-  *  - retention: L1 keeps 2 generations; a major prunes only L0s ≤ the
-  *    PREVIOUS L1's id, so a reader pinned to generation N−1 survives
-  *    one subsequent major — the keepEpochs=2 grace window, tier-shaped.
-  *
-  * Epochs are parameter-keyed exactly like [[VectorEpochStream]]'s: meta
-  * records the REQUESTED model shape, and readers with different
-  * parameters see no epochs rather than a chain trained under someone
-  * else's model. Single writer; concurrent writers need an external
-  * lock. */
+  * Readers ([[loadCurrent]] → [[Tiered]]) get an ordinary
+  * [[Similarity.IvfIndex]]: every probe in the family works on the tiered
+  * view unchanged, bit-identical to the flat [[Similarity.ivfAppend]]
+  * chain (v27's oracle certifies the lifecycle against a from-scratch
+  * replay). Centroids are the bootstrap batch's k-means optimum, the
+  * [[Similarity.ivfAppend]] contract; [[retrainMajor]] is the maintenance
+  * window's fix. Epochs are keyed by the REQUESTED model shape. */
 object VectorTieredStream {
 
-  import BatchOutcome._
-
-  private def l0Root(root: String) = s"$root/l0"
-  private def l1Root(root: String) = s"$root/l1"
-
-  private def params(nCells: Int, trainSample: Int, iters: Int): Map[String, String] =
-    Map("roll_n_cells" -> nCells.toString,
+  private[streaming] final class Roll(spark: SparkSession, root: String,
+      nCells: Int, trainSample: Int, iters: Int,
+      idCol: String = "", vecCol: String = "")
+      extends TieredRoll[Similarity.IvfIndex, Tiered](spark, root, "vector") {
+    private val pm = Map("roll_n_cells" -> nCells.toString,
       "roll_train_sample" -> trainSample.toString,
       "roll_iters" -> iters.toString)
+    protected val bootstraps = true
+    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_assigned")
+    protected def l1Committed(dir: String): Boolean =
+      IndexStore.ivfIndexMeta(spark, dir, pm).isDefined
+    protected def loadL1(dir: String): Option[Similarity.IvfIndex] =
+      IndexStore.loadIvfIndex(spark, dir, expectedParams = pm)
+    protected def saveL1(l1: Similarity.IvfIndex, dir: String, note: String): Unit =
+      IndexStore.saveIvfIndex(spark, l1, dir, note, pm)
+    protected def releaseL1(l1: Similarity.IvfIndex): Unit = l1.release()
 
-  private def l0Params(nCells: Int, trainSample: Int, iters: Int): Map[String, String] =
-    params(nCells, trainSample, iters) + ("tier" -> "l0_assigned")
+    protected def view(t: TieredRoll.Tiers[Similarity.IvfIndex]): Tiered = {
+      val l1 = t.l1.get
+      Tiered(t.epochId,
+        l1.copy(assigned = t.l0Frames.foldLeft(l1.assigned)(_ unionByName _)),
+        t.liveL0, l1.release)
+    }
+
+    // Lloyd's per-iteration aggregates are sample/|Δ|-sized, so the build
+    // runs under the measured-width window (minors and majors have no
+    // shuffle to size)
+    override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
+                                     note: String): Unit =
+      Checkpoints.withDeltaWindow(spark, n)(commit(Similarity.ivfBuild(delta,
+        idCol, vecCol, nCells, trainSample, iters), dir, note))
+
+    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
+                        standing: Option[Long])(save: DataFrame => Unit): Unit =
+      save(Similarity.assignCells(delta, idCol, vecCol,
+        standingModel(standing)(IndexStore.loadIvfCentroids(spark, _, pm))))
+
+    protected def major(t: TieredRoll.Tiers[Similarity.IvfIndex],
+                        delta: DataFrame, n: => Long, epochId: Long,
+                        dir: String, note: String): Unit = {
+      val idx = view(t).index
+      commit(idx.copy(assigned = idx.assigned.unionByName(
+        Similarity.assignCells(delta, idCol, vecCol, idx.centroids)),
+        release = () => ()), dir, note)
+    }
+  }
 
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs(spark: SparkSession, root: String,
                nCells: Int, trainSample: Int = 10000, iters: Int = 8): Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root(root))
-      .filter(id => IndexStore.ivfIndexMeta(spark,
-        EpochDirs.dir(l1Root(root), id), params(nCells, trainSample, iters)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, nCells, trainSample, iters).l1Epochs
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs(spark: SparkSession, root: String,
                nCells: Int, trainSample: Int = 10000, iters: Int = 8): Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root(root))
-      .filter(id => IndexStore.stageMeta(spark,
-        EpochDirs.dir(l0Root(root), id), l0Params(nCells, trainSample, iters)).isDefined)
-      .sorted(Ordering[Long].reverse)
+    new Roll(spark, root, nCells, trainSample, iters).l0Epochs
 
   /** The ≤-2-tier reader view: `index` is an ordinary
     * [[Similarity.IvfIndex]] whose assignment is the newest committed
@@ -107,268 +100,85 @@ object VectorTieredStream {
       liveL0s: Seq[Long],
       release: () => Unit)
 
-  /** The id [[loadCurrent]] would return — the serving pin's zero-job
-    * staleness check (listing + marker peeks only): a minor OR a major
-    * commit bumps it, so a pinned server swaps on either. */
+  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
   def currentEpochId(spark: SparkSession, root: String,
                      nCells: Int = 16, trainSample: Int = 10000,
                      iters: Int = 8): Option[Long] =
-    l1Epochs(spark, root, nCells, trainSample, iters).headOption.map { l1 =>
-      (l1 +: l0Epochs(spark, root, nCells, trainSample, iters)
-        .filter(_ > l1)).max
-    }
+    new Roll(spark, root, nCells, trainSample, iters).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the assignment is probed. */
   def loadCurrent(spark: SparkSession, root: String,
                   nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8)
       : Option[Tiered] =
-    l1Epochs(spark, root, nCells, trainSample, iters).headOption.flatMap { l1Id =>
-      loadView(spark, root, nCells, trainSample, iters, l1Id,
-        l0Epochs(spark, root, nCells, trainSample, iters).filter(_ > l1Id))
-    }
-
-  /** The view over an ALREADY-LISTED (l1Id, liveL0) pair — shared by
-    * [[loadCurrent]] and the major path of [[foldBatch]] so a major never
-    * re-lists the tiers it just enumerated (per-epoch meta reads double
-    * on an object store otherwise). */
-  private def loadView(spark: SparkSession, root: String,
-                       nCells: Int, trainSample: Int, iters: Int,
-                       l1Id: Long, liveL0: Seq[Long],
-                       strict: Boolean = false): Option[Tiered] = {
-    val l0pm = l0Params(nCells, trainSample, iters)
-    IndexStore.loadIvfIndex(spark, EpochDirs.dir(l1Root(root), l1Id),
-      expectedParams = params(nCells, trainSample, iters)).map { l1 =>
-      val live = liveL0.sorted
-      // strict = fold/major path: a listed committed L0 that fails to
-      // load would be silently absent from the new L1 (durable data
-      // loss) — fail loudly there; readers tolerate the race.
-      val merged = live
-        .flatMap { id =>
-          val st = IndexStore.loadStage(spark,
-            EpochDirs.dir(l0Root(root), id), None, l0pm)
-          if (strict && st.isEmpty)
-            sys.error(s"committed L0 epoch=$id vanished mid-major")
-          st
-        }
-        .foldLeft(l1.assigned)(_ unionByName _)
-      Tiered((l1Id +: live).max,
-        Similarity.IvfIndex(l1.centroids, l1.nCells, merged, l1.release),
-        live, l1.release)
-    }
-  }
+    new Roll(spark, root, nCells, trainSample, iters).loadCurrent
 
   /** Fold ONE batch of embeddings (`idCol` numeric, `vecCol`
-    * array&lt;float&gt; — the [[Similarity.ivfBuild]] contract): an
-    * O(|Δ|) L0 commit, except the bootstrap batch (trains, commits L1)
-    * and every `majorEvery`-th live delta (triggers the L1 major).
-    * Idempotent under replay (either tier's committed marker skips).
-    * Pure batch logic — unit-testable without a stream. */
+    * array&lt;float&gt; — the [[Similarity.ivfBuild]] contract) through
+    * [[TieredRoll.fold]]. */
   def foldBatch(batch: DataFrame, idCol: String, vecCol: String,
                 root: String, batchId: Long,
                 nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8,
-                majorEvery: Int = 8): BatchOutcome = {
-    require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    val spark = batch.sparkSession
-    val pm = params(nCells, trainSample, iters)
-    val l0pm = l0Params(nCells, trainSample, iters)
-    // data epochs live at batchId × MaintenanceSlots so an out-of-band
-    // compaction/retrain (standing-epoch + 1) can never take the NEXT
-    // batch's id and turn its replay check into silent data loss
-    TierIds.ensureStrideLayout(spark, root) // refuse pre-stride legacy roots
-    val epochId = TierIds.dataEpoch(batchId)
-    val l0Dir = EpochDirs.dir(l0Root(root), epochId)
-    val l1Dir = EpochDirs.dir(l1Root(root), epochId)
-    if (IndexStore.stageMeta(spark, l0Dir, l0pm).isDefined ||
-        IndexStore.ivfIndexMeta(spark, l1Dir, pm).isDefined)
-      return Skipped // replayed after a committed save — already applied
-    Deltas.withMaterialized(batch) { delta =>
-      // the count doubles as the emptiness probe and the bootstrap's
-      // shuffle-width measurement (fills the pin — no extra pass)
-      val nVecs = delta.count()
-      if (nVecs == 0L) EmptyBatch // no content-free epochs
-      else {
-        def commitL1(idx: Similarity.IvfIndex, note: String): Unit =
-          try IndexStore.saveIvfIndex(spark, idx, l1Dir,
-            s"batch:$batchId $note", pm)
-          finally idx.release()
+                majorEvery: Int = 8): BatchOutcome =
+    new Roll(batch.sparkSession, root, nCells, trainSample, iters, idCol,
+      vecCol).fold(batch, batchId, majorEvery)
 
-        l1Epochs(spark, root, nCells, trainSample, iters).headOption match {
-          case None =>
-            // BOOTSTRAP: train the quantizer and commit the first L1 — the
-            // minors below need standing centroids to assign against.
-            // Lloyd's per-iteration aggregates are sample/|Δ|-sized, so
-            // the build runs under the measured-width window (minors and
-            // majors stay unwindowed: assignment under fixed centroids
-            // and the major's lazy union have no shuffle to size)
-            graft.operators.Checkpoints.withDeltaWindow(spark, nVecs)(
-              commitL1(Similarity.ivfBuild(delta, idCol, vecCol, nCells,
-                trainSample, iters), "bootstrap"))
-            Bootstrapped
-          case Some(prevL1) =>
-            val liveL0 = l0Epochs(spark, root, nCells, trainSample, iters)
-              .filter(_ > prevL1)
-            if (liveL0.size + 1 < majorEvery) {
-              // MINOR: assign under the standing centroids (model-only
-              // load, no persistent handles) and commit the delta — the
-              // O(|Δ|) write that is the whole point of the tier
-              val centroids = IndexStore.loadIvfCentroids(spark,
-                EpochDirs.dir(l1Root(root), prevL1), pm)
-                .getOrElse(sys.error(
-                  s"standing L1 epoch=$prevL1 vanished mid-fold"))
-              IndexStore.saveStage(spark,
-                Similarity.assignCells(delta, idCol, vecCol, centroids),
-                l0Dir, s"batch:$batchId", l0pm)
-              Minor
-            } else {
-              // MAJOR: union the standing assignment, live deltas, and this
-              // batch (same centroids — no re-assignment) into a full
-              // index; prune absorbed L0s (grace: only those ≤ the
-              // PREVIOUS L1) and old L1 generations after the commit
-              val view = loadView(spark, root, nCells, trainSample, iters,
-                prevL1, liveL0, strict = true)
-                .getOrElse(sys.error(
-                  s"standing L1 epoch=$prevL1 vanished mid-fold"))
-              val merged = view.index.assigned.unionByName(
-                Similarity.assignCells(delta, idCol, vecCol,
-                  view.index.centroids))
-              try commitL1(Similarity.IvfIndex(view.index.centroids,
-                view.index.nCells, merged, () => ()),
-                s"major absorbed=${liveL0.size}")
-              finally view.release()
-              EpochDirs.prune(spark, l1Root(root),
-                l1Epochs(spark, root, nCells, trainSample, iters).take(2).toSet)
-              // L0s ≤ the previous L1 are two generations old — no grace
-              val keep = l0Epochs(spark, root, nCells, trainSample, iters)
-                .filter(_ > prevL1).toSet
-              EpochDirs.prune(spark, l0Root(root), keep + epochId)
-              Major(liveL0.size)
-            }
-        }
-      }
-    }
-  }
-
-  /** Maintenance-window PHYSICAL tombstone compaction through the major
-    * path — [[IvfPqTieredStream.compactMajor]]'s IVF twin: drop the
-    * tombstoned ids from the merged assignment ([[Similarity.ivfCompact]]
-    * — centroids untouched), commit the survivor index as a NEW L1
-    * generation at `epochId + 1`, prune with the data major's reader
-    * grace. `None` below `threshold` (dead share of stored rows) or when
-    * no dead id is stored. Single writer. */
+  /** Maintenance-window PHYSICAL tombstone compaction ([[TieredRoll.compact]]):
+    * the tombstoned ids dropped from the merged assignment
+    * ([[Similarity.ivfCompact]] — centroids untouched). `None` below
+    * `threshold` (dead share of stored rows) or when no dead id is
+    * stored. */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
                    threshold: Double = 0.0, nCells: Int = 16,
                    trainSample: Int = 10000, iters: Int = 8): Option[Long] =
-    l1Epochs(spark, root, nCells, trainSample, iters).headOption
-      .flatMap { prevL1 =>
-        val liveL0 = l0Epochs(spark, root, nCells, trainSample, iters)
-          .filter(_ > prevL1)
-        val view = loadView(spark, root, nCells, trainSample, iters,
-          prevL1, liveL0, strict = true)
-          .getOrElse(sys.error(s"standing L1 epoch=$prevL1 vanished mid-compact"))
-        Similarity.ivfCompact(view.index.copy(release = () => ()),
-          tombstones, tombId, threshold) match {
-          case None => view.release(); None
-          case Some(compacted) =>
-            val newId = view.epochId + 1
-            try IndexStore.saveIvfIndex(spark, compacted,
-              EpochDirs.dir(l1Root(root), newId), s"compact after=$prevL1",
-              params(nCells, trainSample, iters))
-            finally { compacted.release(); view.release() }
-            EpochDirs.prune(spark, l1Root(root),
-              l1Epochs(spark, root, nCells, trainSample, iters).take(2).toSet)
-            EpochDirs.prune(spark, l0Root(root),
-              l0Epochs(spark, root, nCells, trainSample, iters)
-                .filter(_ > prevL1).toSet)
-            Some(newId)
-        }
-      }
+    new Roll(spark, root, nCells, trainSample, iters).compact(v =>
+      Similarity.ivfCompact(v.index.copy(release = () => ()), tombstones,
+        tombId, threshold))
 
-  /** Maintenance-window MODEL RETRAIN through the major path —
-    * [[IvfPqTieredStream.retrainMajor]]'s IVF twin: train fresh
-    * centroids over the caller-supplied retained corpus
-    * ([[Similarity.ivfBuild]]) and commit the re-assigned index as a NEW
-    * L1 generation at `epochId + 1` (atomic marker-write swap; pinned
-    * readers grace one major). The tiered counterpart of
-    * [[VectorEpochStream]]'s in-stream `Retrained` path — there the flat
-    * roll retrains inline because every epoch rewrites the corpus
-    * anyway; here retraining is a deliberate maintenance window. `None`
-    * when no generation is standing. */
+  /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrain]]): fresh
+    * centroids trained over the caller-supplied retained corpus
+    * ([[Similarity.ivfBuild]]) and the re-assigned index committed as a
+    * new L1 generation. The flat [[VectorEpochStream]] retrains inline;
+    * here retraining is a deliberate maintenance window. `None` when no
+    * generation is standing. */
   def retrainMajor(corpus: DataFrame, idCol: String, vecCol: String,
                    root: String, nCells: Int = 16, trainSample: Int = 10000,
-                   iters: Int = 8): Option[Long] = {
-    val spark = corpus.sparkSession
-    currentEpochId(spark, root, nCells, trainSample, iters).map { cur =>
-      val prevL1 = l1Epochs(spark, root, nCells, trainSample, iters).head
-      val newId = cur + 1
-      val idx = Similarity.ivfBuild(corpus, idCol, vecCol, nCells,
-        trainSample, iters)
-      try IndexStore.saveIvfIndex(spark, idx,
-        EpochDirs.dir(l1Root(root), newId), s"retrain after=$cur",
-        params(nCells, trainSample, iters))
-      finally idx.release()
-      EpochDirs.prune(spark, l1Root(root),
-        l1Epochs(spark, root, nCells, trainSample, iters).take(2).toSet)
-      EpochDirs.prune(spark, l0Root(root),
-        l0Epochs(spark, root, nCells, trainSample, iters)
-          .filter(_ > prevL1).toSet)
-      newId
-    }
-  }
+                   iters: Int = 8): Option[Long] =
+    new Roll(corpus.sparkSession, root, nCells, trainSample, iters).retrain(
+      Similarity.ivfBuild(corpus, idCol, vecCol, nCells, trainSample, iters))
 
-  /** The DRIFT-GATED wrapper — [[Similarity.driftAudit]] over the tiered
-    * view vs a recent arrival batch; [[retrainMajor]] fires when more
-    * than `maxDriftedCells` cells drift. */
+  /** [[retrainMajor]] gated on [[Similarity.driftAudit]] over the tiered
+    * view vs a recent arrival batch: fires when more than
+    * `maxDriftedCells` cells drift. */
   def retrainMajorIfDrifted(corpus: DataFrame, recent: DataFrame,
                             idCol: String, vecCol: String, root: String,
                             maxDriftedCells: Int, nCells: Int = 16,
                             trainSample: Int = 10000,
-                            iters: Int = 8): Option[Long] = {
-    val spark = corpus.sparkSession
-    loadCurrent(spark, root, nCells, trainSample, iters).flatMap { view =>
-      val drifted =
-        try Similarity.driftAudit(view.index, recent, idCol, vecCol)
-          .filter(org.apache.spark.sql.functions.col("drifted")).count()
-        finally view.release()
-      if (drifted > maxDriftedCells)
-        retrainMajor(corpus, idCol, vecCol, root, nCells, trainSample, iters)
-      else None
-    }
-  }
+                            iters: Int = 8): Option[Long] =
+    new Roll(corpus.sparkSession, root, nCells, trainSample, iters)
+      .retrainIfDrifted(maxDriftedCells)(v => Similarity.driftAudit(v.index,
+        recent, idCol, vecCol).filter(col("drifted")).count())(
+        Similarity.ivfBuild(corpus, idCol, vecCol, nCells, trainSample, iters))
 
   /** Start the tiered roll: `vectors` (a streaming frame with
-    * `idCol`/`vecCol`) → per-batch [[foldBatch]] → committed L0/L1
-    * epochs under `root`. `maintenance` opts into scheduled in-stream
-    * compaction/retrain after data majors ([[MaintenancePolicy]]);
-    * `recent` for the drift gate is the batch that triggered the major. */
+    * `idCol`/`vecCol`) → per-batch [[foldBatch]]. `maintenance` opts into
+    * scheduled compaction and drift-gated retrain after data majors
+    * ([[MaintenancePolicy]]); `recent` for the drift gate is the batch
+    * that triggered the major. */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             root: String, checkpointDir: String,
             nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8,
             majorEvery: Int = 8,
             maintenance: Option[MaintenancePolicy] = None,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    var majorsSeen = 0L // instance cadence only; safety is the ops' own
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, idCol, vecCol, root, batchId, nCells, trainSample,
-          iters, majorEvery) match {
-          case BatchOutcome.Major(_) =>
-            majorsSeen += 1
-            maintenance.filter(_.due(majorsSeen)).foreach { p =>
-              val spark = batch.sparkSession
-              p.tombstones.foreach(ts => compactMajor(spark, root, ts(),
-                p.tombId, p.threshold, nCells, trainSample, iters))
-              p.retrainCorpus.foreach(c => retrainMajorIfDrifted(c(), batch,
-                idCol, vecCol, root, p.maxDrifted, nCells, trainSample,
-                iters))
-            }
-          case _ => ()
-        }
-        ()
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    new Roll(vectors.sparkSession, root, nCells, trainSample, iters)
+      .start(vectors, checkpointDir, trigger, maintenance)(
+        foldBatch(_, idCol, vecCol, root, _, nCells, trainSample, iters,
+          majorEvery)) { (p, batch) =>
+        p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root,
+          ts(), p.tombId, p.threshold, nCells, trainSample, iters))
+        p.retrainCorpus.foreach(c => retrainMajorIfDrifted(c(), batch, idCol,
+          vecCol, root, p.maxDrifted, nCells, trainSample, iters))
       }
-      .start()
-  }
 }

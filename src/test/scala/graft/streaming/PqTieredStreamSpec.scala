@@ -10,8 +10,8 @@ import graft.operators.Similarity
 /** [[PqTieredStream]] — L0/L1 tiered epoch commits for the PQ index.
   * Contracts: the merged ≤2-tier reader view's codes are BIT-IDENTICAL
   * to the flat build+append chain (same codebooks, same encode kernel),
-  * minor commits are delta-sized, the crash matrix of the flat roll is
-  * preserved per tier, and a reader pinned before a major survives it. */
+  * minor commits are delta-sized, and a reader pinned before a major
+  * survives it. The crash matrix is [[TieredRollFaultSpec]]'s. */
 class PqTieredStreamSpec extends SparkSpec {
 
   private def ep(i: Long): Long = TierIds.dataEpoch(i)
@@ -71,51 +71,6 @@ class PqTieredStreamSpec extends SparkSpec {
         twin.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
       assert(codes(view.index) === codes(twin))
     } finally { view.release(); twin.release() }
-  }
-
-  test("crash matrix: torn L0 and torn L1 replay identically; committed " +
-       "batches replay as no-ops; empty batches commit nothing") {
-    val root = Files.createTempDirectory("pts2_idx").toString
-    val none = vecs(1 until 1)
-    assert(fold(none, root, 0L) === BatchOutcome.EmptyBatch)
-    assert(PqTieredStream.loadCurrent(spark, root, DIM, M, K, ITERS,
-      TRAIN).isEmpty)
-
-    fold(vecs(1 to 30), root, 1L) // bootstrap L1@1
-
-    val torn = new java.io.File(s"$root/l0/epoch=${ep(2)}")
-    assert(torn.mkdirs())
-    Files.write(torn.toPath.resolve("junk"), Array[Byte](1))
-    assert(PqTieredStream.l0Epochs(spark, root, DIM, M, K, ITERS,
-      TRAIN).isEmpty, "torn L0 must be invisible")
-    assert(fold(vecs(101 to 105), root, 2L) === BatchOutcome.Minor)
-    assert(PqTieredStream.l0Epochs(spark, root, DIM, M, K, ITERS, TRAIN)
-      === Seq(ep(2)))
-
-    assert(fold(vecs(151 to 155), root, 3L) === BatchOutcome.Minor)
-    val tornL1 = new java.io.File(s"$root/l1/epoch=${ep(4)}")
-    assert(tornL1.mkdirs())
-    Files.write(tornL1.toPath.resolve("junk"), Array[Byte](1))
-    fold(vecs(201 to 205), root, 4L) match {
-      case BatchOutcome.Major(n) => assert(n === 2)
-      case other => fail(s"expected Major, got $other")
-    }
-    assert(PqTieredStream.l1Epochs(spark, root, DIM, M, K, ITERS, TRAIN)
-      === Seq(ep(4), ep(1)))
-
-    def mtimes = new java.io.File(s"$root/l1/epoch=${ep(4)}").listFiles
-      .map(f => f.getName -> f.lastModified).toMap
-    val m0 = mtimes
-    Thread.sleep(1100)
-    assert(fold(vecs(201 to 205), root, 4L) === BatchOutcome.Skipped)
-    assert(mtimes === m0, "a committed batch must replay as a no-op")
-
-    val view = PqTieredStream.loadCurrent(spark, root, DIM, M, K, ITERS,
-      TRAIN).getOrElse(fail("no view"))
-    try assert(codes(view.index).map(_._1) ===
-      ((1 to 30) ++ (101 to 105) ++ (151 to 155) ++ (201 to 205))
-        .map(_.toLong).toSet)
-    finally view.release()
   }
 
   test("a reader pinned before a major survives it (one-major grace), and " +

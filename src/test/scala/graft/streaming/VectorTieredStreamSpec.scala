@@ -10,9 +10,9 @@ import graft.operators.Similarity
 /** [[VectorTieredStream]] — L0/L1 tiered epoch commits for the IVF
   * index. Contracts: the merged ≤2-tier reader view is BIT-IDENTICAL to
   * the flat build+append chain (same centroids, same assignment, same
-  * probe answers), minor commits are delta-sized (the scale claim), the
-  * crash matrix of the flat roll is preserved per tier, and a reader
-  * pinned before a major compaction survives it. */
+  * probe answers), minor commits are delta-sized (the scale claim), and a
+  * reader pinned before a major compaction survives it. The crash matrix
+  * is [[TieredRollFaultSpec]]'s. */
 class VectorTieredStreamSpec extends SparkSpec {
 
   private def ep(i: Long): Long = TierIds.dataEpoch(i)
@@ -78,67 +78,6 @@ class VectorTieredStreamSpec extends SparkSpec {
       val queries = vecs(1 to 5).union(vecs(401 to 403))
       assert(probed(view.index, queries) === probed(twin, queries))
     } finally { view.release(); twin.release() }
-  }
-
-  test("crash matrix: torn L0 and torn L1 replay identically; committed " +
-       "batches replay as no-ops; empty batches commit nothing") {
-    val root = Files.createTempDirectory("vts2_idx").toString
-    val none = vecs(1 until 1)
-    // empty FIRST batch: no bootstrap crash, no epoch
-    assert(VectorTieredStream.foldBatch(none, "vec_id", "emb", root, 0L,
-      N_CELLS, TRAIN, ITERS, majorEvery = 3) === BatchOutcome.EmptyBatch)
-    assert(VectorTieredStream.loadCurrent(spark, root, N_CELLS, TRAIN,
-      ITERS).isEmpty)
-
-    VectorTieredStream.foldBatch(vecs(1 to 40), "vec_id", "emb", root, 1L,
-      N_CELLS, TRAIN, ITERS, majorEvery = 3)
-
-    // torn L0: a dir without its meta marker is invisible AND its
-    // replayed batch overwrites it (re-assignment is deterministic)
-    val torn = new java.io.File(s"$root/l0/epoch=${ep(2)}")
-    assert(torn.mkdirs())
-    Files.write(torn.toPath.resolve("junk"), Array[Byte](1))
-    assert(VectorTieredStream.l0Epochs(spark, root, N_CELLS, TRAIN,
-      ITERS).isEmpty, "torn L0 must be invisible")
-    assert(VectorTieredStream.foldBatch(vecs(101 to 110), "vec_id", "emb",
-      root, 2L, N_CELLS, TRAIN, ITERS, majorEvery = 3)
-      === BatchOutcome.Minor)
-    assert(VectorTieredStream.l0Epochs(spark, root, N_CELLS, TRAIN, ITERS)
-      === Seq(ep(2)))
-
-    // second live minor at batch 3; batch 4 is the major (2 live deltas
-    // + 1 ≥ 3). Simulate the major's crash mid-save with a torn L1 dir;
-    // replay recompacts and overwrites.
-    assert(VectorTieredStream.foldBatch(vecs(151 to 160), "vec_id", "emb",
-      root, 3L, N_CELLS, TRAIN, ITERS, majorEvery = 3)
-      === BatchOutcome.Minor)
-    val tornL1 = new java.io.File(s"$root/l1/epoch=${ep(4)}")
-    assert(tornL1.mkdirs())
-    Files.write(tornL1.toPath.resolve("junk"), Array[Byte](1))
-    VectorTieredStream.foldBatch(vecs(201 to 210), "vec_id", "emb", root,
-      4L, N_CELLS, TRAIN, ITERS, majorEvery = 3) match {
-      case BatchOutcome.Major(n) => assert(n === 2)
-      case other => fail(s"expected Major, got $other")
-    }
-    assert(VectorTieredStream.l1Epochs(spark, root, N_CELLS, TRAIN, ITERS)
-      === Seq(ep(4), ep(1)))
-
-    // replay of the committed major: a pure no-op (mtimes unchanged)
-    def mtimes = new java.io.File(s"$root/l1/epoch=${ep(4)}").listFiles
-      .map(f => f.getName -> f.lastModified).toMap
-    val m0 = mtimes
-    Thread.sleep(1100)
-    assert(VectorTieredStream.foldBatch(vecs(201 to 210), "vec_id", "emb",
-      root, 4L, N_CELLS, TRAIN, ITERS, majorEvery = 3)
-      === BatchOutcome.Skipped)
-    assert(mtimes === m0, "a committed batch must replay as a no-op")
-
-    val view = VectorTieredStream.loadCurrent(spark, root, N_CELLS, TRAIN,
-      ITERS).getOrElse(fail("no view"))
-    try assert(assignedPairs(view.index).map(_._1) ===
-      ((1 to 40) ++ (101 to 110) ++ (151 to 160) ++ (201 to 210))
-        .map(_.toLong).toSet)
-    finally view.release()
   }
 
   test("a reader pinned before a major survives it (one-major grace), and " +
