@@ -80,6 +80,73 @@ object GraftSession {
     spark.conf.set(graft.operators.Checkpoints.ReliableConf, "true")
   }
 
+  /** The conf a [[graft.operators.Checkpoints.sized]] scope resolved to:
+    * the session to bind frames to (the root itself when nothing would
+    * change), the width and AQE/broadcast state it runs under, and
+    * whether a memoized derived session served it (`None` for the root). */
+  private[graft] final case class Scope(session: SparkSession, width: Int,
+      adaptive: Boolean, broadcast: Boolean, reused: Option[Boolean])
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val Adaptive = "spark.sql.adaptive.enabled"
+  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  // A root's derived sessions, valid for the root runtime conf they were
+  // cloned from; a conf change starts a fresh memo. Roots are held weakly,
+  // but a derived session references its root's state, so entries of a
+  // stopped context are also dropped whenever a new session is derived.
+  private final class Derived(val rootConf: Map[String, String]) {
+    val sessions =
+      scala.collection.mutable.HashMap.empty[(Int, Boolean, Boolean), SparkSession]
+  }
+  private val derivedByRoot = new java.util.WeakHashMap[SparkSession, Derived]()
+  private val rootOfDerived =
+    new java.util.WeakHashMap[SparkSession, java.lang.ref.WeakReference[SparkSession]]()
+
+  /** Resolve a sizing scope for frames of `spark`: width
+    * `min(root width, width)`, AQE off when `adaptiveOff`, broadcast
+    * joins off when `broadcastOff`. Always resolved against the ROOT
+    * session (a derived session maps back to the root it came from), so
+    * nested scopes never compound. A change is made on a derived session
+    * — `cloneSession()` of the root, keeping its runtime conf, temp views
+    * and extensions, with these keys set once before any frame binds to
+    * it — memoized per (root, root conf, width, flags): a fresh clone
+    * costs ~140 ms at first use, a memoized one nothing. The root's conf
+    * is never written. */
+  private[graft] def derived(spark: SparkSession, width: Int, adaptiveOff: Boolean,
+                             broadcastOff: Boolean): Scope = derivedByRoot.synchronized {
+    val root = Option(rootOfDerived.get(spark)).flatMap(r => Option(r.get)).getOrElse(spark)
+    val rootWidth = root.conf.get(ShufflePartitions).toInt
+    val rootAdaptive = root.conf.get(Adaptive).trim.toBoolean
+    val rootBroadcast = root.conf.get(BroadcastThreshold).trim != "-1"
+    val w = math.min(width, rootWidth)
+    val aqeOff = adaptiveOff && rootAdaptive
+    val bOff = broadcastOff && rootBroadcast
+    val key = (w, aqeOff, bOff)
+    if (key == ((rootWidth, false, false)))
+      Scope(root, rootWidth, rootAdaptive, rootBroadcast, None)
+    else {
+      val rootConf = root.conf.getAll
+      val memo = Option(derivedByRoot.get(root)).filter(_.rootConf == rootConf)
+        .getOrElse {
+          val m = new Derived(rootConf)
+          derivedByRoot.put(root, m)
+          m
+        }
+      val reused = memo.sessions.contains(key)
+      val session = memo.sessions.getOrElseUpdate(key, {
+        derivedByRoot.keySet.removeIf(_.sparkContext.isStopped)
+        val d = org.apache.spark.sql.GraftSqlBridge.cloneSession(root)
+        d.conf.set(ShufflePartitions, w.toLong)
+        if (aqeOff) d.conf.set(Adaptive, false)
+        if (bOff) d.conf.set(BroadcastThreshold, -1L)
+        rootOfDerived.put(d, new java.lang.ref.WeakReference(root))
+        d
+      })
+      Scope(session, w, rootAdaptive && !aqeOff, rootBroadcast && !bOff, Some(reused))
+    }
+  }
+
   /** Local session for tests / benchmarks. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = tune(

@@ -93,6 +93,17 @@ object Tables {
                             column: String = "ts"): TimeUnit =
     tsEncoding(spark, path, column).unit
 
+  /** A TIMESTAMP(NANOS) read needs `spark.sql.legacy.parquet.nanosAsLong`,
+    * which [[graft.GraftSession.tune]] sets when the session is built —
+    * library code never sets session conf, so a session built without it
+    * fails here, loudly, instead of mid-read. */
+  private[graft] def requireNanosAsLong(spark: SparkSession): Unit = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    require(spark.conf.getOption(key).exists(_.trim.equalsIgnoreCase("true")),
+      s"reading a TIMESTAMP(NANOS) events file needs $key=true; build the " +
+        "session through GraftSession.tune, which sets it")
+  }
+
   /** Load the events table, normalizing `ts` to the canonical microsecond
     * TimestampType whatever the file's physical encoding:
     *  - TIMESTAMP(NANOS): Spark has no nanosecond timestamp, so read as
@@ -105,7 +116,7 @@ object Tables {
   def loadEvents(spark: SparkSession, path: String): DataFrame =
     tsEncoding(spark, path) match {
       case TsEncoding(TimeUnit.NANOS, _) =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        requireNanosAsLong(spark)
         spark.read.schema(Schemas.eventsWithTs(org.apache.spark.sql.types.LongType))
           .parquet(path)
           .withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -39,7 +39,8 @@ import org.apache.spark.storage.StorageLevel
   * The pre-pass also yields measured sizes for free: the array frame is
   * coalesced to ~[[Checkpoints.partitionsForRows]] of the measured edge
   * count (a |V|-row frame left at the session's shuffle-partition width is
-  * pure task-count overhead on small graphs — the RoundFloor finding), and
+  * pure task-count overhead on small graphs — measured on a k-core round
+  * at sf0.1), and
   * `srcCount`/`edgeCount` are exposed so operators can size their round
   * exchanges the same way.
   */
@@ -234,7 +235,8 @@ object Adjacency {
       // measured sizing: array bytes scale with |E|, so size partitions by
       // the measured edge count, not the session's shuffle width — a 20k-
       // source graph becomes a handful of tasks per round instead of 32
-      // (the RoundFloor finding); a 100-TB graph keeps its parallelism
+      // (measured on a k-core round at sf0.1); a 100-TB graph keeps its
+      // parallelism
       .coalesce(Checkpoints.partitionsForRows(edgeCount))
       .persist(StorageLevel.MEMORY_AND_DISK)
     arrayAdj.count()

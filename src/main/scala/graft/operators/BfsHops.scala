@@ -90,13 +90,15 @@ object BfsHops {
       // the build already measured edgeCount, so the width costs zero
       // extra jobs (the old "too small to beat the measuring job" note
       // predates the count being a free field). Lower-only; the
-      // AQE-off floor fires only for tiny measured graphs.
-      Checkpoints.withDeltaWindow(hyb.arrayAdj.sparkSession, hyb.edgeCount) {
+      // AQE-off floor fires only for tiny measured graphs. Each round's
+      // chain starts from the adjacency's array layout (expand), so
+      // binding it sizes every round.
+      val adj = hyb.copy(arrayAdj = Checkpoints.sized(hyb.arrayAdj, hyb.edgeCount))
       while (d < maxHops && frontierCount > 0) {
         d += 1
         val kn = rings.map(_._1).reduce(_ union _)
         val knHinted = if (knownCount <= broadcastLimit) broadcast(kn) else kn
-        val reached = hyb.expand(frontier.withColumnRenamed("node", "src"))
+        val reached = adj.expand(frontier.withColumnRenamed("node", "src"))
           .select(col("dst").as("node"))
           .distinct()
           .join(knHinted, Seq("node"), "left_anti")
@@ -107,7 +109,6 @@ object BfsHops {
         else Checkpoints.release(nextFrontierRaw)
         frontier = nextFrontier
         knownCount += frontierCount
-      }
       }
       hyb.release()
       val dists = rings

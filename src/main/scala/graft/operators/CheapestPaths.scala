@@ -71,17 +71,17 @@ object CheapestPaths {
       buildRounds(hyb, costs0)
     }
     def buildRounds(hyb: Adjacency.Hybrid, costs0: DataFrame): ManagedCosts = {
-      var costs = costs0
-      var frontier = Checkpoints.stage(costs)
-      var frontierCount = costs.count()
-      var r = 0
       // measured round width (r17): the relaxation's exchanges carry the
       // min-combined candidate frame and the two node-keyed sides of the
       // full-outer merge — all bounded by |E| pre-combine, a count the
       // build already measured (zero extra jobs; the old "too small to
       // beat the measuring job" note predates the free field).
-      // Lower-only; the AQE-off floor fires only for tiny graphs.
-      Checkpoints.withDeltaWindow(hyb.arrayAdj.sparkSession, hyb.edgeCount) {
+      // Lower-only; the AQE-off floor fires only for tiny graphs. Every
+      // round stage starts from `costs`, so binding it sizes them all.
+      var costs = Checkpoints.sized(costs0, hyb.edgeCount)
+      var frontier = Checkpoints.stage(costs)
+      var frontierCount = costs.count()
+      var r = 0
       while (r < rounds && frontierCount > 0) {
         r += 1
         val cand = hyb.expand(frontier.withColumnRenamed("node", "src"))
@@ -107,7 +107,6 @@ object CheapestPaths {
         Checkpoints.release(frontier)
         costs = nextCosts
         frontier = nextFrontier
-      }
       }
       val fin = costs
       val lastFrontier = frontier

@@ -33,7 +33,7 @@ import org.apache.spark.sql.DataFrame
   */
 object Checkpoints {
 
-  /** Runtime conf flag (`spark.conf.set(...)`-able mid-session): when
+  /** Runtime conf flag (settable mid-session on the root): when
     * `true`, [[stage]] uses reliable `Dataset.checkpoint()`; requires
     * `SparkContext.setCheckpointDir` to have been called. */
   val ReliableConf = "spark.graft.checkpoint.reliable"
@@ -91,117 +91,70 @@ object Checkpoints {
     }
   }
 
-  // One thread per session may hold a lowered-conf window at a time:
-  // interleaved set/restore from two threads would restore a STALE value
-  // and leave the session permanently mis-configured. Same-thread nesting
-  // is fine (inner window restores to the outer's value in LIFO order).
-  private val shuffleWindowOwner =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, Thread]()
-
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily LOWERED to
-    * fit a measured row volume, then restore it — the iterative graph
-    * operators' answer to the measured per-round floor: on tiny per-round
-    * frames the cost is pure task-count overhead (probed at sf0.1: a
-    * k-core round is 0.68 s at 32 shuffle partitions and 0.34 s at 8,
-    * with AQE size-first coalescing NOT recovering it — join-stage
-    * symmetry keeps the map sides wide). The override only ever lowers:
-    * `n >= session conf` is a no-op, so a 10k-partition cluster session
-    * keeps its parallelism on a 100-TB graph and a small scoped graph
-    * stops paying 32-task scheduling per stage.
-    *
-    * Concurrency contract (enforced, not just documented): only the
-    * thread that OPENED a session's window mutates the conf; a second
-    * thread arriving while a window is open runs `f` WITHOUT lowering —
-    * correctness is unaffected (the override is purely a task-count
-    * optimization) and the conf can never be restored to a stale value by
-    * interleaved windows. Residual (inherent to session-scoped conf): a
-    * concurrent query planned inside someone else's window may still SEE
-    * the lowered value — performance-only. */
-  def withShufflePartitions[A](spark: org.apache.spark.sql.SparkSession,
-                               n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val me = Thread.currentThread()
-    val owner = shuffleWindowOwner.putIfAbsent(spark, me)
-    if (owner != null && (owner ne me)) f // contended: skip the optimization
-    else {
-      val opened = owner == null
-      try {
-        val prev = spark.conf.get(key)
-        if (n >= prev.toInt) f
-        else {
-          spark.conf.set(key, n.toString)
-          try f finally spark.conf.set(key, prev)
-        }
-      } finally if (opened) shuffleWindowOwner.remove(spark, me)
-    }
-  }
-
   /** Partition count for a measured per-round row volume: one partition
-    * per ~500k rows, floor 4 (keep a few cores busy), capped by the
-    * session conf inside [[withShufflePartitions]] itself. Clamped to
-    * Int range BEFORE the narrowing cast — an extreme row count must
-    * degrade to the no-op path, never wrap negative into the conf. */
+    * per ~500k rows, floor 4 (keep a few cores busy), capped by the root
+    * session's width inside [[sized]]. The ceiling division cannot
+    * overflow and the result is clamped to Int range BEFORE the narrowing
+    * cast — an extreme row count must degrade to the no-op path, never
+    * wrap to the floor. */
   def partitionsForRows(rows: Long, rowsPerPartition: Long = 500000L): Int =
-    math.min(Int.MaxValue.toLong,
-      math.max(4L, (rows + rowsPerPartition - 1) / rowsPerPartition)).toInt
+    math.min(Int.MaxValue.toLong, math.max(Floor.toLong,
+      if (rows <= 0) 0L else (rows - 1) / rowsPerPartition + 1)).toInt
 
-  /** [[withShufflePartitions]] sized from a MEASURED |Δ| row volume,
-    * plus: when the measured width lands at the floor (a genuinely tiny
-    * delta), AQE is switched off for the window too. Rationale
-    * (measured, r17 ConfAb at sf0.1/local[32], 3 reps/variant):
-    * on |Δ|-sized fold/probe frames every AQE shuffle becomes its own
-    * stage-materialization job plus a driver-side final-plan update —
-    * 76 of t40's 92 jobs, 41 of d14's 55, and 40.7% of v27's wall
-    * sampled inside `AdaptiveSparkPlanExec.withFinalPlanUpdate` — while
-    * AQE's two contributions are already covered: coalescing is
-    * superseded by the measured width, and skew-split has nothing to
-    * split in ≤`aqeOffAtOrBelow` partitions. Measured width alone:
-    * t40 8.29→6.89s; width+AQE-off: 5.62s (v27 5.28→4.24, d14
-    * 5.96→3.88). A LARGE delta keeps AQE on (its skew handling is real
-    * there) and keeps the cluster's width — both knobs stay
-    * scale-adaptive, never a local-core-count constant. */
-  def withDeltaWindow[A](spark: org.apache.spark.sql.SparkSession,
-                         rows: Long, rowsPerPartition: Long = 500000L,
-                         aqeOffAtOrBelow: Int = 4,
-                         broadcastOffAtFloor: Boolean = false)(f: => A): A = {
+  private val Floor = 4
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Checkpoints")
+
+  /** `df` re-bound to a session whose shuffles fit a MEASURED row volume:
+    * width `min(root width, partitionsForRows(rows, rowsPerPartition))`,
+    * and when that lands at the floor of 4 (a genuinely tiny carrier)
+    * AQE off too, plus broadcast joins off if `broadcastOffAtFloor`.
+    * Everything built FROM the returned frame — joins with it on the
+    * left, aggregates, stages, writes, a caller's later action — plans
+    * and runs under that conf; a frame built from the root session (or a
+    * root frame on the left of a join) does not. Bind the frame each
+    * shuffle chain starts from.
+    *
+    * Why these knobs: on tiny per-round frames the cost is task-count
+    * overhead (a k-core round at sf0.1: 0.68 s at 32 shuffle partitions,
+    * 0.34 s at 8, with AQE coalescing NOT recovering it — join-stage
+    * symmetry keeps the map sides wide), and at the floor every AQE
+    * shuffle is its own stage-materialization job plus a driver-side
+    * final-plan update (r17 at sf0.1/local[32]: 76 of t40's 92 jobs, 41
+    * of d14's 55, 40.7% of v27's wall in
+    * `AdaptiveSparkPlanExec.withFinalPlanUpdate`; width alone took t40
+    * 8.29→6.89 s, width + AQE off 5.62 s, v27 5.28→4.24, d14 5.96→3.88),
+    * while AQE's coalescing is superseded by the measured width and its
+    * skew split has nothing to split in 4 partitions. A planner-chosen
+    * broadcast at the floor is a driver-synchronous build per round where
+    * two 4-task exchanges are cheaper (PageRank's round join, q65
+    * 1.66→1.12 s at sf0.1); explicit `broadcast()` hints still win. A
+    * large volume keeps the cluster width and AQE — the sizing only ever
+    * lowers, never a local-core-count constant.
+    *
+    * Concurrency contract: no session conf is ever written. The derived
+    * session ([[graft.GraftSession.derived]]) is cloned from the root with
+    * its three keys set before any frame binds to it and never mutated
+    * afterwards, so concurrent scopes on one root each get their own
+    * conf, and a query planned elsewhere meanwhile sees the root conf
+    * unchanged. A scope inside a scope resolves against the root, not the
+    * outer scope; `df` comes back unchanged when nothing would change.
+    * Each call logs its decision at INFO (no Spark job: `rows` is the
+    * caller's existing measurement or a parquet footer count). */
+  def sized(df: DataFrame, rows: Long, rowsPerPartition: Long = 500000L,
+            broadcastOffAtFloor: Boolean = false): DataFrame = {
     val n = partitionsForRows(rows, rowsPerPartition)
-    withShufflePartitions(spark, n) {
-      if (n > aqeOffAtOrBelow) f
-      else {
-        val key = "spark.sql.adaptive.enabled"
-        val me = Thread.currentThread()
-        // same single-owner discipline as the width window (and the same
-        // map: both mutate session conf, so one owner guards both keys)
-        val owner = shuffleWindowOwner.get(spark)
-        if (owner ne me) f // contended or width window skipped: no AQE flip
-        else {
-          val prev = spark.conf.get(key)
-          // broadcastOffAtFloor (opt-in, r17): at the tiny floor a
-          // planner-chosen broadcast join is a DRIVER-synchronous build
-          // (run child, collect, build relation, reship) per round, while
-          // the shuffle alternative is a couple of 4-task exchanges the
-          // executors absorb — measured on PageRank's node-keyed round
-          // join (q65 1.66→1.12 s at sf0.1). Explicit broadcast() hints
-          // (KCore/BFS survivor sets) override the threshold, so hinted
-          // sites are untouched. Only meaningful at the floor, where both
-          // join sides are known-tiny; large measured windows keep the
-          // session threshold.
-          val bKey = "spark.sql.autoBroadcastJoinThreshold"
-          val bPrev = if (broadcastOffAtFloor) Some(spark.conf.get(bKey)) else None
-          if (broadcastOffAtFloor) spark.conf.set(bKey, "-1")
-          try {
-            if (prev != "true") f // AQE already off (or forced): width+bcast only
-            else {
-              spark.conf.set(key, "false")
-              try f finally spark.conf.set(key, prev)
-            }
-          } finally bPrev.foreach(spark.conf.set(bKey, _))
-        }
-      }
-    }
+    val floor = n <= Floor
+    val scope = graft.GraftSession.derived(df.sparkSession, n,
+      adaptiveOff = floor, broadcastOff = floor && broadcastOffAtFloor)
+    log.info(s"sized: rows=$rows rowsPerPartition=$rowsPerPartition " +
+      s"width=${scope.width} aqe=${if (scope.adaptive) "on" else "off"} " +
+      s"broadcast=${if (scope.broadcast) "on" else "off"} derived=" +
+      scope.reused.fold("none")(r => if (r) "reused" else "new"))
+    if (scope.session eq df.sparkSession) df
+    else org.apache.spark.sql.GraftSqlBridge.ofRows(scope.session,
+      df.queryExecution.analyzed)
   }
-
-  private val sweepLog = org.slf4j.LoggerFactory.getLogger("graft.operators.Checkpoints")
 
   // Per-context overlap ledger for sweepingOnFailure: `active` counts
   // in-flight builds, `started` counts entries ever — together they
@@ -259,7 +212,7 @@ object Checkpoints {
           (ledger.myStarted.get() - mySnapshot)
         val overlapped = overlapAtEntry || othersActive || othersStartedSince
         if (overlapped) {
-          sweepLog.warn("sweepingOnFailure: overlapping builds detected in " +
+          log.warn("sweepingOnFailure: overlapping builds detected in " +
             "this context — skipping the failure sweep (cannot attribute " +
             "newly registered RDDs to this build); release leaked frames " +
             "via the operators' handles or session teardown")

@@ -660,9 +660,9 @@ object IndexStore {
     * under `dir` (0 when the dir is absent/empty) — a driver-side
     * listing + footer peek, ZERO Spark jobs. Sizes the tiered majors'
     * maintenance windows from already-committed epoch data: the standing
-    * tier's row count is in its files' footers, so a major can open a
-    * [[Checkpoints.withDeltaWindow]] proportional to standing+delta
-    * without paying a count job over the standing frames. Cost on an
+    * tier's row count is in its files' footers, so a major can be
+    * [[Checkpoints.sized]] by standing+delta without paying a count job
+    * over the standing frames. Cost on an
     * object store is one footer GET per file — the same order as the
     * meta peeks the roll already does per epoch. */
   def parquetRowCount(spark: SparkSession, dir: String): Long = {

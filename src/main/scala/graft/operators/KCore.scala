@@ -74,17 +74,15 @@ object KCore {
         .persist(StorageLevel.MEMORY_AND_DISK)
       // measured-size round partitioning: per-round frames carry ≤ 2|E|
       // rows, and on small graphs the round cost is task-count overhead,
-      // not data (Checkpoints.withShufflePartitions scaladoc — the
-      // override only ever LOWERS the session conf)
-      val undCount = und.count()
-      Checkpoints.withDeltaWindow(edges.sparkSession, 2 * undCount) {
-        buildRounds(und)
-      }
+      // not data (Checkpoints.sized scaladoc — the sizing only ever
+      // LOWERS the root session's width)
+      buildRounds(und, und.count())
     }
-    def buildRounds(und: DataFrame): ManagedCore = {
+    def buildRounds(und: DataFrame, undCount: Long): ManagedCore = {
       // round 0: everyone with initial degree >= k survives
       var surv = Checkpoints.stage(
-        degreesOf(und).filter(col("deg") >= k).select(col("node"), col("deg")))
+        degreesOf(Checkpoints.sized(und, 2 * undCount))
+          .filter(col("deg") >= k).select(col("node"), col("deg")))
       var prevCount = surv.count()
       var converged = false
       for (_ <- 1 to rounds if !converged) {
@@ -98,16 +96,13 @@ object KCore {
           .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
         // this round's exchange carries map-combined per-node degree
         // counts — ≤ maps×(survivors) rows with `prevCount` survivors, a
-        // number already in hand from the convergence check: open a
-        // measured per-round window (nested, LIFO-restored) so a
-        // collapsed survivor set stops paying the outer |E|-sized width
-        // and the AQE-off floor can fire on tiny rounds (measured r17:
-        // q72 2.40→2.08 s)
-        val next = Checkpoints.withDeltaWindow(edges.sparkSession,
-          2 * prevCount) {
-          Checkpoints.stage(
-            degreesOf(e).filter(col("deg") >= k).select(col("node"), col("deg")))
-        }
+        // number already in hand from the convergence check: size the
+        // round by it so a collapsed survivor set stops paying round 0's
+        // |E|-sized width and the AQE-off floor can fire on tiny rounds
+        // (measured r17: q72 2.40→2.08 s)
+        val next = Checkpoints.stage(
+          degreesOf(Checkpoints.sized(e, 2 * prevCount))
+            .filter(col("deg") >= k).select(col("node"), col("deg")))
         val n = next.count()
         Checkpoints.release(surv)
         surv = next

@@ -98,35 +98,35 @@ object LabelPropagation {
     def build(): ManagedLabels = {
       if (symmetric && Adjacency.symmetryCheckEnabled(spark))
         hyb.requireSymmetric()
-      val nodes = if (symmetric) hyb.srcs else hyb.allNodes
       // size the round exchanges to the measured carrier volume — the
       // count is a field the hybrid build already measured, so unlike the
       // old per-call probe this costs zero extra jobs (lower-only: a
       // cluster session keeps its width). |E| is the honest carrier here
       // (unlike PageRank's map-combinable inflow): the vote groupBy keys
       // on (dst, lab) and round-1 labels are all distinct, so partial
-      // aggregation cannot shrink below |E| pairs. withDeltaWindow adds
-      // the AQE-off floor for tiny measured graphs only.
-      var r: DataFrame = null
-      Checkpoints.withDeltaWindow(spark, hyb.edgeCount) {
-        r = Checkpoints.stage(nodes.select(col("node"), col("node").as("lab")))
-        for (_ <- 1 to iters) {
-          // carriers: every in-edge delivers its src's round-(i-1) label
-          val votes = hyb.expand(r.withColumnRenamed("node", "src"))
-            .groupBy("dst", "lab")
-            .agg(count(lit(1)).as("c"))
-          // argmax by (count desc, label asc) as one order-independent
-          // integer argmin — no window, one exchange on dst (a prefix of the
-          // (dst,lab) count key, so AQE-local)
-          val upd = votes.groupBy("dst")
-            .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("m"))
-            .select(col("dst"), col("m.lab").as("newlab"))
-          val next = Checkpoints.stage(
-            r.join(upd, r("node") === upd("dst"), "left")
-              .select(r("node"), coalesce(col("newlab"), r("lab")).as("lab")))
-          Checkpoints.release(r)
-          r = next
-        }
+      // aggregation cannot shrink below |E| pairs. Checkpoints.sized adds
+      // the AQE-off floor for tiny measured graphs only; every round
+      // stage starts from the label frame, so binding the node set sizes
+      // them all.
+      val nodes = Checkpoints.sized(if (symmetric) hyb.srcs else hyb.allNodes,
+        hyb.edgeCount)
+      var r = Checkpoints.stage(nodes.select(col("node"), col("node").as("lab")))
+      for (_ <- 1 to iters) {
+        // carriers: every in-edge delivers its src's round-(i-1) label
+        val votes = hyb.expand(r.withColumnRenamed("node", "src"))
+          .groupBy("dst", "lab")
+          .agg(count(lit(1)).as("c"))
+        // argmax by (count desc, label asc) as one order-independent
+        // integer argmin — no window, one exchange on dst (a prefix of the
+        // (dst,lab) count key, so AQE-local)
+        val upd = votes.groupBy("dst")
+          .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("m"))
+          .select(col("dst"), col("m.lab").as("newlab"))
+        val next = Checkpoints.stage(
+          r.join(upd, r("node") === upd("dst"), "left")
+            .select(r("node"), coalesce(col("newlab"), r("lab")).as("lab")))
+        Checkpoints.release(r)
+        r = next
       }
       val rFinal = r
       // rFinal is a staged checkpoint with no dependency on the adjacency —

@@ -44,8 +44,8 @@ import org.apache.spark.storage.StorageLevel
   * total work (measured 16.6 s for 5 rounds on the sf0.1 co-purchase
   * graph, degrading across calls; staged, the same job is flat and ~3×
   * faster end-to-end). Round exchanges run at the measured-size partition
-  * count ([[Checkpoints.withShufflePartitions]], lower-only — a cluster
-  * session keeps its width).
+  * count ([[Checkpoints.sized]], lower-only — a cluster session keeps its
+  * width).
   *
   * Overflow: total mass never exceeds |V|·scale, and the damping multiply
   * is by 85, so the caller must keep |V|·scale·85 < 2^63.
@@ -164,8 +164,6 @@ object PageRank {
     def build(): ManagedRanks = {
       if (symmetric && Adjacency.symmetryCheckEnabled(spark))
         hyb.requireSymmetric()
-      val nodes = nodeBase(if (symmetric) hyb.srcs else hyb.allNodes)
-        .persist(StorageLevel.MEMORY_AND_DISK)
       // size the round exchanges to the measured carrier volume: the
       // inflow groupBy is map-side partial-aggregated, so each round's
       // exchange carries ≤ maps×|V| partial sums and the reduce side
@@ -173,41 +171,41 @@ object PageRank {
       // field the hybrid build already measured (zero extra jobs); on a
       // directed graph dst-only nodes make srcCount an undercount, so the
       // conservative |E| bound stays. Tiny measured widths also switch
-      // AQE off for the window (withDeltaWindow): per-round stage
-      // materialization jobs + driver final-plan updates dominate
-      // |V|-sized rounds (measured r17, ConfAb: q65 2.01→1.52 s,
-      // q69 2.28→2.02 s at sf0.1/local[32]). Lower-only, so a cluster
-      // session keeps its width and a billion-node graph keeps AQE.
+      // AQE and planner broadcasts off (Checkpoints.sized): per-round
+      // stage materialization jobs + driver final-plan updates dominate
+      // |V|-sized rounds (measured r17: q65 2.01→1.52 s, q69 2.28→2.02 s
+      // at sf0.1/local[32]). Lower-only, so a cluster session keeps its
+      // width and a billion-node graph keeps AQE. Every round stage
+      // starts from `nodes`, so binding it sizes them all.
       val roundCarrier = if (symmetric) hyb.srcCount else hyb.edgeCount
-      var r: DataFrame = null
-      Checkpoints.withDeltaWindow(spark, roundCarrier,
-        broadcastOffAtFloor = true) {
-        r = Checkpoints.stage(nodes.select(col("node"), col("r0").as("r")))
-        for (_ <- 1 to iters) {
-          val inflow = hyb.expand(r.withColumnRenamed("node", "src"))
-            .select(col("dst"),
-              call_function("div", col("r"), col("outdeg")).as("c"))
-            .groupBy("dst")
-            .agg(sum(col("c")).as("m"))
-          // overflow is a hard error, not silent wrap — two layers: the
-          // session's ANSI mode (Spark 4 default) already throws on an
-          // overflowing inflow SUM, and this guard turns the remaining case
-          // (m representable, m*85 not) into a domain-specific message
-          // before the multiply. The guard is part of the rank expression,
-          // so column pruning can never drop it; m < 0 additionally covers
-          // a non-ANSI session's wrapped sum.
-          val mSafe = coalesce(col("m"), lit(0L))
-          val guarded = when(mSafe < 0 || mSafe > lit(Long.MaxValue / 85),
-            raise_error(concat(lit("PageRank overflow: inflow "),
-              col("m").cast("string"),
-              lit(s" breaks |V|*scale*85 < 2^63 at scale=$scale — lower scale"))))
-            .otherwise(col("base") + call_function("div", mSafe * 85, lit(100L)))
-          val next = Checkpoints.stage(
-            nodes.join(inflow, nodes("node") === inflow("dst"), "left")
-              .select(nodes("node"), guarded.as("r")))
-          Checkpoints.release(r)
-          r = next
-        }
+      val nodes = Checkpoints.sized(nodeBase(if (symmetric) hyb.srcs else hyb.allNodes),
+        roundCarrier, broadcastOffAtFloor = true)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      var r = Checkpoints.stage(nodes.select(col("node"), col("r0").as("r")))
+      for (_ <- 1 to iters) {
+        val inflow = hyb.expand(r.withColumnRenamed("node", "src"))
+          .select(col("dst"),
+            call_function("div", col("r"), col("outdeg")).as("c"))
+          .groupBy("dst")
+          .agg(sum(col("c")).as("m"))
+        // overflow is a hard error, not silent wrap — two layers: the
+        // session's ANSI mode (Spark 4 default) already throws on an
+        // overflowing inflow SUM, and this guard turns the remaining case
+        // (m representable, m*85 not) into a domain-specific message
+        // before the multiply. The guard is part of the rank expression,
+        // so column pruning can never drop it; m < 0 additionally covers
+        // a non-ANSI session's wrapped sum.
+        val mSafe = coalesce(col("m"), lit(0L))
+        val guarded = when(mSafe < 0 || mSafe > lit(Long.MaxValue / 85),
+          raise_error(concat(lit("PageRank overflow: inflow "),
+            col("m").cast("string"),
+            lit(s" breaks |V|*scale*85 < 2^63 at scale=$scale — lower scale"))))
+          .otherwise(col("base") + call_function("div", mSafe * 85, lit(100L)))
+        val next = Checkpoints.stage(
+          nodes.join(inflow, nodes("node") === inflow("dst"), "left")
+            .select(nodes("node"), guarded.as("r")))
+        Checkpoints.release(r)
+        r = next
       }
       val rFinal = r
       val deg = hyb.outDegrees

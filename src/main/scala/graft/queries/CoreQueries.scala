@@ -79,49 +79,12 @@ object CoreQueries {
         col("b.p").cast("long").as("dst"))
   }
 
-  /** Query-level measured-width window for the co-purchase graph family
-    * (r17, guide §2.2/§2.4): the whole family's shuffle carriers —
-    * pair-gen self-join input, the pair distinct, the adjacency build's
-    * aggregation — are bounded by a small multiple of the lineitem row
-    * count (≤ ~7 lines/order caps the within-order fan-out), and that
-    * count reads off the parquet FOOTERS in zero Spark jobs
-    * (IndexStore.parquetRowCount — the e411cd0 standing-rows idiom). At
-    * sf0.1 the measured width is the floor (4) and the 32-wide
-    * pair-gen/distinct shuffles stop paying 28 empty tasks per exchange
-    * (ConfAb r17: q71 3.83→2.64 s, q77 3.96→2.59 s, q76 4.74→2.76 s);
-    * on a cluster-scale corpus the footer count yields a width at or
-    * above the session conf and the wrap is a no-op (lower-only). AQE is
-    * NOT flipped here — the fan-out stages keep its skew handling; the
-    * iterative operators flip it per-round off their own measured
-    * carriers. */
-  private def liWindow[A](s: SparkSession, dir: String)(body: => A): A =
-    graft.operators.Checkpoints.withShufflePartitions(s,
-      graft.operators.Checkpoints.partitionsForRows(
-        graft.operators.IndexStore.parquetRowCount(s, s"$dir/lineitem.parquet")))(
-      body)
-
-  /** [[liWindow]] generalized to named tables (r17): width from the SUM
-    * of the tables' parquet-footer row counts (zero Spark jobs), through
-    * [[graft.operators.Checkpoints.withDeltaWindow]] so AQE also turns
-    * off at the tiny floor. Lower-only — cluster volumes keep the
-    * session width and the wrap is a no-op. */
-  private def tblWindow[A](s: SparkSession, dir: String, tables: String*)(
-      body: => A): A =
-    graft.operators.Checkpoints.withDeltaWindow(s,
-      tables.map(tb =>
-        graft.operators.IndexStore.parquetRowCount(s, s"$dir/$tb.parquet")).sum)(
-      body)
-
-  /** [[tblWindow]] + the collect/parallelize(1) materialization idiom for
-    * LAZY bodies (they end in a total orderBy — collected order is
-    * deterministic). */
-  private def tblMat(s: SparkSession, dir: String, tables: String*)(
-      df: => DataFrame): DataFrame =
-    tblWindow(s, dir, tables: _*) {
-      val out = df
-      val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    }
+  /** `table` bound to the width its parquet-footer row count measures
+    * (zero Spark jobs; AQE off at the tiny floor) — for bodies whose
+    * every shuffle is bounded by that table ([[graft.operators.Checkpoints.sized]]). */
+  private def sizedTable(s: SparkSession, dir: String, table: String): DataFrame =
+    graft.operators.Checkpoints.sized(t(s, dir, table),
+      graft.operators.IndexStore.parquetRowCount(s, s"$dir/$table.parquet"))
 
   private def copurchaseAdjacency(s: SparkSession, dir: String): graft.operators.Adjacency.Hybrid =
     cachedGraph(s, dir, "copurchase",
@@ -1236,8 +1199,8 @@ object CoreQueries {
     // iterative frontier joins, profiled per depth. The oracle runs the
     // same closure as a genuine recursive CTE — engine iteration ≡ SQL
     // recursion, hash-exact.
-    "q56_transitive_closure" -> { (s, dir) => tblWindow(s, dir, "part") {
-      val edges = t(s, dir, "part")
+    "q56_transitive_closure" -> { (s, dir) =>
+      val edges = sizedTable(s, dir, "part")
         .filter(col("p_partkey") >= 10)
         .select(col("p_partkey").as("child"),
           call_function("div", col("p_partkey"), lit(10L)).as("parent"))
@@ -1255,7 +1218,7 @@ object CoreQueries {
       val rows = out.collect().toSeq
       graft.operators.Components.releaseCheckpoint(anc)
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    }},
+    },
 
     // Table reconciliation over two derived order snapshots: pre-2002 vs
     // post-2000, with a deterministic perturbation in the "new" version so
@@ -1478,7 +1441,7 @@ object CoreQueries {
     // list src-clustered once and shuffles only the |V|-row rank frame
     // per iteration. Output is the top-20 profile — bounded driver data,
     // collected so the persisted leaves can be freed (the q56 pattern).
-    "q65_copurchase_pagerank" -> { (s, dir) => liWindow(s, dir) {
+    "q65_copurchase_pagerank" -> { (s, dir) =>
       // probes the session co-purchase adjacency index (built once per
       // corpus version — pair-gen self-join + collect_set shuffle live
       // there); the query itself is 5 rank rounds + the top-20. The
@@ -1492,7 +1455,7 @@ object CoreQueries {
       val rows = top.collect().toSeq
       mr.release() // frees this probe's rounds; the index stays cached
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), top.schema)
-    }},
+    },
 
     // Sketch SET ALGEBRA — the q40 rollup's missing operation: mergeable
     // sketches union natively, but year-over-year customer OVERLAP
@@ -1504,12 +1467,12 @@ object CoreQueries {
     // integer cross-multiplications (hll_sketch_estimate returns bigint),
     // so the report is deterministic and the oracle pins the expected-true
     // verdict columns (q40's pattern) beside its own exact counts.
-    "q66_hll_set_ops" -> { (s, dir) => tblWindow(s, dir, "orders") {
+    "q66_hll_set_ops" -> { (s, dir) =>
       // (ck, yr) feeds three consumers (per-year sketches + both sides of
       // the intersection self-join): persist it or pay the orders scan +
       // distinct shuffle 3×; the bounded output is collected so the
       // cached frame can be freed (the q56/q65 pattern)
-      val dist = t(s, dir, "orders")
+      val dist = sizedTable(s, dir, "orders")
         .select(col("o_custkey").as("ck"), year(col("o_orderdate")).as("yr"))
         .distinct()
         .persist()
@@ -1548,7 +1511,7 @@ object CoreQueries {
       val rows = out.collect().toSeq
       dist.unpersist()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    }},
+    },
 
     // Incremental JOIN-view maintenance (the join twin of q58's
     // incremental aggregates): the orders⋈lineitem revenue view is
@@ -1621,7 +1584,7 @@ object CoreQueries {
     // window); same adjacency/staged machinery and exact fixed-point
     // arithmetic as q65, seed-conditional base the only delta — replayed
     // by the oracle's unrolled CTEs with the same CASE.
-    "q69_personalized_pagerank" -> { (s, dir) => liWindow(s, dir) {
+    "q69_personalized_pagerank" -> { (s, dir) =>
       val li97 = t(s, dir, "lineitem")
         .filter(year(col("l_shipdate")) === 1997 &&
           month(col("l_shipdate")) <= 3)
@@ -1645,7 +1608,7 @@ object CoreQueries {
       val rows = top.collect().toSeq
       mr.release()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), top.schema)
-    }},
+    },
 
     // Community detection — synchronous label propagation over the 1997
     // co-purchase graph (the graph family's clustering member; q65 ranks,
@@ -1656,7 +1619,7 @@ object CoreQueries {
     // reporting (the full graph is near-complete and collapses to one
     // label); output is the top-20 community profile — bounded driver
     // data, collected so the staged frames can be freed (q65 pattern).
-    "q70_label_propagation" -> { (s, dir) => liWindow(s, dir) {
+    "q70_label_propagation" -> { (s, dir) =>
       // no pre-distinct (q65's documented choice): duplicate (o,p) rows
       // would multiply the self-join output before the adjacency build's
       // collect_set collapses them, but the testdata measures a dup ratio
@@ -1679,7 +1642,7 @@ object CoreQueries {
       val rows = top.collect().toSeq
       ml.release()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), top.schema)
-    }},
+    },
 
     // Triangle census — degree-ordered orientation over an ORDER-sampled
     // co-purchase graph (l_orderkey % 4: cluster sampling keeps whole
@@ -1691,7 +1654,7 @@ object CoreQueries {
     // which counts the SAME triangle set by a different algorithm — an
     // algebraic identity, not a replay. Output: per-node participation
     // histogram (how many nodes sit in n triangles).
-    "q71_triangle_count" -> { (s, dir) => liWindow(s, dir) {
+    "q71_triangle_count" -> { (s, dir) =>
       val ip = t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 4 === 0)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -1706,7 +1669,7 @@ object CoreQueries {
       val rows = hist.collect().toSeq
       mt.release()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), hist.schema)
-    }},
+    },
 
     // k-core extraction — iterative peeling on the customer–part bipartite
     // purchase graph (degrees there are scale-INVARIANT — a TPC-H-shaped
@@ -1721,7 +1684,7 @@ object CoreQueries {
     // output is the surviving-degree histogram per side. Convergence is
     // NOT assumed — the result is defined as the round-5 survivor set,
     // which is what the oracle replays (KCore scaladoc).
-    "q72_kcore" -> { (s, dir) => liWindow(s, dir) {
+    "q72_kcore" -> { (s, dir) =>
       val bp = t(s, dir, "orders")
         .filter(year(col("o_orderdate")).isin(1996, 1997))
         .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
@@ -1735,7 +1698,7 @@ object CoreQueries {
       val rows = hist.collect().toSeq
       mc.release()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), hist.schema)
-    }},
+    },
 
     // Rolling-median / MAD anomaly detection on inter-event gaps — the
     // robust-statistics member of the window family (q25 rolls a mean;
@@ -1786,7 +1749,7 @@ object CoreQueries {
     // with the known-set anti-join broadcast below the measured-count
     // limit. Output: nodes-per-ring histogram; parts not reached within
     // 6 hops are absent by contract (BfsHops scaladoc).
-    "q74_bfs_hops" -> { (s, dir) => liWindow(s, dir) {
+    "q74_bfs_hops" -> { (s, dir) =>
       val li97 = t(s, dir, "lineitem").filter(year(col("l_shipdate")) === 1997)
       val ip = li97.select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       val e = ip.as("a").join(ip.as("b"),
@@ -1805,7 +1768,7 @@ object CoreQueries {
       val rows = hist.collect().toSeq
       md.release()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), hist.schema)
-    }},
+    },
 
     // BOM-style SUBTREE ROLLUP — the aggregation half of the recursive-
     // hierarchy story (q56 profiles the closure; this answers the question
@@ -1848,7 +1811,7 @@ object CoreQueries {
     // ≤ i edges, which is precisely what the oracle's unrolled full
     // relaxation computes; the operator's improved-only frontier is the
     // exact SPFA optimization of the same quantity.
-    "q76_cheapest_path" -> { (s, dir) => liWindow(s, dir) {
+    "q76_cheapest_path" -> { (s, dir) =>
       val li97 = t(s, dir, "lineitem").filter(year(col("l_shipdate")) === 1997)
       val ip = li97.select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
@@ -1868,7 +1831,7 @@ object CoreQueries {
       val rows = top.collect().toSeq
       mc.release()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), top.schema)
-    }},
+    },
 
     // MODULARITY AUDIT for q70's communities — the quality-measurement
     // half of community detection, the way v09 audits ANN recall and v19
@@ -1882,7 +1845,7 @@ object CoreQueries {
     // labellings). Integer bound: E < ~3e9 directed edges keeps d_c² in
     // Long — beyond that the audit needs decimal; documented, same class
     // as PageRank's |V|·scale·85 bound.
-    "q77_modularity_audit" -> { (s, dir) => liWindow(s, dir) {
+    "q77_modularity_audit" -> { (s, dir) =>
       val ip = t(s, dir, "lineitem")
         .filter(year(col("l_shipdate")) === 1997)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -1898,36 +1861,30 @@ object CoreQueries {
       val e = eRaw.distinct().persist()
       val ml = graft.operators.LabelPropagation.labels(e, "src", "dst",
         iters = 4, dedupEdges = false, symmetric = true)
-      // the audit is ~6 jobs over |E|-and-smaller frames — run them at a
-      // task count fit to the measured edge volume (the KCore trick; the
-      // count below is the same E the modularity formula needs anyway)
       val em = e.count()
-      val (rows, outSchema) = graft.operators.Checkpoints.withShufflePartitions(s,
-        graft.operators.Checkpoints.partitionsForRows(em)) {
-        val deg = e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("dg"))
-        val comm = ml.labels.join(deg, Seq("node"))
-          .groupBy(col("lab").as("community"))
-          .agg(count(lit(1)).as("sz"), sum(col("dg")).as("d_c"))
-        val la = ml.labels.select(col("node").as("src"), col("lab").as("ls"))
-        val lb = ml.labels.select(col("node").as("dst"), col("lab").as("ld"))
-        val intra = e.join(la, Seq("src")).join(lb, Seq("dst"))
-          .filter(col("ls") === col("ld"))
-          .groupBy(col("ls").as("community"))
-          .agg(count(lit(1)).as("intra_e"))
-        val outF = comm.join(intra, Seq("community"), "left")
-          .select(col("community"), col("sz"), col("d_c"),
-            coalesce(col("intra_e"), lit(0L)).as("intra_e"),
-            (coalesce(col("intra_e"), lit(0L)) * em -
-              col("d_c") * col("d_c")).as("contrib_num"))
-          .orderBy(col("sz").desc, col("community"))
-          .limit(20)
-        (outF.collect().toSeq, outF.schema)
-      }
+      val deg = e.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("dg"))
+      val comm = ml.labels.join(deg, Seq("node"))
+        .groupBy(col("lab").as("community"))
+        .agg(count(lit(1)).as("sz"), sum(col("dg")).as("d_c"))
+      val la = ml.labels.select(col("node").as("src"), col("lab").as("ls"))
+      val lb = ml.labels.select(col("node").as("dst"), col("lab").as("ld"))
+      val intra = e.join(la, Seq("src")).join(lb, Seq("dst"))
+        .filter(col("ls") === col("ld"))
+        .groupBy(col("ls").as("community"))
+        .agg(count(lit(1)).as("intra_e"))
+      val outF = comm.join(intra, Seq("community"), "left")
+        .select(col("community"), col("sz"), col("d_c"),
+          coalesce(col("intra_e"), lit(0L)).as("intra_e"),
+          (coalesce(col("intra_e"), lit(0L)) * em -
+            col("d_c") * col("d_c")).as("contrib_num"))
+        .orderBy(col("sz").desc, col("community"))
+        .limit(20)
+      val rows = outF.collect().toSeq
       e.unpersist()
       ml.release()
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), outSchema)
-    }},
+      s.createDataFrame(s.sparkContext.parallelize(rows, 1), outF.schema)
+    },
 
     // GRAPH-FAMILY COMPOSITION — the managed-handle contract under
     // chaining (t28 composes the text family; this composes the graph
@@ -1947,7 +1904,7 @@ object CoreQueries {
     // rounds — the per-operator sweeps can't reach frames registered
     // before their entry. Same-thread nesting of the inner sweeps is the
     // ledger's supported shape (CheckpointsGuardSpec).
-    "q78_core_communities" -> { (s, dir) => liWindow(s, dir) {
+    "q78_core_communities" -> { (s, dir) =>
      graft.operators.Checkpoints.sweepingOnFailure(s.sparkContext) {
       // one pair-generation (the shared co-purchase generator, scoped to
       // 1997 shipments), four consumers (q77's persist discipline)
@@ -1968,11 +1925,9 @@ object CoreQueries {
       // two legs are INDEPENDENT consumers of that shared read-only
       // state, so they run CONCURRENTLY (the pqBuild bounded-pool
       // discipline): q78's wall-clock pays max(PR, LPA) round chains,
-      // not their sum. Shuffle sizing under concurrency: each leg opens
-      // its own measured withShufflePartitions window and the loser of
-      // the race runs under the winner's session value — both legs
-      // measure the SAME edge count, so the values agree (and the
-      // override is performance-only by the guard's contract). Both
+      // not their sum. Shuffle sizing under concurrency: each leg binds
+      // its rounds to its own measured-width session, so neither leg
+      // sees the other's conf. Both
       // futures are settled before either result is unwrapped, so a
       // failed leg never leaves the other staging frames after the
       // enclosing failure sweep fires.
@@ -1999,31 +1954,28 @@ object CoreQueries {
           (rT.get, lT.get)
         } finally { pool.shutdownNow(); () }
       }
-      val (rows, outSchema) = graft.operators.Checkpoints.withShufflePartitions(s,
-        graft.operators.Checkpoints.partitionsForRows(cem)) {
-        val deg = ce.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("dg"))
-        val nl = ml.labels.join(deg, Seq("node"))
-          .join(mr.ranks.select(col("node"), col("rank_fp")), Seq("node"))
-        val comm = nl.groupBy(col("lab").as("community"))
-          .agg(count(lit(1)).as("sz"), sum(col("dg")).as("d_c"),
-            sum(col("rank_fp")).as("rank_mass"))
-        val la = ml.labels.select(col("node").as("src"), col("lab").as("ls"))
-        val lb = ml.labels.select(col("node").as("dst"), col("lab").as("ld"))
-        val intra = ce.join(la, Seq("src")).join(lb, Seq("dst"))
-          .filter(col("ls") === col("ld"))
-          .groupBy(col("ls").as("community"))
-          .agg(count(lit(1)).as("intra_e"))
-        val outF = comm.join(intra, Seq("community"), "left")
-          .select(col("community"), col("sz"), col("d_c"),
-            coalesce(col("intra_e"), lit(0L)).as("intra_e"),
-            (coalesce(col("intra_e"), lit(0L)) * cem -
-              col("d_c") * col("d_c")).as("contrib_num"),
-            col("rank_mass"))
-          .orderBy(col("sz").desc, col("community"))
-          .limit(20)
-        (outF.collect().toSeq, outF.schema)
-      }
+      val deg = ce.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("dg"))
+      val nl = ml.labels.join(deg, Seq("node"))
+        .join(mr.ranks.select(col("node"), col("rank_fp")), Seq("node"))
+      val comm = nl.groupBy(col("lab").as("community"))
+        .agg(count(lit(1)).as("sz"), sum(col("dg")).as("d_c"),
+          sum(col("rank_fp")).as("rank_mass"))
+      val la = ml.labels.select(col("node").as("src"), col("lab").as("ls"))
+      val lb = ml.labels.select(col("node").as("dst"), col("lab").as("ld"))
+      val intra = ce.join(la, Seq("src")).join(lb, Seq("dst"))
+        .filter(col("ls") === col("ld"))
+        .groupBy(col("ls").as("community"))
+        .agg(count(lit(1)).as("intra_e"))
+      val outF = comm.join(intra, Seq("community"), "left")
+        .select(col("community"), col("sz"), col("d_c"),
+          coalesce(col("intra_e"), lit(0L)).as("intra_e"),
+          (coalesce(col("intra_e"), lit(0L)) * cem -
+            col("d_c") * col("d_c")).as("contrib_num"),
+          col("rank_mass"))
+        .orderBy(col("sz").desc, col("community"))
+        .limit(20)
+      val rows = outF.collect().toSeq
       // release ONLY after the terminal collect (the family convention:
       // ce's lazy plan references the core's staged checkpoint, so a
       // cache-evicted recompute must still find it)
@@ -2033,9 +1985,9 @@ object CoreQueries {
       mc.release()
       ce.unpersist()
       e.unpersist()
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), outSchema)
+      s.createDataFrame(s.sparkContext.parallelize(rows, 1), outF.schema)
      }
-    }},
+    },
 
     // q79: INCREMENTAL graph maintenance — the ingest-epoch contract for
     // the graph family (the q58/q67/d13 identity applied to the adjacency
@@ -2050,7 +2002,7 @@ object CoreQueries {
     // (outdeg, dst multiset sum) contributes, so hash equality against
     // the oracle's FULL REBUILD (DuckDB never sees the split) certifies
     // fold == rebuild.
-    "q79_incremental_adjacency" -> { (s, dir) => liWindow(s, dir) {
+    "q79_incremental_adjacency" -> { (s, dir) =>
       val standing = standingCopurchaseAdjacency(s, dir)
       val folded = graft.operators.Checkpoints.sweepingOnFailure(s.sparkContext)(
         graft.operators.Adjacency.foldEdges(standing,
@@ -2074,7 +2026,7 @@ object CoreQueries {
       val (rows, histSchema) =
         try (hist.collect().toSeq, hist.schema) finally folded.release()
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), histSchema)
-    }},
+    },
 
     // Degree assortativity of the co-purchase graph — Newman's degree
     // correlation, computed as the Pearson coefficient over edge-endpoint
@@ -2088,7 +2040,7 @@ object CoreQueries {
     // the |V|-sized degree frame when it fits; one global 1-row aggregate.
     // Long range: m·Σx² here is ~10¹⁵; a 10¹²-edge deployment moves these
     // four sums to DECIMAL(38) — the formula is unchanged.
-    "q80_degree_assortativity" -> { (s, dir) => liWindow(s, dir) {
+    "q80_degree_assortativity" -> { (s, dir) =>
       val hyb = copurchaseAdjacency(s, dir)
       val deg = hyb.outDegrees.select(col("src").as("node"), col("outdeg"))
       val e = hyb.edges.select("src", "dst")
@@ -2110,7 +2062,7 @@ object CoreQueries {
           .as("assortativity"))
       val rows = out.collect().toSeq // 1 row; the index stays cached
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    }},
+    },
 
     // Tiered (L0/L1) epoch-roll identity — the q79 pattern for
     // GraphTieredStream: the 1997 co-purchase edges split into 5
@@ -2123,7 +2075,7 @@ object CoreQueries {
     // identity at the tiered-durability layer. Each call pays a fresh
     // roll into its own temp root (the t38/t39 convention: the
     // maintenance chain IS the measured artifact).
-    "q81_tiered_roll" -> { (s, dir) => liWindow(s, dir) {
+    "q81_tiered_roll" -> { (s, dir) =>
       val li = t(s, dir, "lineitem").filter(year(col("l_shipdate")) === 1997)
       val root = java.nio.file.Files.createTempDirectory("q81_tiered").toString
       // the try spans the FOLDS too: a mid-roll throw (starved-window
@@ -2137,10 +2089,9 @@ object CoreQueries {
           val pairs = copurchasePairs(
             li.filter(pmod(col("l_orderkey"), lit(5)) === i)).persist()
           try {
-            val n = pairs.count()
-            graft.operators.Checkpoints.withDeltaWindow(s, n)(
-              graft.streaming.GraphTieredStream.foldBatch(
-                pairs, root, batchId = i.toLong, majorEvery = 3))
+            graft.streaming.GraphTieredStream.foldBatch(
+              graft.operators.Checkpoints.sized(pairs, pairs.count()),
+              root, batchId = i.toLong, majorEvery = 3)
           } finally { pairs.unpersist(); () }
         }
         val view = graft.streaming.GraphTieredStream.loadCurrent(s, root)
@@ -2148,7 +2099,7 @@ object CoreQueries {
         // histogram is collected (driver rows) before the root dies
         tieredEdgeHistogram(s, view)
       } finally graft.io.TempRoots.delete(root)
-    }},
+    },
 
     // q82: the CROSS-BATCH composition q81 leaves to spec coverage —
     // batches split by l_linenumber, so one order's lines SPAN up to 5
@@ -2158,12 +2109,9 @@ object CoreQueries {
     // mid-roll major) must reconstruct them. Hash equality against the
     // same full-corpus pair replay as q81 certifies the incremental-join
     // identity AND the tiered line-roll composition end-to-end.
-    "q82_line_tiered_roll" -> { (s, dir) => liWindow(s, dir) {
-      // the whole lifecycle's shuffle carriers (per-batch line distinct,
-      // the batch×standing delta join, fold/major re-aggregations, the
-      // merged-read histogram) are lineitem-bounded — run the roll at the
-      // footer-measured width (r17; the per-batch fold additionally opens
-      // its own |Δ|-measured window inside CopurchaseStream)
+    "q82_line_tiered_roll" -> { (s, dir) =>
+      // the per-batch fold sizes its shuffles by its own |Δ| inside
+      // CopurchaseStream
       val li = t(s, dir, "lineitem").filter(year(col("l_shipdate")) === 1997)
         .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
       val linesDir = java.nio.file.Files.createTempDirectory("q82_lines").toString
@@ -2180,7 +2128,7 @@ object CoreQueries {
         tieredEdgeHistogram(s, view)
       } finally { graft.io.TempRoots.delete(root)
         graft.io.TempRoots.delete(linesDir) }
-    }},
+    },
 
     // q84: the graph family's EDGE-RETRACTION lifecycle as ONE oracle row
     // (the m07 shape at the graph layer — closing the last family
@@ -2195,7 +2143,7 @@ object CoreQueries {
     // the same tombstone rule, so hash equality certifies
     // roll + exclusion-read + physical compaction ≡ a from-scratch
     // rebuild over the effective (post-retraction) edge set.
-    "q84_graph_retraction" -> { (s, dir) => liWindow(s, dir) {
+    "q84_graph_retraction" -> { (s, dir) =>
       val li = t(s, dir, "lineitem").filter(year(col("l_shipdate")) === 1997)
       val work = java.nio.file.Files.createTempDirectory("q84_tiered").toString
       try {
@@ -2205,10 +2153,9 @@ object CoreQueries {
           val pairs = copurchasePairs(
             li.filter(pmod(col("l_orderkey"), lit(5)) === i)).persist()
           try {
-            val n = pairs.count()
-            graft.operators.Checkpoints.withDeltaWindow(s, n)(
-              graft.streaming.GraphTieredStream.foldBatch(
-                pairs, root, batchId = i.toLong, majorEvery = 3))
+            graft.streaming.GraphTieredStream.foldBatch(
+              graft.operators.Checkpoints.sized(pairs, pairs.count()),
+              root, batchId = i.toLong, majorEvery = 3)
           } finally { pairs.unpersist(); () }
         }
         val view = graft.streaming.GraphTieredStream.loadCurrent(s, root)
@@ -2235,7 +2182,7 @@ object CoreQueries {
           "query-time exclusion read diverged from physical compaction")
         s.createDataFrame(s.sparkContext.parallelize(rows, 1), histSchema)
       } finally graft.io.TempRoots.delete(work)
-    }}
+    }
   )
 
   /** The q81/q82/q84 result shape: out-degree histogram (with id

@@ -179,7 +179,7 @@ object HtnQueries {
       // re-executes the whole cohort chain once per flag join (measured:
       // 10 s → 45 s per rep). localCheckpoint blocks are unique RDDs —
       // THOSE swap safely, one generation per (session, dir). (A
-      // measured-width withShufflePartitions window was tried here in
+      // measured shuffle width was tried here in
       // r16 and REVERTED: the BP-window stages are compute-bound and a
       // 4-partition width serialized them — 9.8 s → 13 s.)
       val out = try res.analytical.localCheckpoint() finally res.release()

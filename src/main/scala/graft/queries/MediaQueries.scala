@@ -351,27 +351,28 @@ object MediaQueries {
       try {
         val total = NearDupN + NearDupDeltaN
         // the whole lifecycle is |corpus|-bounded (180 synthetic images):
-        // run it under the measured-width window (r17, the
-        // liWindow/docsWindow discipline — total IS the corpus size)
-        graft.operators.Checkpoints.withDeltaWindow(s, total) {
+        // it runs in the measured-width session the corpus ids bind to
+        // (r17; total IS the corpus size), so the folds, the compaction
+        // and the view read all plan under it
+        val ids = graft.operators.Checkpoints.sized(s.range(total).toDF(), total)
+        val ms = ids.sparkSession
         (0 until 6).foreach { b =>
           MediaTieredStream.foldBatch(
-            nearDupRange(s, b * total / 6L, (b + 1) * total / 6L),
+            nearDupRange(ms, b * total / 6L, (b + 1) * total / 6L),
             root, b.toLong, majorEvery = 3)
         }
-        val dead = s.range(total)
+        val dead = ids
           .filter(col("id") % M07DeadMod === M07DeadRem)
           .select(col("id").as("media_id"))
-        MediaTieredStream.compactMajor(s, root, dead, "media_id",
+        MediaTieredStream.compactMajor(ms, root, dead, "media_id",
             threshold = 0.05)
           .getOrElse(sys.error("m07 compaction must fire at ~11% dead"))
-        val view = MediaTieredStream.loadCurrent(s, root)
+        val view = MediaTieredStream.loadCurrent(ms, root)
           .getOrElse(sys.error("no tiered view after the roll"))
         val out = view.nearDupPairs(NearDupMaxHamming)
           .orderBy(col("id_a"), col("id_b"))
         val (rows, schema) = (out.collect().toSeq, out.schema)
         s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
-        }
       } finally graft.io.TempRoots.delete(root)
     },
 

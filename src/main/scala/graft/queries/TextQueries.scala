@@ -22,29 +22,16 @@ object TextQueries {
 
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
 
-  /** Query-level measured-width window for docs-driven bodies — the
-    * CoreQueries.liWindow discipline (r17): width from the documents
-    * table's parquet-footer row count (ZERO Spark jobs), ~5k docs per
-    * partition (tokenization amplifies a doc ~100×, the LexTieredStream
-    * sizing), AQE off only when the measured width lands at the tiny
-    * floor. Lower-only — a cluster-scale corpus meets or exceeds the
-    * session width and the wrap is a no-op. The body must EXECUTE inside
-    * (collect / localCheckpoint), not just build a plan. */
-  private def docsWindow[A](s: SparkSession, dir: String)(body: => A): A =
-    graft.operators.Checkpoints.withDeltaWindow(s,
+  /** `df` bound to the measured width of a docs-driven body: the
+    * documents table's parquet-footer row count (ZERO Spark jobs) at ~5k
+    * docs per partition (tokenization amplifies a doc ~100×, the
+    * LexTieredStream sizing), AQE off only when the width lands at the
+    * tiny floor ([[Checkpoints.sized]]). Lower-only — a cluster-scale
+    * corpus keeps the session width. */
+  private def docsSized(s: SparkSession, dir: String, df: DataFrame): DataFrame =
+    Checkpoints.sized(df,
       graft.operators.IndexStore.parquetRowCount(s, s"$dir/documents.parquet"),
-      rowsPerPartition = 5000L)(body)
-
-  /** [[docsWindow]] + the collect/parallelize(1) materialization idiom —
-    * for LAZY query bodies, whose execution otherwise happens at the
-    * caller's action OUTSIDE the window. The bodies all end in a total
-    * orderBy, so collected order is deterministic. */
-  private def docsMat(s: SparkSession, dir: String)(df: => DataFrame): DataFrame =
-    docsWindow(s, dir) {
-      val out = df
-      val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    }
+      rowsPerPartition = 5000L)
 
   // One resolved cluster-label frame per (session, table dir) — the
   // cluster-index analog of VectorQueries' IVF/PQ caches: connected
@@ -146,9 +133,11 @@ object TextQueries {
   // realistic ingest slice; pmod so any id domain partitions) and d13's
   // per-call cost is the 1% fold alone. CC over the standing corpus's
   // own near-dup pairs, built once per corpus version (durable under
-  // spark.graft.indexDir like the full labels). Cached in ccCache under a
-  // "#standing99"-suffixed key — releaseClusterLabels covers both
-  // generations.
+  // spark.graft.indexDir like the full labels). Built at the session's
+  // own conf: its component rounds join frames only AQE can size, and
+  // with AQE off the prepare ran ~50% slower (sweep_stream, 4 cores).
+  // Cached in ccCache under a "#standing99"-suffixed key —
+  // releaseClusterLabels covers both generations.
   private def standingClusterLabels(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val key = s"$dir#standing99"
     graft.operators.IndexStats.lookup("standing_cluster",
@@ -178,14 +167,15 @@ object TextQueries {
 
   // The standing epoch's SIGNATURE index (the 99% slice standing labels
   // cover) — d13's delta probes it for delta-vs-standing pairs; same
-  // lifecycle as the d06 (even-half) index, stored under its own kind.
+  // lifecycle as the d06 (even-half) index, stored under its own kind,
+  // built at the docs-measured width like the probe.
   private def standing99SignatureIndex(s: SparkSession, dir: String): Dedup.SignatureIndex = {
     val key = s"$dir#standing99"
     graft.operators.IndexStats.lookup("signature",
       hit = sigCache.containsKey((s, key)))
     sigCache.computeIfAbsent((s, key), { _ =>
       def build = Dedup.signatureBuild(
-        docs(s, dir).filter(pmod(col("doc_id"), lit(100)) =!= 1),
+        docsSized(s, dir, docs(s, dir)).filter(pmod(col("doc_id"), lit(100)) =!= 1),
         "doc_id", "text", k = 128, bands = 32, shingleWidth = 3)
       graft.operators.IndexStore.signatureIndexFromConf(
         s, s"$dir/documents.parquet",
@@ -498,11 +488,11 @@ object TextQueries {
     // hash equality certifies fold ≡ rebuild — the q58/q63/q67
     // incremental-identity pattern applied to graph clustering.
     "d13_incremental_clusters" -> { (s, dir) =>
-      val d = docs(s, dir)
+      // probe + fold + cluster read all run at the measured docs width
+      // (r17): every shuffle here is |Δ|-or-labels-sized, and each chain
+      // starts from the docs or the standing labels, so both are bound
+      val d = docsSized(s, dir, docs(s, dir))
       val labels0 = standingClusterLabels(s, dir)
-      // probe + fold + cluster read all run under the measured docs
-      // window (r17): every shuffle here is |Δ|-or-labels-sized
-      docsWindow(s, dir) {
       // the delta is the 1% ingest slice (pmod 100 === 1, q79's ratio):
       // the probe pays |Δ| signatures + the |Δ| fold — the standing 99%
       // serves from its label/signature indexes
@@ -510,7 +500,7 @@ object TextQueries {
         d.filter(pmod(col("doc_id"), lit(100)) === 1),
         standing99SignatureIndex(s, dir), "doc_id", "text", threshold = 0.8)
       val folded = try {
-        val lazyFold = Components.foldEdges(labels0,
+        val lazyFold = Components.foldEdges(docsSized(s, dir, labels0),
           mp.pairs.select(col("id_a"), col("id_b")))
         // one materialization, then free the checkpoints the FOLD created
         // (the delta-CC remap) — but NOT the standing label index's, which
@@ -520,14 +510,9 @@ object TextQueries {
         cp
       } finally mp.release()
       swapRegister(s, s"d13|$dir", () => Components.releaseCheckpoint(folded))
-      // materialize inside the window (the v27/t38 idiom) so the cluster
-      // read doesn't re-run at session width on the caller's action
-      val out = Components.dupClustersFromLabels(d, "doc_id", folded)
+      Components.dupClustersFromLabels(d, "doc_id", folded)
         .select(col("id").as("doc_id"), col("cluster"), col("is_canonical"))
         .orderBy("doc_id")
-      val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-      }
     },
 
     // TIERED signature-index lifecycle — the dedup family's LSM path as
@@ -561,15 +546,15 @@ object TextQueries {
               k = 128, shingleWidth = 3)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            // fills the sig pin AND measures the probe window's width:
-            // the probe's bucket joins and verify groupBys are |Δ|-plus-
-            // touched-buckets-sized, so they run under the measured
-            // delta window (the fold sizes its own branches internally)
-            val nb = sigs.count()
-            graft.operators.Checkpoints.withDeltaWindow(s, nb) {
+            // fills the sig pin AND measures the probe's width: the
+            // probe's bucket joins and verify groupBys are |Δ|-plus-
+            // touched-buckets-sized and start from the batch sigs, so
+            // they run at the measured delta width (the fold sizes its
+            // own branches internally)
+            val probeSigs = Checkpoints.sized(sigs, sigs.count())
             val mp = pre match {
               case Some(view) =>
-                view.newPairsForSigs(sigs, threshold = 0.8)
+                view.newPairsForSigs(probeSigs, threshold = 0.8)
               case None =>
                 // bootstrap self-dedup off the SAME shared signature
                 // frame: an empty standing index reduces the incremental
@@ -577,7 +562,7 @@ object TextQueries {
                 // same est prefilter t−0.2, same exact verification as
                 // the flat d03 kernel it replaces — which re-tokenized
                 // the batch a second time)
-                Dedup.incrementalPairsFromSigs(sigs,
+                Dedup.incrementalPairsFromSigs(probeSigs,
                   Dedup.SignatureIndex(128, 32, 3, sigs.limit(0),
                     Dedup.bucketsFromSigs(sigs.limit(0), 128, 32), () => ()),
                   threshold = 0.8, estMargin = 0.2, maxBucket = 1000)
@@ -587,11 +572,9 @@ object TextQueries {
                 col("id_b").as("doc_b"), round(col("jaccard"), 4).as("jaccard"))
               acc ++= out.collect(); schema = out.schema
             } finally { mp.release(); pre.foreach(_.release()) }
-            }
-            // the fold sits OUTSIDE the probe window: its major opens its
-            // own standing+delta-sized window, and a nested window can
-            // only lower — wrapping it here would cap a grown corpus's
-            // major at this batch's width
+            // the fold takes the unsized sigs: its major sizes itself by
+            // standing+delta, so a grown corpus's major is never capped at
+            // this batch's width
             SignatureTieredStream.foldSigs(sigs, root, i.toLong,
               majorEvery = 3)
           } finally { sigs.unpersist(); () }
@@ -1516,23 +1499,24 @@ object TextQueries {
     // 1-row corpus stats broadcast back; the only shuffles are the tf/dl
     // aggregates (map-side partials) and the hits ⋈ dl doc-length join,
     // all keyed on doc_id/token. Top-k per query rides the bounded-heap
-    // TopK (no per-query global sort).
-    "t37_bm25" -> { (s, dir) => docsMat(s, dir) {
+    // TopK (no per-query global sort). The returned frame is bound to
+    // the docs-measured width, so it runs there whenever the caller acts.
+    "t37_bm25" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       import s.implicits._
       val qterms = Bm25Queries.toDF("qid", "qtext")
         .select(col("qid"),
           explode(array_distinct(split(col("qtext"), " "))).as("tok"))
       val agg = bm25Scores(s, dir, qterms, excludeSelf = false)
-      graft.plans.TopK.perKey(agg, Seq("qid"),
+      docsSized(s, dir, graft.plans.TopK.perKey(agg, Seq("qid"),
           Seq("score_scaled" -> false, "doc_id" -> true), 5)
         .withColumn("rank", row_number().over(
           Window.partitionBy("qid")
             .orderBy(col("score_scaled").desc, col("doc_id"))))
         .select(col("qid"), col("rank"), col("doc_id"),
           col("score_scaled"), col("n_terms"))
-        .orderBy("qid", "rank")
-    }},
+        .orderBy("qid", "rank"))
+    },
 
     // Incremental lexical-index maintenance, certified: the standing
     // postings index (even doc_ids — d06's daily-ingest framing, pmod so
@@ -1546,8 +1530,9 @@ object TextQueries {
     "t38_incremental_bm25" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       import s.implicits._
-      val d = docs(s, dir)
-      docsWindow(s, dir) {
+      // build, fold and probe all start from the docs: bound, they run at
+      // the docs-measured width
+      val d = docsSized(s, dir, docs(s, dir))
       // ONE failure sweep around build + fold (the q78 lesson): a throw
       // mid-fold cannot strand the standing or delta frames
       val folded = graft.operators.Checkpoints.sweepingOnFailure(s.sparkContext) {
@@ -1575,7 +1560,6 @@ object TextQueries {
         val rows = out.collect().toSeq
         s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
       } finally folded.release()
-      }
     },
 
     // Retrieval-quality audit of the FOLD-SERVED index — v09's pattern at
@@ -1590,7 +1574,7 @@ object TextQueries {
     "t39_bm25_fold_recall" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       import s.implicits._
-      val d = docs(s, dir)
+      val d = docsSized(s, dir, docs(s, dir))
       val qterms = Bm25Queries.toDF("qid", "qtext")
         .select(col("qid"),
           explode(array_distinct(split(col("qtext"), " "))).as("tok"))
@@ -1601,7 +1585,6 @@ object TextQueries {
             Window.partitionBy("qid")
               .orderBy(col("score_scaled").desc, col("doc_id"))))
           .select(col("qid"), col("rank"), col("doc_id"), col("score_scaled"))
-      docsWindow(s, dir) {
       val folded = graft.operators.Checkpoints.sweepingOnFailure(s.sparkContext) {
         val standing = graft.operators.Postings.build(
           d.filter(pmod(col("doc_id"), lit(2)) === 0))
@@ -1612,7 +1595,8 @@ object TextQueries {
       try {
         val served = top5(bm25ScoresOverIndex(folded, qterms, excludeSelf = false))
         val scratch = top5(bm25Scores(s, dir, qterms, excludeSelf = false))
-        val out = scratch.as("b").join(served.as("a"),
+        // the audit join starts from the scratch leg, so it is bound too
+        val out = docsSized(s, dir, scratch).as("b").join(served.as("a"),
             col("a.qid") === col("b.qid") && col("a.rank") === col("b.rank") &&
               col("a.doc_id") === col("b.doc_id") &&
               col("a.score_scaled") === col("b.score_scaled"), "left")
@@ -1625,7 +1609,6 @@ object TextQueries {
         val rows = out.collect().toSeq
         s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
       } finally folded.release()
-      }
     },
 
     // Tiered (L0/L1) epoch-roll identity for the LEXICAL family — q81/v27's
@@ -1664,15 +1647,15 @@ object TextQueries {
           .getOrElse(sys.error("tiered lex roll committed nothing"))
         try {
           // the probe's shuffles are query-hits-sized (bounded by the
-          // corpus): run them under a window sized by the view's OWN
-          // measured doc count (free off the L1 meta stats) — the
-          // LexTieredStream fold-window discipline on the read path
-          graft.operators.Checkpoints.withDeltaWindow(s, view.index.nDocs,
-            rowsPerPartition = 5000L) {
+          // corpus): they start from the view's postings, bound to the
+          // width of the view's OWN measured doc count (free off the L1
+          // meta stats) — the LexTieredStream fold sizing on the read path
+          val idx = view.index
           val qterms = Bm25Queries.toDF("qid", "qtext")
             .select(col("qid"),
               explode(array_distinct(split(col("qtext"), " "))).as("tok"))
-          val agg = bm25ScoresOverIndex(view.index, qterms, excludeSelf = false)
+          val agg = bm25ScoresOverIndex(idx.copy(tf = Checkpoints.sized(idx.tf,
+            idx.nDocs, rowsPerPartition = 5000L)), qterms, excludeSelf = false)
           val out = graft.plans.TopK.perKey(agg, Seq("qid"),
               Seq("score_scaled" -> false, "doc_id" -> true), 5)
             .withColumn("rank", row_number().over(
@@ -1683,7 +1666,6 @@ object TextQueries {
             .orderBy("qid", "rank")
           val rows = out.collect().toSeq
           s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-          }
         } finally view.release()
       } finally graft.io.TempRoots.delete(root)
     }
@@ -1733,8 +1715,9 @@ object TextQueries {
   }
 
   // One postings index per (session, dir) over the FULL corpus — the
-  // t37/v23 retrieval probes ride it; build once per corpus version,
-  // durable under spark.graft.indexDir (signature/IVF lifecycle).
+  // t37/v23 retrieval probes ride it; build once per corpus version, at
+  // the docs-measured width, durable under spark.graft.indexDir
+  // (signature/IVF lifecycle).
   private val postingsCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       graft.operators.Postings.Index]()
@@ -1745,7 +1728,7 @@ object TextQueries {
     postingsCache.computeIfAbsent((s, dir), { _ =>
       graft.operators.IndexStore.postingsIndexFromConf(
         s, s"$dir/documents.parquet")(
-        graft.operators.Postings.build(docs(s, dir)))
+        graft.operators.Postings.build(docsSized(s, dir, docs(s, dir))))
     })
   }
 

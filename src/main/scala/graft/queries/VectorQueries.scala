@@ -11,27 +11,13 @@ object VectorQueries {
 
   private def emb(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
-  /** Query-level measured-width window for embedding-driven bodies — the
-    * CoreQueries.liWindow / TextQueries.docsWindow discipline (r17):
-    * width from the embeddings table's parquet-footer row count (ZERO
-    * Spark jobs), AQE off only at the tiny floor, lower-only so a
-    * cluster-scale corpus keeps the session width. The body must EXECUTE
-    * inside (collect / localCheckpoint), not just build a plan. */
-  private def embWindow[A](s: SparkSession, dir: String)(body: => A): A =
-    graft.operators.Checkpoints.withDeltaWindow(s,
-      graft.operators.IndexStore.parquetRowCount(s, s"$dir/embeddings.parquet"))(
-      body)
-
-  /** [[embWindow]] + the collect/parallelize(1) materialization idiom —
-    * for LAZY query bodies whose execution otherwise happens at the
-    * caller's action OUTSIDE the window (bodies end in a total orderBy,
-    * so collected order is deterministic). */
-  private def embMat(s: SparkSession, dir: String)(df: => DataFrame): DataFrame =
-    embWindow(s, dir) {
-      val out = df
-      val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    }
+  /** `df` bound to the measured width of an embedding-driven body: the
+    * embeddings table's parquet-footer row count (ZERO Spark jobs), AQE
+    * off only at the tiny floor ([[graft.operators.Checkpoints.sized]]).
+    * Lower-only — a cluster-scale corpus keeps the session width. */
+  private def embSized(s: SparkSession, dir: String, df: DataFrame): DataFrame =
+    graft.operators.Checkpoints.sized(df,
+      graft.operators.IndexStore.parquetRowCount(s, s"$dir/embeddings.parquet"))
 
   // One IVF index per (session, table dir): build is triggered by the first
   // v04/v05 invocation, every later one is probe-only. Entries live until
@@ -673,17 +659,21 @@ object VectorQueries {
     // grouping). Per-call lifecycle: labels are localCheckpoint-ed, the
     // component loop's edge checkpoint and the lazy label plan released
     // before return, the bounded membership table collected so nothing
-    // persists past the call (the q65 pattern).
+    // persists past the call (the q65 pattern). The pair join, the
+    // component rounds and the cluster read start from the IVF assignment
+    // or the embeddings: both are bound to the embeddings-measured width.
     "v21_semantic_clusters" -> { (s, dir) =>
-      embWindow(s, dir) {
+      val idx = ivfIndexFor(s, dir)
       val pairs = graft.operators.Dedup
-        .embeddingNearDupPairs(ivfIndexFor(s, dir), V05Threshold)
+        .embeddingNearDupPairs(idx.copy(assigned = embSized(s, dir, idx.assigned)),
+          V05Threshold)
         .select(col("id_a"), col("id_b"))
       val lazyLabels = graft.operators.Components.connectedComponents(pairs)
       val labels = lazyLabels.localCheckpoint()
       graft.operators.Components.releaseCheckpoint(lazyLabels)
       val out = graft.operators.Components
-        .dupClustersFromLabels(emb(s, dir).select("vec_id"), "vec_id", labels)
+        .dupClustersFromLabels(embSized(s, dir, emb(s, dir)).select("vec_id"),
+          "vec_id", labels)
         .select(col("id").as("vec_id"), col("cluster"), col("is_canonical"))
         .withColumn("sz",
           count(lit(1)).over(Window.partitionBy(col("cluster"))))
@@ -691,7 +681,6 @@ object VectorQueries {
       val rows = out.collect().toSeq
       graft.operators.Components.releaseCheckpoint(labels)
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-      }
     },
 
     // Hybrid query-by-document retrieval: t37's BM25 core as the LEXICAL
@@ -706,7 +695,8 @@ object VectorQueries {
     // DuckDB replays legs and fusion bit-for-bit. Scale shape: legs are
     // independent index probes (inverted postings / ANN index); the fuse
     // is an outer join of two k-bounded lists — k rows per query move.
-    "v23_hybrid_bm25" -> { (s, dir) => embMat(s, dir) {
+    // The returned frame runs at the embeddings-measured width.
+    "v23_hybrid_bm25" -> { (s, dir) =>
       val qdocs = Tables.load(s, dir, "documents")
         .filter(col("doc_id") < 8)
         .select(col("doc_id").as("qid"),
@@ -724,7 +714,7 @@ object VectorQueries {
           "vec_id", "embedding", e, "vec_id", "embedding", k = 50)
         .select(col("qid"), col("nid"), col("rank").as("rank_b"))
       val wf = Window.partitionBy("qid").orderBy(col("rrf").desc, col("nid"))
-      lex.join(vec, Seq("qid", "nid"), "full")
+      embSized(s, dir, lex).join(vec, Seq("qid", "nid"), "full")
         .select(col("qid"), col("nid"),
           round(lit(1.0) / (lit(60) + coalesce(col("rank_a"), lit(1000))) +
             lit(1.0) / (lit(60) + coalesce(col("rank_b"), lit(1000))), 8)
@@ -735,7 +725,7 @@ object VectorQueries {
         .filter(col("rank") <= 10)
         .select("qid", "rank", "nid", "rrf", "lex_rank", "vec_rank")
         .orderBy("qid", "rank")
-    }},
+    },
 
     // SQ8 (int8 scalar-quantized) retrieval — the memory-bandwidth tier
     // between full-precision MIPS (v10) and PQ-ADC (v08): per-vector
@@ -896,11 +886,13 @@ object VectorQueries {
     // replays the subspace trainings on the batch-0 slice and encodes
     // the FULL corpus under them.
     "v28_pq_tiered_roll" -> { (s, dir) =>
-      val e = emb(s, dir)
+      // the folds, the merged read and the probe all run in the
+      // embeddings-measured session the batches are bound to
+      val e = embSized(s, dir, emb(s, dir))
       val root = java.nio.file.Files.createTempDirectory("v28_tiered").toString
       // the outer try spans the FOLDS too: a mid-roll throw must not
       // strand the temp root (review catch, the q81/q82 scope)
-      val (rows, schema) = try embWindow(s, dir) {
+      val (rows, schema) = try {
         (0 until 5).foreach { i =>
           graft.streaming.PqTieredStream.foldBatch(
             e.filter(pmod(col("vec_id"), lit(5)) === i), "vec_id", "embedding",
@@ -908,7 +900,7 @@ object VectorQueries {
             majorEvery = 3)
         }
         val view = graft.streaming.PqTieredStream
-          .loadCurrent(s, root, dim = 64, m = 4, k = 8, iters = 4)
+          .loadCurrent(e.sparkSession, root, dim = 64, m = 4, k = 8, iters = 4)
           .getOrElse(sys.error("tiered pq roll committed nothing"))
         val out = view.index.encoded
           .select(col("nid").cast("long").as("vec_id"),
@@ -985,10 +977,12 @@ object VectorQueries {
     // the oracle trains both models on the batch-0 slice and routes +
     // encodes the FULL corpus under them (v31's replay, widened).
     "v33_ivfadc_tiered_roll" -> { (s, dir) =>
-      val e = emb(s, dir)
+      // the folds, the merged read and the probe all run in the
+      // embeddings-measured session the batches are bound to
+      val e = embSized(s, dir, emb(s, dir))
       val root = java.nio.file.Files.createTempDirectory("v33_tiered").toString
       // the outer try spans the FOLDS too (review catch, the q81/q82 scope)
-      val (rows, schema) = try embWindow(s, dir) {
+      val (rows, schema) = try {
         (0 until 5).foreach { i =>
           graft.streaming.IvfPqTieredStream.foldBatch(
             e.filter(pmod(col("vec_id"), lit(5)) === i), "vec_id", "embedding",
@@ -996,7 +990,7 @@ object VectorQueries {
             coarseIters = 4, pqIters = 4, majorEvery = 3)
         }
         val view = graft.streaming.IvfPqTieredStream
-          .loadCurrent(s, root, dim = 64, nCells = 8, m = 4, k = 8,
+          .loadCurrent(e.sparkSession, root, dim = 64, nCells = 8, m = 4, k = 8,
             coarseIters = 4, pqIters = 4)
           .getOrElse(sys.error("tiered ivfadc roll committed nothing"))
         val out = view.index.coded
@@ -1060,17 +1054,19 @@ object VectorQueries {
     // own temp root (the t38/q81 convention: the maintenance chain IS
     // the measured artifact).
     "v27_tiered_roll" -> { (s, dir) =>
-      val e = emb(s, dir)
+      // the folds, the merged read and the probe all run in the
+      // embeddings-measured session the batches are bound to
+      val e = embSized(s, dir, emb(s, dir))
       val root = java.nio.file.Files.createTempDirectory("v27_tiered").toString
       // the outer try spans the FOLDS too (review catch, the q81/q82 scope)
-      val (rows, schema) = try embWindow(s, dir) {
+      val (rows, schema) = try {
         (0 until 5).foreach { i =>
           graft.streaming.VectorTieredStream.foldBatch(
             e.filter(pmod(col("vec_id"), lit(5)) === i), "vec_id", "embedding",
             root, batchId = i.toLong, nCells = 16, majorEvery = 3)
         }
         val view = graft.streaming.VectorTieredStream
-          .loadCurrent(s, root, nCells = 16)
+          .loadCurrent(e.sparkSession, root, nCells = 16)
           .getOrElse(sys.error("tiered vector roll committed nothing"))
         val out = Similarity.ivfProbe(view.index,
             e.filter(col("vec_id") < 8), "vec_id", "embedding",

@@ -291,10 +291,11 @@ object CopurchaseStream {
           // the fold's shuffles (within-batch distinct, a major's
           // re-aggregation) are |Δ|-sized — run them at the measured
           // width, with AQE off when the width lands at the tiny floor
-          // (withDeltaWindow: the fold's stage-materialization jobs are
+          // (Checkpoints.sized: the fold's stage-materialization jobs are
           // pure overhead on ≤4-partition shuffles; lower-only, and a
-          // large delta keeps AQE + the session width)
-          graft.operators.Checkpoints.withDeltaWindow(spark, n)(fold(edges))
+          // large delta keeps AQE + the session width). Both folds read
+          // their standing state through the edges' session.
+          fold(graft.operators.Checkpoints.sized(edges, n))
         } finally { edges.unpersist(); () }
       }
     }

@@ -144,7 +144,7 @@ object EventStreams {
          TsEncoding(TimeUnit.MICROS, false)
      }) match {
       case TsEncoding(TimeUnit.NANOS, _) =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        graft.io.Tables.requireNanosAsLong(spark)
         spark.readStream
           .schema(graft.schema.Schemas.eventsWithTs(org.apache.spark.sql.types.LongType))
           .option("maxFilesPerTrigger", "1")

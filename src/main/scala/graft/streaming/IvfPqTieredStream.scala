@@ -66,9 +66,8 @@ object IvfPqTieredStream {
     // runs under the measured width (minors/majors encode map-side)
     override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
                                      note: String): Unit =
-      Checkpoints.withDeltaWindow(spark, n)(commit(Similarity.ivfPqBuild(
-        delta, idCol, vecCol, dim, nCells, m, k, coarseIters, pqIters,
-        trainSample), dir, note))
+      commit(Similarity.ivfPqBuild(Checkpoints.sized(delta, n), idCol, vecCol,
+        dim, nCells, m, k, coarseIters, pqIters, trainSample), dir, note)
 
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit = {

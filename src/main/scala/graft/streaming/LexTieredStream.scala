@@ -41,8 +41,8 @@ object LexTieredStream {
 
   // every fold shuffle is |Δ|-sized by design (minors never read standing
   // state; the major's standing side moves through broadcast anti-joins or
-  // lazy unions), so each write runs under a measured-width window — the
-  // major sized by standing+delta docs, so a grown corpus self-widens (and
+  // lazy unions), so each write runs at a measured width — the major
+  // sized by standing+delta docs, so a grown corpus self-widens (and
   // re-enables AQE) instead of inheriting a delta-sized width
   private[streaming] final class Roll(spark: SparkSession, root: String)
       extends TieredRoll[Postings.Index, Tiered](spark, root, "lex") {
@@ -67,26 +67,28 @@ object LexTieredStream {
 
     override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
                                      note: String): Unit =
-      commit(Checkpoints.withDeltaWindow(spark, n, DocsPerPartition)(
-        Checkpoints.sweepingOnFailure(spark.sparkContext)(
-          Postings.build(delta))), dir, note)
+      commit(Checkpoints.sweepingOnFailure(spark.sparkContext)(
+        Postings.build(Checkpoints.sized(delta, n, DocsPerPartition))), dir, note)
 
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit =
-      Checkpoints.withDeltaWindow(spark, n, DocsPerPartition)(
-        save(Postings.tierFrame(delta)))
+      save(Postings.tierFrame(Checkpoints.sized(delta, n, DocsPerPartition)))
 
     // major width: standing docs (free off the loaded L1's meta stats) +
     // this delta — the committed tf/dl rewrite reads the corpus, so the
-    // window stops lowering anything once the index outgrows a few floors
+    // sizing stops lowering anything once the index outgrows a few floors.
+    // The merge's shuffles start from the standing tf/dl and the tier
+    // union, so all of them are bound.
     protected def major(t: TieredRoll.Tiers[Postings.Index], delta: DataFrame,
                         n: => Long, epochId: Long, dir: String,
                         note: String): Unit = {
       val l1 = t.l1.get
-      Checkpoints.withDeltaWindow(spark, l1.nDocs + n, DocsPerPartition)(
-        commit(Checkpoints.sweepingOnFailure(spark.sparkContext)(
-          Postings.mergeTiers(l1, t.l0 :+ (epochId -> Postings.tierFrame(delta)))),
-          dir, note))
+      val rows = l1.nDocs + n
+      def bind(df: DataFrame) = Checkpoints.sized(df, rows, DocsPerPartition)
+      commit(Checkpoints.sweepingOnFailure(spark.sparkContext)(
+        Postings.mergeTiers(l1.copy(tf = bind(l1.tf), dl = bind(l1.dl)),
+          (t.l0 :+ (epochId -> Postings.tierFrame(delta)))
+            .map { case (e, f) => e -> bind(f) })), dir, note)
     }
   }
 

@@ -58,8 +58,8 @@ object PqTieredStream {
     // under the measured width (minors/majors encode map-side)
     override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
                                      note: String): Unit =
-      Checkpoints.withDeltaWindow(spark, n)(commit(Similarity.pqBuild(delta,
-        idCol, vecCol, dim, m, k, iters, trainSample), dir, note))
+      commit(Similarity.pqBuild(Checkpoints.sized(delta, n),
+        idCol, vecCol, dim, m, k, iters, trainSample), dir, note)
 
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit = {

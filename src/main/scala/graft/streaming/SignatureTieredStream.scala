@@ -60,13 +60,13 @@ object SignatureTieredStream {
         () => t.l1.foreach(_.release()))
 
     // mapPartitions sig frame + parquet write — no shuffle, so no width
-    // window to open (the probe and the major carry the windows)
+    // to size (the probe and the major are sized)
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit =
       save(delta)
 
     // major width: the bucket re-aggregation shuffles the MERGED sig
-    // corpus, so the window is sized standing+delta — standing row counts
+    // corpus, so it is sized standing+delta — standing row counts
     // come free off the committed tiers' parquet footers (zero jobs), and
     // a grown corpus self-widens back to the session conf (and keeps AQE)
     protected def major(t: TieredRoll.Tiers[Dedup.SignatureIndex],
@@ -76,10 +76,10 @@ object SignatureTieredStream {
         t.l1Id.map(id => IndexStore.parquetRowCount(spark, s"${l1Dir(id)}/sigs"))
           .getOrElse(0L) +
         t.liveL0.map(id => IndexStore.parquetRowCount(spark, s"${l0Dir(id)}/data")).sum
-      val sigs = view(t).sigs.unionByName(delta)
-      Checkpoints.withDeltaWindow(spark, standingRows + n)(commit(
-        Dedup.SignatureIndex(k, bands, shingleWidth, sigs,
-          Dedup.bucketsFromSigs(sigs, k, bands), () => ()), dir, note))
+      val sigs = Checkpoints.sized(view(t).sigs.unionByName(delta),
+        standingRows + n)
+      commit(Dedup.SignatureIndex(k, bands, shingleWidth, sigs,
+        Dedup.bucketsFromSigs(sigs, k, bands), () => ()), dir, note)
     }
   }
 

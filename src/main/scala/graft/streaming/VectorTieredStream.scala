@@ -57,12 +57,12 @@ object VectorTieredStream {
     }
 
     // Lloyd's per-iteration aggregates are sample/|Δ|-sized, so the build
-    // runs under the measured-width window (minors and majors have no
-    // shuffle to size)
+    // runs at the measured width (minors and majors have no shuffle to
+    // size)
     override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
                                      note: String): Unit =
-      Checkpoints.withDeltaWindow(spark, n)(commit(Similarity.ivfBuild(delta,
-        idCol, vecCol, nCells, trainSample, iters), dir, note))
+      commit(Similarity.ivfBuild(Checkpoints.sized(delta, n),
+        idCol, vecCol, nCells, trainSample, iters), dir, note)
 
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit =

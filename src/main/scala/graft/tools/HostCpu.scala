@@ -5,7 +5,7 @@ package graft.tools
   * host: when the host oversubscribes, the guest's runnable threads lose
   * whole scheduling slices ("stolen" ticks) while its own loadavg stays
   * low — identical work was measured at 138 vs 881 task-seconds across
-  * reps in one session (D03LeakProbe, r9), a 6× swing with zero code or
+  * reps in one session (d03, r9), a 6× swing with zero code or
   * data change. Cumulative steal on this box has historically equalled
   * cumulative USER time, so benches MUST record the steal share of their
   * own window: a timing taken at 30% steal is not comparable to one taken

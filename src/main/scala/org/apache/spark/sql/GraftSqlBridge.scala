@@ -11,6 +11,12 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A new session sharing `spark`'s SparkContext and cache manager, with
+    * a copy of its runtime conf, temp views and functions —
+    * `cloneSession` is `private[sql]`, hence the forwarder. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** The exact error the ANSI `Divide` raises on /0 —
     * `QueryExecutionErrors` is `private[sql]`, hence the forwarder. Used by
     * [[graft.plans.SetJaccard]]'s interpreted path so the fused expression's

@@ -137,4 +137,26 @@ class EventsContractSpec extends SparkSpec {
     assert(df.schema("ts").dataType == TimestampType)
     Tables.assertTsContract(df)
   }
+
+  test("loadEvents on a NANOS file needs the nanosAsLong key GraftSession.tune " +
+       "sets — a session without it fails loudly, a tuned one loads") {
+    // an unannotated INT64 `ts` is the legacy nanos encoding
+    val staged = java.nio.file.Files.createTempDirectory("nanos")
+    val out = staged.resolve("events.parquet").toString
+    Tables.load(spark, dir, "events")
+      .withColumn("ts", unix_micros(col("ts")) * 1000L)
+      .write.parquet(out)
+    assert(Tables.tsUnit(spark, out) == TimeUnit.NANOS)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val bare = spark.newSession()
+    bare.conf.unset(key)
+    val e = intercept[IllegalArgumentException](Tables.loadEvents(bare, out))
+    assert(e.getMessage.contains("GraftSession.tune"), e.getMessage)
+    assert(!bare.conf.getOption(key).contains("true"),
+      "the loader must not set the key")
+    val df = Tables.loadEvents(spark, out)
+    assert(df.schema("ts").dataType == TimestampType)
+    Tables.assertTsContract(df)
+    assert(df.count() == Tables.load(spark, dir, "events").count())
+  }
 }
