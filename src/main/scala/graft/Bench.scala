@@ -29,11 +29,13 @@ object Bench {
     // burst this guest read loadavg 0.2–1.5 while delivered all-core
     // capacity sat at 17–50% of healthy (SpinProbe 511–1500 vs ~3100) and
     // identical queries ran ~2× slow. The wait loop therefore also gates
-    // on the direct capacity measurement. The threshold is ABSOLUTE for
-    // this box class (healthy ≥ ~2800; bursts < 1500): on a slower box
-    // class the gate degrades to spending the bounded wait budget and
-    // proceeding with the warning recorded — never a deadlock.
-    val spinThreshold = sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN_SPIN", "1800").toLong
+    // on the direct capacity measurement. The default floor scales with
+    // the core count the spin runs on (HostCpu.defaultMinSpin: 1800 on
+    // 32 cores, 225 on 4); SPARK_GRAFT_BENCH_MIN_SPIN sets an absolute
+    // floor instead. A box that never reaches it spends the bounded wait
+    // budget and proceeds with the warning recorded — never a deadlock.
+    val spinThreshold = sys.env.get("SPARK_GRAFT_BENCH_MIN_SPIN")
+      .map(_.toLong).getOrElse(tools.HostCpu.defaultMinSpin(machineCpus))
     val waitBudgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_SEC", "600").toLong
     val waitStart = System.nanoTime()
     var waitedSec = 0L

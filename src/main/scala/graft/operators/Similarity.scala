@@ -831,12 +831,10 @@ object Similarity {
                persist: Boolean = true): PqIndex =
     pqAppendCoded(index, pqEncode(index, batch, nid, nvec), persist)
 
-  /** [[pqAppend]] over an ALREADY-ENCODED batch (a [[pqEncode]] result):
-    * callers that also audit the same batch encode ONCE and feed both
-    * paths (PqEpochStream does) instead of paying the |Δ| argmax pass
-    * twice. With `persist = false` the caller owns `coded`'s lifecycle;
-    * the returned release then frees only the base chain. */
-  def pqAppendCoded(index: PqIndex, coded: DataFrame,
+  /** [[pqAppend]] over an ALREADY-ENCODED batch (a [[pqEncode]] result).
+    * With `persist = false` the caller owns `coded`'s lifecycle; the
+    * returned release then frees only the base chain. */
+  private def pqAppendCoded(index: PqIndex, coded: DataFrame,
                     persist: Boolean = true): PqIndex = {
     val appended =
       if (persist) coded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -849,7 +847,7 @@ object Similarity {
     * pass behind [[pqAppendCoded]] and [[pqDriftAuditCoded]]:
     * `(nid, code_0..code_{m-1})`, [[pqBuild]]'s exact corpus-encode
     * arithmetic. */
-  def pqEncode(index: PqIndex, batch: DataFrame,
+  private def pqEncode(index: PqIndex, batch: DataFrame,
                nid: String, nvec: String): DataFrame = {
     graft.plans.FloatDotProduct.register(batch.sparkSession)
     encodeUnderCodebooks(index, batch, nid, nvec)
@@ -900,9 +898,8 @@ object Similarity {
                    nid: String, nvec: String): DataFrame =
     pqDriftAuditCoded(index, pqEncode(index, batch, nid, nvec))
 
-  /** [[pqDriftAudit]] over an already-encoded batch — see
-    * [[pqAppendCoded]] for the share-one-encode contract. */
-  def pqDriftAuditCoded(index: PqIndex, coded: DataFrame): DataFrame = {
+  /** [[pqDriftAudit]] over an already-encoded batch. */
+  private def pqDriftAuditCoded(index: PqIndex, coded: DataFrame): DataFrame = {
     def melt(df: DataFrame): DataFrame =
       (0 until index.m).map(ms => df.select(lit(ms).as("subspace"),
           col(s"code_$ms").cast("long").as("code")))

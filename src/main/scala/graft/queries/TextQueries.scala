@@ -1525,7 +1525,7 @@ object TextQueries {
     // never a corpus re-tokenization — and the t37 workload is served
     // from the FOLDED index. The oracle replays the full rebuild (it
     // never sees the split), so hash equality certifies fold ≡ rebuild:
-    // the d13/q79 pattern at the lexical layer. LexEpochStream is the
+    // the d13/q79 pattern at the lexical layer. LexTieredStream is the
     // streaming twin.
     "t38_incremental_bm25" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Rolling co-purchase graph from the RAW fact stream — the missing hop
-  * between a lineitem feed and [[GraphEpochStream]]: deriving edges
+  * between a lineitem feed and [[GraphTieredStream]]: deriving edges
   * per-batch with a plain pair-gen self-join silently DROPS every pair
   * whose two lines arrive in different micro-batches (an order is not a
   * batch-local object). The incremental-join identity fixes it the way
@@ -19,10 +19,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * standing side prunes to the batch's TOUCHED ORDERS by a semi-join
   * before any pair expansion — pair-expansion cost is |Δ|-proportional,
   * never a standing×standing re-generation. Derived deltas feed
-  * [[GraphEpochStream.foldBatch]] (dedup = true absorbs the duplicate
-  * edges replays and standing/delta overlaps produce), so the rolled
-  * index converges to `Adjacency.build(copurchasePairs(all lines))`
-  * bit-identically.
+  * [[GraphTieredStream.foldBatch]] (the merged read and the major's
+  * dedup = true build absorb the duplicate edges replays and
+  * standing/delta overlaps produce), so the rolled edge set converges to
+  * `Adjacency.build(copurchasePairs(all lines))` bit-identically.
   *
   * Standing-scan cost (honest accounting — r11 advice): the semi-join
   * prunes pair EXPANSION to touched orders, but the standing lines still
@@ -52,7 +52,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * batch's own lines are never baked into a segment it must exclude.
   * Crash matrix: lines written but epoch torn → the replay overwrites the
   * lines (same content) and re-folds; epoch committed but the checkpoint
-  * not → the replay rewrites lines and [[GraphEpochStream.foldBatch]]
+  * not → the replay rewrites lines and [[GraphTieredStream.foldBatch]]
   * skips the already-applied fold; crash mid-compaction → the torn
   * `segment=` directory has no `_SUCCESS` marker, readers ignore it, and
   * the replayed batch re-compacts over it (overwrite). A committed
@@ -188,8 +188,8 @@ object CopurchaseStream {
       col("l_partkey").cast("long").as("p")).distinct(), standing)
 
   /** [[deltaEdges]] over ALREADY-NORMALIZED distinct `(o, p)` lines —
-    * [[foldBatch]] passes its pinned frame here so the batch's upstream
-    * is scanned once across the whole fold. Private: the distinct is a
+    * [[foldBatchTiered]] passes its pinned frame here so the batch's
+    * upstream is scanned once across the whole fold. Private: the distinct is a
     * CORRECTNESS precondition (duplicate lines would multiply through
     * both self-join sides), so outside callers take the raw entry. */
   private def deltaEdgesNorm(b: DataFrame, standing: DataFrame): DataFrame = {
@@ -213,48 +213,22 @@ object CopurchaseStream {
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
   }
 
-  /** Process ONE batch: compact committed prior deltas when due, derive
-    * the delta edges against the (bucket-pruned) standing lines, record
-    * the batch's lines (overwrite — idempotent), fold the delta into the
-    * newest graph epoch. Pure batch logic — unit-testable without a
+  /** Process ONE batch into a TIERED root ([[GraphTieredStream]]):
+    * compact committed prior deltas when due, derive the delta edges
+    * against the (bucket-pruned) standing lines, record the batch's lines
+    * (overwrite — idempotent), then fold the delta as an O(|Δ|) L0 epoch.
+    * Within-batch distinct happens in the tiered fold; duplicates against
+    * OLDER tiers (a pair re-derived through another order) stay as rows in
+    * the minor and collapse at read/major, so the merged edge SET
+    * converges to the full rebuild (CopurchaseStreamSpec pins it). The
+    * tier's committed marker makes a replayed fold a no-op. The returned
+    * outcome lets a maintenance probe (Q82Scale) attribute per-batch cost
+    * to the real tier decision — majors fire on live-L0 count, not
+    * batch-id arithmetic. Pure batch logic — unit-testable without a
     * stream. */
-  def foldBatch(batch: DataFrame, linesDir: String, indexRoot: String,
-                batchId: Long, keepEpochs: Int = 2,
-                compactEvery: Int = 32): Unit =
-    foldBatchWith(batch, linesDir, batchId, compactEvery)(edges =>
-      GraphEpochStream.foldBatch(edges, indexRoot, batchId,
-        dedup = true, keepEpochs = keepEpochs))
-
-  /** [[foldBatch]] committing into a TIERED root
-    * ([[GraphTieredStream]]): the derived delta lands as an O(|Δ|) L0
-    * epoch instead of the flat roll's O(|corpus|) full-index rewrite —
-    * the last roll that still paid the flat durability price per batch.
-    * Within-batch distinct happens in the tiered fold; duplicates
-    * against OLDER tiers (a pair re-derived through another order) stay
-    * as rows in the minor and collapse at read/major exactly like the
-    * flat fold's dedup = true, so the merged edge SET converges
-    * identically (CopurchaseStreamSpec pins it). Same crash matrix: the
-    * tier's committed marker makes a replayed fold a no-op. */
   def foldBatchTiered(batch: DataFrame, linesDir: String, indexRoot: String,
                       batchId: Long, majorEvery: Int = 8,
                       compactEvery: Int = 32): BatchOutcome = {
-    // surfaced so a maintenance probe (Q82Scale) can attribute per-batch
-    // cost to the REAL tier decision — majors fire on live-L0 count, not
-    // batch-id arithmetic, and a mislabeled major reads as minor jitter
-    var out: BatchOutcome = BatchOutcome.EmptyBatch
-    foldBatchWith(batch, linesDir, batchId, compactEvery) { edges =>
-      out = GraphTieredStream.foldBatch(edges, indexRoot, batchId, majorEvery)
-      ()
-    }
-    out
-  }
-
-  /** The shared batch body behind the flat and tiered folds: line
-    * normalization + pin, compaction, bucket listing, delta derivation,
-    * the lines write, then `fold` over the pinned delta edges. */
-  private def foldBatchWith(batch: DataFrame, linesDir: String,
-                            batchId: Long, compactEvery: Int)
-                           (fold: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
     // one materialization of the batch's lines serves the emptiness probe,
     // the bucket listing, the lines write, AND deltaEdges' two join sides
@@ -271,7 +245,8 @@ object CopurchaseStream {
         pinned.select(pmod(col("o"), lit(OrderBuckets.toLong)).as("ob"))
           .distinct().collect().map(_.getLong(0)).toSeq
       }
-      if (buckets.nonEmpty) {
+      if (buckets.isEmpty) BatchOutcome.EmptyBatch
+      else {
         // compaction first, over ids < batchId only: state it folds is
         // committed, and a replay of THIS batch re-runs it idempotently
         labeled(spark.sparkContext, s"copurchase b$batchId: compact")(
@@ -293,32 +268,20 @@ object CopurchaseStream {
           // width, with AQE off when the width lands at the tiny floor
           // (Checkpoints.sized: the fold's stage-materialization jobs are
           // pure overhead on ≤4-partition shuffles; lower-only, and a
-          // large delta keeps AQE + the session width). Both folds read
-          // their standing state through the edges' session.
-          fold(graft.operators.Checkpoints.sized(edges, n))
+          // large delta keeps AQE + the session width). The fold reads
+          // its standing state through the edges' session.
+          GraphTieredStream.foldBatch(
+            graft.operators.Checkpoints.sized(edges, n), indexRoot, batchId,
+            majorEvery)
         } finally { edges.unpersist(); () }
       }
     }
   }
 
   /** Start the roll: a stream of raw order lines → per-batch
-    * [[foldBatch]] → committed co-purchase graph epochs under
-    * `indexRoot`. */
-  def start(lines: DataFrame, linesDir: String, indexRoot: String,
-            checkpointDir: String, keepEpochs: Int = 2,
-            compactEvery: Int = 32,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    lines.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, linesDir, indexRoot, batchId, keepEpochs,
-          compactEvery)
-      }
-      .start()
-
-  /** [[start]] against a TIERED root — [[foldBatchTiered]] per batch;
-    * pair with [[GraphServeStream.startTiered]] for serving. */
+    * [[foldBatchTiered]] → committed L0/L1 co-purchase graph epochs under
+    * `indexRoot`; pair with [[GraphServeStream.startTiered]] for
+    * serving. */
   def startTiered(lines: DataFrame, linesDir: String, indexRoot: String,
                   checkpointDir: String, majorEvery: Int = 8,
                   compactEvery: Int = 32,

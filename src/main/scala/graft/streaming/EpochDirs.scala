@@ -3,11 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Epoch-directory layout shared by the streaming index rolls
-  * ([[GraphEpochStream]], [[VectorEpochStream]]): `root/epoch=<batchId>`
-  * children, listed and pruned with filesystem metadata only. Validity
-  * (commit marker + parameter match) stays with each roll's own
-  * IndexStore meta peek — this object never reads a marker. */
 /** One epoch-id namespace, two writers (the tiers that have MAINTENANCE
   * majors — vector, PQ, IVFADC, media, signature, graph): data epochs land at
   * `batchId × MaintenanceSlots`, maintenance majors (compaction, retrain)
@@ -83,6 +78,10 @@ private[graft] object TierIds {
   }
 }
 
+/** Epoch-directory layout of each [[TieredRoll]] tier: `<tier>/epoch=<id>`
+  * children, listed and pruned with filesystem metadata only. Validity
+  * (commit marker + parameter match) stays with the roll's IndexStore meta
+  * peek — this object never reads a marker. */
 private[streaming] object EpochDirs {
 
   def dir(root: String, id: Long): String = s"$root/epoch=$id"

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.{
+  StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
@@ -16,18 +17,17 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
   * (BENCH_r12 serve sections: 0.5–1.7 s/batch fixed cost). The epochs the
   * roll commits change on ROLL cadence (minutes), not QUERY cadence, so a
   * serving stream re-paying the load per batch is pure waste. The pin
-  * replaces the reload with a staleness check: the epoch stream's
-  * committed-id listing (`epochs(...).headOption` — marker peek, zero
-  * Spark jobs), reusing the standing frames on a hit.
+  * replaces the reload with a staleness check: the tiered roll's
+  * `currentEpochId` (listing + marker peeks, zero Spark jobs), reusing the
+  * standing frames on a hit.
   *
-  * Freshness contract is UNCHANGED from the load-per-batch shape: [[get]]
-  * runs at each batch start, so every batch answers under the newest
-  * epoch committed at its own start — a mid-stream roll changes answers
-  * at the next batch boundary, never mid-batch. The retention grace
-  * window (`keepEpochs`) therefore still only needs to cover ONE batch:
-  * the pinned epoch is re-validated before each use, and its persisted
-  * frames (MEMORY_AND_DISK — spill, not eviction) carry the data even
-  * after the swapped-out epoch's files are pruned.
+  * Freshness contract: [[get]] runs at each batch start, so every batch
+  * answers under the newest epoch committed at its own start — a
+  * mid-stream roll changes answers at the next batch boundary, never
+  * mid-batch. The tiered retention grace (a reader pinned to one
+  * generation survives one later major) covers the pinned epoch for the
+  * batch, and its persisted frames (MEMORY_AND_DISK — spill, not eviction)
+  * carry the data even after the swapped-out epoch's files are pruned.
   *
   * Thread safety: `foreachBatch` bodies of one query are serial, but
   * [[close]] can race a terminating stream — both are synchronized and
@@ -37,23 +37,32 @@ final class EpochPin[I](newestId: () => Option[Long],
                         releaseIdx: I => Unit) extends AutoCloseable {
   private var cur: Option[(Long, I)] = None
   private var closed = false
+  private var lastSwapped = false
 
   /** The pinned `(epochId, index)`: the standing handle when it is still
     * the newest committed epoch, else release-and-swap to the newest.
     * Throws when no epoch has committed (the serve bootstrap contract). */
-  def get(): (Long, I) = synchronized {
+  def get(): (Long, I) = poll().getOrElse(throw new IllegalStateException(
+    "no committed epoch to pin — bootstrap the roll before serving"))
+
+  /** [[get]], with None when no epoch has committed. */
+  private def poll(): Option[(Long, I)] = synchronized {
     require(!closed, "epoch pin already closed")
     val newest = newestId()
     cur match {
-      case Some(p @ (id, _)) if newest.contains(id) => p
+      case Some((id, _)) if newest.contains(id) =>
+        lastSwapped = false
       case prev =>
         prev.foreach(p => releaseIdx(p._2))
         cur = None // a throwing load must not leave a dangling handle
         cur = load()
-        cur.getOrElse(throw new IllegalStateException(
-          "no committed epoch to pin — bootstrap the roll before serving"))
+        lastSwapped = cur.nonEmpty
     }
+    cur
   }
+
+  /** Whether the last [[get]] loaded a handle (the first load counts). */
+  private def swapped: Boolean = synchronized(lastSwapped)
 
   override def close(): Unit = synchronized {
     cur.foreach(p => releaseIdx(p._2))
@@ -63,6 +72,62 @@ final class EpochPin[I](newestId: () => Option[Long],
 }
 
 object EpochPin {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.EpochPin")
+
+  /** Answer ONE batch of `queries` under `pin`, which this call owns: get,
+    * plan, then an EAGER `localCheckpoint` — the answers are computed
+    * executor-side before the pin closes (in `finally`), so they outlive
+    * the index handle and retention pruning its files without ever
+    * round-tripping the driver. The caller owns the checkpoint blocks
+    * ([[graft.operators.Checkpoints.release]] once written). `what` names
+    * the index in the error when nothing has committed. */
+  def once[I](queries: DataFrame, pin: EpochPin[I], what: String)(
+      plan: (DataFrame, I) => DataFrame): (Long, DataFrame) =
+    try {
+      val (epochId, idx) = pin.poll().getOrElse(throw new IllegalStateException(
+        s"no committed $what — bootstrap the roll before serving"))
+      (epochId, plan(queries, idx).localCheckpoint())
+    } finally pin.close()
+
+  /** The one serving stream: `queries` → per batch `plan` over the pinned
+    * index → one `batch=<batchId>` parquet directory under `outDir`, rows
+    * stamped with `batch_id` and the answering `epoch_id`.
+    *
+    *  - The pin is checked at each batch start ([[EpochPin.get]]) and
+    *    reloads only when a roll committed since the last batch; it closes
+    *    when the query terminates ([[bound]]).
+    *  - No per-batch `localCheckpoint`: the pin keeps the index frames
+    *    alive through the batch's write, and a swap happens only at the
+    *    NEXT batch's staleness check.
+    *  - Replay idempotence: the batch directory is written with overwrite,
+    *    so a replayed batch rewrites it instead of appending duplicates.
+    *    A replay after a roll may answer under the newer epoch; the
+    *    recorded `epoch_id` makes that visible.
+    *
+    * Each batch logs one INFO line on `graft.streaming.EpochPin` (family,
+    * batch, epoch, whether the pin swapped, seconds) and runs no job for
+    * it. */
+  def serve[I](family: String, queries: DataFrame, pin: EpochPin[I],
+               outDir: String, checkpointDir: String, trigger: Trigger)(
+      plan: (DataFrame, I) => DataFrame): StreamingQuery =
+    bound(queries.sparkSession, pin) {
+      queries.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val t0 = System.nanoTime()
+          val (epochId, idx) = pin.get()
+          val swapped = pin.swapped
+          plan(batch, idx)
+            .withColumn("batch_id", lit(batchId))
+            .withColumn("epoch_id", lit(epochId))
+            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+          log.info(f"$family serve: batch=$batchId epoch=$epochId " +
+            f"swapped=$swapped seconds=${(System.nanoTime() - t0) / 1e9}%.3f")
+        }
+        .start()
+    }
 
   /** Run `startQuery` with `pin`'s lifetime bound to the query's: the pin
     * closes when the query terminates (however it ends). The terminated

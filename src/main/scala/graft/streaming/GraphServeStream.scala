@@ -1,105 +1,49 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The QUERY side of the graph epoch roll — [[LexServeStream]]'s twin for
-  * the second index family, closing its serve loop: answer a stream of
-  * `(qid, node)` recommendation probes against the NEWEST committed
-  * co-purchase graph epoch while [[GraphEpochStream]] /
-  * [[CopurchaseStream]] (separate single-writer streams) keep rolling the
-  * index underneath. Each micro-batch pins ONE epoch, so a mid-stream
-  * roll changes answers at the next batch boundary — never mid-batch.
+/** The QUERY side of the graph tiered roll — [[LexServeStream]]'s twin for
+  * the second index family: answer a stream of `(qid, node)`
+  * recommendation probes against the NEWEST committed co-purchase graph
+  * view while [[GraphTieredStream]] / [[CopurchaseStream]] (separate
+  * single-writer streams) keep rolling the index underneath. Each
+  * micro-batch pins ONE epoch, so a mid-stream roll changes answers at the
+  * next batch boundary — never mid-batch.
   *
   * The probe is the QUERY-PROPORTIONAL serving shape (the graph analogue
   * of t37's postings probe): per query node, its top-k co-purchase
   * neighbors ranked by the neighbors' own degree — "most-connected parts
   * bought with X", the q65 recommendation surface without the per-batch
-  * iteration a full PageRank would re-pay. Work is |queries| edge-list
-  * lookups + the neighbor-degree hash join; the epoch load itself is
-  * zero-job (IndexStore meta peek + lazy parquet).
-  *
-  * Candidate edges come from [[graft.operators.Adjacency.Hybrid.expand]]
-  * — the hub-safe join-THEN-explode, so only query nodes' arrays are
-  * ever unpacked; neighbor degrees read
-  * [[graft.operators.Adjacency.Hybrid.outDegrees]] (both layouts, no
-  * explode on the degree side).
-  *
-  * Same lifetime contract as the lexical server: answers are EAGERLY
-  * locally-checkpointed before the epoch's frames are released, so they
-  * outlive both the release and retention pruning the epoch directory;
-  * the caller owns the blocks ([[graft.operators.Checkpoints.release]]
-  * once written — the streaming sink below does). Replay idempotence:
-  * per-batch `batch=<id>` answer directories, overwrite mode, rows
-  * stamped with the answering epoch. */
+  * iteration a full PageRank would re-pay. Candidates come from
+  * [[GraphTieredStream.Tiered.neighbors]] — tier-COMPLETE and
+  * query-proportional (the L1 hybrid's join-then-explode ∪ the small delta
+  * join, deduped per query) — and the degree signal is
+  * [[GraphTieredStream.Tiered.mergedOutDegrees]], the exact cross-tier
+  * degrees at |Δ|-proportional cost, so answers equal top-k by neighbour
+  * out-degree over the full edge set (TieredServeSpec pins the identity).
+  * The pin and sink contract are [[EpochPin.serve]]'s. */
 object GraphServeStream {
 
   /** Answer ONE batch of `(qid LONG, node LONG)` probes against the
-    * newest committed epoch under `indexRoot`: per-probe top-k neighbors
+    * newest committed view under `indexRoot`: per-probe top-k neighbors
     * by (neighbor outdeg DESC, dst ASC). Returns `(epochId, answers)`
-    * with answers `(qid, rank, dst, dst_outdeg)` eagerly checkpointed.
-    * Pure batch logic — unit-testable without a stream. */
+    * with answers `(qid, rank, dst, dst_outdeg)` eagerly checkpointed
+    * ([[EpochPin.once]]). Pure batch logic — unit-testable without a
+    * stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, k: Int = 5,
-                  dedup: Boolean = true,
                   hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit)
-      : (Long, DataFrame) = {
-    val (epochId, hyb) = GraphEpochStream
-      .loadCurrent(queries.sparkSession, indexRoot, dedup, hubLimit)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed graph epoch under $indexRoot — bootstrap the roll " +
-          "(GraphEpochStream/CopurchaseStream) before serving"))
-    try (epochId, answerPlan(queries, hyb, k).localCheckpoint())
-    finally hyb.release() // eager checkpoint — computed before release
-  }
+      : (Long, DataFrame) =
+    EpochPin.once(queries,
+      tieredPinFor(queries.sparkSession, indexRoot, hubLimit),
+      s"graph epoch under $indexRoot")(answerPlan(_, _, k))
 
-  /** The probe plan over a LIVE hybrid-adjacency handle (caller owns the
-    * handle's lifetime; the result's lineage reads its frames). */
-  private def answerPlan(queries: DataFrame,
-                         hyb: graft.operators.Adjacency.Hybrid,
+  /** The probe plan over a LIVE tiered view (the caller owns its
+    * lifetime; the result's lineage reads its frames). */
+  private def answerPlan(queries: DataFrame, t: GraphTieredStream.Tiered,
                          k: Int): DataFrame = {
-    val per = queries.select(col("node").cast("long").as("src"),
-      col("qid").cast("long").as("qid"))
-    // expand = join-THEN-explode across both layouts: only query nodes'
-    // neighbor arrays are unpacked, hub queries ride the flat layout
-    val cand = hyb.expand(per)
-      .select(col("qid"), col("dst"))
-    val deg = hyb.outDegrees
-      .select(col("src").as("dst"), col("outdeg").as("dst_outdeg"))
-    val scored = cand.join(deg, Seq("dst"), "left")
-      .na.fill(0L, Seq("dst_outdeg")) // sink-only neighbors have no row
-    graft.plans.TopK.perKey(scored, Seq("qid"),
-        Seq("dst_outdeg" -> false, "dst" -> true), k)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid")
-          .orderBy(col("dst_outdeg").desc, col("dst"))))
-      .select(col("qid"), col("rank"), col("dst"), col("dst_outdeg"))
-  }
-
-  /** A standing pin on the newest committed epoch for the streaming
-    * serve path ([[EpochPin]]: staleness check per batch, reload only on
-    * a roll). */
-  def pinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
-             dedup: Boolean = true,
-             hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit)
-      : EpochPin[graft.operators.Adjacency.Hybrid] =
-    new EpochPin(
-      () => GraphEpochStream.epochs(spark, indexRoot, dedup, hubLimit)
-        .headOption,
-      () => GraphEpochStream.loadCurrent(spark, indexRoot, dedup, hubLimit),
-      (h: graft.operators.Adjacency.Hybrid) => h.release())
-
-  /** The probe plan over a TIERED view: candidate neighbors come from
-    * [[GraphTieredStream.Tiered.neighbors]] — tier-COMPLETE and
-    * query-proportional (the L1 expand ∪ the small delta join, deduped
-    * per query) — and the degree ranking signal is
-    * [[GraphTieredStream.Tiered.mergedOutDegrees]], the exact cross-tier
-    * degrees at |Δ|-proportional cost, so tiered-served answers equal
-    * flat-served answers exactly (TieredServeSpec pins the identity). */
-  private def answerPlanTiered(queries: DataFrame,
-                               t: GraphTieredStream.Tiered,
-                               k: Int): DataFrame = {
     val per = queries.select(col("node").cast("long").as("src"),
       col("qid").cast("long").as("qid"))
     val cand = t.neighbors(per).select(col("qid"), col("dst"))
@@ -115,10 +59,10 @@ object GraphServeStream {
       .select(col("qid"), col("rank"), col("dst"), col("dst_outdeg"))
   }
 
-  /** [[pinFor]] against a TIERED root ([[GraphTieredStream]]) — the
-    * production pairing on the LSM roll; the staleness check is the
-    * tiered `currentEpochId` (minor or major commits bump it). */
-  def tieredPinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+  /** A standing pin on the newest committed view ([[EpochPin]]); the
+    * staleness check is the tiered `currentEpochId` (minor or major
+    * commits bump it). */
+  def tieredPinFor(spark: SparkSession, indexRoot: String,
                    hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit)
       : EpochPin[GraphTieredStream.Tiered] =
     new EpochPin(
@@ -127,53 +71,15 @@ object GraphServeStream {
         .map(t => t.epochId -> t),
       (t: GraphTieredStream.Tiered) => t.release())
 
-  /** [[start]] against a tiered root — same sink contract, same pin
-    * lifetime; see [[answerPlanTiered]] for the candidate/degree split. */
+  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+    * `(qid, node)` frame) → per-batch probe → one `batch=<batchId>`
+    * parquet directory each under `outDir`, rows stamped with the
+    * answering epoch. */
   def startTiered(queries: DataFrame, indexRoot: String, outDir: String,
                   checkpointDir: String, k: Int = 5,
                   hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = tieredPinFor(spark, indexRoot, hubLimit)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, t) = pin.get()
-          answerPlanTiered(batch, t, k)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
-
-  /** Start the serving stream: `queries` (a streaming `(qid, node)`
-    * frame) → per-batch probe → one `batch=<batchId>` parquet directory
-    * each under `outDir`, rows stamped with the answering epoch. Epoch
-    * handle PINNED across batches and no per-batch `localCheckpoint` —
-    * the [[LexServeStream.start]] rationale, identically. */
-  def start(queries: DataFrame, indexRoot: String, outDir: String,
-            checkpointDir: String, k: Int = 5,
-            dedup: Boolean = true,
-            hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = pinFor(spark, indexRoot, dedup, hubLimit)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, hyb) = pin.get()
-          answerPlan(batch, hyb, k)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    EpochPin.serve("graph", queries,
+      tieredPinFor(queries.sparkSession, indexRoot, hubLimit),
+      outDir, checkpointDir, trigger)(answerPlan(_, _, k))
 }

@@ -9,8 +9,8 @@ import graft.io.JobLabels.labeled
 import graft.operators.{Adjacency, Checkpoints, IndexStore}
 
 /** TIERED (L0/L1) epoch commits for the GRAPH family on the shared
-  * [[TieredRoll]] — the LSM answer to the O(|V|) full-index rewrite per
-  * batch that [[GraphEpochStream]] pays for durability.
+  * [[TieredRoll]] — the LSM answer to an O(|V|) full-index rewrite per
+  * batch: a batch commits only its delta edges.
   *
   *  - **No bootstrap**: minors need no model, so the roll serves from L0
   *    deltas alone until the first major.
@@ -39,10 +39,10 @@ import graft.operators.{Adjacency, Checkpoints, IndexStore}
   * are EDGE-level (src, dst) pairs; node-level retraction derives its edge
   * set from a neighbors read first.
   *
-  * Prototype scope: unweighted edges (the [[GraphEpochStream]] (src, dst)
-  * contract); cross-tier duplicates collapse at read and at the major's
-  * dedup=true build — a multiplicity-preserving tiering needs per-edge
-  * counts in L0 and is out of scope. */
+  * Prototype scope: unweighted (src, dst) edges; cross-tier duplicates
+  * collapse at read and at the major's dedup=true build — a
+  * multiplicity-preserving tiering needs per-edge counts in L0 and is out
+  * of scope. */
 object GraphTieredStream {
 
   private[streaming] final class Roll(spark: SparkSession, root: String,
@@ -143,8 +143,8 @@ object GraphTieredStream {
       * bounded by their total L1 degree), never the corpus; the
       * adjustment and new-src frames are |Δ|-sized (AQE broadcasts them
       * at runtime when small — no forced hint, see below). The
-      * tiered serve path ranks with this, so tiered-served answers equal
-      * flat-served answers exactly. */
+      * tiered serve path ranks with this, so its answers equal top-k by
+      * neighbour out-degree over the full edge set exactly. */
     def mergedOutDegrees: DataFrame = {
       val d = delta.select(col("src"), col("dst")).distinct()
       l1 match {

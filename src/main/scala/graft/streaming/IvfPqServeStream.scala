@@ -1,58 +1,47 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The QUERY side of the tiered IVFADC roll ([[IvfPqTieredStream]]) —
-  * the fifth and last serve loop, so every durable index family's LSM
-  * path now has one: answer a stream of `(qid, qvec)` probes with
+/** The QUERY side of the tiered IVFADC roll ([[IvfPqTieredStream]]): answer
+  * a stream of `(qid, qvec)` probes with
   * [[graft.operators.Similarity.ivfPqProbe]] (coarse-cell pruning + ADC
   * over residual codes — the production two-stage index) against the
   * NEWEST committed tiered view while the roll keeps committing minors
-  * and majors underneath. [[EpochPin]] semantics as everywhere: per
-  * batch a zero-job staleness check, reload only on a commit, answers
-  * change at batch boundaries only.
+  * and majors underneath. Answers change at batch boundaries only.
   *
-  * The IVFADC family has no flat epoch roll (its flat form is the
-  * `ivfPqBuild` + `ivfPqAppend` chain, v31) — serving is tiered-only by
-  * design, and the spec certifies tiered-served answers ≡ probing the
-  * equivalent flat build+append index directly. Same probe contract as
-  * the sibling servers: a candidate whose nid equals the probe's qid is
-  * excluded — serve external query streams from a disjoint id
-  * namespace. */
+  * The spec certifies tiered-served answers ≡ probing the equivalent
+  * `ivfPqBuild` + `ivfPqAppend` chain (v31) directly. Same probe contract
+  * as the sibling servers: a candidate whose nid equals the probe's qid is
+  * excluded — serve external query streams from a disjoint id namespace.
+  * The pin and sink contract are [[EpochPin.serve]]'s. */
 object IvfPqServeStream {
 
   /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
     * the newest committed tiered view under `indexRoot`. Returns
     * `(epochId, answers)` with answers `(qid, rank, nid, adc)` eagerly
-    * checkpointed. Pure batch logic — unit-testable without a stream. */
+    * checkpointed ([[EpochPin.once]]). Pure batch logic — unit-testable
+    * without a stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, dim: Int,
                   k: Int = 5, nProbe: Int = 2, nCells: Int = 8,
                   m: Int = 4, codebookK: Int = 8,
                   coarseIters: Int = 4, pqIters: Int = 4,
-                  trainSample: Int = 10000): (Long, DataFrame) = {
-    val t = IvfPqTieredStream
-      .loadCurrent(queries.sparkSession, indexRoot, dim, nCells, m,
-        codebookK, coarseIters, pqIters, trainSample)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed IVFADC epoch under $indexRoot — bootstrap the roll " +
-          "(IvfPqTieredStream) before serving"))
-    try (t.epochId, answerPlan(queries, t.index, k, nProbe).localCheckpoint())
-    finally t.release()
-  }
+                  trainSample: Int = 10000): (Long, DataFrame) =
+    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot,
+        dim, nCells, m, codebookK, coarseIters, pqIters, trainSample),
+      s"IVFADC epoch under $indexRoot")(answerPlan(_, _, k, nProbe))
 
-  /** The probe plan over a LIVE IVFADC handle (caller owns the handle's
-    * lifetime; the result's lineage reads its coded frames). */
-  private def answerPlan(queries: DataFrame,
-                         idx: graft.operators.Similarity.IvfPqIndex,
+  /** The probe plan over a LIVE view (the caller owns its lifetime; the
+    * result's lineage reads its coded frames). */
+  private def answerPlan(queries: DataFrame, t: IvfPqTieredStream.Tiered,
                          k: Int, nProbe: Int): DataFrame =
     graft.operators.Similarity
-      .ivfPqProbe(idx, queries, "qid", "qvec", k, nProbe)
+      .ivfPqProbe(t.index, queries, "qid", "qvec", k, nProbe)
       .select(col("qid"), col("rank"), col("nid"), col("adc"))
 
   /** A standing pin on the newest committed tiered view. */
-  def tieredPinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+  def tieredPinFor(spark: SparkSession, indexRoot: String,
                    dim: Int, nCells: Int = 8, m: Int = 4, codebookK: Int = 8,
                    coarseIters: Int = 4, pqIters: Int = 4,
                    trainSample: Int = 10000)
@@ -65,33 +54,20 @@ object IvfPqServeStream {
         .map(t => t.epochId -> t),
       (t: IvfPqTieredStream.Tiered) => t.release())
 
-  /** Start the serving stream against the tiered root: `queries` (a
-    * streaming `(qid, qvec)` frame) → per-batch two-stage probe → one
+  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+    * `(qid, qvec)` frame) → per-batch two-stage probe → one
     * `batch=<batchId>` parquet directory each under `outDir`, rows
-    * stamped with the answering tiered epoch id (the newest commit in
-    * EITHER tier). Pin lifetime and sink contract as the siblings. */
+    * stamped with the tiered epoch id (the newest commit in EITHER
+    * tier). */
   def startTiered(queries: DataFrame, indexRoot: String, outDir: String,
                   checkpointDir: String, dim: Int, k: Int = 5,
                   nProbe: Int = 2, nCells: Int = 8,
                   m: Int = 4, codebookK: Int = 8,
                   coarseIters: Int = 4, pqIters: Int = 4,
                   trainSample: Int = 10000,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = tieredPinFor(spark, indexRoot, dim, nCells, m, codebookK,
-      coarseIters, pqIters, trainSample)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, t) = pin.get()
-          answerPlan(batch, t.index, k, nProbe)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    EpochPin.serve("ivfpq", queries, tieredPinFor(queries.sparkSession,
+        indexRoot, dim, nCells, m, codebookK, coarseIters, pqIters,
+        trainSample),
+      outDir, checkpointDir, trigger)(answerPlan(_, _, k, nProbe))
 }

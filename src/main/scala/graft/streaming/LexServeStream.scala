@@ -1,69 +1,45 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The QUERY side of the lexical epoch roll: answer a stream of search
-  * queries against the NEWEST committed postings epoch, batch by batch —
-  * while [[LexEpochStream]] (a separate single-writer stream) keeps
+/** The QUERY side of the lexical tiered roll: answer a stream of search
+  * queries against the NEWEST committed postings view, batch by batch —
+  * while [[LexTieredStream]] (a separate single-writer stream) keeps
   * rolling the index underneath. Together they close the retrieval
   * family's serve loop: ingest folds epochs, serving probes them, and a
   * mid-stream roll changes answers at the next micro-batch boundary —
   * never mid-batch (each batch pins ONE epoch).
   *
-  * Safety under concurrent rolls: [[LexEpochStream.loadCurrent]] only
-  * sees epochs with a committed marker, and retention's `keepEpochs`
-  * grace window (see the roll's reader contract) guarantees the pinned
-  * epoch's files outlive the batch. The per-batch epoch load is
-  * zero-job (IndexStore meta peek + lazy parquet); the probe pays only
-  * query-term postings work (t37's plan shape).
-  *
-  * Replay idempotence: [[start]] writes each batch's answers to its own
-  * `batch=<id>` directory with overwrite, so a replayed batch rewrites
-  * its directory instead of appending duplicates. Answers carry the
-  * epoch that produced them — a replay AFTER a roll may legitimately
-  * re-answer under the newer epoch, and the recorded `epoch_id` makes
-  * that visible instead of silent. */
+  * The probe pays only query-term postings work (t37's plan shape); the
+  * pin and sink contract are [[EpochPin.serve]]'s. */
 object LexServeStream {
 
   /** Answer ONE batch of `(qid LONG, qtext STRING)` queries against the
-    * newest committed epoch under `indexRoot`: per-query BM25 top-k,
-    * t37's exact arithmetic. Returns `(epochId, answers)` where answers
-    * `(qid, rank, doc_id, score_scaled, n_terms)` is EAGERLY
-    * locally-checkpointed — blocks computed executor-side before the
-    * epoch's frames are released, so the result outlives the epoch (and
-    * retention pruning its directory) without ever round-tripping the
-    * driver. This is the serving hot path: the earlier collect+
-    * parallelize shape shipped k×|batch| rows through the driver every
-    * micro-batch (r11 verdict). The caller owns the checkpoint blocks —
-    * release with [[graft.operators.Checkpoints.release]] once written
-    * (the streaming sink below does). Pure batch logic — unit-testable
-    * without a stream. */
+    * newest committed view under `indexRoot`: per-query BM25 top-k, t37's
+    * exact arithmetic. Returns `(epochId, answers)` where answers
+    * `(qid, rank, doc_id, score_scaled, n_terms)` is eagerly
+    * locally-checkpointed ([[EpochPin.once]]) — the serving hot path
+    * ships no k×|batch| rows through the driver. Pure batch logic —
+    * unit-testable without a stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, k: Int = 5)
-      : (Long, DataFrame) = {
-    val spark = queries.sparkSession
-    val (epochId, idx) = LexEpochStream.loadCurrent(spark, indexRoot)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed postings epoch under $indexRoot — bootstrap the " +
-          "roll (LexEpochStream) before serving"))
-    try (epochId, answerPlan(queries, idx, k).localCheckpoint())
-    finally idx.release() // eager checkpoint — computed before release
-  }
+      : (Long, DataFrame) =
+    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot),
+      s"postings epoch under $indexRoot")(answerPlan(_, _, k))
 
-  /** The probe plan itself — per-query BM25 top-k over a LIVE index
-    * handle (caller owns the handle's lifetime; the result's lineage
-    * reads the index frames). */
-  private def answerPlan(queries: DataFrame,
-                         idx: graft.operators.Postings.Index,
+  /** The probe plan itself — per-query BM25 top-k over a LIVE view (the
+    * caller owns its lifetime; the result's lineage reads the index
+    * frames). */
+  private def answerPlan(queries: DataFrame, t: LexTieredStream.Tiered,
                          k: Int): DataFrame = {
     val qterms = queries
       .select(col("qid"),
         explode(array_distinct(split(col("qtext"), " "))).as("tok"))
       .filter(col("tok") =!= "")
     val agg = graft.queries.TextQueries
-      .bm25ScoresOverIndex(idx, qterms, excludeSelf = false)
+      .bm25ScoresOverIndex(t.index, qterms, excludeSelf = false)
     graft.plans.TopK.perKey(agg, Seq("qid"),
         Seq("score_scaled" -> false, "doc_id" -> true), k)
       .withColumn("rank", row_number().over(
@@ -73,25 +49,12 @@ object LexServeStream {
         col("score_scaled"), col("n_terms"))
   }
 
-  /** A standing pin on the newest committed epoch for the streaming
-    * serve path ([[EpochPin]]: staleness check per batch, reload only on
-    * a roll). */
-  def pinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String)
-      : EpochPin[graft.operators.Postings.Index] =
-    new EpochPin(
-      () => LexEpochStream.epochs(spark, indexRoot).headOption,
-      () => LexEpochStream.loadCurrent(spark, indexRoot),
-      (i: graft.operators.Postings.Index) => i.release())
-
-  /** [[pinFor]] against a TIERED root ([[LexTieredStream]]) — the
-    * production pairing on the LSM roll. The staleness check is the
-    * tiered `currentEpochId` (a minor or major commit bumps it); a swap
-    * reloads the merged view, paying [[graft.operators.Postings.mergeTiers]]'s
-    * three doc-grain stats jobs ONCE per roll commit, not per batch.
-    * Because mergeTiers replays the foldDocs chain exactly — edits,
-    * deletes, closed-form stats — BM25 answers are identical to serving
-    * the flat roll of the same batches. */
-  def tieredPinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String)
+  /** A standing pin on the newest committed view ([[EpochPin]]). The
+    * staleness check is the tiered `currentEpochId` (a minor or major
+    * commit bumps it); a swap reloads the merged view, paying
+    * [[graft.operators.Postings.mergeTiers]]'s three doc-grain stats jobs
+    * ONCE per roll commit, not per batch. */
+  def tieredPinFor(spark: SparkSession, indexRoot: String)
       : EpochPin[LexTieredStream.Tiered] =
     new EpochPin(
       () => LexTieredStream.currentEpochId(spark, indexRoot),
@@ -99,58 +62,13 @@ object LexServeStream {
         .map(t => t.epochId -> t),
       (t: LexTieredStream.Tiered) => t.release())
 
-  /** [[start]] against a tiered root — same sink contract, same pin
-    * lifetime, answers stamped with the tiered epoch id. */
+  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+    * `(qid, qtext)` frame) → per-batch probe → one `batch=<batchId>`
+    * parquet directory each under `outDir`, rows stamped with the
+    * answering epoch. */
   def startTiered(queries: DataFrame, indexRoot: String, outDir: String,
                   checkpointDir: String, k: Int = 5,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = tieredPinFor(spark, indexRoot)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, t) = pin.get()
-          answerPlan(batch, t.index, k)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
-
-  /** Start the serving stream: `queries` (a streaming DataFrame of
-    * `(qid, qtext)` rows) → per-batch probe → one `batch=<batchId>`
-    * parquet directory each under `outDir`, rows stamped with the
-    * answering epoch.
-    *
-    * The epoch handle is PINNED across batches ([[EpochPin]]): each batch
-    * pays a zero-job staleness check and reloads only when a roll
-    * committed since the last batch — the r12 serve floor was dominated
-    * by the per-batch reload + cache churn. Because the pin keeps the
-    * epoch's frames alive through the batch's write, the streaming path
-    * needs no per-batch `localCheckpoint` either: answers land in parquet
-    * before the pin can swap (the swap happens at the NEXT batch's
-    * staleness check). The pin closes when the query terminates. */
-  def start(queries: DataFrame, indexRoot: String, outDir: String,
-            checkpointDir: String, k: Int = 5,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = pinFor(spark, indexRoot)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, idx) = pin.get()
-          answerPlan(batch, idx, k)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    EpochPin.serve("lex", queries, tieredPinFor(queries.sparkSession, indexRoot),
+      outDir, checkpointDir, trigger)(answerPlan(_, _, k))
 }

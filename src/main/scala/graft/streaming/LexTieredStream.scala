@@ -6,9 +6,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{Checkpoints, IndexStore, Postings}
 
 /** TIERED (L0/L1) epoch commits for the LEXICAL (BM25 postings) family on
-  * the shared [[TieredRoll]]. [[LexEpochStream]] pays an O(|corpus
-  * postings|) rewrite per batch, and unlike the other families a lex batch
-  * can EDIT or DELETE standing documents, so tiers must shadow, not just
+  * the shared [[TieredRoll]]: a batch commits its delta, never an
+  * O(|corpus postings|) rewrite. Unlike the other families a lex batch can
+  * EDIT or DELETE standing documents, so tiers must shadow, not just
   * append.
   *
   *  - **Bootstrap**: the first non-empty batch builds and commits the
@@ -24,7 +24,8 @@ import graft.operators.{Checkpoints, IndexStore, Postings}
   *
   * Readers ([[loadCurrent]] → [[Tiered]]) get an ordinary
   * [[Postings.Index]]; because [[Postings.mergeTiers]] replays the foldDocs
-  * chain exactly, ranked answers equal the flat roll's (t40's oracle
+  * chain exactly, ranked answers equal a `Postings.build` + `foldDocs`
+  * chain over the same batches (t40's oracle
   * certifies the lifecycle, edits and deletes included). Unlike the other
   * tiered reads, a lex load pays THREE doc-grain jobs (the closed-form
   * nDocs/sumDl stats must be exact Longs); probes after the load are

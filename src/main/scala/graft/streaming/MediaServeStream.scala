@@ -1,41 +1,34 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Multimodal
 
 /** The QUERY side of the media tier — the serve loop for
-  * [[MediaTieredStream]], tiered-only by design (the media family has no
-  * flat epoch roll: a hash frame's "flat rebuild" is just its major).
-  * Answer a stream of `(media_id, media)` probe images against the
-  * NEWEST committed tiered aHash view while the roll commits underneath:
-  * each micro-batch pays |Δ| decode + aHash for its own images only, the
-  * standing side is the pinned hash-frame view ([[EpochPin]] — swap on a
-  * minor OR major commit, never mid-batch), and the probe is the banded
-  * Hamming join ([[Multimodal.nearDupProbeFromHashes]] — no probe×probe
-  * pairs, probe side broadcast, standing side never re-decoded).
+  * [[MediaTieredStream]]. Answer a stream of `(media_id, media)` probe
+  * images against the NEWEST committed tiered aHash view while the roll
+  * commits underneath: each micro-batch pays |Δ| decode + aHash for its
+  * own images only, the standing side is the pinned hash-frame view
+  * ([[EpochPin]] — swap on a minor OR major commit, never mid-batch), and
+  * the probe is the banded Hamming join
+  * ([[Multimodal.nearDupProbeFromHashes]] — no probe×probe pairs, probe
+  * side broadcast, standing side never re-decoded).
   *
   * Probe ids should come from a namespace disjoint from the corpus (the
-  * sibling servers' contract). Same sink contract too: per-batch
-  * `batch=<id>` overwrite directories, rows stamped with the answering
-  * epoch. */
+  * sibling servers' contract). The pin and sink contract are
+  * [[EpochPin.serve]]'s. */
 object MediaServeStream {
 
   /** Answer ONE batch of `(media_id LONG, media BINARY)` probe images
     * against the newest committed tiered view under `indexRoot`. Returns
     * `(epochId, answers)` with answers `(qid, media_id, hamming)` eagerly
-    * checkpointed. Pure batch logic — unit-testable without a stream. */
+    * checkpointed ([[EpochPin.once]]). Pure batch logic — unit-testable
+    * without a stream. */
   def answerBatch(probes: DataFrame, indexRoot: String, maxHamming: Int = 3)
-      : (Long, DataFrame) = {
-    val view = MediaTieredStream.loadCurrent(probes.sparkSession, indexRoot)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed media epoch under $indexRoot — bootstrap the roll " +
-          "(MediaTieredStream) before serving"))
-    (view.epochId,
-      answerPlan(probes, view, maxHamming).localCheckpoint())
-  }
+      : (Long, DataFrame) =
+    EpochPin.once(probes, tieredPinFor(probes.sparkSession, indexRoot),
+      s"media epoch under $indexRoot")(answerPlan(_, _, maxHamming))
 
   private def answerPlan(probes: DataFrame, view: MediaTieredStream.Tiered,
                          maxHamming: Int): DataFrame =
@@ -53,26 +46,12 @@ object MediaServeStream {
         .map(t => t.epochId -> t),
       (_: MediaTieredStream.Tiered) => ())
 
-  /** Start the serving stream: `probes` (a streaming `(media_id, media)`
-    * frame) → per-batch banded Hamming probe → one `batch=<batchId>`
-    * parquet directory each under `outDir`. */
+  /** Start the serving stream ([[EpochPin.serve]]): `probes` (a streaming
+    * `(media_id, media)` frame) → per-batch banded Hamming probe → one
+    * `batch=<batchId>` parquet directory each under `outDir`. */
   def startTiered(probes: DataFrame, indexRoot: String, outDir: String,
                   checkpointDir: String, maxHamming: Int = 3,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = probes.sparkSession
-    val pin = tieredPinFor(spark, indexRoot)
-    EpochPin.bound(spark, pin) {
-      probes.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, view) = pin.get()
-          answerPlan(batch, view, maxHamming)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    EpochPin.serve("media", probes, tieredPinFor(probes.sparkSession, indexRoot),
+      outDir, checkpointDir, trigger)(answerPlan(_, _, maxHamming))
 }

@@ -1,73 +1,50 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The QUERY side of the PQ epoch roll — the fourth serve loop (lexical,
+/** The QUERY side of the PQ tiered roll — the fourth serve loop (lexical,
   * graph, vector, now the quantized tier): answer a stream of
-  * `(qid, qvec)` ADC probes against the NEWEST committed PQ epoch while
-  * [[PqEpochStream]] (flat) or [[PqTieredStream]] (L0/L1) keeps rolling
-  * underneath. Each micro-batch pins ONE epoch ([[EpochPin]]) — a roll
-  * commits land at the next batch boundary, never mid-batch.
+  * `(qid, qvec)` ADC probes against the NEWEST committed PQ view while
+  * [[PqTieredStream]] keeps rolling underneath. Each micro-batch pins ONE
+  * epoch — roll commits land at the next batch boundary, never mid-batch.
   *
   * The probe is [[graft.operators.Similarity.pqTopK]] — ADC scoring with
-  * the codebooks as codegen literals over the epoch's coded frame,
+  * the codebooks as codegen literals over the view's coded frame,
   * bounded-heap top-k; work is corpus-codes × m table lookups, zero
   * full-precision vector reads. Note pqTopK's query-by-corpus-member
   * contract: a candidate whose nid EQUALS the probe's qid is excluded —
   * serve external query streams from an id namespace disjoint from the
-  * corpus ids. Same sink contract as the sibling servers: per-batch
-  * `batch=<id>` overwrite directories, rows stamped with the answering
-  * epoch. */
+  * corpus ids. The pin and sink contract are [[EpochPin.serve]]'s. */
 object PqServeStream {
 
   /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
-    * the newest committed flat epoch under `indexRoot`. Returns
+    * the newest committed view under `indexRoot`. Returns
     * `(epochId, answers)` with answers `(qid, rank, nid, adc)` eagerly
-    * checkpointed. Pure batch logic — unit-testable without a stream. */
+    * checkpointed ([[EpochPin.once]]). Pure batch logic — unit-testable
+    * without a stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, dim: Int,
                   k: Int = 5, m: Int = 4, codebookK: Int = 8,
                   iters: Int = 4, trainSample: Int = 10000)
-      : (Long, DataFrame) = {
-    val (epochId, idx) = PqEpochStream
-      .loadCurrent(queries.sparkSession, indexRoot, dim, m, codebookK,
-        iters, trainSample)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed PQ epoch under $indexRoot — bootstrap the roll " +
-          "(PqEpochStream) before serving"))
-    try (epochId, answerPlan(queries, idx, k).localCheckpoint())
-    finally idx.release()
-  }
+      : (Long, DataFrame) =
+    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot,
+        dim, m, codebookK, iters, trainSample),
+      s"PQ epoch under $indexRoot")(answerPlan(_, _, k))
 
-  /** The probe plan over a LIVE PQ handle (caller owns the handle's
-    * lifetime; the result's lineage reads its coded frames). */
-  private def answerPlan(queries: DataFrame,
-                         idx: graft.operators.Similarity.PqIndex,
+  /** The probe plan over a LIVE view (the caller owns its lifetime; the
+    * result's lineage reads its coded frames). */
+  private def answerPlan(queries: DataFrame, t: PqTieredStream.Tiered,
                          k: Int): DataFrame =
     graft.operators.Similarity
-      .pqTopK(idx, queries, "qid", "qvec", k)
+      .pqTopK(t.index, queries, "qid", "qvec", k)
       .select(col("qid"), col("rank"), col("nid"), col("adc"))
 
-  /** A standing pin on the newest committed FLAT epoch
-    * ([[PqEpochStream]]). */
-  def pinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
-             dim: Int, m: Int = 4, codebookK: Int = 8, iters: Int = 4,
-             trainSample: Int = 10000)
-      : EpochPin[graft.operators.Similarity.PqIndex] =
-    new EpochPin(
-      () => PqEpochStream.epochs(spark, indexRoot, dim, m, codebookK,
-        iters, trainSample).headOption,
-      () => PqEpochStream.loadCurrent(spark, indexRoot, dim, m, codebookK,
-        iters, trainSample),
-      (i: graft.operators.Similarity.PqIndex) => i.release())
-
-  /** [[pinFor]] against a TIERED root ([[PqTieredStream]]): the
+  /** A standing pin on the newest committed view ([[EpochPin]]): the
     * staleness check is the tiered `currentEpochId` (a minor OR a major
-    * bumps it), a swap reloads the merged ≤2-tier view. The tiered view
-    * IS an ordinary PqIndex encoded under the same codebooks, so answers
-    * are bit-identical to serving the flat roll of the same batches. */
-  def tieredPinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+    * bumps it), a swap reloads the merged ≤2-tier view — an ordinary
+    * PqIndex encoded under the standing codebooks. */
+  def tieredPinFor(spark: SparkSession, indexRoot: String,
                    dim: Int, m: Int = 4, codebookK: Int = 8, iters: Int = 4,
                    trainSample: Int = 10000)
       : EpochPin[PqTieredStream.Tiered] =
@@ -78,56 +55,16 @@ object PqServeStream {
         iters, trainSample).map(t => t.epochId -> t),
       (t: PqTieredStream.Tiered) => t.release())
 
-  /** Start the serving stream against a FLAT root: `queries` (a
-    * streaming `(qid, qvec)` frame) → per-batch ADC probe → one
-    * `batch=<batchId>` parquet directory each under `outDir`. Epoch
-    * handle PINNED across batches, no per-batch `localCheckpoint` —
-    * the [[LexServeStream.start]] rationale, identically. */
-  def start(queries: DataFrame, indexRoot: String, outDir: String,
-            checkpointDir: String, dim: Int, k: Int = 5,
-            m: Int = 4, codebookK: Int = 8, iters: Int = 4,
-            trainSample: Int = 10000,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = pinFor(spark, indexRoot, dim, m, codebookK, iters, trainSample)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, idx) = pin.get()
-          answerPlan(batch, idx, k)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
-
-  /** [[start]] against a tiered root — same sink contract, same pin
-    * lifetime, answers stamped with the tiered epoch id (the newest
-    * commit in EITHER tier). */
+  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+    * `(qid, qvec)` frame) → per-batch ADC probe → one `batch=<batchId>`
+    * parquet directory each under `outDir`, rows stamped with the tiered
+    * epoch id (the newest commit in EITHER tier). */
   def startTiered(queries: DataFrame, indexRoot: String, outDir: String,
                   checkpointDir: String, dim: Int, k: Int = 5,
                   m: Int = 4, codebookK: Int = 8, iters: Int = 4,
                   trainSample: Int = 10000,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = tieredPinFor(spark, indexRoot, dim, m, codebookK, iters,
-      trainSample)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, t) = pin.get()
-          answerPlan(batch, t.index, k)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    EpochPin.serve("pq", queries, tieredPinFor(queries.sparkSession,
+        indexRoot, dim, m, codebookK, iters, trainSample),
+      outDir, checkpointDir, trigger)(answerPlan(_, _, k))
 }

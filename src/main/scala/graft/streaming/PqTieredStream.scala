@@ -7,8 +7,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{Checkpoints, IndexStore, Similarity}
 
 /** TIERED (L0/L1) epoch commits for the PQ family on the shared
-  * [[TieredRoll]]: [[PqEpochStream]] pays an O(|corpus codes|) rewrite per
-  * batch; here a batch commits only its DELTA codes.
+  * [[TieredRoll]]: a batch commits only its DELTA codes, never an
+  * O(|corpus codes|) rewrite.
   *
   *  - **Bootstrap**: the first non-empty batch trains the per-subspace
   *    codebooks ([[Similarity.pqBuild]]) and commits the first L1 —
@@ -23,8 +23,9 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   *
   * Readers ([[loadCurrent]] → [[Tiered]]) get an ordinary
   * [[Similarity.PqIndex]] — ADC probes and drift audits work on the
-  * tiered view unchanged, codes bit-identical to the flat
-  * [[PqEpochStream]] append chain (v28's oracle certifies the lifecycle).
+  * tiered view unchanged, codes bit-identical to the `pqBuild` +
+  * `pqAppend` chain over the same batches (v28's oracle certifies the
+  * lifecycle).
   * Epochs store int8 CODES ONLY, so the standing state cannot re-derive
   * training vectors: retraining is [[retrainMajor]] over the retained
   * source corpus. Parameter-keyed epochs (`roll_dim/m/k/iters/train_sample`). */

@@ -8,8 +8,7 @@ import graft.operators.IndexStore
 
 /** The ONE tiered (L0/L1) epoch roll under the seven index families'
   * `*TieredStream` façades (graph, vector, lexical, PQ, IVFADC, media,
-  * signature). The flat rolls pay an O(|corpus|) index rewrite per batch
-  * for durability; here a batch commits only its DELTA:
+  * signature), and the only roll design: a batch commits only its DELTA.
   *
   *  - **L0 (minor)**: the batch, encoded by the family, lands as its own
   *    committed stage epoch under `root/l0/epoch=<id>` — an O(|Δ|) write.

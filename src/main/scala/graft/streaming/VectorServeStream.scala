@@ -1,84 +1,57 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The QUERY side of the vector epoch roll — completing the serve loop
-  * for the third index family (lexical → [[LexServeStream]], graph →
-  * [[GraphServeStream]], vector → this): answer a stream of
-  * `(qid, qvec)` ANN probes against the NEWEST committed IVF epoch while
-  * [[VectorEpochStream]] (a separate single-writer stream) keeps rolling
-  * — appending batches, retraining on drift — underneath. Each
-  * micro-batch pins ONE epoch, so a roll (or a drift-triggered retrain)
-  * changes answers at the next batch boundary, never mid-batch.
+/** The QUERY side of the vector tiered roll — the serve loop for the third
+  * index family (lexical → [[LexServeStream]], graph →
+  * [[GraphServeStream]], vector → this): answer a stream of `(qid, qvec)`
+  * ANN probes against the NEWEST committed IVF view while
+  * [[VectorTieredStream]] (a separate single-writer stream) keeps rolling
+  * — minors, majors, maintenance retrains — underneath. Each micro-batch
+  * pins ONE epoch, so a roll changes answers at the next batch boundary,
+  * never mid-batch.
   *
   * The probe is [[graft.operators.Similarity.ivfProbe]] — pure plan
-  * construction over the epoch's assignment: per query, `nProbe` cell
+  * construction over the view's assignment: per query, `nProbe` cell
   * scores against the (literal) centroids, a hash join on cell, exact
   * cosine over the candidates, bounded-heap top-k. Work is
-  * query-proportional in candidates; the epoch load is zero-job until
-  * probed. Note ivfProbe's query-by-corpus-member contract: a candidate
-  * whose nid EQUALS the probe's qid is excluded — serve external query
-  * streams from an id namespace disjoint from the corpus ids.
-  *
-  * Same lifetime contract as the other two servers: answers are EAGERLY
-  * locally-checkpointed before the epoch's frames release, so they
-  * outlive the release and retention pruning the epoch directory; the
-  * caller owns the blocks ([[graft.operators.Checkpoints.release]] once
-  * written — the streaming sink below does). Replay idempotence:
-  * per-batch `batch=<id>` overwrite directories, rows stamped with the
-  * answering epoch. */
+  * query-proportional in candidates; the load is zero-job until probed.
+  * Note ivfProbe's query-by-corpus-member contract: a candidate whose nid
+  * EQUALS the probe's qid is excluded — serve external query streams from
+  * an id namespace disjoint from the corpus ids. The pin and sink contract
+  * are [[EpochPin.serve]]'s. */
 object VectorServeStream {
 
   /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
-    * the newest committed epoch under `indexRoot`: per-query cosine
-    * top-k over the `nProbe` nearest cells. Returns `(epochId, answers)`
-    * with answers `(qid, rank, nid, sim)` eagerly checkpointed. Pure
-    * batch logic — unit-testable without a stream. */
+    * the newest committed view under `indexRoot`: per-query cosine top-k
+    * over the `nProbe` nearest cells. Returns `(epochId, answers)` with
+    * answers `(qid, rank, nid, sim)` eagerly checkpointed
+    * ([[EpochPin.once]]). Pure batch logic — unit-testable without a
+    * stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, k: Int = 5,
                   nProbe: Int = 4, nCells: Int = 16,
                   trainSample: Int = 10000, iters: Int = 8)
-      : (Long, DataFrame) = {
-    val (epochId, idx) = VectorEpochStream
-      .loadCurrent(queries.sparkSession, indexRoot, nCells, trainSample, iters)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed vector epoch under $indexRoot — bootstrap the roll " +
-          "(VectorEpochStream) before serving"))
-    try (epochId, answerPlan(queries, idx, k, nProbe).localCheckpoint())
-    finally idx.release() // eager checkpoint — computed before release
-  }
+      : (Long, DataFrame) =
+    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot,
+        nCells, trainSample, iters),
+      s"vector epoch under $indexRoot")(answerPlan(_, _, k, nProbe))
 
-  /** The probe plan over a LIVE IVF handle (caller owns the handle's
-    * lifetime; the result's lineage reads its assignment frames). */
-  private def answerPlan(queries: DataFrame,
-                         idx: graft.operators.Similarity.IvfIndex,
+  /** The probe plan over a LIVE view (the caller owns its lifetime; the
+    * result's lineage reads its assignment frames). */
+  private def answerPlan(queries: DataFrame, t: VectorTieredStream.Tiered,
                          k: Int, nProbe: Int): DataFrame =
     graft.operators.Similarity
-      .ivfProbe(idx, queries, "qid", "qvec", k, nProbe)
+      .ivfProbe(t.index, queries, "qid", "qvec", k, nProbe)
       .select(col("qid"), col("rank"), col("nid"), col("sim"))
 
-  /** A standing pin on the newest committed epoch for the streaming
-    * serve path ([[EpochPin]]: staleness check per batch, reload only on
-    * a roll). */
-  def pinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
-             nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8)
-      : EpochPin[graft.operators.Similarity.IvfIndex] =
-    new EpochPin(
-      () => VectorEpochStream.epochs(spark, indexRoot, nCells, trainSample,
-        iters).headOption,
-      () => VectorEpochStream.loadCurrent(spark, indexRoot, nCells,
-        trainSample, iters),
-      (i: graft.operators.Similarity.IvfIndex) => i.release())
-
-  /** [[pinFor]] against a TIERED root ([[VectorTieredStream]]) — the
-    * production pairing on the LSM roll: the staleness check is the
-    * tiered `currentEpochId` (a minor OR a major commit bumps it), and a
-    * swap reloads the merged ≤2-tier view. Because the tiered view IS an
+  /** A standing pin on the newest committed view ([[EpochPin]]): the
+    * staleness check is the tiered `currentEpochId` (a minor OR a major
+    * commit bumps it), and a swap reloads the merged ≤2-tier view — an
     * ordinary [[graft.operators.Similarity.IvfIndex]] assigned under the
-    * same centroids, answers are bit-identical to serving the flat roll
-    * of the same batches. */
-  def tieredPinFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+    * standing centroids. */
+  def tieredPinFor(spark: SparkSession, indexRoot: String,
                    nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8)
       : EpochPin[VectorTieredStream.Tiered] =
     new EpochPin(
@@ -88,53 +61,15 @@ object VectorServeStream {
         trainSample, iters).map(t => t.epochId -> t),
       (t: VectorTieredStream.Tiered) => t.release())
 
-  /** Start the serving stream: `queries` (a streaming `(qid, qvec)`
-    * frame) → per-batch probe → one `batch=<batchId>` parquet directory
-    * each under `outDir`, rows stamped with the answering epoch. Epoch
-    * handle PINNED across batches and no per-batch `localCheckpoint` —
-    * the [[LexServeStream.start]] rationale, identically. */
-  def start(queries: DataFrame, indexRoot: String, outDir: String,
-            checkpointDir: String, k: Int = 5, nProbe: Int = 4,
-            nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = pinFor(spark, indexRoot, nCells, trainSample, iters)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, idx) = pin.get()
-          answerPlan(batch, idx, k, nProbe)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
-
-  /** [[start]] against a tiered root — same sink contract, same pin
-    * lifetime, answers stamped with the tiered epoch id (the newest
-    * commit in EITHER tier). */
+  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+    * `(qid, qvec)` frame) → per-batch probe → one `batch=<batchId>`
+    * parquet directory each under `outDir`, rows stamped with the tiered
+    * epoch id (the newest commit in EITHER tier). */
   def startTiered(queries: DataFrame, indexRoot: String, outDir: String,
                   checkpointDir: String, k: Int = 5, nProbe: Int = 4,
                   nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = queries.sparkSession
-    val pin = tieredPinFor(spark, indexRoot, nCells, trainSample, iters)
-    EpochPin.bound(spark, pin) {
-      queries.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (epochId, t) = pin.get()
-          answerPlan(batch, t.index, k, nProbe)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-    }
-  }
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    EpochPin.serve("vector", queries, tieredPinFor(queries.sparkSession,
+        indexRoot, nCells, trainSample, iters),
+      outDir, checkpointDir, trigger)(answerPlan(_, _, k, nProbe))
 }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{Checkpoints, IndexStore, Similarity}
 
 /** TIERED (L0/L1) epoch commits for the VECTOR (IVF) family on the shared
-  * [[TieredRoll]] — its crash matrix, retention and epoch-id contract —
-  * closing the O(|corpus|) full-assignment rewrite per batch that
-  * [[VectorEpochStream]] pays for durability.
+  * [[TieredRoll]] — its crash matrix, retention and epoch-id contract: a
+  * batch commits only its delta assignment, never an O(|corpus|)
+  * full-assignment rewrite.
   *
   *  - **Bootstrap**: the first non-empty batch trains the coarse quantizer
   *    ([[Similarity.ivfBuild]]) and commits the first L1 — minors need
@@ -139,9 +139,9 @@ object VectorTieredStream {
   /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrain]]): fresh
     * centroids trained over the caller-supplied retained corpus
     * ([[Similarity.ivfBuild]]) and the re-assigned index committed as a
-    * new L1 generation. The flat [[VectorEpochStream]] retrains inline;
-    * here retraining is a deliberate maintenance window. `None` when no
-    * generation is standing. */
+    * new L1 generation — retraining is a deliberate maintenance window
+    * (or [[MaintenancePolicy]]'s drift trigger), never an ingest step.
+    * `None` when no generation is standing. */
   def retrainMajor(corpus: DataFrame, idCol: String, vecCol: String,
                    root: String, nCells: Int = 16, trainSample: Int = 10000,
                    iters: Int = 8): Option[Long] =

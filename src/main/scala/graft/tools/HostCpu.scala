@@ -60,6 +60,13 @@ object HostCpu {
     spinOnce(ms, threads)
   }
 
+  /** The bench's default healthy-box floor for [[spinScore]] on `cpus`
+    * cores. The 1800 floor was calibrated on a 32-core box (healthy
+    * ≥ ~2800, host bursts < 1500), and the score sums one spinning thread
+    * per core, so the floor scales with the core count: 225 on 4 cores,
+    * where a healthy box scores ~315. */
+  def defaultMinSpin(cpus: Int): Long = 1800L * cpus / 32
+
   /** Background capacity sampler: one daemon thread records a 50 ms
     * single-core spin score every `periodMs` for the life of the handle.
     * Endpoint scores miss mid-run dips (r9: bench endpoints read ~3100

@@ -92,57 +92,17 @@ object StreamBench {
     require(stateRows == total,
       s"agg sink folded $stateRows rows, staged $total — lost or doubled a batch")
 
-    // --- graph epoch roll (durable index maintenance path): the 1997
-    // co-purchase edges staged as nChunks drops; each micro-batch folds
-    // into the newest committed epoch and pays the O(|V|) epoch rewrite —
-    // the measured rate is the full maintenance cost per edge, fold +
-    // durability, not just the fold
+    // --- the 1997 co-purchase edges staged as nChunks drops for the
+    // graph rolls below
     val edges = graft.queries.CoreQueries.copurchasePairs(
       graft.io.Tables.load(spark, sfDir, "lineitem")
         .filter(year(col("l_shipdate")) === 1997)).distinct()
     val eCnt = edges.count()
     edges.repartition(nChunks).write.parquet(s"$tmp/edge_landing")
-    val grollSec = timed {
-      val q = graft.streaming.GraphEpochStream.start(
-        spark.readStream.schema(edges.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/edge_landing"),
-        s"$tmp/graph_epochs", s"$tmp/ckpt_groll")
-      awaitOrStop(q, "graph_roll")
-    }
-    val (_, hyb) = graft.streaming.GraphEpochStream.loadCurrent(spark,
-      s"$tmp/graph_epochs", dedup = true,
-      graft.operators.Adjacency.DefaultHubLimit)
-      .getOrElse(sys.error("graph roll committed no epoch"))
-    val foldedEdges = try hyb.edges.count() finally hyb.release()
-    require(foldedEdges == eCnt,
-      s"graph roll folded $foldedEdges edges, staged $eCnt")
 
-    // --- vector epoch roll (IVF maintenance path): the embeddings table
-    // as nChunks drops; batch 0 bootstrap-trains, the rest append — the
-    // rate includes per-epoch assignment + the O(|corpus|) epoch rewrite
-    val vecs = graft.io.Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val vCnt = vecs.count()
-    vecs.repartition(nChunks).write.parquet(s"$tmp/vec_landing")
-    val vrollSec = timed {
-      val q = graft.streaming.VectorEpochStream.start(
-        spark.readStream.schema(vecs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/vec_landing"),
-        "vec_id", "embedding", s"$tmp/vec_epochs", s"$tmp/ckpt_vroll",
-        nCells = 16)
-      awaitOrStop(q, "vector_roll")
-    }
-    val (_, ivf) = graft.streaming.VectorEpochStream.loadCurrent(spark,
-      s"$tmp/vec_epochs", nCells = 16)
-      .getOrElse(sys.error("vector roll committed no epoch"))
-    val foldedVecs = try ivf.assigned.count() finally ivf.release()
-    require(foldedVecs == vCnt,
-      s"vector roll folded $foldedVecs vectors, staged $vCnt")
-
-    // --- TIERED graph roll: the same staged edge drops through
-    // GraphTieredStream (L0 minors + majorEvery-th L1 compaction) — the
-    // streamed twin of TieredRollProbe's batch loop, so the artifact
-    // carries flat-vs-tiered at full micro-batch machinery cost
+    // --- TIERED graph roll: the staged edge drops through
+    // GraphTieredStream (L0 minors + majorEvery-th L1 compaction) at full
+    // micro-batch machinery cost
     val gtrollSec = timed {
       val q = graft.streaming.GraphTieredStream.start(
         spark.readStream.schema(edges.schema)
@@ -189,32 +149,16 @@ object StreamBench {
     else require(gmEdges >= eCnt - gmDead && gmEdges < eCnt,
       s"maintained roll kept $gmEdges of $eCnt with $gmDead tombstoned")
 
-    // --- raw-line graph roll (fact-stream derivation path): the 1997
-    // order lines staged as nChunks drops; each batch derives its delta
-    // edges against the standing lines (cross-batch pairs included) and
-    // folds — the rate is per RAW LINE, the full ingest-to-index cost
+    // --- TIERED raw-line graph roll (fact-stream derivation path): the
+    // 1997 order lines staged as nChunks drops; each batch derives its
+    // delta edges against the standing lines (cross-batch pairs included)
+    // and folds them as an L0 minor — the rate is per RAW LINE, the full
+    // ingest-to-index cost
     val rawLines = graft.io.Tables.load(spark, sfDir, "lineitem")
       .filter(year(col("l_shipdate")) === 1997)
       .select(col("l_orderkey"), col("l_partkey"))
     val rlCnt = rawLines.count()
     rawLines.repartition(nChunks).write.parquet(s"$tmp/line_landing")
-    val crollSec = timed {
-      val q = graft.streaming.CopurchaseStream.start(
-        spark.readStream.schema(rawLines.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/line_landing"),
-        s"$tmp/cps_lines", s"$tmp/cps_epochs", s"$tmp/ckpt_croll")
-      awaitOrStop(q, "line_graph_roll")
-    }
-    val (_, cps) = graft.streaming.GraphEpochStream.loadCurrent(spark,
-      s"$tmp/cps_epochs", dedup = true,
-      graft.operators.Adjacency.DefaultHubLimit)
-      .getOrElse(sys.error("copurchase roll committed no epoch"))
-    val cpsEdges = try cps.edges.count() finally cps.release()
-    require(cpsEdges == eCnt,
-      s"raw-line roll derived $cpsEdges edges, batch pair-gen has $eCnt")
-
-    // --- TIERED raw-line roll: same staged drops, deltas landing as L0
-    // minors instead of the flat per-batch index rewrite
     val ctrollSec = timed {
       val q = graft.streaming.CopurchaseStream.startTiered(
         spark.readStream.schema(rawLines.schema)
@@ -230,7 +174,14 @@ object StreamBench {
     require(ctEdges == eCnt,
       s"tiered raw-line roll derived $ctEdges edges, batch pair-gen has $eCnt")
 
-    // --- TIERED vector roll: the same staged embedding drops through
+    // --- the embeddings table staged as nChunks drops for the vector,
+    // PQ and IVFADC rolls below
+    val vecs = graft.io.Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val vCnt = vecs.count()
+    vecs.repartition(nChunks).write.parquet(s"$tmp/vec_landing")
+
+    // --- TIERED vector roll: the staged embedding drops through
     // VectorTieredStream (bootstrap L1, minors under standing centroids,
     // majorEvery-th union major)
     val vtrollSec = timed {
@@ -301,9 +252,8 @@ object StreamBench {
         .getOrElse(sys.error("retrain major found no standing generation"))
     }
 
-    // --- lexical epoch roll (postings maintenance path): the documents
-    // table as nChunks drops; batch 0 bootstrap-builds, the rest fold —
-    // the rate includes |Δ| tokenization + the compact-frame epoch rewrite
+    // --- the documents table staged as nChunks drops for the lex and
+    // signature rolls below
     val docsT = graft.io.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val dCnt = docsT.count()
@@ -311,22 +261,8 @@ object StreamBench {
     // counts token-bearing docs only
     val dTok = docsT.filter(trim(col("text")) =!= "").count()
     docsT.repartition(nChunks).write.parquet(s"$tmp/doc_landing")
-    val lrollSec = timed {
-      val q = graft.streaming.LexEpochStream.start(
-        spark.readStream.schema(docsT.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/doc_landing"),
-        s"$tmp/lex_epochs", s"$tmp/ckpt_lroll")
-      awaitOrStop(q, "lex_roll")
-    }
-    val (_, post) = graft.streaming.LexEpochStream.loadCurrent(spark,
-      s"$tmp/lex_epochs")
-      .getOrElse(sys.error("lex roll committed no epoch"))
-    val foldedDocs = post.nDocs
-    post.release()
-    require(foldedDocs == dTok,
-      s"lex roll folded $foldedDocs docs, staged $dTok token-bearing")
 
-    // --- TIERED lex roll: the same staged document drops through
+    // --- TIERED lex roll: the staged document drops through
     // LexTieredStream (self-contained tierFrame minors, mergeTiers majors)
     val ltrollSec = timed {
       val q = graft.streaming.LexTieredStream.start(
@@ -387,8 +323,8 @@ object StreamBench {
     require(mtImgs == mCnt,
       s"tiered media roll hashed $mtImgs images, staged $mCnt")
 
-    // --- serve-side rates: the three serving streams probe the epochs
-    // the roll sections just committed (the production pairing — a
+    // --- serve-side rates: the five serving streams probe the tiered
+    // roots the roll sections just committed (the production pairing — a
     // single-writer roll underneath, a reader stream on top). Each
     // workload runs TWICE — staged as nChunks drops and again as 32 —
     // with the same total queries, so the two timings solve
@@ -433,28 +369,27 @@ object StreamBench {
         concat_ws(" ", slice(split(col("text"), " "), 1, 2)).as("qtext"))
     val (lqCnt, lsecLo, lsecHi, lfloor, lmarg) =
       serveSection("lexq", lexQ, (in, out, ck) =>
-        graft.streaming.LexServeStream.start(
+        graft.streaming.LexServeStream.startTiered(
           spark.readStream.schema(lexQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
-          s"$tmp/lex_epochs", out, ck))
+          s"$tmp/lex_tiered", out, ck))
 
     // graph serving: 2000 neighbor-recommendation probes over sources of
     // the rolled co-purchase graph
-    val (_, gsrv) = graft.streaming.GraphEpochStream.loadCurrent(spark,
-      s"$tmp/cps_epochs", dedup = true,
-      graft.operators.Adjacency.DefaultHubLimit)
+    val gsrv = graft.streaming.GraphTieredStream.loadCurrent(spark,
+      s"$tmp/cpst_epochs")
       .getOrElse(sys.error("no co-purchase epoch to serve"))
     val graphQ =
-      try gsrv.srcs.limit(2000)
+      try gsrv.mergedEdges.select(col("src").as("node")).distinct().limit(2000)
         .select((col("node") + 1000000L).as("qid"), col("node"))
         .localCheckpoint() // pin before release — the q65 lifetime rule
       finally gsrv.release()
     val (gqCnt, gsecLo, gsecHi, gfloor, gmarg) =
       serveSection("graphq", graphQ, (in, out, ck) =>
-        graft.streaming.GraphServeStream.start(
+        graft.streaming.GraphServeStream.startTiered(
           spark.readStream.schema(graphQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
-          s"$tmp/cps_epochs", out, ck))
+          s"$tmp/cpst_epochs", out, ck))
     graft.operators.Checkpoints.release(graphQ)
 
     // vector serving: 500 ANN probes (query ids offset out of the corpus
@@ -463,10 +398,10 @@ object StreamBench {
       .select((col("vec_id") + 1000000L).as("qid"), col("embedding").as("qvec"))
     val (vqCnt, vsecLo, vsecHi, vfloor, vmarg) =
       serveSection("vecq", vecQ, (in, out, ck) =>
-        graft.streaming.VectorServeStream.start(
+        graft.streaming.VectorServeStream.startTiered(
           spark.readStream.schema(vecQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
-          s"$tmp/vec_epochs", out, ck, nCells = 16))
+          s"$tmp/vec_tiered", out, ck, nCells = 16))
 
     // quantized-tier serving: the same ANN probes against the PQ and
     // IVFADC tiered roots just rolled (ADC / coarse-pruned ADC probes)
@@ -495,20 +430,16 @@ object StreamBench {
       f"""{"metric":"stream_events_per_sec","events":$total,"chunks":$nChunks,""" +
         f""""windowed":{"sec":$winSec%.2f,"rate":${total / winSec}%.0f},""" +
         f""""agg_sink":{"sec":$sinkSec%.2f,"rate":${total / sinkSec}%.0f},""" +
-        f""""graph_roll":{"edges":$eCnt,"sec":$grollSec%.2f,"rate":${eCnt / grollSec}%.0f},""" +
         f""""graph_tiered_roll":{"edges":$eCnt,"sec":$gtrollSec%.2f,"rate":${eCnt / gtrollSec}%.0f},""" +
         f""""graph_tiered_maint_roll":{"edges":$eCnt,"dead":$gmDead,""" +
         f""""sec":$gmrollSec%.2f,"rate":${eCnt / gmrollSec}%.0f,""" +
         f""""maint_overhead_sec":${gmrollSec - gtrollSec}%.2f},""" +
-        f""""vector_roll":{"vectors":$vCnt,"sec":$vrollSec%.2f,"rate":${vCnt / vrollSec}%.0f},""" +
         f""""vector_tiered_roll":{"vectors":$vCnt,"sec":$vtrollSec%.2f,"rate":${vCnt / vtrollSec}%.0f},""" +
         f""""pq_tiered_roll":{"vectors":$vCnt,"sec":$ptrollSec%.2f,"rate":${vCnt / ptrollSec}%.0f},""" +
         f""""ivfpq_tiered_roll":{"vectors":$vCnt,"sec":$itrollSec%.2f,"rate":${vCnt / itrollSec}%.0f},""" +
         f""""ivfpq_compact_major":{"vectors":$vCnt,"sec":$icompactSec%.2f},""" +
         f""""ivfpq_retrain_major":{"vectors":$vCnt,"sec":$iretrainSec%.2f},""" +
-        f""""line_graph_roll":{"lines":$rlCnt,"sec":$crollSec%.2f,"rate":${rlCnt / crollSec}%.0f},""" +
         f""""line_graph_tiered_roll":{"lines":$rlCnt,"sec":$ctrollSec%.2f,"rate":${rlCnt / ctrollSec}%.0f},""" +
-        f""""lex_roll":{"docs":$dCnt,"sec":$lrollSec%.2f,"rate":${dCnt / lrollSec}%.0f},""" +
         f""""lex_tiered_roll":{"docs":$dCnt,"sec":$ltrollSec%.2f,"rate":${dCnt / ltrollSec}%.0f},""" +
         f""""signature_tiered_roll":{"docs":$stDocs,"sec":$strollSec%.2f,"rate":${stDocs / strollSec}%.0f},""" +
         f""""media_tiered_roll":{"images":$mCnt,"sec":$mtrollSec%.2f,"rate":${mCnt / mtrollSec}%.0f},""" +

@@ -323,7 +323,7 @@ class IndexStoreSpec extends SparkSpec {
           java.util.Arrays.asList(d1.collect(): _*)), d1.schema)
       val folded = Postings.foldDocs(loaded, d1s2)
       loaded.release()
-      // fresh directory for the folded epoch (LexEpochStream's epoch=<id>
+      // fresh directory for the folded epoch (the tiered rolls' epoch=<id>
       // convention): folded's frames are persisted-but-not-checkpointed,
       // so their lineage still reads `store` — an in-place overwrite
       // would recompute from the path being clobbered on cache eviction

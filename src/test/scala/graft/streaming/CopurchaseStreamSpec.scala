@@ -6,15 +6,24 @@ import graft.SparkSpec
 import graft.operators.{Adjacency, Checkpoints}
 
 /** [[CopurchaseStream]] — rolling co-purchase graph from the raw line
-  * stream. Contracts: a pair whose two lines arrive in DIFFERENT batches
-  * still materializes (the drop a per-batch pair-gen silently commits),
-  * the rolled index converges bit-identically to the full-corpus build,
-  * and replays are idempotent end to end. */
+  * stream into a tiered root. Contracts: a pair whose two lines arrive in
+  * DIFFERENT batches still materializes (the drop a per-batch pair-gen
+  * silently commits), the rolled edge set converges bit-identically to the
+  * full-corpus build, and replays are idempotent end to end. */
 class CopurchaseStreamSpec extends SparkSpec {
 
   private def edgesOf(h: Adjacency.Hybrid): Seq[(Long, Long)] =
     h.edges.select("src", "dst").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  /** The tiered root's merged edge set. */
+  private def rolledEdges(root: String): Seq[(Long, Long)] = {
+    val t = GraphTieredStream.loadCurrent(spark, root)
+      .getOrElse(fail("tiered roll committed nothing"))
+    try t.mergedEdges.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq.sorted
+    finally t.release()
+  }
 
   test("cross-batch pairs materialize: an order split over two batches " +
        "contributes the edge a per-batch pair-gen would drop") {
@@ -24,19 +33,14 @@ class CopurchaseStreamSpec extends SparkSpec {
     // order 10: part 1 in batch 0, part 2 in batch 1 — the cross-batch pair
     val b0 = Seq((10L, 1L), (20L, 5L), (20L, 6L)).toDF("l_orderkey", "l_partkey")
     val b1 = Seq((10L, 2L), (30L, 7L)).toDF("l_orderkey", "l_partkey")
-    CopurchaseStream.foldBatch(b0, linesDir, root, batchId = 0L)
-    CopurchaseStream.foldBatch(b1, linesDir, root, batchId = 1L)
-    val (_, h) = GraphEpochStream.loadCurrent(spark, root, dedup = true,
-      Adjacency.DefaultHubLimit).getOrElse(fail("no epoch"))
-    try assert(edgesOf(h) === Seq((1L, 2L), (2L, 1L), (5L, 6L), (6L, 5L)))
-    finally h.release()
+    CopurchaseStream.foldBatchTiered(b0, linesDir, root, batchId = 0L)
+    CopurchaseStream.foldBatchTiered(b1, linesDir, root, batchId = 1L)
+    assert(rolledEdges(root) === Seq((1L, 2L), (2L, 1L), (5L, 6L), (6L, 5L)))
 
     // replay of batch 1 is a no-op end to end (lines overwrite, fold skip)
-    CopurchaseStream.foldBatch(b1, linesDir, root, batchId = 1L)
-    val (_, h2) = GraphEpochStream.loadCurrent(spark, root, dedup = true,
-      Adjacency.DefaultHubLimit).getOrElse(fail("no epoch after replay"))
-    try assert(edgesOf(h2) === Seq((1L, 2L), (2L, 1L), (5L, 6L), (6L, 5L)))
-    finally h2.release()
+    assert(CopurchaseStream.foldBatchTiered(b1, linesDir, root,
+      batchId = 1L) === BatchOutcome.Skipped)
+    assert(rolledEdges(root) === Seq((1L, 2L), (2L, 1L), (5L, 6L), (6L, 5L)))
   }
 
   test("32 micro-batches with compaction: bit-identical convergence, " +
@@ -50,7 +54,8 @@ class CopurchaseStreamSpec extends SparkSpec {
     // batch dir (compactEvery = 4 forces many compactions)
     val allLines = (0 until 32).map(i => (i % 16 + 1L, 100L + i))
     allLines.zipWithIndex.foreach { case ((o, p), i) =>
-      CopurchaseStream.foldBatch(Seq((o, p)).toDF("l_orderkey", "l_partkey"),
+      CopurchaseStream.foldBatchTiered(
+        Seq((o, p)).toDF("l_orderkey", "l_partkey"),
         linesDir, root, batchId = i.toLong, compactEvery = 4)
     }
 
@@ -64,10 +69,7 @@ class CopurchaseStreamSpec extends SparkSpec {
     val full = Checkpoints.sweepingOnFailure(spark.sparkContext)(
       Adjacency.build(graft.queries.CoreQueries.copurchasePairs(
         allLines.toDF("l_orderkey", "l_partkey")), dedup = true))
-    val (_, rolled) = GraphEpochStream.loadCurrent(spark, root, dedup = true,
-      Adjacency.DefaultHubLimit).getOrElse(fail("no epoch"))
-    try assert(edgesOf(rolled) === edgesOf(full))
-    finally rolled.release()
+    assert(rolledEdges(root) === edgesOf(full))
 
     // bucket pruning is REAL partition pruning: the `ob` isin predicate
     // must live in the scan's PartitionFilters — the r12 shape (inferred
@@ -97,13 +99,11 @@ class CopurchaseStreamSpec extends SparkSpec {
     // the segment + live deltas, the torn segment is skipped, and the
     // fold is a no-op end to end
     val (o31, p31) = allLines(31)
-    CopurchaseStream.foldBatch(
+    CopurchaseStream.foldBatchTiered(
       Seq((o31, p31)).toDF("l_orderkey", "l_partkey"),
       linesDir, root, batchId = 31L, compactEvery = 4)
-    val (_, replayed) = GraphEpochStream.loadCurrent(spark, root, dedup = true,
-      Adjacency.DefaultHubLimit).getOrElse(fail("no epoch after replay"))
-    try assert(edgesOf(replayed) === edgesOf(full))
-    finally { replayed.release(); full.release() }
+    try assert(rolledEdges(root) === edgesOf(full))
+    finally full.release()
   }
 
   test("torn fold replays identically: a crash AFTER the lines write but " +
@@ -112,10 +112,10 @@ class CopurchaseStreamSpec extends SparkSpec {
     val linesDir = Files.createTempDirectory("cps4_lines").toString
     val root = Files.createTempDirectory("cps4_idx").toString
     val all = Seq((10L, 1L), (20L, 5L), (10L, 2L), (10L, 3L))
-    CopurchaseStream.foldBatch(
+    CopurchaseStream.foldBatchTiered(
       Seq(all(0), all(1)).toDF("l_orderkey", "l_partkey"),
       linesDir, root, batchId = 0L)
-    CopurchaseStream.foldBatch(Seq(all(2)).toDF("l_orderkey", "l_partkey"),
+    CopurchaseStream.foldBatchTiered(Seq(all(2)).toDF("l_orderkey", "l_partkey"),
       linesDir, root, batchId = 1L)
     // simulate batch 2 crashing between its two state writes: the lines
     // landed, the epoch fold did not run
@@ -125,15 +125,13 @@ class CopurchaseStreamSpec extends SparkSpec {
       .write.parquet(s"$linesDir/batch=2")
     // the replay must EXCLUDE its own crashed lines from standing (else
     // part 3 pairs with itself via the torn state), rewrite them, and fold
-    CopurchaseStream.foldBatch(Seq(all(3)).toDF("l_orderkey", "l_partkey"),
+    CopurchaseStream.foldBatchTiered(Seq(all(3)).toDF("l_orderkey", "l_partkey"),
       linesDir, root, batchId = 2L)
-    val (_, h) = GraphEpochStream.loadCurrent(spark, root, dedup = true,
-      Adjacency.DefaultHubLimit).getOrElse(fail("no epoch"))
     val full = Checkpoints.sweepingOnFailure(spark.sparkContext)(
       Adjacency.build(graft.queries.CoreQueries.copurchasePairs(
         all.toDF("l_orderkey", "l_partkey")), dedup = true))
-    try assert(edgesOf(h) === edgesOf(full))
-    finally { h.release(); full.release() }
+    try assert(rolledEdges(root) === edgesOf(full))
+    finally full.release()
   }
 
   test("streamed sf0.001 lineitem chunks converge to the full-corpus " +
@@ -154,11 +152,12 @@ class CopurchaseStreamSpec extends SparkSpec {
     }
     val stream = spark.readStream.schema(li.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*")
-    val q = CopurchaseStream.start(stream, linesDir, root, ckpt)
+    val q = CopurchaseStream.startTiered(stream, linesDir, root, ckpt)
     q.awaitTermination(300000L)
 
-    val (_, rolled) = GraphEpochStream.loadCurrent(spark, root, dedup = true,
-      Adjacency.DefaultHubLimit).getOrElse(fail("no epoch"))
+    val view = GraphTieredStream.loadCurrent(spark, root)
+      .getOrElse(fail("tiered roll committed nothing"))
+    val rolled = try view.mergedHybrid() finally view.release()
     val full = Checkpoints.sweepingOnFailure(spark.sparkContext)(
       Adjacency.build(
         graft.queries.CoreQueries.copurchasePairs(li), dedup = true))
@@ -173,9 +172,7 @@ class CopurchaseStreamSpec extends SparkSpec {
        "flat roll's, replay is a no-op") {
     import sqlImplicits._
     val linesDir = Files.createTempDirectory("cpt_lines").toString
-    val linesDirF = Files.createTempDirectory("cpt_linesf").toString
     val root = Files.createTempDirectory("cpt_idx").toString
-    val rootF = Files.createTempDirectory("cpt_idxf").toString
     // 5 batches; orders revisited across batches so cross-batch pairs
     // exercise the standing-lines join under BOTH folds; majorEvery=3
     // puts an L1 major mid-roll with live minors above it
@@ -185,7 +182,6 @@ class CopurchaseStreamSpec extends SparkSpec {
       val df = ls.toDF("l_orderkey", "l_partkey")
       CopurchaseStream.foldBatchTiered(df, linesDir, root, i.toLong,
         majorEvery = 3)
-      CopurchaseStream.foldBatch(df, linesDirF, rootF, i.toLong)
     }
     // the tiered root has a committed L1 (the major) AND live L0 minors
     assert(GraphTieredStream.l1Epochs(spark, root,
@@ -193,23 +189,18 @@ class CopurchaseStreamSpec extends SparkSpec {
     assert(GraphTieredStream.l0Epochs(spark, root,
       Adjacency.DefaultHubLimit).nonEmpty, "post-major minors must be live")
 
-    def tieredEdges(): Seq[(Long, Long)] = {
-      val t = GraphTieredStream.loadCurrent(spark, root)
-        .getOrElse(fail("tiered roll committed nothing"))
-      try t.mergedEdges.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toSeq.sorted
-      finally t.release()
-    }
-    val (_, flat) = GraphEpochStream.loadCurrent(spark, rootF, dedup = true,
-      Adjacency.DefaultHubLimit).getOrElse(fail("no flat epoch"))
+    // the flat form: one build over every line of every batch
+    val flat = Checkpoints.sweepingOnFailure(spark.sparkContext)(
+      Adjacency.build(graft.queries.CoreQueries.copurchasePairs(
+        batches.flatten.toDF("l_orderkey", "l_partkey")), dedup = true))
     val flatEdges = try edgesOf(flat) finally flat.release()
-    assert(tieredEdges() === flatEdges,
-      "tiered merged edge set diverged from the flat roll")
+    assert(rolledEdges(root) === flatEdges,
+      "tiered merged edge set diverged from the flat rebuild")
 
     // replay of the last batch: tier marker skips, state unchanged
     CopurchaseStream.foldBatchTiered(
       batches.last.toDF("l_orderkey", "l_partkey"), linesDir, root, 4L,
       majorEvery = 3)
-    assert(tieredEdges() === flatEdges, "replay must be a no-op")
+    assert(rolledEdges(root) === flatEdges, "replay must be a no-op")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 
-/** [[GraphServeStream]] — the query side of the graph epoch roll.
+/** [[GraphServeStream]] — the query side of the graph tiered roll.
   * Contracts: answers come from the newest committed epoch (a roll
   * between batches flips the ranking at the batch boundary, never
   * mid-batch — every row of a batch carries ONE epoch), pre-bootstrap
@@ -36,24 +36,29 @@ class GraphServeStreamSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("no committed graph epoch"))
 
-    GraphEpochStream.foldBatch(e0.toDF("src", "dst"), root, batchId = 0L)
+    GraphTieredStream.foldBatch(e0.toDF("src", "dst"), root, batchId = 0L,
+      majorEvery = 2)
     val (ep0, ans0) = GraphServeStream.answerBatch(queries, root, k = 2)
-    assert(ep0 === 0L)
+    assert(ep0 === TierIds.dataEpoch(0L))
     assert(ranked(ans0) === Seq((1, 3L, 2L), (2, 2L, 1L)),
       "epoch 0: degree-2 neighbor 3 outranks degree-1 neighbor 2")
 
-    GraphEpochStream.foldBatch(d1.toDF("src", "dst"), root, batchId = 1L)
+    GraphTieredStream.foldBatch(d1.toDF("src", "dst"), root, batchId = 1L,
+      majorEvery = 2)
     val (ep1, ans1) = GraphServeStream.answerBatch(queries, root, k = 2)
-    assert(ep1 === 1L)
+    assert(ep1 === TierIds.dataEpoch(1L))
     assert(ranked(ans1) === Seq((1, 2L, 4L), (2, 3L, 2L)),
       "epoch 1: the fold raised outdeg(2) to 4 — ranking flips")
 
-    // roll once more so retention (keepEpochs=2) prunes epoch 0, whose
-    // frames produced ans0 — the checkpointed answers must survive both
-    // the release (already done inside answerBatch) and the prune
-    GraphEpochStream.foldBatch(Seq((8L, 9L)).toDF("src", "dst"), root,
-      batchId = 2L)
-    assert(!new java.io.File(EpochDirs.dir(root, 0L)).exists(),
+    // roll on to the next major so retention prunes epoch 0's L0 (two
+    // generations old), whose frames produced ans0 — the checkpointed
+    // answers must survive both the release (already done inside
+    // answerBatch) and the prune
+    Seq(2L -> (8L, 9L), 3L -> (8L, 10L)).foreach { case (b, e) =>
+      GraphTieredStream.foldBatch(Seq(e).toDF("src", "dst"), root,
+        batchId = b, majorEvery = 2)
+    }
+    assert(!new java.io.File(EpochDirs.dir(s"$root/l0", 0L)).exists(),
       "precondition: retention pruned epoch 0")
     assert(ranked(ans0) === Seq((1, 3L, 2L), (2, 2L, 1L)),
       "epoch-0 answers stay readable after its prune")
@@ -69,19 +74,19 @@ class GraphServeStreamSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("gss2_ck").toString
     val schema = Seq((0L, 0L)).toDF("qid", "node").schema
 
-    GraphEpochStream.foldBatch(e0.toDF("src", "dst"), root, batchId = 0L)
+    GraphTieredStream.foldBatch(e0.toDF("src", "dst"), root, batchId = 0L)
     Seq((10L, 1L)).toDF("qid", "node").coalesce(1)
       .write.parquet(s"$landing/chunk0")
-    val s0 = GraphServeStream.start(
+    val s0 = GraphServeStream.startTiered(
       spark.readStream.schema(schema).parquet(s"$landing/chunk*"),
       root, out, ckpt, k = 1)
     s0.awaitTermination(180000L)
 
     // ROLL between batches, then feed the SAME probe as a new batch
-    GraphEpochStream.foldBatch(d1.toDF("src", "dst"), root, batchId = 1L)
+    GraphTieredStream.foldBatch(d1.toDF("src", "dst"), root, batchId = 1L)
     Seq((11L, 1L)).toDF("qid", "node").coalesce(1)
       .write.parquet(s"$landing/chunk1")
-    val s1 = GraphServeStream.start(
+    val s1 = GraphServeStream.startTiered(
       spark.readStream.schema(schema).parquet(s"$landing/chunk*"),
       root, out, ckpt, k = 1)
     s1.awaitTermination(180000L)
@@ -89,9 +94,10 @@ class GraphServeStreamSpec extends SparkSpec {
     val b0 = spark.read.parquet(s"$out/batch=0")
     val b1 = spark.read.parquet(s"$out/batch=1")
     assert(b0.select("epoch_id").distinct().collect().map(_.getLong(0)).toSeq
-      === Seq(0L), "one epoch per batch")
+      === Seq(TierIds.dataEpoch(0L)), "one epoch per batch")
     assert(b1.select("epoch_id").distinct().collect().map(_.getLong(0)).toSeq
-      === Seq(1L), "the roll lands exactly at the batch boundary")
+      === Seq(TierIds.dataEpoch(1L)),
+      "the roll lands exactly at the batch boundary")
     assert(b0.select("dst").collect().map(_.getLong(0)).toSeq === Seq(3L))
     assert(b1.select("dst").collect().map(_.getLong(0)).toSeq === Seq(2L),
       "same probe, new epoch — ranking flipped")

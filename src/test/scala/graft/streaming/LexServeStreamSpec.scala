@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 
-/** [[LexServeStream]] — the query side of the lexical epoch roll.
+/** [[LexServeStream]] — the query side of the lexical tiered roll.
   * Contracts: answers come from the newest committed epoch (a roll
   * between batches changes answers and the recorded epoch), each batch
   * pins one epoch, serving before bootstrap fails loudly, and the
@@ -24,8 +24,9 @@ class LexServeStreamSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("no committed postings epoch"))
 
-    // epoch 0: doc 1 matches both query terms, doc 2 one, doc 3 none
-    LexEpochStream.foldBatch(Seq((1L, "alpha beta gamma"),
+    // epoch 0 (the bootstrap L1): doc 1 matches both query terms, doc 2
+    // one, doc 3 none
+    LexTieredStream.foldBatch(Seq((1L, "alpha beta gamma"),
       (2L, "alpha delta"), (3L, "zeta zeta")).toDF("doc_id", "text"),
       root, batchId = 0L)
     val (ep0, ans0) = LexServeStream.answerBatch(queries, root)
@@ -36,8 +37,9 @@ class LexServeStreamSpec extends SparkSpec {
       "epoch 0: doc 1 (two terms) above doc 2 (one); doc 3 absent")
     graft.operators.Checkpoints.release(ans0) // caller-owned blocks
 
-    // epoch 1 REPLACES doc 1's text away from the query's terms
-    LexEpochStream.foldBatch(Seq((1L, "zeta")).toDF("doc_id", "text"),
+    // epoch 1 (an L0 minor) REPLACES doc 1's text away from the query's
+    // terms
+    LexTieredStream.foldBatch(Seq((1L, "zeta")).toDF("doc_id", "text"),
       root, batchId = 1L)
     val (ep1, ans1) = LexServeStream.answerBatch(queries, root)
     assert(ep1 === 1L)
@@ -51,21 +53,23 @@ class LexServeStreamSpec extends SparkSpec {
        "frames are released AND after retention prunes its directory") {
     val root = Files.createTempDirectory("lss3_idx").toString
     val queries = Seq((10L, "alpha beta")).toDF("qid", "qtext")
-    LexEpochStream.foldBatch(Seq((1L, "alpha beta gamma"),
-      (2L, "alpha delta")).toDF("doc_id", "text"), root, batchId = 0L)
+    LexTieredStream.foldBatch(Seq((1L, "alpha beta gamma"),
+      (2L, "alpha delta")).toDF("doc_id", "text"), root, batchId = 0L,
+      majorEvery = 2)
 
     // answerBatch releases the epoch's frames in its own finally — the
     // returned frame must already be independent of them
     val (ep0, ans0) = LexServeStream.answerBatch(queries, root)
     assert(ep0 === 0L)
 
-    // roll two more epochs: retention (keepEpochs=2) deletes epoch 0's
-    // directory — the files that produced ans0 are GONE from disk
-    LexEpochStream.foldBatch(Seq((3L, "zeta")).toDF("doc_id", "text"),
-      root, batchId = 1L)
-    LexEpochStream.foldBatch(Seq((4L, "eta")).toDF("doc_id", "text"),
-      root, batchId = 2L)
-    assert(!new java.io.File(EpochDirs.dir(root, 0L)).exists(),
+    // roll two more majors: retention (two L1 generations) deletes the
+    // bootstrap L1's directory — the files that produced ans0 are GONE
+    // from disk
+    (1 to 4).foreach { i =>
+      LexTieredStream.foldBatch(Seq((2L + i, s"zeta$i")).toDF("doc_id", "text"),
+        root, batchId = i.toLong, majorEvery = 2)
+    }
+    assert(!new java.io.File(EpochDirs.dir(s"$root/l1", 0L)).exists(),
       "precondition: retention pruned the answering epoch's directory")
 
     val got = ans0.collect().sortBy(_.getInt(1))
@@ -81,7 +85,7 @@ class LexServeStreamSpec extends SparkSpec {
     val landing = Files.createTempDirectory("lss2_in").toString
     val out = Files.createTempDirectory("lss2_out").toString
     val ckpt = Files.createTempDirectory("lss2_ck").toString
-    LexEpochStream.foldBatch(Seq((1L, "alpha beta"), (2L, "alpha"))
+    LexTieredStream.foldBatch(Seq((1L, "alpha beta"), (2L, "alpha"))
       .toDF("doc_id", "text"), root, batchId = 0L)
     val q0 = Seq((10L, "alpha beta")).toDF("qid", "qtext")
     val q1 = Seq((11L, "alpha")).toDF("qid", "qtext")
@@ -90,7 +94,7 @@ class LexServeStreamSpec extends SparkSpec {
     }
     val stream = spark.readStream.schema(q0.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*")
-    val sq = LexServeStream.start(stream, root, out, ckpt)
+    val sq = LexServeStream.startTiered(stream, root, out, ckpt)
     sq.awaitTermination(180000L)
 
     val b0 = spark.read.parquet(s"$out/batch=0")

@@ -23,6 +23,7 @@ import graft.SparkSpec
   *    (crash after commit, before the stream checkpoint);
   *  - a listed L0 deleted before the major loads it fails loudly;
   *  - a reader pinned before a major survives that major;
+  *  - a reader with other params sees no epochs;
   *  - a compaction whose tombstones throw mid-scan releases the view. */
 class TieredRollFaultSpec extends SparkSpec {
 
@@ -42,7 +43,10 @@ class TieredRollFaultSpec extends SparkSpec {
       val load: String => Option[(DataFrame, () => Unit)],
       val roll: String => TieredRoll[_, _],
       /** compactMajor over tombstone ids `tomb(col("id"))` of a 3-row range */
-      val compact: Option[(String, Column => Column) => Option[Long]]) {
+      val compact: Option[(String, Column => Column) => Option[Long]],
+      /** `currentEpochId` and `loadCurrent` of a reader whose params map
+        * differs from the writer's */
+      val otherParams: String => (Option[Long], Option[Any])) {
 
     def ep(batchId: Long): Long =
       if (strided) TierIds.dataEpoch(batchId) else batchId
@@ -90,7 +94,10 @@ class TieredRollFaultSpec extends SparkSpec {
           .map(v => (v.index.assigned.select("nid"), v.release)),
         new VectorTieredStream.Roll(spark, _, vCells, vTrain, vIters),
         Some((root, tomb) => VectorTieredStream.compactMajor(spark, root,
-          tombOf("vec_id", tomb), "vec_id", 0.0, vCells, vTrain, vIters))),
+          tombOf("vec_id", tomb), "vec_id", 0.0, vCells, vTrain, vIters)),
+        root => (VectorTieredStream.currentEpochId(spark, root, vCells, vTrain,
+          vIters + 1), VectorTieredStream.loadCurrent(spark, root, vCells,
+          vTrain, vIters + 1))),
       new Family("pq", strided = true, bootstraps = true,
         ids => vecs(ids, dim),
         (b, root, id) => PqTieredStream.foldBatch(b, "vec_id", "emb", root,
@@ -101,7 +108,10 @@ class TieredRollFaultSpec extends SparkSpec {
           .map(v => (v.index.encoded.select("nid"), v.release)),
         new PqTieredStream.Roll(spark, _, dim, m, k, iters, train),
         Some((root, tomb) => PqTieredStream.compactMajor(spark, root,
-          tombOf("vec_id", tomb), "vec_id", 0.0, dim, m, k, iters, train))),
+          tombOf("vec_id", tomb), "vec_id", 0.0, dim, m, k, iters, train)),
+        root => (PqTieredStream.currentEpochId(spark, root, dim, m, k,
+          iters + 1, train), PqTieredStream.loadCurrent(spark, root, dim, m,
+          k, iters + 1, train))),
       new Family("ivfpq", strided = true, bootstraps = true,
         ids => vecs(ids, dim),
         (b, root, id) => IvfPqTieredStream.foldBatch(b, "vec_id", "emb",
@@ -116,7 +126,10 @@ class TieredRollFaultSpec extends SparkSpec {
           train),
         Some((root, tomb) => IvfPqTieredStream.compactMajor(spark, root,
           tombOf("vec_id", tomb), "vec_id", 0.0, dim, cells, m, k, iters,
-          iters, train))),
+          iters, train)),
+        root => (IvfPqTieredStream.currentEpochId(spark, root, dim, cells, m,
+          k, iters, iters + 1, train), IvfPqTieredStream.loadCurrent(spark,
+          root, dim, cells, m, k, iters, iters + 1, train))),
       new Family("lex", strided = false, bootstraps = true,
         ids => ids.map(i => (i.toLong, s"w$i x")).toDF("doc_id", "text"),
         (b, root, id) => LexTieredStream.foldBatch(b, root, id, majorEvery = 3),
@@ -125,7 +138,14 @@ class TieredRollFaultSpec extends SparkSpec {
         LexTieredStream.loadCurrent(spark, _)
           .map(v => (v.index.dl.select("doc_id"), v.release)),
         new LexTieredStream.Roll(spark, _),
-        None),
+        None,
+        // the lex params are fixed by the build: a root written under
+        // another tokenizer stands in for a reader with other params
+        root => {
+          restamp(root, "tokenizer", "ws", "other")
+          (LexTieredStream.currentEpochId(spark, root),
+            LexTieredStream.loadCurrent(spark, root))
+        }),
       new Family("graph", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong, i + 100000L)).toDF("src", "dst"),
         (b, root, id) => GraphTieredStream.foldBatch(b, root, id,
@@ -140,7 +160,9 @@ class TieredRollFaultSpec extends SparkSpec {
           .DefaultHubLimit),
         Some((root, tomb) => GraphTieredStream.compactMajor(spark, root,
           spark.range(3).select(tomb(col("id")).as("src"),
-            lit(1L).as("dst"))))),
+            lit(1L).as("dst")))),
+        root => (GraphTieredStream.currentEpochId(spark, root, hubLimit = 7L),
+          GraphTieredStream.loadCurrent(spark, root, hubLimit = 7L))),
       new Family("media", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong, i * 0x9e3779b97f4a7c15L))
           .toDF("media_id", "phash"),
@@ -152,7 +174,13 @@ class TieredRollFaultSpec extends SparkSpec {
           .map(v => (v.hashes.select("media_id"), () => ())),
         new MediaTieredStream.Roll(spark, _),
         Some((root, tomb) => MediaTieredStream.compactMajor(spark, root,
-          tombOf("media_id", tomb), "media_id"))),
+          tombOf("media_id", tomb), "media_id")),
+        // media params are fixed by the build, as lex's
+        root => {
+          restamp(root, "index_kind", "ahash_tiered", "other")
+          (MediaTieredStream.currentEpochId(spark, root),
+            MediaTieredStream.loadCurrent(spark, root))
+        }),
       new Family("signature", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong,
           (0 until 40).map(t => s"w${i}_$t").mkString(" ")))
@@ -165,7 +193,29 @@ class TieredRollFaultSpec extends SparkSpec {
           .map(v => (v.sigs.select("id"), v.release)),
         new SignatureTieredStream.Roll(spark, _, sigK, bands, sw),
         Some((root, tomb) => SignatureTieredStream.compactMajor(spark, root,
-          tombOf("doc_id", tomb), "doc_id", 0.0, sigK, bands, sw))))
+          tombOf("doc_id", tomb), "doc_id", 0.0, sigK, bands, sw)),
+        root => (SignatureTieredStream.currentEpochId(spark, root, sigK, bands,
+          sw + 1), SignatureTieredStream.loadCurrent(spark, root, sigK, bands,
+          sw + 1))))
+  }
+
+  /** Rewrite `key`'s recorded value in every epoch meta under `root`, as
+    * if a build with other params had written the root. */
+  private def restamp(root: String, key: String, from: String,
+                      to: String): Unit = {
+    val walk = Files.walk(new File(root).toPath)
+    val metas =
+      try walk.iterator().asScala
+        .filter(_.getFileName.toString == "_graft_index.json").toList
+      finally walk.close()
+    metas.foreach { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      assert(text.contains(s""""$key":"$from""""), s"$p records no $key")
+      Files.write(p, text.replace(s""""$key":"$from"""", s""""$key":"$to"""")
+        .getBytes("UTF-8"))
+      // the local filesystem's checksum sidecar would reject the edit
+      Files.deleteIfExists(p.resolveSibling("._graft_index.json.crc"))
+    }
   }
 
   private def tear(root: String, tier: String, epochId: Long): Unit = {
@@ -283,6 +333,16 @@ class TieredRollFaultSpec extends SparkSpec {
           "a one-major-old reader must still collect (grace window)")
       } finally release()
       assert(f.served(r) === allIds(f, 0 to f.majorAt + 3))
+    }
+
+    test(s"${f.name}: a reader with other params sees no epochs") {
+      val r = root("params")
+      f.foldAll(r, 0 to f.majorAt + 1) // an L1 plus a live L0
+      assert(f.l1(r).nonEmpty && f.l0(r).nonEmpty)
+      assert(f.served(r) === allIds(f, 0 to f.majorAt + 1))
+      val (id, view) = f.otherParams(r)
+      assert(id === None, "currentEpochId must not see other params' epochs")
+      assert(view === None, "loadCurrent must not see other params' epochs")
     }
 
     f.compact.foreach { compact =>

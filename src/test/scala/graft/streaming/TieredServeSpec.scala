@@ -9,14 +9,15 @@ import graft.SparkSpec
 
 /** Serving from TIERED roots — the production pairing of the L0/L1
   * rolls with the pinned serve streams. Contracts per family:
-  *  - vector/lex: answers over a tiered root are IDENTICAL to answers
-  *    over a flat root rolled from the same batches (the tiers'
-  *    certified fold identities, surfaced at the serve layer);
-  *  - graph: the same exact identity — candidates are tier-complete (a
+  *  - vector/lex/PQ/IVFADC/media: answers over a tiered root are
+  *    IDENTICAL to probing the flat operator chain over the same batches
+  *    (build + append/fold, then the same probe — the tiers' certified
+  *    fold identities, surfaced at the serve layer);
+  *  - graph: the same exact identity against top-k by neighbour
+  *    out-degree over the full edge set — candidates are tier-complete (a
   *    minor's edges are served before any major) AND the degree ranking
   *    reads [[GraphTieredStream.Tiered.mergedOutDegrees]], the exact
-  *    cross-tier degrees at |Δ| cost (the earlier L1-only staleness
-  *    trade is gone);
+  *    cross-tier degrees at |Δ| cost;
   *  - all: a minor commit mid-stream bumps the tiered epoch id, so the
   *    pin swaps at the next batch and the new delta is served. */
 class TieredServeSpec extends SparkSpec {
@@ -38,33 +39,36 @@ class TieredServeSpec extends SparkSpec {
     val batches = Seq(vecs(1 to 60), vecs(101 to 120), vecs(201 to 220),
       vecs(301 to 320))
     val tRoot = Files.createTempDirectory("tsv_t").toString
-    val fRoot = Files.createTempDirectory("tsv_f").toString
     batches.zipWithIndex.foreach { case (b, i) =>
       VectorTieredStream.foldBatch(b, "vec_id", "emb", tRoot, i.toLong,
         nCells = 4, trainSample = 50, iters = 2, majorEvery = 3)
-      VectorEpochStream.foldBatch(b, "vec_id", "emb", fRoot, i.toLong,
-        nCells = 4, trainSample = 50, iters = 2)
     }
     // queries out of the corpus id namespace (ivfProbe self-exclusion)
     val q = vecs(1 to 6).select((col("vec_id") + 1000000L).as("qid"),
       col("emb").as("qvec"))
     val in = stageOne(q, Files.createTempDirectory("tsv_in").toString + "/q")
-    def serve(root: String, tiered: Boolean): Set[Seq[Any]] = {
-      val out = Files.createTempDirectory("tsv_out").toString
-      val ck = Files.createTempDirectory("tsv_ck").toString
-      val stream = spark.readStream.schema(q.schema).parquet(in)
-      val sq =
-        if (tiered) VectorServeStream.startTiered(stream, root, out, ck,
-          k = 3, nProbe = 2, nCells = 4, trainSample = 50, iters = 2)
-        else VectorServeStream.start(stream, root, out, ck,
-          k = 3, nProbe = 2, nCells = 4, trainSample = 50, iters = 2)
-      assert(sq.awaitTermination(180000L), "serve must drain")
-      readAnswers(out)
-    }
-    val tieredAns = serve(tRoot, tiered = true)
-    val flatAns = serve(fRoot, tiered = false)
-    assert(tieredAns === flatAns, "tiered-served ≠ flat-served")
-    assert(tieredAns.nonEmpty)
+    val out = Files.createTempDirectory("tsv_out").toString
+    val sq = VectorServeStream.startTiered(
+      spark.readStream.schema(q.schema).parquet(in), tRoot, out,
+      Files.createTempDirectory("tsv_ck").toString,
+      k = 3, nProbe = 2, nCells = 4, trainSample = 50, iters = 2)
+    assert(sq.awaitTermination(180000L), "serve must drain")
+    val tieredAns = readAnswers(out)
+
+    // the flat form: ivfBuild over the first batch, ivfAppend the rest,
+    // the same ivfProbe
+    val twin = batches.tail.foldLeft(
+      graft.operators.Similarity.ivfBuild(batches.head, "vec_id", "emb",
+        nCells = 4, trainSample = 50, iters = 2))(
+      (idx, b) => graft.operators.Similarity.ivfAppend(idx, b, "vec_id", "emb"))
+    try {
+      val flatAns = graft.operators.Similarity
+        .ivfProbe(twin, q, "qid", "qvec", 3, 2)
+        .select(col("qid"), col("rank"), col("nid"), col("sim"))
+        .collect().map(_.toSeq).toSet
+      assert(tieredAns === flatAns, "tiered-served ≠ flat-served")
+      assert(tieredAns.nonEmpty)
+    } finally twin.release()
 
     // mid-stream minor: pin swaps at the next batch and serves the delta
     val pin = VectorServeStream.tieredPinFor(spark, tRoot, nCells = 4,
@@ -84,7 +88,6 @@ class TieredServeSpec extends SparkSpec {
   test("lex: tiered-served answers (edits + deletes in an L0 above the " +
        "L1) equal flat-served answers from the same batches") {
     val tRoot = Files.createTempDirectory("tsl_t").toString
-    val fRoot = Files.createTempDirectory("tsl_f").toString
     val batches = Seq(
       Seq(1L -> "a b a", 2L -> "b c", 3L -> "d a").toDF("doc_id", "text"),
       Seq(4L -> "a d", 5L -> "e b").toDF("doc_id", "text"),
@@ -92,7 +95,6 @@ class TieredServeSpec extends SparkSpec {
       Seq(3L -> "", 7L -> "g b").toDF("doc_id", "text"))      // delete doc 3
     batches.zipWithIndex.foreach { case (b, i) =>
       LexTieredStream.foldBatch(b, tRoot, i.toLong, majorEvery = 4)
-      LexEpochStream.foldBatch(b, fRoot, i.toLong)
     }
     // the edit (L0@2) and delete (L0@3) sit ABOVE the bootstrap L1@0 —
     // the serve path must resolve them through the tier merge
@@ -101,18 +103,35 @@ class TieredServeSpec extends SparkSpec {
 
     val q = Seq((1L, "a b"), (2L, "d"), (3L, "x")).toDF("qid", "qtext")
     val in = stageOne(q, Files.createTempDirectory("tsl_in").toString + "/q")
-    def serve(root: String, tiered: Boolean): Set[Seq[Any]] = {
-      val out = Files.createTempDirectory("tsl_out").toString
-      val ck = Files.createTempDirectory("tsl_ck").toString
-      val stream = spark.readStream.schema(q.schema).parquet(in)
-      val sq =
-        if (tiered) LexServeStream.startTiered(stream, root, out, ck, k = 3)
-        else LexServeStream.start(stream, root, out, ck, k = 3)
-      assert(sq.awaitTermination(180000L), "serve must drain")
-      readAnswers(out)
+    val out = Files.createTempDirectory("tsl_out").toString
+    val sq = LexServeStream.startTiered(
+      spark.readStream.schema(q.schema).parquet(in), tRoot, out,
+      Files.createTempDirectory("tsl_ck").toString, k = 3)
+    assert(sq.awaitTermination(180000L), "serve must drain")
+    val tieredAns = readAnswers(out)
+
+    // the flat form: Postings.build over the first batch, foldDocs the
+    // rest, then per-query BM25 top-3 (t37's plan)
+    val twin = batches.tail.foldLeft(
+      graft.operators.Postings.build(batches.head)) { (idx, b) =>
+      val next = graft.operators.Postings.foldDocs(idx, b)
+      idx.release(); next
     }
-    val tieredAns = serve(tRoot, tiered = true)
-    val flatAns = serve(fRoot, tiered = false)
+    val flatAns =
+      try {
+        val qterms = q.select(col("qid"),
+            explode(array_distinct(split(col("qtext"), " "))).as("tok"))
+          .filter(col("tok") =!= "")
+        graft.queries.TextQueries
+          .bm25ScoresOverIndex(twin, qterms, excludeSelf = false)
+          .withColumn("rank", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy("qid")
+              .orderBy(col("score_scaled").desc, col("doc_id"))))
+          .filter(col("rank") <= 3)
+          .select(col("qid"), col("rank"), col("doc_id"),
+            col("score_scaled"), col("n_terms"))
+          .collect().map(_.toSeq).toSet
+      } finally twin.release()
     assert(tieredAns === flatAns, "tiered-served ≠ flat-served")
     // the delete is visible through the serve path: doc 3 never answers
     assert(!tieredAns.exists(_(2) == 3L), "deleted doc served")
@@ -122,7 +141,6 @@ class TieredServeSpec extends SparkSpec {
   test("graph: tiered-served answers equal flat-served answers exactly — " +
        "tier-complete candidates AND exact merged degrees") {
     val root = Files.createTempDirectory("tsg_t").toString
-    val fRoot = Files.createTempDirectory("tsg_f").toString
     // L0@0..1, major L1@2, then a live minor L0@3 with NEW edges —
     // including a cross-tier duplicate (1→12 again) that must not
     // double-count any degree, and 4→10 whose src exists ONLY in the minor
@@ -134,25 +152,30 @@ class TieredServeSpec extends SparkSpec {
     batches.zipWithIndex.foreach { case (es, i) =>
       GraphTieredStream.foldBatch(es.toDF("src", "dst"), root, i.toLong,
         majorEvery = 3)
-      GraphEpochStream.foldBatch(es.toDF("src", "dst"), fRoot, i.toLong)
     }
     assert(GraphTieredStream.l1Epochs(spark, root,
       graft.operators.Adjacency.DefaultHubLimit).head === TierIds.dataEpoch(2))
 
     val q = Seq((101L, 1L), (104L, 4L)).toDF("qid", "node")
     val in = stageOne(q, Files.createTempDirectory("tsg_in").toString + "/q")
-    def serve(idxRoot: String, tiered: Boolean): Set[Seq[Any]] = {
-      val out = Files.createTempDirectory("tsg_out").toString
-      val ck = Files.createTempDirectory("tsg_ck").toString
-      val stream = spark.readStream.schema(q.schema).parquet(in)
-      val sq =
-        if (tiered) GraphServeStream.startTiered(stream, idxRoot, out, ck, k = 5)
-        else GraphServeStream.start(stream, idxRoot, out, ck, k = 5)
-      assert(sq.awaitTermination(180000L), "serve must drain")
-      readAnswers(out)
-    }
-    val tieredAns = serve(root, tiered = true)
-    val flatAns = serve(fRoot, tiered = false)
+    val out = Files.createTempDirectory("tsg_out").toString
+    val sq = GraphServeStream.startTiered(
+      spark.readStream.schema(q.schema).parquet(in), root, out,
+      Files.createTempDirectory("tsg_ck").toString, k = 5)
+    assert(sq.awaitTermination(180000L), "serve must drain")
+    val tieredAns = readAnswers(out)
+
+    // the flat form: top-5 neighbours by (out-degree DESC, dst ASC) over
+    // the full distinct edge set
+    val edges = batches.flatten.distinct
+    val outdeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    val flatAns: Set[Seq[Any]] = Seq(101L -> 1L, 104L -> 4L).flatMap {
+      case (qid, node) =>
+        edges.filter(_._1 == node).map(_._2)
+          .map(d => d -> outdeg.getOrElse(d, 0L))
+          .sortBy { case (d, deg) => (-deg, d) }.take(5).zipWithIndex
+          .map { case ((d, deg), i) => Seq[Any](qid, i + 1, d, deg) }
+    }.toSet
     assert(tieredAns === flatAns,
       "tiered-served ≠ flat-served (candidates or degrees diverged)")
     // tier-completeness spot check: the live minor's edge 1→14 is served
@@ -172,34 +195,37 @@ class TieredServeSpec extends SparkSpec {
   test("pq: tiered-served ADC answers equal flat-served answers; a minor " +
        "commit swaps the pin at the next batch") {
     val tRoot = Files.createTempDirectory("tsp_t").toString
-    val fRoot = Files.createTempDirectory("tsp_f").toString
     val batches = Seq(qvecs(1 to 40), qvecs(101 to 110), qvecs(201 to 210),
       qvecs(301 to 310))
     batches.zipWithIndex.foreach { case (b, i) =>
       PqTieredStream.foldBatch(b, "vec_id", "emb", tRoot, i.toLong,
         dim = 8, m = 2, k = 4, iters = 2, trainSample = 50, majorEvery = 3)
-      PqEpochStream.foldBatch(b, "vec_id", "emb", fRoot, i.toLong,
-        dim = 8, m = 2, k = 4, iters = 2, trainSample = 50)
     }
     val q = qvecs(1 to 6).select((col("vec_id") + 1000000L).as("qid"),
       col("emb").as("qvec"))
     val in = stageOne(q, Files.createTempDirectory("tsp_in").toString + "/q")
-    def serve(root: String, tiered: Boolean): Set[Seq[Any]] = {
-      val out = Files.createTempDirectory("tsp_out").toString
-      val ck = Files.createTempDirectory("tsp_ck").toString
-      val stream = spark.readStream.schema(q.schema).parquet(in)
-      val sq =
-        if (tiered) PqServeStream.startTiered(stream, root, out, ck,
-          dim = 8, k = 3, m = 2, codebookK = 4, iters = 2, trainSample = 50)
-        else PqServeStream.start(stream, root, out, ck,
-          dim = 8, k = 3, m = 2, codebookK = 4, iters = 2, trainSample = 50)
-      assert(sq.awaitTermination(180000L), "serve must drain")
-      readAnswers(out)
-    }
-    val tieredAns = serve(tRoot, tiered = true)
-    val flatAns = serve(fRoot, tiered = false)
-    assert(tieredAns === flatAns, "tiered-served ≠ flat-served")
-    assert(tieredAns.nonEmpty)
+    val out = Files.createTempDirectory("tsp_out").toString
+    val sq = PqServeStream.startTiered(
+      spark.readStream.schema(q.schema).parquet(in), tRoot, out,
+      Files.createTempDirectory("tsp_ck").toString,
+      dim = 8, k = 3, m = 2, codebookK = 4, iters = 2, trainSample = 50)
+    assert(sq.awaitTermination(180000L), "serve must drain")
+    val tieredAns = readAnswers(out)
+
+    // the flat form: pqBuild over the first batch, pqAppend the rest, the
+    // same pqTopK
+    val twin = batches.tail.foldLeft(
+      graft.operators.Similarity.pqBuild(batches.head, "vec_id", "emb",
+        dim = 8, m = 2, k = 4, iters = 2, trainSample = 50))(
+      (idx, b) => graft.operators.Similarity.pqAppend(idx, b, "vec_id", "emb"))
+    try {
+      val flatAns = graft.operators.Similarity
+        .pqTopK(twin, q, "qid", "qvec", 3)
+        .select(col("qid"), col("rank"), col("nid"), col("adc"))
+        .collect().map(_.toSeq).toSet
+      assert(tieredAns === flatAns, "tiered-served ≠ flat-served")
+      assert(tieredAns.nonEmpty)
+    } finally twin.release()
 
     // mid-stream minor: pin swaps at the next batch and serves the delta
     val pin = PqServeStream.tieredPinFor(spark, tRoot, dim = 8, m = 2,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
 
-/** [[VectorServeStream]] — the query side of the vector epoch roll.
+/** [[VectorServeStream]] — the query side of the vector tiered roll.
   * Contracts: answers come from the newest committed epoch (an append
   * roll between batches changes answers at the next batch boundary —
   * each batch dir carries exactly one epoch), pre-bootstrap serving
@@ -46,29 +46,34 @@ class VectorServeStreamSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("no committed vector epoch"))
 
-    VectorEpochStream.foldBatch(corpus0, "vec_id", "emb", root, batchId = 0L,
-      nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
+    VectorTieredStream.foldBatch(corpus0, "vec_id", "emb", root, batchId = 0L,
+      nCells = N_CELLS, trainSample = TRAIN, iters = ITERS, majorEvery = 2)
     val (ep0, ans0) = VectorServeStream.answerBatch(queries, root, k = 2,
       nProbe = 1, nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
-    assert(ep0 === 0L)
+    assert(ep0 === TierIds.dataEpoch(0L))
     assert(top1(ans0) === 1L, "epoch 0: vec 1 is the closest to (10, 0)")
 
     // epoch 1 appends an EXACT-direction match — the new top-1
     import sqlImplicits._
-    VectorEpochStream.foldBatch(
+    VectorTieredStream.foldBatch(
       Seq((5L, Array(20f, 0f))).toDF("vec_id", "emb"), "vec_id", "emb",
-      root, batchId = 1L, nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
+      root, batchId = 1L, nCells = N_CELLS, trainSample = TRAIN, iters = ITERS,
+      majorEvery = 2)
     val (ep1, ans1) = VectorServeStream.answerBatch(queries, root, k = 2,
       nProbe = 1, nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
-    assert(ep1 === 1L)
+    assert(ep1 === TierIds.dataEpoch(1L))
     assert(top1(ans1) === 5L, "epoch 1: the appended vector wins")
 
-    // roll again so retention (keepEpochs=2) prunes epoch 0 — the
-    // checkpointed epoch-0 answers must stay readable
-    VectorEpochStream.foldBatch(
-      Seq((6L, Array(0f, 20f))).toDF("vec_id", "emb"), "vec_id", "emb",
-      root, batchId = 2L, nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
-    assert(!new java.io.File(EpochDirs.dir(root, 0L)).exists(),
+    // roll two more majors so retention (two L1 generations) prunes the
+    // bootstrap L1 at epoch 0 — the checkpointed epoch-0 answers must
+    // stay readable
+    (2 to 4).foreach { b =>
+      VectorTieredStream.foldBatch(
+        Seq((4L + b, Array(0f, 20f))).toDF("vec_id", "emb"), "vec_id", "emb",
+        root, batchId = b.toLong, nCells = N_CELLS, trainSample = TRAIN,
+        iters = ITERS, majorEvery = 2)
+    }
+    assert(!new java.io.File(EpochDirs.dir(s"$root/l1", 0L)).exists(),
       "precondition: retention pruned epoch 0")
     assert(top1(ans0) === 1L, "epoch-0 answers readable after its prune")
     graft.operators.Checkpoints.release(ans0)
@@ -83,21 +88,21 @@ class VectorServeStreamSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("vss2_ck").toString
     import sqlImplicits._
 
-    VectorEpochStream.foldBatch(corpus0, "vec_id", "emb", root, batchId = 0L,
+    VectorTieredStream.foldBatch(corpus0, "vec_id", "emb", root, batchId = 0L,
       nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
     queries.coalesce(1).write.parquet(s"$landing/chunk0")
-    val s0 = VectorServeStream.start(
+    val s0 = VectorServeStream.startTiered(
       spark.readStream.schema(queries.schema).parquet(s"$landing/chunk*"),
       root, out, ckpt, k = 1, nProbe = 1,
       nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
     s0.awaitTermination(180000L)
 
-    VectorEpochStream.foldBatch(
+    VectorTieredStream.foldBatch(
       Seq((5L, Array(20f, 0f))).toDF("vec_id", "emb"), "vec_id", "emb",
       root, batchId = 1L, nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
     Seq((1001L, Array(10f, 0f))).toDF("qid", "qvec")
       .coalesce(1).write.parquet(s"$landing/chunk1")
-    val s1 = VectorServeStream.start(
+    val s1 = VectorServeStream.startTiered(
       spark.readStream.schema(queries.schema).parquet(s"$landing/chunk*"),
       root, out, ckpt, k = 1, nProbe = 1,
       nCells = N_CELLS, trainSample = TRAIN, iters = ITERS)
@@ -106,9 +111,10 @@ class VectorServeStreamSpec extends SparkSpec {
     val b0 = spark.read.parquet(s"$out/batch=0")
     val b1 = spark.read.parquet(s"$out/batch=1")
     assert(b0.select("epoch_id").distinct().collect().map(_.getLong(0)).toSeq
-      === Seq(0L))
+      === Seq(TierIds.dataEpoch(0L)))
     assert(b1.select("epoch_id").distinct().collect().map(_.getLong(0)).toSeq
-      === Seq(1L), "the roll lands exactly at the batch boundary")
+      === Seq(TierIds.dataEpoch(1L)),
+      "the roll lands exactly at the batch boundary")
     assert(b0.select("nid").collect().map(_.getLong(0)).toSeq === Seq(1L))
     assert(b1.select("nid").collect().map(_.getLong(0)).toSeq === Seq(5L),
       "same probe direction, new epoch — the appended vector wins")
