@@ -123,13 +123,7 @@ object Bench {
       // per-build start stamps: a queued-then-timed-out build must not
       // charge its queue wait to index_build_cpu_sec (r12 review catch)
       val started = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-      val futs = Seq[(String, () => Unit)](
-        "ivf" -> (() => queries.VectorQueries.prepareIvfIndex(spark, sfDir)),
-        "cluster" -> (() => queries.TextQueries.prepareClusterIndex(spark, sfDir)),
-        "signature" -> (() => queries.TextQueries.prepareSignatureIndex(spark, sfDir)),
-        "graph" -> (() => queries.CoreQueries.prepareGraphIndex(spark, sfDir)),
-        "postings" -> (() => queries.TextQueries.preparePostingsIndex(spark, sfDir))
-      ).map { case (name, build) => name -> Future {
+      val futs = queries.SessionIndexes.prepares.map { case (name, prepare) => name -> Future {
         val t0 = System.nanoTime()
         started.put(name, t0)
         // job group (thread-local): lets a timeout CANCEL the wedged
@@ -137,7 +131,7 @@ object Bench {
         // shared executor slots straight through the timed query window
         spark.sparkContext.setJobGroup(s"bench-prepare-$name",
           s"index build $name", interruptOnCancel = true)
-        val err = try { build(); None } catch { case e: Throwable =>
+        val err = try { prepare(spark, sfDir); None } catch { case e: Throwable =>
           System.err.println(s"[bench] $name index build FAILED: $e")
           Some(e.toString.take(300))
         } finally spark.sparkContext.clearJobGroup()
@@ -373,23 +367,12 @@ object Bench {
         Thread.sleep(15000L)
         spinB = tools.HostCpu.spinScore()
       }
-      val releasers = Map[String, () => Unit](
-        "ivf" -> (() => queries.VectorQueries.releaseIvfIndexes(spark)),
-        "cluster" -> (() => queries.TextQueries.releaseClusterLabels(spark)),
-        "signature" -> (() => queries.TextQueries.releaseSignatureIndexes(spark)),
-        "graph" -> (() => queries.CoreQueries.releaseGraphIndexes(spark)),
-        "postings" -> (() => queries.TextQueries.releasePostingsIndexes(spark)))
-      val builders = Map[String, () => Unit](
-        "ivf" -> (() => queries.VectorQueries.prepareIvfIndex(spark, sfDir)),
-        "cluster" -> (() => queries.TextQueries.prepareClusterIndex(spark, sfDir)),
-        "signature" -> (() => queries.TextQueries.prepareSignatureIndex(spark, sfDir)),
-        "graph" -> (() => queries.CoreQueries.prepareGraphIndex(spark, sfDir)),
-        "postings" -> (() => queries.TextQueries.preparePostingsIndex(spark, sfDir)))
+      val prepares = queries.SessionIndexes.prepares.toMap
       buildRatioWarnings.foreach { case (name, _) =>
         try {
-          releasers(name)()
+          queries.SessionIndexes.release(spark, name)
           val t0 = System.nanoTime()
-          builders(name)()
+          prepares(name)(spark, sfDir)
           buildRetried += name -> (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           buildRetryFailed ::= name
@@ -454,13 +437,7 @@ object Bench {
     val standing = spark.sparkContext.getRDDStorageInfo.toSeq
     val releaseErr: Option[String] =
       try {
-        queries.VectorQueries.releaseIvfIndexes(spark) // incl. warm-up dir's
-        queries.TextQueries.releaseClusterLabels(spark)
-        queries.TextQueries.releaseSignatureIndexes(spark)
-        queries.CoreQueries.releaseGraphIndexes(spark)
-        queries.TextQueries.releasePostingsIndexes(spark)
-        queries.TextQueries.releaseSwapHeld(spark)
-        queries.HtnQueries.releaseHeld(spark)
+        queries.SessionIndexes.releaseAll(spark) // incl. warm-up dir's
         None
       } catch { case t: Throwable =>
         System.err.println(s"[bench] release failed (results unaffected): $t")

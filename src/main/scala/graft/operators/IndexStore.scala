@@ -90,7 +90,11 @@ object IndexStore {
     finally out.close()
   }
 
-  /** None when the meta file is absent (index missing or torn write). */
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.IndexStore")
+
+  /** None when the meta file is absent (index missing or torn write) or
+    * fails its checksum sidecar — a corrupt marker reads as torn, with
+    * one WARN naming the dir, rather than failing every reader. */
   private def readMeta(spark: SparkSession, dir: String): Option[Map[String, String]] = {
     val p = new Path(dir, MetaFile)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -103,6 +107,9 @@ object IndexStore {
         var n = in.read(buf)
         while (n >= 0) { bs.write(buf, 0, n); n = in.read(buf) }
         bs.toString("UTF-8")
+      } catch { case e: org.apache.hadoop.fs.ChecksumException =>
+        log.warn(s"index meta under $dir fails its checksum; treating the index as torn: $e")
+        return None
       } finally in.close()
       // flat {"k":"v",...} parser for exactly what writeMeta emits
       val m = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
@@ -156,7 +163,8 @@ object IndexStore {
 
 
   def saveSignatureIndex(spark: SparkSession, idx: Dedup.SignatureIndex,
-                         dir: String, corpusVersion: String): Unit = {
+                         dir: String, corpusVersion: String,
+                         params: Map[String, String] = Map.empty): Unit = {
     invalidateMeta(spark, dir)
     idx.sigs.write.mode("overwrite").parquet(s"$dir/sigs")
     idx.buckets.write.mode("overwrite").parquet(s"$dir/buckets")
@@ -165,7 +173,7 @@ object IndexStore {
       "k" -> idx.k.toString, "bands" -> idx.bands.toString,
       "shingle_width" -> idx.shingleWidth.toString,
       "sigs_schema" -> idx.sigs.schema.json,
-      "buckets_schema" -> idx.buckets.schema.json))
+      "buckets_schema" -> idx.buckets.schema.json) ++ params.toSeq.sorted)
     IndexStats.inc("signature.disk.save")
   }
 
@@ -496,17 +504,6 @@ object IndexStore {
       : Option[Map[String, String]] =
     validMeta(spark, dir, "graph", None, expectedParams)
 
-  def graphIndexOrBuild(spark: SparkSession, dir: String, sourcePath: String,
-                        params: Map[String, String] = Map.empty)
-                       (build: => Adjacency.Hybrid): Adjacency.Hybrid = {
-    val v = corpusVersion(spark, sourcePath)
-    loadGraphIndex(spark, dir, Some(v), params).getOrElse {
-      val hyb = build
-      saveGraphIndex(spark, hyb, dir, v, params)
-      hyb
-    }
-  }
-
   // ---------- duplicate-cluster labels (a plain keyed frame)
 
   def saveClusterLabels(spark: SparkSession, labels: DataFrame,
@@ -575,17 +572,6 @@ object IndexStore {
                         expectedParams: Map[String, String] = Map.empty)
       : Option[Map[String, String]] =
     validMeta(spark, dir, "postings", None, expectedParams)
-
-  def postingsIndexOrBuild(spark: SparkSession, dir: String, sourcePath: String,
-                           params: Map[String, String] = Map.empty)
-                          (build: => Postings.Index): Postings.Index = {
-    val v = corpusVersion(spark, sourcePath)
-    loadPostingsIndex(spark, dir, Some(v), params).getOrElse {
-      val idx = build
-      savePostingsIndex(spark, idx, dir, v, params)
-      idx
-    }
-  }
 
   /** Conf key consulted by the query-level caches: when set to a store
     * root, indexes are served from disk across sessions/jobs (and written
@@ -690,139 +676,32 @@ object IndexStore {
   def storePath(root: String, kind: String, sourcePath: String): String =
     s"$root/${kind}_${md5Hex(sourcePath).take(10)}"
 
-  // ---------- load-or-build convenience
+  // ---------- load-or-build (the one path every query-level index takes)
 
-  /** The production access pattern in one call: serve the index from
-    * `dir` when its stamp matches the CURRENT corpus version AND its
-    * recorded build parameters match `params`, else build with `build`
-    * and persist the result for every later job/session. `sourcePath` is
-    * the corpus the stamp is computed from. */
-  def signatureIndexOrBuild(spark: SparkSession, dir: String, sourcePath: String,
-                            params: Map[String, String] = Map.empty)
-                           (build: => Dedup.SignatureIndex): Dedup.SignatureIndex = {
-    val v = corpusVersion(spark, sourcePath)
-    loadSignatureIndex(spark, dir, Some(v), params).getOrElse {
-      val idx = build
-      saveSignatureIndex(spark, idx, dir, v)
-      idx
-    }
-  }
-
-  def ivfIndexOrBuild(spark: SparkSession, dir: String, sourcePath: String,
-                      params: Map[String, String] = Map.empty)
-                     (build: => Similarity.IvfIndex): Similarity.IvfIndex = {
-    val v = corpusVersion(spark, sourcePath)
-    loadIvfIndex(spark, dir, Some(v), params).getOrElse {
-      val idx = build
-      saveIvfIndex(spark, idx, dir, v, params)
-      idx
-    }
-  }
-
-  def pqIndexOrBuild(spark: SparkSession, dir: String, sourcePath: String,
-                     params: Map[String, String] = Map.empty)
-                    (build: => Similarity.PqIndex): Similarity.PqIndex = {
-    val v = corpusVersion(spark, sourcePath)
-    loadPqIndex(spark, dir, Some(v), params).getOrElse {
-      val idx = build
-      savePqIndex(spark, idx, dir, v, params)
-      idx
-    }
-  }
-
-  def ivfPqIndexOrBuild(spark: SparkSession, dir: String, sourcePath: String,
-                        params: Map[String, String] = Map.empty)
-                       (build: => Similarity.IvfPqIndex): Similarity.IvfPqIndex = {
-    val v = corpusVersion(spark, sourcePath)
-    loadIvfPqIndex(spark, dir, Some(v), params).getOrElse {
-      val idx = build
-      // pass the caller's params through the save: stored meta must
-      // satisfy THIS load's expectedParams, or any non-index-derivable
-      // key would silently turn the store into rebuild-every-session
-      saveIvfPqIndex(spark, idx, dir, v, params)
-      idx
-    }
-  }
-
-  def clusterLabelsOrBuild(spark: SparkSession, dir: String, sourcePath: String,
-                           params: Map[String, String] = Map.empty)
-                          (build: => DataFrame): DataFrame = {
-    val v = corpusVersion(spark, sourcePath)
-    loadClusterLabels(spark, dir, Some(v), params).getOrElse {
-      val labels = build
-      // labels carry no build parameters of their own — record the
-      // caller's (pair-generation) params so the load-side check works
-      saveClusterLabels(spark, labels, dir, v, params)
-      labels
-    }
-  }
-
-  // ---------- session-conf dispatch (ONE implementation — the four
-  // query-level caches all route through here instead of hand-copying
-  // the conf match)
-
-  /** Conf-dispatched serve: plain `build` when `spark.graft.indexDir` is
-    * unset; otherwise `orBuild(storeDir)` against the per-(kind, corpus)
-    * store path under the configured root. */
-  private def withStore[A](spark: SparkSession, kind: String, sourcePath: String)
-                          (orBuild: String => A)(build: => A): A =
+  /** The production access pattern in one call. With `spark.graft.indexDir`
+    * unset, plain `build`. Otherwise serve the index from the
+    * per-(kind, corpus) store dir under that root when its stamp matches
+    * the CURRENT corpus version of `sourcePath` AND its recorded build
+    * parameters match `params`; else build, and `save` the result stamped
+    * with the version and `params`, so the next session's load accepts it.
+    * `kind` names the store slot, so one source table can carry several
+    * indexes of one family (d06's and d13's signature slices, the
+    * co-purchase graphs) without collision. `load` and `save` are the
+    * family's `loadX` / `saveX`. */
+  def fromConf[A](spark: SparkSession, kind: String, sourcePath: String,
+                  params: Map[String, String] = Map.empty)(
+      load: (SparkSession, String, Option[String], Map[String, String]) => Option[A],
+      save: (SparkSession, A, String, String, Map[String, String]) => Unit)(
+      build: => A): A =
     spark.conf.get(IndexDirConf, "") match {
-      case ""   => build
-      case root => orBuild(storePath(root, kind, sourcePath))
+      case "" => build
+      case root =>
+        val dir = storePath(root, kind, sourcePath)
+        val v = corpusVersion(spark, sourcePath)
+        load(spark, dir, Some(v), params).getOrElse {
+          val idx = build
+          save(spark, idx, dir, v, params)
+          idx
+        }
     }
-
-  /** `kind` names the CORPUS SLICE the signatures cover (one source table
-    * can carry several standing indexes — d06's even half, d13's 99%
-    * epoch) so their stores never collide under one root; the meta kind
-    * stays "signature" and params distinguish on load. */
-  def signatureIndexFromConf(spark: SparkSession, sourcePath: String,
-                             params: Map[String, String] = Map.empty,
-                             kind: String = "signature")
-                            (build: => Dedup.SignatureIndex): Dedup.SignatureIndex =
-    withStore(spark, kind, sourcePath)(
-      dir => signatureIndexOrBuild(spark, dir, sourcePath, params)(build))(build)
-
-  def ivfIndexFromConf(spark: SparkSession, sourcePath: String,
-                       params: Map[String, String] = Map.empty)
-                      (build: => Similarity.IvfIndex): Similarity.IvfIndex =
-    withStore(spark, "ivf", sourcePath)(
-      dir => ivfIndexOrBuild(spark, dir, sourcePath, params)(build))(build)
-
-  def pqIndexFromConf(spark: SparkSession, sourcePath: String,
-                      params: Map[String, String] = Map.empty)
-                     (build: => Similarity.PqIndex): Similarity.PqIndex =
-    withStore(spark, "pq", sourcePath)(
-      dir => pqIndexOrBuild(spark, dir, sourcePath, params)(build))(build)
-
-  def ivfPqIndexFromConf(spark: SparkSession, sourcePath: String,
-                         params: Map[String, String] = Map.empty)
-                        (build: => Similarity.IvfPqIndex): Similarity.IvfPqIndex =
-    withStore(spark, "ivfpq", sourcePath)(
-      dir => ivfPqIndexOrBuild(spark, dir, sourcePath, params)(build))(build)
-
-  def postingsIndexFromConf(spark: SparkSession, sourcePath: String,
-                            params: Map[String, String] = Map.empty)
-                           (build: => Postings.Index): Postings.Index =
-    withStore(spark, "postings", sourcePath)(
-      dir => postingsIndexOrBuild(spark, dir, sourcePath, params)(build))(build)
-
-  /** `graphKind` names the graph over its source table (one corpus can
-    * carry several graphs — co-purchase, bipartite, weighted) so their
-    * stores never collide under one root. */
-  def graphIndexFromConf(spark: SparkSession, sourcePath: String,
-                         params: Map[String, String] = Map.empty,
-                         graphKind: String = "graph")
-                        (build: => Adjacency.Hybrid): Adjacency.Hybrid =
-    withStore(spark, graphKind, sourcePath)(
-      dir => graphIndexOrBuild(spark, dir, sourcePath, params)(build))(build)
-
-  /** `kind` distinguishes label tables over the SAME source parquet —
-    * "cluster" (full-corpus labels) and "standing_cluster" (even-id
-    * standing labels d13 folds deltas into) store side by side. */
-  def clusterLabelsFromConf(spark: SparkSession, sourcePath: String,
-                            params: Map[String, String] = Map.empty,
-                            kind: String = "cluster")
-                           (build: => DataFrame): DataFrame =
-    withStore(spark, kind, sourcePath)(
-      dir => clusterLabelsOrBuild(spark, dir, sourcePath, params)(build))(build)
 }

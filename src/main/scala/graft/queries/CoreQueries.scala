@@ -51,20 +51,14 @@ object CoreQueries {
   // through its durable parquet form (IndexStore "copurchase" kind): a
   // fresh session loads both layouts lazily — zero rebuild jobs — and
   // the measured counts ride the meta, the 100-TB ingest-epoch shape.
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.Adjacency.Hybrid]()
   private def cachedGraph(s: SparkSession, dir: String, graphKind: String,
                           params: Map[String, String])
                          (build: => graft.operators.Adjacency.Hybrid)
-      : graft.operators.Adjacency.Hybrid = {
-    val key = (s, s"$dir#$graphKind")
-    graft.operators.IndexStats.lookup("graph",
-      hit = graphCache.containsKey(key))
-    graphCache.computeIfAbsent(key, { _ =>
-      graft.operators.IndexStore.graphIndexFromConf(
-        s, s"$dir/lineitem.parquet", params, graphKind = graphKind)(build)
-    })
-  }
+      : graft.operators.Adjacency.Hybrid =
+    SessionIndexes.get(s, "graph", s"$dir#$graphKind", "graph")(
+      graft.operators.IndexStore.fromConf(s, graphKind, s"$dir/lineitem.parquet", params)(
+        graft.operators.IndexStore.loadGraphIndex,
+        graft.operators.IndexStore.saveGraphIndex)(build))(_.release())
 
   /** Pair-generation shared by the co-purchase graphs: parts appearing in
     * the same order, both directions, src/dst LONG. `private[graft]` so
@@ -115,39 +109,17 @@ object CoreQueries {
   /** Build AND materialize the co-purchase graph indexes for
     * (session, dir) — the explicit once-per-corpus-version step; the
     * builds are eager (Adjacency.build materializes both layouts). */
-  def prepareGraphIndex(s: SparkSession, dir: String): Unit = {
+  def prepareGraphIndex(s: SparkSession, dir: String): Unit =
     // two independent adjacency builds (full corpus + the 99% standing
-    // epoch q79 folds into) — concurrent for the same reason as
-    // prepareIvfIndex: each is pair-gen + a collect_set shuffle with
-    // driver round-trips between, and the family's wall should pay the
-    // slower build, not the sum
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-graph-prepare"); t.setDaemon(true); t
-      })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val futs = Seq(
-      Future { copurchaseAdjacency(s, dir); () },
-      Future { standingCopurchaseAdjacency(s, dir); () })
-    try futs.foreach(f => Await.result(f,
-      scala.concurrent.duration.Duration(1800L,
-        java.util.concurrent.TimeUnit.SECONDS)))
-    finally { pool.shutdownNow(); () }
-  }
+    // epoch q79 folds into): each is pair-gen + a collect_set shuffle with
+    // driver round-trips between
+    SessionIndexes.inParallel("graft-graph-prepare")(
+      () => { copurchaseAdjacency(s, dir); () },
+      () => { standingCopurchaseAdjacency(s, dir); () })
 
   /** Drop cached graph indexes of `s` and release their persisted
     * frames — session-teardown hygiene. */
-  def releaseGraphIndexes(s: SparkSession): Unit = {
-    val it = graphCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        try e.getValue.release() catch { case _: Exception => () }
-        it.remove()
-      }
-    }
-  }
+  def releaseGraphIndexes(s: SparkSession): Unit = SessionIndexes.release(s, "graph")
 
   // -------------------------------------------------------------------------
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -147,46 +147,30 @@ object HtnQueries {
     OmopTables(person, conditions, measurement, observations, procedures, drugs)
   }
 
-  // One-generation swap ledger (the TextQueries discipline): each NEW q83
-  // invocation releases the PREVIOUS run's stage persists; the latest
-  // generation stays alive for the returned lazy frame, drained at session
-  // retirement via releaseHeld.
-  private val lastRelease =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), () => Unit]()
-
-  /** Drain the swap-held pipeline generations for `s` (bench retirement). */
-  def releaseHeld(s: SparkSession): Unit = {
-    val it = lastRelease.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        try e.getValue.apply() catch { case _: Exception => () }
-        it.remove()
-      }
-    }
-  }
+  /** Drain the swap-held q83 generations for `s` (bench retirement). */
+  def releaseHeld(s: SparkSession): Unit = SessionIndexes.release(s, "htn")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q83_htn_phenotype" -> { (s, dir) =>
-      val res = HtnPipeline.run(s, omop(s, dir), codes, cfg,
-        computeMetrics = false)
-      // Materialize the (small) analytical table EAGERLY, then release the
-      // run's stage persists at once. Swap-releasing the whole generation
-      // lazily is UNSOUND here: Spark's CacheManager keys cache entries by
-      // CANONICALIZED PLAN, and successive runs build plan-identical
-      // stages — generation N's persist() reuses generation N−1's entry,
-      // so releasing N−1 un-caches N's stages and every later run
-      // re-executes the whole cohort chain once per flag join (measured:
-      // 10 s → 45 s per rep). localCheckpoint blocks are unique RDDs —
-      // THOSE swap safely, one generation per (session, dir). (A
-      // measured shuffle width was tried here in
-      // r16 and REVERTED: the BP-window stages are compute-bound and a
-      // 4-partition width serialized them — 9.8 s → 13 s.)
-      val out = try res.analytical.localCheckpoint() finally res.release()
-      Option(lastRelease.put((s, dir),
-          () => graft.operators.Checkpoints.release(out)))
-        .foreach(r => try r() catch { case _: Exception => () })
-      out
+      // one generation per (session, dir) through the registry's swap
+      // ledger: each NEW invocation releases the PREVIOUS run's table
+      SessionIndexes.swap(s, "htn", dir) {
+        val res = HtnPipeline.run(s, omop(s, dir), codes, cfg,
+          computeMetrics = false)
+        // Materialize the (small) analytical table EAGERLY, then release the
+        // run's stage persists at once. Swap-releasing the whole generation
+        // lazily is UNSOUND here: Spark's CacheManager keys cache entries by
+        // CANONICALIZED PLAN, and successive runs build plan-identical
+        // stages — generation N's persist() reuses generation N−1's entry,
+        // so releasing N−1 un-caches N's stages and every later run
+        // re-executes the whole cohort chain once per flag join (measured:
+        // 10 s → 45 s per rep). localCheckpoint blocks are unique RDDs —
+        // THOSE swap safely, one generation per (session, dir). (A
+        // measured shuffle width was tried here in
+        // r16 and REVERTED: the BP-window stages are compute-bound and a
+        // 4-partition width serialized them — 9.8 s → 13 s.)
+        try res.analytical.localCheckpoint() finally res.release()
+      }(graft.operators.Checkpoints.release)
     }
   )
 

@@ -249,17 +249,14 @@ object MediaQueries {
 
   // m05 round-trips the media table through parquet so the blob-pruned
   // metadata scan is real (ReadSchema without the binary column — asserted
-  // by MediaQueriesSpec). One write per session; the temp dir dies with
-  // the JVM's tmp space.
-  private val parquetCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
+  // by MediaQueriesSpec). One write per session, held in the registry's
+  // "media" family; its release deletes the temp dir.
   private def mediaParquet(s: SparkSession): String =
-    parquetCache.computeIfAbsent(s, { _ =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_media").resolve("media").toString
-      mediaTable(s).write.mode("overwrite").parquet(dir)
-      dir
-    })
+    SessionIndexes.hold(s, "media", "m05") {
+      val root = java.nio.file.Files.createTempDirectory("graft_media").toString
+      mediaTable(s).write.mode("overwrite").parquet(s"$root/media")
+      root
+    }(graft.io.TempRoots.delete) + "/media"
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Near-dup image pairs: distributed decode → aHash → banded Hamming

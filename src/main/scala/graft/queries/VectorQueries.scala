@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
-import graft.operators.Similarity
+import graft.operators.{IndexStore, Similarity}
 
 /** Similarity-search surface over the `embeddings` table. */
 object VectorQueries {
@@ -19,88 +19,63 @@ object VectorQueries {
     graft.operators.Checkpoints.sized(df,
       graft.operators.IndexStore.parquetRowCount(s, s"$dir/embeddings.parquet"))
 
-  // One IVF index per (session, table dir): build is triggered by the first
-  // v04/v05 invocation, every later one is probe-only. Entries live until
-  // released — call releaseIvfIndexes(session) when retiring a session in a
-  // long-lived JVM, or the map strongly retains the stopped session and its
-  // MEMORY_AND_DISK-persisted assignment frame.
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.IvfIndex]()
-  private def ivfIndexFor(s: SparkSession, dir: String): Similarity.IvfIndex = {
-    graft.operators.IndexStats.lookup("ivf", hit = ivfCache.containsKey((s, dir)))
-    ivfCache.computeIfAbsent((s, dir), { _ =>
-      def build = Similarity.ivfBuild(emb(s, dir), "vec_id", "embedding", nCells = 16)
-      // spark.graft.indexDir set → the trained index survives the session
-      // as parquet, stamped with the corpus version AND the build params
-      // (TextQueries.corpusSignatureIndex documents the lifecycle)
-      graft.operators.IndexStore.ivfIndexFromConf(
-        s, s"$dir/embeddings.parquet", Map("n_cells" -> "16"))(build)
-    })
-  }
+  // Every vector index lives in the session registry's "ivf" family, one
+  // entry per (index, table dir): built by the first probe (or
+  // prepareIvfIndex), probe-only afterwards, released by
+  // releaseIvfIndexes. With spark.graft.indexDir set, the flat IVF/PQ/
+  // IVFADC builds also survive the session as parquet, stamped with the
+  // corpus version AND the build params (IndexStore.fromConf).
+  private def vecIndex[A](s: SparkSession, dir: String, stat: String)(build: => A)(
+      release: A => Unit): A =
+    SessionIndexes.get(s, "ivf", s"$stat|$dir", stat)(build)(release)
 
-  // Appended-IVF cache (v12): a base index trained on ⅞ of the corpus
+  private def ivfIndexFor(s: SparkSession, dir: String): Similarity.IvfIndex =
+    vecIndex(s, dir, "ivf")(IndexStore.fromConf(s, "ivf",
+      s"$dir/embeddings.parquet", Map("n_cells" -> "16"))(
+      IndexStore.loadIvfIndex, IndexStore.saveIvfIndex)(
+      Similarity.ivfBuild(emb(s, dir), "vec_id", "embedding", nCells = 16)))(_.release())
+
+  // Appended IVF (v12): a base index trained on ⅞ of the corpus
   // (vec_id % 8 <> 0) with the remaining ⅛ ivfAppend-ed — the
-  // index-maintenance path. Same lifecycle as the IVF cache above.
-  private val ivfAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.IvfIndex]()
-  private def appendedIndexFor(s: SparkSession, dir: String): Similarity.IvfIndex = {
-    graft.operators.IndexStats.lookup("ivfAppend", hit = ivfAppendCache.containsKey((s, dir)))
-    ivfAppendCache.computeIfAbsent((s, dir), { _ =>
+  // index-maintenance path.
+  private def appendedIndexFor(s: SparkSession, dir: String): Similarity.IvfIndex =
+    vecIndex(s, dir, "ivfAppend") {
       val e = emb(s, dir)
       val base = Similarity.ivfBuild(e.filter(col("vec_id") % 8 =!= 0),
         "vec_id", "embedding", nCells = 16)
       Similarity.ivfAppend(base, e.filter(col("vec_id") % 8 === 0),
         "vec_id", "embedding")
-    })
-  }
+    }(_.release())
 
-  // PQ index cache, same lifecycle as the IVF cache above: built by the
-  // first v08 invocation per (session, dir), probe-only afterwards.
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
-  private def pqIndexFor(s: SparkSession, dir: String): Similarity.PqIndex = {
-    graft.operators.IndexStats.lookup("pq", hit = pqCache.containsKey((s, dir)))
-    pqCache.computeIfAbsent((s, dir), { _ =>
-      def build = Similarity.pqBuild(emb(s, dir), "vec_id", "embedding",
-        dim = 64, m = 4, k = 8, iters = 4)
-      graft.operators.IndexStore.pqIndexFromConf(
-        s, s"$dir/embeddings.parquet",
-        Map("m" -> "4", "k" -> "8", "sub_dim" -> "16"))(build)
-    })
-  }
+  // PQ index: built by the first v08 invocation per (session, dir).
+  private def pqIndexFor(s: SparkSession, dir: String): Similarity.PqIndex =
+    vecIndex(s, dir, "pq")(IndexStore.fromConf(s, "pq",
+      s"$dir/embeddings.parquet", Map("m" -> "4", "k" -> "8", "sub_dim" -> "16"))(
+      IndexStore.loadPqIndex, IndexStore.savePqIndex)(
+      Similarity.pqBuild(emb(s, dir), "vec_id", "embedding",
+        dim = 64, m = 4, k = 8, iters = 4)))(_.release())
 
-  // Appended-PQ cache (v24): codebooks trained on ⅞ of the corpus
+  // Appended PQ (v24): codebooks trained on ⅞ of the corpus
   // (vec_id % 8 <> 0) with the remaining ⅛ pqAppend-ed under the standing
-  // codebooks — PQ's index-maintenance path, the v12 shape. Same
-  // lifecycle as the IVF-append cache above.
-  private val pqAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.PqIndex]()
-  private def appendedPqFor(s: SparkSession, dir: String): Similarity.PqIndex = {
-    graft.operators.IndexStats.lookup("pqAppend", hit = pqAppendCache.containsKey((s, dir)))
-    pqAppendCache.computeIfAbsent((s, dir), { _ =>
+  // codebooks — PQ's index-maintenance path, the v12 shape.
+  private def appendedPqFor(s: SparkSession, dir: String): Similarity.PqIndex =
+    vecIndex(s, dir, "pqAppend") {
       val e = emb(s, dir)
       val base = Similarity.pqBuild(e.filter(col("vec_id") % 8 =!= 0),
         "vec_id", "embedding", dim = 64, m = 4, k = 8, iters = 4)
       Similarity.pqAppend(base, e.filter(col("vec_id") % 8 === 0),
         "vec_id", "embedding")
-    })
-  }
+    }(_.release())
 
-  // IVFADC cache (v29): coarse quantizer + residual-PQ codebooks + coded
-  // corpus — the two-stage index ([[Similarity.ivfPqBuild]]). Same
-  // lifecycle as the caches above.
-  private val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.IvfPqIndex]()
-  private def ivfPqIndexFor(s: SparkSession, dir: String): Similarity.IvfPqIndex = {
-    graft.operators.IndexStats.lookup("ivfPq", hit = ivfPqCache.containsKey((s, dir)))
-    ivfPqCache.computeIfAbsent((s, dir), { _ =>
-      def build = Similarity.ivfPqBuild(emb(s, dir), "vec_id", "embedding",
-        dim = 64, nCells = 8, m = 4, k = 8, coarseIters = 4, pqIters = 4)
-      graft.operators.IndexStore.ivfPqIndexFromConf(
-        s, s"$dir/embeddings.parquet",
-        Map("n_cells" -> "8", "m" -> "4", "k" -> "8", "sub_dim" -> "16"))(build)
-    })
-  }
+  // IVFADC (v29): coarse quantizer + residual-PQ codebooks + coded
+  // corpus — the two-stage index ([[Similarity.ivfPqBuild]]).
+  private def ivfPqIndexFor(s: SparkSession, dir: String): Similarity.IvfPqIndex =
+    vecIndex(s, dir, "ivfPq")(IndexStore.fromConf(s, "ivfpq",
+      s"$dir/embeddings.parquet",
+      Map("n_cells" -> "8", "m" -> "4", "k" -> "8", "sub_dim" -> "16"))(
+      IndexStore.loadIvfPqIndex, IndexStore.saveIvfPqIndex)(
+      Similarity.ivfPqBuild(emb(s, dir), "vec_id", "embedding",
+        dim = 64, nCells = 8, m = 4, k = 8, coarseIters = 4, pqIters = 4)))(_.release())
 
   /** The SAME corpus with planted cluster structure — +20 on dimension
     * `vec_id % 8` (float add, so the oracle replays it as round-to-REAL
@@ -116,20 +91,14 @@ object VectorQueries {
         (x, i) => when(i.cast("long") === pmod(col("vec_id"), lit(8L)),
           x + lit(20.0f)).otherwise(x)).as("embedding"))
 
-  // Clustered-suite cache (v32): all three index families built over the
+  // Clustered suite (v32): all three index families built over the
   // clustered derivation with MATCHED quantizer budgets (coarse nCells=8
   // iters=4 — identical params for IVF and IVFADC's coarse, so the
   // deterministic training yields the SAME centroids and the oracle
-  // trains once; PQ/IVFADC residual codebooks m=4 k=8 iters=4). Same
-  // lifecycle as the caches above.
-  private val clusteredCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (Similarity.IvfIndex, Similarity.PqIndex, Similarity.IvfPqIndex)]()
+  // trains once; PQ/IVFADC residual codebooks m=4 k=8 iters=4).
   private def clusteredSuiteFor(s: SparkSession, dir: String)
-      : (Similarity.IvfIndex, Similarity.PqIndex, Similarity.IvfPqIndex) = {
-    graft.operators.IndexStats.lookup("clusteredSuite",
-      hit = clusteredCache.containsKey((s, dir)))
-    clusteredCache.computeIfAbsent((s, dir), { _ =>
+      : (Similarity.IvfIndex, Similarity.PqIndex, Similarity.IvfPqIndex) =
+    vecIndex(s, dir, "clusteredSuite") {
       val ec = clusteredEmb(s, dir)
       (Similarity.ivfBuild(ec, "vec_id", "embedding", nCells = 8,
         trainSample = 10000, iters = 4),
@@ -137,105 +106,53 @@ object VectorQueries {
           k = 8, iters = 4),
         Similarity.ivfPqBuild(ec, "vec_id", "embedding", dim = 64,
           nCells = 8, m = 4, k = 8, coarseIters = 4, pqIters = 4))
-    })
-  }
+    } { case (a, b, c) => a.release(); b.release(); c.release() }
 
-  // Appended-IVFADC cache (v31): coarse centroids + residual codebooks
+  // Appended IVFADC (v31): coarse centroids + residual codebooks
   // trained on ⅞ of the corpus (vec_id % 8 <> 0), the held-out ⅛
   // ivfPqAppend-ed under BOTH standing models — the v12/v24 maintenance
-  // shape for the composed two-stage index. Same lifecycle as above.
-  private val ivfPqAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.IvfPqIndex]()
-  private def appendedIvfPqFor(s: SparkSession, dir: String): Similarity.IvfPqIndex = {
-    graft.operators.IndexStats.lookup("ivfPqAppend",
-      hit = ivfPqAppendCache.containsKey((s, dir)))
-    ivfPqAppendCache.computeIfAbsent((s, dir), { _ =>
+  // shape for the composed two-stage index.
+  private def appendedIvfPqFor(s: SparkSession, dir: String): Similarity.IvfPqIndex =
+    vecIndex(s, dir, "ivfPqAppend") {
       val e = emb(s, dir)
       val base = Similarity.ivfPqBuild(e.filter(col("vec_id") % 8 =!= 0),
         "vec_id", "embedding",
         dim = 64, nCells = 8, m = 4, k = 8, coarseIters = 4, pqIters = 4)
       Similarity.ivfPqAppend(base, e.filter(col("vec_id") % 8 === 0),
         "vec_id", "embedding")
-    })
-  }
-
-  /** Drain one (session, dir)-keyed index cache of `s`'s entries,
-    * releasing each — the single teardown loop behind
-    * [[releaseIvfIndexes]], so adding an index family cannot silently
-    * skip teardown (a sixth hand-copied loop was the tipping point;
-    * review finding). */
-  private def drain[T](cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), T],
-                       s: SparkSession)(release: T => Unit): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        try release(e.getValue) catch { case _: Exception => () }
-        it.remove()
-      }
-    }
-  }
+    }(_.release())
 
   /** Drop (and unpersist) every cached index of `s` — session teardown
     * hygiene for JVMs that run many sessions. */
-  def releaseIvfIndexes(s: SparkSession): Unit = {
-    drain(clusteredCache, s) { case (a, b, c) =>
-      a.release(); b.release(); c.release()
-    }
-    drain(ivfPqAppendCache, s)(_.release())
-    drain(ivfPqCache, s)(_.release())
-    drain(ivfCache, s)(_.release())
-    drain(pqCache, s)(_.release())
-    drain(ivfAppendCache, s)(_.release())
-    drain(pqAppendCache, s)(_.release())
-  }
+  def releaseIvfIndexes(s: SparkSession): Unit = SessionIndexes.release(s, "ivf")
 
   /** Build AND materialize the vector indexes for (session, dir) — the
     * explicit index-construction step a query-heavy deployment runs once
     * before serving probes. Bench times this separately so the per-query
     * v04/v08 numbers are probe cost, with build cost reported as its own
     * field. */
-  def prepareIvfIndex(s: SparkSession, dir: String): Unit = {
+  def prepareIvfIndex(s: SparkSession, dir: String): Unit =
     // The family's nine builds are INDEPENDENT (each appended variant
-    // trains its own base; the caches key by build, not by parent), and
-    // each one's cost is dominated by Lloyd's/PQ driver round-trips —
-    // tiny jobs that leave the executors idle. Run them on a bounded pool
-    // (the Bench prepare-phase discipline, one level down): the family's
-    // wall drops to its slowest chain instead of the sum. Each build
-    // path's cache is a computeIfAbsent, so concurrent entry is safe.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    // pool = entry count: since the r17 local-Lloyd's change the chains
-    // are job-bound (encode/materialize passes), not driver-collect-bound,
-    // so full overlap backfills the executors (guide §2.6). The clustered
-    // suite's three materializations split into their own entries — the
-    // models build once under the cache's computeIfAbsent lock and the
-    // counts then run concurrently (was: one future counting all three
-    // sequentially, the family's slowest chain).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(9,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-ivf-prepare"); t.setDaemon(true); t
-      })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val futs = Seq[() => Unit](
+    // trains its own base; entries key by build, not by parent), and
+    // since the r17 local-Lloyd's change each chain is job-bound, so full
+    // overlap backfills the executors (guide §2.6). The clustered suite's
+    // three materializations are their own tasks: the models build once
+    // under the registry entry's lock and the counts then run
+    // concurrently.
+    SessionIndexes.inParallel("graft-ivf-prepare")(
       () => { ivfIndexFor(s, dir).assigned.count(); () },
       () => { pqIndexFor(s, dir).encoded.count(); () },
       () => { appendedIndexFor(s, dir).assigned.count(); () },
       () => { appendedPqFor(s, dir).encoded.count(); () },
       // explicit count: the BUILD path materializes coded itself, but a
-      // durable-store load (ivfPqIndexFromConf hit) returns a cold
-      // persisted frame — without this the first timed v29/v30 probe
-      // would pay the cache fill the prepare phase exists to absorb
+      // durable-store load returns a cold persisted frame — without this
+      // the first timed v29/v30 probe would pay the cache fill the
+      // prepare phase exists to absorb
       () => { ivfPqIndexFor(s, dir).coded.count(); () },
       () => { appendedIvfPqFor(s, dir).coded.count(); () },
       () => { clusteredSuiteFor(s, dir)._1.assigned.count(); () },
       () => { clusteredSuiteFor(s, dir)._2.encoded.count(); () },
-      () => { clusteredSuiteFor(s, dir)._3.coded.count(); () }
-    ).map(f => Future(f()))
-    try futs.foreach(f => Await.result(f,
-      scala.concurrent.duration.Duration(1800L,
-        java.util.concurrent.TimeUnit.SECONDS)))
-    finally { pool.shutdownNow(); () }
-  }
+      () => { clusteredSuiteFor(s, dir)._3.coded.count(); () })
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * SparkEntry query once (sf0.001 by default), snapshot the persistent-RDD
   * census around each, and report which queries GREW it — separating the
   * expected first-touch growth of the standing index caches (released by
-  * the family release() calls at the end) from true per-query strays.
+  * SessionIndexes.releaseAll at the end) from true per-query strays.
   * Usage: runMain graft.tools.LeakCensus [sfDir] */
 object LeakCensus {
   def main(args: Array[String]): Unit = {
@@ -30,13 +30,7 @@ object LeakCensus {
       before = after
     }
     println(s"=== before releases: ${before.size} cached frames")
-    graft.queries.VectorQueries.releaseIvfIndexes(spark)
-    graft.queries.TextQueries.releaseClusterLabels(spark)
-    graft.queries.TextQueries.releaseSignatureIndexes(spark)
-    graft.queries.CoreQueries.releaseGraphIndexes(spark)
-    graft.queries.TextQueries.releasePostingsIndexes(spark)
-    graft.queries.TextQueries.releaseSwapHeld(spark)
-    graft.queries.HtnQueries.releaseHeld(spark)
+    graft.queries.SessionIndexes.releaseAll(spark)
     val leaked = census
     println(s"=== after releases: ${leaked.size} STRAYS")
     leaked.toSeq.sortBy(_._1).foreach { case (id, n) => println(s"  $id: $n") }

@@ -59,16 +59,10 @@ object MedianBench {
         })
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
-      val futs = Seq[(String, () => Unit)](
-        "ivf" -> (() => graft.queries.VectorQueries.prepareIvfIndex(spark, sfDir)),
-        "cluster" -> (() => graft.queries.TextQueries.prepareClusterIndex(spark, sfDir)),
-        "signature" -> (() => graft.queries.TextQueries.prepareSignatureIndex(spark, sfDir)),
-        "graph" -> (() => graft.queries.CoreQueries.prepareGraphIndex(spark, sfDir)),
-        "postings" -> (() => graft.queries.TextQueries.preparePostingsIndex(spark, sfDir))
-      ).map { case (name, build) => Future {
+      val futs = graft.queries.SessionIndexes.prepares.map { case (name, prepare) => Future {
         val (sec, steal) = graft.tools.HostCpu.measuring {
           val t0 = System.nanoTime()
-          build()
+          prepare(spark, sfDir)
           (System.nanoTime() - t0) / 1e9
         }
         (name, sec, steal)
@@ -116,6 +110,7 @@ object MedianBench {
       s""""queries":{${(rows ++ buildRows).mkString(",")}}}"""
     Files.write(Paths.get(outFile), (json + "\n").getBytes(StandardCharsets.UTF_8))
     System.err.println(s"[medians] wrote $outFile")
+    graft.queries.SessionIndexes.releaseAll(spark)
     spark.stop()
   }
 }

@@ -204,6 +204,32 @@ class IndexStoreSpec extends SparkSpec {
     TextQueries.releaseSignatureIndexes(s1)
     TextQueries.releaseSignatureIndexes(s2)
   }
+
+  test("conf-wired caches: a second session loads d13's standing-99 signature store") {
+    val root = tmp("idx99")
+    val meta = new java.io.File(IndexStore.storePath(root, "signature99",
+      s"$dir/documents.parquet"), "_graft_index.json")
+    IndexStats.reset()
+    val s1 = spark.newSession()
+    s1.conf.set(IndexStore.IndexDirConf, root)
+    TextQueries.prepareSignatureIndex(s1, dir) // builds AND saves both slices
+    val saves = IndexStats.snapshot().getOrElse("signature.disk.save", 0L)
+    assert(meta.exists(), s"no standing-99 store at $meta")
+    val written = meta.lastModified()
+    Thread.sleep(1100) // a rewrite must show in the mtime
+
+    val s2 = spark.newSession()
+    s2.conf.set(IndexStore.IndexDirConf, root)
+    TextQueries.prepareSignatureIndex(s2, dir)
+    val after = IndexStats.snapshot()
+    assert(after.getOrElse("signature.disk.hit", 0L) >= 1L, after)
+    assert(after.getOrElse("signature.disk.save", 0L) == saves,
+      s"second session re-saved a signature store: $after")
+    assert(meta.lastModified() == written, "the standing-99 store was rewritten")
+    TextQueries.releaseSignatureIndexes(s1)
+    TextQueries.releaseSignatureIndexes(s2)
+  }
+
   test("build-parameter mismatch is refused like a stale stamp (r9 review)") {
     val root = tmp("idxparams")
     val src = s"$dir/documents.parquet"

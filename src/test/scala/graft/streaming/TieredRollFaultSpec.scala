@@ -24,7 +24,8 @@ import graft.SparkSpec
   *  - a listed L0 deleted before the major loads it fails loudly;
   *  - a reader pinned before a major survives that major;
   *  - a reader with other params sees no epochs;
-  *  - a compaction whose tombstones throw mid-scan releases the view. */
+  *  - a compaction whose tombstones throw mid-scan releases the view;
+  *  - (lex) an epoch whose meta fails its checksum sidecar reads as torn. */
 class TieredRollFaultSpec extends SparkSpec {
 
   import sqlImplicits._
@@ -358,5 +359,23 @@ class TieredRollFaultSpec extends SparkSpec {
         assert(f.served(r) === allIds(f, 0 to f.majorAt + 1))
       }
     }
+  }
+
+  test("lex: an epoch whose meta fails its checksum sidecar is torn — " +
+       "invisible to loadCurrent and a pin") {
+    val lex = families.find(_.name == "lex").get
+    val r = Files.createTempDirectory("trf_lex_crc").toString
+    lex.foldAll(r, 0 to 1) // the bootstrap L1 plus live L0 epoch=1
+    val meta = new File(s"$r/l0/epoch=1/_graft_index.json").toPath
+    assert(Files.exists(meta.resolveSibling("._graft_index.json.crc")))
+    val text = new String(Files.readAllBytes(meta), "UTF-8")
+    assert(text.contains("batch:1"))
+    // same length, still a well-formed meta — only the sidecar disagrees
+    Files.write(meta, text.replace("batch:1", "batch:9").getBytes("UTF-8"))
+    assert(lex.l0(r).isEmpty)
+    assert(LexTieredStream.currentEpochId(spark, r) === Some(0L))
+    assert(lex.served(r) === allIds(lex, 0 to 0))
+    val pin = LexServeStream.tieredPinFor(spark, r)
+    try assert(pin.get()._1 === 0L) finally pin.close()
   }
 }
