@@ -71,6 +71,7 @@ object Bench {
         .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftSession.requireExtensions(spark)
     // Source-contract canary: a mis-decoded events table would produce
     // plausible timings for wrong answers — refuse to bench it.
     graft.io.Tables.canaryEvents(spark, sfDir)

@@ -13,10 +13,28 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** The `spark.sql.extensions` entry this engine needs on every session:
-    * native expressions (float_dot, sig_match_count, set_jaccard), optimizer
-    * rewrites (FuseSetJaccard) and the TopKPerKey planner strategy. The same
-    * value a cluster deployment passes via --conf. */
+    * native functions, optimizer rewrites (FuseSetJaccard) and the
+    * TopKPerKey planner strategy. The same value a cluster deployment
+    * passes via --conf. It is the only install path: query code registers
+    * nothing at query time. */
   val ExtensionsClass = "graft.plans.GraftExtensions"
+
+  /** Fail loudly, at entry, on a session not built through [[tune]]: every
+    * function of [[graft.plans.GraftExtensions.functions]] and the
+    * TopKPerKey planner strategy must be installed, or a query would fail
+    * deep in analysis or planning instead. */
+  def requireExtensions(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val functions = graft.plans.GraftExtensions.functions.collect {
+      case (id, _, _) if !registry.functionExists(id) => id.funcName
+    }
+    val strategy =
+      if (spark.sessionState.planner.strategies.contains(graft.plans.TopKStrategy)) Nil
+      else Seq("TopKStrategy")
+    val missing = functions ++ strategy
+    require(missing.isEmpty, s"session lacks ${missing.mkString(", ")}; build it " +
+      s"through GraftSession.tune, which installs $ExtensionsClass")
+  }
 
   /** APPEND our extensions to whatever the caller already configured —
     * `spark.sql.extensions` is a comma-separated list, and a plain
@@ -157,6 +175,7 @@ object GraftSession {
         .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    requireExtensions(s)
     s
   }
 }

@@ -18,6 +18,7 @@ object Verify {
         .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftSession.requireExtensions(spark)
     // Source-contract canaries: if any table's physical schema drifted
     // under the declared read schema, or the events timestamp decode is
     // off by a unit scale, fail the whole run loudly here rather than

@@ -31,15 +31,6 @@ object Exclusions {
       .filter(col(conceptCol).isin(codes: _*) && year(col(dateCol)).isin(years: _*))
       .select("PATIENT_LINKAGE").distinct()
 
-  /** Patients from `restrictTo` (pre-filtered cohort keys, e.g. WRA) with a
-    * coded event — the pregnancy queries' female/18-44 predicate
-    * (`2_data_importing_cleaning.R:294-297`). */
-  def domainPatientsWithin(events: DataFrame, conceptCol: String, dateCol: String,
-                           codes: Seq[Long], years: Seq[Int],
-                           restrictTo: DataFrame): DataFrame =
-    domainPatients(events, conceptCol, dateCol, codes, years)
-      .join(restrictTo.select("PATIENT_LINKAGE"), Seq("PATIENT_LINKAGE"), "left_semi")
-
   /** Union of exclusion key sets. */
   def unionKeys(sets: Seq[DataFrame]): DataFrame =
     sets.reduce(_ unionByName _).distinct()

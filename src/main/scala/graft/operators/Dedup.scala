@@ -202,7 +202,6 @@ object Dedup {
     // 10.8M-candidate adversarial cluster). The signature frame is
     // broadcast-sized per partition of candidates; Spark picks the
     // broadcast join on its own when sigs fit.
-    graft.plans.SigMatchCount.register(spark)
     val verified = pairs
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
@@ -435,8 +434,6 @@ object Dedup {
       }
       .toDF("id_a", "id_b")
       .distinct()
-    graft.plans.SigMatchCount.register(spark)
-    graft.plans.SetJaccard.register(spark)
     val lk = bs.unionByName(index.sigs)
     val verified = cand
       .join(lk.select(col("id").as("id_a"), col("sig").as("sig_a"),
@@ -516,7 +513,6 @@ object Dedup {
     val managed = lshPairsFromSigs(combined.select("id", "sig", "nf"),
       k, bands, math.max(0.0, threshold - estMargin), maxBucket)
     val cand = managed.pairs.select("id_a", "id_b")
-    graft.plans.SetJaccard.register(spark)
     val exact = cand
       .join(combined.select(col("id").as("id_a"), col("ss").as("ss_a")), Seq("id_a"))
       .join(combined.select(col("id").as("id_b"), col("ss").as("ss_b")), Seq("id_b"))

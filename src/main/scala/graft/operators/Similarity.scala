@@ -29,9 +29,9 @@ object Similarity {
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  /** Codegen'd dot product over float arrays — the hot kernel. Requires
-    * [[graft.plans.FloatDotProduct.register]] on the session (operators
-    * below do it). Bit-identical to `dotHof(dbl(a), dbl(b))`. */
+  /** Codegen'd dot product over float arrays — the hot kernel, installed
+    * on every session by [[graft.plans.GraftExtensions]]. Bit-identical to
+    * `dotHof(dbl(a), dbl(b))`. */
   def dot(a: Column, b: Column): Column = call_function("float_dot", a, b)
 
   def norm(v: Column): Column = sqrt(dotHof(dbl(v), dbl(v)))
@@ -64,7 +64,6 @@ object Similarity {
     */
   def cosineTopK(queries: DataFrame, qid: String, qvec: String,
                  corpus: DataFrame, nid: String, nvec: String, k: Int): DataFrame = {
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val q = queries.select(col(qid).as("qid"), col(qvec).cast("array<float>").as("qv"))
       .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
     val c = corpus.select(col(nid).as("nid"), col(nvec).cast("array<float>").as("nv"))
@@ -84,7 +83,6 @@ object Similarity {
     * per (partition × query). */
   def mipsTopK(queries: DataFrame, qid: String, qvec: String,
                corpus: DataFrame, nid: String, nvec: String, k: Int): DataFrame = {
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val q = queries.select(col(qid).as("qid"), col(qvec).cast("array<float>").as("qv"))
     val c = corpus.select(col(nid).as("nid"), col(nvec).cast("array<float>").as("nv"))
     rankTopK(
@@ -135,63 +133,26 @@ object Similarity {
       "score", k)
   }
 
-  /** Distributed Lloyd's iterations for a coarse k-means quantizer.
-    *
-    * Per iteration: every sample row is assigned to its nearest centroid
-    * with the codegen'd [[cellScores]] argmax (a map-only pass — centroids
-    * are literals, i.e. broadcast), and new centroids come back from ONE
-    * partial-aggregating groupBy over (cell, dim). Only the model (nCells ×
-    * dim means) ever reaches the driver; the sample itself never does, so
-    * the same code trains on 10k rows locally or 10M rows on a cluster.
-    *
-    * Determinism: double sums depend on reduction order, so means are
-    * computed in fixed-point (per-element `round(x·2^20)` summed as longs —
-    * exact, order-independent, ±1e-6 is far below quantizer precision).
-    * Fixed-point range check: |x|·2^20 per element, summed over the sample
-    * → overflows long only past ~8.8e12·Σ|x|, unreachable for unit-scale
-    * embeddings and bounded samples. */
-  private[operators] def lloydsCentroids(sample: DataFrame, vecCol: String, nCells: Int,
-                              iters: Int, init: Array[Array[Double]]): Array[Array[Double]] = {
-    val scale = (1L << 20).toDouble
-    var centroids = init
-    for (_ <- 1 to iters) {
-      val stats = sample
-        .withColumn("cell", nearestCell(col(vecCol), centroids))
-        .select(col("cell"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy("cell", "pos")
-        .agg((sum(round(col("x") * scale).cast("long")).cast("double")
-          / count(lit(1)) / scale).as("m"))
-        .collect()
-      val next = centroids.map(_.clone())
-      stats.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-      centroids = next // cells that captured no points keep their old center
-    }
-    centroids
-  }
+  // ---------- Lloyd's k-means training, driver-local over a BOUNDED sample
+  //
+  // The training sample is at most `trainSample` rows BY CONSTRUCTION (an
+  // `orderBy(id).limit(n)` frame) and at most [[MaxTrainSample]]: one
+  // collect (one job) replaces the 1 + iters scheduler round-trips a
+  // per-iteration Spark chain would cost, and the model that reaches the
+  // driver is the bounded sample (10k×64 floats ≈ 2.5 MB), never the
+  // corpus. The math keeps Spark SQL semantics bit for bit, so the DuckDB
+  // oracle replays it exactly: the per-cell argmax is a fixed-shape
+  // float-dot (sequential double accumulation, the FloatDotProduct
+  // contract) with Spark's double ordering (ties → larger cell id, as
+  // `greatest` over (score, cell) structs), and the iteration means are
+  // fixed-point — per-element `round(x·2^20)` summed as longs, exact and
+  // ORDER-FREE, so row order never matters (a long overflows only past
+  // ~8.8e12·Σ|x|, unreachable for unit-scale embeddings at the cap). LloydsParitySpec pins this
+  // trainer against a distributed Spark reference; the v04/v08/v27-family
+  // oracle rows certify the composed result.
 
-  // ---------- driver-local Lloyd's (bit-identical twin of the distributed
-  // path, for BOUNDED training samples)
-  //
-  // The distributed chain costs 1 job per iteration — 8-20 scheduler
-  // round-trips of ~50-150 ms each on a sample that is at most
-  // `trainSample` rows BY CONSTRUCTION (an `orderBy(id).limit(n)` frame).
-  // Training math is replicable exactly off-cluster: the per-cell argmax
-  // is a fixed-shape float-dot (sequential double accumulation, the
-  // FloatDotProduct contract) with Spark's double ordering (ties → larger
-  // cell id via `greatest`), and the iteration means are ORDER-FREE exact
-  // long sums of half-up-rounded fixed-point values — so summing rows in
-  // collected order equals any shuffle's order. A single collect of the
-  // (already bounded) sample replaces the per-iteration jobs; the model
-  // that reaches the driver grows from nCells×dim to trainSample×dim —
-  // still a bounded model artifact (10k×64 floats ≈ 2.5 MB), never the
-  // corpus. LloydsParitySpec pins local ≡ distributed bit-for-bit; the
-  // v04/v08/v27-family oracle rows certify the composed result.
-  //
-  // Scale gate: the local path engages only when the REQUESTED sample cap
-  // is at or below `spark.graft.train.localMaxSample` (default 65536) —
-  // a cluster job training on a deliberately huge sample keeps the
-  // distributed path, and ragged vectors (length ≠ init dim) fall back
-  // too (the distributed path is the behavior owner for those).
+  /** Largest training sample a build collects onto the driver. */
+  private val MaxTrainSample = 65536
 
   /** `Splits.ringHash` on a driver-side long — same closed form. */
   private def ringHashLong(key: Long): Long = {
@@ -230,9 +191,9 @@ object Similarity {
     s - cNorm2Half
   }
 
-  /** Driver-local twin of [[lloydsCentroids]] over a collected sample.
-    * Preconditions (callers enforce): every vector's length equals the
-    * init centroids' dim. nCells = init.length. */
+  /** Lloyd's iterations over a collected sample (see the block comment
+    * above). Precondition ([[collectTrainSample]] enforces it): every
+    * vector's length equals the init centroids' dim. nCells = init.length. */
   private[operators] def lloydsLocal(vecs: Array[Array[Float]], iters: Int,
                                      init: Array[Array[Double]]): Array[Array[Double]] = {
     val scale = (1L << 20).toDouble
@@ -284,21 +245,20 @@ object Similarity {
     centroids
   }
 
-  /** The local-training gate: requested sample cap at or below the conf'd
-    * bound (bounded driver artifact), default 65536. */
-  private def localTrainOk(spark: org.apache.spark.sql.SparkSession,
-                           trainSample: Int): Boolean =
-    trainSample <= spark.conf
-      .getOption("spark.graft.train.localMaxSample")
-      .map(_.trim.toInt).getOrElse(65536)
-
-  /** Collect a bounded `(id, vec)` training sample (ONE job) and derive
-    * the ringHash-ordered init spread locally — the collected twin of the
-    * sample/init frames [[ivfBuild]] and [[pqBuild]] build distributively.
-    * Returns (idsInSampleOrder, vecs, initOrderIndices). */
+  /** Collect the bounded, deterministically pinned training sample (ONE
+    * job; an unordered limit() would be partition-layout-dependent) and
+    * derive the init spread: sample indices in multiplicative-hash order
+    * (`Splits.ringHash` — a deterministic pseudo-random spread that plain
+    * head-of-id order lacks, overflow-proof for any long id, and
+    * closed-form arithmetic the DuckDB oracle reproduces exactly, which
+    * xxhash64 was not; ids must be numeric — hash string ids to longs
+    * upstream). Fails loudly on an empty corpus, on a cap above
+    * [[MaxTrainSample]] and on vectors of unequal length.
+    * Returns (vecs, initOrderIndices). */
   private def collectTrainSample(corpus: DataFrame, nid: String, nvec: String,
-                                 trainSample: Int)
-      : (Array[Long], Array[Array[Float]], Array[Int]) = {
+                                 trainSample: Int): (Array[Array[Float]], Array[Int]) = {
+    require(trainSample <= MaxTrainSample, s"trainSample $trainSample exceeds " +
+      s"$MaxTrainSample: training collects the sample onto the driver")
     val rows = corpus
       .select(col(nid).cast("long").as("__sid"),
         col(nvec).cast("array<float>").as("__sv"))
@@ -306,8 +266,11 @@ object Similarity {
       .collect()
     val ids = rows.map(_.getLong(0))
     val vecs = rows.map(_.getSeq[Float](1).toArray)
+    require(vecs.nonEmpty, "corpus is empty")
+    require(vecs.forall(_.length == vecs(0).length), s"training needs vectors of " +
+      s"one length; $nvec has ${vecs.map(_.length).distinct.sorted.mkString(", ")}")
     val order = ids.indices.sortBy(i => (ringHashLong(ids(i)), ids(i))).toArray
-    (ids, vecs, order)
+    (vecs, order)
   }
 
   /** Per-cell nearness scores of vector `v` against literal `centroids`,
@@ -348,7 +311,6 @@ object Similarity {
     * centroids union into a probeable index without re-assignment. */
   def assignCells(batch: DataFrame, nid: String, nvec: String,
                   centroids: Array[Array[Double]]): DataFrame = {
-    graft.plans.FloatDotProduct.register(batch.sparkSession)
     batch.select(col(nid).as("nid"), col(nvec).cast("array<float>").as("nv"))
       .withColumn("cell", nearestCell(col("nv"), centroids))
       .withColumn("nn", sqrt(dot(col("nv"), col("nv"))))
@@ -356,39 +318,20 @@ object Similarity {
 
   /** Train the coarse quantizer and assign the corpus to cells.
     *
-    * Centroid training is distributed ([[lloydsCentroids]] — assignment
-    * map-side, means via one groupBy per iteration; only the nCells×dim
-    * model reaches the driver) and deterministic: the sample is pinned by a
-    * total order on the id, initialization spreads over the sample in
-    * multiplicative-hash order (`Splits.ringHash` — a deterministic
-    * pseudo-random spread that plain head-of-id order lacks, overflow-proof
-    * for any long id, and closed-form arithmetic the DuckDB oracle
-    * reproduces exactly, which xxhash64 was not; ids must be numeric —
-    * hash string ids to longs upstream), and iteration means use
-    * order-independent fixed-point sums. Cell assignment is one broadcast-map pass over the
-    * corpus; with `persist=true` the assignment (and its shuffle) is
-    * computed once and reused by every subsequent [[ivfProbe]].
+    * Centroid training is deterministic: the sample is pinned by a total
+    * order on the id, initialization spreads over it in `Splits.ringHash`
+    * order ([[collectTrainSample]]), and [[lloydsLocal]]'s iteration means
+    * are order-independent fixed-point sums. Cell assignment is one
+    * broadcast-map pass over the corpus; with `persist=true` the
+    * assignment (and its shuffle) is computed once and reused by every
+    * subsequent [[ivfProbe]].
     */
   def ivfBuild(corpus: DataFrame, nid: String, nvec: String,
                nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8,
                persist: Boolean = true): IvfIndex = {
-    val spark = corpus.sparkSession
-    graft.plans.FloatDotProduct.register(spark)
-
-    // --- bounded, deterministically-pinned training sample (an unordered
-    // limit() would be partition-layout-dependent). Small requested caps
-    // train DRIVER-LOCALLY off one collect of the sample (bit-identical —
-    // see the lloydsLocal scaladoc; was 1 + iters jobs, each a scheduler
-    // round-trip); big caps keep the distributed per-iteration chain.
+    val (vecs, order) = collectTrainSample(corpus, nid, nvec, trainSample)
     val centroids =
-      if (localTrainOk(spark, trainSample)) {
-        val (_, vecs, order) = collectTrainSample(corpus, nid, nvec, trainSample)
-        require(vecs.nonEmpty, "corpus is empty")
-        val init = order.take(nCells).map(i => vecs(i).map(_.toDouble))
-        if (vecs.forall(_.length == init(0).length))
-          lloydsLocal(vecs, iters, init)
-        else distributedTrain(corpus, nid, nvec, nCells, trainSample, iters)
-      } else distributedTrain(corpus, nid, nvec, nCells, trainSample, iters)
+      lloydsLocal(vecs, iters, order.take(nCells).map(i => vecs(i).map(_.toDouble)))
 
     val assigned = {
       val a = assignCells(corpus, nid, nvec, centroids)
@@ -401,35 +344,12 @@ object Similarity {
       () => { if (persist) { assigned.unpersist(); () } })
   }
 
-  /** The pre-r17 distributed training block of [[ivfBuild]], verbatim —
-    * the large-sample / ragged-vector path, and LloydsParitySpec's
-    * reference side. */
-  private[operators] def distributedTrain(corpus: DataFrame, nid: String,
-                                          nvec: String, nCells: Int,
-                                          trainSample: Int, iters: Int)
-      : Array[Array[Double]] = {
-    val sample = corpus
-      .select(col(nid).cast("long").as("__sid"), col(nvec).cast("array<float>").as("__sv"))
-      .orderBy("__sid").limit(trainSample)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val init = sample
-        .orderBy(Splits.ringHash(col("__sid")), col("__sid"))
-        .limit(nCells)
-        .select(col("__sv")).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      require(init.nonEmpty, "corpus is empty")
-      lloydsCentroids(sample, "__sv", nCells, iters, init)
-    } finally { sample.unpersist(); () }
-  }
-
   /** Probe a built [[IvfIndex]]: each query ranks only the candidates in
     * its `nProbe` nearest cells by exact cosine. Pure plan construction —
     * zero Spark jobs until the caller acts on the result, and never any
     * re-training (asserted in SimilaritySpec). */
   def ivfProbe(index: IvfIndex, queries: DataFrame, qid: String, qvec: String,
                k: Int, nProbe: Int = 4): DataFrame = {
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     // nProbe nearest cells for a query: rank the per-cell scores, take top n
     def probeCells(v: Column): Column =
       slice(reverse(array_sort(array(cellScores(v, index.centroids): _*))), 1, nProbe)
@@ -609,7 +529,6 @@ object Similarity {
     * count threshold. */
   def driftAudit(index: IvfIndex, batch: DataFrame,
                  nid: String, nvec: String): DataFrame = {
-    graft.plans.FloatDotProduct.register(batch.sparkSession)
     val b = batch.select(col(nid).as("nid"), col(nvec).cast("array<float>").as("nv"))
       .withColumn("cell", nearestCell(col("nv"), index.centroids))
     val idx = index.assigned.groupBy("cell").agg(count(lit(1)).as("n_idx"))
@@ -661,7 +580,6 @@ object Similarity {
                        queries: DataFrame, qid: String, qvec: String,
                        filterKeys: Seq[String], k: Int, nProbe: Int = 4): DataFrame = {
     require(filterKeys.nonEmpty, "use ivfProbe when there is no filter")
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val assigned = index.assigned.join(
       meta.select((col(metaId).as("nid") +: filterKeys.map(col)): _*), Seq("nid"))
     def probeCells(v: Column): Column =
@@ -697,40 +615,26 @@ object Similarity {
     * its own k-means codebook — k^m effective cells from m·k trained
     * centroids.
     *
-    * Training reuses the IVF discipline per subspace ([[lloydsCentroids]]
-    * on the sliced sample — distributed, deterministic: sample pinned by
-    * id order, init spread in `Splits.ringHash` order, fixed-point means),
-    * so the DuckDB oracle replays all m trainings exactly (v08). Encoding
+    * Training reuses the IVF discipline per subspace ([[lloydsLocal]] on
+    * the sliced sample — deterministic: sample pinned by id order, init
+    * spread in `Splits.ringHash` order, fixed-point means), so the DuckDB
+    * oracle replays all m trainings exactly (v08). Encoding
     * is one map-only pass: per subspace an argmax over k codegen'd dots
     * with the codebook as a literal (broadcast), no shuffle. */
   def pqBuild(corpus: DataFrame, nid: String, nvec: String, dim: Int,
               m: Int = 4, k: Int = 8, iters: Int = 4,
-              trainSample: Int = 10000, persist: Boolean = true,
-              trainTimeoutSec: Long = 3600L): PqIndex = {
+              trainSample: Int = 10000, persist: Boolean = true): PqIndex = {
     require(m >= 1 && dim % m == 0, s"dim $dim must split into $m even subspaces")
-    require(trainTimeoutSec > 0, s"trainTimeoutSec must be positive, got $trainTimeoutSec")
-    graft.plans.FloatDotProduct.register(corpus.sparkSession)
     val subDim = dim / m
-    // Small requested caps: ONE collect of the bounded sample and all m
-    // subspace codebooks train driver-locally off it — bit-identical to
-    // the distributed per-subspace chain (lloydsLocal scaladoc), and the
-    // m × (1 init + iters) scheduler round-trips collapse into the single
-    // sample job. Big caps keep the distributed concurrent path below.
-    val codebooks =
-      if (localTrainOk(corpus.sparkSession, trainSample)) {
-        val (_, vecs, order) = collectTrainSample(corpus, nid, nvec, trainSample)
-        require(vecs.nonEmpty, "corpus is empty")
-        if (vecs.forall(_.length == dim)) {
-          (0 until m).map { ms =>
-            val sub = vecs.map(v =>
-              java.util.Arrays.copyOfRange(v, ms * subDim, (ms + 1) * subDim))
-            val init = order.take(k).map(i => sub(i).map(_.toDouble))
-            lloydsLocal(sub, iters, init)
-          }.toArray
-        } else pqTrainDistributed(corpus, nid, nvec, m, subDim, k, iters,
-          trainSample, trainTimeoutSec)
-      } else pqTrainDistributed(corpus, nid, nvec, m, subDim, k, iters,
-        trainSample, trainTimeoutSec)
+    // ONE collect of the bounded sample; all m subspace codebooks train
+    // off it
+    val (vecs, order) = collectTrainSample(corpus, nid, nvec, trainSample)
+    require(vecs(0).length == dim, s"$nvec has dim ${vecs(0).length}, expected $dim")
+    val codebooks = (0 until m).map { ms =>
+      val sub = vecs.map(v =>
+        java.util.Arrays.copyOfRange(v, ms * subDim, (ms + 1) * subDim))
+      lloydsLocal(sub, iters, order.take(k).map(i => sub(i).map(_.toDouble)))
+    }.toArray
     val encoded = {
       val withCodes = encodeWith(codebooks, subDim, corpus, nid, nvec)
       if (persist) withCodes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -740,53 +644,6 @@ object Similarity {
     // corpus trains fewer than k codes per subspace
     PqIndex(codebooks, m, codebooks.head.length, subDim, encoded,
       () => { if (persist) { encoded.unpersist(); () } })
-  }
-
-  /** The pre-r17 distributed PQ training, verbatim — the large-sample /
-    * ragged-vector path, and LloydsParitySpec's per-subspace reference.
-    * The m subspace trainings are independent — run CONCURRENTLY
-    * (concurrent actions over the shared persisted sample are safe and
-    * the scheduler interleaves their jobs), so build latency is one
-    * training, not m sequential ones. A DEDICATED daemon pool with a
-    * BOUNDED await, not the global pool with Duration.Inf: a training
-    * wedged on a sick executor must fail this build with a timeout, not
-    * silently hold global-pool threads (and the session) hostage. */
-  private[operators] def pqTrainDistributed(corpus: DataFrame, nid: String,
-                                            nvec: String, m: Int, subDim: Int,
-                                            k: Int, iters: Int,
-                                            trainSample: Int,
-                                            trainTimeoutSec: Long)
-      : Array[Array[Array[Double]]] = {
-    val sample = corpus
-      .select(col(nid).cast("long").as("__sid"), col(nvec).cast("array<float>").as("__sv"))
-      .orderBy("__sid").limit(trainSample)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(m,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-pq-train"); t.setDaemon(true); t
-      })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try Await.result(
-      Future.sequence((0 until m).toList.map { ms => Future {
-        val sliced = sample.select(col("__sid"),
-          slice(col("__sv"), ms * subDim + 1, subDim).as("__sv"))
-        val init = sliced
-          .orderBy(Splits.ringHash(col("__sid")), col("__sid"))
-          .limit(k)
-          .select(col("__sv")).collect()
-          .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-        require(init.nonEmpty, "corpus is empty")
-        lloydsCentroids(sliced, "__sv", k, iters, init)
-      }}),
-      scala.concurrent.duration.Duration(trainTimeoutSec,
-        java.util.concurrent.TimeUnit.SECONDS)).toArray
-    finally {
-      pool.shutdownNow()
-      // in the finally, not after: a timed-out build must not leave the
-      // persisted training sample pinned for the session's lifetime
-      sample.unpersist(); ()
-    }
   }
 
   /** PQ asymmetric-distance top-k: a candidate's score against query `q`
@@ -801,7 +658,6 @@ object Similarity {
     * survivors. */
   def pqTopK(index: PqIndex, queries: DataFrame, qid: String, qvec: String,
              k: Int): DataFrame = {
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val q = queries.select(col(qid).as("qid"), col(qvec).cast("array<float>").as("qv"))
     val adc = (0 until index.m).map { ms =>
       val cb = typedLit(index.codebooks(ms).map(_.map(_.toFloat).toSeq).toSeq)
@@ -849,7 +705,6 @@ object Similarity {
     * arithmetic. */
   private def pqEncode(index: PqIndex, batch: DataFrame,
                nid: String, nvec: String): DataFrame = {
-    graft.plans.FloatDotProduct.register(batch.sparkSession)
     encodeUnderCodebooks(index, batch, nid, nvec)
   }
 
@@ -859,7 +714,6 @@ object Similarity {
     * encoded frame. Same kernel, same determinism. */
   def pqEncodeWith(codebooks: Array[Array[Array[Double]]], subDim: Int,
                    batch: DataFrame, nid: String, nvec: String): DataFrame = {
-    graft.plans.FloatDotProduct.register(batch.sparkSession)
     encodeWith(codebooks, subDim, batch, nid, nvec)
   }
 
@@ -955,7 +809,7 @@ object Similarity {
   }
 
   /** Train the IVFADC index: coarse quantizer ([[ivfBuild]]'s Lloyd's —
-    * distributed, deterministic), then per-subspace codebooks over the
+    * deterministic), then per-subspace codebooks over the
     * cell RESIDUALS ([[pqBuild]] on `nv − centroid[cell]` — residuals
     * concentrate near zero, which is why quantizing them beats
     * quantizing raw vectors at equal bit budget), then one map-only
@@ -968,7 +822,6 @@ object Similarity {
                  nCells: Int = 8, m: Int = 4, k: Int = 8,
                  coarseIters: Int = 4, pqIters: Int = 4,
                  trainSample: Int = 10000, persist: Boolean = true): IvfPqIndex = {
-    graft.plans.FloatDotProduct.register(corpus.sparkSession)
     val coarse = ivfBuild(corpus, nid, nvec, nCells, trainSample,
       coarseIters, persist = true)
     try {
@@ -1007,7 +860,6 @@ object Similarity {
     * dedup is needed. */
   def ivfPqProbe(index: IvfPqIndex, queries: DataFrame, qid: String,
                  qvec: String, k: Int, nProbe: Int = 2): DataFrame = {
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     def probeCells(v: Column): Column =
       slice(reverse(array_sort(array(cellScores(v, index.centroids): _*))),
         1, nProbe)
@@ -1080,7 +932,6 @@ object Similarity {
   def ivfPqEncodeWith(centroids: Array[Array[Double]],
                       codebooks: Array[Array[Array[Double]]], subDim: Int,
                       batch: DataFrame, nid: String, nvec: String): DataFrame = {
-    graft.plans.FloatDotProduct.register(batch.sparkSession)
     val assigned = assignCells(batch, nid, nvec, centroids)
     pqEncodeWith(codebooks, subDim,
         residuals(centroids, assigned), "nid", "rv")
@@ -1116,7 +967,6 @@ object Similarity {
     * exact-precision, the standard two-stage ANN serving shape. */
   def rerankCosine(cands: DataFrame, queries: DataFrame, qid: String, qvec: String,
                    corpus: DataFrame, nid: String, nvec: String, k: Int): DataFrame = {
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val q = queries.select(col(qid).as("qid"), col(qvec).cast("array<float>").as("qv"))
       .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
     // the corpus side stays a BARE (nid, vector) projection below the
@@ -1145,7 +995,6 @@ object Similarity {
                          corpus: DataFrame, nid: String, nvec: String,
                          filterKeys: Seq[String], k: Int): DataFrame = {
     require(filterKeys.nonEmpty, "use cosineTopK when there is no filter")
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val q = queries.select(
       (Seq(col(qid).as("qid"), col(qvec).cast("array<float>").as("qv")) ++
         filterKeys.map(col)): _*)
@@ -1190,7 +1039,6 @@ object Similarity {
   def hammingRerankTopK(queries: DataFrame, qid: String, qvec: String,
                         corpus: DataFrame, nid: String, nvec: String,
                         k: Int, dim: Int = 64, preK: Int = 32): DataFrame = {
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val q = queries
       .select(col(qid).as("qid"), col(qvec).cast("array<float>").as("qv"))
       .select(col("qid"), signWord(col("qv"), dim).as("qw"))
@@ -1236,7 +1084,6 @@ object Similarity {
     require(probeRadius == 0 || probeRadius == 1,
       s"probeRadius=$probeRadius unsupported: only 0 (exact bucket) and 1 " +
         "(all single-bit flips) are implemented")
-    graft.plans.FloatDotProduct.register(queries.sparkSession)
     val planes = hyperplanes(nPlanes, dim)
     val probes: Column => Column = b =>
       if (probeRadius == 0) array(b)

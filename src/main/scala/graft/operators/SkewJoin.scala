@@ -58,7 +58,6 @@ object SkewJoin {
   def bloomFilteredJoin(large: DataFrame, small: DataFrame, key: String,
                         estimatedItems: Long = 1000000L,
                         numBits: Long = 1L << 23): DataFrame = {
-    graft.plans.BloomMembership.register(large.sparkSession)
     // xxhash64 hashes each numeric TYPE differently, while the join itself
     // coerces both sides to a common type before comparing — hashing the
     // raw columns of an INT-vs-BIGINT key pair would build the filter from

@@ -158,7 +158,7 @@ object Splits {
   /** Bloom-filter decontamination AUDIT — the sketch-accelerated cousin of
     * [[contamination]], in the production direction: the BENCHMARK split's
     * distinct n-grams build one Bloom filter (Spark's own
-    * `BloomFilterAggregate`, surfaced via [[graft.plans.BloomMembership]]),
+    * `BloomFilterAggregate`, surfaced via [[graft.plans.GraftExtensions]]),
     * and every CORPUS doc's grams probe it map-side. At 100 TB this is the
     * shape that wins: the benchmark side is small and aggregates to a
     * `numBits/8`-byte filter with NO distinct shuffle (Bloom insertion is
@@ -182,7 +182,6 @@ object Splits {
                          numBits: Long = 1L << 22): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.plans.BloomMembership.register(spark)
     def shingled(rows: DataFrame): DataFrame = rows
       .as[(Long, String, String)]
       .mapPartitions(_.flatMap { case (id, sp, text) =>

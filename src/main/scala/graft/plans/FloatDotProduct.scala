@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -91,37 +89,4 @@ object FloatDotProduct {
     classOf[FloatDotProduct].getName, null, "float_dot",
     "_FUNC_(a, b) - dot product of two float arrays, accumulated in double.",
     "")
-
-  /** Idempotently register `float_dot` in a session's function registry so
-    * `expr("float_dot(a, b)")` and SQL both resolve it. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("float_dot")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, Builders.binary("float_dot")(FloatDotProduct(_, _)))
-    }
-  }
-}
-
-/** Production registration path: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * (set by default in GraftSession.tune). Injects the engine's native
-  * expressions AND its optimizer rewrites into every session of the cluster
-  * (SparkSessionExtensions — the supported extension point). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("float_dot"), FloatDotProduct.info,
-      Builders.binary("float_dot")(FloatDotProduct(_, _))))
-    ext.injectFunction((FunctionIdentifier("sig_match_count"), SigMatchCount.info,
-      Builders.binary("sig_match_count")(SigMatchCount(_, _))))
-    ext.injectFunction((FunctionIdentifier("set_jaccard"), SetJaccard.info,
-      Builders.binary("set_jaccard")(new SetJaccard(_, _))))
-    ext.injectFunction((FunctionIdentifier("bloom_agg"),
-      BloomMembership.aggInfo, BloomMembership.aggBuilder))
-    ext.injectFunction((FunctionIdentifier("bloom_might_contain"),
-      BloomMembership.probeInfo, BloomMembership.probeBuilder))
-    ext.injectFunction((FunctionIdentifier("ngram_hashes"), NgramHashes.info,
-      Builders.binary("ngram_hashes")(NgramHashes(_, _))))
-    ext.injectOptimizerRule(_ => FuseSetJaccard)
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-  }
 }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, XXH64}
@@ -135,12 +133,4 @@ object NgramHashes {
     classOf[NgramHashes].getName, null, "ngram_hashes",
     "_FUNC_(text, w) - distinct 64-bit hashes of the text's sliding w-token windows.",
     "")
-
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("ngram_hashes")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, Builders.binary("ngram_hashes")(NgramHashes(_, _)))
-    }
-  }
 }

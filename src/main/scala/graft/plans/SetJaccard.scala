@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -166,15 +164,6 @@ object SetJaccard {
       "(set semantics; sort with array_sort first).",
     "")
 
-  /** Idempotently register `set_jaccard` on a session. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("set_jaccard")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, Builders.binary("set_jaccard")(new SetJaccard(_, _)))
-    }
-  }
-
   /** JVM-side sort in exactly the expression's element order (binary UTF-8
     * ascending, nulls LAST — the same order `array_sort` uses for strings)
     * — for kernels that build per-document sets once and compare them
@@ -220,11 +209,7 @@ object FuseSetJaccard extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString("spark.graft.fuseSetJaccard", "true") != "true") plan
-    else rewrite(plan)
-
-  private def rewrite(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     case d @ Divide(l, r, mode) =>
       (stripToDouble(l), stripToDouble(r)) match {
         case (Size(ArrayIntersect(a1, b1), false), Size(ArrayUnion(a2, b2), false))

@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -87,13 +85,4 @@ object SigMatchCount {
     classOf[SigMatchCount].getName, null, "sig_match_count",
     "_FUNC_(a, b) - number of equal positions in two bigint arrays.",
     "")
-
-  /** Idempotently register `sig_match_count` on a session. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("sig_match_count")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, Builders.binary("sig_match_count")(SigMatchCount(_, _)))
-    }
-  }
 }

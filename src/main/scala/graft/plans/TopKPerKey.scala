@@ -196,31 +196,9 @@ object TopKStrategy extends SparkStrategy {
   * against the analyzed child so the wrapped plan needs no further
   * analysis. `orderBy` entries are (column, ascending). */
 object TopK {
-
-  /** Defensive registration, mirroring SetJaccard.register: if the session
-    * was created without GraftExtensions (pre-existing session, missing
-    * --conf), plant the strategy via the experimental hook so planning
-    * cannot fail with "no plan for TopKPerKey". `planner.strategies` already
-    * includes both the extension-injected strategies and
-    * `experimental.extraStrategies`, so an extension-configured session is
-    * detected and left untouched (no duplicate registration); the
-    * read-modify-write of `extraStrategies` is serialized on this object so
-    * two first calls racing cannot double-append. */
-  private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    synchronized {
-      val present =
-        spark.sessionState.planner.strategies.contains(TopKStrategy) ||
-          spark.experimental.extraStrategies.contains(TopKStrategy)
-      if (!present) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TopKStrategy
-      }
-    }
-
   def perKey(df: DataFrame, keys: Seq[String], orderBy: Seq[(String, Boolean)],
              k: Int): DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute =
       analyzed.output.find(_.name == name).getOrElse(

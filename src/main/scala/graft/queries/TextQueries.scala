@@ -1022,7 +1022,6 @@ object TextQueries {
     // collision is a ~n²·2⁻⁶⁴ event); the join back to docs carries one
     // row per doc, not per gram.
     "t25_ngram_novelty" -> { (s, dir) =>
-      graft.plans.NgramHashes.register(s)
       val exploded = docs(s, dir)
         .select(col("doc_id"),
           call_function("ngram_hashes", col("text"), lit(8)).as("ghs"))

@@ -22,6 +22,7 @@ object JobTrace {
         .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.GraftSession.requireExtensions(spark)
     val fn = graft.SparkEntry.queries(name)
     fn(spark, "/root/testdata/sf0.001").count() // warm codegen/readers
 

@@ -31,9 +31,13 @@ object PlanDump {
 }
 
 private object GraftSessionForPlans {
-  def session(cpus: String): SparkSession = graft.GraftSession.tune(
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-    .getOrCreate()
+  def session(cpus: String): SparkSession = {
+    val spark = graft.GraftSession.tune(
+      SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus))
+      .getOrCreate()
+    graft.GraftSession.requireExtensions(spark)
+    spark
+  }
 }

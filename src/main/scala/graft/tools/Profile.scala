@@ -18,6 +18,7 @@ object Profile {
         .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.GraftSession.requireExtensions(spark)
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q24_range_join", "d03_minhash_lsh", "d04_simhash", "d02_jaccard_pairs")
     for (name <- names) {

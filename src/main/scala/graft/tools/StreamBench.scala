@@ -34,6 +34,7 @@ object StreamBench {
         .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.GraftSession.requireExtensions(spark)
     graft.io.Tables.canaryEvents(spark, sfDir)
 
     // stage the table as nChunks files — one micro-batch each

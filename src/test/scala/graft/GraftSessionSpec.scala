@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** `tune()` must APPEND GraftExtensions to extensions the caller already
-  * configured, not overwrite them (round-4 advice) — spark.sql.extensions
-  * is a comma-separated list and last-write-wins would silently drop the
-  * caller's classes. Builder-only tests: no session is created. */
-class GraftSessionSpec extends AnyFunSuite {
+  * configured, not overwrite them — spark.sql.extensions is a
+  * comma-separated list and last-write-wins would silently drop the
+  * caller's classes (builder-only cases: no session is created). And
+  * `requireExtensions` must refuse a session the extensions did not
+  * build. */
+class GraftSessionSpec extends SparkSpec {
 
   private def extensionsOf(b: SparkSession.Builder): String =
     GraftSqlBridge.builderOption(b, "spark.sql.extensions").getOrElse("")
@@ -34,5 +36,14 @@ class GraftSessionSpec extends AnyFunSuite {
     GraftSession.tune(b)
     assert(extensionsOf(b) ===
       "com.example.CallerExtensions," + GraftSession.ExtensionsClass)
+  }
+
+  test("requireExtensions passes a tuned session and names tune when a function is missing") {
+    GraftSession.requireExtensions(spark)
+    val bare = GraftSqlBridge.cloneSession(spark)
+    bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier("float_dot"))
+    val e = intercept[IllegalArgumentException](GraftSession.requireExtensions(bare))
+    assert(e.getMessage.contains("float_dot"), e.getMessage)
+    assert(e.getMessage.contains("GraftSession.tune"), e.getMessage)
   }
 }

@@ -3,15 +3,17 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** The r17 driver-local Lloyd's path must be BIT-IDENTICAL to the
-  * distributed chain it replaces — the local path serves every
-  * oracle-certified training (v04/v08/v27/v28/v33 families and the bench
-  * prepare builds), so a single differing low bit would show up as an
-  * oracle hash break. Each case trains both paths on the same corpus and
-  * asserts Double.doubleToRawLongBits equality per element.
+/** The driver-local Lloyd's trainer must be BIT-IDENTICAL to Lloyd's
+  * written in Spark SQL ([[LloydsParitySpec.Reference]]) — the local
+  * trainer serves every oracle-certified training (v04/v08/v27/v28/v33
+  * families and the bench prepare builds), so a single differing low bit
+  * would show up as an oracle hash break. Each case trains both on the
+  * same corpus and asserts Double.doubleToRawLongBits equality per
+  * element.
   */
 class LloydsParitySpec extends SparkSpec {
   import sqlImplicits._
+  import LloydsParitySpec.Reference
 
   /** Deterministic pseudo-random float in a given range — fixture data. */
   private def f(seed: Long, lo: Double, hi: Double): Float = {
@@ -45,8 +47,7 @@ class LloydsParitySpec extends SparkSpec {
 
   private def trainBoth(df: org.apache.spark.sql.DataFrame, nCells: Int,
                         trainSample: Int, iters: Int): Unit = {
-    val dist = Similarity.distributedTrain(df, "vec_id", "embedding",
-      nCells, trainSample, iters)
+    val dist = Reference.train(df, nCells, trainSample, iters)
     // local path via ivfBuild's exact entry (collect + local init + local
     // iterations) — replicate the caller's wiring here so the spec pins
     // the composed path, not just the kernel
@@ -101,9 +102,8 @@ class LloydsParitySpec extends SparkSpec {
 
   test("pq subspace slices: local == distributed per subspace") {
     val df = corpus(80, 8)
-    val dist = Similarity.pqTrainDistributed(df, "vec_id", "embedding",
-      m = 4, subDim = 2, k = 4, iters = 4, trainSample = 80,
-      trainTimeoutSec = 600L)
+    val dist = Reference.trainPq(df, m = 4, subDim = 2, k = 4, iters = 4,
+      trainSample = 80)
     val rows = df.select(col("vec_id").cast("long"),
         col("embedding").cast("array<float>"))
       .orderBy("vec_id").limit(80).collect()
@@ -122,19 +122,78 @@ class LloydsParitySpec extends SparkSpec {
     }
   }
 
-  test("ivfBuild trains identically through the gate (conf off vs on)") {
+  test("ivfBuild trains identically to the reference") {
     val df = corpus(90, 8)
-    val viaLocal = Similarity.ivfBuild(df, "vec_id", "embedding",
+    val built = Similarity.ivfBuild(df, "vec_id", "embedding",
       nCells = 4, trainSample = 90, iters = 6, persist = false)
-    val prev = spark.conf.getOption("spark.graft.train.localMaxSample")
-    spark.conf.set("spark.graft.train.localMaxSample", "0") // force distributed
-    try {
-      val viaDist = Similarity.ivfBuild(df, "vec_id", "embedding",
-        nCells = 4, trainSample = 90, iters = 6, persist = false)
-      assertBitEqual(viaLocal.centroids, viaDist.centroids, "ivfBuild gate")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.train.localMaxSample", v)
-      case None => spark.conf.unset("spark.graft.train.localMaxSample")
+    assertBitEqual(built.centroids, Reference.train(df, 4, 90, 6), "ivfBuild")
+  }
+
+  test("ivfBuild and pqBuild refuse ragged vectors and oversized samples") {
+    val ragged = Seq((1L, Array(1f, 2f)), (2L, Array(1f, 2f, 3f)))
+      .toDF("vec_id", "embedding")
+    val e1 = intercept[IllegalArgumentException](
+      Similarity.ivfBuild(ragged, "vec_id", "embedding", nCells = 2))
+    assert(e1.getMessage.contains("one length"), e1.getMessage)
+    intercept[IllegalArgumentException](
+      Similarity.pqBuild(ragged, "vec_id", "embedding", dim = 2, m = 1))
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.ivfBuild(corpus(10, 4), "vec_id", "embedding",
+        trainSample = 65537))
+    assert(e2.getMessage.contains("65536"), e2.getMessage)
+  }
+}
+
+object LloydsParitySpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Lloyd's k-means in Spark SQL — the semantics the driver-local
+    * trainer must reproduce. The sample is pinned by id order and the
+    * init spread in `Splits.ringHash` order; per iteration every sample
+    * row is assigned its nearest cell with the codegen'd cell argmax
+    * ([[Similarity.assignCells]]), and new centroids come back from ONE
+    * groupBy over (cell, dim) of fixed-point means (per-element
+    * `round(x·2^20)` summed as longs — exact and order-independent). */
+  object Reference {
+
+    private def centroids(sample: DataFrame, nCells: Int, iters: Int)
+        : Array[Array[Double]] = {
+      val init = sample
+        .orderBy(Splits.ringHash(col("__sid")), col("__sid"))
+        .limit(nCells)
+        .select(col("__sv")).collect()
+        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      val scale = (1L << 20).toDouble
+      (1 to iters).foldLeft(init) { (cur, _) =>
+        val stats = Similarity.assignCells(sample, "__sid", "__sv", cur)
+          .select(col("cell"), posexplode(col("nv")).as(Seq("pos", "x")))
+          .groupBy("cell", "pos")
+          .agg((sum(round(col("x") * scale).cast("long")).cast("double")
+            / count(lit(1)) / scale).as("m"))
+          .collect()
+        val next = cur.map(_.clone())
+        stats.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+        next // cells that captured no points keep their old center
+      }
+    }
+
+    private def sample(df: DataFrame, trainSample: Int): DataFrame =
+      df.select(col("vec_id").cast("long").as("__sid"),
+          col("embedding").cast("array<float>").as("__sv"))
+        .orderBy("__sid").limit(trainSample)
+
+    def train(df: DataFrame, nCells: Int, trainSample: Int, iters: Int)
+        : Array[Array[Double]] =
+      centroids(sample(df, trainSample), nCells, iters)
+
+    /** Per-subspace codebooks, one subspace after another. */
+    def trainPq(df: DataFrame, m: Int, subDim: Int, k: Int, iters: Int,
+                trainSample: Int): Array[Array[Array[Double]]] = {
+      val s = sample(df, trainSample)
+      (0 until m).map { ms =>
+        centroids(s.select(col("__sid"),
+          slice(col("__sv"), ms * subDim + 1, subDim).as("__sv")), k, iters)
+      }.toArray
     }
   }
 }

@@ -276,12 +276,6 @@ class SimilaritySpec extends SparkSpec {
       dim = 8, m = 2, k = 4, iters = 4, trainSample = 12)
     val idx2 = Similarity.pqBuild(vecs, "vec_id", "embedding",
       dim = 8, m = 2, k = 4, iters = 4, trainSample = 12)
-    // the training await is bounded — a non-positive bound is refused
-    // rather than interpreted as "wait forever"
-    intercept[IllegalArgumentException] {
-      Similarity.pqBuild(vecs, "vec_id", "embedding",
-        dim = 8, m = 2, k = 4, trainTimeoutSec = 0L)
-    }
     try {
       // deterministic: identical codebooks and identical corpus codes
       assert(idx.codebooks.map(_.map(_.toSeq).toSeq).toSeq ===

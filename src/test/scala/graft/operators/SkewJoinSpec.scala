@@ -113,7 +113,6 @@ class SkewJoinSpec extends SparkSpec {
     // FP rate is ~0, so survivors ≈ matches
     val fact = (1 to 1000).map(i => (i.toLong, i)).toDF("k", "x")
     val small = (1 to 10).map(i => (i.toLong * 100, i)).toDF("k", "y")
-    graft.plans.BloomMembership.register(spark)
     val bytes = small.agg(call_function("bloom_agg", xxhash64(col("k")),
       lit(10000L), lit(1L << 17))).head.getAs[Array[Byte]](0)
     val survivors = fact.filter(call_function("bloom_might_contain",

@@ -9,7 +9,6 @@ class FloatDotProductSpec extends SparkSpec {
   import sqlImplicits._
 
   test("float_dot equals the interpreted HOF formulation bit-for-bit") {
-    FloatDotProduct.register(spark)
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val both = e.select(
       call_function("float_dot", col("embedding"), col("embedding")).as("native"),
@@ -20,7 +19,6 @@ class FloatDotProductSpec extends SparkSpec {
   }
 
   test("float_dot participates in whole-stage codegen") {
-    FloatDotProduct.register(spark)
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val p = e.select(call_function("float_dot", col("embedding"), col("embedding")))
       .queryExecution
@@ -30,7 +28,6 @@ class FloatDotProductSpec extends SparkSpec {
   }
 
   test("float_dot handles nulls and known values") {
-    FloatDotProduct.register(spark)
     val df = Seq(
       (Some(Array(1f, 2f, 3f)), Some(Array(4f, 5f, 6f))),
       (None, Some(Array(1f, 1f)))
@@ -41,7 +38,6 @@ class FloatDotProductSpec extends SparkSpec {
   }
 
   test("SQL resolves float_dot (registry + extensions path)") {
-    FloatDotProduct.register(spark)
     val r = spark.sql("SELECT float_dot(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS d")
       .head().getDouble(0)
     assert(r === 11.0)

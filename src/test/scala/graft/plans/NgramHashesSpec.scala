@@ -16,7 +16,6 @@ class NgramHashesSpec extends SparkSpec {
   }
 
   private def kernelCount(text: String, w: Int): Int = {
-    NgramHashes.register(spark)
     val df = spark.range(1).select(
       size(call_function("ngram_hashes", lit(text), lit(w))).as("n"))
     df.collect()(0).getInt(0)
@@ -47,7 +46,6 @@ class NgramHashesSpec extends SparkSpec {
   }
 
   test("null text yields null (not a crash), non-null via column path") {
-    NgramHashes.register(spark)
     val df = spark.sql(
       "SELECT ngram_hashes(CAST(NULL AS STRING), 3) AS a, " +
         "ngram_hashes('x y z', 3) AS b")

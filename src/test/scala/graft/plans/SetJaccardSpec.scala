@@ -10,7 +10,6 @@ class SetJaccardSpec extends SparkSpec {
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
   test("matches the array_intersect/array_union form on varied inputs") {
-    SetJaccard.register(spark)
     val data = Seq(
       (Seq("a", "b", "c"), Seq("b", "c", "d")),
       (Seq("x"), Seq("x")),
@@ -28,7 +27,6 @@ class SetJaccardSpec extends SparkSpec {
   }
 
   test("matches on seeded random multisets incl. duplicates") {
-    SetJaccard.register(spark)
     val rnd = new scala.util.Random(7)
     val data = Seq.fill(300)(
       (Seq.fill(rnd.nextInt(20))(s"w${rnd.nextInt(12)}"),
@@ -43,7 +41,6 @@ class SetJaccardSpec extends SparkSpec {
   }
 
   test("NULL array propagates, empty union raises under ANSI") {
-    SetJaccard.register(spark)
     val r = Seq((Seq("a"), Option.empty[Seq[String]])).toDF("a", "b")
       .select(call_function("set_jaccard", $"a", $"b")).head()
     assert(r.isNullAt(0))
@@ -121,7 +118,6 @@ class SetJaccardSpec extends SparkSpec {
   }
 
   test("set_jaccard participates in whole-stage codegen") {
-    SetJaccard.register(spark)
     val p = spark.range(10)
       .select(array(concat(lit("a"), col("id")), lit("b")).as("a"),
               array(concat(lit("a"), col("id")), lit("c")).as("b"))

@@ -8,7 +8,6 @@ class SigMatchCountSpec extends SparkSpec {
   import sqlImplicits._
 
   private lazy val sigs = {
-    SigMatchCount.register(spark)
     Seq(
       (Seq(1L, 2L, 3L, 4L), Seq(1L, 9L, 3L, 7L)), // 2 matches
       (Seq(5L, 5L), Seq(5L, 5L)),                 // all match
@@ -26,14 +25,12 @@ class SigMatchCountSpec extends SparkSpec {
   }
 
   test("NULL on length mismatch, like float_dot") {
-    SigMatchCount.register(spark)
     val r = Seq((Seq(1L, 2L, 3L), Seq(1L, 2L))).toDF("a", "b")
       .select(call_function("sig_match_count", $"a", $"b")).head()
     assert(r.isNullAt(0))
   }
 
   test("sig_match_count participates in whole-stage codegen") {
-    SigMatchCount.register(spark)
     // a literal Seq collapses to LocalTableScan (no codegen stage at all),
     // so derive the arrays from range to get a real codegen'd pipeline
     val p = spark.range(10)
