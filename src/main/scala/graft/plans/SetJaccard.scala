@@ -217,7 +217,7 @@ object FuseSetJaccard extends Rule[LogicalPlan] {
               ((a1.semanticEquals(a2) && b1.semanticEquals(b2)) ||
                 (a1.semanticEquals(b2) && b1.semanticEquals(a2))) =>
           SetJaccard(a1, b1, assumeSorted = false,
-            failOnError = mode == EvalMode.ANSI)
+            failOnError = mode.evalMode == EvalMode.ANSI)
         case _ => d
       }
   }

@@ -29,6 +29,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
   * batch, and its persisted frames (MEMORY_AND_DISK — spill, not eviction)
   * carry the data even after the swapped-out epoch's files are pruned.
   *
+  * Built over an index root by [[TieredRoll.pin]], the one constructor
+  * site in the library; the closure constructor also lets specs substitute
+  * fakes.
+  *
   * Thread safety: `foreachBatch` bodies of one query are serial, but
   * [[close]] can race a terminating stream — both are synchronized and
   * close is idempotent. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,21 +24,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[GraphTieredStream.Tiered.mergedOutDegrees]], the exact cross-tier
   * degrees at |Δ|-proportional cost, so answers equal top-k by neighbour
   * out-degree over the full edge set (TieredServeSpec pins the identity).
-  * The pin and sink contract are [[EpochPin.serve]]'s. */
+  * The roll pins and serves it ([[TieredRoll.answer]] /
+  * [[TieredRoll.serve]]). */
 object GraphServeStream {
 
   /** Answer ONE batch of `(qid LONG, node LONG)` probes against the
     * newest committed view under `indexRoot`: per-probe top-k neighbors
     * by (neighbor outdeg DESC, dst ASC). Returns `(epochId, answers)`
     * with answers `(qid, rank, dst, dst_outdeg)` eagerly checkpointed
-    * ([[EpochPin.once]]). Pure batch logic — unit-testable without a
+    * ([[TieredRoll.answer]]). Pure batch logic — unit-testable without a
     * stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, k: Int = 5,
                   hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit)
       : (Long, DataFrame) =
-    EpochPin.once(queries,
-      tieredPinFor(queries.sparkSession, indexRoot, hubLimit),
-      s"graph epoch under $indexRoot")(answerPlan(_, _, k))
+    new GraphTieredStream.Roll(queries.sparkSession, indexRoot, hubLimit)
+      .answer(queries, "graph epoch")(answerPlan(_, _, k))
 
   /** The probe plan over a LIVE tiered view (the caller owns its
     * lifetime; the result's lineage reads its frames). */
@@ -59,19 +59,7 @@ object GraphServeStream {
       .select(col("qid"), col("rank"), col("dst"), col("dst_outdeg"))
   }
 
-  /** A standing pin on the newest committed view ([[EpochPin]]); the
-    * staleness check is the tiered `currentEpochId` (minor or major
-    * commits bump it). */
-  def tieredPinFor(spark: SparkSession, indexRoot: String,
-                   hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit)
-      : EpochPin[GraphTieredStream.Tiered] =
-    new EpochPin(
-      () => GraphTieredStream.currentEpochId(spark, indexRoot, hubLimit),
-      () => GraphTieredStream.loadCurrent(spark, indexRoot, hubLimit)
-        .map(t => t.epochId -> t),
-      (t: GraphTieredStream.Tiered) => t.release())
-
-  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+  /** Start the serving stream ([[TieredRoll.serve]]): `queries` (a streaming
     * `(qid, node)` frame) → per-batch probe → one `batch=<batchId>`
     * parquet directory each under `outDir`, rows stamped with the
     * answering epoch. */
@@ -79,7 +67,6 @@ object GraphServeStream {
                   checkpointDir: String, k: Int = 5,
                   hubLimit: Long = graft.operators.Adjacency.DefaultHubLimit,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EpochPin.serve("graph", queries,
-      tieredPinFor(queries.sparkSession, indexRoot, hubLimit),
-      outDir, checkpointDir, trigger)(answerPlan(_, _, k))
+    new GraphTieredStream.Roll(queries.sparkSession, indexRoot, hubLimit)
+      .serve(queries, outDir, checkpointDir, trigger)(answerPlan(_, _, k))
 }

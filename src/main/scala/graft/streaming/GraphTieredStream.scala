@@ -30,8 +30,8 @@ import graft.operators.{Adjacency, Checkpoints, IndexStore}
   * (standard LSM trade); [[Tiered.mergedOutDegrees]] restores exactness
   * mid-window at |Δ|-proportional cost (the serving path uses it).
   *
-  * RETRACTION: query-time, the `…Excluding` reads on [[Tiered]] anti-join
-  * a caller-held tombstone EDGE set — a GDPR-style "drop this user's
+  * RETRACTION: query-time, [[Tiered.mergedEdgesExcluding]] anti-joins a
+  * caller-held tombstone EDGE set — a GDPR-style "drop this user's
   * co-purchase edges" is served immediately, at dead-set-proportional
   * extra cost per read; maintenance-window, [[compactMajor]] physically
   * rebuilds over the survivor edges into a NEW L1 generation, after which
@@ -58,6 +58,7 @@ object GraphTieredStream {
     protected def saveL1(l1: Adjacency.Hybrid, dir: String, note: String): Unit =
       IndexStore.saveGraphIndex(spark, l1, dir, note, pm)
     protected def releaseL1(l1: Adjacency.Hybrid): Unit = l1.release()
+    protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Adjacency.Hybrid]): Tiered = {
       val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -86,14 +87,6 @@ object GraphTieredStream {
       labeled(sc, s"graph-tier e$epochId: major-save")(commit(built, dir, note))
     }
   }
-
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs(spark: SparkSession, root: String, hubLimit: Long): Seq[Long] =
-    new Roll(spark, root, hubLimit).l1Epochs
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs(spark: SparkSession, root: String, hubLimit: Long): Seq[Long] =
-    new Roll(spark, root, hubLimit).l0Epochs
 
   /** The ≤-2-tier reader view: newest committed L1 (possibly absent —
     * pre-first-major streams serve from deltas alone) plus the live L0
@@ -181,76 +174,15 @@ object GraphTieredStream {
       Checkpoints.sweepingOnFailure(delta.sparkSession.sparkContext)(
         Adjacency.build(mergedEdges, dedup = true, hubLimit = hubLimit))
 
-    // ---- tombstoned-edge exclusion reads (query-time retraction) ----
-    // `dead` is a (src, dst) edge tombstone frame held by the caller (the
-    // ivfProbeExcluding pattern at the graph layer). No forced broadcast
-    // on it: tombstone sets are usually tiny and AQE broadcasts them at
-    // runtime, but a bulk GDPR sweep may not be — the mergedOutDegrees
-    // review convention.
-
-    /** [[neighbors]] with a tombstone edge set excluded — the point-read
-      * retraction path. The anti-join keys on the PRE-projection
-      * (src, dst), so only the queried sources' dead edges ever join;
-      * cost stays query-proportional plus the dead-set join. */
-    def neighborsExcluding(per: DataFrame, dead: DataFrame): DataFrame = {
-      val payload = per.columns.filter(_ != "src").toSeq.map(col)
-      val outCols = payload :+ col("dst")
-      // "__src" survives expand as payload, keeping the src key next to
-      // each produced dst so the edge-level anti-join has both halves
-      val keyed = per.withColumn("__src", col("src"))
-      val l1Side = l1.map(_.expand(keyed).select((col("__src") +: outCols): _*))
-      val deltaSide = delta.join(keyed, Seq("src"))
-        .select((col("__src") +: outCols): _*)
-      l1Side.fold(deltaSide)(_.unionByName(deltaSide))
-        .join(dead.select(col("src").as("__src"), col("dst")).distinct(),
-          Seq("__src", "dst"), "left_anti")
-        .select(outCols: _*).distinct()
-    }
-
-    /** [[mergedEdges]] minus the tombstone set — the survivor edge
-      * multiset a physical compaction would store. */
+    /** [[mergedEdges]] minus a caller-held (src, dst) tombstone edge set —
+      * the survivor edges a physical compaction would store, served before
+      * the maintenance window. No forced broadcast on `dead`: a bulk GDPR
+      * sweep may not be small (the [[mergedOutDegrees]] convention). */
     def mergedEdgesExcluding(dead: DataFrame): DataFrame =
       mergedEdges.join(
         dead.select(col("src"), col("dst")).distinct(),
         Seq("src", "dst"), "left_anti")
-
-    /** EXACT out-degrees over the survivor edge set at |dead|-proportional
-      * extra cost (never a full re-count): only the tombstoned SOURCES'
-      * stored edges are recovered (the semi-join sits below the L1
-      * explode, the [[mergedOutDegrees]] discipline), a tombstone naming
-      * an edge that is not actually stored subtracts nothing, and sources
-      * whose every edge died vanish from the output — degrees equal
-      * `mergedEdgesExcluding(dead).groupBy(src).count()` exactly. */
-    def mergedOutDegreesExcluding(dead: DataFrame): DataFrame = {
-      val dd = dead.select(col("src"), col("dst")).distinct()
-      val srcs = dd.select("src").distinct()
-      val l1Side = l1.map(h => h.expand(srcs.withColumn("qid", col("src")))
-        .select(col("qid").as("src"), col("dst")))
-      val dSide = delta.join(srcs, Seq("src")).select(col("src"), col("dst"))
-      val stored = l1Side.fold(dSide)(_.unionByName(dSide)).distinct()
-      val rm = dd.join(stored, Seq("src", "dst"), "left_semi")
-        .groupBy("src").agg(count(lit(1)).as("__rm"))
-      mergedOutDegrees.join(rm, Seq("src"), "left")
-        .select(col("src"),
-          (col("outdeg") - coalesce(col("__rm"), lit(0L))).as("outdeg"))
-        .filter(col("outdeg") > 0)
-    }
-
-    /** Full-adjacency view over the survivor edges — what [[compactMajor]]
-      * commits durably, available to a whole-graph consumer that cannot
-      * wait for the maintenance window. Caller releases. */
-    def mergedHybridExcluding(dead: DataFrame,
-        hubLimit: Long = Adjacency.DefaultHubLimit): Adjacency.Hybrid =
-      Checkpoints.sweepingOnFailure(delta.sparkSession.sparkContext)(
-        Adjacency.build(mergedEdgesExcluding(dead), dedup = true,
-          hubLimit = hubLimit))
   }
-
-  /** The id [[loadCurrent]] would return (listing + marker peeks only).
-    * `None` before any commit (either tier counts). */
-  def currentEpochId(spark: SparkSession, root: String,
-                     hubLimit: Long = Adjacency.DefaultHubLimit): Option[Long] =
-    new Roll(spark, root, hubLimit).currentEpochId
 
   /** Load the newest committed tiered view; `None` before any commit.
     * Zero Spark jobs until a frame is consumed. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -15,22 +15,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `ivfPqBuild` + `ivfPqAppend` chain (v31) directly. Same probe contract
   * as the sibling servers: a candidate whose nid equals the probe's qid is
   * excluded — serve external query streams from a disjoint id namespace.
-  * The pin and sink contract are [[EpochPin.serve]]'s. */
+  * The roll pins and serves it ([[TieredRoll.answer]] /
+  * [[TieredRoll.serve]]). */
 object IvfPqServeStream {
 
   /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
     * the newest committed tiered view under `indexRoot`. Returns
     * `(epochId, answers)` with answers `(qid, rank, nid, adc)` eagerly
-    * checkpointed ([[EpochPin.once]]). Pure batch logic — unit-testable
-    * without a stream. */
+    * checkpointed ([[TieredRoll.answer]]). Pure batch logic —
+    * unit-testable without a stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, dim: Int,
                   k: Int = 5, nProbe: Int = 2, nCells: Int = 8,
                   m: Int = 4, codebookK: Int = 8,
                   coarseIters: Int = 4, pqIters: Int = 4,
                   trainSample: Int = 10000): (Long, DataFrame) =
-    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot,
-        dim, nCells, m, codebookK, coarseIters, pqIters, trainSample),
-      s"IVFADC epoch under $indexRoot")(answerPlan(_, _, k, nProbe))
+    new IvfPqTieredStream.Roll(queries.sparkSession, indexRoot, dim, nCells,
+      m, codebookK, coarseIters, pqIters, trainSample)
+      .answer(queries, "IVFADC epoch")(answerPlan(_, _, k, nProbe))
 
   /** The probe plan over a LIVE view (the caller owns its lifetime; the
     * result's lineage reads its coded frames). */
@@ -40,21 +41,7 @@ object IvfPqServeStream {
       .ivfPqProbe(t.index, queries, "qid", "qvec", k, nProbe)
       .select(col("qid"), col("rank"), col("nid"), col("adc"))
 
-  /** A standing pin on the newest committed tiered view. */
-  def tieredPinFor(spark: SparkSession, indexRoot: String,
-                   dim: Int, nCells: Int = 8, m: Int = 4, codebookK: Int = 8,
-                   coarseIters: Int = 4, pqIters: Int = 4,
-                   trainSample: Int = 10000)
-      : EpochPin[IvfPqTieredStream.Tiered] =
-    new EpochPin(
-      () => IvfPqTieredStream.currentEpochId(spark, indexRoot, dim, nCells,
-        m, codebookK, coarseIters, pqIters, trainSample),
-      () => IvfPqTieredStream.loadCurrent(spark, indexRoot, dim, nCells,
-        m, codebookK, coarseIters, pqIters, trainSample)
-        .map(t => t.epochId -> t),
-      (t: IvfPqTieredStream.Tiered) => t.release())
-
-  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+  /** Start the serving stream ([[TieredRoll.serve]]): `queries` (a streaming
     * `(qid, qvec)` frame) → per-batch two-stage probe → one
     * `batch=<batchId>` parquet directory each under `outDir`, rows
     * stamped with the tiered epoch id (the newest commit in EITHER
@@ -66,8 +53,7 @@ object IvfPqServeStream {
                   coarseIters: Int = 4, pqIters: Int = 4,
                   trainSample: Int = 10000,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EpochPin.serve("ivfpq", queries, tieredPinFor(queries.sparkSession,
-        indexRoot, dim, nCells, m, codebookK, coarseIters, pqIters,
-        trainSample),
-      outDir, checkpointDir, trigger)(answerPlan(_, _, k, nProbe))
+    new IvfPqTieredStream.Roll(queries.sparkSession, indexRoot, dim, nCells,
+      m, codebookK, coarseIters, pqIters, trainSample)
+      .serve(queries, outDir, checkpointDir, trigger)(answerPlan(_, _, k, nProbe))
 }

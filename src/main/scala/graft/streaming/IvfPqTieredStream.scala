@@ -54,6 +54,7 @@ object IvfPqTieredStream {
                          note: String): Unit =
       IndexStore.saveIvfPqIndex(spark, l1, dir, note, pm)
     protected def releaseL1(l1: Similarity.IvfPqIndex): Unit = l1.release()
+    protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Similarity.IvfPqIndex]): Tiered = {
       val l1 = t.l1.get
@@ -87,22 +88,6 @@ object IvfPqTieredStream {
     }
   }
 
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs(spark: SparkSession, root: String, dim: Int,
-               nCells: Int = 8, m: Int = 4, k: Int = 8,
-               coarseIters: Int = 4, pqIters: Int = 4,
-               trainSample: Int = 10000): Seq[Long] =
-    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).l1Epochs
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs(spark: SparkSession, root: String, dim: Int,
-               nCells: Int = 8, m: Int = 4, k: Int = 8,
-               coarseIters: Int = 4, pqIters: Int = 4,
-               trainSample: Int = 10000): Seq[Long] =
-    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).l0Epochs
-
   /** The ≤-2-tier reader view: `index` is an ordinary
     * [[Similarity.IvfPqIndex]] whose coded frame is the newest committed
     * L1's plus the live L0 deltas above it (lazy union — the deltas are
@@ -112,14 +97,6 @@ object IvfPqTieredStream {
       index: Similarity.IvfPqIndex,
       liveL0s: Seq[Long],
       release: () => Unit)
-
-  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
-  def currentEpochId(spark: SparkSession, root: String, dim: Int,
-                     nCells: Int = 8, m: Int = 4, k: Int = 8,
-                     coarseIters: Int = 4, pqIters: Int = 4,
-                     trainSample: Int = 10000): Option[Long] =
-    new Roll(spark, root, dim, nCells, m, k, coarseIters, pqIters,
-      trainSample).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the codes are probed. */

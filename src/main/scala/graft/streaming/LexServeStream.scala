@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -13,21 +13,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * mid-stream roll changes answers at the next micro-batch boundary —
   * never mid-batch (each batch pins ONE epoch).
   *
-  * The probe pays only query-term postings work (t37's plan shape); the
-  * pin and sink contract are [[EpochPin.serve]]'s. */
+  * The probe pays only query-term postings work (t37's plan shape). The
+  * roll pins and serves it ([[TieredRoll.answer]] / [[TieredRoll.serve]]);
+  * a pin swap reloads the merged view, paying
+  * [[graft.operators.Postings.mergeTiers]]'s three doc-grain stats jobs
+  * once per roll commit, not per batch. */
 object LexServeStream {
 
   /** Answer ONE batch of `(qid LONG, qtext STRING)` queries against the
     * newest committed view under `indexRoot`: per-query BM25 top-k, t37's
     * exact arithmetic. Returns `(epochId, answers)` where answers
     * `(qid, rank, doc_id, score_scaled, n_terms)` is eagerly
-    * locally-checkpointed ([[EpochPin.once]]) — the serving hot path
+    * locally-checkpointed ([[TieredRoll.answer]]) — the serving hot path
     * ships no k×|batch| rows through the driver. Pure batch logic —
     * unit-testable without a stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, k: Int = 5)
       : (Long, DataFrame) =
-    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot),
-      s"postings epoch under $indexRoot")(answerPlan(_, _, k))
+    new LexTieredStream.Roll(queries.sparkSession, indexRoot)
+      .answer(queries, "postings epoch")(answerPlan(_, _, k))
 
   /** The probe plan itself — per-query BM25 top-k over a LIVE view (the
     * caller owns its lifetime; the result's lineage reads the index
@@ -49,26 +52,13 @@ object LexServeStream {
         col("score_scaled"), col("n_terms"))
   }
 
-  /** A standing pin on the newest committed view ([[EpochPin]]). The
-    * staleness check is the tiered `currentEpochId` (a minor or major
-    * commit bumps it); a swap reloads the merged view, paying
-    * [[graft.operators.Postings.mergeTiers]]'s three doc-grain stats jobs
-    * ONCE per roll commit, not per batch. */
-  def tieredPinFor(spark: SparkSession, indexRoot: String)
-      : EpochPin[LexTieredStream.Tiered] =
-    new EpochPin(
-      () => LexTieredStream.currentEpochId(spark, indexRoot),
-      () => LexTieredStream.loadCurrent(spark, indexRoot)
-        .map(t => t.epochId -> t),
-      (t: LexTieredStream.Tiered) => t.release())
-
-  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+  /** Start the serving stream ([[TieredRoll.serve]]): `queries` (a streaming
     * `(qid, qtext)` frame) → per-batch probe → one `batch=<batchId>`
     * parquet directory each under `outDir`, rows stamped with the
     * answering epoch. */
   def startTiered(queries: DataFrame, indexRoot: String, outDir: String,
                   checkpointDir: String, k: Int = 5,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EpochPin.serve("lex", queries, tieredPinFor(queries.sparkSession, indexRoot),
-      outDir, checkpointDir, trigger)(answerPlan(_, _, k))
+    new LexTieredStream.Roll(queries.sparkSession, indexRoot)
+      .serve(queries, outDir, checkpointDir, trigger)(answerPlan(_, _, k))
 }

@@ -57,6 +57,7 @@ object LexTieredStream {
     protected def saveL1(l1: Postings.Index, dir: String, note: String): Unit =
       IndexStore.savePostingsIndex(spark, l1, dir, note, Params)
     protected def releaseL1(l1: Postings.Index): Unit = l1.release()
+    protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Postings.Index]): Tiered = {
       val l1 = t.l1.get
@@ -93,14 +94,6 @@ object LexTieredStream {
     }
   }
 
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs(spark: SparkSession, root: String): Seq[Long] =
-    new Roll(spark, root).l1Epochs
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs(spark: SparkSession, root: String): Seq[Long] =
-    new Roll(spark, root).l0Epochs
-
   /** The ≤-2-tier reader view: `index` is an ordinary [[Postings.Index]]
     * (the newest committed L1 merged with the live L0 tiers above it,
     * foldDocs semantics). `release()` frees the merge's persist AND the
@@ -110,10 +103,6 @@ object LexTieredStream {
       index: Postings.Index,
       liveL0s: Seq[Long],
       release: () => Unit)
-
-  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
-  def currentEpochId(spark: SparkSession, root: String): Option[Long] =
-    new Roll(spark, root).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Pays the mergeTiers stats jobs when live L0s exist

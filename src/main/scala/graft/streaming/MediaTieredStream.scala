@@ -49,6 +49,7 @@ object MediaTieredStream {
     protected def saveL1(l1: DataFrame, dir: String, note: String): Unit =
       IndexStore.saveStage(spark, l1, dir, note, l1Params)
     protected def releaseL1(l1: DataFrame): Unit = ()
+    protected def releaseView(v: Tiered): Unit = ()
     protected def view(t: TieredRoll.Tiers[DataFrame]): Tiered =
       Tiered(t.epochId, (t.l1.toSeq ++ t.l0Frames).reduce(_ unionByName _))
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
@@ -59,14 +60,6 @@ object MediaTieredStream {
                         note: String): Unit =
       commit(view(t).hashes.unionByName(delta), dir, note)
   }
-
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs(spark: SparkSession, root: String): Seq[Long] =
-    new Roll(spark, root).l1Epochs
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs(spark: SparkSession, root: String): Seq[Long] =
-    new Roll(spark, root).l0Epochs
 
   /** The ≤-2-tier reader view: newest committed L1 (absent pre-first-
     * major) unioned with the live L0 deltas above it. Pure lazy parquet —
@@ -86,11 +79,6 @@ object MediaTieredStream {
       Multimodal.incrementalNearDupPairsFromHashes(hashes, batchHashes,
         maxHamming)
   }
-
-  /** The id [[loadCurrent]] would return (listing + marker peeks only).
-    * `None` before any commit (either tier counts). */
-  def currentEpochId(spark: SparkSession, root: String): Option[Long] =
-    new Roll(spark, root).currentEpochId
 
   /** Load the newest committed tiered view; `None` before any commit.
     * Zero Spark jobs until the frame is consumed. */

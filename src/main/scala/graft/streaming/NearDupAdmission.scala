@@ -119,14 +119,16 @@ object NearDupAdmission {
 
   /** [[start]] against a TIERED signature root ([[SignatureTieredStream]])
     * — the admission front door over the dedup family's LSM path: each
-    * batch admits against the newest COMMITTED tiered view (an
-    * [[EpochPin]] swaps on a minor or major commit, never mid-batch), so
+    * batch admits against the newest COMMITTED tiered view (the roll's
+    * [[TieredRoll.pin]] swaps on a minor or major commit, never
+    * mid-batch), so
     * the index-epoch staleness this object's scaladoc documents shrinks
     * from "until the next flat rebuild" to "until the next O(|Δ|) minor".
     * The per-batch index is the view's [[SignatureTieredStream.Tiered
     * .probeIndex]] — committed L1 buckets ∪ delta-side buckets, no
     * standing re-aggregation. Accepted rows are stamped with the
-    * answering epoch. */
+    * answering epoch. Its own loop, not [[TieredRoll.serve]]: the kept
+    * frame is unpersisted after the write, and no `batch_id` is stamped. */
   def startTiered(docs: DataFrame, indexRoot: String,
                   idCol: String, textCol: String,
                   outDir: String, checkpointDir: String,
@@ -134,12 +136,8 @@ object NearDupAdmission {
                   shingleWidth: Int = 3,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val spark = docs.sparkSession
-    val pin = new EpochPin[SignatureTieredStream.Tiered](
-      () => SignatureTieredStream.currentEpochId(spark, indexRoot, k,
-        bands, shingleWidth),
-      () => SignatureTieredStream.loadCurrent(spark, indexRoot, k, bands,
-        shingleWidth).map(t => t.epochId -> t),
-      (t: SignatureTieredStream.Tiered) => t.release())
+    val pin = new SignatureTieredStream.Roll(spark, indexRoot, k, bands,
+      shingleWidth).pin
     EpochPin.bound(spark, pin) {
       docs.writeStream
         .option("checkpointLocation", checkpointDir)

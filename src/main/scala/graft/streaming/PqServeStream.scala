@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -16,21 +16,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * full-precision vector reads. Note pqTopK's query-by-corpus-member
   * contract: a candidate whose nid EQUALS the probe's qid is excluded —
   * serve external query streams from an id namespace disjoint from the
-  * corpus ids. The pin and sink contract are [[EpochPin.serve]]'s. */
+  * corpus ids. The roll pins and serves it ([[TieredRoll.answer]] /
+  * [[TieredRoll.serve]]). */
 object PqServeStream {
 
   /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
     * the newest committed view under `indexRoot`. Returns
     * `(epochId, answers)` with answers `(qid, rank, nid, adc)` eagerly
-    * checkpointed ([[EpochPin.once]]). Pure batch logic — unit-testable
-    * without a stream. */
+    * checkpointed ([[TieredRoll.answer]]). Pure batch logic —
+    * unit-testable without a stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, dim: Int,
                   k: Int = 5, m: Int = 4, codebookK: Int = 8,
                   iters: Int = 4, trainSample: Int = 10000)
       : (Long, DataFrame) =
-    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot,
-        dim, m, codebookK, iters, trainSample),
-      s"PQ epoch under $indexRoot")(answerPlan(_, _, k))
+    new PqTieredStream.Roll(queries.sparkSession, indexRoot, dim, m,
+      codebookK, iters, trainSample)
+      .answer(queries, "PQ epoch")(answerPlan(_, _, k))
 
   /** The probe plan over a LIVE view (the caller owns its lifetime; the
     * result's lineage reads its coded frames). */
@@ -40,22 +41,7 @@ object PqServeStream {
       .pqTopK(t.index, queries, "qid", "qvec", k)
       .select(col("qid"), col("rank"), col("nid"), col("adc"))
 
-  /** A standing pin on the newest committed view ([[EpochPin]]): the
-    * staleness check is the tiered `currentEpochId` (a minor OR a major
-    * bumps it), a swap reloads the merged ≤2-tier view — an ordinary
-    * PqIndex encoded under the standing codebooks. */
-  def tieredPinFor(spark: SparkSession, indexRoot: String,
-                   dim: Int, m: Int = 4, codebookK: Int = 8, iters: Int = 4,
-                   trainSample: Int = 10000)
-      : EpochPin[PqTieredStream.Tiered] =
-    new EpochPin(
-      () => PqTieredStream.currentEpochId(spark, indexRoot, dim, m,
-        codebookK, iters, trainSample),
-      () => PqTieredStream.loadCurrent(spark, indexRoot, dim, m, codebookK,
-        iters, trainSample).map(t => t.epochId -> t),
-      (t: PqTieredStream.Tiered) => t.release())
-
-  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+  /** Start the serving stream ([[TieredRoll.serve]]): `queries` (a streaming
     * `(qid, qvec)` frame) → per-batch ADC probe → one `batch=<batchId>`
     * parquet directory each under `outDir`, rows stamped with the tiered
     * epoch id (the newest commit in EITHER tier). */
@@ -64,7 +50,7 @@ object PqServeStream {
                   m: Int = 4, codebookK: Int = 8, iters: Int = 4,
                   trainSample: Int = 10000,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EpochPin.serve("pq", queries, tieredPinFor(queries.sparkSession,
-        indexRoot, dim, m, codebookK, iters, trainSample),
-      outDir, checkpointDir, trigger)(answerPlan(_, _, k))
+    new PqTieredStream.Roll(queries.sparkSession, indexRoot, dim, m,
+      codebookK, iters, trainSample)
+      .serve(queries, outDir, checkpointDir, trigger)(answerPlan(_, _, k))
 }

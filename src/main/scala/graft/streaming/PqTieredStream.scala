@@ -47,6 +47,7 @@ object PqTieredStream {
     protected def saveL1(l1: Similarity.PqIndex, dir: String, note: String): Unit =
       IndexStore.savePqIndex(spark, l1, dir, note, pm)
     protected def releaseL1(l1: Similarity.PqIndex): Unit = l1.release()
+    protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Similarity.PqIndex]): Tiered = {
       val l1 = t.l1.get
@@ -79,18 +80,6 @@ object PqTieredStream {
     }
   }
 
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs(spark: SparkSession, root: String, dim: Int,
-               m: Int = 4, k: Int = 8, iters: Int = 4,
-               trainSample: Int = 10000): Seq[Long] =
-    new Roll(spark, root, dim, m, k, iters, trainSample).l1Epochs
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs(spark: SparkSession, root: String, dim: Int,
-               m: Int = 4, k: Int = 8, iters: Int = 4,
-               trainSample: Int = 10000): Seq[Long] =
-    new Roll(spark, root, dim, m, k, iters, trainSample).l0Epochs
-
   /** The ≤-2-tier reader view: `index` is an ordinary
     * [[Similarity.PqIndex]] whose encoded frame is the newest committed
     * L1's plus the live L0 deltas above it (lazy union — the deltas are
@@ -100,12 +89,6 @@ object PqTieredStream {
       index: Similarity.PqIndex,
       liveL0s: Seq[Long],
       release: () => Unit)
-
-  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
-  def currentEpochId(spark: SparkSession, root: String, dim: Int,
-                     m: Int = 4, k: Int = 8, iters: Int = 4,
-                     trainSample: Int = 10000): Option[Long] =
-    new Roll(spark, root, dim, m, k, iters, trainSample).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the codes are probed. */

@@ -53,6 +53,7 @@ object SignatureTieredStream {
                          note: String): Unit =
       IndexStore.saveSignatureIndex(spark, l1, dir, note)
     protected def releaseL1(l1: Dedup.SignatureIndex): Unit = l1.release()
+    protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Dedup.SignatureIndex]): Tiered =
       Tiered(t.epochId, k, bands, shingleWidth, t.l1,
@@ -82,16 +83,6 @@ object SignatureTieredStream {
         Dedup.bucketsFromSigs(sigs, k, bands), () => ()), dir, note)
     }
   }
-
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs(spark: SparkSession, root: String, k: Int, bands: Int,
-               shingleWidth: Int): Seq[Long] =
-    new Roll(spark, root, k, bands, shingleWidth).l1Epochs
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs(spark: SparkSession, root: String, k: Int, bands: Int,
-               shingleWidth: Int): Seq[Long] =
-    new Roll(spark, root, k, bands, shingleWidth).l0Epochs
 
   /** The ≤-2-tier reader view: newest committed L1 (absent pre-first-
     * major) plus the live L0 sig deltas above it. `release()` frees the
@@ -153,12 +144,6 @@ object SignatureTieredStream {
         () => { s.unpersist(); b.unpersist(); () })
     }
   }
-
-  /** The id [[loadCurrent]] would return (listing + marker peeks only).
-    * `None` before any commit. */
-  def currentEpochId(spark: SparkSession, root: String, k: Int = 128,
-                     bands: Int = 32, shingleWidth: Int = 3): Option[Long] =
-    new Roll(spark, root, k, bands, shingleWidth).currentEpochId
 
   /** Load the newest committed tiered view; `None` before any commit. */
   def loadCurrent(spark: SparkSession, root: String, k: Int = 128,

@@ -24,6 +24,9 @@ import graft.operators.IndexStore
   * Readers ([[loadCurrent]]) merge ≤ 2 tiers: the newest committed L1 plus
   * the live L0s above it. [[currentEpochId]] is the serving pin's zero-job
   * staleness check (listing + marker peeks): a minor OR a major bumps it.
+  * The roll serves its own index: [[pin]] is the only [[EpochPin]] built
+  * over a root, and [[answer]] / [[serve]] run a family's probe plan under
+  * it, so a `*ServeStream` is its plan and nothing else.
   *
   * EPOCH IDS: data epochs sit at [[TierIds.dataEpoch]] strides and
   * maintenance majors ([[compact]], [[retrain]]) commit at the current
@@ -56,9 +59,9 @@ import graft.operators.IndexStore
   * writer; concurrent writers need an external lock.
   *
   * A subclass is the family's codec: params and L1 meta peek, L1
-  * save/load/release, the reader view, the minor's delta encode, the
-  * major's merge and the optional bootstrap build. One instance serves one
-  * (session, root, params) call. */
+  * save/load/release, the reader view and its release, the minor's delta
+  * encode, the major's merge and the optional bootstrap build. One
+  * instance serves one (session, root, params) call. */
 private[streaming] abstract class TieredRoll[L1, T](
     spark: SparkSession, root: String, family: String) {
 
@@ -81,6 +84,8 @@ private[streaming] abstract class TieredRoll[L1, T](
   protected def releaseL1(l1: L1): Unit
   /** The reader view over loaded tiers; it owns the L1 handle. */
   protected def view(t: Tiers[L1]): T
+  /** Free what a view holds (its L1 handle, any merge persist). */
+  protected def releaseView(v: T): Unit
   /** Build the first L1 from a non-empty batch and [[commit]] it at `dir`. */
   protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
                           note: String): Unit =
@@ -139,8 +144,11 @@ private[streaming] abstract class TieredRoll[L1, T](
     listed.flatMap { case (l1Id, live) => (l1Id.toSeq ++ live).maxOption }
 
   /** The newest committed view; None before any commit. */
-  def loadCurrent: Option[T] = current.map { t =>
-    try view(t) catch { case e: Throwable => t.l1.foreach(releaseL1); throw e }
+  def loadCurrent: Option[T] = loadPinned.map(_._2)
+
+  private def loadPinned: Option[(Long, T)] = current.map { t =>
+    try t.epochId -> view(t)
+    catch { case e: Throwable => t.l1.foreach(releaseL1); throw e }
   }
 
   private def current: Option[Tiers[L1]] =
@@ -166,6 +174,29 @@ private[streaming] abstract class TieredRoll[L1, T](
     if (l1.isEmpty && (l1Id.nonEmpty || l0.isEmpty)) None
     else Some(Tiers((l1Id.toSeq ++ live).max, l1Id, l1, live, l0))
   }
+
+  // ---- serving
+
+  /** The one serving handle on this root ([[EpochPin]]): the staleness
+    * check is [[currentEpochId]] (zero jobs; a minor OR a major bumps it),
+    * a swap loads the newest view once per roll commit, not per batch,
+    * and releases the old one. */
+  def pin: EpochPin[T] = new EpochPin(() => currentEpochId, () => loadPinned,
+    releaseView)
+
+  /** Answer ONE batch of `queries` under a fresh [[pin]]
+    * ([[EpochPin.once]]): `(epochId, answers)`, the answers eagerly
+    * checkpointed. `what` names the index in the no-epoch error. */
+  def answer(queries: DataFrame, what: String)(
+      plan: (DataFrame, T) => DataFrame): (Long, DataFrame) =
+    EpochPin.once(queries, pin, s"$what under $root")(plan)
+
+  /** The serving stream over [[pin]] ([[EpochPin.serve]]): per batch `plan`
+    * over the pinned view → one `batch=<batchId>` parquet directory under
+    * `outDir`, rows stamped with `batch_id` and the answering `epoch_id`. */
+  def serve(queries: DataFrame, outDir: String, checkpointDir: String,
+            trigger: Trigger)(plan: (DataFrame, T) => DataFrame): StreamingQuery =
+    EpochPin.serve(family, queries, pin, outDir, checkpointDir, trigger)(plan)
 
   // ---- writes
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -20,23 +20,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * query-proportional in candidates; the load is zero-job until probed.
   * Note ivfProbe's query-by-corpus-member contract: a candidate whose nid
   * EQUALS the probe's qid is excluded — serve external query streams from
-  * an id namespace disjoint from the corpus ids. The pin and sink contract
-  * are [[EpochPin.serve]]'s. */
+  * an id namespace disjoint from the corpus ids. The roll pins and serves
+  * it ([[TieredRoll.answer]] / [[TieredRoll.serve]]); a pin swap reloads
+  * the merged ≤2-tier view, an ordinary
+  * [[graft.operators.Similarity.IvfIndex]] under the standing centroids. */
 object VectorServeStream {
 
   /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
     * the newest committed view under `indexRoot`: per-query cosine top-k
     * over the `nProbe` nearest cells. Returns `(epochId, answers)` with
     * answers `(qid, rank, nid, sim)` eagerly checkpointed
-    * ([[EpochPin.once]]). Pure batch logic — unit-testable without a
+    * ([[TieredRoll.answer]]). Pure batch logic — unit-testable without a
     * stream. */
   def answerBatch(queries: DataFrame, indexRoot: String, k: Int = 5,
                   nProbe: Int = 4, nCells: Int = 16,
                   trainSample: Int = 10000, iters: Int = 8)
       : (Long, DataFrame) =
-    EpochPin.once(queries, tieredPinFor(queries.sparkSession, indexRoot,
-        nCells, trainSample, iters),
-      s"vector epoch under $indexRoot")(answerPlan(_, _, k, nProbe))
+    new VectorTieredStream.Roll(queries.sparkSession, indexRoot, nCells,
+      trainSample, iters)
+      .answer(queries, "vector epoch")(answerPlan(_, _, k, nProbe))
 
   /** The probe plan over a LIVE view (the caller owns its lifetime; the
     * result's lineage reads its assignment frames). */
@@ -46,22 +48,7 @@ object VectorServeStream {
       .ivfProbe(t.index, queries, "qid", "qvec", k, nProbe)
       .select(col("qid"), col("rank"), col("nid"), col("sim"))
 
-  /** A standing pin on the newest committed view ([[EpochPin]]): the
-    * staleness check is the tiered `currentEpochId` (a minor OR a major
-    * commit bumps it), and a swap reloads the merged ≤2-tier view — an
-    * ordinary [[graft.operators.Similarity.IvfIndex]] assigned under the
-    * standing centroids. */
-  def tieredPinFor(spark: SparkSession, indexRoot: String,
-                   nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8)
-      : EpochPin[VectorTieredStream.Tiered] =
-    new EpochPin(
-      () => VectorTieredStream.currentEpochId(spark, indexRoot, nCells,
-        trainSample, iters),
-      () => VectorTieredStream.loadCurrent(spark, indexRoot, nCells,
-        trainSample, iters).map(t => t.epochId -> t),
-      (t: VectorTieredStream.Tiered) => t.release())
-
-  /** Start the serving stream ([[EpochPin.serve]]): `queries` (a streaming
+  /** Start the serving stream ([[TieredRoll.serve]]): `queries` (a streaming
     * `(qid, qvec)` frame) → per-batch probe → one `batch=<batchId>`
     * parquet directory each under `outDir`, rows stamped with the tiered
     * epoch id (the newest commit in EITHER tier). */
@@ -69,7 +56,7 @@ object VectorServeStream {
                   checkpointDir: String, k: Int = 5, nProbe: Int = 4,
                   nCells: Int = 16, trainSample: Int = 10000, iters: Int = 8,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EpochPin.serve("vector", queries, tieredPinFor(queries.sparkSession,
-        indexRoot, nCells, trainSample, iters),
-      outDir, checkpointDir, trigger)(answerPlan(_, _, k, nProbe))
+    new VectorTieredStream.Roll(queries.sparkSession, indexRoot, nCells,
+      trainSample, iters)
+      .serve(queries, outDir, checkpointDir, trigger)(answerPlan(_, _, k, nProbe))
 }

@@ -48,6 +48,7 @@ object VectorTieredStream {
     protected def saveL1(l1: Similarity.IvfIndex, dir: String, note: String): Unit =
       IndexStore.saveIvfIndex(spark, l1, dir, note, pm)
     protected def releaseL1(l1: Similarity.IvfIndex): Unit = l1.release()
+    protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Similarity.IvfIndex]): Tiered = {
       val l1 = t.l1.get
@@ -79,16 +80,6 @@ object VectorTieredStream {
     }
   }
 
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs(spark: SparkSession, root: String,
-               nCells: Int, trainSample: Int = 10000, iters: Int = 8): Seq[Long] =
-    new Roll(spark, root, nCells, trainSample, iters).l1Epochs
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs(spark: SparkSession, root: String,
-               nCells: Int, trainSample: Int = 10000, iters: Int = 8): Seq[Long] =
-    new Roll(spark, root, nCells, trainSample, iters).l0Epochs
-
   /** The ≤-2-tier reader view: `index` is an ordinary
     * [[Similarity.IvfIndex]] whose assignment is the newest committed
     * L1's plus the live L0 deltas above it (lazy union — the deltas are
@@ -99,12 +90,6 @@ object VectorTieredStream {
       index: Similarity.IvfIndex,
       liveL0s: Seq[Long],
       release: () => Unit)
-
-  /** The id [[loadCurrent]] would return (listing + marker peeks only). */
-  def currentEpochId(spark: SparkSession, root: String,
-                     nCells: Int = 16, trainSample: Int = 10000,
-                     iters: Int = 8): Option[Long] =
-    new Roll(spark, root, nCells, trainSample, iters).currentEpochId
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the assignment is probed. */

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session's conf. Functions and planner strategies install once, at
   * session build, through [[graft.plans.GraftExtensions]] — nothing else
   * writes a session's function registry or strategy list — and no
-  * session-conf switch selects between code paths. */
+  * session-conf switch selects between code paths. Serving pins follow the
+  * same rule: one constructor site, [[graft.streaming.TieredRoll]]. */
 class ConfMutationGuardSpec extends AnyFunSuite {
 
   private val main = new java.io.File("src/main/scala")
@@ -45,6 +46,11 @@ class ConfMutationGuardSpec extends AnyFunSuite {
   test("functions and strategies register only in graft/plans/GraftExtensions.scala") {
     val found = offenders(Seq("registerFunction(", "functionRegistry.register",
       "extraStrategies ="))(_ != "graft/plans/GraftExtensions.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("an EpochPin is built in src/main only by TieredRoll.pin") {
+    val found = offenders(Seq("new EpochPin"))(_ != "graft/streaming/TieredRoll.scala")
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -62,19 +62,22 @@ class SetJaccardSpec extends SparkSpec {
     assert(arith.get.getCondition === "DIVIDE_BY_ZERO", arith.get.toString)
   }
 
+  /** The error condition of the SparkThrowable ArithmeticException that
+    * `body` raises somewhere in its cause chain. */
+  private def condition(body: => Unit): String = {
+    val ex = intercept[Exception](body)
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    causes(ex).collectFirst {
+      case e: ArithmeticException with org.apache.spark.SparkThrowable =>
+        e.getCondition
+    }.getOrElse(s"no SparkThrowable ArithmeticException: $ex")
+  }
+
   test("fused empty-union error is indistinguishable from the unfused one") {
     val empty = spark.range(1)
       .select(array_remove(array(lit("x")), "x").as("a"),
               array_remove(array(lit("y")), "y").as("b"))
-    def condition(body: => Unit): String = {
-      val ex = intercept[Exception](body)
-      def causes(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: causes(t.getCause)
-      causes(ex).collectFirst {
-        case e: ArithmeticException with org.apache.spark.SparkThrowable =>
-          e.getCondition
-      }.getOrElse(s"no SparkThrowable ArithmeticException: $ex")
-    }
     val fused = condition(
       empty.select(declarative($"a", $"b").as("j")).collect())
     val unfused = condition(
@@ -83,6 +86,20 @@ class SetJaccardSpec extends SparkSpec {
         .collect())
     assert(fused === unfused)
     assert(fused === "DIVIDE_BY_ZERO")
+  }
+
+  test("fused plan raises DIVIDE_BY_ZERO under ANSI on arrays that cannot " +
+       "constant-fold") {
+    // empty arrays computed from a column: the rewrite sees the division,
+    // not a folded literal, so the fused expression itself must honour the
+    // Divide's ANSI eval mode
+    val empty = spark.range(1)
+      .select(array_repeat(lit("x"), col("id").cast("int")).as("a"),
+              array_repeat(lit("y"), col("id").cast("int")).as("b"))
+    val q = empty.select(declarative($"a", $"b").as("j"))
+    assert(q.queryExecution.optimizedPlan.toString.contains("set_jaccard"),
+      q.queryExecution.optimizedPlan.toString)
+    assert(condition(q.collect()) === "DIVIDE_BY_ZERO")
   }
 
   test("sortedUtf8 agrees with array_sort element order") {

@@ -184,10 +184,10 @@ class CopurchaseStreamSpec extends SparkSpec {
         majorEvery = 3)
     }
     // the tiered root has a committed L1 (the major) AND live L0 minors
-    assert(GraphTieredStream.l1Epochs(spark, root,
-      Adjacency.DefaultHubLimit).nonEmpty, "major must have committed an L1")
-    assert(GraphTieredStream.l0Epochs(spark, root,
-      Adjacency.DefaultHubLimit).nonEmpty, "post-major minors must be live")
+    assert(new GraphTieredStream.Roll(spark, root,
+      Adjacency.DefaultHubLimit).l1Epochs.nonEmpty, "major must have committed an L1")
+    assert(new GraphTieredStream.Roll(spark, root,
+      Adjacency.DefaultHubLimit).l0Epochs.nonEmpty, "post-major minors must be live")
 
     // the flat form: one build over every line of every batch
     val flat = Checkpoints.sweepingOnFailure(spark.sparkContext)(

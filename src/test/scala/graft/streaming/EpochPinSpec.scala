@@ -64,7 +64,7 @@ class EpochPinSpec extends SparkSpec {
     val root = Files.createTempDirectory("pin_idx").toString
     LexTieredStream.foldBatch(Seq((1L, "alpha beta"), (2L, "alpha"))
       .toDF("doc_id", "text"), root, batchId = 0L)
-    val pin = LexServeStream.tieredPinFor(spark, root)
+    val pin = new LexTieredStream.Roll(spark, root).pin
     try {
       val (e0, i0) = pin.get()
       assert(e0 === 0L)

@@ -58,10 +58,10 @@ class IvfPqTieredStreamSpec extends SparkSpec {
     assert(outcomes === Seq(BatchOutcome.Bootstrapped,
       BatchOutcome.Minor, BatchOutcome.Minor,
       BatchOutcome.Major(2), BatchOutcome.Minor))
-    assert(IvfPqTieredStream.l1Epochs(spark, root, DIM, CELLS, M, K,
-      ITERS, ITERS, TRAIN) === Seq(ep(3), ep(0)))
-    assert(IvfPqTieredStream.l0Epochs(spark, root, DIM, CELLS, M, K,
-      ITERS, ITERS, TRAIN) === Seq(ep(4), ep(2), ep(1)))
+    assert(new IvfPqTieredStream.Roll(spark, root, DIM, CELLS, M, K,
+      ITERS, ITERS, TRAIN).l1Epochs === Seq(ep(3), ep(0)))
+    assert(new IvfPqTieredStream.Roll(spark, root, DIM, CELLS, M, K,
+      ITERS, ITERS, TRAIN).l0Epochs === Seq(ep(4), ep(2), ep(1)))
 
     val l0rows = spark.read.parquet(s"$root/l0/epoch=${ep(4)}/data").count()
     assert(l0rows === 10L, s"a minor commit must be delta-sized, got $l0rows")
@@ -135,8 +135,8 @@ class IvfPqTieredStreamSpec extends SparkSpec {
     assert(IvfPqTieredStream.compactMajor(spark, root, dead, "vec_id",
       threshold = 0.5, dim = DIM, nCells = CELLS, m = M, k = K,
       coarseIters = ITERS, pqIters = ITERS, trainSample = TRAIN).isEmpty)
-    assert(IvfPqTieredStream.l1Epochs(spark, root, DIM, CELLS, M, K,
-      ITERS, ITERS, TRAIN).head === ep(3), "a no-op must not commit an epoch")
+    assert(new IvfPqTieredStream.Roll(spark, root, DIM, CELLS, M, K,
+      ITERS, ITERS, TRAIN).l1Epochs.head === ep(3), "a no-op must not commit an epoch")
 
     // over threshold: survivor index commits as epochId+1
     val newId = IvfPqTieredStream.compactMajor(spark, root, dead, "vec_id",

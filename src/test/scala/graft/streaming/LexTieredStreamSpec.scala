@@ -49,7 +49,7 @@ class LexTieredStreamSpec extends SparkSpec {
     assert(outcomes === Seq(BatchOutcome.Bootstrapped,
       BatchOutcome.Minor, BatchOutcome.Minor,
       BatchOutcome.Major(2), BatchOutcome.Minor))
-    assert(LexTieredStream.l1Epochs(spark, root) === Seq(3L, 0L))
+    assert(new LexTieredStream.Roll(spark, root).l1Epochs === Seq(3L, 0L))
 
     // delta-sized minor: batch 4's L0 holds its own rows only (doc 2's
     // one posting + doc 8's two), not the corpus
@@ -92,10 +92,10 @@ class LexTieredStreamSpec extends SparkSpec {
     val torn = new java.io.File(s"$root/l0/epoch=2")
     assert(torn.mkdirs())
     Files.write(torn.toPath.resolve("junk"), Array[Byte](1))
-    assert(LexTieredStream.l0Epochs(spark, root).isEmpty)
+    assert(new LexTieredStream.Roll(spark, root).l0Epochs.isEmpty)
     assert(LexTieredStream.foldBatch(docsDF(3L -> "d"), root, 2L,
       majorEvery = 3) === BatchOutcome.Minor)
-    assert(LexTieredStream.l0Epochs(spark, root) === Seq(2L))
+    assert(new LexTieredStream.Roll(spark, root).l0Epochs === Seq(2L))
 
     // second minor, then batch 4 is the major; tear its L1 dir first
     assert(LexTieredStream.foldBatch(docsDF(4L -> "e e"), root, 3L,
@@ -108,7 +108,7 @@ class LexTieredStreamSpec extends SparkSpec {
       case BatchOutcome.Major(n) => assert(n === 2)
       case other => fail(s"expected Major, got $other")
     }
-    assert(LexTieredStream.l1Epochs(spark, root) === Seq(4L, 1L))
+    assert(new LexTieredStream.Roll(spark, root).l1Epochs === Seq(4L, 1L))
 
     // replay of the committed major: a pure no-op (mtimes unchanged)
     def mtimes = new java.io.File(s"$root/l1/epoch=4").listFiles

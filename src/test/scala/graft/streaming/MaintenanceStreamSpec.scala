@@ -52,7 +52,9 @@ class MaintenanceStreamSpec extends SparkSpec {
       root, ck, majorEvery = 3, maintenance = Some(policy))
     run(go)
     // minors @0 @1, major @2, then the scheduled compaction at ep(2)+1
-    assert(GraphTieredStream.currentEpochId(spark, root) === Some(ep(2) + 1),
+    val graphRoll = new GraphTieredStream.Roll(spark, root,
+      graft.operators.Adjacency.DefaultHubLimit)
+    assert(graphRoll.currentEpochId === Some(ep(2) + 1),
       "compaction must commit at the maintenance slot after the major")
     def edges(): Set[(Long, Long)] = {
       val v = GraphTieredStream.loadCurrent(spark, root).getOrElse(fail())
@@ -62,7 +64,7 @@ class MaintenanceStreamSpec extends SparkSpec {
     assert(edges() === survivors, "in-stream compaction must drop the dead")
 
     run(go) // full replay: every fold Skips, maintenance must not re-fire
-    assert(GraphTieredStream.currentEpochId(spark, root) === Some(ep(2) + 1))
+    assert(graphRoll.currentEpochId === Some(ep(2) + 1))
     assert(edges() === survivors)
   }
 
@@ -90,7 +92,7 @@ class MaintenanceStreamSpec extends SparkSpec {
         .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*"),
       root, ck, majorEvery = 3, maintenance = Some(policy))
     run(go)
-    assert(MediaTieredStream.currentEpochId(spark, root) === Some(ep(2) + 1))
+    assert(new MediaTieredStream.Roll(spark, root).currentEpochId === Some(ep(2) + 1))
     def stored(): Set[Long] = {
       val v = MediaTieredStream.loadCurrent(spark, root).getOrElse(fail())
       v.hashes.select("media_id").collect().map(_.getLong(0)).toSet
@@ -98,7 +100,7 @@ class MaintenanceStreamSpec extends SparkSpec {
     assert(stored() === (ids.toSet -- deadIds))
 
     run(go)
-    assert(MediaTieredStream.currentEpochId(spark, root) === Some(ep(2) + 1))
+    assert(new MediaTieredStream.Roll(spark, root).currentEpochId === Some(ep(2) + 1))
     assert(stored() === (ids.toSet -- deadIds))
   }
 
@@ -122,7 +124,7 @@ class MaintenanceStreamSpec extends SparkSpec {
       "doc_id", "text", root, ck, majorEvery = 3, k = K, bands = BANDS,
       shingleWidth = SW, maintenance = Some(policy))
     run(go)
-    assert(SignatureTieredStream.currentEpochId(spark, root, K, BANDS, SW)
+    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).currentEpochId
       === Some(ep(2) + 1))
     def stored(): Set[Long] = {
       val v = SignatureTieredStream.loadCurrent(spark, root, K, BANDS, SW)
@@ -133,7 +135,7 @@ class MaintenanceStreamSpec extends SparkSpec {
     assert(stored() === (ids.toSet -- deadIds))
 
     run(go)
-    assert(SignatureTieredStream.currentEpochId(spark, root, K, BANDS, SW)
+    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).currentEpochId
       === Some(ep(2) + 1))
     assert(stored() === (ids.toSet -- deadIds))
   }
@@ -170,8 +172,8 @@ class MaintenanceStreamSpec extends SparkSpec {
       maintenance = Some(policy))
     run(go)
     // compaction at ep(3)+1, retrain right after at ep(3)+2
-    assert(VectorTieredStream.currentEpochId(spark, root, cells, train,
-      iters) === Some(ep(3) + 2),
+    assert(new VectorTieredStream.Roll(spark, root, cells, train,
+      iters).currentEpochId === Some(ep(3) + 2),
       "compact + retrain must commit at consecutive maintenance slots")
     def stored(): Set[Long] = {
       val v = VectorTieredStream.loadCurrent(spark, root, cells, train,
@@ -184,8 +186,8 @@ class MaintenanceStreamSpec extends SparkSpec {
       "the retrained generation must carry exactly the survivor corpus")
 
     run(go)
-    assert(VectorTieredStream.currentEpochId(spark, root, cells, train,
-      iters) === Some(ep(3) + 2))
+    assert(new VectorTieredStream.Roll(spark, root, cells, train,
+      iters).currentEpochId === Some(ep(3) + 2))
     assert(stored() === survivors)
   }
 
@@ -213,8 +215,8 @@ class MaintenanceStreamSpec extends SparkSpec {
       "vec_id", "emb", root, ck, dim, m, k, iters, train, majorEvery = 3,
       maintenance = Some(policy))
     run(go)
-    assert(PqTieredStream.currentEpochId(spark, root, dim, m, k, iters,
-      train) === Some(ep(3) + 1))
+    assert(new PqTieredStream.Roll(spark, root, dim, m, k, iters,
+      train).currentEpochId === Some(ep(3) + 1))
     def stored(): Set[Long] = {
       val v = PqTieredStream.loadCurrent(spark, root, dim, m, k, iters,
         train).getOrElse(fail())
@@ -224,8 +226,8 @@ class MaintenanceStreamSpec extends SparkSpec {
     assert(stored() === (allIds.toSet -- deadIds))
 
     run(go)
-    assert(PqTieredStream.currentEpochId(spark, root, dim, m, k, iters,
-      train) === Some(ep(3) + 1))
+    assert(new PqTieredStream.Roll(spark, root, dim, m, k, iters,
+      train).currentEpochId === Some(ep(3) + 1))
     assert(stored() === (allIds.toSet -- deadIds))
   }
 
@@ -253,8 +255,8 @@ class MaintenanceStreamSpec extends SparkSpec {
       "vec_id", "emb", root, ck, dim, cells, m, k, iters, iters, train,
       majorEvery = 3, maintenance = Some(policy))
     run(go)
-    assert(IvfPqTieredStream.currentEpochId(spark, root, dim, cells, m, k,
-      iters, iters, train) === Some(ep(3) + 1))
+    assert(new IvfPqTieredStream.Roll(spark, root, dim, cells, m, k,
+      iters, iters, train).currentEpochId === Some(ep(3) + 1))
     def stored(): Set[Long] = {
       val v = IvfPqTieredStream.loadCurrent(spark, root, dim, cells, m, k,
         iters, iters, train).getOrElse(fail())
@@ -265,8 +267,8 @@ class MaintenanceStreamSpec extends SparkSpec {
     assert(stored() === (allIds.toSet -- deadIds))
 
     run(go)
-    assert(IvfPqTieredStream.currentEpochId(spark, root, dim, cells, m, k,
-      iters, iters, train) === Some(ep(3) + 1))
+    assert(new IvfPqTieredStream.Roll(spark, root, dim, cells, m, k,
+      iters, iters, train).currentEpochId === Some(ep(3) + 1))
     assert(stored() === (allIds.toSet -- deadIds))
   }
 }

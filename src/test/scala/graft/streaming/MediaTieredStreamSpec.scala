@@ -56,10 +56,10 @@ class MediaTieredStreamSpec extends SparkSpec {
     }
     assert(outcomes.map(_.toString) === Seq("Minor", "Minor", "Major(2)",
       "Minor", "Minor", "Major(2)"))
-    assert(MediaTieredStream.l1Epochs(spark, root) === Seq(ep(5), ep(2)))
+    assert(new MediaTieredStream.Roll(spark, root).l1Epochs === Seq(ep(5), ep(2)))
     // L0s @3 @4 sit above the PREVIOUS L1@2 — kept for the one-major
     // grace; @0 @1 (two generations old) were pruned by the major @5
-    assert(MediaTieredStream.l0Epochs(spark, root) === Seq(ep(4), ep(3)))
+    assert(new MediaTieredStream.Roll(spark, root).l0Epochs === Seq(ep(4), ep(3)))
 
     val l0rows = spark.read.parquet(s"$root/l0/epoch=${ep(4)}/data").count()
     assert(l0rows === 20L, s"a minor commit must be delta-sized, got $l0rows")
@@ -101,17 +101,17 @@ class MediaTieredStreamSpec extends SparkSpec {
     // overwrites in place
     hashes(30 until 50).write.mode("overwrite")
       .parquet(s"$root/l0/epoch=${ep(1)}/data")
-    assert(MediaTieredStream.l0Epochs(spark, root) === Seq(ep(0)))
+    assert(new MediaTieredStream.Roll(spark, root).l0Epochs === Seq(ep(0)))
     assert(MediaTieredStream.foldHashes(hashes(30 until 50), root, 1L)
       === BatchOutcome.Minor)
-    assert(MediaTieredStream.l0Epochs(spark, root) === Seq(ep(1), ep(0)))
+    assert(new MediaTieredStream.Roll(spark, root).l0Epochs === Seq(ep(1), ep(0)))
     // committed replay: a no-op skip, content unchanged
     assert(MediaTieredStream.foldHashes(hashes(30 until 50), root, 1L)
       === BatchOutcome.Skipped)
     // empty batch: no content-free epochs
     assert(MediaTieredStream.foldHashes(hashes(0 until 0), root, 2L)
       === BatchOutcome.EmptyBatch)
-    assert(MediaTieredStream.l0Epochs(spark, root) === Seq(ep(1), ep(0)))
+    assert(new MediaTieredStream.Roll(spark, root).l0Epochs === Seq(ep(1), ep(0)))
     val view = MediaTieredStream.loadCurrent(spark, root)
       .getOrElse(fail("no view"))
     assert(hashSet(view.hashes) === hashSet(hashes(0 until 50)))
@@ -135,7 +135,7 @@ class MediaTieredStreamSpec extends SparkSpec {
     }
     // the major @5 pruned L1 generations to {5, 2} — the pinned reader's
     // epoch is the graced generation and must still answer
-    assert(MediaTieredStream.l1Epochs(spark, root) === Seq(ep(5), ep(2)))
+    assert(new MediaTieredStream.Roll(spark, root).l1Epochs === Seq(ep(5), ep(2)))
     assert(hashSet(pinned.hashes) === hashSet(hashes(0 until 60)))
 
     // streaming wrapper over blobs: the m01-style PNG path, 2 batches
@@ -168,7 +168,7 @@ class MediaTieredStreamSpec extends SparkSpec {
       MediaTieredStream.foldHashes(hashes(i * 30 until (i + 1) * 30), root,
         i.toLong, majorEvery = 3)
     }
-    assert(MediaTieredStream.l1Epochs(spark, root).head === ep(2))
+    assert(new MediaTieredStream.Roll(spark, root).l1Epochs.head === ep(2))
     val dead = Seq(3L, 10L, 45L, 80L).toDF("media_id")
     // 4/90 ≈ 4.4% dead: below a 10% threshold → None
     assert(MediaTieredStream.compactMajor(spark, root, dead, "media_id",
@@ -180,7 +180,7 @@ class MediaTieredStreamSpec extends SparkSpec {
     val newId = MediaTieredStream.compactMajor(spark, root, dead, "media_id")
       .getOrElse(fail("compaction must fire"))
     assert(newId === ep(2) + 1)
-    assert(MediaTieredStream.l1Epochs(spark, root) === Seq(ep(2) + 1, ep(2)))
+    assert(new MediaTieredStream.Roll(spark, root).l1Epochs === Seq(ep(2) + 1, ep(2)))
     val after = MediaTieredStream.loadCurrent(spark, root)
       .getOrElse(fail("no post-compaction view"))
     assert(after.epochId === ep(2) + 1)

@@ -51,10 +51,10 @@ class PqTieredStreamSpec extends SparkSpec {
     assert(outcomes === Seq(BatchOutcome.Bootstrapped,
       BatchOutcome.Minor, BatchOutcome.Minor,
       BatchOutcome.Major(2), BatchOutcome.Minor))
-    assert(PqTieredStream.l1Epochs(spark, root, DIM, M, K, ITERS, TRAIN)
+    assert(new PqTieredStream.Roll(spark, root, DIM, M, K, ITERS, TRAIN).l1Epochs
       === Seq(ep(3), ep(0)))
     // absorbed L0s 1–2 kept for the one-major grace, pruned at next major
-    assert(PqTieredStream.l0Epochs(spark, root, DIM, M, K, ITERS, TRAIN)
+    assert(new PqTieredStream.Roll(spark, root, DIM, M, K, ITERS, TRAIN).l0Epochs
       === Seq(ep(4), ep(2), ep(1)))
 
     val l0rows = spark.read.parquet(s"$root/l0/epoch=${ep(4)}/data").count()

@@ -67,9 +67,9 @@ class SignatureTieredStreamSpec extends SparkSpec {
     }
     assert(outcomes.map(_.toString) === Seq("Minor", "Minor", "Major(2)",
       "Minor", "Minor", "Major(2)"))
-    assert(SignatureTieredStream.l1Epochs(spark, root, K, BANDS, SW)
+    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l1Epochs
       === Seq(ep(5), ep(2)))
-    assert(SignatureTieredStream.l0Epochs(spark, root, K, BANDS, SW)
+    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l0Epochs
       === Seq(ep(4), ep(3)))
     val l0rows = spark.read.parquet(s"$root/l0/epoch=${ep(4)}/data").count()
     assert(l0rows === 20L, s"a minor commit must be delta-sized, got $l0rows")
@@ -117,12 +117,12 @@ class SignatureTieredStreamSpec extends SparkSpec {
     // torn L0: data without a marker is invisible and replayable
     Dedup.signatureFrame(docsOf(20 until 40), "doc_id", "text", K, SW)
       .write.mode("overwrite").parquet(s"$root/l0/epoch=${ep(1)}/data")
-    assert(SignatureTieredStream.l0Epochs(spark, root, K, BANDS, SW)
+    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l0Epochs
       === Seq(ep(0)))
     assert(fold(20 until 40, root, 1L) === BatchOutcome.Minor)
     assert(fold(20 until 40, root, 1L) === BatchOutcome.Skipped)
     assert(fold(0 until 0, root, 2L) === BatchOutcome.EmptyBatch)
-    assert(SignatureTieredStream.l0Epochs(spark, root, K, BANDS, SW)
+    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l0Epochs
       === Seq(ep(1), ep(0)))
     val view = load(root).getOrElse(fail("no view"))
     try assert(sigIds(view.sigs) === (0L until 40L).toSet)
@@ -137,7 +137,7 @@ class SignatureTieredStreamSpec extends SparkSpec {
     val pinned = load(root).getOrElse(fail("no view"))
     assert(pinned.epochId === ep(2))
     (3 until 6).foreach(i => fold(i * 20 until (i + 1) * 20, root, i.toLong))
-    assert(SignatureTieredStream.l1Epochs(spark, root, K, BANDS, SW)
+    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l1Epochs
       === Seq(ep(5), ep(2)))
     try assert(sigIds(pinned.sigs) === (0L until 60L).toSet)
     finally pinned.release()

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions.{col, lit, udf}
 import graft.SparkSpec
 
 /** [[TieredRoll]]'s crash matrix and retention contract, asserted once per
-  * index family through each family's public façade. Every family folds
+  * index family through its public fold/load calls and its roll. Every
+  * family folds
   * the same shape of batches (ids in, ids served) at `majorEvery = 3`, and
   * every case injects its fault on disk between folds:
   *
@@ -30,24 +31,24 @@ class TieredRollFaultSpec extends SparkSpec {
 
   import sqlImplicits._
 
-  /** One index family: its batch shape, its public fold/list/load calls,
-    * and (for the families that compact) its tombstone frame shape. */
+  /** One index family: its batch shape, its public fold/load calls, its
+    * roll, and (for the families that compact) its tombstone frame shape. */
   private final class Family(
       val name: String,
       val strided: Boolean,
       val bootstraps: Boolean,
       val batch: Range => DataFrame,
       val fold: (DataFrame, String, Long) => BatchOutcome,
-      val l0: String => Seq[Long],
-      val l1: String => Seq[Long],
       /** the current view's id frame and its release */
       val load: String => Option[(DataFrame, () => Unit)],
       val roll: String => TieredRoll[_, _],
       /** compactMajor over tombstone ids `tomb(col("id"))` of a 3-row range */
       val compact: Option[(String, Column => Column) => Option[Long]],
-      /** `currentEpochId` and `loadCurrent` of a reader whose params map
-        * differs from the writer's */
-      val otherParams: String => (Option[Long], Option[Any])) {
+      /** a reader whose params map differs from the writer's */
+      val otherParams: String => TieredRoll[_, _]) {
+
+    def l0(root: String): Seq[Long] = roll(root).l0Epochs
+    def l1(root: String): Seq[Long] = roll(root).l1Epochs
 
     def ep(batchId: Long): Long =
       if (strided) TierIds.dataEpoch(batchId) else batchId
@@ -89,38 +90,26 @@ class TieredRollFaultSpec extends SparkSpec {
         ids => vecs(ids, 2),
         (b, root, id) => VectorTieredStream.foldBatch(b, "vec_id", "emb",
           root, id, vCells, vTrain, vIters, majorEvery = 3),
-        VectorTieredStream.l0Epochs(spark, _, vCells, vTrain, vIters),
-        VectorTieredStream.l1Epochs(spark, _, vCells, vTrain, vIters),
         VectorTieredStream.loadCurrent(spark, _, vCells, vTrain, vIters)
           .map(v => (v.index.assigned.select("nid"), v.release)),
         new VectorTieredStream.Roll(spark, _, vCells, vTrain, vIters),
         Some((root, tomb) => VectorTieredStream.compactMajor(spark, root,
           tombOf("vec_id", tomb), "vec_id", 0.0, vCells, vTrain, vIters)),
-        root => (VectorTieredStream.currentEpochId(spark, root, vCells, vTrain,
-          vIters + 1), VectorTieredStream.loadCurrent(spark, root, vCells,
-          vTrain, vIters + 1))),
+        new VectorTieredStream.Roll(spark, _, vCells, vTrain, vIters + 1)),
       new Family("pq", strided = true, bootstraps = true,
         ids => vecs(ids, dim),
         (b, root, id) => PqTieredStream.foldBatch(b, "vec_id", "emb", root,
           id, dim, m, k, iters, train, majorEvery = 3),
-        PqTieredStream.l0Epochs(spark, _, dim, m, k, iters, train),
-        PqTieredStream.l1Epochs(spark, _, dim, m, k, iters, train),
         PqTieredStream.loadCurrent(spark, _, dim, m, k, iters, train)
           .map(v => (v.index.encoded.select("nid"), v.release)),
         new PqTieredStream.Roll(spark, _, dim, m, k, iters, train),
         Some((root, tomb) => PqTieredStream.compactMajor(spark, root,
           tombOf("vec_id", tomb), "vec_id", 0.0, dim, m, k, iters, train)),
-        root => (PqTieredStream.currentEpochId(spark, root, dim, m, k,
-          iters + 1, train), PqTieredStream.loadCurrent(spark, root, dim, m,
-          k, iters + 1, train))),
+        new PqTieredStream.Roll(spark, _, dim, m, k, iters + 1, train)),
       new Family("ivfpq", strided = true, bootstraps = true,
         ids => vecs(ids, dim),
         (b, root, id) => IvfPqTieredStream.foldBatch(b, "vec_id", "emb",
           root, id, dim, cells, m, k, iters, iters, train, majorEvery = 3),
-        IvfPqTieredStream.l0Epochs(spark, _, dim, cells, m, k, iters, iters,
-          train),
-        IvfPqTieredStream.l1Epochs(spark, _, dim, cells, m, k, iters, iters,
-          train),
         IvfPqTieredStream.loadCurrent(spark, _, dim, cells, m, k, iters,
           iters, train).map(v => (v.index.coded.select("nid"), v.release)),
         new IvfPqTieredStream.Roll(spark, _, dim, cells, m, k, iters, iters,
@@ -128,14 +117,11 @@ class TieredRollFaultSpec extends SparkSpec {
         Some((root, tomb) => IvfPqTieredStream.compactMajor(spark, root,
           tombOf("vec_id", tomb), "vec_id", 0.0, dim, cells, m, k, iters,
           iters, train)),
-        root => (IvfPqTieredStream.currentEpochId(spark, root, dim, cells, m,
-          k, iters, iters + 1, train), IvfPqTieredStream.loadCurrent(spark,
-          root, dim, cells, m, k, iters, iters + 1, train))),
+        new IvfPqTieredStream.Roll(spark, _, dim, cells, m, k, iters,
+          iters + 1, train)),
       new Family("lex", strided = false, bootstraps = true,
         ids => ids.map(i => (i.toLong, s"w$i x")).toDF("doc_id", "text"),
         (b, root, id) => LexTieredStream.foldBatch(b, root, id, majorEvery = 3),
-        LexTieredStream.l0Epochs(spark, _),
-        LexTieredStream.l1Epochs(spark, _),
         LexTieredStream.loadCurrent(spark, _)
           .map(v => (v.index.dl.select("doc_id"), v.release)),
         new LexTieredStream.Roll(spark, _),
@@ -144,17 +130,12 @@ class TieredRollFaultSpec extends SparkSpec {
         // another tokenizer stands in for a reader with other params
         root => {
           restamp(root, "tokenizer", "ws", "other")
-          (LexTieredStream.currentEpochId(spark, root),
-            LexTieredStream.loadCurrent(spark, root))
+          new LexTieredStream.Roll(spark, root)
         }),
       new Family("graph", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong, i + 100000L)).toDF("src", "dst"),
         (b, root, id) => GraphTieredStream.foldBatch(b, root, id,
           majorEvery = 3),
-        GraphTieredStream.l0Epochs(spark, _, graft.operators.Adjacency
-          .DefaultHubLimit),
-        GraphTieredStream.l1Epochs(spark, _, graft.operators.Adjacency
-          .DefaultHubLimit),
         GraphTieredStream.loadCurrent(spark, _)
           .map(v => (v.mergedEdges.select("src"), v.release)),
         new GraphTieredStream.Roll(spark, _, graft.operators.Adjacency
@@ -162,15 +143,12 @@ class TieredRollFaultSpec extends SparkSpec {
         Some((root, tomb) => GraphTieredStream.compactMajor(spark, root,
           spark.range(3).select(tomb(col("id")).as("src"),
             lit(1L).as("dst")))),
-        root => (GraphTieredStream.currentEpochId(spark, root, hubLimit = 7L),
-          GraphTieredStream.loadCurrent(spark, root, hubLimit = 7L))),
+        new GraphTieredStream.Roll(spark, _, hubLimit = 7L)),
       new Family("media", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong, i * 0x9e3779b97f4a7c15L))
           .toDF("media_id", "phash"),
         (b, root, id) => MediaTieredStream.foldHashes(b, root, id,
           majorEvery = 3),
-        MediaTieredStream.l0Epochs(spark, _),
-        MediaTieredStream.l1Epochs(spark, _),
         MediaTieredStream.loadCurrent(spark, _)
           .map(v => (v.hashes.select("media_id"), () => ())),
         new MediaTieredStream.Roll(spark, _),
@@ -179,8 +157,7 @@ class TieredRollFaultSpec extends SparkSpec {
         // media params are fixed by the build, as lex's
         root => {
           restamp(root, "index_kind", "ahash_tiered", "other")
-          (MediaTieredStream.currentEpochId(spark, root),
-            MediaTieredStream.loadCurrent(spark, root))
+          new MediaTieredStream.Roll(spark, root)
         }),
       new Family("signature", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong,
@@ -188,16 +165,12 @@ class TieredRollFaultSpec extends SparkSpec {
           .toDF("doc_id", "text"),
         (b, root, id) => SignatureTieredStream.foldBatch(b, "doc_id", "text",
           root, id, majorEvery = 3, sigK, bands, sw),
-        SignatureTieredStream.l0Epochs(spark, _, sigK, bands, sw),
-        SignatureTieredStream.l1Epochs(spark, _, sigK, bands, sw),
         SignatureTieredStream.loadCurrent(spark, _, sigK, bands, sw)
           .map(v => (v.sigs.select("id"), v.release)),
         new SignatureTieredStream.Roll(spark, _, sigK, bands, sw),
         Some((root, tomb) => SignatureTieredStream.compactMajor(spark, root,
           tombOf("doc_id", tomb), "doc_id", 0.0, sigK, bands, sw)),
-        root => (SignatureTieredStream.currentEpochId(spark, root, sigK, bands,
-          sw + 1), SignatureTieredStream.loadCurrent(spark, root, sigK, bands,
-          sw + 1))))
+        new SignatureTieredStream.Roll(spark, _, sigK, bands, sw + 1)))
   }
 
   /** Rewrite `key`'s recorded value in every epoch meta under `root`, as
@@ -341,9 +314,11 @@ class TieredRollFaultSpec extends SparkSpec {
       f.foldAll(r, 0 to f.majorAt + 1) // an L1 plus a live L0
       assert(f.l1(r).nonEmpty && f.l0(r).nonEmpty)
       assert(f.served(r) === allIds(f, 0 to f.majorAt + 1))
-      val (id, view) = f.otherParams(r)
-      assert(id === None, "currentEpochId must not see other params' epochs")
-      assert(view === None, "loadCurrent must not see other params' epochs")
+      val other = f.otherParams(r)
+      assert(other.currentEpochId === None,
+        "currentEpochId must not see other params' epochs")
+      assert(other.loadCurrent.isEmpty,
+        "loadCurrent must not see other params' epochs")
     }
 
     f.compact.foreach { compact =>
@@ -373,9 +348,9 @@ class TieredRollFaultSpec extends SparkSpec {
     // same length, still a well-formed meta — only the sidecar disagrees
     Files.write(meta, text.replace("batch:1", "batch:9").getBytes("UTF-8"))
     assert(lex.l0(r).isEmpty)
-    assert(LexTieredStream.currentEpochId(spark, r) === Some(0L))
+    assert(lex.roll(r).currentEpochId === Some(0L))
     assert(lex.served(r) === allIds(lex, 0 to 0))
-    val pin = LexServeStream.tieredPinFor(spark, r)
+    val pin = lex.roll(r).pin
     try assert(pin.get()._1 === 0L) finally pin.close()
   }
 }

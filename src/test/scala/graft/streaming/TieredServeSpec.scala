@@ -9,7 +9,8 @@ import graft.SparkSpec
 
 /** Serving from TIERED roots — the production pairing of the L0/L1
   * rolls with the pinned serve streams. Contracts per family:
-  *  - vector/lex/PQ/IVFADC/media: answers over a tiered root are
+  *  - vector/lex/PQ/IVFADC/media (media through its roll's
+  *    [[TieredRoll.serve]]): answers over a tiered root are
   *    IDENTICAL to probing the flat operator chain over the same batches
   *    (build + append/fold, then the same probe — the tiers' certified
   *    fold identities, surfaced at the serve layer);
@@ -71,8 +72,8 @@ class TieredServeSpec extends SparkSpec {
     } finally twin.release()
 
     // mid-stream minor: pin swaps at the next batch and serves the delta
-    val pin = VectorServeStream.tieredPinFor(spark, tRoot, nCells = 4,
-      trainSample = 50, iters = 2)
+    val pin = new VectorTieredStream.Roll(spark, tRoot, nCells = 4,
+      trainSample = 50, iters = 2).pin
     try {
       val (id0, _) = pin.get()
       VectorTieredStream.foldBatch(vecs(401 to 410), "vec_id", "emb", tRoot,
@@ -98,8 +99,8 @@ class TieredServeSpec extends SparkSpec {
     }
     // the edit (L0@2) and delete (L0@3) sit ABOVE the bootstrap L1@0 —
     // the serve path must resolve them through the tier merge
-    assert(LexTieredStream.l1Epochs(spark, tRoot) === Seq(0L))
-    assert(LexTieredStream.l0Epochs(spark, tRoot) === Seq(3L, 2L, 1L))
+    assert(new LexTieredStream.Roll(spark, tRoot).l1Epochs === Seq(0L))
+    assert(new LexTieredStream.Roll(spark, tRoot).l0Epochs === Seq(3L, 2L, 1L))
 
     val q = Seq((1L, "a b"), (2L, "d"), (3L, "x")).toDF("qid", "qtext")
     val in = stageOne(q, Files.createTempDirectory("tsl_in").toString + "/q")
@@ -153,8 +154,8 @@ class TieredServeSpec extends SparkSpec {
       GraphTieredStream.foldBatch(es.toDF("src", "dst"), root, i.toLong,
         majorEvery = 3)
     }
-    assert(GraphTieredStream.l1Epochs(spark, root,
-      graft.operators.Adjacency.DefaultHubLimit).head === TierIds.dataEpoch(2))
+    assert(new GraphTieredStream.Roll(spark, root,
+      graft.operators.Adjacency.DefaultHubLimit).l1Epochs.head === TierIds.dataEpoch(2))
 
     val q = Seq((101L, 1L), (104L, 4L)).toDF("qid", "node")
     val in = stageOne(q, Files.createTempDirectory("tsg_in").toString + "/q")
@@ -228,8 +229,8 @@ class TieredServeSpec extends SparkSpec {
     } finally twin.release()
 
     // mid-stream minor: pin swaps at the next batch and serves the delta
-    val pin = PqServeStream.tieredPinFor(spark, tRoot, dim = 8, m = 2,
-      codebookK = 4, iters = 2, trainSample = 50)
+    val pin = new PqTieredStream.Roll(spark, tRoot, dim = 8, m = 2,
+      k = 4, iters = 2, trainSample = 50).pin
     try {
       val (id0, _) = pin.get()
       PqTieredStream.foldBatch(qvecs(401 to 410), "vec_id", "emb", tRoot,
@@ -281,9 +282,9 @@ class TieredServeSpec extends SparkSpec {
     } finally twin.release()
 
     // mid-stream minor: pin swaps at the next batch and serves the delta
-    val pin = IvfPqServeStream.tieredPinFor(spark, tRoot, dim = 8,
-      nCells = 3, m = 2, codebookK = 4, coarseIters = 2, pqIters = 2,
-      trainSample = 50)
+    val pin = new IvfPqTieredStream.Roll(spark, tRoot, dim = 8,
+      nCells = 3, m = 2, k = 4, coarseIters = 2, pqIters = 2,
+      trainSample = 50).pin
     try {
       val (id0, _) = pin.get()
       IvfPqTieredStream.foldBatch(qvecs(401 to 410), "vec_id", "emb", tRoot,
@@ -339,9 +340,13 @@ class TieredServeSpec extends SparkSpec {
     val in = stageOne(probes,
       Files.createTempDirectory("tsm_in").toString + "/q")
     val out = Files.createTempDirectory("tsm_out").toString
-    val sq = MediaServeStream.startTiered(
-      spark.readStream.schema(probes.schema).parquet(in), tRoot, out,
-      Files.createTempDirectory("tsm_ck").toString, maxHamming = 6)
+    val sq = new MediaTieredStream.Roll(spark, tRoot).serve(
+      spark.readStream.schema(probes.schema).parquet(in), out,
+      Files.createTempDirectory("tsm_ck").toString,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()) { (b, view) =>
+      graft.operators.Multimodal.nearDupProbeFromHashes(view.hashes,
+        graft.operators.Multimodal.imageHashes(b), maxHamming = 6)
+    }
     assert(sq.awaitTermination(180000L), "serve must drain")
     val served = readAnswers(out)
 
@@ -355,7 +360,7 @@ class TieredServeSpec extends SparkSpec {
     assert(served.exists(r => r.head == 1000L && r(1) == 0L))
     assert(!served.exists(_.head == 1007L))
 
-    val pin = MediaServeStream.tieredPinFor(spark, tRoot)
+    val pin = new MediaTieredStream.Roll(spark, tRoot).pin
     try {
       val (id0, _) = pin.get()
       MediaTieredStream.foldBatch(images(50 until 55), tRoot, 5L,

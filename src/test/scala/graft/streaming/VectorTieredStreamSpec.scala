@@ -52,11 +52,11 @@ class VectorTieredStreamSpec extends SparkSpec {
     assert(outcomes(2) === BatchOutcome.Minor)
     assert(outcomes(3) === BatchOutcome.Major(2))
     assert(outcomes(4) === BatchOutcome.Minor)
-    assert(VectorTieredStream.l1Epochs(spark, root, N_CELLS, TRAIN, ITERS)
+    assert(new VectorTieredStream.Roll(spark, root, N_CELLS, TRAIN, ITERS).l1Epochs
       === Seq(ep(3), ep(0))) // two kept generations
     // the major absorbed L0s 1 and 2 but retains them (they sit above the
     // PREVIOUS L1@0 — the one-major reader grace); the next major prunes
-    assert(VectorTieredStream.l0Epochs(spark, root, N_CELLS, TRAIN, ITERS)
+    assert(new VectorTieredStream.Roll(spark, root, N_CELLS, TRAIN, ITERS).l0Epochs
       === Seq(ep(4), ep(2), ep(1)))
 
     // delta-sized minor: the L0 dir holds ONE batch's rows, not the corpus
