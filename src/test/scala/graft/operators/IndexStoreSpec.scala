@@ -429,6 +429,81 @@ class IndexStoreSpec extends SparkSpec {
     graft.queries.CoreQueries.releaseGraphIndexes(s2)
   }
 
+  test("stored-index layout: every kind's meta keys and top-level subdirectories") {
+    import scala.jdk.CollectionConverters._
+    import sqlImplicits._
+    import graft.streaming._
+    // a key recorded twice fails the read
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().enable(
+      com.fasterxml.jackson.core.JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+    def epoch(root: String, tier: String): String =
+      new java.io.File(s"$root/$tier").listFiles().map(_.getPath)
+        .filter(_.contains("epoch=")).toSeq match {
+        case Seq(d) => d
+        case ds => fail(s"not one committed $tier epoch under $root: $ds")
+      }
+    val Seq(ivf, pq, ivfpq, lex, sig, graph, hubs, media, clusterRoot) =
+      Seq("ivf", "pq", "ivfpq", "lex", "sig", "graph", "hubs", "media", "cluster")
+        .map(n => tmp(s"layout_$n"))
+    val vecs = (1 to 40).map(i => (i.toLong,
+      Array.tabulate(8)(d => if (d == i % 8) 1.0f else 0.01f * ((i * d) % 5))))
+      .toDF("vec_id", "emb")
+    VectorTieredStream.foldBatch(vecs, "vec_id", "emb", ivf, 0L, nCells = 4,
+      trainSample = 50, iters = 2)
+    PqTieredStream.foldBatch(vecs, "vec_id", "emb", pq, 0L, dim = 8, m = 2,
+      k = 4, iters = 2, trainSample = 50)
+    IvfPqTieredStream.foldBatch(vecs, "vec_id", "emb", ivfpq, 0L, dim = 8,
+      nCells = 3, m = 2, k = 4, coarseIters = 2, pqIters = 2, trainSample = 50)
+    LexTieredStream.foldBatch(Seq((1L, "a b"), (2L, "b c")).toDF("doc_id", "text"),
+      lex, 0L)
+    (0L to 1L).foreach { b => // batch 1 commits the L1 of the families below
+      val ids = (b * 10 + 1 to b * 10 + 5).toSeq
+      SignatureTieredStream.foldBatch(ids.map(i => (i, (0 until 20)
+        .map(t => s"w${i}_$t").mkString(" "))).toDF("doc_id", "text"), "doc_id",
+        "text", sig, b, majorEvery = 2, k = 64, bands = 16, shingleWidth = 3)
+      val edges = ids.map(d => (b + 1, 100L + d)).toDF("src", "dst")
+      GraphTieredStream.foldBatch(edges, graph, b, majorEvery = 2)
+      // 5 edges per src pass hubLimit = 2
+      GraphTieredStream.foldBatch(edges, hubs, b, majorEvery = 2, hubLimit = 2L)
+      MediaTieredStream.foldHashes(ids.map(i => (i, i * 31L)).toDF("media_id",
+        "phash"), media, b, majorEvery = 2)
+    }
+    val s1 = spark.newSession()
+    s1.conf.set(IndexStore.IndexDirConf, clusterRoot)
+    TextQueries.prepareClusterIndex(s1, dir)
+    TextQueries.releaseClusterLabels(s1)
+
+    val graphKeys = "weighted hub_count src_count edge_count bcast_limit " +
+      "array_adj_schema flat_schema hub_deg_schema dedup hub_limit"
+    Seq(
+      (epoch(ivf, "l1"), "ivf", "n_cells assigned_schema roll_n_cells " +
+        "roll_train_sample roll_iters", "assigned centroids"),
+      (epoch(pq, "l1"), "pq", "m k sub_dim encoded_schema roll_dim roll_m " +
+        "roll_k roll_iters roll_train_sample", "encoded codebooks"),
+      (epoch(ivfpq, "l1"), "ivfpq", "n_cells m k sub_dim coded_schema roll_dim " +
+        "roll_n_cells roll_m roll_k roll_coarse_iters roll_pq_iters " +
+        "roll_train_sample", "coded centroids codebooks"),
+      (epoch(lex, "l1"), "postings", "n_docs sum_dl tf_schema dl_schema tokenizer",
+        "tf dl"),
+      (epoch(sig, "l1"), "signature", "k bands shingle_width sigs_schema " +
+        "buckets_schema", "sigs buckets"),
+      (epoch(graph, "l1"), "graph", graphKeys, "array_adj"),
+      (epoch(hubs, "l1"), "graph", graphKeys, "array_adj flat hub_deg"),
+      (epoch(graph, "l0"), "stage", "schema dedup hub_limit tier", "data"),
+      (epoch(media, "l1"), "stage", "schema index_kind tier", "data"),
+      (IndexStore.storePath(clusterRoot, "cluster", s"$dir/documents.parquet"),
+        "cluster", "labels_schema pair_k pair_bands pair_shingle_width " +
+        "pair_threshold", "labels")
+    ).foreach { case (store, kind, keys, dirs) =>
+      val meta = json.readTree(new java.io.File(store, "_graft_index.json"))
+      assert(meta.fieldNames.asScala.toSet ===
+        ("kind corpus_version " + keys).split(" ").toSet, store)
+      assert(meta.get("kind").asText === kind, store)
+      assert(new java.io.File(store).listFiles().filter(_.isDirectory)
+        .map(_.getName).toSet === dirs.split(" ").toSet, store)
+    }
+  }
+
   test("registered SQL functions reject wrong arity with a readable error") {
     val e = intercept[Exception] {
       spark.range(1).selectExpr("float_dot(array(1.0F))").collect()
