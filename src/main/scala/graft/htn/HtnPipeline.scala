@@ -92,12 +92,11 @@ object HtnPipeline {
           case Some(v) =>
             val params = Map("stage" -> name, "config" -> cfg.toString,
               "codes_md5" -> codesHash, "logic" -> LogicVersion)
-            graft.operators.IndexStore
-              .loadStage(spark, stageDir, Some(v), params)
+            import graft.operators.IndexStore
+            IndexStore.load(spark, IndexStore.stage, stageDir, Some(v), params)
               .getOrElse {
-                graft.operators.IndexStore.saveStage(spark, df, stageDir, v, params)
-                graft.operators.IndexStore
-                  .loadStage(spark, stageDir, Some(v), params)
+                IndexStore.save(spark, IndexStore.stage, df, stageDir, v, params)
+                IndexStore.load(spark, IndexStore.stage, stageDir, Some(v), params)
                   .getOrElse(sys.error(
                     s"stage $name did not reload under its own fresh stamp"))
               }

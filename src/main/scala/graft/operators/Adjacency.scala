@@ -280,7 +280,7 @@ object Adjacency {
     * persisted and counted (the [[build]] eager contract), so the CALLER
     * may release the standing hybrid as soon as the fold returns; epoch
     * chains should periodically compact through
-    * [[IndexStore.saveGraphIndex]] — the durable form is also how a folded
+    * [[IndexStore.graph]] — the durable form is also how a folded
     * index outlives the session.
     *
     * Hub routing: the mini-build routes by the multiplicity of

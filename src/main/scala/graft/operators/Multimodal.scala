@@ -371,13 +371,13 @@ object Multimodal {
     * from here across sessions, so re-ingest never re-decodes blobs. */
   def saveAHashIndex(spark: SparkSession, hashes: DataFrame, dir: String,
                      note: String): Unit =
-    IndexStore.saveStage(spark, hashes, dir, note,
+    IndexStore.save(spark, IndexStore.stage, hashes, dir, note,
       Map("index_kind" -> "ahash")) // "kind" is the stage meta's own key
 
   /** Load a durable aHash index committed by [[saveAHashIndex]]; `None`
     * when absent/torn/param-mismatched. */
   def loadAHashIndex(spark: SparkSession, dir: String): Option[DataFrame] =
-    IndexStore.loadStage(spark, dir, None, Map("index_kind" -> "ahash"))
+    IndexStore.load(spark, IndexStore.stage, dir, None, Map("index_kind" -> "ahash"))
 
   /** Size the partition COUNT by payload bytes: media blobs are wildly
     * variable, so a row-count-derived partition count under- or

@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * over every text byte plus two corpus-wide aggregates. The postings are
   * far smaller than the raw text, so building once per ingest epoch and
   * probing per query is the only shape that survives 100 TB. The index
-  * round-trips through [[IndexStore.savePostingsIndex]] (counts in the
+  * round-trips through [[IndexStore.postings]] (counts in the
   * meta, zero-job loads) and folds per-batch deltas with [[foldDocs]] at
   * a cost proportional to |Δ| text + one pass over the COMPACT standing
   * frames (never the standing text).

@@ -710,7 +710,7 @@ object Similarity {
 
   /** [[pqEncode]] against RAW codebooks (no [[PqIndex]] handle) — the
     * tiered PQ roll's minor path holds only the model
-    * ([[graft.operators.IndexStore.loadPqCodebooks]]), never the standing
+    * ([[graft.operators.IndexStore.Reader.codebooks]]), never the standing
     * encoded frame. Same kernel, same determinism. */
   def pqEncodeWith(codebooks: Array[Array[Array[Double]]], subDim: Int,
                    batch: DataFrame, nid: String, nvec: String): DataFrame = {
@@ -927,7 +927,7 @@ object Similarity {
 
   /** [[ivfPqEncode]] against RAW models (no [[IvfPqIndex]] handle) — the
     * tiered IVFADC roll's minor path holds only the two small models
-    * ([[graft.operators.IndexStore.loadIvfPqModels]]), never the standing
+    * ([[graft.operators.IndexStore.Reader]]), never the standing
     * coded frame. Same kernels, same determinism. */
   def ivfPqEncodeWith(centroids: Array[Array[Double]],
                       codebooks: Array[Array[Array[Double]]], subDim: Int,

@@ -56,9 +56,8 @@ object CoreQueries {
                          (build: => graft.operators.Adjacency.Hybrid)
       : graft.operators.Adjacency.Hybrid =
     SessionIndexes.get(s, "graph", s"$dir#$graphKind", "graph")(
-      graft.operators.IndexStore.fromConf(s, graphKind, s"$dir/lineitem.parquet", params)(
-        graft.operators.IndexStore.loadGraphIndex,
-        graft.operators.IndexStore.saveGraphIndex)(build))(_.release())
+      graft.operators.IndexStore.fromConf(s, graft.operators.IndexStore.graph,
+        graphKind, s"$dir/lineitem.parquet", params)(build))(_.release())
 
   /** Pair-generation shared by the co-purchase graphs: parts appearing in
     * the same order, both directions, src/dst LONG. `private[graft]` so

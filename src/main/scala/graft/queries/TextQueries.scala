@@ -62,9 +62,8 @@ object TextQueries {
                             kind: String, params: Map[String, String])(
       build: => DataFrame): DataFrame =
     SessionIndexes.get(s, "cluster", key, stat)(
-      graft.operators.IndexStore.fromConf(s, kind, s"$dir/documents.parquet", params)(
-        graft.operators.IndexStore.loadClusterLabels,
-        graft.operators.IndexStore.saveClusterLabels)(build)) { labels =>
+      graft.operators.IndexStore.fromConf(s, graft.operators.IndexStore.cluster,
+        kind, s"$dir/documents.parquet", params)(build)) { labels =>
       // NOT Dataset.unpersist alone: checkpoint blocks live on the
       // LogicalRDD leaf's internal RDD, unreachable from the CacheManager;
       // labels LOADED from the durable store are plain persisted parquet
@@ -137,10 +136,10 @@ object TextQueries {
                              params: Map[String, String])(
       build: => Dedup.SignatureIndex): Dedup.SignatureIndex =
     SessionIndexes.get(s, "signature", key, "signature")(
-      graft.operators.IndexStore.fromConf(s, kind, s"$dir/documents.parquet",
+      graft.operators.IndexStore.fromConf(s, graft.operators.IndexStore.signature,
+        kind, s"$dir/documents.parquet",
         Map("k" -> "128", "bands" -> "32", "shingle_width" -> "3") ++ params)(
-        graft.operators.IndexStore.loadSignatureIndex,
-        graft.operators.IndexStore.saveSignatureIndex)(build))(_.release())
+        build))(_.release())
 
   // d06's standing corpus: even doc_ids (pmod so corpus (===0) and batch
   // (===1) partition ANY id domain — signed % leaves negative odd ids in
@@ -1600,9 +1599,8 @@ object TextQueries {
   private[graft] def corpusPostingsIndex(s: SparkSession, dir: String)
       : graft.operators.Postings.Index =
     SessionIndexes.get(s, "postings", dir, "postings")(
-      graft.operators.IndexStore.fromConf(s, "postings", s"$dir/documents.parquet")(
-        graft.operators.IndexStore.loadPostingsIndex,
-        graft.operators.IndexStore.savePostingsIndex)(
+      graft.operators.IndexStore.fromConf(s, graft.operators.IndexStore.postings,
+        "postings", s"$dir/documents.parquet")(
         graft.operators.Postings.build(docsSized(s, dir, docs(s, dir)))))(_.release())
 
   /** Build AND materialize the postings index for (session, dir) — Bench

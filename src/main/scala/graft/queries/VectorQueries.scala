@@ -30,9 +30,8 @@ object VectorQueries {
     SessionIndexes.get(s, "ivf", s"$stat|$dir", stat)(build)(release)
 
   private def ivfIndexFor(s: SparkSession, dir: String): Similarity.IvfIndex =
-    vecIndex(s, dir, "ivf")(IndexStore.fromConf(s, "ivf",
+    vecIndex(s, dir, "ivf")(IndexStore.fromConf(s, IndexStore.ivf, "ivf",
       s"$dir/embeddings.parquet", Map("n_cells" -> "16"))(
-      IndexStore.loadIvfIndex, IndexStore.saveIvfIndex)(
       Similarity.ivfBuild(emb(s, dir), "vec_id", "embedding", nCells = 16)))(_.release())
 
   // Appended IVF (v12): a base index trained on ⅞ of the corpus
@@ -49,9 +48,8 @@ object VectorQueries {
 
   // PQ index: built by the first v08 invocation per (session, dir).
   private def pqIndexFor(s: SparkSession, dir: String): Similarity.PqIndex =
-    vecIndex(s, dir, "pq")(IndexStore.fromConf(s, "pq",
+    vecIndex(s, dir, "pq")(IndexStore.fromConf(s, IndexStore.pq, "pq",
       s"$dir/embeddings.parquet", Map("m" -> "4", "k" -> "8", "sub_dim" -> "16"))(
-      IndexStore.loadPqIndex, IndexStore.savePqIndex)(
       Similarity.pqBuild(emb(s, dir), "vec_id", "embedding",
         dim = 64, m = 4, k = 8, iters = 4)))(_.release())
 
@@ -70,10 +68,9 @@ object VectorQueries {
   // IVFADC (v29): coarse quantizer + residual-PQ codebooks + coded
   // corpus — the two-stage index ([[Similarity.ivfPqBuild]]).
   private def ivfPqIndexFor(s: SparkSession, dir: String): Similarity.IvfPqIndex =
-    vecIndex(s, dir, "ivfPq")(IndexStore.fromConf(s, "ivfpq",
+    vecIndex(s, dir, "ivfPq")(IndexStore.fromConf(s, IndexStore.ivfPq, "ivfpq",
       s"$dir/embeddings.parquet",
       Map("n_cells" -> "8", "m" -> "4", "k" -> "8", "sub_dim" -> "16"))(
-      IndexStore.loadIvfPqIndex, IndexStore.saveIvfPqIndex)(
       Similarity.ivfPqBuild(emb(s, dir), "vec_id", "embedding",
         dim = 64, nCells = 8, m = 4, k = 8, coarseIters = 4, pqIters = 4)))(_.release())
 

@@ -17,13 +17,13 @@ import graft.operators.{Adjacency, Checkpoints, IndexStore}
   *  - **L0 (minor)**: the batch's normalized, within-batch-distinct
   *    `(src, dst)` edges.
   *  - **L1 (major)**: the standing L1's edges, the live deltas and the batch
-  *    built into a full [[Adjacency.Hybrid]] ([[IndexStore.saveGraphIndex]]).
+  *    built into a full [[Adjacency.Hybrid]] ([[IndexStore.graph]]).
   *
   * Readers merge ≤ 2 tiers ([[loadCurrent]] → [[Tiered]]). Point reads
   * ([[Tiered.neighbors]]) stay query-proportional — probe the L1 hybrid
   * AND the (small) delta union, dedup per query; full-graph consumers
-  * (PageRank and friends) call [[Tiered.mergedHybrid]], which pays the
-  * one build a major would.
+  * (PageRank and friends) build over [[Tiered.mergedEdges]], which pays
+  * the one build a major would.
   *
   * Degree-exactness: a ranking that reads [[Adjacency.Hybrid.outDegrees]]
   * off the L1 tier alone is stale by at most `majorEvery − 1` deltas
@@ -48,16 +48,10 @@ object GraphTieredStream {
   private[streaming] final class Roll(spark: SparkSession, root: String,
                                       hubLimit: Long)
       extends TieredRoll[Adjacency.Hybrid, Tiered](spark, root, "graph") {
-    private val pm = Map("dedup" -> "true", "hub_limit" -> hubLimit.toString)
+    protected val l1Codec = IndexStore.graph
+    protected val l1Params = Map("dedup" -> "true", "hub_limit" -> hubLimit.toString)
     protected val bootstraps = false
-    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_edges")
-    protected def l1Committed(dir: String): Boolean =
-      IndexStore.graphIndexMeta(spark, dir, pm).isDefined
-    protected def loadL1(dir: String): Option[Adjacency.Hybrid] =
-      IndexStore.loadGraphIndex(spark, dir, expectedParams = pm)
-    protected def saveL1(l1: Adjacency.Hybrid, dir: String, note: String): Unit =
-      IndexStore.saveGraphIndex(spark, l1, dir, note, pm)
-    protected def releaseL1(l1: Adjacency.Hybrid): Unit = l1.release()
+    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_edges")
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Adjacency.Hybrid]): Tiered = {
@@ -129,7 +123,7 @@ object GraphTieredStream {
 
     /** EXACT cross-tier out-degrees at |Δ| cost — upgrades the
       * degree-staleness trade documented above without paying
-      * [[mergedHybrid]]'s full build: the L1 degrees are adjusted by the
+      * a full build over [[mergedEdges]]: the L1 degrees are adjusted by the
       * delta edges NOT already present in L1 (cross-tier duplicates must
       * not double-count). The L1-membership probe is one-hop and
       * delta-proportional: only the DELTA's srcs are expanded (work
@@ -166,13 +160,6 @@ object GraphTieredStream {
               .select(col("src"), col("add").as("outdeg")))
       }
     }
-
-    /** Full-adjacency view for whole-graph consumers: pays the build a
-      * major compaction would (use at L1 cadence, not per query). Caller
-      * releases the returned hybrid; this [[Tiered]] stays usable. */
-    def mergedHybrid(hubLimit: Long = Adjacency.DefaultHubLimit): Adjacency.Hybrid =
-      Checkpoints.sweepingOnFailure(delta.sparkSession.sparkContext)(
-        Adjacency.build(mergedEdges, dedup = true, hubLimit = hubLimit))
 
     /** [[mergedEdges]] minus a caller-held (src, dst) tombstone edge set —
       * the survivor edges a physical compaction would store, served before

@@ -18,7 +18,7 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   *  - **L0 (minor)**: the batch routed + residual-encoded under the
   *    STANDING models ([[Similarity.ivfPqEncodeWith]] — assignCells +
   *    float residuals + the shared PQ encode kernel, all map-only); only
-  *    the two tiny models are loaded ([[IndexStore.loadIvfPqModels]]).
+  *    the two tiny models are read ([[IndexStore.Reader]]).
   *  - **L1 (major)**: the standing codes unioned with the live deltas and
   *    the batch — SAME models, both encode stages commute with union under
   *    a fixed quantizer, zero re-encode.
@@ -37,7 +37,8 @@ object IvfPqTieredStream {
       dim: Int, nCells: Int, m: Int, k: Int, coarseIters: Int, pqIters: Int,
       trainSample: Int, idCol: String = "", vecCol: String = "")
       extends TieredRoll[Similarity.IvfPqIndex, Tiered](spark, root, "ivfpq") {
-    private val pm = Map("roll_dim" -> dim.toString,
+    protected val l1Codec = IndexStore.ivfPq
+    protected val l1Params = Map("roll_dim" -> dim.toString,
       "roll_n_cells" -> nCells.toString,
       "roll_m" -> m.toString, "roll_k" -> k.toString,
       "roll_coarse_iters" -> coarseIters.toString,
@@ -45,15 +46,7 @@ object IvfPqTieredStream {
       "roll_train_sample" -> trainSample.toString)
     protected val bootstraps = true
     protected val l0Params: Map[String, String] =
-      pm + ("tier" -> "l0_ivfpq_codes")
-    protected def l1Committed(dir: String): Boolean =
-      IndexStore.ivfPqIndexMeta(spark, dir, pm).isDefined
-    protected def loadL1(dir: String): Option[Similarity.IvfPqIndex] =
-      IndexStore.loadIvfPqIndex(spark, dir, expectedParams = pm)
-    protected def saveL1(l1: Similarity.IvfPqIndex, dir: String,
-                         note: String): Unit =
-      IndexStore.saveIvfPqIndex(spark, l1, dir, note, pm)
-    protected def releaseL1(l1: Similarity.IvfPqIndex): Unit = l1.release()
+      l1Params + ("tier" -> "l0_ivfpq_codes")
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Similarity.IvfPqIndex]): Tiered = {
@@ -73,7 +66,7 @@ object IvfPqTieredStream {
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit = {
       val (cents, books, subDim) =
-        standingModel(standing)(IndexStore.loadIvfPqModels(spark, _, pm))
+        standingModel(standing)(r => (r.centroids, r.codebooks, r.int("sub_dim")))
       save(Similarity.ivfPqEncodeWith(cents, books, subDim, delta, idCol,
         vecCol))
     }

@@ -50,13 +50,8 @@ object LexTieredStream {
     protected val bootstraps = true
     override protected val strided = false
     protected val l0Params: Map[String, String] = Params + ("tier" -> "l0_postings")
-    protected def l1Committed(dir: String): Boolean =
-      IndexStore.postingsIndexMeta(spark, dir, Params).isDefined
-    protected def loadL1(dir: String): Option[Postings.Index] =
-      IndexStore.loadPostingsIndex(spark, dir, expectedParams = Params)
-    protected def saveL1(l1: Postings.Index, dir: String, note: String): Unit =
-      IndexStore.savePostingsIndex(spark, l1, dir, note, Params)
-    protected def releaseL1(l1: Postings.Index): Unit = l1.release()
+    protected val l1Codec = IndexStore.postings
+    protected val l1Params = Params
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Postings.Index]): Tiered = {

@@ -36,19 +36,13 @@ object MediaTieredStream {
     * parameter (banding happens at read), so one committed index serves
     * every budget ≤ 15, unlike the model-carrying families. */
   private val baseParams = Map("index_kind" -> "ahash_tiered")
-  private val l1Params = baseParams + ("tier" -> "l1_hashes")
 
   private[streaming] final class Roll(spark: SparkSession, root: String)
       extends TieredRoll[DataFrame, Tiered](spark, root, "media") {
     protected val bootstraps = false
     protected val l0Params: Map[String, String] = baseParams + ("tier" -> "l0_hashes")
-    protected def l1Committed(dir: String): Boolean =
-      IndexStore.stageMeta(spark, dir, l1Params).isDefined
-    protected def loadL1(dir: String): Option[DataFrame] =
-      IndexStore.loadStage(spark, dir, None, l1Params)
-    protected def saveL1(l1: DataFrame, dir: String, note: String): Unit =
-      IndexStore.saveStage(spark, l1, dir, note, l1Params)
-    protected def releaseL1(l1: DataFrame): Unit = ()
+    protected val l1Codec = IndexStore.stage
+    protected val l1Params = baseParams + ("tier" -> "l1_hashes")
     protected def releaseView(v: Tiered): Unit = ()
     protected def view(t: TieredRoll.Tiers[DataFrame]): Tiered =
       Tiered(t.epochId, (t.l1.toSeq ++ t.l0Frames).reduce(_ unionByName _))

@@ -16,7 +16,7 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   *  - **L0 (minor)**: the batch encoded under the STANDING codebooks
   *    ([[Similarity.pqEncodeWith]] — the one shared encode kernel,
   *    map-only); only the m·k codebook model is loaded
-  *    ([[IndexStore.loadPqCodebooks]]), no persistent handles.
+  *    ([[IndexStore.Reader.codebooks]]), no persistent handles.
   *  - **L1 (major)**: the standing codes unioned with the live deltas and
   *    the batch — SAME codebooks, encoding under a fixed quantizer
   *    commutes, zero re-encode work.
@@ -35,18 +35,12 @@ object PqTieredStream {
       dim: Int, m: Int, k: Int, iters: Int, trainSample: Int,
       idCol: String = "", vecCol: String = "")
       extends TieredRoll[Similarity.PqIndex, Tiered](spark, root, "pq") {
-    private val pm = Map("roll_dim" -> dim.toString, "roll_m" -> m.toString,
+    protected val l1Codec = IndexStore.pq
+    protected val l1Params = Map("roll_dim" -> dim.toString, "roll_m" -> m.toString,
       "roll_k" -> k.toString, "roll_iters" -> iters.toString,
       "roll_train_sample" -> trainSample.toString)
     protected val bootstraps = true
-    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_codes")
-    protected def l1Committed(dir: String): Boolean =
-      IndexStore.pqIndexMeta(spark, dir, pm).isDefined
-    protected def loadL1(dir: String): Option[Similarity.PqIndex] =
-      IndexStore.loadPqIndex(spark, dir, expectedParams = pm)
-    protected def saveL1(l1: Similarity.PqIndex, dir: String, note: String): Unit =
-      IndexStore.savePqIndex(spark, l1, dir, note, pm)
-    protected def releaseL1(l1: Similarity.PqIndex): Unit = l1.release()
+    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_codes")
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Similarity.PqIndex]): Tiered = {
@@ -65,8 +59,8 @@ object PqTieredStream {
 
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit = {
-      val (codebooks, _, _, subDim) =
-        standingModel(standing)(IndexStore.loadPqCodebooks(spark, _, pm))
+      val (codebooks, subDim) =
+        standingModel(standing)(r => (r.codebooks, r.int("sub_dim")))
       save(Similarity.pqEncodeWith(codebooks, subDim, delta, idCol, vecCol))
     }
 

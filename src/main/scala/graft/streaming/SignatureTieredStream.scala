@@ -9,7 +9,7 @@ import graft.operators.{Checkpoints, Dedup, IndexStore}
 /** TIERED (L0/L1) epoch commits for the DEDUP family's MinHash
   * [[Dedup.SignatureIndex]] on the shared [[TieredRoll]] — the LSM path
   * between the flat per-epoch rebuild ([[NearDupAdmission]]'s index roll)
-  * and the durable store ([[IndexStore.saveSignatureIndex]]): a
+  * and the durable store ([[IndexStore.signature]]): a
   * continuously-ingesting corpus folds each micro-batch's signatures
   * without re-tokenizing standing documents.
   *
@@ -41,18 +41,12 @@ object SignatureTieredStream {
   private[streaming] final class Roll(spark: SparkSession, root: String,
                                       k: Int, bands: Int, shingleWidth: Int)
       extends TieredRoll[Dedup.SignatureIndex, Tiered](spark, root, "signature") {
-    private val pm = Map("k" -> k.toString, "bands" -> bands.toString,
+    protected val l1Codec = IndexStore.signature
+    // the signature meta records these natively; the save records them once
+    protected val l1Params = Map("k" -> k.toString, "bands" -> bands.toString,
       "shingle_width" -> shingleWidth.toString)
     protected val bootstraps = false
-    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_sigs")
-    protected def l1Committed(dir: String): Boolean =
-      IndexStore.loadSignatureIndexMeta(spark, dir, pm).isDefined
-    protected def loadL1(dir: String): Option[Dedup.SignatureIndex] =
-      IndexStore.loadSignatureIndex(spark, dir, expectedParams = pm)
-    protected def saveL1(l1: Dedup.SignatureIndex, dir: String,
-                         note: String): Unit =
-      IndexStore.saveSignatureIndex(spark, l1, dir, note)
-    protected def releaseL1(l1: Dedup.SignatureIndex): Unit = l1.release()
+    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_sigs")
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Dedup.SignatureIndex]): Tiered =
@@ -131,18 +125,6 @@ object SignatureTieredStream {
                         maxBucket: Int = 1000): Dedup.ManagedPairs =
       Dedup.incrementalPairsFromSigs(batchSigs, probeIndex, threshold,
         estMargin, maxBucket)
-
-    /** Full re-aggregated index over the merged sigs — pays the bucket
-      * groupBy a major would (use at L1 cadence, not per probe). Caller
-      * releases; this [[Tiered]] stays usable. */
-    def mergedIndex(): Dedup.SignatureIndex = {
-      val s = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val b = Dedup.bucketsFromSigs(s, k, bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      s.count(); b.count()
-      Dedup.SignatureIndex(k, bands, shingleWidth, s, b,
-        () => { s.unpersist(); b.unpersist(); () })
-    }
   }
 
   /** Load the newest committed tiered view; `None` before any commit. */

@@ -58,10 +58,13 @@ import graft.operators.IndexStore
   * epochs rather than a chain built under someone else's model. Single
   * writer; concurrent writers need an external lock.
   *
-  * A subclass is the family's codec: params and L1 meta peek, L1
-  * save/load/release, the reader view and its release, the minor's delta
-  * encode, the major's merge and the optional bootstrap build. One
-  * instance serves one (session, root, params) call. */
+  * Every epoch is an [[IndexStore]] store: L0s through
+  * [[IndexStore.stage]] under `l0Params`, L1s through the family's
+  * `l1Codec` under `l1Params`, so the core does every marker peek, load,
+  * save and release. A subclass supplies the rest of the family: the
+  * reader view and its release, the minor's delta encode, the major's
+  * merge and the optional bootstrap build. One instance serves one
+  * (session, root, params) call. */
 private[streaming] abstract class TieredRoll[L1, T](
     spark: SparkSession, root: String, family: String) {
 
@@ -77,11 +80,8 @@ private[streaming] abstract class TieredRoll[L1, T](
   /** Data epochs at [[TierIds]] strides; false keeps raw batch ids. */
   protected def strided: Boolean = true
   protected def l0Params: Map[String, String]
-  /** Zero-job commit-marker peek at an L1 epoch dir. */
-  protected def l1Committed(dir: String): Boolean
-  protected def loadL1(dir: String): Option[L1]
-  protected def saveL1(l1: L1, dir: String, note: String): Unit
-  protected def releaseL1(l1: L1): Unit
+  protected def l1Codec: IndexStore.Codec[L1]
+  protected def l1Params: Map[String, String]
   /** The reader view over loaded tiers; it owns the L1 handle. */
   protected def view(t: Tiers[L1]): T
   /** Free what a view holds (its L1 handle, any merge persist). */
@@ -101,14 +101,16 @@ private[streaming] abstract class TieredRoll[L1, T](
                       dir: String, note: String): Unit
 
   protected def commit(l1: L1, dir: String, note: String): Unit =
-    try saveL1(l1, dir, note) finally releaseL1(l1)
+    try IndexStore.save(spark, l1Codec, l1, dir, note, l1Params)
+    finally l1Codec.release(l1)
 
-  /** A model-only load off the standing L1 (the bootstrapping families'
-    * minors need no persisted handle). */
+  /** A model-only read off the standing L1's meta (the bootstrapping
+    * families' minors need no persisted handle). */
   protected def standingModel[A](standing: Option[Long])(
-      load: String => Option[A]): A =
-    standing.flatMap(id => load(l1Dir(id))).getOrElse(sys.error(
-      s"$family tier: standing L1 epoch=${standing.mkString} vanished mid-fold"))
+      model: IndexStore.Reader => A): A =
+    standing.flatMap(id => IndexStore.committed(spark, l1Codec, l1Dir(id), l1Params))
+      .map(model).getOrElse(sys.error(
+        s"$family tier: standing L1 epoch=${standing.mkString} vanished mid-fold"))
 
   // ---- layout and listing
 
@@ -120,15 +122,20 @@ private[streaming] abstract class TieredRoll[L1, T](
   private def epochOf(batchId: Long): Long =
     if (strided) TierIds.dataEpoch(batchId) else batchId
 
+  // zero-job commit-marker peeks
+  private def l0Committed(id: Long): Boolean =
+    IndexStore.committed(spark, IndexStore.stage, l0Dir(id), l0Params).isDefined
+  private def l1Committed(id: Long): Boolean =
+    IndexStore.committed(spark, l1Codec, l1Dir(id), l1Params).isDefined
+
   /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
   def l1Epochs: Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root).filter(id => l1Committed(l1Dir(id)))
+    EpochDirs.rawIds(spark, l1Root).filter(l1Committed)
       .sorted(Ordering[Long].reverse)
 
   /** Committed L0 epoch ids, newest first. */
   def l0Epochs: Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root)
-      .filter(id => IndexStore.stageMeta(spark, l0Dir(id), l0Params).isDefined)
+    EpochDirs.rawIds(spark, l0Root).filter(l0Committed)
       .sorted(Ordering[Long].reverse)
 
   /** The newest L1 id and the live L0 ids above it, oldest first; None
@@ -148,7 +155,7 @@ private[streaming] abstract class TieredRoll[L1, T](
 
   private def loadPinned: Option[(Long, T)] = current.map { t =>
     try t.epochId -> view(t)
-    catch { case e: Throwable => t.l1.foreach(releaseL1); throw e }
+    catch { case e: Throwable => t.l1.foreach(l1Codec.release); throw e }
   }
 
   private def current: Option[Tiers[L1]] =
@@ -165,11 +172,11 @@ private[streaming] abstract class TieredRoll[L1, T](
     // stage reads hold no handle, so they go first: a strict failure
     // leaves no persisted L1 behind
     val l0 = live.flatMap { id =>
-      val st = IndexStore.loadStage(spark, l0Dir(id), None, l0Params)
+      val st = IndexStore.load(spark, IndexStore.stage, l0Dir(id), None, l0Params)
       if (strict && st.isEmpty) vanished(s"L0 epoch=$id")
       st.map(id -> _)
     }
-    val l1 = l1Id.flatMap(id => loadL1(l1Dir(id)))
+    val l1 = l1Id.flatMap(id => IndexStore.load(spark, l1Codec, l1Dir(id), None, l1Params))
     if (strict && l1.isEmpty) l1Id.foreach(id => vanished(s"L1 epoch=$id"))
     if (l1.isEmpty && (l1Id.nonEmpty || l0.isEmpty)) None
     else Some(Tiers((l1Id.toSeq ++ live).max, l1Id, l1, live, l0))
@@ -207,8 +214,7 @@ private[streaming] abstract class TieredRoll[L1, T](
     require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
     if (strided) TierIds.ensureStrideLayout(spark, root)
     val epochId = epochOf(batchId)
-    if (IndexStore.stageMeta(spark, l0Dir(epochId), l0Params).isDefined ||
-        l1Committed(l1Dir(epochId)))
+    if (l0Committed(epochId) || l1Committed(epochId))
       return Skipped // replayed after a committed save — already applied
     Deltas.withMaterialized(batch) { delta =>
       // a bootstrapping family sizes its build and write windows from |Δ|,
@@ -225,14 +231,14 @@ private[streaming] abstract class TieredRoll[L1, T](
         } else {
           val live = l0Epochs.filter(id => standing.forall(id > _)).reverse
           if (live.size + 1 < majorEvery) {
-            minor(delta, n, epochId, standing)(IndexStore.saveStage(spark, _,
-              l0Dir(epochId), s"batch:$batchId", l0Params))
+            minor(delta, n, epochId, standing)(IndexStore.save(spark,
+              IndexStore.stage, _, l0Dir(epochId), s"batch:$batchId", l0Params))
             Minor
           } else {
             val t = tiers(standing, live, strict = true).get
             try major(t, delta, n, epochId, l1Dir(epochId),
               s"batch:$batchId major absorbed=${live.size}")
-            finally t.l1.foreach(releaseL1)
+            finally t.l1.foreach(l1Codec.release)
             pruneAfter(standing, epochId)
             Major(live.size)
           }
@@ -262,7 +268,7 @@ private[streaming] abstract class TieredRoll[L1, T](
       val newId = t.epochId + 1
       val committed =
         try kernel(view(t)).map(commit(_, l1Dir(newId), s"compact after=$prev"))
-        finally t.l1.foreach(releaseL1)
+        finally t.l1.foreach(l1Codec.release)
       committed.map { _ => pruneAfter(Some(prev), newId); newId }
     }
 
@@ -282,7 +288,7 @@ private[streaming] abstract class TieredRoll[L1, T](
   def retrainIfDrifted(maxDrifted: Int)(drifted: T => Long)(
       build: => L1): Option[Long] =
     current.flatMap { t =>
-      val n = try drifted(view(t)) finally t.l1.foreach(releaseL1)
+      val n = try drifted(view(t)) finally t.l1.foreach(l1Codec.release)
       if (n > maxDrifted) retrain(build) else None
     }
 

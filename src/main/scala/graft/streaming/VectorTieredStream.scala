@@ -17,7 +17,7 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   *  - **L0 (minor)**: the batch assigned under the STANDING centroids
   *    ([[Similarity.assignCells]] — one broadcast-map pass, no training,
   *    no shuffle); only the tiny centroid model is loaded
-  *    ([[IndexStore.loadIvfCentroids]]), no persistent handles.
+  *    ([[IndexStore.Reader.centroids]]), no persistent handles.
   *  - **L1 (major)**: the standing assignment unioned with the live deltas
   *    and the batch — SAME centroids, and assignment under a fixed
   *    quantizer commutes, so the union IS the full assignment with zero
@@ -36,18 +36,12 @@ object VectorTieredStream {
       nCells: Int, trainSample: Int, iters: Int,
       idCol: String = "", vecCol: String = "")
       extends TieredRoll[Similarity.IvfIndex, Tiered](spark, root, "vector") {
-    private val pm = Map("roll_n_cells" -> nCells.toString,
+    protected val l1Codec = IndexStore.ivf
+    protected val l1Params = Map("roll_n_cells" -> nCells.toString,
       "roll_train_sample" -> trainSample.toString,
       "roll_iters" -> iters.toString)
     protected val bootstraps = true
-    protected val l0Params: Map[String, String] = pm + ("tier" -> "l0_assigned")
-    protected def l1Committed(dir: String): Boolean =
-      IndexStore.ivfIndexMeta(spark, dir, pm).isDefined
-    protected def loadL1(dir: String): Option[Similarity.IvfIndex] =
-      IndexStore.loadIvfIndex(spark, dir, expectedParams = pm)
-    protected def saveL1(l1: Similarity.IvfIndex, dir: String, note: String): Unit =
-      IndexStore.saveIvfIndex(spark, l1, dir, note, pm)
-    protected def releaseL1(l1: Similarity.IvfIndex): Unit = l1.release()
+    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_assigned")
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Similarity.IvfIndex]): Tiered = {
@@ -68,7 +62,7 @@ object VectorTieredStream {
     protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                         standing: Option[Long])(save: DataFrame => Unit): Unit =
       save(Similarity.assignCells(delta, idCol, vecCol,
-        standingModel(standing)(IndexStore.loadIvfCentroids(spark, _, pm))))
+        standingModel(standing)(_.centroids)))
 
     protected def major(t: TieredRoll.Tiers[Similarity.IvfIndex],
                         delta: DataFrame, n: => Long, epochId: Long,

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * session build, through [[graft.plans.GraftExtensions]] — nothing else
   * writes a session's function registry or strategy list — and no
   * session-conf switch selects between code paths. Serving pins follow the
-  * same rule: one constructor site, [[graft.streaming.TieredRoll]]. */
+  * same rule: one constructor site, [[graft.streaming.TieredRoll]]. The
+  * stored-index format has one home too: only
+  * [[graft.operators.IndexStore]] names its commit marker. */
 class ConfMutationGuardSpec extends AnyFunSuite {
 
   private val main = new java.io.File("src/main/scala")
@@ -51,6 +53,11 @@ class ConfMutationGuardSpec extends AnyFunSuite {
 
   test("an EpochPin is built in src/main only by TieredRoll.pin") {
     val found = offenders(Seq("new EpochPin"))(_ != "graft/streaming/TieredRoll.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the stored-index marker _graft_index.json is named in src/main only in IndexStore.scala") {
+    val found = offenders(Seq("_graft_index.json"))(_ != "graft/operators/IndexStore.scala")
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -180,12 +180,13 @@ class HtnPipelineSpec extends SparkSpec {
         case s: Seq[_] => s.map(_.toString).sorted.mkString(",")
         case other => String.valueOf(other)
       }.mkString(";"))
+    import graft.operators.IndexStore
     val base = Map("stage" -> "analytical_htn", "config" -> HtnConfig().toString,
       "codes_md5" -> codesHash)
-    assert(graft.operators.IndexStore.loadStage(spark, stageDir, vNow,
+    assert(IndexStore.load(spark, IndexStore.stage, stageDir, vNow,
       base + ("logic" -> HtnPipeline.LogicVersion)).nonEmpty,
       "current logic version must reuse the stage it just wrote")
-    assert(graft.operators.IndexStore.loadStage(spark, stageDir, vNow,
+    assert(IndexStore.load(spark, IndexStore.stage, stageDir, vNow,
       base + ("logic" -> "htn-stages-v0-other")).isEmpty,
       "a different logic version must read the stage as stale")
   }

@@ -49,11 +49,11 @@ class IndexStoreSpec extends SparkSpec {
       val expected = sortedRows(Dedup.incrementalExactPairsIndexed(
         batch, built, "doc_id", "text", threshold = 0.8))
 
-      IndexStore.saveSignatureIndex(spark, built, store, version)
+      IndexStore.save(spark, IndexStore.signature, built, store, version)
 
       val s2 = spark.newSession() // fresh session state, empty caches
       val (loadedOpt, loadJobs) = jobsDuring {
-        IndexStore.loadSignatureIndex(s2, store, Some(version))
+        IndexStore.load(s2, IndexStore.signature, store, Some(version))
       }
       assert(loadJobs == 0, s"index LOAD ran $loadJobs Spark jobs — rebuild leak")
       val loaded = loadedOpt.getOrElse(fail("stored index did not load"))
@@ -69,11 +69,11 @@ class IndexStoreSpec extends SparkSpec {
       loaded.release()
 
       // stale stamp → refused, not served
-      assert(IndexStore.loadSignatureIndex(s2, store, Some("0:deadbeef")).isEmpty)
+      assert(IndexStore.load(s2, IndexStore.signature, store, Some("0:deadbeef")).isEmpty)
       // torn write (no meta marker) → invisible
       val torn = tmp("torn")
       built.sigs.write.parquet(s"$torn/sigs")
-      assert(IndexStore.loadSignatureIndex(s2, torn).isEmpty)
+      assert(IndexStore.load(s2, IndexStore.signature, torn).isEmpty)
     } finally built.release()
   }
 
@@ -85,10 +85,10 @@ class IndexStoreSpec extends SparkSpec {
     try {
       val q = emb(spark).filter(col("vec_id") < 8)
       val expected = sortedRows(Similarity.ivfProbe(built, q, "vec_id", "embedding", k = 5))
-      IndexStore.saveIvfIndex(spark, built, store, version)
+      IndexStore.save(spark, IndexStore.ivf, built, store, version)
 
       val s2 = spark.newSession()
-      val loaded = IndexStore.loadIvfIndex(s2, store, Some(version))
+      val loaded = IndexStore.load(s2, IndexStore.ivf, store, Some(version))
         .getOrElse(fail("stored ivf index did not load"))
       // model state is bit-exact, not approximately equal
       assert(loaded.centroids.length == built.centroids.length)
@@ -112,10 +112,10 @@ class IndexStoreSpec extends SparkSpec {
     try {
       val q = emb(spark).filter(col("vec_id") < 4)
       val expected = sortedRows(Similarity.pqTopK(built, q, "vec_id", "embedding", k = 5))
-      IndexStore.savePqIndex(spark, built, store, version)
+      IndexStore.save(spark, IndexStore.pq, built, store, version)
 
       val s2 = spark.newSession()
-      val loaded = IndexStore.loadPqIndex(s2, store, Some(version))
+      val loaded = IndexStore.load(s2, IndexStore.pq, store, Some(version))
         .getOrElse(fail("stored pq index did not load"))
       assert((loaded.m, loaded.k, loaded.subDim) == (built.m, built.k, built.subDim))
       for (ms <- 0 until built.m; c <- 0 until built.k)
@@ -137,10 +137,10 @@ class IndexStoreSpec extends SparkSpec {
       val q = emb(spark).filter(col("vec_id") < 4)
       val expected = sortedRows(
         Similarity.ivfPqProbe(built, q, "vec_id", "embedding", k = 5, nProbe = 2))
-      IndexStore.saveIvfPqIndex(spark, built, store, version)
+      IndexStore.save(spark, IndexStore.ivfPq, built, store, version)
 
       val s2 = spark.newSession()
-      val loaded = IndexStore.loadIvfPqIndex(s2, store, Some(version))
+      val loaded = IndexStore.load(s2, IndexStore.ivfPq, store, Some(version))
         .getOrElse(fail("stored ivfpq index did not load"))
       assert((loaded.nCells, loaded.m, loaded.k, loaded.subDim) ==
         (built.nCells, built.m, built.k, built.subDim))
@@ -166,9 +166,9 @@ class IndexStoreSpec extends SparkSpec {
     finally mp.release()
     val store = tmp("ccstore")
     val expected = sortedRows(labels)
-    IndexStore.saveClusterLabels(spark, labels, store, version)
+    IndexStore.save(spark, IndexStore.cluster, labels, store, version)
     val s2 = spark.newSession()
-    val loaded = IndexStore.loadClusterLabels(s2, store, Some(version))
+    val loaded = IndexStore.load(s2, IndexStore.cluster, store, Some(version))
       .getOrElse(fail("stored labels did not load"))
     assert(sortedRows(loaded) == expected)
     loaded.unpersist()
@@ -237,23 +237,23 @@ class IndexStoreSpec extends SparkSpec {
     val built = Dedup.signatureBuild(docs(spark).filter(col("doc_id") % 2 === 0),
       "doc_id", "text", k = 128, bands = 32, shingleWidth = 3)
     try {
-      IndexStore.saveSignatureIndex(spark, built, root, version)
+      IndexStore.save(spark, IndexStore.signature, built, root, version)
       // matching params (or none) serve the store
-      assert(IndexStore.loadSignatureIndex(spark, root, Some(version),
+      assert(IndexStore.load(spark, IndexStore.signature, root, Some(version),
         Map("k" -> "128", "bands" -> "32")).isDefined)
       // a caller who now builds with different bands must NOT be served
       // the stale-parameter index — same refusal path as a corpus bump
-      assert(IndexStore.loadSignatureIndex(spark, root, Some(version),
+      assert(IndexStore.load(spark, IndexStore.signature, root, Some(version),
         Map("k" -> "128", "bands" -> "16")).isEmpty)
       // cluster labels record the CALLER's params at save time
       val labels = docs(spark).select(col("doc_id").as("id"),
         (col("doc_id") % 5).as("cluster"))
       val lroot = tmp("idxlabels")
-      IndexStore.saveClusterLabels(spark, labels, lroot, version,
+      IndexStore.save(spark, IndexStore.cluster, labels, lroot, version,
         Map("pair_threshold" -> "0.8"))
-      assert(IndexStore.loadClusterLabels(spark, lroot, Some(version),
+      assert(IndexStore.load(spark, IndexStore.cluster, lroot, Some(version),
         Map("pair_threshold" -> "0.8")).isDefined)
-      assert(IndexStore.loadClusterLabels(spark, lroot, Some(version),
+      assert(IndexStore.load(spark, IndexStore.cluster, lroot, Some(version),
         Map("pair_threshold" -> "0.9")).isEmpty)
     } finally built.release()
   }
@@ -273,12 +273,12 @@ class IndexStoreSpec extends SparkSpec {
       val per = (1L to 40L).map(s => (s, s * 10L)).toDF("src", "pay")
       val expected = sortedRows(built.expand(per))
 
-      IndexStore.saveGraphIndex(spark, built, store, version,
+      IndexStore.save(spark, IndexStore.graph, built, store, version,
         Map("dedup" -> "true", "hub_limit" -> "512"))
 
       val s2 = spark.newSession()
       val (loadedOpt, loadJobs) = jobsDuring {
-        IndexStore.loadGraphIndex(s2, store, Some(version),
+        IndexStore.load(s2, IndexStore.graph, store, Some(version),
           Map("dedup" -> "true", "hub_limit" -> "512"))
       }
       assert(loadJobs == 0, s"graph index LOAD ran $loadJobs Spark jobs — rebuild leak")
@@ -295,8 +295,8 @@ class IndexStoreSpec extends SparkSpec {
       loaded.release()
 
       // stale stamp / parameter mismatch → refused, not served
-      assert(IndexStore.loadGraphIndex(s2, store, Some("0:deadbeef")).isEmpty)
-      assert(IndexStore.loadGraphIndex(s2, store, Some(version),
+      assert(IndexStore.load(s2, IndexStore.graph, store, Some("0:deadbeef")).isEmpty)
+      assert(IndexStore.load(s2, IndexStore.graph, store, Some(version),
         Map("hub_limit" -> "1024")).isEmpty)
 
       // hub-free graph: one parquet dir, empty flat/hubDeg reconstructed
@@ -305,9 +305,9 @@ class IndexStoreSpec extends SparkSpec {
         Adjacency.build(edges.filter(col("src") =!= 1L), dedup = true))
       val store2 = tmp("graphstore0")
       try {
-        IndexStore.saveGraphIndex(spark, flatFree, store2, version)
+        IndexStore.save(spark, IndexStore.graph, flatFree, store2, version)
         val (l2Opt, jobs2) = jobsDuring {
-          IndexStore.loadGraphIndex(s2, store2, Some(version))
+          IndexStore.load(s2, IndexStore.graph, store2, Some(version))
         }
         assert(jobs2 == 0)
         val l2 = l2Opt.getOrElse(fail("hub-free graph index did not load"))
@@ -327,10 +327,10 @@ class IndexStoreSpec extends SparkSpec {
     val store = tmp("poststore")
     val version = IndexStore.corpusVersion(spark, dir)
     try {
-      IndexStore.savePostingsIndex(spark, built, store, version)
+      IndexStore.save(spark, IndexStore.postings, built, store, version)
       val s2 = spark.newSession()
       val (loadedOpt, loadJobs) = jobsDuring {
-        IndexStore.loadPostingsIndex(s2, store, Some(version))
+        IndexStore.load(s2, IndexStore.postings, store, Some(version))
       }
       assert(loadJobs == 0, s"postings LOAD ran $loadJobs Spark jobs")
       val loaded = loadedOpt.getOrElse(fail("stored postings did not load"))
@@ -338,8 +338,8 @@ class IndexStoreSpec extends SparkSpec {
       assert(sortedRows(loaded.tf) === sortedRows(built.tf))
       assert(loaded.tf.inputFiles.forall(_.contains(store)))
       // stale stamp / parameter mismatch → refused
-      assert(IndexStore.loadPostingsIndex(s2, store, Some("0:deadbeef")).isEmpty)
-      assert(IndexStore.loadPostingsIndex(s2, store, Some(version),
+      assert(IndexStore.load(s2, IndexStore.postings, store, Some("0:deadbeef")).isEmpty)
+      assert(IndexStore.load(s2, IndexStore.postings, store, Some(version),
         Map("tokenizer" -> "bpe")).isEmpty)
 
       // epoch roll: fold the delta on the LOADED index (delta recreated in
@@ -354,10 +354,10 @@ class IndexStoreSpec extends SparkSpec {
       // so their lineage still reads `store` — an in-place overwrite
       // would recompute from the path being clobbered on cache eviction
       val store2 = tmp("poststore_epoch2")
-      IndexStore.savePostingsIndex(s2, folded, store2, "epoch2")
+      IndexStore.save(s2, IndexStore.postings, folded, store2, "epoch2")
       folded.release()
       val (v2Opt, jobs2) = jobsDuring {
-        IndexStore.loadPostingsIndex(s2, store2, Some("epoch2"))
+        IndexStore.load(s2, IndexStore.postings, store2, Some("epoch2"))
       }
       assert(jobs2 == 0)
       val v2 = v2Opt.getOrElse(fail("v2 did not load"))
@@ -379,18 +379,18 @@ class IndexStoreSpec extends SparkSpec {
       Adjacency.build(e0, dedup = true))
     val store = tmp("graphepoch")
     try {
-      IndexStore.saveGraphIndex(spark, v1, store, "epoch1")
+      IndexStore.save(spark, IndexStore.graph, v1, store, "epoch1")
       val s2 = spark.newSession()
-      val loaded = IndexStore.loadGraphIndex(s2, store, Some("epoch1"))
+      val loaded = IndexStore.load(s2, IndexStore.graph, store, Some("epoch1"))
         .getOrElse(fail("v1 did not load"))
       val folded = Checkpoints.sweepingOnFailure(s2.sparkContext)(
         Adjacency.foldEdges(loaded, d1, dedup = true))
       loaded.release()
-      IndexStore.saveGraphIndex(s2, folded, store, "epoch2")
+      IndexStore.save(s2, IndexStore.graph, folded, store, "epoch2")
       folded.release()
 
       val (v2Opt, jobs) = jobsDuring {
-        IndexStore.loadGraphIndex(s2, store, Some("epoch2"))
+        IndexStore.load(s2, IndexStore.graph, store, Some("epoch2"))
       }
       assert(jobs == 0, s"epoch-2 load ran $jobs jobs")
       val v2 = v2Opt.getOrElse(fail("v2 did not load"))
@@ -502,6 +502,18 @@ class IndexStoreSpec extends SparkSpec {
       assert(new java.io.File(store).listFiles().filter(_.isDirectory)
         .map(_.getName).toSet === dirs.split(" ").toSet, store)
     }
+  }
+
+  test("a meta that does not parse reads as torn: load gives None") {
+    import sqlImplicits._
+    val store = tmp("garbagemeta")
+    IndexStore.save(spark, IndexStore.stage, Seq(1L).toDF("id"), store, "v1")
+    val meta = java.nio.file.Paths.get(store, "_graft_index.json")
+    val text = new String(java.nio.file.Files.readAllBytes(meta), "UTF-8")
+    // every recorded pair intact, the object left unclosed
+    java.nio.file.Files.write(meta, (text.dropRight(1) + ",garbage").getBytes("UTF-8"))
+    java.nio.file.Files.delete(meta.resolveSibling("._graft_index.json.crc"))
+    assert(IndexStore.load(spark, IndexStore.stage, store, Some("v1")).isEmpty)
   }
 
   test("registered SQL functions reject wrong arity with a readable error") {

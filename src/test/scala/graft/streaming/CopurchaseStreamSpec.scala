@@ -157,7 +157,8 @@ class CopurchaseStreamSpec extends SparkSpec {
 
     val view = GraphTieredStream.loadCurrent(spark, root)
       .getOrElse(fail("tiered roll committed nothing"))
-    val rolled = try view.mergedHybrid() finally view.release()
+    val rolled = try Checkpoints.sweepingOnFailure(spark.sparkContext)(
+      Adjacency.build(view.mergedEdges, dedup = true)) finally view.release()
     val full = Checkpoints.sweepingOnFailure(spark.sparkContext)(
       Adjacency.build(
         graft.queries.CoreQueries.copurchasePairs(li), dedup = true))

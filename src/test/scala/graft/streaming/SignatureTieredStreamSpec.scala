@@ -77,7 +77,8 @@ class SignatureTieredStreamSpec extends SparkSpec {
     val view = load(root).getOrElse(fail("no tiered view"))
     val twin = Dedup.signatureBuild(docsOf(0 until 120), "doc_id", "text",
       K, BANDS, SW)
-    val merged = view.mergedIndex()
+    val merged = Dedup.SignatureIndex(K, BANDS, SW, view.sigs,
+      Dedup.bucketsFromSigs(view.sigs, K, BANDS), () => ())
     try {
       assert(view.epochId === ep(5))
       assert(sigIds(view.sigs) === sigIds(twin.sigs))
