@@ -516,6 +516,48 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.load(spark, IndexStore.stage, store, Some("v1")).isEmpty)
   }
 
+  test("listing stamps: corpusVersion and framesVersion keep their committed format") {
+    // `<file count>:<md5 hex of each "path:len:mtime\n" line, sorted by path>`;
+    // a changed byte would make every committed store and checkpoint stale
+    def stamp(files: Seq[(String, Long, Long)]): String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      files.sortBy(_._1).foreach { case (p, len, mt) =>
+        md.update(s"$p:$len:$mt\n".getBytes("UTF-8")) }
+      files.size + ":" + md.digest().map("%02x".format(_)).mkString
+    }
+    val root = tmp("stamps")
+    val files = Seq(("b.txt", "bravo\n", 1700000002000L),
+      ("a.txt", "alpha-alpha\n", 1700000001000L),
+      ("sub/c.txt", "c\n", 1700000003000L))
+    for ((name, body, mtime) <- files ++ Seq(("_SUCCESS", "", 1L), (".hidden", "x", 1L))) {
+      val f = new java.io.File(root, name)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
+      assert(f.setLastModified(mtime))
+    }
+    val listed = files.map { case (name, body, mtime) =>
+      (s"/$name", body.getBytes("UTF-8").length.toLong, mtime) }
+    assert(IndexStore.corpusVersion(spark, root) === stamp(listed))
+    assert(stamp(listed) === "3:" + {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      md.update("/a.txt:12:1700000001000\n/b.txt:6:1700000002000\n/sub/c.txt:2:1700000003000\n"
+        .getBytes("UTF-8"))
+      md.digest().map("%02x".format(_)).mkString
+    })
+
+    val a = spark.read.text(s"$root/a.txt")
+    val bc = spark.read.text(s"$root/b.txt", s"$root/sub/c.txt")
+    val inputs = (a.inputFiles ++ bc.inputFiles).toSeq
+    val byName = files.map { case (name, body, mtime) =>
+      name.split('/').last -> (body.getBytes("UTF-8").length.toLong, mtime) }.toMap
+    val expected = stamp(inputs.map { p =>
+      val (len, mtime) = byName(p.split('/').last)
+      (p, len, mtime)
+    })
+    assert(IndexStore.framesVersion(spark, Seq(bc, a)) === Some(expected))
+    assert(IndexStore.framesVersion(spark, Seq(a, spark.range(1).toDF())) === None)
+  }
+
   test("registered SQL functions reject wrong arity with a readable error") {
     val e = intercept[Exception] {
       spark.range(1).selectExpr("float_dot(array(1.0F))").collect()
