@@ -1,30 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare of `tools/check.py`.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,...] */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query names (local iteration on a
-    // subset — the driver always runs the full surface)
+    // optional 3rd arg: comma-separated query names (a subset, or one
+    // query for a targeted oracle check)
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.requireExtensions(spark)
-    // Source-contract canaries: if any table's physical schema drifted
-    // under the declared read schema, or the events timestamp decode is
-    // off by a unit scale, fail the whole run loudly here rather than
-    // emitting 100+ plausible-but-wrong results (round-7 failure mode).
-    graft.io.Tables.assertSchemaContract(spark, sfDir)
-    graft.io.Tables.canaryEvents(spark, sfDir)
+    // the sweep session refuses a drifted source schema or a mis-decoded
+    // events timestamp before 100+ plausible-but-wrong results go out
+    val spark = tools.Sweep.session(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -35,10 +24,8 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
-    def q(s: String): String = graft.io.Jsons.str(s)
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = graft.io.Jsons.obj(
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Capped-kernel audit (r8 advice): the d-queries' exactness guarantees
     // are conditional on ZERO dropped LSH/residue buckets. A non-zero count

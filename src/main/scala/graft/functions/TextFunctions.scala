@@ -118,7 +118,7 @@ object TextFunctions {
     * tokenization, same hash chain as the expression form
     * (`xxhash64(shingle, seedIdx)` = XxHash64 of the shingle string at
     * seed 42, then of the int seed index chained on that), bit-identical
-    * output; used by the mapPartitions hot path in Dedup.minhashLshPairs
+    * output; used by the mapPartitions hot path in Dedup.minhashLshPairsManaged
     * and asserted equal to the expression form in DedupSpec. Hashing the
     * shingle once and chaining k cheap int-hashes is also why the kernel
     * beats re-hashing the string k times. Returns None if the text has
@@ -229,7 +229,7 @@ object TextFunctions {
 
   /** JVM twin of [[simhashExpr]] — same tokenization, same double-hash bit
     * derivation, bit-identical output; used by the mapPartitions hot path
-    * in Dedup.simhashPairs and asserted equal to the expression form in
+    * in Dedup.simhashPairsManaged and asserted equal to the expression form in
     * TextFunctionsSpec. Returns None for token-less text. */
   def simhash64Jvm(text: String): Option[Long] = {
     val toks = text.trim.split("\\s+").filter(_.nonEmpty)

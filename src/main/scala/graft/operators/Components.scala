@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components — the cluster-resolution step that turns
-  * near-duplicate PAIRS (from [[Dedup.minhashExactPairs]] / [[Dedup.simhashPairs]] /
-  * [[Dedup.embeddingNearDupPairs]]) into per-document cluster assignments and a
+  * near-duplicate PAIRS (from [[Dedup.minhashExactPairsManaged]] /
+  * [[Dedup.simhashPairsManaged]] / [[Dedup.embeddingNearDupPairs]]) into per-document cluster assignments and a
   * canonical keep-list, i.e. the final "which copy survives" decision of a
   * web-scale dedup pipeline.
   *

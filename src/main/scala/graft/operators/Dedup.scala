@@ -50,20 +50,22 @@ object Dedup {
     * 50% at j≈0.42) on a self-similar corpus makes nearly every pair a
     * candidate and goes quadratic — that's a parameter bug, not a scale
     * limit (measured: 60× slowdown on the synthetic word-soup corpus).
+    *
+    * Returns the lazy pairs with an explicit cache-release handle — see
+    * [[ManagedPairs]].
     */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-                      k: Int = 128, bands: Int = 8, shingleWidth: Int = 3,
-                      threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame =
-    minhashLshPairsManaged(df, idCol, textCol, k, bands, shingleWidth,
-      threshold, maxBucket).pairs
+  def minhashLshPairsManaged(df: DataFrame, idCol: String, textCol: String,
+                             k: Int = 128, bands: Int = 8, shingleWidth: Int = 3,
+                             threshold: Double = 0.8, maxBucket: Int = 1000): ManagedPairs =
+    lshPairsImpl(df, idCol, textCol, flagCol = None, k, bands, shingleWidth,
+      threshold, maxBucket)
 
   /** A lazy result plus a handle that releases the internal persisted
-    * signature frame. The lazy [[minhashLshPairs]] can't unpersist its
-    * cache itself (the result hasn't run yet when it returns), so in a
-    * long session repeated calls would accumulate ~1 KB/doc cache entries;
-    * callers that run many dedups should consume `pairs` (write/aggregate
-    * it), then call `release()`. Releasing before consuming is safe —
-    * Spark recomputes — just slow.
+    * signature frame. A bare lazy frame can't unpersist its cache itself
+    * (the result hasn't run yet when it returns), so in a long session
+    * repeated calls would accumulate ~1 KB/doc cache entries; callers
+    * consume `pairs` (write/aggregate it), then call `release()`.
+    * Releasing before consuming is safe — Spark recomputes — just slow.
     *
     * `drops()` reports the over-`maxBucket` buckets discarded so far (zero
     * until an action on `pairs` has run; cumulative across repeated actions
@@ -74,14 +76,6 @@ object Dedup {
   final case class ManagedPairs(pairs: DataFrame, release: () => Unit,
                                 drops: () => DedupMetrics.DropStats)
 
-  /** [[minhashLshPairs]] with an explicit cache-release handle — see
-    * [[ManagedPairs]]. */
-  def minhashLshPairsManaged(df: DataFrame, idCol: String, textCol: String,
-                             k: Int = 128, bands: Int = 8, shingleWidth: Int = 3,
-                             threshold: Double = 0.8, maxBucket: Int = 1000): ManagedPairs =
-    lshPairsImpl(df, idCol, textCol, flagCol = None, k, bands, shingleWidth,
-      threshold, maxBucket)
-
   /** Shared LSH candidate + estimate machinery. `flagCol` (boolean) marks
     * "new" rows for the incremental shape: when present, only pairs with
     * at least one flagged member are enumerated — corpus×corpus pairs are
@@ -89,7 +83,7 @@ object Dedup {
     * so re-ingesting a small batch against a huge corpus never re-pays
     * the corpus's own quadratic bucket work. With no flag every row
     * counts as new and this is exactly the self-dedup of
-    * [[minhashLshPairs]]. */
+    * [[minhashLshPairsManaged]]. */
   private def lshPairsImpl(df: DataFrame, idCol: String, textCol: String,
                            flagCol: Option[String], k: Int, bands: Int,
                            shingleWidth: Int, threshold: Double,
@@ -227,23 +221,16 @@ object Dedup {
     * so it prunes the candidate flood the permissive curve admits without
     * touching true pairs. A bucket over `maxBucket` voids that bound for
     * its members; drops are observed and WARNed (see [[DedupMetrics]]) and
-    * readable via [[minhashExactPairsManaged]]'s `drops()` — a zero there
-    * certifies the < 5e-8 miss bound actually held for the run. Exact
-    * verification then joins only the surviving candidates against the
-    * shingle sets — the heavy per-doc sets never enter a shuffle; the
-    * (small) candidate frame broadcasts against them.
-    */
-  def minhashExactPairs(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 128, bands: Int = 32, shingleWidth: Int = 3,
-                        threshold: Double = 0.8, estMargin: Double = 0.2,
-                        maxBucket: Int = 1000): DataFrame =
-    minhashExactPairsManaged(df, idCol, textCol, k, bands, shingleWidth,
-      threshold, estMargin, maxBucket).pairs
-
-  /** [[minhashExactPairs]] with the cache-release + drop-stats handle.
+    * readable via `drops()` — a zero there certifies the < 5e-8 miss bound
+    * actually held for the run. Exact verification then joins only the
+    * surviving candidates against the shingle sets — the heavy per-doc
+    * sets never enter a shuffle; the (small) candidate frame broadcasts
+    * against them.
+    *
     * Consume `pairs`, then `release()` frees the internal signature cache
     * and `drops()` reports whether the exactness guarantee held (zero
-    * dropped buckets) — see [[ManagedPairs]]. */
+    * dropped buckets) — see [[ManagedPairs]].
+    */
   def minhashExactPairsManaged(df: DataFrame, idCol: String, textCol: String,
                                k: Int = 128, bands: Int = 32, shingleWidth: Int = 3,
                                threshold: Double = 0.8, estMargin: Double = 0.2,
@@ -260,21 +247,12 @@ object Dedup {
     * corpus side still computes signatures/shingle sets (one linear pass;
     * at scale these are precomputed columns persisted with the corpus —
     * compute them once via this operator's first run and store
-    * alongside). Same exactness contract as [[minhashExactPairs]],
-    * conditional on zero dropped buckets.
+    * alongside). Same exactness contract as [[minhashExactPairsManaged]],
+    * conditional on zero dropped buckets; same release + drop-stats handle.
     *
     * Ids must be unique ACROSS both frames (they share one id space in
     * the emitted pairs). A batch doc with an id colliding with a corpus
     * doc would silently merge — keep a single id authority upstream. */
-  def incrementalExactPairs(batch: DataFrame, corpus: DataFrame,
-                            idCol: String, textCol: String,
-                            k: Int = 128, bands: Int = 32, shingleWidth: Int = 3,
-                            threshold: Double = 0.8, estMargin: Double = 0.2,
-                            maxBucket: Int = 1000): DataFrame =
-    incrementalExactPairsManaged(batch, corpus, idCol, textCol, k, bands,
-      shingleWidth, threshold, estMargin, maxBucket).pairs
-
-  /** [[incrementalExactPairs]] with the cache-release + drop-stats handle. */
   def incrementalExactPairsManaged(batch: DataFrame, corpus: DataFrame,
                                    idCol: String, textCol: String,
                                    k: Int = 128, bands: Int = 32,
@@ -295,7 +273,7 @@ object Dedup {
     * LSH buckets are computed ONCE per corpus version, so each arriving
     * batch pays only its own (batch-linear) signature work plus a join
     * against the buckets its band hashes actually touch — the per-probe
-    * corpus-linear recompute of [[incrementalExactPairs]] disappears.
+    * corpus-linear recompute of [[incrementalExactPairsManaged]] disappears.
     *
     * Contents: `sigs` = `(id, sig, ss)` (signature + sorted shingle set,
     * the verification side); `buckets` = `(band, bh, cids)` (sorted member
@@ -351,7 +329,7 @@ object Dedup {
       .agg(sort_array(collect_list(col("id"))).as("cids"))
   }
 
-  /** [[incrementalExactPairs]] against a prebuilt [[SignatureIndex]] —
+  /** [[incrementalExactPairsManaged]] against a prebuilt [[SignatureIndex]] —
     * identical pairs (same band hashes, same estimate prefilter, same
     * exact verification), but the corpus side comes entirely from the
     * index: the probe computes batch-side signatures only, shuffles only
@@ -359,18 +337,9 @@ object Dedup {
     * batch actually hits (left join batch-buckets → corpus-buckets).
     * Bucket-cap semantics match the managed path: a merged bucket
     * (batch + corpus members) over `maxBucket` is dropped with observable
-    * stats; corpus-only buckets never even reach the probe. */
-  def incrementalExactPairsIndexed(batch: DataFrame, index: SignatureIndex,
-                                   idCol: String, textCol: String,
-                                   threshold: Double = 0.8,
-                                   estMargin: Double = 0.2,
-                                   maxBucket: Int = 1000): DataFrame =
-    incrementalExactPairsIndexedManaged(batch, index, idCol, textCol,
-      threshold, estMargin, maxBucket).pairs
-
-  /** [[incrementalExactPairsIndexed]] with the cache-release + drop-stats
-    * handle; `release()` frees only the BATCH-side signature cache — the
-    * index is owned by its builder. */
+    * stats; corpus-only buckets never even reach the probe.
+    * `release()` frees only the BATCH-side signature cache — the index is
+    * owned by its builder. */
   def incrementalExactPairsIndexedManaged(batch: DataFrame, index: SignatureIndex,
                                           idCol: String, textCol: String,
                                           threshold: Double = 0.8,
@@ -539,14 +508,8 @@ object Dedup {
     * it — so it travels inside the bucket rows. That makes the whole
     * candidate stage ONE groupBy shuffle of (band, bh, id, sh): pairs are
     * enumerated bucket-side with signatures in hand, no window-count cap
-    * pass, no self-join, no join-back, and no persisted frame to manage. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, maxBucket: Int = 1000,
-                   bands: Int = 4): DataFrame =
-    simhashPairsManaged(df, idCol, textCol, maxHamming, maxBucket, bands).pairs
-
-  /** [[simhashPairs]] with the drop-stats handle (no cache to release —
-    * simhash needs no persisted signature frame). */
+    * pass, no self-join, no join-back, and no persisted frame to manage:
+    * the handle's `release()` is a no-op, `drops()` reads the drop stats. */
   def simhashPairsManaged(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3, maxBucket: Int = 1000,
                           bands: Int = 4): ManagedPairs = {
@@ -993,7 +956,7 @@ object Dedup {
     * clusters — where pair emission would go quadratic) are REFUSED, the
     * refusing task WARNs, and drop counts ride in named accumulators
     * (`graft.dedup.edit2.*`, the [[DedupMetrics]] discipline shared with
-    * `minhashLshPairs`) — never silent. Exactness vs a block-quadratic
+    * `minhashLshPairsManaged`) — never silent. Exactness vs a block-quadratic
     * oracle therefore holds exactly when the drop counters read zero.
     *
     * Returns (blk, id_a, id_b, dist) with id_a < id_b, dist ∈ [0, k]. */

@@ -65,6 +65,14 @@ object IndexStore {
             st.getModificationTime))
       }
     walk(root)
+    listingStamp(files.toSeq)
+  }
+
+  /** The one listing-stamp format of [[corpusVersion]] and
+    * [[framesVersion]]: the file count, then the MD5 of each
+    * `path:length:mtime` line in path order. Committed stores and HTN
+    * checkpoints carry these bytes, so the format never changes. */
+  private def listingStamp(files: Seq[(String, Long, Long)]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     files.sortBy(_._1).foreach { case (n, len, mt) =>
       md.update(s"$n:$len:$mt\n".getBytes("UTF-8"))
@@ -92,9 +100,7 @@ object IndexStore {
     val p = new Path(dir, MetaFile)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(p, true)
-    try out.write(fields.map { case (k, v) => s"${Jsons.str(k)}:${Jsons.str(v)}" }
-      .mkString("{", ",", "}").getBytes("UTF-8"))
-    finally out.close()
+    try out.write(Jsons.obj(fields).getBytes("UTF-8")) finally out.close()
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.IndexStore")
@@ -407,16 +413,11 @@ object IndexStore {
     if (perFrame.exists(_.isEmpty)) None
     else {
       val conf = spark.sessionState.newHadoopConf()
-      val stats = perFrame.flatten.sorted.map { f =>
+      Some(listingStamp(perFrame.flatten.map { f =>
         val p = new Path(f)
         val st = p.getFileSystem(conf).getFileStatus(p)
         (f, st.getLen, st.getModificationTime)
-      }
-      val md = java.security.MessageDigest.getInstance("MD5")
-      stats.foreach { case (n, len, mt) =>
-        md.update(s"$n:$len:$mt\n".getBytes("UTF-8"))
-      }
-      Some(stats.length + ":" + md.digest().map("%02x".format(_)).mkString)
+      }))
     }
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why a custom Expression (SURVEY §7.3 policy): the declarative form
   * `size(array_intersect(a, b)) / size(array_union(a, b))` builds hash sets
   * AND materializes two intermediate arrays per evaluation — and the
-  * exact-verification stage of [[graft.operators.Dedup.minhashExactPairs]]
+  * exact-verification stage of [[graft.operators.Dedup.minhashExactPairsManaged]]
   * evaluates it once per surviving candidate pair, each carrying two
   * multi-KB shingle arrays. The merge scan reads the unsafe array data in
   * place and allocates nothing (sorted path), inside whole-stage codegen.

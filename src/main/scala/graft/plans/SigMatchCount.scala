@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * `size(filter(zip_with(a, b, (x, y) -> x = y), p -> p))` is semantically
   * identical but runs interpreted (higher-order lambdas are excluded from
   * whole-stage codegen) and allocates two intermediate arrays per row. The
-  * estimate-verification stage of `Dedup.minhashLshPairs` evaluates this
+  * estimate-verification stage of `Dedup.minhashLshPairsManaged` evaluates this
   * once per CANDIDATE pair — on a self-similar corpus that is O(n²) pairs
   * (measured: 10.8M candidates for 5 000 documents clustered at shingle-
   * Jaccard ≈ 0.5), making this the flood hot loop. `doGenCode` emits a

@@ -265,7 +265,7 @@ object TextQueries {
     // >= 0.8, miss probability < 5e-8 per pair) and carry the true
     // similarity, fully hash-checkable against DuckDB's brute-force
     // all-pairs oracle. Estimate-only LSH behavior stays covered by
-    // DedupSpec's recall/precision assertions on minhashLshPairs.
+    // DedupSpec's recall/precision assertions on minhashLshPairsManaged.
     "d03_minhash_lsh" -> { (s, dir) =>
       val mp = SessionIndexes.swap(s, "swap", s"d03|$dir")(
         Dedup.minhashExactPairsManaged(docs(s, dir), "doc_id", "text",
@@ -284,7 +284,7 @@ object TextQueries {
     // Probes the cached corpus SignatureIndex (built once per corpus
     // version): batch-side signatures only — the corpus side is served
     // from its persisted signature/bucket frames. Emits exactly the pairs
-    // Dedup.incrementalExactPairs would (asserted in DedupSpec).
+    // Dedup.incrementalExactPairsManaged would (asserted in DedupSpec).
     "d06_incremental_dedup" -> { (s, dir) =>
       val mp = SessionIndexes.swap(s, "swap", s"d06|$dir")(
         Dedup.incrementalExactPairsIndexedManaged(

@@ -22,7 +22,7 @@ import graft.operators.Dedup
   * sequential within-batch survivor cascade.
   *
   * Composition, not new machinery: the per-batch decision is EXACTLY
-  * [[Dedup.incrementalExactPairsIndexed]] (batch signatures only, corpus
+  * [[Dedup.incrementalExactPairsIndexedManaged]] (batch signatures only, corpus
   * side served from the index frames, capped buckets, exact Jaccard
   * verify), wrapped in `foreachBatch` because the candidate join + verify
   * is a batch plan — a stream-stream formulation would have to buffer the

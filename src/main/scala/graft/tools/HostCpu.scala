@@ -67,6 +67,45 @@ object HostCpu {
     * where a healthy box scores ~315. */
   def defaultMinSpin(cpus: Int): Long = 1800L * cpus / 32
 
+  /** 1-minute load average from /proc/loadavg (-1 if unreadable). */
+  def loadavg1(): Double =
+    try {
+      val src = scala.io.Source.fromFile("/proc/loadavg")
+      try src.getLines().next().split(" ")(0).toDouble finally src.close()
+    } catch { case _: Throwable => -1.0 }
+
+  /** The last reading of a bounded [[awaitHealthy]] wait: seconds waited,
+    * the raw 1-min load, the all-core [[spinScore]], and whether both
+    * gates held. */
+  final case class Health(waitedSec: Long, load: Double, spin: Long, healthy: Boolean)
+
+  /** Wait, at most `budgetSec`, for a healthy box: [[spinScore]] ≥
+    * `minSpin` and the 1-min load ≤ `maxLoad`, re-read every `pollMs`.
+    * The load gate discounts the spin probe's own runnable threads (one
+    * per core for ~0.25 s per poll), so the instrument never blocks on
+    * its own noise. A box that never recovers spends the budget and
+    * returns unhealthy — never a deadlock. Each unhealthy poll logs one
+    * `what`-prefixed line to stderr. */
+  def awaitHealthy(minSpin: Long, maxLoad: Double, budgetSec: Long, pollMs: Long,
+                   what: String): Health = {
+    val probeLoad = Runtime.getRuntime.availableProcessors() * 0.25 / (pollMs / 1000.0)
+    val t0 = System.nanoTime()
+    def read(): Health = {
+      val (load, spin) = (loadavg1(), spinScore())
+      Health(((System.nanoTime() - t0) / 1e9).toLong, load, spin,
+        load - probeLoad <= maxLoad && spin >= minSpin)
+    }
+    var h = read()
+    while (!h.healthy && h.waitedSec < budgetSec) {
+      System.err.println(f"$what: 1-min load ${h.load}%.2f (max $maxLoad%.1f + probe " +
+        f"$probeLoad%.2f), spin ${h.spin} (min $minSpin) - waiting " +
+        s"(${h.waitedSec}s of ${budgetSec}s budget)")
+      Thread.sleep(pollMs)
+      h = read()
+    }
+    h
+  }
+
   /** Background capacity sampler: one daemon thread records a 50 ms
     * single-core spin score every `periodMs` for the life of the handle.
     * Endpoint scores miss mid-run dips (r9: bench endpoints read ~3100

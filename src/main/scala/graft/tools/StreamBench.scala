@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -26,15 +25,8 @@ import org.apache.spark.sql.streaming.OutputMode
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nChunks = if (args.nonEmpty) args(0).toInt else 8
-    val spark = graft.GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.requireExtensions(spark)
+    val spark = graft.GraftSession.local(Sweep.cores)
     graft.io.Tables.canaryEvents(spark, sfDir)
 
     // stage the table as nChunks files — one micro-batch each

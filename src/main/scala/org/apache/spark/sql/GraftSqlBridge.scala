@@ -25,6 +25,13 @@ object GraftSqlBridge {
   def divideByZeroError(ctx: org.apache.spark.QueryContext): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(ctx)
 
+  /** Block until every event posted so far reached the context's
+    * listeners — `listenerBus` is `private[spark]`, hence the forwarder.
+    * A listener's counts for a finished action are complete only after
+    * this returns. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Read a key the caller already `config()`ed on a builder —
     * `SparkSessionBuilder.options` is protected, and builders expose no
     * getter. Reflection on our pinned Spark version; `None` on any shape

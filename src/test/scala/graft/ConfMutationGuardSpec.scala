@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * session-conf switch selects between code paths. Serving pins follow the
   * same rule: one constructor site, [[graft.streaming.TieredRoll]]. The
   * stored-index format has one home too: only
-  * [[graft.operators.IndexStore]] names its commit marker. */
+  * [[graft.operators.IndexStore]] names its commit marker. And every
+  * program builds its session through [[GraftSession.local]]: only
+  * [[GraftSession]] calls `SparkSession.builder`. */
 class ConfMutationGuardSpec extends AnyFunSuite {
 
   private val main = new java.io.File("src/main/scala")
@@ -58,6 +60,11 @@ class ConfMutationGuardSpec extends AnyFunSuite {
 
   test("the stored-index marker _graft_index.json is named in src/main only in IndexStore.scala") {
     val found = offenders(Seq("_graft_index.json"))(_ != "graft/operators/IndexStore.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("SparkSession.builder appears in src/main only in GraftSession.scala") {
+    val found = offenders(Seq("SparkSession.builder"))(_ != "graft/GraftSession.scala")
     assert(found.isEmpty, found.mkString("\n"))
   }
 

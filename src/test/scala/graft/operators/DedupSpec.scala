@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.TextFunctions._
@@ -15,6 +16,10 @@ class DedupSpec extends SparkSpec {
   private val unrelated = Seq(
     "completely different content about distributed query engines and shuffle partitioning strategies in modern systems",
     "yet another unrelated document discussing vector search recall precision tradeoffs at large scale deployments")
+
+  /** Consume a managed result's pairs, then release its caches. */
+  private def consumed[A](m: Dedup.ManagedPairs)(f: DataFrame => A): A =
+    try f(m.pairs) finally m.release()
 
   private lazy val docs = Seq(
     (0L, base, "s"), (1L, variant(1), "s"), (2L, variant(2), "s"),
@@ -38,9 +43,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH finds near-duplicates and not unrelated pairs") {
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 128, bands = 32, shingleWidth = 3, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = consumed(Dedup.minhashLshPairsManaged(docs, "doc_id", "text",
+        k = 128, bands = 32, shingleWidth = 3, threshold = 0.5))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     // exact dup must be found with estimate 1.0
     assert(pairs.contains((0L, 5L)))
     // one-token variants of the same base: high overlap expected
@@ -53,9 +58,9 @@ class DedupSpec extends SparkSpec {
     val exact = Dedup.jaccardPairs(docs.withColumn("blk", lit(1)),
         "doc_id", "text", "blk", 0.0)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val est = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 128, bands = 32, threshold = 0.0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val est = consumed(Dedup.minhashLshPairsManaged(docs, "doc_id", "text",
+        k = 128, bands = 32, threshold = 0.0))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap)
     // identical docs: estimate exactly 1
     assert(est((0L, 5L)) === 1.0)
     // near-dup estimates land within 0.25 of the exact token-set jaccard
@@ -66,8 +71,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical docs distance 0, near-dups close, unrelated far") {
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 12, bands = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val pairs = consumed(Dedup.simhashPairsManaged(docs, "doc_id", "text",
+        maxHamming = 12, bands = 16))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap)
     assert(pairs((0L, 5L)) === 0)
     assert(pairs.contains((0L, 1L))) // one-token change: small distance
     assert(!pairs.contains((3L, 4L))) // unrelated: far apart
@@ -99,8 +105,9 @@ class DedupSpec extends SparkSpec {
       .filter(col("j") >= 0.5)
       .select("id_a", "id_b", "j")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val lsh = Dedup.minhashExactPairs(docs, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val lsh = consumed(Dedup.minhashExactPairsManaged(docs, "doc_id", "text",
+        threshold = 0.5))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap)
     assert(lsh === exact) // same pairs AND the true jaccard, not an estimate
   }
 
@@ -131,8 +138,9 @@ class DedupSpec extends SparkSpec {
       (ia, sa) <- sigs; (ib, sb) <- sigs if ia < ib
       h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
     } yield (ia, ib, h)).toSet
-    val banded = Dedup.simhashPairs(real, "doc_id", "text", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val banded = consumed(Dedup.simhashPairsManaged(real, "doc_id", "text",
+        maxHamming = 3))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet)
     assert(banded === brute,
       "pigeonhole banding must have complete recall at maxHamming <= bands-1")
   }

@@ -46,8 +46,9 @@ class IndexStoreSpec extends SparkSpec {
     val store = tmp("sigstore")
     try {
       val batch = docs(spark).filter(col("doc_id") % 2 === 1)
-      val expected = sortedRows(Dedup.incrementalExactPairsIndexed(
-        batch, built, "doc_id", "text", threshold = 0.8))
+      val mb = Dedup.incrementalExactPairsIndexedManaged(
+        batch, built, "doc_id", "text", threshold = 0.8)
+      val expected = try sortedRows(mb.pairs) finally mb.release()
 
       IndexStore.save(spark, IndexStore.signature, built, store, version)
 
@@ -63,8 +64,9 @@ class IndexStoreSpec extends SparkSpec {
       assert(loaded.buckets.inputFiles.forall(_.contains(store)))
 
       val batch2 = Tables.load(s2, dir, "documents").filter(col("doc_id") % 2 === 1)
-      val got = sortedRows(Dedup.incrementalExactPairsIndexed(
-        batch2, loaded, "doc_id", "text", threshold = 0.8))
+      val ml = Dedup.incrementalExactPairsIndexedManaged(
+        batch2, loaded, "doc_id", "text", threshold = 0.8)
+      val got = try sortedRows(ml.pairs) finally ml.release()
       assert(got == expected, "disk-served probe diverged from built-index probe")
       loaded.release()
 

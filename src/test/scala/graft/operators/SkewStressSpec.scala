@@ -58,8 +58,9 @@ class SkewStressSpec extends SparkSpec {
     val before = DedupMetrics.snapshot().get("minhash")
       .map(_.buckets).getOrElse(0L)
     val (pairs, sec) = timed {
-      Dedup.minhashLshPairs(df, "doc_id", "text",
-        k = 128, bands = 32, shingleWidth = 3, threshold = 0.8).collect()
+      val m = Dedup.minhashLshPairsManaged(df, "doc_id", "text",
+        k = 128, bands = 32, shingleWidth = 3, threshold = 0.8)
+      try m.pairs.collect() finally m.release()
     }
     info(f"minhashLshPairs flood corpus: $sec%.1f s, ${pairs.length} pairs")
     assert(sec < 120.0, f"capped kernel took $sec%.1f s — cap not engaging")

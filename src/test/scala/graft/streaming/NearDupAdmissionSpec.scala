@@ -19,9 +19,10 @@ class NearDupAdmissionSpec extends SparkSpec {
     val batch = docs().filter(col("doc_id") % 2 === 1)
     val index = Dedup.signatureBuild(corpus, "doc_id", "text")
     try {
-      val pairs = Dedup.incrementalExactPairsIndexed(
-          batch, index, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val mp = Dedup.incrementalExactPairsIndexedManaged(
+        batch, index, "doc_id", "text")
+      val pairs = try mp.pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+        finally mp.release()
       val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
       val expectReject = pairs.map { case (a, b) =>
         if (batchIds(a) && !batchIds(b)) a else b
@@ -103,10 +104,10 @@ class NearDupAdmissionSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getLong(1))).toSeq
         // the admission filter's own probe IS the delta pair source —
         // exactly what foreachBatch computes per micro-batch
-        val deltaPairs = Dedup.incrementalExactPairsIndexed(
-            batch, index, "doc_id", "text")
-          .select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        val md = Dedup.incrementalExactPairsIndexedManaged(
+          batch, index, "doc_id", "text")
+        val deltaPairs = try md.pairs.select("id_a", "id_b").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq finally md.release()
         assert(deltaPairs.nonEmpty, "the sf corpus has cross-parity dups")
         import sqlImplicits._
         val standing = Components.connectedComponents(

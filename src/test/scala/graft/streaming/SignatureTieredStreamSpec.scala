@@ -100,10 +100,12 @@ class SignatureTieredStreamSpec extends SparkSpec {
     val batch = docsOf(82 until 110)
     val mp = view.newPairsFor(batch, "doc_id", "text", threshold = 0.8)
     val newPairs = try pairSet(mp.pairs) finally mp.release()
-    val standingPairs = pairSet(Dedup.minhashExactPairs(docsOf(0 until 82),
-      "doc_id", "text", K, BANDS, SW, threshold = 0.8))
-    val fullPairs = pairSet(Dedup.minhashExactPairs(docsOf(0 until 110),
-      "doc_id", "text", K, BANDS, SW, threshold = 0.8))
+    val ms = Dedup.minhashExactPairsManaged(docsOf(0 until 82),
+      "doc_id", "text", K, BANDS, SW, threshold = 0.8)
+    val standingPairs = try pairSet(ms.pairs) finally ms.release()
+    val mf = Dedup.minhashExactPairsManaged(docsOf(0 until 110),
+      "doc_id", "text", K, BANDS, SW, threshold = 0.8)
+    val fullPairs = try pairSet(mf.pairs) finally mf.release()
     view.release()
     // 82→80 crosses batch↔standing; 87→85, 92→90 are batch-internal
     assert(newPairs.contains((80L, 82L)))
