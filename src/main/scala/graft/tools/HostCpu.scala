@@ -97,8 +97,9 @@ object HostCpu {
     }
     var h = read()
     while (!h.healthy && h.waitedSec < budgetSec) {
-      System.err.println(f"$what: 1-min load ${h.load}%.2f (max $maxLoad%.1f + probe " +
-        f"$probeLoad%.2f), spin ${h.spin} (min $minSpin) - waiting " +
+      val load = if (maxLoad.isInfinite) ""
+        else f"1-min load ${h.load}%.2f (max $maxLoad%.1f + probe $probeLoad%.2f), "
+      System.err.println(s"$what: ${load}spin ${h.spin} (min $minSpin) - waiting " +
         s"(${h.waitedSec}s of ${budgetSec}s budget)")
       Thread.sleep(pollMs)
       h = read()
