@@ -4,8 +4,8 @@ package graft.streaming
   * assert the path taken without re-listing commit markers. ONE ADT across
   * the index families: a fold that can never produce a variant simply
   * never returns it (the graph, media and signature tiers never
-  * Bootstrap). The stream wrapper ([[TieredRoll.start]]) also logs each
-  * batch's outcome at INFO. */
+  * Bootstrap). Each [[TieredRoll.fold]] also logs its outcome and phase
+  * seconds at INFO. */
 sealed trait BatchOutcome
 
 object BatchOutcome {

@@ -222,10 +222,10 @@ object CopurchaseStream {
     * the minor and collapse at read/major, so the merged edge SET
     * converges to the full rebuild (CopurchaseStreamSpec pins it). The
     * tier's committed marker makes a replayed fold a no-op. The returned
-    * outcome lets a maintenance probe (Q82Scale) attribute per-batch cost
-    * to the real tier decision — majors fire on live-L0 count, not
-    * batch-id arithmetic. Pure batch logic — unit-testable without a
-    * stream. */
+    * outcome lets a scale probe (`RollScale copurchase`) attribute
+    * per-batch cost to the real tier decision — majors fire on live-L0
+    * count, not batch-id arithmetic. Pure batch logic — unit-testable
+    * without a stream. */
   def foldBatchTiered(batch: DataFrame, linesDir: String, indexRoot: String,
                       batchId: Long, majorEvery: Int = 8,
                       compactEvery: Int = 32): BatchOutcome = {

@@ -37,81 +37,6 @@ object EventStreams {
               col("session_window.end").as("session_end"),
               col("user_id"), col("n_events"), col("session_value"))
 
-  final case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class UserFlagState(nHigh: Long, flagged: Boolean)
-  final case class UserFlag(user_id: Long, n_high: Long, flagged: Boolean)
-
-  /** Incremental "≥ minDays high events" flag — the streaming analog of the
-    * pipeline's high-BP-on-2+-days rule (SURVEY §2.4 A3), kept as running
-    * state per user via mapGroupsWithState. Emits the user's current state
-    * on every update; state is O(1) per user. */
-  def highValueFlags(events: Dataset[UserEvent], threshold: Double,
-                     minCount: Int): Dataset[UserFlag] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(_.value >= threshold)
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserFlagState, UserFlag](GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[UserEvent], state: GroupState[UserFlagState]) =>
-          val prev = state.getOption.getOrElse(UserFlagState(0L, flagged = false))
-          val n = prev.nHigh + batch.size
-          val next = UserFlagState(n, n >= minCount)
-          state.update(next)
-          UserFlag(userId, n, next.flagged)
-      }
-  }
-
-  /** Stream-stream join: purchases matched to the same user's views within
-    * `within` before the purchase. Both sides watermarked so the join state
-    * is evicted once the time bound passes — bounded state, the only way a
-    * stream-stream join survives at scale. */
-  def viewToPurchase(events: DataFrame, within: String = "1 hour"): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
-              col("event_id").as("view_id"))
-      .withWatermark("view_ts", "10 minutes")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("purchase_ts"),
-              col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", "10 minutes")
-    purchases.join(views,
-      expr(s"""user_id = v_user AND
-              |view_ts <= purchase_ts AND
-              |view_ts >= purchase_ts - INTERVAL $within""".stripMargin))
-      .select("user_id", "purchase_id", "purchase_ts", "view_id", "view_ts")
-  }
-
-  /** Stream-STATIC enrichment join: every micro-batch left-joins the
-    * static dimension table — the standard "attach user/account/catalog
-    * attributes at ingest" step. Stateless (no watermark, no join state:
-    * the static side is not a stream). The static side re-EXECUTES per
-    * micro-batch, but a file-backed DataFrame pins its file listing at
-    * frame creation — an overwritten directory is NOT picked up (deleted
-    * files throw). Use a catalog table (re-resolved per batch) or
-    * foreachBatch with a fresh read for refreshable dimensions; for a
-    * fixed snapshot this is exactly right. Broadcast keeps it shuffle-free on the
-    * stream side — the right shape for a small dimension; a huge dimension
-    * would instead be pre-bucketed on the key (ScaleTechniquesSpec). */
-  def enrichedEvents(events: DataFrame, dim: DataFrame,
-                     key: String = "user_id"): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
-  /** Streaming EXACT dedup — the ingest-time twin of the batch
-    * `Dedup.exactByContent` step: duplicate deliveries of the same key
-    * (at-least-once sources redeliver) are suppressed with state that is
-    * EVICTED once the key's event time falls behind the watermark, so state
-    * stays bounded by the watermark horizon instead of growing with the
-    * key space — the only dedup shape that survives an unbounded stream.
-    * Spark's dropDuplicatesWithinWatermark keeps first-seen-wins semantics
-    * within the horizon (duplicates separated by more than the delay may
-    * both pass — the documented at-least-once → approximately-exactly-once
-    * trade; exact global dedup remains a batch job, d01). */
-  def dedupedEvents(events: DataFrame, delay: String = "10 minutes",
-                    keys: Seq[String] = Seq("event_id")): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark(keys)
-
   /** Wire a streaming source of the events schema from a directory of
     * parquet files (one-file-per-trigger for deterministic replay).
     * Normalizes `ts` to Spark's microsecond TimestampType whatever the
@@ -163,11 +88,6 @@ object EventStreams {
           .withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
   }
-
-  /** Run a windowed-count stream to an in-memory sink (demo/test harness). */
-  def runToMemory(df: DataFrame, name: String,
-                  mode: OutputMode = OutputMode.Append()): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream.format("memory").queryName(name).outputMode(mode).start()
 
   // ---- streaming as-of enrichment ------------------------------------
 

@@ -209,42 +209,68 @@ private[streaming] abstract class TieredRoll[L1, T](
 
   /** Fold ONE (family-encoded) batch: Skipped on replay, EmptyBatch on
     * zero rows, else a bootstrap, a minor, or every `majorEvery`-th live
-    * delta a major. Pure batch logic — unit-testable without a stream. */
+    * delta a major. Pure batch logic — unit-testable without a stream.
+    *
+    * Each fold logs one INFO line: family, batch, outcome, epoch and
+    * seconds, split into `listing` (stride-layout stamp, commit-marker
+    * peeks, tier listing), `write` and `prune` (a major's retention). The
+    * L0 encode is lazy and runs inside the commit's job, so `write` is
+    * encode and commit together. The rest of `seconds` is the emptiness
+    * probe, the batch's first action, which also materializes it. */
   def fold(batch: DataFrame, batchId: Long, majorEvery: Int): BatchOutcome = {
     require(majorEvery >= 2, s"majorEvery must be >= 2, got $majorEvery")
-    if (strided) TierIds.ensureStrideLayout(spark, root)
+    val t0 = System.nanoTime()
+    val nanos = Array(0L, 0L, 0L) // listing, write, prune
+    def timed[A](phase: Int)(body: => A): A = {
+      val t = System.nanoTime()
+      try body finally nanos(phase) += System.nanoTime() - t
+    }
     val epochId = epochOf(batchId)
-    if (l0Committed(epochId) || l1Committed(epochId))
-      return Skipped // replayed after a committed save — already applied
-    Deltas.withMaterialized(batch) { delta =>
-      // a bootstrapping family sizes its build and write windows from |Δ|,
-      // so its count is also the emptiness probe; the others probe with
-      // isEmpty (fewer jobs over the pin) and count only where a write
-      // needs the size
-      lazy val n = delta.count()
-      if (if (bootstraps) n == 0L else delta.isEmpty) EmptyBatch // no content-free epochs
-      else {
-        val standing = l1Epochs.headOption
-        if (bootstraps && standing.isEmpty) {
-          bootstrap(delta, n, l1Dir(epochId), s"batch:$batchId bootstrap")
-          Bootstrapped
-        } else {
-          val live = l0Epochs.filter(id => standing.forall(id > _)).reverse
-          if (live.size + 1 < majorEvery) {
-            minor(delta, n, epochId, standing)(IndexStore.save(spark,
-              IndexStore.stage, _, l0Dir(epochId), s"batch:$batchId", l0Params))
-            Minor
+    val replayed = timed(0) {
+      if (strided) TierIds.ensureStrideLayout(spark, root)
+      l0Committed(epochId) || l1Committed(epochId)
+    }
+    val outcome =
+      if (replayed) Skipped // replayed after a committed save — already applied
+      else Deltas.withMaterialized(batch) { delta =>
+        // a bootstrapping family sizes its build and write windows from |Δ|,
+        // so its count is also the emptiness probe; the others probe with
+        // isEmpty (fewer jobs over the pin) and count only where a write
+        // needs the size
+        lazy val n = delta.count()
+        if (if (bootstraps) n == 0L else delta.isEmpty) EmptyBatch // no content-free epochs
+        else {
+          val standing = timed(0)(l1Epochs.headOption)
+          if (bootstraps && standing.isEmpty) {
+            timed(1)(bootstrap(delta, n, l1Dir(epochId), s"batch:$batchId bootstrap"))
+            Bootstrapped
           } else {
-            val t = tiers(standing, live, strict = true).get
-            try major(t, delta, n, epochId, l1Dir(epochId),
-              s"batch:$batchId major absorbed=${live.size}")
-            finally t.l1.foreach(l1Codec.release)
-            pruneAfter(standing, epochId)
-            Major(live.size)
+            val live = timed(0)(l0Epochs.filter(id => standing.forall(id > _)).reverse)
+            if (live.size + 1 < majorEvery) {
+              timed(1)(minor(delta, n, epochId, standing)(IndexStore.save(spark,
+                IndexStore.stage, _, l0Dir(epochId), s"batch:$batchId", l0Params)))
+              Minor
+            } else {
+              timed(1) {
+                val t = tiers(standing, live, strict = true).get
+                try major(t, delta, n, epochId, l1Dir(epochId),
+                  s"batch:$batchId major absorbed=${live.size}")
+                finally t.l1.foreach(l1Codec.release)
+              }
+              timed(2)(pruneAfter(standing, epochId))
+              Major(live.size)
+            }
           }
         }
       }
+    if (TieredRoll.log.isInfoEnabled) {
+      val Array(listing, write, prune) = nanos.map(_ / 1e9)
+      TieredRoll.log.info(f"$family tiered roll: batch=$batchId " +
+        f"outcome=$outcome epoch=$epochId " +
+        f"seconds=${(System.nanoTime() - t0) / 1e9}%.3f " +
+        f"listing=$listing%.3f write=$write%.3f prune=$prune%.3f")
     }
+    outcome
   }
 
   /** Post-commit retention for a new L1 at `newId` over the standing
@@ -292,11 +318,11 @@ private[streaming] abstract class TieredRoll[L1, T](
       if (n > maxDrifted) retrain(build) else None
     }
 
-  /** The streaming wrapper: `fold` per micro-batch, one INFO line per batch
-    * (family, batch, outcome, epoch, seconds), and after every
-    * `everyMajors`-th data major the policy's `maintain`. The major count
-    * is per stream instance: a restart resets it and a replayed batch
-    * Skips without advancing it, which can only delay maintenance. */
+  /** The streaming wrapper: `fold` per micro-batch (the roll's own fold
+    * logs each batch), and after every `everyMajors`-th data major the
+    * policy's `maintain`. The major count is per stream instance: a
+    * restart resets it and a replayed batch Skips without advancing it,
+    * which can only delay maintenance. */
   def start(input: DataFrame, checkpointDir: String, trigger: Trigger,
             maintenance: Option[MaintenancePolicy])(
       fold: (DataFrame, Long) => BatchOutcome)(
@@ -306,12 +332,7 @@ private[streaming] abstract class TieredRoll[L1, T](
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
-        val outcome = fold(batch, batchId)
-        TieredRoll.log.info(f"$family tiered roll: batch=$batchId " +
-          f"outcome=$outcome epoch=${epochOf(batchId)} " +
-          f"seconds=${(System.nanoTime() - t0) / 1e9}%.3f")
-        outcome match {
+        fold(batch, batchId) match {
           case Major(_) =>
             majorsSeen += 1
             maintenance.filter(_.due(majorsSeen)).foreach(maintain(_, batch))

@@ -1,7 +1,11 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
+
+import graft.streaming._
 
 /** Streaming throughput micro-bench (r8 verdict task 8): the streaming
   * surface is correctness-proven by specs but had no rate numbers. This
@@ -46,8 +50,7 @@ object StreamBench {
     // a truncated-window rate must not read as a completed-workload rate
     // (r12 advice).
     val partials = scala.collection.mutable.ArrayBuffer.empty[String]
-    def awaitOrStop(q: org.apache.spark.sql.streaming.StreamingQuery,
-                    name: String): Unit =
+    def awaitOrStop(q: StreamingQuery, name: String): Unit =
       if (!q.awaitTermination(600000L)) {
         System.err.println(
           s"[stream_bench] $name did not finish in 600s — stopping; " +
@@ -59,9 +62,8 @@ object StreamBench {
 
     // --- windowed aggregation path
     val winSec = timed {
-      val q = graft.streaming.EventStreams
-        .windowedTypeCounts(
-          graft.streaming.EventStreams.readEventStream(spark, landing))
+      val q = EventStreams
+        .windowedTypeCounts(EventStreams.readEventStream(spark, landing))
         .writeStream.format("memory").queryName("sb_win")
         .outputMode(OutputMode.Append())
         .option("checkpointLocation", s"$tmp/ckpt_win")
@@ -70,12 +72,12 @@ object StreamBench {
     }
 
     // --- maintained-aggregate sink path (per-user count + exact value sum)
-    val sink = graft.streaming.IncrementalAggSink(
+    val sink = IncrementalAggSink(
       root = s"$tmp/aggsink", keys = Seq("user_id"),
       sums = Seq(("value", 2)), nBuckets = 16, appId = "sb")
     val sinkSec = timed {
       val q = sink.start(
-        graft.streaming.EventStreams.readEventStream(spark, landing)
+        EventStreams.readEventStream(spark, landing)
           .select(col("user_id"), col("value")),
         s"$tmp/ckpt_sink")
       try q.processAllAvailable() finally q.stop()
@@ -85,28 +87,36 @@ object StreamBench {
     require(stateRows == total,
       s"agg sink folded $stateRows rows, staged $total — lost or doubled a batch")
 
+    // --- the tiered roll sections: each stages (or reuses) nChunks
+    // parquet drops, streams them through one family's roll at full
+    // micro-batch machinery cost, timed until drained, then counts the
+    // committed view it rolled
+    def stage(df: DataFrame, dir: String): String = {
+      df.repartition(nChunks).write.parquet(s"$tmp/$dir"); s"$tmp/$dir"
+    }
+    def rollSection[V](name: String, landing: String, schema: StructType)(
+        start: DataFrame => StreamingQuery)(view: => Option[V])(
+        count: V => Long): (Double, Long) = {
+      val sec = timed(awaitOrStop(start(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(landing)), name))
+      (sec, count(view.getOrElse(sys.error(s"$name committed nothing"))))
+    }
+
     // --- the 1997 co-purchase edges staged as nChunks drops for the
     // graph rolls below
     val edges = graft.queries.CoreQueries.copurchasePairs(
       graft.io.Tables.load(spark, sfDir, "lineitem")
         .filter(year(col("l_shipdate")) === 1997)).distinct()
     val eCnt = edges.count()
-    edges.repartition(nChunks).write.parquet(s"$tmp/edge_landing")
+    val edgeLanding = stage(edges, "edge_landing")
 
     // --- TIERED graph roll: the staged edge drops through
-    // GraphTieredStream (L0 minors + majorEvery-th L1 compaction) at full
-    // micro-batch machinery cost
-    val gtrollSec = timed {
-      val q = graft.streaming.GraphTieredStream.start(
-        spark.readStream.schema(edges.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/edge_landing"),
-        s"$tmp/graph_tiered", s"$tmp/ckpt_gtroll", majorEvery = 4)
-      awaitOrStop(q, "graph_tiered_roll")
-    }
-    val gtView = graft.streaming.GraphTieredStream.loadCurrent(spark,
-      s"$tmp/graph_tiered")
-      .getOrElse(sys.error("tiered graph roll committed nothing"))
-    val gtEdges = try gtView.mergedEdges.count() finally gtView.release()
+    // GraphTieredStream (L0 minors + majorEvery-th L1 compaction)
+    val (gtrollSec, gtEdges) = rollSection("graph_tiered_roll", edgeLanding,
+        edges.schema)(GraphTieredStream.start(_, s"$tmp/graph_tiered",
+        s"$tmp/ckpt_gtroll", majorEvery = 4))(
+      GraphTieredStream.loadCurrent(spark, s"$tmp/graph_tiered"))(
+      v => try v.mergedEdges.count() finally v.release())
     require(gtEdges == eCnt,
       s"tiered graph roll folded $gtEdges edges, staged $eCnt")
 
@@ -116,22 +126,15 @@ object StreamBench {
     // stream's own foreachBatch — this row minus `graph_tiered_roll_sec`
     // is the attributed cost of wrapper-scheduled maintenance on
     // identical data and machinery
-    val gmTombs = spark.read.parquet(s"$tmp/edge_landing")
+    val gmTombs = spark.read.parquet(edgeLanding)
       .filter((col("src") + col("dst")) % 11 === 3)
     val gmDead = gmTombs.count()
-    val gmrollSec = timed {
-      val q = graft.streaming.GraphTieredStream.start(
-        spark.readStream.schema(edges.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/edge_landing"),
+    val (gmrollSec, gmEdges) = rollSection("graph_tiered_maint_roll",
+        edgeLanding, edges.schema)(GraphTieredStream.start(_,
         s"$tmp/graph_tiered_m", s"$tmp/ckpt_gmroll", majorEvery = 4,
-        maintenance = Some(graft.streaming.MaintenancePolicy(
-          tombstones = Some(() => gmTombs))))
-      awaitOrStop(q, "graph_tiered_maint_roll")
-    }
-    val gmView = graft.streaming.GraphTieredStream.loadCurrent(spark,
-      s"$tmp/graph_tiered_m")
-      .getOrElse(sys.error("maintained tiered roll committed nothing"))
-    val gmEdges = try gmView.mergedEdges.count() finally gmView.release()
+        maintenance = Some(MaintenancePolicy(tombstones = Some(() => gmTombs)))))(
+      GraphTieredStream.loadCurrent(spark, s"$tmp/graph_tiered_m"))(
+      v => try v.mergedEdges.count() finally v.release())
     // when the LAST batch is a major (nChunks ≡ 0 mod majorEvery) the
     // closing compaction leaves the view exactly the survivor set;
     // otherwise post-major minors may still carry dead edges awaiting the
@@ -151,19 +154,12 @@ object StreamBench {
       .filter(year(col("l_shipdate")) === 1997)
       .select(col("l_orderkey"), col("l_partkey"))
     val rlCnt = rawLines.count()
-    rawLines.repartition(nChunks).write.parquet(s"$tmp/line_landing")
-    val ctrollSec = timed {
-      val q = graft.streaming.CopurchaseStream.startTiered(
-        spark.readStream.schema(rawLines.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/line_landing"),
-        s"$tmp/cpst_lines", s"$tmp/cpst_epochs", s"$tmp/ckpt_ctroll",
-        majorEvery = math.max(2, nChunks / 2))
-      awaitOrStop(q, "line_graph_tiered_roll")
-    }
-    val ctView = graft.streaming.GraphTieredStream.loadCurrent(spark,
-      s"$tmp/cpst_epochs")
-      .getOrElse(sys.error("tiered copurchase roll committed nothing"))
-    val ctEdges = try ctView.mergedEdges.count() finally ctView.release()
+    val (ctrollSec, ctEdges) = rollSection("line_graph_tiered_roll",
+        stage(rawLines, "line_landing"), rawLines.schema)(
+      CopurchaseStream.startTiered(_, s"$tmp/cpst_lines", s"$tmp/cpst_epochs",
+        s"$tmp/ckpt_ctroll", majorEvery = math.max(2, nChunks / 2)))(
+      GraphTieredStream.loadCurrent(spark, s"$tmp/cpst_epochs"))(
+      v => try v.mergedEdges.count() finally v.release())
     require(ctEdges == eCnt,
       s"tiered raw-line roll derived $ctEdges edges, batch pair-gen has $eCnt")
 
@@ -172,58 +168,37 @@ object StreamBench {
     val vecs = graft.io.Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val vCnt = vecs.count()
-    vecs.repartition(nChunks).write.parquet(s"$tmp/vec_landing")
+    val vecLanding = stage(vecs, "vec_landing")
 
     // --- TIERED vector roll: the staged embedding drops through
     // VectorTieredStream (bootstrap L1, minors under standing centroids,
     // majorEvery-th union major)
-    val vtrollSec = timed {
-      val q = graft.streaming.VectorTieredStream.start(
-        spark.readStream.schema(vecs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/vec_landing"),
-        "vec_id", "embedding", s"$tmp/vec_tiered", s"$tmp/ckpt_vtroll",
-        nCells = 16, majorEvery = 4)
-      awaitOrStop(q, "vector_tiered_roll")
-    }
-    val vtView = graft.streaming.VectorTieredStream.loadCurrent(spark,
-      s"$tmp/vec_tiered", nCells = 16)
-      .getOrElse(sys.error("tiered vector roll committed nothing"))
-    val vtVecs = try vtView.index.assigned.count() finally vtView.release()
+    val (vtrollSec, vtVecs) = rollSection("vector_tiered_roll", vecLanding,
+        vecs.schema)(VectorTieredStream.start(_, "vec_id", "embedding",
+        s"$tmp/vec_tiered", s"$tmp/ckpt_vtroll", nCells = 16, majorEvery = 4))(
+      VectorTieredStream.loadCurrent(spark, s"$tmp/vec_tiered", nCells = 16))(
+      v => try v.index.assigned.count() finally v.release())
     require(vtVecs == vCnt,
       s"tiered vector roll folded $vtVecs vectors, staged $vCnt")
 
     // --- TIERED PQ roll: the same staged embedding drops through
     // PqTieredStream (bootstrap trains codebooks, minors encode under
     // the standing model, majorEvery-th union major)
-    val ptrollSec = timed {
-      val q = graft.streaming.PqTieredStream.start(
-        spark.readStream.schema(vecs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/vec_landing"),
-        "vec_id", "embedding", s"$tmp/pq_tiered", s"$tmp/ckpt_ptroll",
-        dim = 64, majorEvery = 4)
-      awaitOrStop(q, "pq_tiered_roll")
-    }
-    val ptView = graft.streaming.PqTieredStream.loadCurrent(spark,
-      s"$tmp/pq_tiered", dim = 64)
-      .getOrElse(sys.error("tiered pq roll committed nothing"))
-    val ptVecs = try ptView.index.encoded.count() finally ptView.release()
+    val (ptrollSec, ptVecs) = rollSection("pq_tiered_roll", vecLanding,
+        vecs.schema)(PqTieredStream.start(_, "vec_id", "embedding",
+        s"$tmp/pq_tiered", s"$tmp/ckpt_ptroll", dim = 64, majorEvery = 4))(
+      PqTieredStream.loadCurrent(spark, s"$tmp/pq_tiered", dim = 64))(
+      v => try v.index.encoded.count() finally v.release())
     require(ptVecs == vCnt,
       s"tiered pq roll folded $ptVecs vectors, staged $vCnt")
 
     // --- TIERED IVFADC roll: same drops through IvfPqTieredStream
     // (bootstrap trains BOTH models, minors route+encode under them)
-    val itrollSec = timed {
-      val q = graft.streaming.IvfPqTieredStream.start(
-        spark.readStream.schema(vecs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/vec_landing"),
-        "vec_id", "embedding", s"$tmp/ivfpq_tiered", s"$tmp/ckpt_itroll",
-        dim = 64, majorEvery = 4)
-      awaitOrStop(q, "ivfpq_tiered_roll")
-    }
-    val itView = graft.streaming.IvfPqTieredStream.loadCurrent(spark,
-      s"$tmp/ivfpq_tiered", dim = 64)
-      .getOrElse(sys.error("tiered ivfpq roll committed nothing"))
-    val itVecs = try itView.index.coded.count() finally itView.release()
+    val (itrollSec, itVecs) = rollSection("ivfpq_tiered_roll", vecLanding,
+        vecs.schema)(IvfPqTieredStream.start(_, "vec_id", "embedding",
+        s"$tmp/ivfpq_tiered", s"$tmp/ckpt_itroll", dim = 64, majorEvery = 4))(
+      IvfPqTieredStream.loadCurrent(spark, s"$tmp/ivfpq_tiered", dim = 64))(
+      v => try v.index.coded.count() finally v.release())
     require(itVecs == vCnt,
       s"tiered ivfpq roll folded $itVecs vectors, staged $vCnt")
 
@@ -233,15 +208,15 @@ object StreamBench {
     // generation — the cost a deployment's maintenance window pays
     val itTombs = vecs.filter(col("vec_id") % 20 === 3).select("vec_id")
     val icompactSec = timed {
-      graft.streaming.IvfPqTieredStream.compactMajor(spark,
-        s"$tmp/ivfpq_tiered", itTombs, "vec_id", threshold = 0.01,
-        dim = 64).getOrElse(sys.error("compaction major did not fire"))
+      IvfPqTieredStream.compactMajor(spark, s"$tmp/ivfpq_tiered", itTombs,
+        "vec_id", threshold = 0.01, dim = 64)
+        .getOrElse(sys.error("compaction major did not fire"))
     }
     val retainedCorpus = vecs.join(itTombs.withColumnRenamed("vec_id", "dead_id"),
       col("vec_id") === col("dead_id"), "left_anti")
     val iretrainSec = timed {
-      graft.streaming.IvfPqTieredStream.retrainMajor(retainedCorpus,
-        "vec_id", "embedding", s"$tmp/ivfpq_tiered", dim = 64)
+      IvfPqTieredStream.retrainMajor(retainedCorpus, "vec_id", "embedding",
+        s"$tmp/ivfpq_tiered", dim = 64)
         .getOrElse(sys.error("retrain major found no standing generation"))
     }
 
@@ -253,40 +228,26 @@ object StreamBench {
     // empty/whitespace-only docs carry no postings — the index's nDocs
     // counts token-bearing docs only
     val dTok = docsT.filter(trim(col("text")) =!= "").count()
-    docsT.repartition(nChunks).write.parquet(s"$tmp/doc_landing")
+    val docLanding = stage(docsT, "doc_landing")
 
     // --- TIERED lex roll: the staged document drops through
     // LexTieredStream (self-contained tierFrame minors, mergeTiers majors)
-    val ltrollSec = timed {
-      val q = graft.streaming.LexTieredStream.start(
-        spark.readStream.schema(docsT.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/doc_landing"),
-        s"$tmp/lex_tiered", s"$tmp/ckpt_ltroll", majorEvery = 4)
-      awaitOrStop(q, "lex_tiered_roll")
-    }
-    val ltView = graft.streaming.LexTieredStream.loadCurrent(spark,
-      s"$tmp/lex_tiered")
-      .getOrElse(sys.error("tiered lex roll committed nothing"))
-    val ltDocs = ltView.index.nDocs
-    ltView.release()
+    val (ltrollSec, ltDocs) = rollSection("lex_tiered_roll", docLanding,
+        docsT.schema)(LexTieredStream.start(_, s"$tmp/lex_tiered",
+        s"$tmp/ckpt_ltroll", majorEvery = 4))(
+      LexTieredStream.loadCurrent(spark, s"$tmp/lex_tiered"))(
+      v => try v.index.nDocs finally v.release())
     require(ltDocs == dTok,
       s"tiered lex roll folded $ltDocs docs, staged $dTok token-bearing")
 
     // --- TIERED signature roll: the same staged document drops through
     // SignatureTieredStream (O(|Δ|) tokenize minors, re-aggregate-only
     // bucket majors — the dedup family's LSM path)
-    val strollSec = timed {
-      val q = graft.streaming.SignatureTieredStream.start(
-        spark.readStream.schema(docsT.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/doc_landing"),
-        "doc_id", "text", s"$tmp/sig_tiered", s"$tmp/ckpt_stroll",
-        majorEvery = 4)
-      awaitOrStop(q, "signature_tiered_roll")
-    }
-    val stView = graft.streaming.SignatureTieredStream.loadCurrent(spark,
-      s"$tmp/sig_tiered")
-      .getOrElse(sys.error("tiered signature roll committed nothing"))
-    val stDocs = try stView.sigs.count() finally stView.release()
+    val (strollSec, stDocs) = rollSection("signature_tiered_roll",
+        docLanding, docsT.schema)(SignatureTieredStream.start(_, "doc_id",
+        "text", s"$tmp/sig_tiered", s"$tmp/ckpt_stroll", majorEvery = 4))(
+      SignatureTieredStream.loadCurrent(spark, s"$tmp/sig_tiered"))(
+      v => try v.sigs.count() finally v.release())
     // the signature kernel emits only shingle-bearing docs (≥ shingleWidth
     // tokens) — compare against the flat kernel over the same table
     val sigDocs = graft.operators.Dedup
@@ -301,18 +262,11 @@ object StreamBench {
       .filter(col("kind") === "image")
       .select(col("media_id"), col("media"))
     val mCnt = media.count()
-    media.repartition(nChunks).write.parquet(s"$tmp/media_landing")
-    val mtrollSec = timed {
-      val q = graft.streaming.MediaTieredStream.start(
-        spark.readStream.schema(media.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/media_landing"),
-        s"$tmp/media_tiered", s"$tmp/ckpt_mtroll", majorEvery = 4)
-      awaitOrStop(q, "media_tiered_roll")
-    }
-    val mtView = graft.streaming.MediaTieredStream.loadCurrent(spark,
-      s"$tmp/media_tiered")
-      .getOrElse(sys.error("tiered media roll committed nothing"))
-    val mtImgs = mtView.hashes.count()
+    val (mtrollSec, mtImgs) = rollSection("media_tiered_roll",
+        stage(media, "media_landing"), media.schema)(MediaTieredStream.start(_,
+        s"$tmp/media_tiered", s"$tmp/ckpt_mtroll", majorEvery = 4))(
+      MediaTieredStream.loadCurrent(spark, s"$tmp/media_tiered"))(
+      _.hashes.count())
     require(mtImgs == mCnt,
       s"tiered media roll hashed $mtImgs images, staged $mCnt")
 
@@ -331,8 +285,8 @@ object StreamBench {
     // keep the two serve points distinct (and their JSON keys) even when
     // the caller passes a large nChunks
     val serveBatchesHi = if (nChunks >= 32) nChunks * 4 else 32
-    def serveSection(name: String, queriesDf: org.apache.spark.sql.DataFrame,
-                     run: (String, String, String) => org.apache.spark.sql.streaming.StreamingQuery)
+    def serveSection(name: String, queriesDf: DataFrame,
+                     run: (String, String, String) => StreamingQuery)
         : (Long, Double, Double, Double, Double) = {
       val qCnt = queriesDf.count()
       def once(batches: Int, tag: String): Double = {
@@ -362,14 +316,14 @@ object StreamBench {
         concat_ws(" ", slice(split(col("text"), " "), 1, 2)).as("qtext"))
     val (lqCnt, lsecLo, lsecHi, lfloor, lmarg) =
       serveSection("lexq", lexQ, (in, out, ck) =>
-        graft.streaming.LexServeStream.startTiered(
+        LexServeStream.startTiered(
           spark.readStream.schema(lexQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
           s"$tmp/lex_tiered", out, ck))
 
     // graph serving: 2000 neighbor-recommendation probes over sources of
     // the rolled co-purchase graph
-    val gsrv = graft.streaming.GraphTieredStream.loadCurrent(spark,
+    val gsrv = GraphTieredStream.loadCurrent(spark,
       s"$tmp/cpst_epochs")
       .getOrElse(sys.error("no co-purchase epoch to serve"))
     val graphQ =
@@ -379,7 +333,7 @@ object StreamBench {
       finally gsrv.release()
     val (gqCnt, gsecLo, gsecHi, gfloor, gmarg) =
       serveSection("graphq", graphQ, (in, out, ck) =>
-        graft.streaming.GraphServeStream.startTiered(
+        GraphServeStream.startTiered(
           spark.readStream.schema(graphQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
           s"$tmp/cpst_epochs", out, ck))
@@ -391,7 +345,7 @@ object StreamBench {
       .select((col("vec_id") + 1000000L).as("qid"), col("embedding").as("qvec"))
     val (vqCnt, vsecLo, vsecHi, vfloor, vmarg) =
       serveSection("vecq", vecQ, (in, out, ck) =>
-        graft.streaming.VectorServeStream.startTiered(
+        VectorServeStream.startTiered(
           spark.readStream.schema(vecQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
           s"$tmp/vec_tiered", out, ck, nCells = 16))
@@ -400,13 +354,13 @@ object StreamBench {
     // IVFADC tiered roots just rolled (ADC / coarse-pruned ADC probes)
     val (pqCnt, psecLo, psecHi, pfloor, pmarg) =
       serveSection("pqq", vecQ, (in, out, ck) =>
-        graft.streaming.PqServeStream.startTiered(
+        PqServeStream.startTiered(
           spark.readStream.schema(vecQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
           s"$tmp/pq_tiered", out, ck, dim = 64))
     val (iqCnt, isecLo, isecHi, ifloor, imarg) =
       serveSection("ipqq", vecQ, (in, out, ck) =>
-        graft.streaming.IvfPqServeStream.startTiered(
+        IvfPqServeStream.startTiered(
           spark.readStream.schema(vecQ.schema)
             .option("maxFilesPerTrigger", "1").parquet(in),
           s"$tmp/ivfpq_tiered", out, ck, dim = 64))

@@ -183,7 +183,8 @@ class EventStreamsSpec extends SparkSpec {
     // same transform through a real stream
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double, String)]
     val sdf = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val q = runToMemory(windowedTypeCounts(sdf), "wc_test", OutputMode.Complete())
+    val q = windowedTypeCounts(sdf).writeStream.format("memory").queryName("wc_test")
+      .outputMode(OutputMode.Complete()).start()
     try {
       mem.addData((1L, ts("2024-01-01 00:05:00"), 10L, "click", 1.0, "{}"),
                   (2L, ts("2024-01-01 00:15:00"), 10L, "click", 2.0, "{}"),
@@ -192,32 +193,6 @@ class EventStreamsSpec extends SparkSpec {
       val streamed = spark.table("wc_test").orderBy("window_start", "event_type").collect()
       assert(streamed.map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSeq
         === res.map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSeq)
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment join attaches dimension rows per micro-batch") {
-    val dim = Seq((10L, "gold"), (11L, "basic")).toDF("user_id", "tier")
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double, String)]
-    val sdf = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val q = enrichedEvents(sdf, dim)
-      .select("event_id", "user_id", "tier")
-      .writeStream.format("memory").queryName("enrich_sink")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData((1L, ts("2024-01-01 00:05:00"), 10L, "click", 1.0, "{}"),
-                  (2L, ts("2024-01-01 00:06:00"), 99L, "click", 1.0, "{}"))
-      q.processAllAvailable()
-      // second micro-batch re-joins the same static side
-      mem.addData((3L, ts("2024-01-01 00:07:00"), 11L, "view", 2.0, "{}"))
-      q.processAllAvailable()
-      val rows = spark.table("enrich_sink").orderBy("event_id").collect()
-        .map(r => (r.getLong(0), Option(r.getString(2))))
-      assert(rows.toSeq === Seq(
-        (1L, Some("gold")),   // matched
-        (2L, None),           // left join keeps the unmatched event
-        (3L, Some("basic")))) // later batch joins too
-      // stateless: no streaming state operator involved in the join
-      assert(q.lastProgress.stateOperators.isEmpty)
     } finally q.stop()
   }
 
@@ -232,75 +207,6 @@ class EventStreamsSpec extends SparkSpec {
     assert(sessions(0).getAs[Long]("n_events") === 2)
   }
 
-  test("stateful high-value flag accumulates across micro-batches") {
-    val mem = MemoryStream[UserEvent]
-    val q = highValueFlags(mem.toDS(), threshold = 100.0, minCount = 2)
-      .writeStream.format("memory").queryName("flags_test")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      mem.addData(UserEvent(1L, ts("2024-01-01 00:00:00"), 150.0)) // 1st high
-      q.processAllAvailable()
-      mem.addData(UserEvent(1L, ts("2024-01-02 00:00:00"), 160.0), // 2nd high → flag
-                  UserEvent(2L, ts("2024-01-02 00:00:00"), 50.0))  // below threshold
-      q.processAllAvailable()
-      val rows = spark.table("flags_test")
-        .groupBy("user_id").agg(max("n_high").as("n_high"), max("flagged").as("flagged"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      assert(rows(1L) === ((2L, true)))
-      assert(!rows.contains(2L)) // filtered before state
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches views to later purchases, bounded state") {
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double, String)]
-    val sdf = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val q = viewToPurchase(sdf, "1 hour")
-      .writeStream.format("memory").queryName("ssj_test")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        (1L, ts("2024-01-01 10:00:00"), 7L, "view", 0.0, "{}"),
-        (2L, ts("2024-01-01 10:30:00"), 7L, "purchase", 9.0, "{}"), // joins with 1
-        (3L, ts("2024-01-01 09:20:00"), 7L, "view", 0.0, "{}"),     // within 1h of 2? 70min → no
-        (4L, ts("2024-01-01 10:30:00"), 8L, "purchase", 9.0, "{}")) // other user: no view
-      q.processAllAvailable()
-      // advance the watermark far enough to finalize the join results
-      mem.addData((9L, ts("2024-01-01 13:00:00"), 9L, "view", 0.0, "{}"))
-      q.processAllAvailable()
-      val rows = spark.table("ssj_test")
-        .collect().map(r => (r.getAs[Long]("purchase_id"), r.getAs[Long]("view_id")))
-      assert(rows.toSet === Set((2L, 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming dedup suppresses redeliveries, evicts state by watermark") {
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val q = dedupedEvents(mem.toDF().toDF("event_id", "ts", "event_type"))
-      .writeStream.format("memory").queryName("dd_sink")
-      .outputMode(OutputMode.Append()).start()
-    def stateRows: Long =
-      q.recentProgress.filter(_.stateOperators.nonEmpty)
-        .lastOption.map(_.stateOperators(0).numRowsTotal).getOrElse(-1L)
-    try {
-      mem.addData((1L, ts("2023-01-01 10:00:00"), "view"),
-                  (1L, ts("2023-01-01 10:00:30"), "view"), // redelivery in horizon
-                  (2L, ts("2023-01-01 10:01:00"), "click"))
-      q.processAllAvailable()
-      assert(spark.table("dd_sink").count() === 2) // first-seen-wins
-      assert(stateRows === 2)
-      // advance event time 2h: watermark passes both keys, state evicted
-      mem.addData((3L, ts("2023-01-01 12:00:00"), "view"))
-      q.processAllAvailable()
-      assert(stateRows === 1) // only key 3 remains tracked
-      // the documented trade: a duplicate arriving AFTER its key's state
-      // was evicted is re-admitted (exact global dedup stays a batch job)
-      mem.addData((1L, ts("2023-01-01 12:01:00"), "view"))
-      q.processAllAvailable()
-      assert(spark.table("dd_sink")
-        .filter(col("event_id") === 1L).count() === 2)
-    } finally q.stop()
-  }
-
   test("file-source stream over the driver events table reaches a sink") {
     // the file stream source needs a directory of files (at scale: a landing
     // dir receiving new parquet drops); stage the single testdata file
@@ -308,9 +214,9 @@ class EventStreamsSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("part-0.parquet"))
-    val q = runToMemory(
-      windowedTypeCounts(EventStreams.readEventStream(spark, dir.toString)),
-      "file_stream_test", OutputMode.Append())
+    val q = windowedTypeCounts(EventStreams.readEventStream(spark, dir.toString))
+      .writeStream.format("memory").queryName("file_stream_test")
+      .outputMode(OutputMode.Append()).start()
     try {
       q.processAllAvailable()
       // append mode emits only windows the watermark has passed; the table
@@ -334,7 +240,8 @@ class EventStreamsSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       landing.resolve("part-0.parquet"))
-    val q = runToMemory(windowedTypeCounts(stream), "late_dir_test", OutputMode.Append())
+    val q = windowedTypeCounts(stream).writeStream.format("memory")
+      .queryName("late_dir_test").outputMode(OutputMode.Append()).start()
     try {
       q.processAllAvailable()
       assert(spark.table("late_dir_test").count() > 0)

@@ -42,11 +42,11 @@ class VectorTieredStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("vts_idx").toString
     val batches = Seq(vecs(1 to 60), vecs(101 to 120), vecs(201 to 220),
       vecs(301 to 320), vecs(401 to 420))
+    def fold(root: String, i: Int): BatchOutcome =
+      VectorTieredStream.foldBatch(batches(i), "vec_id", "emb", root,
+        i.toLong, N_CELLS, TRAIN, ITERS, majorEvery = 3)
     // majorEvery=3: bootstrap L1@0, minors @1 @2, major @3, minor @4
-    val outcomes = batches.zipWithIndex.map { case (b, i) =>
-      VectorTieredStream.foldBatch(b, "vec_id", "emb", root, i.toLong,
-        N_CELLS, TRAIN, ITERS, majorEvery = 3)
-    }
+    val outcomes = batches.indices.map(fold(root, _))
     assert(outcomes(0) === BatchOutcome.Bootstrapped)
     assert(outcomes(1) === BatchOutcome.Minor)
     assert(outcomes(2) === BatchOutcome.Minor)
@@ -77,6 +77,26 @@ class VectorTieredStreamSpec extends SparkSpec {
       assert(assignedPairs(view.index) === assignedPairs(twin))
       val queries = vecs(1 to 5).union(vecs(401 to 403))
       assert(probed(view.index, queries) === probed(twin, queries))
+
+      // crash mid-roll: a second root commits batches 0–1, then a torn L0
+      // (files, no marker) is planted for batch 2. Replaying EVERY batch
+      // skips the committed prefix, overwrites the torn epoch and folds
+      // the tail, and the restarted view equals the uncrashed roll's
+      val crashed = Files.createTempDirectory("vts_crash").toString
+      (0 to 1).foreach(fold(crashed, _))
+      val torn = new java.io.File(s"$crashed/l0/epoch=${ep(2)}")
+      assert(torn.mkdirs())
+      Files.write(torn.toPath.resolve("data.partial"), Array[Byte](1, 2, 3))
+      assert(batches.indices.map(fold(crashed, _)) === Seq(BatchOutcome.Skipped,
+        BatchOutcome.Skipped, BatchOutcome.Minor, BatchOutcome.Major(2),
+        BatchOutcome.Minor))
+      val restarted = VectorTieredStream.loadCurrent(spark, crashed, N_CELLS,
+        TRAIN, ITERS).getOrElse(fail("no restarted view"))
+      try {
+        assert(restarted.index.centroids.map(_.toSeq).toSeq ===
+          view.index.centroids.map(_.toSeq).toSeq)
+        assert(assignedPairs(restarted.index) === assignedPairs(view.index))
+      } finally restarted.release()
     } finally { view.release(); twin.release() }
   }
 
