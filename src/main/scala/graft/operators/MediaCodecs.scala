@@ -3,6 +3,9 @@ package graft.operators
 import java.awt.RenderingHints
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.sound.sampled.{AudioFileFormat, AudioInputStream, UnsupportedAudioFileException}
+import javax.sound.sampled.spi.AudioFileReader
+import scala.jdk.CollectionConverters._
 
 /** Real (JDK-native, zero-dependency) media codecs for the multimodal
   * column operators: PNG/JPEG/GIF/BMP via `javax.imageio`, WAV/AIFF via
@@ -299,6 +302,25 @@ object VideoCodec {
 
 object AudioCodec {
 
+  /** The installed container readers, looked up once per JVM, less the
+    * MIDI reader. `AudioSystem.getAudioInputStream` rediscovers every
+    * reader on each call, and its MIDI reader (ordered ahead of the WAV
+    * one) runs a MIDI-provider lookup on every blob it is handed: per-row
+    * work on each task thread for a format this codec does not decode. */
+  private lazy val readers: List[AudioFileReader] =
+    java.util.ServiceLoader.load(classOf[AudioFileReader], ClassLoader.getSystemClassLoader)
+      .asScala.filterNot(_.getClass.getSimpleName.contains("Midi")).toList
+
+  /** The first reader that recognizes `bytes`: its container format and
+    * its sample stream. Throws, as AudioSystem does, when none does. */
+  private def open(bytes: Array[Byte]): (AudioFileFormat, AudioInputStream) =
+    readers.iterator.flatMap { r =>
+      try Some((r.getAudioFileFormat(new ByteArrayInputStream(bytes)),
+        r.getAudioInputStream(new ByteArrayInputStream(bytes))))
+      catch { case _: UnsupportedAudioFileException => None }
+    }.nextOption().getOrElse(
+      throw new UnsupportedAudioFileException("unrecognized audio container"))
+
   /** Decoded audio facts + sample stats. `rms` is over 16-bit PCM samples
     * normalized to [-1, 1]. */
   final case class AudioInfo(format: String, sampleRate: Int, channels: Int,
@@ -311,14 +333,11 @@ object AudioCodec {
     * skipped like a corrupt blob, never reported as rms = 0 "silence". */
   def decode(bytes: Array[Byte]): Option[AudioInfo] =
     try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new ByteArrayInputStream(bytes))
+      val (fileFormat, ais) = open(bytes)
       try {
         val fmt = ais.getFormat
         if (fmt.getSampleSizeInBits != 16) None
         else {
-          val fileFormat = javax.sound.sampled.AudioSystem.getAudioFileFormat(
-            new ByteArrayInputStream(bytes))
           val data = ais.readAllBytes()
           var acc = 0.0
           var n = 0
@@ -353,8 +372,7 @@ object AudioCodec {
     * envelope shape for any fixed channel count. */
   def energyFingerprint(bytes: Array[Byte]): Option[Long] =
     try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new ByteArrayInputStream(bytes))
+      val (_, ais) = open(bytes)
       try {
         val fmt = ais.getFormat
         if (fmt.getSampleSizeInBits != 16) None
