@@ -94,5 +94,110 @@ class KeyedSinkFaultSpec extends SparkSpec {
             s"bucket $b carries the marker of the last batch that touched it")
         }
     }
+
+    /** Both batches applied once, under their own ids, with no fault. */
+    lazy val noCrash: Seq[String] = {
+      val s = f.open(root("ref"), "ref")
+      assert(s.apply(batch(0), 0L) && s.apply(batch(1), 1L))
+      rows(s.read())
+    }
+
+    /** A bucket both batches touch: its content changes in batch 1. */
+    def shared: Long = {
+      val both = bucketsOf(0) intersect bucketsOf(1)
+      assert(both.nonEmpty, "the batches must share a bucket")
+      both.min
+    }
+
+    def unledger(r: String, entry: String): Unit =
+      assert(fs.delete(new Path(s"$r/_commits/$entry"), false))
+
+    test(s"${f.name}: a post-commit replay is skipped whole") {
+      val s = f.open(root("replay"), "t")
+      assert(s.apply(batch(0), 0L) && s.apply(batch(1), 1L))
+      assert(!s.apply(batch(1), 1L) && !s.apply(batch(0), 0L),
+        "a committed batch must report skip")
+      assert(rows(s.read()) === noCrash)
+    }
+
+    test(s"${f.name}: an unledgered re-apply converges when every bucket " +
+         "carries the marker") {
+      val r = root("every")
+      val s = f.open(r, "t")
+      assert(s.apply(batch(0), 0L) && s.apply(batch(1), 1L))
+      unledger(r, "t-1")
+      assert(s.apply(batch(1), 1L), "an unledgered batch must re-apply")
+      assert(new File(s"$r/_commits/t-1").exists(), "the re-apply ledgers it")
+      assert(rows(s.read()) === noCrash)
+    }
+
+    test(s"${f.name}: an unledgered re-apply converges when only some " +
+         "buckets carry the marker") {
+      val r = root("some")
+      val pre = root("some_pre")
+      val s = f.open(r, "t")
+      assert(s.apply(batch(0), 0L))
+      copy(new Path(s"$r/state"), new Path(s"$pre/state"))
+      assert(s.apply(batch(1), 1L))
+      val touched = bucketsOf(1).toSeq.sorted
+      assert(touched.size >= 2, "batch 1 must touch several buckets")
+      // the crash hit after the first bucket's swap: the rest still hold
+      // batch 0's state, and no ledger entry was written
+      touched.tail.foreach { b =>
+        assert(fs.delete(bucket(r, b), true))
+        if (fs.exists(bucket(pre, b))) copy(bucket(pre, b), bucket(r, b))
+      }
+      unledger(r, "t-1")
+      assert(s.apply(batch(1), 1L))
+      assert(rows(s.read()) === noCrash)
+    }
+
+    test(s"${f.name}: a parked bucket whose live dir is missing is restored") {
+      val r = root("restore")
+      val s = f.open(r, "t")
+      assert(s.apply(batch(0), 0L))
+      // the crash hit between the two renames of batch 1's swap
+      val live = bucket(r, shared)
+      assert(fs.rename(live, live.suffix("._old")))
+      assert(s.apply(batch(1), 1L))
+      assert(!fs.exists(live.suffix("._old")), "the parked bucket is healed")
+      assert(rows(s.read()) === noCrash)
+    }
+
+    test(s"${f.name}: a parked bucket whose live dir is present is dropped") {
+      val r = root("drop")
+      val pre = root("drop_pre")
+      val s = f.open(r, "t")
+      assert(s.apply(batch(0), 0L))
+      val live = bucket(r, shared)
+      copy(live, new Path(pre, "parked"))
+      assert(s.apply(batch(1), 1L))
+      // the crash hit after the swap, before the parked copy was dropped
+      copy(new Path(pre, "parked"), live.suffix("._old"))
+      unledger(r, "t-1")
+      assert(s.apply(batch(1), 1L))
+      assert(!fs.exists(live.suffix("._old")), "the parked bucket is dropped")
+      assert(rows(s.read()) === noCrash)
+    }
+
+    test(s"${f.name}: read never returns a parked bucket") {
+      val r = root("read")
+      val s = f.open(r, "t")
+      assert(s.apply(batch(0), 0L) && s.apply(batch(1), 1L))
+      val live = bucket(r, shared)
+      copy(live, live.suffix("._old"))
+      assert(rows(s.read()) === noCrash, "a parked copy must not double rows")
+    }
+
+    test(s"${f.name}: the ledger is scoped by appId") {
+      val r = root("appid")
+      val a = f.open(r, "run1")
+      assert(a.apply(batch(0), 0L))
+      // a fresh checkpoint lineage restarts batchIds at 0
+      val b = f.open(r, "run2")
+      assert(b.apply(batch(1), 0L), "batch 0 under a new appId is new data")
+      assert(!b.apply(batch(1), 0L) && !a.apply(batch(0), 0L))
+      assert(rows(b.read()) === noCrash)
+    }
   }
 }
