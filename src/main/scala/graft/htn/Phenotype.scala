@@ -36,45 +36,17 @@ object Phenotype {
       .withColumn("MEDS", lit(1))
 
   /** Compose the one-row-per-patient analytical table
-    * (`3_blood_pressure.R:405-409` + `4_hypertension_phenotype_main.R:126-177`).
+    * (`3_blood_pressure.R:405-409` + `4_hypertension_phenotype_main.R:126-177`)
+    * over the FUSED flag frame ([[BloodPressure.bpFlags]]).
     *
     * Input `denomPatients` is the per-patient BP denominator; the flag
-    * tables are (PATIENT_LINKAGE, flag) at patient grain — every join here
-    * is a 1:1 left join on the cohort key, hash-partitioned once.
+    * tables are (PATIENT_LINKAGE, ...) at patient grain — every join here
+    * is a 1:1 left join on the cohort key. One left join carries all four
+    * BP flag columns: bpFlags' key set equals each stage flag's key set
+    * (all filter to the measurement year), so a patient absent there gets
+    * NULL in every flag column, exactly as four separate left joins on the
+    * stage flags would leave it.
     */
-  def analytical(denomPatients: DataFrame,
-                 htn140: DataFrame, htn130: DataFrame,
-                 control140: DataFrame, control130: DataFrame,
-                 dx: DataFrame, meds: DataFrame): DataFrame = {
-    def orZero(c: String) = coalesce(col(c), lit(0))
-    denomPatients
-      .join(htn140, Seq("PATIENT_LINKAGE"), "left")
-      .join(htn130, Seq("PATIENT_LINKAGE"), "left")
-      .join(control140, Seq("PATIENT_LINKAGE"), "left")
-      .join(control130, Seq("PATIENT_LINKAGE"), "left")
-      .join(dx, Seq("PATIENT_LINKAGE"), "left")
-      .join(meds, Seq("PATIENT_LINKAGE"), "left")
-      .withColumn("DX", orZero("DX"))
-      .withColumn("MEDS", orZero("MEDS"))
-      .withColumn("hypertension_140",
-        when(col("DX") === 1 || col("MEDS") === 1 || orZero("HTN140_90") === 1, 1)
-          .otherwise(0))
-      .withColumn("hypertension_130",
-        when(col("DX") === 1 || col("MEDS") === 1 || orZero("HTN130_80") === 1, 1)
-          .otherwise(0))
-      .select("PATIENT_LINKAGE", "age", "sex", "race", "state", "zip3",
-        "HTN140_90", "HTN130_80", "HTNcontrol140", "HTNcontrol130",
-        "DX", "MEDS", "hypertension_140", "hypertension_130")
-  }
-
-  /** [[analytical]] over the FUSED flag frame
-    * ([[BloodPressure.bpFlags]]): one left join carries all four BP flag
-    * columns instead of four 1:1 joins on the same key. Join semantics
-    * are unchanged — bpFlags' key set equals each stage flag's key set
-    * (all filter to the measurement year), so a patient absent there was
-    * absent from all four and every flag column goes NULL exactly as the
-    * four separate left joins left it. Output columns, names, types and
-    * NULL policy are identical to [[analytical]]. */
   def analyticalFused(denomPatients: DataFrame, bpFlags: DataFrame,
                       dx: DataFrame, meds: DataFrame): DataFrame = {
     def orZero(c: String) = coalesce(col(c), lit(0))

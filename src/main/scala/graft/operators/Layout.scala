@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,20 +67,10 @@ object Layout {
   def compact(spark: SparkSession, path: String, targetFileBytes: Long = 128L << 20,
               sortBy: Seq[Column] = Nil): (Int, Int) = {
     require(targetFileBytes > 0)
-    val hadoopPath = new org.apache.hadoop.fs.Path(path) // normalizes trailing '/'
+    val hadoopPath = new Path(path) // normalizes trailing '/'
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery from a previous compact() of this table: a run that
-    // died between the two swap renames left the data under ._precompact
-    // (restore it); one that died after the swap but before cleanup left a
-    // stale ._precompact beside the already-compacted table (drop it —
-    // either way a leftover must not wedge every future compaction).
-    val staleBak = hadoopPath.suffix("._precompact")
-    if (fs.exists(staleBak)) {
-      if (!fs.exists(hadoopPath)) {
-        if (!fs.rename(staleBak, hadoopPath))
-          sys.error(s"compact: cannot restore $staleBak after crashed swap")
-      } else fs.delete(staleBak, true)
-    }
+    // crash recovery from a previous compact() of this table
+    healParked(fs, hadoopPath, "._precompact", "compact")
     val parts = fs.listStatus(hadoopPath)
       .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
     // A hive-partitioned table has NO top-level part files — rewriting it
@@ -98,13 +89,7 @@ object Layout {
       if (sortBy.isEmpty) rows.repartition(nOut)
       else rows.repartitionByRange(nOut, sortBy: _*).sortWithinPartitions(sortBy: _*)
     shaped.write.mode("overwrite").parquet(tmp.toString)
-    val bak = hadoopPath.suffix("._precompact")
-    if (!fs.rename(hadoopPath, bak)) sys.error(s"compact: cannot stage $path")
-    if (!fs.rename(tmp, hadoopPath)) { // roll back, never leave path missing
-      fs.rename(bak, hadoopPath)
-      sys.error(s"compact: cannot swap in compacted $path")
-    }
-    fs.delete(bak, true)
+    swapIn(fs, tmp, hadoopPath, "._precompact", "compact")
     (parts.length, nOut)
   }
 
@@ -132,18 +117,15 @@ object Layout {
   def compactPartitioned(spark: SparkSession, root: String,
                          targetFileBytes: Long = 128L << 20,
                          sortBy: Seq[Column] = Nil): Seq[(String, Int, Int)] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the crashed leaf can be the ROOT itself (unpartitioned table, crash
     // between compact's two renames): its ._precompact marker is a SIBLING
     // of root, outside the walk — restore it here or the table stays
     // hidden from every future call
-    val rootBak = rootPath.suffix("._precompact")
-    if (!fs.exists(rootPath) && fs.exists(rootBak) &&
-        !fs.rename(rootBak, rootPath))
-      sys.error(s"compactPartitioned: cannot restore $rootBak after crashed swap")
+    healParked(fs, rootPath, "._precompact", "compactPartitioned")
     require(fs.exists(rootPath), s"compactPartitioned: $root does not exist")
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
+    def leaves(p: Path): Seq[Path] = {
       val st = fs.listStatus(p)
       // a `<leaf>._precompact` sibling marks a leaf whose compaction
       // crashed mid-swap: surface the ORIGINAL leaf path (it may not exist
@@ -151,7 +133,7 @@ object Layout {
       // `._compacting` staging dirs are skipped; compact overwrites them.
       val crashed = st.filter(s => s.isDirectory &&
           s.getPath.getName.endsWith("._precompact"))
-        .map(s => new org.apache.hadoop.fs.Path(p,
+        .map(s => new Path(p,
           s.getPath.getName.stripSuffix("._precompact")))
       val visible = st.filter { s =>
         val n = s.getPath.getName
@@ -169,6 +151,38 @@ object Layout {
     ls.map { l =>
       val (before, after) = compact(spark, l.toString, targetFileBytes, sortBy)
       (l.toString, before, after)
+    }
+  }
+
+  /** Swap the directory `staged` in at `live` by rename: park `live`
+    * under its `suffix` sibling, rename `staged` into its place, drop the
+    * parked copy. A failed swap-in renames the parked copy back before it
+    * fails, so `live` is never left missing; a crash between the renames
+    * is healed by [[healParked]]. `what` names the caller in errors. */
+  private[graft] def swapIn(fs: FileSystem, staged: Path, live: Path,
+                            suffix: String, what: String): Unit = {
+    val parked = live.suffix(suffix)
+    if (fs.exists(live) && !fs.rename(live, parked))
+      sys.error(s"$what: cannot park $live")
+    if (!fs.rename(staged, live)) {
+      fs.rename(parked, live)
+      sys.error(s"$what: cannot swap in $staged")
+    }
+    fs.delete(parked, true)
+  }
+
+  /** Heal a [[swapIn]] that crashed: a parked `suffix` sibling of `live`
+    * is restored when `live` is missing (the crash hit between the two
+    * renames) and dropped when `live` is present (it hit after the swap).
+    * Either way a leftover never wedges the next swap. */
+  private[graft] def healParked(fs: FileSystem, live: Path, suffix: String,
+                                what: String): Unit = {
+    val parked = live.suffix(suffix)
+    if (fs.exists(parked)) {
+      if (!fs.exists(live)) {
+        if (!fs.rename(parked, live))
+          sys.error(s"$what: cannot restore $parked after crashed swap")
+      } else fs.delete(parked, true)
     }
   }
 }

@@ -4,11 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Batch MERGE/upsert — the keyed merge at the heart of
-  * [[graft.streaming.ExactlyOnceSink]] extracted as a first-class batch
-  * operator (r8 verdict task 6): the missing PRODUCER half of the SCD
-  * family. q46 builds history from a log and q62 reads it point-in-time;
-  * this is what maintains a live current-state table between them —
+/** Batch MERGE/upsert — the keyed merge that
+  * [[graft.streaming.ExactlyOnceSink]] runs per micro-batch, as a
+  * first-class batch operator (r8 verdict task 6): the missing PRODUCER
+  * half of the SCD family. q46 builds history from a log and q62 reads
+  * it point-in-time; this is what maintains a live current-state table
+  * between them —
   * `MERGE INTO target USING updates ON keys`, re-expressed as the
   * anti-join + union plan shape Catalyst optimizes well.
   *
@@ -35,9 +36,10 @@ import org.apache.spark.sql.functions._
   * update KEY SET (not the full update rows) plus a union — with a small
   * batch against a huge target, AQE broadcasts the key set and the target
   * is never shuffled. When the target lives as a hash-bucketed table,
-  * [[graft.streaming.ExactlyOnceSink]] is this operator plus partition
-  * pruning (only touched buckets read) and crash-safe bucket swaps —
-  * use the sink for maintained-on-disk state, this for frame-level merges.
+  * [[graft.streaming.ExactlyOnceSink]] is [[resolveUpdates]] +
+  * [[upsertResolved]] over the touched buckets of its bucketed state
+  * (partition pruning, crash-safe bucket swaps) — use the sink for
+  * maintained-on-disk state, this for frame-level merges.
   */
 object Merge {
 
@@ -58,7 +60,7 @@ object Merge {
   /** Keyed upsert of ALREADY-RESOLVED updates (exactly one row per key —
     * the caller's contract, unchecked to avoid a redundant shuffle; this
     * is the piece [[graft.streaming.ExactlyOnceSink.upsertBatch]] runs
-    * after its own resolution). */
+    * after [[resolveUpdates]]). */
   def upsertResolved(target: DataFrame, resolved: DataFrame,
                      keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "merge needs at least one key column")

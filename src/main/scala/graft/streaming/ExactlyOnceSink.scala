@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import graft.operators.Merge
 
 /** Exactly-once streaming sink: an idempotent `foreachBatch` merge-upsert
   * into a keyed parquet target (the sink half of a streaming pipeline —
@@ -14,30 +12,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Exactly-once here is the standard two-layer construction Spark's own
   * docs prescribe for `foreachBatch` (the epoch/ledger discipline of
-  * Delta/Iceberg commit protocols, re-expressed over plain parquet):
-  *
-  *  1. **Batch ledger.** Every applied batch writes a `_commits/<batchId>`
-  *     marker AFTER its data is swapped in. A redelivered batchId (retry
-  *     after the driver died post-commit) is detected and skipped whole.
-  *  2. **Idempotent apply.** The merge itself is a keyed UPSERT (anti-join
-  *     the target on the batch's keys, union the batch), so a retry that
-  *     runs in any of the crash windows BEFORE the marker landed —
-  *     including half-swapped bucket directories — converges to the same
-  *     target state when the batch is re-applied. Append-only sinks have
-  *     no such self-repair; that is why the merge, not an append, is the
-  *     pattern worth shipping.
-  *
-  * Scale shape: the target is hash-bucketed on the key
-  * (`_bucket = pmod(xxhash64(keys), nBuckets)`, a partitioned parquet
-  * layout), and a micro-batch reads and rewrites ONLY the buckets its keys
-  * touch — partition pruning on the read side, per-bucket staging + rename
-  * on the write side. Work per batch is proportional to the batch's key
-  * spread, not to the accumulated target size; at 100 TB the target is
-  * thousands of buckets and a batch touches a handful. Buckets swap via
-  * the same rename discipline as `Layout.compact` (stage → park old →
-  * swap → clean), and a crash in any window is healed on the next call:
-  * parked `._old` buckets are restored or dropped, then the unmarked batch
-  * re-applies.
+  * Delta/Iceberg commit protocols, re-expressed over plain parquet). The
+  * storage half is [[BucketedState]]: hash-bucketed state where a batch
+  * rewrites only the buckets its keys touch, the `_commits/` ledger that
+  * skips a redelivered batch whole, per-bucket `_applied` markers, and
+  * crash-healing bucket swaps. The merge half is this sink's: a keyed
+  * UPSERT ([[Merge.resolveUpdates]] to one row per key, then
+  * [[Merge.upsertResolved]] — anti-join the touched buckets on the batch's
+  * keys, union the batch). The upsert is idempotent, so a root written
+  * before the markers existed still converges on re-apply; append-only
+  * sinks have no such self-repair, which is why the merge, not an
+  * append, is the pattern worth shipping.
   *
   * Reference: the pipeline's own restart-from-the-middle property
   * (hypertension_dashboard_pipeline `2_data_importing_cleaning.R:39-40` —
@@ -55,32 +40,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * @param orderBy  within-batch conflict resolution: keep the row with the
   *                 MAX of this column per key (e.g. the event timestamp).
   *                 None = arbitrary-but-single row per key.
-  * @param appId    ledger namespace, the Delta `txnAppId` discipline:
-  *                 batchIds are only unique WITHIN one streaming query's
-  *                 checkpoint lineage. A stream restarted from a FRESH
-  *                 checkpoint restarts batchIds at 0 — under the same
-  *                 appId those would be skipped as replays and their rows
-  *                 silently lost. New checkpoint ⇒ new appId (or new
-  *                 root); the ledger keys on (appId, batchId).
+  * @param appId    ledger namespace ([[BucketedState.appId]]): a stream
+  *                 restarted from a FRESH checkpoint restarts batchIds at
+  *                 0, and under the same appId those would be skipped as
+  *                 replays and their rows silently lost.
   */
 final case class ExactlyOnceSink(root: String, keys: Seq[String],
                                  nBuckets: Int = 64,
                                  orderBy: Option[String] = None,
                                  appId: String = "default") {
-  require(keys.nonEmpty, "upsert needs at least one key column")
-  require(nBuckets >= 1, s"nBuckets must be positive, got $nBuckets")
-  require(appId.nonEmpty && !appId.contains("/"),
-    s"appId must be a plain token, got '$appId'")
-
-  private val statePath = new Path(root, "state")
-  private val commitsPath = new Path(root, "_commits")
-  private def bucketDir(i: Long) = new Path(statePath, s"_bucket=$i")
-  private def fs(spark: SparkSession) =
-    statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val store = BucketedState(root, keys, nBuckets, appId)
 
   /** True iff (appId, batchId) has already been applied (marker on disk). */
   def committed(spark: SparkSession, batchId: Long): Boolean =
-    fs(spark).exists(new Path(commitsPath, s"$appId-$batchId"))
+    store.committed(spark, batchId)
 
   /** Current target contents (key columns + payload; the internal
     * `_bucket` partition column is dropped). Live buckets only — a
@@ -88,116 +61,26 @@ final case class ExactlyOnceSink(root: String, keys: Seq[String],
     * reader between the crash and the healing next batch sees each row
     * at most once. Before the first commit there is no schema on disk:
     * returns the zero-column empty frame. */
-  def read(spark: SparkSession): DataFrame = {
-    val f = fs(spark)
-    if (!f.exists(statePath)) spark.emptyDataFrame
-    else {
-      val live = f.listStatus(statePath).filter { s =>
-        s.isDirectory && s.getPath.getName.startsWith("_bucket=") &&
-          !s.getPath.getName.endsWith("._old")
-      }
-      if (live.isEmpty) spark.emptyDataFrame
-      else spark.read.option("basePath", statePath.toString)
-        .parquet(live.map(_.getPath.toString).toSeq: _*).drop("_bucket")
-    }
-  }
+  def read(spark: SparkSession): DataFrame = store.read(spark)
 
   /** Apply one micro-batch. Returns false (and does nothing) when the
     * batchId is already in the ledger — the replay-after-commit path.
     * Safe to call concurrently never; Spark serializes foreachBatch. */
-  def upsertBatch(batch: DataFrame, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val f = fs(spark)
-    f.mkdirs(commitsPath); f.mkdirs(statePath)
-    healParkedBuckets(f)
-    if (committed(spark, batchId)) return false
-
+  def upsertBatch(batch: DataFrame, batchId: Long): Boolean =
     // within-batch resolution: exactly one row per key enters the merge
-    val keyed = orderBy match {
-      case Some(o) =>
-        val w = Window.partitionBy(keys.map(col): _*).orderBy(col(o).desc)
-        batch.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-      case None => batch.dropDuplicates(keys)
+    store.apply(batch.sparkSession, batchId)(
+      Seq(Merge.resolveUpdates(batch, keys, orderBy.toSeq))) {
+      (current, parts) =>
+        current.fold(parts.head)(Merge.upsertResolved(_, parts.head, keys))
     }
-    val resolved = keyed
-      .withColumn("_bucket", pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)))
-      .persist()
-    try {
-      val touched = resolved.select("_bucket").distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (touched.isEmpty) { markCommitted(f, batchId); return true }
-
-      val existingTouched = touched.filter(i => f.exists(bucketDir(i)))
-      val merged =
-        if (existingTouched.isEmpty) resolved
-        else {
-          // partition pruning: only the touched buckets are read
-          val current = spark.read
-            .option("basePath", statePath.toString)
-            .parquet(existingTouched.map(bucketDir(_).toString): _*)
-          // the shared keyed-merge core (null-safe anti-join + union) —
-          // batch callers get the same semantics via operators.Merge
-          graft.operators.Merge.upsertResolved(current, resolved, keys)
-        }
-      // stage the full merged content of the touched buckets, then swap
-      // each bucket directory by rename — compact's discipline per bucket
-      val staging = new Path(root, s"state._staging")
-      merged.write.mode("overwrite").partitionBy("_bucket")
-        .parquet(staging.toString)
-      touched.foreach { i =>
-        val live = bucketDir(i)
-        val staged = new Path(staging, s"_bucket=$i")
-        val old = parked(live)
-        if (f.exists(live) && !f.rename(live, old))
-          sys.error(s"sink: cannot park $live")
-        if (f.exists(staged) && !f.rename(staged, live)) {
-          f.rename(old, live) // roll this bucket back, then fail the batch
-          sys.error(s"sink: cannot swap in $staged")
-        }
-        f.delete(old, true)
-      }
-      f.delete(staging, true)
-      markCommitted(f, batchId)
-      true
-    } finally resolved.unpersist()
-  }
 
   /** Wire this sink onto a streaming frame: Update-mode foreachBatch with
     * a checkpoint, the replayable-source half of the exactly-once
     * contract (Spark redelivers the SAME batchId with the SAME rows after
-    * a failure; the ledger + idempotent merge absorb the redelivery). */
+    * a failure; the ledger + idempotent merge absorb the redelivery).
+    * Update, not the Append default: an aggregated upstream (the natural
+    * input for a keyed upsert) must emit changed rows per trigger, not
+    * defer every group to watermark close. */
   def start(stream: DataFrame, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      // Update, not the Append default: an aggregated upstream (the
-      // natural input for a keyed upsert) must emit changed rows per
-      // trigger, not defer every group to watermark close
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], id: Long) => {
-        upsertBatch(b, id); ()
-      })
-      .start()
-
-  private def parked(live: Path) = live.suffix("._old")
-
-  /** Heal crash windows from a previous call: a parked `._old` bucket
-    * whose live directory is missing is restored (the crash hit between
-    * the two renames); one whose live directory exists is dropped (the
-    * crash hit after the swap). Either way the unmarked batch re-applies
-    * afterwards and converges. */
-  private def healParkedBuckets(f: org.apache.hadoop.fs.FileSystem): Unit =
-    f.listStatus(statePath)
-      .filter(s => s.isDirectory && s.getPath.getName.endsWith("._old"))
-      .foreach { s =>
-        val live = new Path(statePath,
-          s.getPath.getName.stripSuffix("._old"))
-        if (!f.exists(live)) {
-          if (!f.rename(s.getPath, live))
-            sys.error(s"sink: cannot restore parked bucket ${s.getPath}")
-        } else f.delete(s.getPath, true)
-      }
-
-  private def markCommitted(f: org.apache.hadoop.fs.FileSystem, batchId: Long): Unit =
-    f.create(new Path(commitsPath, s"$appId-$batchId"), true).close()
+    store.start(stream, checkpointDir, OutputMode.Update())(upsertBatch)
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import graft.operators.IncrementalAgg
 
 /** Streaming aggregate-state maintenance: each micro-batch is folded into
@@ -12,18 +11,13 @@ import graft.operators.IncrementalAgg
   * sums, min/max) a training-data pipeline reads instead of re-scanning
   * the corpus. Work per batch is O(batch + touched state), never O(corpus).
   *
-  * Storage discipline is [[ExactlyOnceSink]]'s (hash-bucketed parquet,
-  * stage → park → rename swap, `_commits/` batch ledger, heal-on-entry) —
-  * with one addition it NEEDS and the upsert sink doesn't: a metric MERGE
-  * is not idempotent (re-folding the same batch doubles its counts), so a
-  * crash between "some buckets swapped" and "ledger marker written" cannot
-  * simply re-apply the whole batch. Each staged bucket therefore carries a
-  * `_applied-<appId>-<batchId>` marker file that RIDES THE RENAME: on
-  * re-apply, buckets already carrying this batch's marker are skipped and
-  * only the unswapped remainder is merged — convergent under any crash
-  * window. (Spark ignores `_`-prefixed files in a parquet directory, and
-  * Spark serializes foreachBatch calls, so exactly one marker generation
-  * is live per bucket.)
+  * Storage is [[BucketedState]]'s, the same as [[ExactlyOnceSink]]'s:
+  * hash-bucketed parquet, the `_commits/` batch ledger, crash-healing
+  * bucket swaps. A metric MERGE is not idempotent (re-folding the same
+  * batch doubles its counts), and the store's per-bucket
+  * `_applied-<appId>-<batchId>` markers are what make it safe: a re-apply
+  * after a crash between "some buckets swapped" and "ledger written"
+  * merges only the buckets that do not carry the batch's marker yet.
   *
   * CDC deletes: rows flagged by `deleteCol` are built into deleted-state
   * and RETRACTED (count/sum subtraction; [[IncrementalAgg.retract]]).
@@ -36,7 +30,7 @@ import graft.operators.IncrementalAgg
   * @param minMax    columns to track min/max of (append-only sinks only)
   * @param deleteCol boolean column marking CDC delete rows in each batch
   * @param nBuckets  hash-bucket count of the state layout
-  * @param appId     ledger namespace — see [[ExactlyOnceSink.appId]]
+  * @param appId     ledger namespace — see [[BucketedState.appId]]
   */
 final case class IncrementalAggSink(root: String, keys: Seq[String],
                                     sums: Seq[(String, Int)] = Nil,
@@ -44,24 +38,14 @@ final case class IncrementalAggSink(root: String, keys: Seq[String],
                                     deleteCol: Option[String] = None,
                                     nBuckets: Int = 64,
                                     appId: String = "default") {
-  require(keys.nonEmpty, "aggregate state needs at least one key column")
-  require(nBuckets >= 1, s"nBuckets must be positive, got $nBuckets")
-  require(appId.nonEmpty && !appId.contains("/"),
-    s"appId must be a plain token, got '$appId'")
+  private val store = BucketedState(root, keys, nBuckets, appId)
   require(deleteCol.isEmpty || minMax.isEmpty,
     "CDC deletes require invertible metrics only: min/max state cannot " +
       "retract (IncrementalAgg.retract) — drop minMax or deleteCol")
 
-  private val statePath = new Path(root, "state")
-  private val commitsPath = new Path(root, "_commits")
-  private def bucketDir(i: Long) = new Path(statePath, s"_bucket=$i")
-  private def markerName(batchId: Long) = s"_applied-$appId-$batchId"
-  private def fs(spark: SparkSession) =
-    statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** True iff (appId, batchId) has fully applied (global ledger marker). */
   def committed(spark: SparkSession, batchId: Long): Boolean =
-    fs(spark).exists(new Path(commitsPath, s"$appId-$batchId"))
+    store.committed(spark, batchId)
 
   /** Current aggregate state (keys + metric columns), decoded for reading
     * via [[IncrementalAgg.finish]]. */
@@ -75,93 +59,23 @@ final case class IncrementalAggSink(root: String, keys: Seq[String],
     * carry no data files and are skipped — a state where ALL buckets are
     * in that condition reads as the empty frame, not a schema-inference
     * error. */
-  def readRaw(spark: SparkSession): DataFrame = {
-    val f = fs(spark)
-    if (!f.exists(statePath)) spark.emptyDataFrame
-    else {
-      val live = f.listStatus(statePath).filter { s =>
-        s.isDirectory && s.getPath.getName.startsWith("_bucket=") &&
-          !s.getPath.getName.endsWith("._old")
-      }.filter(s => hasDataFiles(f, s.getPath))
-      if (live.isEmpty) spark.emptyDataFrame
-      else spark.read.option("basePath", statePath.toString)
-        .parquet(live.map(_.getPath.toString).toSeq: _*).drop("_bucket")
-    }
-  }
+  def readRaw(spark: SparkSession): DataFrame = store.read(spark)
 
-  /** Fold one micro-batch of RAW rows into the state. Returns false (and
-    * does nothing) on a post-commit replay of the same batchId. */
+  /** Fold one micro-batch of RAW rows into the state: the batch's inserts
+    * merged in, its deletes (when `deleteCol` is set) retracted. Returns
+    * false (and does nothing) on a post-commit replay of the same batchId. */
   def applyBatch(batch: DataFrame, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val f = fs(spark)
-    f.mkdirs(commitsPath); f.mkdirs(statePath)
-    healParkedBuckets(f)
-    if (committed(spark, batchId)) return false
-
-    val isDel = deleteCol.map(col(_) === true).getOrElse(lit(false))
-    val inserts = IncrementalAgg.build(
-      batch.filter(!coalesce(isDel, lit(false))).drop(deleteCol.toSeq: _*),
-      keys, sums, minMax)
-    val deletes = deleteCol.map { _ =>
-      IncrementalAgg.build(
-        batch.filter(coalesce(isDel, lit(false))).drop(deleteCol.toSeq: _*),
-        keys, sums, minMax)
-    }
-    val withBucket = (df: DataFrame) =>
-      df.withColumn("_bucket", pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)))
-    val ins = withBucket(inserts).persist()
-    val del = deletes.map(d => withBucket(d).persist())
-    try {
-      val touched = (ins.select("_bucket") +: del.map(_.select("_bucket")).toSeq)
-        .reduce(_ unionByName _).distinct().collect().map(_.getLong(0)).sorted
-      // buckets this batch already swapped in (pre-commit crash re-apply)
-      val remaining = touched.filterNot { i =>
-        f.exists(new Path(bucketDir(i), markerName(batchId)))
-      }
-      if (remaining.isEmpty) { markCommitted(f, batchId); return true }
-
-      val rem = remaining.toSet
-      val existing = remaining.filter(i => hasDataFiles(f, bucketDir(i)))
-      val current: Option[DataFrame] =
-        if (existing.isEmpty) None
-        else Some(spark.read.option("basePath", statePath.toString)
-          .parquet(existing.map(bucketDir(_).toString): _*))
-      val insRem = ins.filter(col("_bucket").isin(rem.toSeq: _*))
-      val stateKeys = keys :+ "_bucket"
-      val mergedIns = current match {
-        case Some(c) => IncrementalAgg.merge(stateKeys, c, insRem)
-        case None => IncrementalAgg.merge(stateKeys, insRem)
-      }
-      val merged = del match {
-        case Some(d) =>
-          IncrementalAgg.retract(mergedIns,
-            d.filter(col("_bucket").isin(rem.toSeq: _*)))
-        case None => mergedIns
-      }
-
-      val staging = new Path(root, "state._staging")
-      merged.write.mode("overwrite").partitionBy("_bucket")
-        .parquet(staging.toString)
-      remaining.foreach { i =>
-        val staged = new Path(staging, s"_bucket=$i")
-        // a bucket can lose every key (full retraction): stage dir absent
-        if (!f.exists(staged)) f.mkdirs(staged)
-        f.create(new Path(staged, markerName(batchId)), true).close()
-        val live = bucketDir(i)
-        val old = live.suffix("._old")
-        if (f.exists(live) && !f.rename(live, old))
-          sys.error(s"aggsink: cannot park $live")
-        if (!f.rename(staged, live)) {
-          f.rename(old, live)
-          sys.error(s"aggsink: cannot swap in $staged")
-        }
-        f.delete(old, true)
-      }
-      f.delete(staging, true)
-      markCommitted(f, batchId)
-      true
-    } finally {
-      ins.unpersist(); del.foreach(_.unpersist()); ()
+    val isDel = coalesce(deleteCol.map(col(_) === true).getOrElse(lit(false)),
+      lit(false))
+    def build(rows: Column) = IncrementalAgg.build(
+      batch.filter(rows).drop(deleteCol.toSeq: _*), keys, sums, minMax)
+    val stateKeys = keys :+ "_bucket"
+    store.apply(batch.sparkSession, batchId)(
+      build(!isDel) +: deleteCol.map(_ => build(isDel)).toSeq) {
+      (current, parts) =>
+        val ins = current.fold(IncrementalAgg.merge(stateKeys, parts.head))(
+          IncrementalAgg.merge(stateKeys, _, parts.head))
+        parts.tail.headOption.fold(ins)(IncrementalAgg.retract(ins, _))
     }
   }
 
@@ -169,34 +83,5 @@ final case class IncrementalAggSink(root: String, keys: Seq[String],
     * state folded per trigger) with the ledger + markers absorbing every
     * redelivery shape. */
   def start(stream: DataFrame, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], id: Long) => {
-        applyBatch(b, id); ()
-      })
-      .start()
-
-  /** True iff `dir` exists and holds at least one parquet data file
-    * (markers and hidden files don't count — a fully-retracted bucket
-    * holds only its `_applied` marker). */
-  private def hasDataFiles(f: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
-    f.exists(dir) && f.listStatus(dir).exists { c =>
-      val n = c.getPath.getName
-      c.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
-
-  private def healParkedBuckets(f: org.apache.hadoop.fs.FileSystem): Unit =
-    if (f.exists(statePath))
-      f.listStatus(statePath)
-        .filter(s => s.isDirectory && s.getPath.getName.endsWith("._old"))
-        .foreach { s =>
-          val live = new Path(statePath, s.getPath.getName.stripSuffix("._old"))
-          if (!f.exists(live)) {
-            if (!f.rename(s.getPath, live))
-              sys.error(s"aggsink: cannot restore parked bucket ${s.getPath}")
-          } else f.delete(s.getPath, true)
-        }
-
-  private def markCommitted(f: org.apache.hadoop.fs.FileSystem, batchId: Long): Unit =
-    f.create(new Path(commitsPath, s"$appId-$batchId"), true).close()
+    store.start(stream, checkpointDir, OutputMode.Append())(applyBatch)
 }

@@ -15,23 +15,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `ivfPqBuild` + `ivfPqAppend` chain (v31) directly. Same probe contract
   * as the sibling servers: a candidate whose nid equals the probe's qid is
   * excluded — serve external query streams from a disjoint id namespace.
-  * The roll pins and serves it ([[TieredRoll.answer]] /
-  * [[TieredRoll.serve]]). */
+  * The roll pins and serves it ([[TieredRoll.serve]]). */
 object IvfPqServeStream {
-
-  /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
-    * the newest committed tiered view under `indexRoot`. Returns
-    * `(epochId, answers)` with answers `(qid, rank, nid, adc)` eagerly
-    * checkpointed ([[TieredRoll.answer]]). Pure batch logic —
-    * unit-testable without a stream. */
-  def answerBatch(queries: DataFrame, indexRoot: String, dim: Int,
-                  k: Int = 5, nProbe: Int = 2, nCells: Int = 8,
-                  m: Int = 4, codebookK: Int = 8,
-                  coarseIters: Int = 4, pqIters: Int = 4,
-                  trainSample: Int = 10000): (Long, DataFrame) =
-    new IvfPqTieredStream.Roll(queries.sparkSession, indexRoot, dim, nCells,
-      m, codebookK, coarseIters, pqIters, trainSample)
-      .answer(queries, "IVFADC epoch")(answerPlan(_, _, k, nProbe))
 
   /** The probe plan over a LIVE view (the caller owns its lifetime; the
     * result's lineage reads its coded frames). */

@@ -16,22 +16,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * full-precision vector reads. Note pqTopK's query-by-corpus-member
   * contract: a candidate whose nid EQUALS the probe's qid is excluded —
   * serve external query streams from an id namespace disjoint from the
-  * corpus ids. The roll pins and serves it ([[TieredRoll.answer]] /
-  * [[TieredRoll.serve]]). */
+  * corpus ids. The roll pins and serves it ([[TieredRoll.serve]]). */
 object PqServeStream {
-
-  /** Answer ONE batch of `(qid LONG, qvec ARRAY<FLOAT>)` probes against
-    * the newest committed view under `indexRoot`. Returns
-    * `(epochId, answers)` with answers `(qid, rank, nid, adc)` eagerly
-    * checkpointed ([[TieredRoll.answer]]). Pure batch logic —
-    * unit-testable without a stream. */
-  def answerBatch(queries: DataFrame, indexRoot: String, dim: Int,
-                  k: Int = 5, m: Int = 4, codebookK: Int = 8,
-                  iters: Int = 4, trainSample: Int = 10000)
-      : (Long, DataFrame) =
-    new PqTieredStream.Roll(queries.sparkSession, indexRoot, dim, m,
-      codebookK, iters, trainSample)
-      .answer(queries, "PQ epoch")(answerPlan(_, _, k))
 
   /** The probe plan over a LIVE view (the caller owns its lifetime; the
     * result's lineage reads its coded frames). */

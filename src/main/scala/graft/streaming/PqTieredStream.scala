@@ -27,7 +27,7 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   * `pqAppend` chain over the same batches (v28's oracle certifies the
   * lifecycle).
   * Epochs store int8 CODES ONLY, so the standing state cannot re-derive
-  * training vectors: retraining is [[retrainMajor]] over the retained
+  * training vectors: retraining is [[retrainMajorIfDrifted]] over the retained
   * source corpus. Parameter-keyed epochs (`roll_dim/m/k/iters/train_sample`). */
 object PqTieredStream {
 
@@ -116,22 +116,13 @@ object PqTieredStream {
       Similarity.pqCompact(v.index.copy(release = () => ()), tombstones,
         tombId, threshold))
 
-  /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrain]]): fresh
-    * codebooks over the caller-supplied retained corpus
+  /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrainIfDrifted]]):
+    * fresh codebooks over the caller-supplied retained corpus
     * ([[Similarity.pqBuild]] — raw vectors come from the corpus of record)
-    * and the re-encoded index committed as a new L1 generation. `None`
-    * when no generation is standing. */
-  def retrainMajor(corpus: DataFrame, idCol: String, vecCol: String,
-                   root: String, dim: Int, m: Int = 4, k: Int = 8,
-                   iters: Int = 4, trainSample: Int = 10000): Option[Long] =
-    new Roll(corpus.sparkSession, root, dim, m, k, iters, trainSample)
-      .retrain(Similarity.pqBuild(corpus, idCol, vecCol, dim, m, k, iters,
-        trainSample))
-
-  /** [[retrainMajor]] gated on [[Similarity.pqDriftAudit]] (the recent
-    * batch encoded under the standing codebooks, per-subspace code shares
-    * compared): fires when more than `maxDriftedCodes` (subspace, code)
-    * cells drift. */
+    * and the re-encoded index committed as a new L1 generation. Gated on
+    * [[Similarity.pqDriftAudit]] (the recent batch encoded under the
+    * standing codebooks, per-subspace code shares compared): fires when
+    * more than `maxDriftedCodes` (subspace, code) cells drift. */
   def retrainMajorIfDrifted(corpus: DataFrame, recent: DataFrame,
                             idCol: String, vecCol: String, root: String,
                             maxDriftedCodes: Int, dim: Int,

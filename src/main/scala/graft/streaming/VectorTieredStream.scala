@@ -28,8 +28,8 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   * view unchanged, bit-identical to the flat [[Similarity.ivfAppend]]
   * chain (v27's oracle certifies the lifecycle against a from-scratch
   * replay). Centroids are the bootstrap batch's k-means optimum, the
-  * [[Similarity.ivfAppend]] contract; [[retrainMajor]] is the maintenance
-  * window's fix. Epochs are keyed by the REQUESTED model shape. */
+  * [[Similarity.ivfAppend]] contract; [[retrainMajorIfDrifted]] is the
+  * maintenance window's fix. Epochs are keyed by the REQUESTED model shape. */
 object VectorTieredStream {
 
   private[streaming] final class Roll(spark: SparkSession, root: String,
@@ -115,21 +115,13 @@ object VectorTieredStream {
       Similarity.ivfCompact(v.index.copy(release = () => ()), tombstones,
         tombId, threshold))
 
-  /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrain]]): fresh
-    * centroids trained over the caller-supplied retained corpus
+  /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrainIfDrifted]]):
+    * fresh centroids trained over the caller-supplied retained corpus
     * ([[Similarity.ivfBuild]]) and the re-assigned index committed as a
     * new L1 generation — retraining is a deliberate maintenance window
     * (or [[MaintenancePolicy]]'s drift trigger), never an ingest step.
-    * `None` when no generation is standing. */
-  def retrainMajor(corpus: DataFrame, idCol: String, vecCol: String,
-                   root: String, nCells: Int = 16, trainSample: Int = 10000,
-                   iters: Int = 8): Option[Long] =
-    new Roll(corpus.sparkSession, root, nCells, trainSample, iters).retrain(
-      Similarity.ivfBuild(corpus, idCol, vecCol, nCells, trainSample, iters))
-
-  /** [[retrainMajor]] gated on [[Similarity.driftAudit]] over the tiered
-    * view vs a recent arrival batch: fires when more than
-    * `maxDriftedCells` cells drift. */
+    * Gated on [[Similarity.driftAudit]] over the tiered view vs a recent
+    * arrival batch: fires when more than `maxDriftedCells` cells drift. */
   def retrainMajorIfDrifted(corpus: DataFrame, recent: DataFrame,
                             idCol: String, vecCol: String, root: String,
                             maxDriftedCells: Int, nCells: Int = 16,

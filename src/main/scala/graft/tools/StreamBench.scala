@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -32,9 +32,15 @@ object StreamBench {
     val nChunks = if (args.nonEmpty) args(0).toInt else 8
     val spark = graft.GraftSession.local(Sweep.cores)
     graft.io.Tables.canaryEvents(spark, sfDir)
+    val tmp = java.nio.file.Files.createTempDirectory("stream_bench").toString
+    try run(spark, sfDir, nChunks, tmp)
+    finally { graft.io.TempRoots.delete(tmp); spark.stop() }
+  }
 
+  /** Every section under the temp root `tmp`, then the JSON line. */
+  private def run(spark: SparkSession, sfDir: String, nChunks: Int,
+                  tmp: String): Unit = {
     // stage the table as nChunks files — one micro-batch each
-    val tmp = java.nio.file.Files.createTempDirectory("stream_bench")
     val landing = s"$tmp/landing"
     val events = graft.io.Tables.load(spark, sfDir, "events")
     val total = events.count()
@@ -396,6 +402,5 @@ object StreamBench {
         s""""pq_serve":${serveJson(pqCnt, psecLo, psecHi, pfloor, pmarg)},""" +
         s""""ivfpq_serve":${serveJson(iqCnt, isecLo, isecHi, ifloor, imarg)},""" +
         s""""partial":${partials.map(p => "\"" + p + "\"").mkString("[", ",", "]")}}""")
-    spark.stop()
   }
 }

@@ -87,12 +87,11 @@ class KeyedSinkFaultSpec extends SparkSpec {
       assert(names(s"$r/state") === (b0 ++ b1).map(b => s"_bucket=$b"))
       assert(names(s"$r/_commits") === Set("lay-0", "lay-1"))
       assert(!new File(s"$r/state._staging").exists(), "no staging dir is left")
-      if (f.name == "aggregate")
-        (b0 ++ b1).foreach { b =>
-          assert(names(bucket(r, b).toString).filter(_.startsWith("_applied-")) ===
-            Set(s"_applied-lay-${if (b1(b)) 1 else 0}"),
-            s"bucket $b carries the marker of the last batch that touched it")
-        }
+      (b0 ++ b1).foreach { b =>
+        assert(names(bucket(r, b).toString).filter(_.startsWith("_applied-")) ===
+          Set(s"_applied-lay-${if (b1(b)) 1 else 0}"),
+          s"bucket $b carries the marker of the last batch that touched it")
+      }
     }
 
     /** Both batches applied once, under their own ids, with no fault. */
