@@ -54,9 +54,11 @@ class KeyedSinkFaultSpec extends SparkSpec {
   private def batch(i: Int): DataFrame =
     keysOf(i).map(k => (k, k * 0.25 + i)).toDF("k", "x")
 
-  private def bucketsOf(i: Int): Set[Long] =
-    batch(i).select(pmod(xxhash64(col("k")), lit(nBuckets.toLong)))
-      .distinct().collect().map(_.getLong(0)).toSet
+  private def bucketOf(keys: Seq[Long]): Map[Long, Long] =
+    keys.toDF("k").select(col("k"), pmod(xxhash64(col("k")), lit(nBuckets.toLong)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def bucketsOf(i: Int): Set[Long] = bucketOf(keysOf(i)).values.toSet
 
   /** A read as a sorted multiset of rows: a duplicated key shows. */
   private def rows(df: DataFrame): Seq[String] =
@@ -101,9 +103,11 @@ class KeyedSinkFaultSpec extends SparkSpec {
       rows(s.read())
     }
 
-    /** A bucket both batches touch: its content changes in batch 1. */
+    /** A bucket batch 1 touches that also holds a batch-0 key batch 1
+      * leaves alone: losing its batch-0 content shows in every sink. */
     def shared: Long = {
-      val both = bucketsOf(0) intersect bucketsOf(1)
+      val kept = (keysOf(0).toSet -- keysOf(1)).toSeq
+      val both = bucketOf(kept).values.toSet intersect bucketsOf(1)
       assert(both.nonEmpty, "the batches must share a bucket")
       both.min
     }
