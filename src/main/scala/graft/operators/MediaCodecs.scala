@@ -288,10 +288,6 @@ object VideoCodec {
     splitFrames(bytes).grouped(every).map(_.head)
   }
 
-  /** Decoded pixel frames, sampled every `every`-th (the expensive tier). */
-  def decodeFrames(bytes: Array[Byte], every: Int): Iterator[BufferedImage] =
-    sampleFrames(bytes, every).flatMap(ImageCodec.decode)
-
   /** Encode frames as an MJPEG stream (concatenated JPEGs). */
   def encodeMjpeg(frames: Iterator[BufferedImage]): Array[Byte] = {
     val baos = new ByteArrayOutputStream()

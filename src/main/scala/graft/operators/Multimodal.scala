@@ -285,7 +285,7 @@ object Multimodal {
   }
 
   /** Per-frame aHash over MJPEG video blobs: every `every`-th frame is
-    * decoded ([[VideoCodec.decodeFrames]]'s sampling) and aHashed —
+    * decoded ([[VideoCodec.sampleFrames]]'s sampling) and aHashed —
     * (media_id, frame_idx, phash), frame_idx over the SAMPLED sequence.
     * The ingest-once column for video near-dup; undecodable frames and
     * non-MJPEG blobs contribute nothing (skip-don't-throw). */

@@ -431,7 +431,8 @@ object Similarity {
     ivfProbe(index.copy(assigned = live), queries, qid, qvec, k, nProbe)
   }
 
-  /** Shared kernel of the three `*Compact` maintenance ops: one scan of
+  /** Shared kernel of the three `*Compact` maintenance ops (and of the
+    * tiered quantizer rolls' compaction, [[graft.streaming.QuantizerRoll]]): one scan of
     * the stored frame (left join against the broadcast tombstone set)
     * counts total and dead rows together, then — when the dead share
     * reaches `threshold` — the survivors are anti-joined out, persisted
@@ -441,7 +442,7 @@ object Similarity {
     * is one pass over the stored rows; the rewrite is a second — both
     * O(index), paid ONCE in a maintenance window instead of a broadcast
     * anti-join on every query forever. */
-  private def compactFrame(stored: DataFrame, tombstones: DataFrame,
+  private[graft] def compactFrame(stored: DataFrame, tombstones: DataFrame,
                            tombId: String, threshold: Double,
                            persist: Boolean): Option[(DataFrame, () => Unit)] = {
     val dead = broadcast(

@@ -179,19 +179,13 @@ object CopurchaseStream {
     }
   }
 
-  /** The delta co-purchase edges one batch of `(l_orderkey, l_partkey)`
-    * lines adds over the standing lines: batch × standing-of-touched-
-    * orders in BOTH directions plus batch × batch (the self-join emits
-    * both directions itself). Pure batch logic over RAW order lines. */
-  def deltaEdges(batch: DataFrame, standing: DataFrame): DataFrame =
-    deltaEdgesNorm(batch.select(col("l_orderkey").cast("long").as("o"),
-      col("l_partkey").cast("long").as("p")).distinct(), standing)
-
-  /** [[deltaEdges]] over ALREADY-NORMALIZED distinct `(o, p)` lines —
-    * [[foldBatchTiered]] passes its pinned frame here so the batch's
-    * upstream is scanned once across the whole fold. Private: the distinct is a
-    * CORRECTNESS precondition (duplicate lines would multiply through
-    * both self-join sides), so outside callers take the raw entry. */
+  /** The delta co-purchase edges one batch of ALREADY-NORMALIZED distinct
+    * `(o, p)` lines adds over the standing lines: batch × standing-of-
+    * touched-orders in BOTH directions plus batch × batch (the self-join
+    * emits both directions itself). [[foldBatchTiered]] passes its pinned
+    * frame here so the batch's upstream is scanned once across the whole
+    * fold. The distinct is a CORRECTNESS precondition: duplicate lines
+    * would multiply through both self-join sides. */
   private def deltaEdgesNorm(b: DataFrame, standing: DataFrame): DataFrame = {
     // ONE join instead of three subtrees (b⋈s twice for the two
     // directions + b⋈b): join the batch against (pruned-standing ∪ batch)
@@ -231,7 +225,7 @@ object CopurchaseStream {
                       compactEvery: Int = 32): BatchOutcome = {
     val spark = batch.sparkSession
     // one materialization of the batch's lines serves the emptiness probe,
-    // the bucket listing, the lines write, AND deltaEdges' two join sides
+    // the bucket listing, the lines write, AND deltaEdgesNorm's two join sides
     // (a foreachBatch frame re-computes its upstream per action otherwise)
     val lines = batch.select(col("l_orderkey").cast("long").as("o"),
       col("l_partkey").cast("long").as("p")).distinct()

@@ -45,9 +45,9 @@ import graft.operators.{Adjacency, Checkpoints, IndexStore}
   * of scope. */
 object GraphTieredStream {
 
-  private[streaming] final class Roll(spark: SparkSession, root: String,
+  private[streaming] final class Roll(session: SparkSession, root: String,
                                       hubLimit: Long)
-      extends TieredRoll[Adjacency.Hybrid, Tiered](spark, root, "graph") {
+      extends TieredRoll[Adjacency.Hybrid, Tiered](session, root, "graph") {
     protected val l1Codec = IndexStore.graph
     protected val l1Params = Map("dedup" -> "true", "hub_limit" -> hubLimit.toString)
     protected val bootstraps = false
@@ -80,7 +80,35 @@ object GraphTieredStream {
           hubLimit = hubLimit)))
       labeled(sc, s"graph-tier e$epochId: major-save")(commit(built, dir, note))
     }
+
+    /** One scan decides (total + dead edges counted together against the
+      * broadcast tombstone pair set over the merged view); at dead share ≥
+      * `threshold` the survivor edges are anti-joined out ONCE and rebuilt
+      * — exactly the build a data major pays. Tombstones are (src, dst)
+      * pairs, so `tombId` is unused. */
+    override protected def compactKernel(view: Tiered, tombstones: DataFrame,
+        tombId: String, threshold: Double): Option[Adjacency.Hybrid] = {
+      val sc = spark.sparkContext
+      val dead = broadcast(prepare(tombstones))
+      val keys = Seq("src", "dst")
+      if (!labeled(sc, "graph-tier compact: dead-share")(
+          TieredRoll.deadShareReached(view.mergedEdges, dead, keys, threshold)))
+        None
+      else
+        // survivors feed the build RAW: the anti-join drops every copy of
+        // a dead pair and the dedup=true build collapses the rest
+        Some(labeled(sc, "graph-tier compact: rebuild")(
+          Checkpoints.sweepingOnFailure(sc)(Adjacency.build(
+            view.rawEdges.join(dead, keys, "left_anti"), dedup = true,
+            hubLimit = hubLimit))))
+    }
   }
+
+  /** `(src, dst)` as longs, distinct within the frame; cross-tier dedup is
+    * the read's and the major's. */
+  private def prepare(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")).distinct()
 
   /** The ≤-2-tier reader view: newest committed L1 (possibly absent —
     * pre-first-major streams serve from deltas alone) plus the live L0
@@ -181,57 +209,31 @@ object GraphTieredStream {
   def foldBatch(edges: DataFrame, root: String, batchId: Long,
                 majorEvery: Int = 8,
                 hubLimit: Long = Adjacency.DefaultHubLimit): BatchOutcome =
-    new Roll(edges.sparkSession, root, hubLimit).fold(
-      edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .distinct(), // within-batch dedup; cross-tier dedup is the read/major's
-      batchId, majorEvery)
+    new Roll(edges.sparkSession, root, hubLimit).fold(prepare(edges), batchId,
+      majorEvery)
 
   /** Maintenance-window PHYSICAL edge retraction ([[TieredRoll.compact]]):
-    * one scan decides (total + dead edges counted together against the
-    * broadcast tombstone pair set over the merged view), and at dead share
-    * ≥ `threshold` the survivor edges are anti-joined out ONCE and rebuilt
-    * into a full [[Adjacency.Hybrid]] — exactly the build a data major
-    * pays. `None` below threshold, when no tombstoned edge is stored, AND
-    * on a minors-only root (no L1 generation to rewrite yet; read through
+    * the survivor edges rebuilt into a full [[Adjacency.Hybrid]]. `None`
+    * below `threshold`, when no tombstoned edge is stored, AND on a
+    * minors-only root (no L1 generation to rewrite yet; read through
     * [[Tiered.mergedEdgesExcluding]] until the first major). Idempotent
     * under re-run: a second call with the same tombstones finds no stored
     * dead edge. */
   def compactMajor(spark: SparkSession, root: String, tombstones: DataFrame,
                    threshold: Double = 0.0,
-                   hubLimit: Long = Adjacency.DefaultHubLimit): Option[Long] = {
-    val sc = spark.sparkContext
-    new Roll(spark, root, hubLimit).compact { view =>
-      val dead = broadcast(tombstones
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst")).distinct())
-      val keys = Seq("src", "dst")
-      if (!labeled(sc, "graph-tier compact: dead-share")(
-          TieredRoll.deadShareReached(view.mergedEdges, dead, keys, threshold)))
-        None
-      else
-        // survivors feed the build RAW: the anti-join drops every copy of
-        // a dead pair and the dedup=true build collapses the rest
-        Some(labeled(sc, "graph-tier compact: rebuild")(
-          Checkpoints.sweepingOnFailure(sc)(Adjacency.build(
-            view.rawEdges.join(dead, keys, "left_anti"), dedup = true,
-            hubLimit = hubLimit))))
-    }
-  }
+                   hubLimit: Long = Adjacency.DefaultHubLimit): Option[Long] =
+    new Roll(spark, root, hubLimit).compact(tombstones, "", threshold)
 
   /** Start the tiered roll: `edges` (a streaming `(src, dst)` frame) →
-    * per-batch [[foldBatch]]. `maintenance` opts into scheduled in-stream
-    * compaction after data majors — the graph policy's tombstone supplier
-    * yields (src, dst) EDGE pairs and `tombId` is ignored
-    * ([[MaintenancePolicy]]). */
+    * per-batch [[TieredRoll.fold]]. `maintenance` opts into scheduled
+    * in-stream compaction after data majors ([[TieredRoll.start]]) — the
+    * graph policy's tombstone supplier yields (src, dst) EDGE pairs and
+    * `tombId` is ignored. */
   def start(edges: DataFrame, root: String, checkpointDir: String,
             majorEvery: Int = 8,
             hubLimit: Long = Adjacency.DefaultHubLimit,
             maintenance: Option[MaintenancePolicy] = None,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     new Roll(edges.sparkSession, root, hubLimit).start(edges, checkpointDir,
-      trigger, maintenance)(foldBatch(_, root, _, majorEvery, hubLimit)) {
-      (p, batch) => p.tombstones.foreach(ts => compactMajor(batch.sparkSession,
-        root, ts(), p.threshold, hubLimit))
-    }
+      trigger, majorEvery, maintenance)(prepare)
 }

@@ -45,8 +45,8 @@ object LexTieredStream {
   // lazy unions), so each write runs at a measured width — the major
   // sized by standing+delta docs, so a grown corpus self-widens (and
   // re-enables AQE) instead of inheriting a delta-sized width
-  private[streaming] final class Roll(spark: SparkSession, root: String)
-      extends TieredRoll[Postings.Index, Tiered](spark, root, "lex") {
+  private[streaming] final class Roll(session: SparkSession, root: String)
+      extends TieredRoll[Postings.Index, Tiered](session, root, "lex") {
     protected val bootstraps = true
     override protected val strided = false
     protected val l0Params: Map[String, String] = Params + ("tier" -> "l0_postings")
@@ -117,5 +117,5 @@ object LexTieredStream {
             majorEvery: Int = 8,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     new Roll(docs.sparkSession, root).start(docs, checkpointDir, trigger,
-      None)(foldBatch(_, root, _, majorEvery))((_, _) => ())
+      majorEvery, None)(identity)
 }

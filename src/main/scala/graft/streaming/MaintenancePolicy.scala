@@ -2,15 +2,18 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
-/** Opt-in SCHEDULED maintenance for the tiered stream wrappers:
+/** Opt-in SCHEDULED maintenance for the tiered streams: each family's
   * `compactMajor` / `retrainMajorIfDrifted` exist as maintenance-window
-  * batch APIs; a policy wires their cadence into the stream's own
-  * `foreachBatch` loop — after every `everyMajors`-th data MAJOR the fold
-  * commits, the wrapper runs the family's tombstone compaction (when
-  * `tombstones` is set) and, for the model-carrying families
-  * (vector/PQ/IVFADC), the drift-gated retrain (when `retrainCorpus` is
-  * set) — so a long-lived ingest stream keeps its own index healthy
-  * without an external maintenance scheduler.
+  * batch APIs, and a policy wires their cadence into the stream's own
+  * `foreachBatch` loop. [[TieredRoll.start]] runs it, once for every
+  * family: after every `everyMajors`-th data MAJOR the fold commits, the
+  * family's tombstone compaction (when `tombstones` is set) and then the
+  * drift-gated retrain (when `retrainCorpus` is set) — so a long-lived
+  * ingest stream keeps its own index healthy without an external
+  * maintenance scheduler. Only the model-carrying families
+  * (vector/PQ/IVFADC) retrain: `start` rejects a policy with
+  * `retrainCorpus` set on any other family, and the lexical tier takes no
+  * policy at all.
   *
   * SAFETY never rests on the cadence: maintenance commits land at
   * [[TierIds]] maintenance slots (strictly between data epochs — the

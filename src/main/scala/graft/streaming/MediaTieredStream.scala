@@ -37,8 +37,8 @@ object MediaTieredStream {
     * every budget ≤ 15, unlike the model-carrying families. */
   private val baseParams = Map("index_kind" -> "ahash_tiered")
 
-  private[streaming] final class Roll(spark: SparkSession, root: String)
-      extends TieredRoll[DataFrame, Tiered](spark, root, "media") {
+  private[streaming] final class Roll(session: SparkSession, root: String)
+      extends TieredRoll[DataFrame, Tiered](session, root, "media") {
     protected val bootstraps = false
     protected val l0Params: Map[String, String] = baseParams + ("tier" -> "l0_hashes")
     protected val l1Codec = IndexStore.stage
@@ -53,7 +53,30 @@ object MediaTieredStream {
                         n: => Long, epochId: Long, dir: String,
                         note: String): Unit =
       commit(view(t).hashes.unionByName(delta), dir, note)
+
+    /** One scan decides (total + dead counted together against the
+      * broadcast tombstone set); at the dead share `threshold` the
+      * survivors are anti-joined out ONCE. */
+    override protected def compactKernel(view: Tiered, tombstones: DataFrame,
+        tombId: String, threshold: Double): Option[DataFrame] = {
+      val dead = broadcast(tombstones.select(
+        col(tombId).cast("long").as("media_id")).distinct())
+      if (!TieredRoll.deadShareReached(view.hashes, dead, Seq("media_id"),
+          threshold)) None
+      else Some(view.hashes.join(dead, Seq("media_id"), "left_anti"))
+    }
   }
+
+  /** `(media_id, phash)` as longs, deduped within the batch; cross-batch
+    * ids are disjoint by the id contract. */
+  private def hashFrame(batchHashes: DataFrame): DataFrame =
+    batchHashes.select(col("media_id").cast("long").as("media_id"),
+      col("phash").cast("long").as("phash")).dropDuplicates("media_id")
+
+  /** A `(media_id, media)` blob batch as its hash frame: |Δ| decode +
+    * aHash ([[Multimodal.imageHashes]]; undecodable blobs are skipped). */
+  private def prepare(media: DataFrame): DataFrame =
+    hashFrame(Multimodal.imageHashes(media))
 
   /** The ≤-2-tier reader view: newest committed L1 (absent pre-first-
     * major) unioned with the live L0 deltas above it. Pure lazy parquet —
@@ -80,49 +103,36 @@ object MediaTieredStream {
     new Roll(spark, root).loadCurrent
 
   /** Fold ONE batch of `(media_id, media)` blobs: |Δ| decode + aHash,
-    * then [[foldHashes]]. Undecodable blobs are skipped (the
+    * then [[TieredRoll.fold]]. Undecodable blobs are skipped (the
     * [[Multimodal.imageHashes]] contract). */
   def foldBatch(batch: DataFrame, root: String, batchId: Long,
                 majorEvery: Int = 8): BatchOutcome =
-    foldHashes(Multimodal.imageHashes(batch), root, batchId, majorEvery)
+    new Roll(batch.sparkSession, root).fold(prepare(batch), batchId,
+      majorEvery)
 
   /** Fold an already-hashed `(media_id, phash)` batch — the stored-hash-
     * column ingest path — through [[TieredRoll.fold]]. */
   def foldHashes(batchHashes: DataFrame, root: String, batchId: Long,
                  majorEvery: Int = 8): BatchOutcome =
-    new Roll(batchHashes.sparkSession, root).fold(
-      batchHashes.select(col("media_id").cast("long").as("media_id"),
-          col("phash").cast("long").as("phash"))
-        .dropDuplicates("media_id"), // within-batch; cross-batch ids disjoint
+    new Roll(batchHashes.sparkSession, root).fold(hashFrame(batchHashes),
       batchId, majorEvery)
 
   /** Maintenance-window PHYSICAL tombstone compaction ([[TieredRoll.compact]])
-    * on a model-free hash frame: one scan decides (total + dead counted
-    * together against the broadcast tombstone set), and at the dead share
-    * `threshold` the survivors are anti-joined out ONCE. `None` below
-    * threshold, when no dead id is stored, AND on a minors-only root (the
-    * dead ids fall out at the first major's merge instead). */
+    * on a model-free hash frame. `None` below threshold, when no dead id
+    * is stored, AND on a minors-only root (the dead ids fall out at the
+    * first major's merge instead). */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
                    threshold: Double = 0.0): Option[Long] =
-    new Roll(spark, root).compact { view =>
-      val dead = broadcast(tombstones.select(
-        col(tombId).cast("long").as("media_id")).distinct())
-      if (!TieredRoll.deadShareReached(view.hashes, dead, Seq("media_id"),
-          threshold)) None
-      else Some(view.hashes.join(dead, Seq("media_id"), "left_anti"))
-    }
+    new Roll(spark, root).compact(tombstones, tombId, threshold)
 
   /** Start the tiered roll: `media` (a streaming `(media_id, media)`
-    * frame) → per-batch [[foldBatch]], with optional scheduled compaction
-    * ([[MaintenancePolicy]]). */
+    * frame) → per-batch [[foldBatch]]'s decode, hash and fold, with
+    * optional scheduled compaction ([[TieredRoll.start]]). */
   def start(media: DataFrame, root: String, checkpointDir: String,
             majorEvery: Int = 8,
             maintenance: Option[MaintenancePolicy] = None,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     new Roll(media.sparkSession, root).start(media, checkpointDir, trigger,
-      maintenance)(foldBatch(_, root, _, majorEvery)) { (p, batch) =>
-      p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root, ts(),
-        p.tombId, p.threshold))
-    }
+      majorEvery, maintenance)(prepare)
 }

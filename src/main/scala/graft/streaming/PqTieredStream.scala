@@ -4,22 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Checkpoints, IndexStore, Similarity}
+import graft.operators.{IndexStore, Similarity}
 
 /** TIERED (L0/L1) epoch commits for the PQ family on the shared
-  * [[TieredRoll]]: a batch commits only its DELTA codes, never an
-  * O(|corpus codes|) rewrite.
-  *
-  *  - **Bootstrap**: the first non-empty batch trains the per-subspace
-  *    codebooks ([[Similarity.pqBuild]]) and commits the first L1 —
-  *    minors need standing codebooks to encode against.
-  *  - **L0 (minor)**: the batch encoded under the STANDING codebooks
-  *    ([[Similarity.pqEncodeWith]] — the one shared encode kernel,
-  *    map-only); only the m·k codebook model is loaded
-  *    ([[IndexStore.Reader.codebooks]]), no persistent handles.
-  *  - **L1 (major)**: the standing codes unioned with the live deltas and
-  *    the batch — SAME codebooks, encoding under a fixed quantizer
-  *    commutes, zero re-encode work.
+  * [[QuantizerRoll]]: a batch commits only its DELTA codes, never an
+  * O(|corpus codes|) rewrite. The model is the per-subspace codebooks: the
+  * bootstrap trains them ([[Similarity.pqBuild]]), and minors and majors
+  * encode under the standing m·k codebooks ([[Similarity.pqEncodeWith]] —
+  * the one shared encode kernel, map-only).
   *
   * Readers ([[loadCurrent]] → [[Tiered]]) get an ordinary
   * [[Similarity.PqIndex]] — ADC probes and drift audits work on the
@@ -31,58 +23,40 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   * source corpus. Parameter-keyed epochs (`roll_dim/m/k/iters/train_sample`). */
 object PqTieredStream {
 
-  private[streaming] final class Roll(spark: SparkSession, root: String,
+  /** The codebooks and their subspace width. */
+  private[streaming] type Model = (Array[Array[Array[Double]]], Int)
+
+  private[streaming] final class Roll(session: SparkSession, root: String,
       dim: Int, m: Int, k: Int, iters: Int, trainSample: Int,
       idCol: String = "", vecCol: String = "")
-      extends TieredRoll[Similarity.PqIndex, Tiered](spark, root, "pq") {
+      extends QuantizerRoll[Similarity.PqIndex, Model](session, root, "pq") {
     protected val l1Codec = IndexStore.pq
     protected val l1Params = Map("roll_dim" -> dim.toString, "roll_m" -> m.toString,
       "roll_k" -> k.toString, "roll_iters" -> iters.toString,
       "roll_train_sample" -> trainSample.toString)
-    protected val bootstraps = true
     protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_codes")
-    protected def releaseView(v: Tiered): Unit = v.release()
 
-    protected def view(t: TieredRoll.Tiers[Similarity.PqIndex]): Tiered = {
-      val l1 = t.l1.get
-      Tiered(t.epochId,
-        l1.copy(encoded = t.l0Frames.foldLeft(l1.encoded)(_ unionByName _)),
-        t.liveL0, l1.release)
-    }
+    override protected def train(corpus: DataFrame): Similarity.PqIndex =
+      Similarity.pqBuild(corpus, idCol, vecCol, dim, m, k, iters, trainSample)
+    protected def readModel(r: IndexStore.Reader): Model =
+      (r.codebooks, r.int("sub_dim"))
+    protected def model(i: Similarity.PqIndex): Model = (i.codebooks, i.subDim)
+    protected def encode(model: Model, batch: DataFrame): DataFrame =
+      Similarity.pqEncodeWith(model._1, model._2, batch, idCol, vecCol)
+    protected def coded(i: Similarity.PqIndex) = i.encoded
+    protected def withCoded(i: Similarity.PqIndex, coded: DataFrame,
+                            release: () => Unit) =
+      i.copy(encoded = coded, release = release)
 
-    // per-subspace k-means aggregates are sample-sized: the build runs
-    // under the measured width (minors/majors encode map-side)
-    override protected def bootstrap(delta: DataFrame, n: => Long, dir: String,
-                                     note: String): Unit =
-      commit(Similarity.pqBuild(Checkpoints.sized(delta, n),
-        idCol, vecCol, dim, m, k, iters, trainSample), dir, note)
-
-    protected def minor(delta: DataFrame, n: => Long, epochId: Long,
-                        standing: Option[Long])(save: DataFrame => Unit): Unit = {
-      val (codebooks, subDim) =
-        standingModel(standing)(r => (r.codebooks, r.int("sub_dim")))
-      save(Similarity.pqEncodeWith(codebooks, subDim, delta, idCol, vecCol))
-    }
-
-    protected def major(t: TieredRoll.Tiers[Similarity.PqIndex],
-                        delta: DataFrame, n: => Long, epochId: Long,
-                        dir: String, note: String): Unit = {
-      val idx = view(t).index
-      commit(idx.copy(encoded = idx.encoded.unionByName(Similarity.pqEncodeWith(
-        idx.codebooks, idx.subDim, delta, idCol, vecCol)), release = () => ()),
-        dir, note)
-    }
+    override protected def drifted(v: Tiered, recent: DataFrame): Long =
+      Similarity.pqDriftAudit(v.index, recent, idCol, vecCol)
+        .filter(col("drifted")).count()
   }
 
-  /** The ≤-2-tier reader view: `index` is an ordinary
+  /** The ≤-2-tier reader view ([[QuantizedView]]): `index` is an ordinary
     * [[Similarity.PqIndex]] whose encoded frame is the newest committed
-    * L1's plus the live L0 deltas above it (lazy union — the deltas are
-    * zero-job stage reads). `release()` frees the L1 handle. */
-  final case class Tiered(
-      epochId: Long,
-      index: Similarity.PqIndex,
-      liveL0s: Seq[Long],
-      release: () => Unit)
+    * L1's plus the live L0 deltas above it. */
+  type Tiered = QuantizedView[Similarity.PqIndex]
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the codes are probed. */
@@ -106,15 +80,15 @@ object PqTieredStream {
     * the tombstoned ids dropped from the merged codes
     * ([[Similarity.pqCompact]] — codebooks untouched). `None` below
     * `threshold` (dead share of stored codes) or when no dead id is
-    * stored. */
+    * stored. `dim` is required: epochs are keyed by it, and a root of
+    * another dim has no L1 to compact. */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
-                   threshold: Double = 0.0, dim: Int = 64,
+                   threshold: Double = 0.0, dim: Int,
                    m: Int = 4, k: Int = 8, iters: Int = 4,
                    trainSample: Int = 10000): Option[Long] =
-    new Roll(spark, root, dim, m, k, iters, trainSample).compact(v =>
-      Similarity.pqCompact(v.index.copy(release = () => ()), tombstones,
-        tombId, threshold))
+    new Roll(spark, root, dim, m, k, iters, trainSample)
+      .compact(tombstones, tombId, threshold)
 
   /** Maintenance-window MODEL RETRAIN ([[TieredRoll.retrainIfDrifted]]):
     * fresh codebooks over the caller-supplied retained corpus
@@ -128,28 +102,19 @@ object PqTieredStream {
                             maxDriftedCodes: Int, dim: Int,
                             m: Int = 4, k: Int = 8, iters: Int = 4,
                             trainSample: Int = 10000): Option[Long] =
-    new Roll(corpus.sparkSession, root, dim, m, k, iters, trainSample)
-      .retrainIfDrifted(maxDriftedCodes)(v => Similarity.pqDriftAudit(v.index,
-        recent, idCol, vecCol).filter(col("drifted")).count())(
-        Similarity.pqBuild(corpus, idCol, vecCol, dim, m, k, iters,
-          trainSample))
+    new Roll(corpus.sparkSession, root, dim, m, k, iters, trainSample, idCol,
+      vecCol).retrainIfDrifted(corpus, recent, maxDriftedCodes)
 
   /** Start the tiered roll: `vectors` (a streaming frame with
-    * `idCol`/`vecCol`) → per-batch [[foldBatch]], with optional scheduled
-    * maintenance ([[MaintenancePolicy]]). */
+    * `idCol`/`vecCol`) → per-batch [[TieredRoll.fold]], with optional
+    * scheduled maintenance ([[TieredRoll.start]]). */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             root: String, checkpointDir: String, dim: Int,
             m: Int = 4, k: Int = 8, iters: Int = 4,
             trainSample: Int = 10000, majorEvery: Int = 8,
             maintenance: Option[MaintenancePolicy] = None,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    new Roll(vectors.sparkSession, root, dim, m, k, iters, trainSample)
-      .start(vectors, checkpointDir, trigger, maintenance)(
-        foldBatch(_, idCol, vecCol, root, _, dim, m, k, iters, trainSample,
-          majorEvery)) { (p, batch) =>
-        p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root,
-          ts(), p.tombId, p.threshold, dim, m, k, iters, trainSample))
-        p.retrainCorpus.foreach(c => retrainMajorIfDrifted(c(), batch, idCol,
-          vecCol, root, p.maxDrifted, dim, m, k, iters, trainSample))
-      }
+    new Roll(vectors.sparkSession, root, dim, m, k, iters, trainSample, idCol,
+      vecCol).start(vectors, checkpointDir, trigger, majorEvery,
+      maintenance)(identity)
 }

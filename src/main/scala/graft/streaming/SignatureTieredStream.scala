@@ -38,9 +38,9 @@ import graft.operators.{Checkpoints, Dedup, IndexStore}
   * repeat across batches — cross-tier merge is a disjoint union. */
 object SignatureTieredStream {
 
-  private[streaming] final class Roll(spark: SparkSession, root: String,
+  private[streaming] final class Roll(session: SparkSession, root: String,
                                       k: Int, bands: Int, shingleWidth: Int)
-      extends TieredRoll[Dedup.SignatureIndex, Tiered](spark, root, "signature") {
+      extends TieredRoll[Dedup.SignatureIndex, Tiered](session, root, "signature") {
     protected val l1Codec = IndexStore.signature
     // the signature meta records these natively; the save records them once
     protected val l1Params = Map("k" -> k.toString, "bands" -> bands.toString,
@@ -75,6 +75,22 @@ object SignatureTieredStream {
         standingRows + n)
       commit(Dedup.SignatureIndex(k, bands, shingleWidth, sigs,
         Dedup.bucketsFromSigs(sigs, k, bands), () => ()), dir, note)
+    }
+
+    // survivors anti-joined out of the merged sigs ONCE, buckets
+    // re-aggregated over survivors only: a dead id inside a committed
+    // bucket's member array cannot be dropped in place
+    override protected def compactKernel(view: Tiered, tombstones: DataFrame,
+        tombId: String, threshold: Double): Option[Dedup.SignatureIndex] = {
+      val dead = broadcast(tombstones.select(
+        col(tombId).cast("long").as("id")).distinct())
+      if (!TieredRoll.deadShareReached(view.sigs, dead, Seq("id"), threshold))
+        None
+      else {
+        val survivors = view.sigs.join(dead, Seq("id"), "left_anti")
+        Some(Dedup.SignatureIndex(k, bands, shingleWidth, survivors,
+          Dedup.bucketsFromSigs(survivors, k, bands), () => ()))
+      }
     }
   }
 
@@ -156,41 +172,27 @@ object SignatureTieredStream {
       .fold(sigs, batchId, majorEvery)
 
   /** Maintenance-window PHYSICAL tombstone compaction ([[TieredRoll.compact]]):
-    * survivors anti-joined out of the merged sigs ONCE, buckets
-    * re-aggregated over survivors only (a dead id inside a committed
-    * bucket's member array cannot be dropped in place — the bucket frame
-    * is rebuilt, same cost class as a data major). `None` below
-    * `threshold` (dead share of stored docs), when no dead id is stored,
-    * AND on a minors-only root (the dead ids fall out at the first major's
-    * re-aggregation instead). */
+    * dead ids dropped from the sigs AND the bucket member arrays (the
+    * bucket frame is rebuilt, same cost class as a data major). `None`
+    * below `threshold` (dead share of stored docs), when no dead id is
+    * stored, AND on a minors-only root (the dead ids fall out at the first
+    * major's re-aggregation instead). */
   def compactMajor(spark: SparkSession, root: String,
                    tombstones: DataFrame, tombId: String,
                    threshold: Double = 0.0, k: Int = 128, bands: Int = 32,
                    shingleWidth: Int = 3): Option[Long] =
-    new Roll(spark, root, k, bands, shingleWidth).compact { view =>
-      val dead = broadcast(tombstones.select(
-        col(tombId).cast("long").as("id")).distinct())
-      if (!TieredRoll.deadShareReached(view.sigs, dead, Seq("id"), threshold))
-        None
-      else {
-        val survivors = view.sigs.join(dead, Seq("id"), "left_anti")
-        Some(Dedup.SignatureIndex(k, bands, shingleWidth, survivors,
-          Dedup.bucketsFromSigs(survivors, k, bands), () => ()))
-      }
-    }
+    new Roll(spark, root, k, bands, shingleWidth)
+      .compact(tombstones, tombId, threshold)
 
   /** Start the tiered roll: `docs` (a streaming `(id, text)` frame) →
-    * per-batch [[foldBatch]], with optional scheduled compaction
-    * ([[MaintenancePolicy]]). */
+    * per-batch [[foldBatch]]'s signature frame and fold, with optional
+    * scheduled compaction ([[TieredRoll.start]]). */
   def start(docs: DataFrame, idCol: String, textCol: String, root: String,
             checkpointDir: String, majorEvery: Int = 8, k: Int = 128,
             bands: Int = 32, shingleWidth: Int = 3,
             maintenance: Option[MaintenancePolicy] = None,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     new Roll(docs.sparkSession, root, k, bands, shingleWidth).start(docs,
-      checkpointDir, trigger, maintenance)(foldBatch(_, idCol, textCol, root,
-      _, majorEvery, k, bands, shingleWidth)) { (p, batch) =>
-      p.tombstones.foreach(ts => compactMajor(batch.sparkSession, root, ts(),
-        p.tombId, p.threshold, k, bands, shingleWidth))
-    }
+      checkpointDir, trigger, majorEvery, maintenance)(
+      Dedup.signatureFrame(_, idCol, textCol, k, shingleWidth))
 }

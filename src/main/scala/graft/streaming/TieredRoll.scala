@@ -7,8 +7,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.IndexStore
 
 /** The ONE tiered (L0/L1) epoch roll under the seven index families'
-  * `*TieredStream` façades (graph, vector, lexical, PQ, IVFADC, media,
+  * `*TieredStream` objects (graph, vector, lexical, PQ, IVFADC, media,
   * signature), and the only roll design: a batch commits only its DELTA.
+  * The tier contract lives here once: the crash matrix, retention, epoch
+  * ids, serving, the streaming wrapper and its scheduled maintenance; a
+  * family's roll supplies only its codec and kernels (the three quantizer
+  * families through one [[QuantizerRoll]]).
   *
   *  - **L0 (minor)**: the batch, encoded by the family, lands as its own
   *    committed stage epoch under `root/l0/epoch=<id>` — an O(|Δ|) write.
@@ -58,18 +62,28 @@ import graft.operators.IndexStore
   * epochs rather than a chain built under someone else's model. Single
   * writer; concurrent writers need an external lock.
   *
+  * MAINTENANCE: [[compact]] (the family's tombstone kernel), [[retrain]]
+  * and [[retrainIfDrifted]] (the model families' build and drift
+  * measure) commit through the major path, and [[start]] runs them on a
+  * [[MaintenancePolicy]]'s cadence, so no family wires a policy itself.
+  *
   * Every epoch is an [[IndexStore]] store: L0s through
   * [[IndexStore.stage]] under `l0Params`, L1s through the family's
   * `l1Codec` under `l1Params`, so the core does every marker peek, load,
   * save and release. A subclass supplies the rest of the family: the
   * reader view and its release, the minor's delta encode, the major's
-  * merge and the optional bootstrap build. One instance serves one
-  * (session, root, params) call. */
+  * merge, the optional bootstrap build and its maintenance kernels. One
+  * instance serves one (session, root, params) call. */
 private[streaming] abstract class TieredRoll[L1, T](
-    spark: SparkSession, root: String, family: String) {
+    private var session: SparkSession, root: String, family: String) {
 
   import BatchOutcome._
   import TieredRoll.Tiers
+
+  /** The session every read and write runs under: the constructor's, and
+    * in [[start]] each micro-batch's own (the stream's clone, whose conf
+    * the batch's plans were built under). */
+  protected final def spark: SparkSession = session
 
   // ---- the codec
 
@@ -99,6 +113,25 @@ private[streaming] abstract class TieredRoll[L1, T](
     * `dir`. The core releases the loaded L1 afterwards. */
   protected def major(t: Tiers[L1], delta: DataFrame, n: => Long, epochId: Long,
                       dir: String, note: String): Unit
+
+  // ---- the maintenance kernels
+
+  /** The survivor L1 of view `v` without the `tombstones` ids (column
+    * `tombId`); None below `threshold` (dead share of the stored rows) or
+    * when no dead id is stored. Lex takes no tombstones: its deletes ride
+    * tombstone rows inside data epochs. */
+  protected def compactKernel(v: T, tombstones: DataFrame, tombId: String,
+                              threshold: Double): Option[L1] =
+    throw new UnsupportedOperationException(s"$family tiers take no tombstones")
+  /** The L1 carries a trained model, which [[retrain]] rebuilds. */
+  protected def retrains: Boolean = false
+  /** The model cells of view `v` that the `recent` batch drifts. */
+  protected def drifted(v: T, recent: DataFrame): Long =
+    throw new UnsupportedOperationException(s"$family tiers carry no model")
+  /** A fresh L1 trained over `corpus`: the bootstrap's and the retrain's
+    * build. */
+  protected def train(corpus: DataFrame): L1 =
+    throw new UnsupportedOperationException(s"$family tiers carry no model")
 
   protected def commit(l1: L1, dir: String, note: String): Unit =
     try IndexStore.save(spark, l1Codec, l1, dir, note, l1Params)
@@ -282,60 +315,72 @@ private[streaming] abstract class TieredRoll[L1, T](
       EpochDirs.prune(spark, l0Root, l0Epochs.filter(_ > p).toSet + newId))
   }
 
-  /** Maintenance-window compaction through the major path: `kernel` sees
-    * the current view and returns the survivor L1 (None: below threshold
-    * or nothing dead — nothing committed), committed at the view's epoch +
-    * 1. The view is released whether the kernel returns or throws. None
-    * on a root without a standing L1 — compaction rewrites an L1. */
-  def compact(kernel: T => Option[L1]): Option[Long] =
+  /** Maintenance-window compaction through the major path: the family's
+    * [[compactKernel]] sees the current view and its survivor L1 (None:
+    * below threshold or nothing dead — nothing committed) commits at the
+    * view's epoch + 1. The view is released whether the kernel returns or
+    * throws. None on a root without a standing L1 — compaction rewrites an
+    * L1. */
+  def compact(tombstones: DataFrame, tombId: String,
+              threshold: Double): Option[Long] =
     l1Epochs.headOption.flatMap { prev =>
       val t = tiers(Some(prev), l0Epochs.filter(_ > prev).reverse,
         strict = true).get
       val newId = t.epochId + 1
       val committed =
-        try kernel(view(t)).map(commit(_, l1Dir(newId), s"compact after=$prev"))
+        try compactKernel(view(t), tombstones, tombId, threshold)
+          .map(commit(_, l1Dir(newId), s"compact after=$prev"))
         finally t.l1.foreach(l1Codec.release)
       committed.map { _ => pruneAfter(Some(prev), newId); newId }
     }
 
-  /** Maintenance-window model retrain: `build` trains over the caller's
-    * retained corpus and its L1 commits at the current epoch + 1 (atomic
+  /** Maintenance-window model retrain: [[train]] over the caller's
+    * retained corpus, its L1 committed at the current epoch + 1 (atomic
     * at the marker write). None before the first L1. */
-  def retrain(build: => L1): Option[Long] =
+  def retrain(corpus: DataFrame): Option[Long] =
     l1Epochs.headOption.map { prev =>
       val newId = (prev +: l0Epochs.filter(_ > prev)).max + 1
-      commit(build, l1Dir(newId), s"retrain after=${newId - 1}")
+      commit(train(corpus), l1Dir(newId), s"retrain after=${newId - 1}")
       pruneAfter(Some(prev), newId)
       newId
     }
 
-  /** [[retrain]] when `drifted`, measured on the current view, exceeds
-    * `maxDrifted`. */
-  def retrainIfDrifted(maxDrifted: Int)(drifted: T => Long)(
-      build: => L1): Option[Long] =
+  /** [[retrain]] when the [[drifted]] count of `recent` on the current
+    * view exceeds `maxDrifted`. */
+  def retrainIfDrifted(corpus: DataFrame, recent: DataFrame,
+                       maxDrifted: Int): Option[Long] =
     current.flatMap { t =>
-      val n = try drifted(view(t)) finally t.l1.foreach(l1Codec.release)
-      if (n > maxDrifted) retrain(build) else None
+      val n = try drifted(view(t), recent) finally t.l1.foreach(l1Codec.release)
+      if (n > maxDrifted) retrain(corpus) else None
     }
 
-  /** The streaming wrapper: `fold` per micro-batch (the roll's own fold
-    * logs each batch), and after every `everyMajors`-th data major the
-    * policy's `maintain`. The major count is per stream instance: a
-    * restart resets it and a replayed batch Skips without advancing it,
-    * which can only delay maintenance. */
+  /** The streaming wrapper: each micro-batch, normalized by the family's
+    * `prepare`, folds through this roll rebound to the batch's session
+    * (the roll's own fold logs each batch). After every `everyMajors`-th
+    * data major it runs the policy: [[compact]] over the current
+    * tombstones, then the drift-gated [[retrainIfDrifted]] with the batch
+    * that triggered the major as `recent`. The major count is per stream
+    * instance: a restart resets it and a replayed batch Skips without
+    * advancing it, which can only delay maintenance. A policy asking a
+    * model-free family to retrain is rejected before the stream starts. */
   def start(input: DataFrame, checkpointDir: String, trigger: Trigger,
-            maintenance: Option[MaintenancePolicy])(
-      fold: (DataFrame, Long) => BatchOutcome)(
-      maintain: (MaintenancePolicy, DataFrame) => Unit): StreamingQuery = {
+            majorEvery: Int, maintenance: Option[MaintenancePolicy])(
+      prepare: DataFrame => DataFrame): StreamingQuery = {
+    require(retrains || maintenance.forall(_.retrainCorpus.isEmpty),
+      s"$family tiers carry no model to retrain")
     var majorsSeen = 0L
     input.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        fold(batch, batchId) match {
+        session = batch.sparkSession
+        fold(prepare(batch), batchId, majorEvery) match {
           case Major(_) =>
             majorsSeen += 1
-            maintenance.filter(_.due(majorsSeen)).foreach(maintain(_, batch))
+            maintenance.filter(_.due(majorsSeen)).foreach { p =>
+              p.tombstones.foreach(ts => compact(ts(), p.tombId, p.threshold))
+              p.retrainCorpus.foreach(c => retrainIfDrifted(c(), batch, p.maxDrifted))
+            }
           case _ => ()
         }
         ()

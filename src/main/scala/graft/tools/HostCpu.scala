@@ -37,13 +37,6 @@ object HostCpu {
       case _ => -1.0
     }
 
-  /** Convenience: run `body`, return (result, stealPct of the window). */
-  def measuring[A](body: => A): (A, Double) = {
-    val b = snapshot()
-    val r = body
-    (r, stealPct(b, snapshot()))
-  }
-
   /** Direct CPU-throughput calibration: total iterations of a fixed
     * integer-mix loop across `threads` spinners in `ms` of wall time
     * (millions, rounded). This is the self-defense layer steal% cannot
@@ -53,10 +46,29 @@ object HostCpu {
     * Two boxes — or two moments on one box — with the same spin score
     * are comparable; a 76 s bench next to a 55 s bench with HALF the
     * spin score indicts the box, not the code. Deterministic work
-    * (xorshift mix), so scores are proportional to delivered cycles. */
+    * (xorshift mix), so scores are proportional to delivered cycles.
+    *
+    * The timed pass must run the loop at its top JIT tier — measure the
+    * box, not the JVM. One spinner warms it in 50 ms passes until a pass
+    * ends with the JIT idle (under 5 ms of compiles finished in it), at
+    * most 5 s. A fixed warm pass is not enough: in a JVM that has just
+    * started Spark, the loop's top-tier compile queues behind the
+    * start-up compiles, and meanwhile the spinners run the profiling
+    * tier, whose shared profile counters they contend on — a first score
+    * read 3 against ~250 for the next. */
   def spinScore(ms: Long = 200,
                 threads: Int = Runtime.getRuntime.availableProcessors()): Long = {
-    spinOnce(50, threads) // JIT/ramp-up warm pass — measure the box, not the JVM
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    def compiledMs: Long =
+      if (jit != null && jit.isCompilationTimeMonitoringSupported)
+        jit.getTotalCompilationTime
+      else 0L
+    @annotation.tailrec def warm(passes: Int, before: Long): Unit = {
+      spinOnce(50, 1)
+      val after = compiledMs
+      if (after - before >= 5 && passes < 100) warm(passes + 1, after)
+    }
+    warm(1, compiledMs)
     spinOnce(ms, threads)
   }
 

@@ -8,9 +8,9 @@ import graft.operators.{Adjacency, Checkpoints}
 /** [[GraphTieredStream]] — L0/L1 tiered epoch commits. Contracts: the
   * merged reader view converges bit-identically to the full build, minor
   * commits are delta-sized (the scale claim), point reads are
-  * query-proportional and tier-complete, the crash matrix of the flat
-  * roll is preserved per tier, and a reader survives one major
-  * compaction (the keepEpochs=2 grace, tier-shaped). */
+  * query-proportional and tier-complete, and tombstoned edges are
+  * excluded at read and dropped by compaction. The crash matrix and the
+  * reader grace are [[TieredRollFaultSpec]]'s. */
 class GraphTieredStreamSpec extends SparkSpec {
 
   import sqlImplicits._
@@ -63,85 +63,6 @@ class GraphTieredStreamSpec extends SparkSpec {
       val rows = spark.read.parquet(s"$root/l0/epoch=$id/data").count()
       assert(rows <= 3L, s"a minor commit must be delta-sized, got $rows rows")
     }
-  }
-
-  test("crash matrix: torn L0 and torn L1 replay identically; a committed " +
-       "batch replays as a no-op") {
-    val root = Files.createTempDirectory("gts2_idx").toString
-    GraphTieredStream.foldBatch(Seq((1L, 2L), (1L, 3L)).toDF("src", "dst"),
-      root, batchId = 0L, majorEvery = 3)
-
-    // torn L0: a dir without its meta marker must be invisible AND
-    // overwritten by its replay
-    val torn = new java.io.File(s"$root/l0/epoch=${ep(1)}")
-    assert(torn.mkdirs())
-    Files.write(torn.toPath.resolve("junk"), Array[Byte](1))
-    assert(new GraphTieredStream.Roll(spark, root,
-      Adjacency.DefaultHubLimit).l0Epochs === Seq(ep(0)), "torn L0 must be invisible")
-    GraphTieredStream.foldBatch(Seq((2L, 3L)).toDF("src", "dst"),
-      root, batchId = 1L, majorEvery = 3)
-    assert(new GraphTieredStream.Roll(spark, root,
-      Adjacency.DefaultHubLimit).l0Epochs.toSet === Set(ep(0), ep(1)))
-
-    // batch 2 is the major (3rd live delta). Simulate its crash mid-save:
-    // a torn L1 dir, then the replay compacts and overwrites it.
-    val tornL1 = new java.io.File(s"$root/l1/epoch=${ep(2)}")
-    assert(tornL1.mkdirs())
-    Files.write(tornL1.toPath.resolve("junk"), Array[Byte](1))
-    GraphTieredStream.foldBatch(Seq((3L, 4L)).toDF("src", "dst"),
-      root, batchId = 2L, majorEvery = 3)
-    assert(new GraphTieredStream.Roll(spark, root,
-      Adjacency.DefaultHubLimit).l1Epochs === Seq(ep(2)), "replayed major must commit")
-
-    // replay of the committed major: a pure no-op (mtimes unchanged)
-    def mtimes = new java.io.File(s"$root/l1/epoch=${ep(2)}").listFiles
-      .map(f => f.getName -> f.lastModified).toMap
-    val m0 = mtimes
-    Thread.sleep(1100)
-    GraphTieredStream.foldBatch(Seq((3L, 4L)).toDF("src", "dst"),
-      root, batchId = 2L, majorEvery = 3)
-    assert(mtimes === m0, "a committed batch must replay as a no-op")
-
-    val view = GraphTieredStream.loadCurrent(spark, root).getOrElse(fail("no view"))
-    try assert(edgeSet(view.mergedEdges) ===
-      Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)))
-    finally view.release()
-  }
-
-  test("a reader pinned before a major compaction survives it (one-major " +
-       "grace), and the streaming wrapper converges like foldBatch") {
-    val root = Files.createTempDirectory("gts3_idx").toString
-    val landing = Files.createTempDirectory("gts3_in").toString
-    val all = (0 until 8).map(i => (i / 2 + 1L, 100L + i))
-    all.grouped(1).zipWithIndex.foreach { case (chunk, i) =>
-      chunk.toDF("src", "dst").coalesce(1).write
-        .parquet(f"$landing/chunk$i%02d")
-    }
-    val q = GraphTieredStream.start(
-      spark.readStream.schema("src LONG, dst LONG")
-        .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*"),
-      root, Files.createTempDirectory("gts3_ck").toString, majorEvery = 3)
-    assert(q.awaitTermination(180000L), "stream must drain")
-
-    val view = GraphTieredStream.loadCurrent(spark, root).getOrElse(fail("no view"))
-    try assert(edgeSet(view.mergedEdges) === all.toSet)
-    finally view.release()
-
-    // pin a reader, then roll enough batches for ONE more major: the
-    // pinned generation's L0s sit above the previous L1, so they survive
-    val pinned = GraphTieredStream.loadCurrent(spark, root).getOrElse(fail())
-    val more = (0 until 3).map(i => (50L + i, 60L + i))
-    more.zipWithIndex.foreach { case ((s0, d0), i) =>
-      GraphTieredStream.foldBatch(Seq((s0, d0)).toDF("src", "dst"), root,
-        batchId = 100L + i, majorEvery = 3)
-    }
-    try assert(edgeSet(pinned.mergedEdges) === all.toSet,
-      "a one-major-old reader must still collect (grace window)")
-    finally pinned.release()
-
-    val fresh = GraphTieredStream.loadCurrent(spark, root).getOrElse(fail())
-    try assert(edgeSet(fresh.mergedEdges) === (all ++ more).toSet)
-    finally fresh.release()
   }
 
   test("edge retraction: exclusion reads equal a rebuild without the dead " +

@@ -10,9 +10,9 @@ import graft.operators.Similarity
 /** [[IvfPqTieredStream]] — L0/L1 tiered epoch commits for the IVFADC
   * index, the fifth (and last) family instance. Contracts: the merged
   * ≤2-tier reader view's routed codes are BIT-IDENTICAL to the flat
-  * build+append chain (same two models, same encode kernels), minor
-  * commits are delta-sized, and a reader pinned before a major survives
-  * it. The crash matrix is [[TieredRollFaultSpec]]'s. */
+  * build+append chain (same two models, same encode kernels), and minor
+  * commits are delta-sized. The crash matrix and the reader grace are
+  * [[TieredRollFaultSpec]]'s. */
 class IvfPqTieredStreamSpec extends SparkSpec {
 
   private def ep(i: Long): Long = TierIds.dataEpoch(i)
@@ -86,36 +86,6 @@ class IvfPqTieredStreamSpec extends SparkSpec {
         k = 3, nProbe = 2)
       assert(probed.count() > 0)
     } finally { view.release(); twin.release() }
-  }
-
-  test("a reader pinned before a major survives it (one-major grace), and " +
-       "the streaming wrapper converges like foldBatch") {
-    val root = Files.createTempDirectory("ipts3_idx").toString
-    val landing = Files.createTempDirectory("ipts3_in").toString
-    val batches = (0 until 5).map(i => vecs(i * 100 + 1 to i * 100 + 10))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      b.coalesce(1).write.parquet(f"$landing/chunk$i%02d")
-    }
-    val q = IvfPqTieredStream.start(
-      spark.readStream.schema(batches.head.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*"),
-      "vec_id", "emb", root, Files.createTempDirectory("ipts3_ck").toString,
-      dim = DIM, nCells = CELLS, m = M, k = K, coarseIters = ITERS,
-      pqIters = ITERS, trainSample = TRAIN, majorEvery = 3)
-    assert(q.awaitTermination(180000L), "stream must drain")
-
-    val allIds = batches.flatMap(_.collect().map(_.getLong(0))).toSet
-    val pinned = load(root).getOrElse(fail("no view"))
-    val more = (0 until 2).map(i => vecs(900 + i * 10 + 1 to 900 + i * 10 + 10))
-    more.zipWithIndex.foreach { case (b, i) => fold(b, root, 100L + i) }
-    try assert(codes(pinned.index).map(_._1) === allIds,
-      "a one-major-old reader must still collect (grace window)")
-    finally pinned.release()
-
-    val fresh = load(root).getOrElse(fail("no fresh view"))
-    try assert(codes(fresh.index).map(_._1) ===
-      allIds ++ more.flatMap(_.collect().map(_.getLong(0))))
-    finally fresh.release()
   }
 
   test("compactMajor: dead codes physically dropped into a NEW L1 " +

@@ -15,7 +15,9 @@ import graft.operators.ImageCodec
   * maintenance slot; and a FULL STREAM REPLAY (fresh checkpoint, same
   * landing files, same root) is a no-op — every fold Skips on its
   * committed marker, the in-memory major count never advances, so no
-  * maintenance re-fires and the standing view is bit-unchanged. */
+  * maintenance re-fires and the standing view is bit-unchanged. A retrain
+  * request on a family without a model is rejected before the stream
+  * starts. */
 class MaintenanceStreamSpec extends SparkSpec {
 
   import sqlImplicits._
@@ -138,6 +140,29 @@ class MaintenanceStreamSpec extends SparkSpec {
     assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).currentEpochId
       === Some(ep(2) + 1))
     assert(stored() === (ids.toSet -- deadIds))
+  }
+
+  test("graph, media, signature: a policy asking a model-free family to " +
+       "retrain is rejected before its stream starts") {
+    val policy = Some(MaintenancePolicy(
+      retrainCorpus = Some(() => Seq(1L).toDF("id"))))
+    val empty = Files.createTempDirectory("msr_in").toString
+    def in(schema: String) = spark.readStream.schema(schema).parquet(empty)
+    val starts = Seq[(String, String) => Any](
+      GraphTieredStream.start(in("src LONG, dst LONG"), _, _,
+        maintenance = policy),
+      MediaTieredStream.start(in("media_id LONG, media BINARY"), _, _,
+        maintenance = policy),
+      SignatureTieredStream.start(in("doc_id LONG, text STRING"), "doc_id",
+        "text", _, _, maintenance = policy))
+    starts.foreach { start =>
+      val root = Files.createTempDirectory("msr_idx").toString
+      val e = intercept[IllegalArgumentException](start(root,
+        Files.createTempDirectory("msr_ck").toString))
+      assert(e.getMessage.contains("carry no model to retrain"))
+      assert(new java.io.File(root).list().isEmpty, "nothing may be written")
+    }
+    assert(spark.streams.active.isEmpty, "no stream may start")
   }
 
   private def fvecs(ids: Range): DataFrame =

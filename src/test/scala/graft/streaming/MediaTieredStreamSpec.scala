@@ -12,9 +12,9 @@ import graft.operators.Multimodal
   * index. Contracts: the merged ≤2-tier view's pair set is IDENTICAL to
   * the flat rebuild over the same rows (banding completeness survives
   * tiering), minor commits are delta-sized, per-batch new pairs obey the
-  * m06 fold identity, the crash matrix holds per tier, a reader pinned
-  * before a major survives it, and compactMajor physically drops dead
-  * ids into a new L1 generation. */
+  * m06 fold identity, `start` decodes and hashes image blobs, and
+  * compactMajor physically drops dead ids into a new L1 generation. The
+  * crash matrix and the reader grace are [[TieredRollFaultSpec]]'s. */
 class MediaTieredStreamSpec extends SparkSpec {
 
   private def ep(i: Long): Long = TierIds.dataEpoch(i)
@@ -92,53 +92,9 @@ class MediaTieredStreamSpec extends SparkSpec {
     assert(standingPairs ++ newPairs === fullPairs)
   }
 
-  test("crash matrix: a torn L0 replays in place; committed batches skip; " +
-       "empty batches commit nothing") {
-    val root = Files.createTempDirectory("mts3_idx").toString
-    assert(MediaTieredStream.foldHashes(hashes(0 until 30), root, 0L)
-      === BatchOutcome.Minor)
-    // torn L0: data written, no marker → invisible to listing, replay
-    // overwrites in place
-    hashes(30 until 50).write.mode("overwrite")
-      .parquet(s"$root/l0/epoch=${ep(1)}/data")
-    assert(new MediaTieredStream.Roll(spark, root).l0Epochs === Seq(ep(0)))
-    assert(MediaTieredStream.foldHashes(hashes(30 until 50), root, 1L)
-      === BatchOutcome.Minor)
-    assert(new MediaTieredStream.Roll(spark, root).l0Epochs === Seq(ep(1), ep(0)))
-    // committed replay: a no-op skip, content unchanged
-    assert(MediaTieredStream.foldHashes(hashes(30 until 50), root, 1L)
-      === BatchOutcome.Skipped)
-    // empty batch: no content-free epochs
-    assert(MediaTieredStream.foldHashes(hashes(0 until 0), root, 2L)
-      === BatchOutcome.EmptyBatch)
-    assert(new MediaTieredStream.Roll(spark, root).l0Epochs === Seq(ep(1), ep(0)))
-    val view = MediaTieredStream.loadCurrent(spark, root)
-      .getOrElse(fail("no view"))
-    assert(hashSet(view.hashes) === hashSet(hashes(0 until 50)))
-  }
-
-  test("a reader pinned before a major survives it (one-major grace), " +
-       "and the streaming wrapper converges like foldHashes") {
+  test("the streaming wrapper over PNG blobs serves the hashes " +
+       "imageHashes computes") {
     import sqlImplicits._
-    val root = Files.createTempDirectory("mts4_idx").toString
-    (0 until 3).foreach { i =>
-      MediaTieredStream.foldHashes(hashes(i * 20 until (i + 1) * 20), root,
-        i.toLong, majorEvery = 3)
-    }
-    // pinned at the generation the major @2 produced + L0s above it: none
-    val pinned = MediaTieredStream.loadCurrent(spark, root)
-      .getOrElse(fail("no view"))
-    assert(pinned.epochId === ep(2))
-    (3 until 6).foreach { i =>
-      MediaTieredStream.foldHashes(hashes(i * 20 until (i + 1) * 20), root,
-        i.toLong, majorEvery = 3)
-    }
-    // the major @5 pruned L1 generations to {5, 2} — the pinned reader's
-    // epoch is the graced generation and must still answer
-    assert(new MediaTieredStream.Roll(spark, root).l1Epochs === Seq(ep(5), ep(2)))
-    assert(hashSet(pinned.hashes) === hashSet(hashes(0 until 60)))
-
-    // streaming wrapper over blobs: the m01-style PNG path, 2 batches
     val imgs = (0 until 8).map { i =>
       val im = new java.awt.image.BufferedImage(16, 16,
         java.awt.image.BufferedImage.TYPE_INT_RGB)

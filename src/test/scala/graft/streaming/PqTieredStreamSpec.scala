@@ -10,8 +10,8 @@ import graft.operators.Similarity
 /** [[PqTieredStream]] — L0/L1 tiered epoch commits for the PQ index.
   * Contracts: the merged ≤2-tier reader view's codes are BIT-IDENTICAL
   * to the flat build+append chain (same codebooks, same encode kernel),
-  * minor commits are delta-sized, and a reader pinned before a major
-  * survives it. The crash matrix is [[TieredRollFaultSpec]]'s. */
+  * and minor commits are delta-sized. The crash matrix and the reader
+  * grace are [[TieredRollFaultSpec]]'s. */
 class PqTieredStreamSpec extends SparkSpec {
 
   private def ep(i: Long): Long = TierIds.dataEpoch(i)
@@ -71,40 +71,6 @@ class PqTieredStreamSpec extends SparkSpec {
         twin.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
       assert(codes(view.index) === codes(twin))
     } finally { view.release(); twin.release() }
-  }
-
-  test("a reader pinned before a major survives it (one-major grace), and " +
-       "the streaming wrapper converges like foldBatch") {
-    val root = Files.createTempDirectory("pts3_idx").toString
-    val landing = Files.createTempDirectory("pts3_in").toString
-    val batches = (0 until 5).map(i => vecs(i * 100 + 1 to i * 100 + 10))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      b.coalesce(1).write.parquet(f"$landing/chunk$i%02d")
-    }
-    val q = PqTieredStream.start(
-      spark.readStream.schema(batches.head.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*"),
-      "vec_id", "emb", root, Files.createTempDirectory("pts3_ck").toString,
-      dim = DIM, m = M, k = K, iters = ITERS, trainSample = TRAIN,
-      majorEvery = 3)
-    assert(q.awaitTermination(180000L), "stream must drain")
-
-    val allIds = batches.flatMap(_.collect().map(_.getLong(0))).toSet
-    val pinned = PqTieredStream.loadCurrent(spark, root, DIM, M, K, ITERS,
-      TRAIN).getOrElse(fail("no view"))
-    val more = (0 until 2).map(i => vecs(900 + i * 10 + 1 to 900 + i * 10 + 10))
-    more.zipWithIndex.foreach { case (b, i) =>
-      fold(b, root, 100L + i)
-    }
-    try assert(codes(pinned.index).map(_._1) === allIds,
-      "a one-major-old reader must still collect (grace window)")
-    finally pinned.release()
-
-    val fresh = PqTieredStream.loadCurrent(spark, root, DIM, M, K, ITERS,
-      TRAIN).getOrElse(fail("no fresh view"))
-    try assert(codes(fresh.index).map(_._1) ===
-      allIds ++ more.flatMap(_.collect().map(_.getLong(0))))
-    finally fresh.release()
   }
 
   test("compactMajor: dead codes dropped into a new L1 generation; " +

@@ -12,9 +12,9 @@ import graft.operators.Dedup
   * [[Dedup.SignatureIndex]]. Contracts: the merged view reproduces the
   * flat build exactly (sigs AND buckets), the tiered cross-tier probe
   * obeys the m06/d06 fold identity against the flat exact-pairs kernel,
-  * minors are delta-sized, the crash matrix holds per tier, a pinned
-  * reader survives one major, and compactMajor physically drops dead ids
-  * from sigs AND bucket member arrays. */
+  * minors are delta-sized, and compactMajor physically drops dead ids
+  * from sigs AND bucket member arrays. The crash matrix and the reader
+  * grace are [[TieredRollFaultSpec]]'s. */
 class SignatureTieredStreamSpec extends SparkSpec {
 
   private def ep(i: Long): Long = TierIds.dataEpoch(i)
@@ -111,51 +111,6 @@ class SignatureTieredStreamSpec extends SparkSpec {
     assert(newPairs.contains((80L, 82L)))
     assert(standingPairs.intersect(newPairs) === Set.empty)
     assert(standingPairs ++ newPairs === fullPairs)
-  }
-
-  test("crash matrix: torn L0 replays in place; committed batches skip; " +
-       "empty batches commit nothing") {
-    val root = Files.createTempDirectory("sts3_idx").toString
-    assert(fold(0 until 20, root, 0L) === BatchOutcome.Minor)
-    // torn L0: data without a marker is invisible and replayable
-    Dedup.signatureFrame(docsOf(20 until 40), "doc_id", "text", K, SW)
-      .write.mode("overwrite").parquet(s"$root/l0/epoch=${ep(1)}/data")
-    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l0Epochs
-      === Seq(ep(0)))
-    assert(fold(20 until 40, root, 1L) === BatchOutcome.Minor)
-    assert(fold(20 until 40, root, 1L) === BatchOutcome.Skipped)
-    assert(fold(0 until 0, root, 2L) === BatchOutcome.EmptyBatch)
-    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l0Epochs
-      === Seq(ep(1), ep(0)))
-    val view = load(root).getOrElse(fail("no view"))
-    try assert(sigIds(view.sigs) === (0L until 40L).toSet)
-    finally view.release()
-  }
-
-  test("a reader pinned before a major survives it, and the streaming " +
-       "wrapper converges like foldBatch") {
-    import sqlImplicits._
-    val root = Files.createTempDirectory("sts4_idx").toString
-    (0 until 3).foreach(i => fold(i * 20 until (i + 1) * 20, root, i.toLong))
-    val pinned = load(root).getOrElse(fail("no view"))
-    assert(pinned.epochId === ep(2))
-    (3 until 6).foreach(i => fold(i * 20 until (i + 1) * 20, root, i.toLong))
-    assert(new SignatureTieredStream.Roll(spark, root, K, BANDS, SW).l1Epochs
-      === Seq(ep(5), ep(2)))
-    try assert(sigIds(pinned.sigs) === (0L until 60L).toSet)
-    finally pinned.release()
-
-    val srcDir = Files.createTempDirectory("sts4_src").toString
-    docsOf(0 until 30).write.mode("overwrite").parquet(srcDir)
-    val streamRoot = Files.createTempDirectory("sts4_stream_idx").toString
-    val ckpt = Files.createTempDirectory("sts4_ckpt").toString
-    val q = SignatureTieredStream.start(
-      spark.readStream.schema("doc_id LONG, text STRING").parquet(srcDir),
-      "doc_id", "text", streamRoot, ckpt, majorEvery = 3, K, BANDS, SW)
-    q.processAllAvailable(); q.stop()
-    val streamed = load(streamRoot).getOrElse(fail("stream committed nothing"))
-    try assert(sigIds(streamed.sigs) === (0L until 30L).toSet)
-    finally streamed.release()
   }
 
   test("compactMajor: dead ids physically dropped from sigs AND bucket " +

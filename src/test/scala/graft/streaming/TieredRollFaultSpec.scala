@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, udf}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
 
@@ -26,7 +27,12 @@ import graft.SparkSpec
   *  - a reader pinned before a major survives that major;
   *  - a reader with other params sees no epochs;
   *  - a compaction whose tombstones throw mid-scan releases the view;
-  *  - (lex) an epoch whose meta fails its checksum sidecar reads as torn. */
+  *  - the family's `start` over the batches as chunked files serves the
+  *    same ids, from the same epochs, as folding them;
+  *  - (lex) an epoch whose meta fails its checksum sidecar reads as torn.
+  *
+  * A torn epoch dir holds real parquet data as well as junk: the marker,
+  * not the files, makes an epoch visible. */
 class TieredRollFaultSpec extends SparkSpec {
 
   import sqlImplicits._
@@ -45,7 +51,10 @@ class TieredRollFaultSpec extends SparkSpec {
       /** compactMajor over tombstone ids `tomb(col("id"))` of a 3-row range */
       val compact: Option[(String, Column => Column) => Option[Long]],
       /** a reader whose params map differs from the writer's */
-      val otherParams: String => TieredRoll[_, _]) {
+      val otherParams: String => TieredRoll[_, _],
+      /** the family's `start(stream, root, checkpointDir)` at majorEvery =
+        * 3, where it takes the batch shape */
+      val start: Option[(DataFrame, String, String) => StreamingQuery]) {
 
     def l0(root: String): Seq[Long] = roll(root).l0Epochs
     def l1(root: String): Seq[Long] = roll(root).l1Epochs
@@ -95,7 +104,9 @@ class TieredRollFaultSpec extends SparkSpec {
         new VectorTieredStream.Roll(spark, _, vCells, vTrain, vIters),
         Some((root, tomb) => VectorTieredStream.compactMajor(spark, root,
           tombOf("vec_id", tomb), "vec_id", 0.0, vCells, vTrain, vIters)),
-        new VectorTieredStream.Roll(spark, _, vCells, vTrain, vIters + 1)),
+        new VectorTieredStream.Roll(spark, _, vCells, vTrain, vIters + 1),
+        Some(VectorTieredStream.start(_, "vec_id", "emb", _, _, vCells,
+          vTrain, vIters, majorEvery = 3))),
       new Family("pq", strided = true, bootstraps = true,
         ids => vecs(ids, dim),
         (b, root, id) => PqTieredStream.foldBatch(b, "vec_id", "emb", root,
@@ -105,7 +116,9 @@ class TieredRollFaultSpec extends SparkSpec {
         new PqTieredStream.Roll(spark, _, dim, m, k, iters, train),
         Some((root, tomb) => PqTieredStream.compactMajor(spark, root,
           tombOf("vec_id", tomb), "vec_id", 0.0, dim, m, k, iters, train)),
-        new PqTieredStream.Roll(spark, _, dim, m, k, iters + 1, train)),
+        new PqTieredStream.Roll(spark, _, dim, m, k, iters + 1, train),
+        Some(PqTieredStream.start(_, "vec_id", "emb", _, _, dim, m, k, iters,
+          train, majorEvery = 3))),
       new Family("ivfpq", strided = true, bootstraps = true,
         ids => vecs(ids, dim),
         (b, root, id) => IvfPqTieredStream.foldBatch(b, "vec_id", "emb",
@@ -118,7 +131,9 @@ class TieredRollFaultSpec extends SparkSpec {
           tombOf("vec_id", tomb), "vec_id", 0.0, dim, cells, m, k, iters,
           iters, train)),
         new IvfPqTieredStream.Roll(spark, _, dim, cells, m, k, iters,
-          iters + 1, train)),
+          iters + 1, train),
+        Some(IvfPqTieredStream.start(_, "vec_id", "emb", _, _, dim, cells, m,
+          k, iters, iters, train, majorEvery = 3))),
       new Family("lex", strided = false, bootstraps = true,
         ids => ids.map(i => (i.toLong, s"w$i x")).toDF("doc_id", "text"),
         (b, root, id) => LexTieredStream.foldBatch(b, root, id, majorEvery = 3),
@@ -131,7 +146,8 @@ class TieredRollFaultSpec extends SparkSpec {
         root => {
           restamp(root, "tokenizer", "ws", "other")
           new LexTieredStream.Roll(spark, root)
-        }),
+        },
+        Some(LexTieredStream.start(_, _, _, majorEvery = 3))),
       new Family("graph", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong, i + 100000L)).toDF("src", "dst"),
         (b, root, id) => GraphTieredStream.foldBatch(b, root, id,
@@ -143,7 +159,8 @@ class TieredRollFaultSpec extends SparkSpec {
         Some((root, tomb) => GraphTieredStream.compactMajor(spark, root,
           spark.range(3).select(tomb(col("id")).as("src"),
             lit(1L).as("dst")))),
-        new GraphTieredStream.Roll(spark, _, hubLimit = 7L)),
+        new GraphTieredStream.Roll(spark, _, hubLimit = 7L),
+        Some(GraphTieredStream.start(_, _, _, majorEvery = 3))),
       new Family("media", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong, i * 0x9e3779b97f4a7c15L))
           .toDF("media_id", "phash"),
@@ -158,7 +175,9 @@ class TieredRollFaultSpec extends SparkSpec {
         root => {
           restamp(root, "index_kind", "ahash_tiered", "other")
           new MediaTieredStream.Roll(spark, root)
-        }),
+        },
+        // media's start takes image blobs, not hashes: MediaTieredStreamSpec
+        None),
       new Family("signature", strided = true, bootstraps = false,
         ids => ids.map(i => (i.toLong,
           (0 until 40).map(t => s"w${i}_$t").mkString(" ")))
@@ -170,7 +189,9 @@ class TieredRollFaultSpec extends SparkSpec {
         new SignatureTieredStream.Roll(spark, _, sigK, bands, sw),
         Some((root, tomb) => SignatureTieredStream.compactMajor(spark, root,
           tombOf("doc_id", tomb), "doc_id", 0.0, sigK, bands, sw)),
-        new SignatureTieredStream.Roll(spark, _, sigK, bands, sw + 1)))
+        new SignatureTieredStream.Roll(spark, _, sigK, bands, sw + 1),
+        Some(SignatureTieredStream.start(_, "doc_id", "text", _, _,
+          majorEvery = 3, sigK, bands, sw))))
   }
 
   /** Rewrite `key`'s recorded value in every epoch meta under `root`, as
@@ -196,6 +217,7 @@ class TieredRollFaultSpec extends SparkSpec {
     val dir = new File(s"$root/$tier/epoch=$epochId")
     assert(dir.mkdirs())
     Files.write(dir.toPath.resolve("junk"), Array[Byte](1))
+    spark.range(3).write.parquet(s"$dir/data")
   }
 
   private def epochDirs(root: String): Seq[String] =
@@ -333,6 +355,27 @@ class TieredRollFaultSpec extends SparkSpec {
         assert(f.l1(r) === l1Before, "a failed compaction commits nothing")
         assert(f.served(r) === allIds(f, 0 to f.majorAt + 1))
       }
+    }
+  }
+
+  for (f <- families; start <- f.start) {
+    test(s"${f.name}: start over chunked files serves the same ids as " +
+         "folding them") {
+      val batches = 0 to f.majorAt + 1 // a major, then a live L0
+      val landing = Files.createTempDirectory(s"trf_${f.name}_in").toString
+      batches.foreach(i => f.batch(f.ids(i)).coalesce(1).write
+        .parquet(f"$landing/chunk$i%02d"))
+      val streamed = Files.createTempDirectory(s"trf_${f.name}_start").toString
+      val q = start(spark.readStream.schema(f.batch(f.ids(0)).schema)
+          .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*"),
+        streamed, Files.createTempDirectory(s"trf_${f.name}_ck").toString)
+      assert(q.awaitTermination(180000L), "stream must drain")
+      val folded = Files.createTempDirectory(s"trf_${f.name}_fold").toString
+      f.foldAll(folded, batches)
+      assert(f.served(streamed) === allIds(f, batches))
+      assert(f.served(streamed) === f.served(folded))
+      assert((f.l1(streamed), f.l0(streamed)) === (f.l1(folded), f.l0(folded)),
+        "the stream must commit the epochs the folds commit")
     }
   }
 

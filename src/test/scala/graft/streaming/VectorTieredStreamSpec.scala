@@ -10,9 +10,8 @@ import graft.operators.Similarity
 /** [[VectorTieredStream]] — L0/L1 tiered epoch commits for the IVF
   * index. Contracts: the merged ≤2-tier reader view is BIT-IDENTICAL to
   * the flat build+append chain (same centroids, same assignment, same
-  * probe answers), minor commits are delta-sized (the scale claim), and a
-  * reader pinned before a major compaction survives it. The crash matrix
-  * is [[TieredRollFaultSpec]]'s. */
+  * probe answers), and minor commits are delta-sized (the scale claim).
+  * The crash matrix and the reader grace are [[TieredRollFaultSpec]]'s. */
 class VectorTieredStreamSpec extends SparkSpec {
 
   private def ep(i: Long): Long = TierIds.dataEpoch(i)
@@ -98,43 +97,6 @@ class VectorTieredStreamSpec extends SparkSpec {
         assert(assignedPairs(restarted.index) === assignedPairs(view.index))
       } finally restarted.release()
     } finally { view.release(); twin.release() }
-  }
-
-  test("a reader pinned before a major survives it (one-major grace), and " +
-       "the streaming wrapper converges like foldBatch") {
-    val root = Files.createTempDirectory("vts3_idx").toString
-    val landing = Files.createTempDirectory("vts3_in").toString
-    val batches = (0 until 5).map(i => vecs(i * 100 + 1 to i * 100 + 10))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      b.coalesce(1).write.parquet(f"$landing/chunk$i%02d")
-    }
-    val q = VectorTieredStream.start(
-      spark.readStream.schema(batches.head.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$landing/chunk*"),
-      "vec_id", "emb", root, Files.createTempDirectory("vts3_ck").toString,
-      N_CELLS, TRAIN, ITERS, majorEvery = 3)
-    assert(q.awaitTermination(180000L), "stream must drain")
-
-    val allIds = batches.flatMap(_.collect().map(_.getLong(0))).toSet
-    // pin a reader, then roll enough batches for one more major: the
-    // pinned generation's L1 survives (2 kept) and its L0s sit above the
-    // previous L1, so they survive the major's prune
-    val pinned = VectorTieredStream.loadCurrent(spark, root, N_CELLS,
-      TRAIN, ITERS).getOrElse(fail("no view"))
-    val more = (0 until 2).map(i => vecs(900 + i * 10 + 1 to 900 + i * 10 + 10))
-    more.zipWithIndex.foreach { case (b, i) =>
-      VectorTieredStream.foldBatch(b, "vec_id", "emb", root, 100L + i,
-        N_CELLS, TRAIN, ITERS, majorEvery = 3)
-    }
-    try assert(assignedPairs(pinned.index).map(_._1) === allIds,
-      "a one-major-old reader must still collect (grace window)")
-    finally pinned.release()
-
-    val fresh = VectorTieredStream.loadCurrent(spark, root, N_CELLS, TRAIN,
-      ITERS).getOrElse(fail("no fresh view"))
-    try assert(assignedPairs(fresh.index).map(_._1) ===
-      allIds ++ more.flatMap(_.collect().map(_.getLong(0))))
-    finally fresh.release()
   }
 
   test("compactMajor: dead rows dropped into a new L1 generation; " +
