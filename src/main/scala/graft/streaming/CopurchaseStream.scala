@@ -90,23 +90,10 @@ object CopurchaseStream {
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def childIds(spark: SparkSession, linesDir: String,
-                       prefix: String): Seq[Long] = {
-    val root = new Path(linesDir)
-    val fs = fsOf(spark, linesDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith(prefix))
-        scala.util.Try(n.stripPrefix(prefix).toLong).toOption
-      else None
-    }
-  }
-
   /** Newest COMMITTED segment id — commit marker is the `_SUCCESS` file
     * Spark's job committer writes last, so a torn compaction is invisible. */
   private def newestSegment(spark: SparkSession, linesDir: String): Option[Long] =
-    childIds(spark, linesDir, "segment=").filter { id =>
+    EpochDirs.rawIds(spark, linesDir, "segment=").filter { id =>
       fsOf(spark, linesDir).exists(
         new Path(s"$linesDir/segment=$id/_SUCCESS"))
     }.sorted(Ordering[Long].reverse).headOption
@@ -116,31 +103,37 @@ object CopurchaseStream {
   private def liveBatchIds(spark: SparkSession, linesDir: String,
                            excludeId: Long): Seq[Long] = {
     val floor = newestSegment(spark, linesDir).getOrElse(Long.MinValue)
-    childIds(spark, linesDir, "batch=")
+    EpochDirs.rawIds(spark, linesDir, "batch=")
       .filter(id => id > floor && id != excludeId)
   }
 
-  /** All standing lines of batches BEFORE (≠) `excludeId`: newest
-    * committed segment + live delta dirs. `touchedBuckets` (None = all)
-    * prunes the segment scan to the listed `ob` partitions. Empty-schema
-    * frame at bootstrap. */
-  private def standingLines(spark: SparkSession, linesDir: String,
-                            excludeId: Long,
-                            touchedBuckets: Option[Seq[Long]]): DataFrame = {
+  /** The lines of segment `seg` plus the delta dirs `ids`; an
+    * empty-schema frame when both are absent. `touchedBuckets` (None =
+    * all) prunes the segment scan to the listed `ob` partitions. */
+  private def linesOf(spark: SparkSession, linesDir: String, seg: Option[Long],
+                      ids: Seq[Long],
+                      touchedBuckets: Option[Seq[Long]] = None): DataFrame = {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LineSchema)
-    val seg = newestSegment(spark, linesDir).map { id =>
+    val segLines = seg.map { id =>
       val s = readSegment(spark, linesDir, id)
       touchedBuckets.fold(s)(bs => s.filter(col("ob").isin(bs: _*)))
         .select("o", "p")
     }.getOrElse(empty)
-    val dirs = liveBatchIds(spark, linesDir, excludeId)
-      .map(id => s"$linesDir/batch=$id")
     val deltas =
-      if (dirs.isEmpty) empty
-      else spark.read.schema(LineSchema).parquet(dirs: _*)
-    seg.unionByName(deltas)
+      if (ids.isEmpty) empty
+      else spark.read.schema(LineSchema).parquet(ids.map(id => s"$linesDir/batch=$id"): _*)
+    segLines.unionByName(deltas)
   }
+
+  /** All standing lines of batches BEFORE (≠) `excludeId`: newest
+    * committed segment + live delta dirs, the segment pruned to
+    * `touchedBuckets`. */
+  private def standingLines(spark: SparkSession, linesDir: String,
+                            excludeId: Long,
+                            touchedBuckets: Option[Seq[Long]]): DataFrame =
+    linesOf(spark, linesDir, newestSegment(spark, linesDir),
+      liveBatchIds(spark, linesDir, excludeId), touchedBuckets)
 
   /** Fold every committed delta dir strictly below `batchId` (plus the
     * previous segment) into one `segment=<maxFoldedId>` store,
@@ -156,27 +149,18 @@ object CopurchaseStream {
     val newSegId = ids.max
     // read EXACTLY the folded set (previous segment + the ids ≤ newSegId)
     // so the new segment's id is a true floor for its contents
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LineSchema)
-    val prevSeg = newestSegment(spark, linesDir).map(id =>
-      readSegment(spark, linesDir, id).select("o", "p"))
-      .getOrElse(empty)
-    val all = prevSeg.unionByName(
-      spark.read.schema(LineSchema)
-        .parquet(ids.map(id => s"$linesDir/batch=$id"): _*))
-    all.withColumn("ob", pmod(col("o"), lit(OrderBuckets.toLong)))
+    linesOf(spark, linesDir, newestSegment(spark, linesDir), ids)
+      .withColumn("ob", pmod(col("o"), lit(OrderBuckets.toLong)))
       .repartition(col("ob")) // ≤1 file per bucket, not #sources × buckets
       .write.mode("overwrite").partitionBy("ob")
       .parquet(s"$linesDir/segment=$newSegId")
     // GC folded sources + superseded/torn segments; pure garbage collection
     // (readers already ignore ids ≤ the newest committed segment)
     val fs = fsOf(spark, linesDir)
-    childIds(spark, linesDir, "batch=").filter(_ <= newSegId).foreach { id =>
-      fs.delete(new Path(s"$linesDir/batch=$id"), true); ()
-    }
-    childIds(spark, linesDir, "segment=").filter(_ != newSegId).foreach { id =>
-      fs.delete(new Path(s"$linesDir/segment=$id"), true); ()
-    }
+    for ((prefix, gone) <- Seq[(String, Long => Boolean)](
+           "batch=" -> (_ <= newSegId), "segment=" -> (_ != newSegId));
+         id <- EpochDirs.rawIds(spark, linesDir, prefix) if gone(id))
+      fs.delete(new Path(s"$linesDir/$prefix$id"), true)
   }
 
   /** The delta co-purchase edges one batch of ALREADY-NORMALIZED distinct

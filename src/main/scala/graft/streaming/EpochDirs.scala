@@ -44,21 +44,22 @@ private[graft] object TierIds {
   def ensureStrideLayout(spark: SparkSession, root: String): Unit = {
     val marker = new Path(root, LayoutMarker)
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    def stamp(overwrite: Boolean): Unit = {
+      val out = fs.create(marker, overwrite)
+      try out.write(LayoutStamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
     if (fs.exists(marker)) {
       val in = fs.open(marker)
       val content =
         try new String(in.readAllBytes,
           java.nio.charset.StandardCharsets.UTF_8).trim
         finally in.close()
-      if (content.isEmpty) {
-        // torn marker (crash mid-create): rewrite in place — the marker
-        // is stamped BEFORE the first epoch commit, so a torn one can
-        // only belong to this scheme
-        val out = fs.create(marker, true)
-        try out.write(LayoutStamp.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      } else require(content == LayoutStamp,
+      // torn marker (crash mid-create): rewrite in place — the marker is
+      // stamped BEFORE the first epoch commit, so a torn one can only
+      // belong to this scheme
+      if (content.isEmpty) stamp(overwrite = true)
+      else require(content == LayoutStamp,
         s"tier root $root carries layout '$content', this build expects " +
           s"'$LayoutStamp' — rebuild the root before folding into it")
     } else {
@@ -70,10 +71,7 @@ private[graft] object TierIds {
           "batchId epochs); folding into it under strided ids would " +
           "re-apply committed batches as duplicate epochs. Rebuild the " +
           "root (or serve it read-only) before upgrading.")
-      val out = fs.create(marker, false)
-      try out.write(LayoutStamp.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      stamp(overwrite = false)
     }
   }
 }
@@ -86,16 +84,17 @@ private[streaming] object EpochDirs {
 
   def dir(root: String, id: Long): String = s"$root/epoch=$id"
 
-  /** Every `epoch=<id>` child id, in no particular order, valid or torn.
-    * Listing only — no Spark jobs. */
-  def rawIds(spark: SparkSession, root: String): Seq[Long] = {
+  /** Every `<prefix><id>` child directory id (`epoch=<id>` by default),
+    * in no particular order, valid or torn. Listing only — no Spark jobs. */
+  def rawIds(spark: SparkSession, root: String,
+             prefix: String = "epoch="): Seq[Long] = {
     val p = new Path(root)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.flatMap { st =>
       val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("epoch="))
-        scala.util.Try(n.stripPrefix("epoch=").toLong).toOption
+      if (st.isDirectory && n.startsWith(prefix))
+        scala.util.Try(n.stripPrefix(prefix).toLong).toOption
       else None
     }
   }
@@ -104,17 +103,8 @@ private[streaming] object EpochDirs {
     * valid. An id ABOVE any kept id is left alone — a torn head must
     * survive retention so its replayed batch can overwrite it in place. */
   def prune(spark: SparkSession, root: String, keep: Set[Long]): Unit = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("epoch=")) {
-        val id = scala.util.Try(n.stripPrefix("epoch=").toLong).toOption
-        if (id.exists(i => !keep.contains(i) && keep.forall(i < _))) {
-          fs.delete(st.getPath, true); ()
-        }
-      }
-    }
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    rawIds(spark, root).filter(i => !keep.contains(i) && keep.forall(i < _))
+      .foreach { id => fs.delete(new Path(dir(root, id)), true); () }
   }
 }

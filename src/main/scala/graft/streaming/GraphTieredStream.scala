@@ -51,7 +51,7 @@ object GraphTieredStream {
     protected val l1Codec = IndexStore.graph
     protected val l1Params = Map("dedup" -> "true", "hub_limit" -> hubLimit.toString)
     protected val bootstraps = false
-    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_edges")
+    protected val l0Tier = "l0_edges"
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Adjacency.Hybrid]): Tiered = {

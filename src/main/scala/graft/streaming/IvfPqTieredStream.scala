@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{IndexStore, Similarity}
@@ -38,8 +37,7 @@ object IvfPqTieredStream {
       "roll_coarse_iters" -> coarseIters.toString,
       "roll_pq_iters" -> pqIters.toString,
       "roll_train_sample" -> trainSample.toString)
-    protected val l0Params: Map[String, String] =
-      l1Params + ("tier" -> "l0_ivfpq_codes")
+    protected val l0Tier = "l0_ivfpq_codes"
 
     override protected def train(corpus: DataFrame): Similarity.IvfPqIndex =
       Similarity.ivfPqBuild(corpus, idCol, vecCol, dim, nCells, m, k,
@@ -58,16 +56,15 @@ object IvfPqTieredStream {
 
     // the coarse-cell routing drift: the coded frame carries the cell
     // column (codes only, no raw vectors)
-    override protected def drifted(v: Tiered, recent: DataFrame): Long =
-      Similarity.driftAudit(Similarity.IvfIndex(v.index.centroids,
-        v.index.nCells, v.index.coded, () => ()), recent, idCol, vecCol)
-        .filter(col("drifted")).count()
+    protected def driftAudit(i: Similarity.IvfPqIndex, recent: DataFrame) =
+      Similarity.driftAudit(Similarity.IvfIndex(i.centroids, i.nCells,
+        i.coded, () => ()), recent, idCol, vecCol)
   }
 
-  /** The ≤-2-tier reader view ([[QuantizedView]]): `index` is an ordinary
+  /** The ≤-2-tier reader view ([[TieredView]]): `index` is an ordinary
     * [[Similarity.IvfPqIndex]] whose coded frame is the newest committed
     * L1's plus the live L0 deltas above it. */
-  type Tiered = QuantizedView[Similarity.IvfPqIndex]
+  type Tiered = TieredView[Similarity.IvfPqIndex]
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the codes are probed. */

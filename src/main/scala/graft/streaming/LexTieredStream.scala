@@ -38,8 +38,6 @@ object LexTieredStream {
     * of [[Checkpoints.partitionsForRows]]. */
   private val DocsPerPartition = 5000L
 
-  private val Params: Map[String, String] = Map("tokenizer" -> "ws")
-
   // every fold shuffle is |Δ|-sized by design (minors never read standing
   // state; the major's standing side moves through broadcast anti-joins or
   // lazy unions), so each write runs at a measured width — the major
@@ -49,16 +47,16 @@ object LexTieredStream {
       extends TieredRoll[Postings.Index, Tiered](session, root, "lex") {
     protected val bootstraps = true
     override protected val strided = false
-    protected val l0Params: Map[String, String] = Params + ("tier" -> "l0_postings")
     protected val l1Codec = IndexStore.postings
-    protected val l1Params = Params
+    protected val l1Params = Map("tokenizer" -> "ws")
+    protected val l0Tier = "l0_postings"
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Postings.Index]): Tiered = {
       val l1 = t.l1.get
       val merged = Checkpoints.sweepingOnFailure(spark.sparkContext)(
         Postings.mergeTiers(l1, t.l0))
-      Tiered(t.epochId, merged, t.liveL0,
+      TieredView(t.epochId, merged, t.liveL0,
         () => { merged.release(); l1.release() })
     }
 
@@ -89,15 +87,11 @@ object LexTieredStream {
     }
   }
 
-  /** The ≤-2-tier reader view: `index` is an ordinary [[Postings.Index]]
-    * (the newest committed L1 merged with the live L0 tiers above it,
-    * foldDocs semantics). `release()` frees the merge's persist AND the
-    * underlying L1 handle. */
-  final case class Tiered(
-      epochId: Long,
-      index: Postings.Index,
-      liveL0s: Seq[Long],
-      release: () => Unit)
+  /** The ≤-2-tier reader view ([[TieredView]]): `index` is an ordinary
+    * [[Postings.Index]] (the newest committed L1 merged with the live L0
+    * tiers above it, foldDocs semantics). `release()` frees the merge's
+    * persist AND the underlying L1 handle. */
+  type Tiered = TieredView[Postings.Index]
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Pays the mergeTiers stats jobs when live L0s exist

@@ -32,17 +32,15 @@ import graft.operators.{IndexStore, Multimodal}
   * skip), and [[foldHashes]] dedups within its own batch only. */
 object MediaTieredStream {
 
-  /** Storage params: the tier layout only — the Hamming budget is a QUERY
-    * parameter (banding happens at read), so one committed index serves
-    * every budget ≤ 15, unlike the model-carrying families. */
-  private val baseParams = Map("index_kind" -> "ahash_tiered")
-
   private[streaming] final class Roll(session: SparkSession, root: String)
       extends TieredRoll[DataFrame, Tiered](session, root, "media") {
     protected val bootstraps = false
-    protected val l0Params: Map[String, String] = baseParams + ("tier" -> "l0_hashes")
     protected val l1Codec = IndexStore.stage
-    protected val l1Params = baseParams + ("tier" -> "l1_hashes")
+    // storage params: the tier layout only — the Hamming budget is a QUERY
+    // parameter (banding happens at read), so one committed index serves
+    // every budget ≤ 15, unlike the model-carrying families
+    protected val l1Params = Map("index_kind" -> "ahash_tiered", "tier" -> "l1_hashes")
+    protected val l0Tier = "l0_hashes"
     protected def releaseView(v: Tiered): Unit = ()
     protected def view(t: TieredRoll.Tiers[DataFrame]): Tiered =
       Tiered(t.epochId, (t.l1.toSeq ++ t.l0Frames).reduce(_ unionByName _))
@@ -54,17 +52,9 @@ object MediaTieredStream {
                         note: String): Unit =
       commit(view(t).hashes.unionByName(delta), dir, note)
 
-    /** One scan decides (total + dead counted together against the
-      * broadcast tombstone set); at the dead share `threshold` the
-      * survivors are anti-joined out ONCE. */
     override protected def compactKernel(view: Tiered, tombstones: DataFrame,
-        tombId: String, threshold: Double): Option[DataFrame] = {
-      val dead = broadcast(tombstones.select(
-        col(tombId).cast("long").as("media_id")).distinct())
-      if (!TieredRoll.deadShareReached(view.hashes, dead, Seq("media_id"),
-          threshold)) None
-      else Some(view.hashes.join(dead, Seq("media_id"), "left_anti"))
-    }
+        tombId: String, threshold: Double): Option[DataFrame] =
+      TieredRoll.survivors(view.hashes, tombstones, tombId, "media_id", threshold)
   }
 
   /** `(media_id, phash)` as longs, deduped within the batch; cross-batch

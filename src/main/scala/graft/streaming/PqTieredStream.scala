@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{IndexStore, Similarity}
@@ -34,7 +33,7 @@ object PqTieredStream {
     protected val l1Params = Map("roll_dim" -> dim.toString, "roll_m" -> m.toString,
       "roll_k" -> k.toString, "roll_iters" -> iters.toString,
       "roll_train_sample" -> trainSample.toString)
-    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_codes")
+    protected val l0Tier = "l0_codes"
 
     override protected def train(corpus: DataFrame): Similarity.PqIndex =
       Similarity.pqBuild(corpus, idCol, vecCol, dim, m, k, iters, trainSample)
@@ -48,15 +47,14 @@ object PqTieredStream {
                             release: () => Unit) =
       i.copy(encoded = coded, release = release)
 
-    override protected def drifted(v: Tiered, recent: DataFrame): Long =
-      Similarity.pqDriftAudit(v.index, recent, idCol, vecCol)
-        .filter(col("drifted")).count()
+    protected def driftAudit(i: Similarity.PqIndex, recent: DataFrame) =
+      Similarity.pqDriftAudit(i, recent, idCol, vecCol)
   }
 
-  /** The ≤-2-tier reader view ([[QuantizedView]]): `index` is an ordinary
+  /** The ≤-2-tier reader view ([[TieredView]]): `index` is an ordinary
     * [[Similarity.PqIndex]] whose encoded frame is the newest committed
     * L1's plus the live L0 deltas above it. */
-  type Tiered = QuantizedView[Similarity.PqIndex]
+  type Tiered = TieredView[Similarity.PqIndex]
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the codes are probed. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.operators.{Checkpoints, IndexStore, Similarity}
 
@@ -19,7 +20,7 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   *    the batch encoded under the SAME model — zero re-encode work, and
   *    the union IS the full coded corpus.
   *  - **View**: the L1 index with the live L0 deltas unioned into its
-  *    coded frame ([[QuantizedView]]), so every probe and drift audit of
+  *    coded frame ([[TieredView]]), so every probe and drift audit of
   *    the family works on the tiered view unchanged, bit-identical to the
   *    flat build + append chain over the same batches.
   *  - **Compaction**: deletion commutes too — the survivor codes under the
@@ -27,10 +28,10 @@ import graft.operators.{Checkpoints, IndexStore, Similarity}
   *
   * A family supplies its build, its model (from a meta reader and from a
   * loaded index), its encode under a model, its coded frame's getter and
-  * copy, and its drift measure. */
+  * copy, and its drift audit. */
 private[streaming] abstract class QuantizerRoll[I, M](
     session: SparkSession, root: String, family: String)
-    extends TieredRoll[I, QuantizedView[I]](session, root, family) {
+    extends TieredRoll[I, TieredView[I]](session, root, family) {
 
   protected val bootstraps = true
   override protected def retrains: Boolean = true
@@ -45,13 +46,16 @@ private[streaming] abstract class QuantizerRoll[I, M](
   protected def coded(index: I): DataFrame
   /** `index` over another coded frame, released by `release`. */
   protected def withCoded(index: I, coded: DataFrame, release: () => Unit): I
+  /** The family's drift audit of `recent` against `index` (a `drifted`
+    * flag per model cell). */
+  protected def driftAudit(index: I, recent: DataFrame): DataFrame
 
-  protected def releaseView(v: QuantizedView[I]): Unit = v.release()
+  protected def releaseView(v: TieredView[I]): Unit = v.release()
 
-  protected def view(t: TieredRoll.Tiers[I]): QuantizedView[I] = {
+  protected def view(t: TieredRoll.Tiers[I]): TieredView[I] = {
     val l1 = t.l1.get
     val release = () => l1Codec.release(l1)
-    QuantizedView(t.epochId, withCoded(l1,
+    TieredView(t.epochId, withCoded(l1,
       t.l0Frames.foldLeft(coded(l1))(_ unionByName _), release), t.liveL0, release)
   }
 
@@ -59,9 +63,15 @@ private[streaming] abstract class QuantizerRoll[I, M](
                                    note: String): Unit =
     commit(train(Checkpoints.sized(delta, n)), dir, note)
 
+  // the standing model is a model-only read off the L1 meta: no
+  // persisted handle
   protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                       standing: Option[Long])(save: DataFrame => Unit): Unit =
-    save(encode(standingModel(standing)(readModel), delta))
+    save(encode(standing
+      .flatMap(id => IndexStore.committed(spark, l1Codec, l1Dir(id), l1Params))
+      .map(readModel).getOrElse(sys.error(
+        s"$family tier: standing L1 epoch=${standing.mkString} vanished mid-fold")),
+      delta))
 
   protected def major(t: TieredRoll.Tiers[I], delta: DataFrame, n: => Long,
                       epochId: Long, dir: String, note: String): Unit = {
@@ -70,18 +80,11 @@ private[streaming] abstract class QuantizerRoll[I, M](
       () => ()), dir, note)
   }
 
-  override protected def compactKernel(v: QuantizedView[I], tombstones: DataFrame,
+  override protected def drifted(v: TieredView[I], recent: DataFrame): Long =
+    driftAudit(v.index, recent).filter(col("drifted")).count()
+
+  override protected def compactKernel(v: TieredView[I], tombstones: DataFrame,
       tombId: String, threshold: Double): Option[I] =
     Similarity.compactFrame(coded(v.index), tombstones, tombId, threshold,
       persist = true).map { case (live, release) => withCoded(v.index, live, release) }
 }
-
-/** The ≤-2-tier reader view of a quantizer family: `index` is an ordinary
-  * index of the family whose coded frame is the newest committed L1's plus
-  * the live L0 deltas above it (lazy union — the deltas are zero-job stage
-  * reads). `release()` frees the L1 handle. */
-final case class QuantizedView[I](
-    epochId: Long,
-    index: I,
-    liveL0s: Seq[Long],
-    release: () => Unit)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Checkpoints, Dedup, IndexStore}
@@ -46,7 +45,7 @@ object SignatureTieredStream {
     protected val l1Params = Map("k" -> k.toString, "bands" -> bands.toString,
       "shingle_width" -> shingleWidth.toString)
     protected val bootstraps = false
-    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_sigs")
+    protected val l0Tier = "l0_sigs"
     protected def releaseView(v: Tiered): Unit = v.release()
 
     protected def view(t: TieredRoll.Tiers[Dedup.SignatureIndex]): Tiered =
@@ -81,17 +80,10 @@ object SignatureTieredStream {
     // re-aggregated over survivors only: a dead id inside a committed
     // bucket's member array cannot be dropped in place
     override protected def compactKernel(view: Tiered, tombstones: DataFrame,
-        tombId: String, threshold: Double): Option[Dedup.SignatureIndex] = {
-      val dead = broadcast(tombstones.select(
-        col(tombId).cast("long").as("id")).distinct())
-      if (!TieredRoll.deadShareReached(view.sigs, dead, Seq("id"), threshold))
-        None
-      else {
-        val survivors = view.sigs.join(dead, Seq("id"), "left_anti")
-        Some(Dedup.SignatureIndex(k, bands, shingleWidth, survivors,
-          Dedup.bucketsFromSigs(survivors, k, bands), () => ()))
-      }
-    }
+        tombId: String, threshold: Double): Option[Dedup.SignatureIndex] =
+      TieredRoll.survivors(view.sigs, tombstones, tombId, "id", threshold)
+        .map(s => Dedup.SignatureIndex(k, bands, shingleWidth, s,
+          Dedup.bucketsFromSigs(s, k, bands), () => ()))
   }
 
   /** The ≤-2-tier reader view: newest committed L1 (absent pre-first-

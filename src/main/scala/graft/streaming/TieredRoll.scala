@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{count, lit, sum}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, sum}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.IndexStore
@@ -68,9 +68,9 @@ import graft.operators.IndexStore
   * [[MaintenancePolicy]]'s cadence, so no family wires a policy itself.
   *
   * Every epoch is an [[IndexStore]] store: L0s through
-  * [[IndexStore.stage]] under `l0Params`, L1s through the family's
-  * `l1Codec` under `l1Params`, so the core does every marker peek, load,
-  * save and release. A subclass supplies the rest of the family: the
+  * [[IndexStore.stage]] under `l1Params` retagged `tier -> l0Tier`, L1s
+  * through the family's `l1Codec` under `l1Params`, so the core does
+  * every marker peek, load, save and release. A subclass supplies the rest of the family: the
   * reader view and its release, the minor's delta encode, the major's
   * merge, the optional bootstrap build and its maintenance kernels. One
   * instance serves one (session, root, params) call. */
@@ -93,9 +93,11 @@ private[streaming] abstract class TieredRoll[L1, T](
   protected def bootstraps: Boolean
   /** Data epochs at [[TierIds]] strides; false keeps raw batch ids. */
   protected def strided: Boolean = true
-  protected def l0Params: Map[String, String]
   protected def l1Codec: IndexStore.Codec[L1]
   protected def l1Params: Map[String, String]
+  /** The L0 epochs' `tier` param; the rest of their params are L1's. */
+  protected def l0Tier: String
+  private lazy val l0Params = l1Params + ("tier" -> l0Tier)
   /** The reader view over loaded tiers; it owns the L1 handle. */
   protected def view(t: Tiers[L1]): T
   /** Free what a view holds (its L1 handle, any merge persist). */
@@ -137,14 +139,6 @@ private[streaming] abstract class TieredRoll[L1, T](
     try IndexStore.save(spark, l1Codec, l1, dir, note, l1Params)
     finally l1Codec.release(l1)
 
-  /** A model-only read off the standing L1's meta (the bootstrapping
-    * families' minors need no persisted handle). */
-  protected def standingModel[A](standing: Option[Long])(
-      model: IndexStore.Reader => A): A =
-    standing.flatMap(id => IndexStore.committed(spark, l1Codec, l1Dir(id), l1Params))
-      .map(model).getOrElse(sys.error(
-        s"$family tier: standing L1 epoch=${standing.mkString} vanished mid-fold"))
-
   // ---- layout and listing
 
   private val l0Root = s"$root/l0"
@@ -161,15 +155,12 @@ private[streaming] abstract class TieredRoll[L1, T](
   private def l1Committed(id: Long): Boolean =
     IndexStore.committed(spark, l1Codec, l1Dir(id), l1Params).isDefined
 
-  /** Committed L1 epoch ids, newest first. Listing + marker peek only. */
-  def l1Epochs: Seq[Long] =
-    EpochDirs.rawIds(spark, l1Root).filter(l1Committed)
-      .sorted(Ordering[Long].reverse)
-
-  /** Committed L0 epoch ids, newest first. */
-  def l0Epochs: Seq[Long] =
-    EpochDirs.rawIds(spark, l0Root).filter(l0Committed)
-      .sorted(Ordering[Long].reverse)
+  /** Committed L1 / L0 epoch ids, newest first. Listing + marker peek
+    * only. */
+  def l1Epochs: Seq[Long] = committedIds(l1Root, l1Committed)
+  def l0Epochs: Seq[Long] = committedIds(l0Root, l0Committed)
+  private def committedIds(tier: String, ok: Long => Boolean): Seq[Long] =
+    EpochDirs.rawIds(spark, tier).filter(ok).sorted(Ordering[Long].reverse)
 
   /** The newest L1 id and the live L0 ids above it, oldest first; None
     * before a bootstrapping family's first L1. */
@@ -412,4 +403,25 @@ private[streaming] object TieredRoll {
     val deadN = if (r.isNullAt(1)) 0L else r.getLong(1)
     deadN > 0 && total > 0 && deadN.toDouble / total >= threshold
   }
+
+  /** The `stored` rows whose `key` is not among the tombstones' `tombId`
+    * ids (cast to long) when their dead share reaches `threshold`
+    * ([[deadShareReached]]); None otherwise. The survivors are anti-joined
+    * out once, against the same broadcast dead set. */
+  def survivors(stored: DataFrame, tombstones: DataFrame, tombId: String,
+                key: String, threshold: Double): Option[DataFrame] = {
+    val dead = broadcast(tombstones.select(col(tombId).cast("long").as(key)).distinct())
+    if (!deadShareReached(stored, dead, Seq(key), threshold)) None
+    else Some(stored.join(dead, Seq(key), "left_anti"))
+  }
 }
+
+/** The ≤-2-tier reader view of a family whose readers get an ordinary
+  * index `I` (IVF, PQ, IVFADC, lexical): `index` is the newest committed
+  * L1 with the live L0 deltas above it (`liveL0s`) merged in.
+  * `release()` frees what the view holds. */
+final case class TieredView[I](
+    epochId: Long,
+    index: I,
+    liveL0s: Seq[Long],
+    release: () => Unit)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{IndexStore, Similarity}
@@ -31,7 +30,7 @@ object VectorTieredStream {
     protected val l1Params = Map("roll_n_cells" -> nCells.toString,
       "roll_train_sample" -> trainSample.toString,
       "roll_iters" -> iters.toString)
-    protected val l0Params: Map[String, String] = l1Params + ("tier" -> "l0_assigned")
+    protected val l0Tier = "l0_assigned"
 
     override protected def train(corpus: DataFrame): Similarity.IvfIndex =
       Similarity.ivfBuild(corpus, idCol, vecCol, nCells, trainSample, iters)
@@ -45,15 +44,14 @@ object VectorTieredStream {
                             release: () => Unit) =
       i.copy(assigned = coded, release = release)
 
-    override protected def drifted(v: Tiered, recent: DataFrame): Long =
-      Similarity.driftAudit(v.index, recent, idCol, vecCol)
-        .filter(col("drifted")).count()
+    protected def driftAudit(i: Similarity.IvfIndex, recent: DataFrame) =
+      Similarity.driftAudit(i, recent, idCol, vecCol)
   }
 
-  /** The ≤-2-tier reader view ([[QuantizedView]]): `index` is an ordinary
+  /** The ≤-2-tier reader view ([[TieredView]]): `index` is an ordinary
     * [[Similarity.IvfIndex]] whose assignment is the newest committed
     * L1's plus the live L0 deltas above it. */
-  type Tiered = QuantizedView[Similarity.IvfIndex]
+  type Tiered = TieredView[Similarity.IvfIndex]
 
   /** Load the newest committed tiered view; `None` before the bootstrap
     * L1 commits. Zero Spark jobs until the assignment is probed. */
