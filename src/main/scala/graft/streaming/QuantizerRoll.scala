@@ -63,8 +63,6 @@ private[streaming] abstract class QuantizerRoll[I, M](
                                    note: String): Unit =
     commit(train(Checkpoints.sized(delta, n)), dir, note)
 
-  // the standing model is a model-only read off the L1 meta: no
-  // persisted handle
   protected def minor(delta: DataFrame, n: => Long, epochId: Long,
                       standing: Option[Long])(save: DataFrame => Unit): Unit =
     save(encode(standing
